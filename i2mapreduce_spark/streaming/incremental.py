@@ -23,10 +23,14 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import warnings
 from collections.abc import Callable
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
+
+from ..plans.iterate import release_checkpoint
 
 __all__ = [
     "MRBGStore",
@@ -307,6 +311,25 @@ def fold_delta_ops(
     return merged.filter(F.col(count_col) != 0)
 
 
+#: most mapped delta edges one MRBGStore.apply_delta collects to the
+#: driver.  The delta comes back as one Arrow table (so it is mapped
+#: once, not once per join) and goes back in through Arrow
+#: createDataFrame, which makes it and its key set LocalRelations (below
+#: spark.sql.execution.arrow.localRelationThreshold, 48 MB by default).
+#: 1M edges of three 8-byte columns is 24 MB of Arrow buffers; pyarrow
+#: keeps them out of the Python heap, and the driver heap holds one
+#: copy as rows.  The key set is at most as large as the delta, so the
+#: cap bounds it too.  A larger delta falls back, with a RuntimeWarning,
+#: to a distributed delta and a pinned distributed key frame.
+#: Env-overridable (`I2MR_MRBG_DELTA_MAX`; 0 always takes the
+#: distributed path — used by tests to pin that path).
+MRBG_DELTA_COLLECT_MAX_DEFAULT = 1_000_000
+
+
+def _mrbg_delta_max() -> int:
+    return int(os.environ.get("I2MR_MRBG_DELTA_MAX", MRBG_DELTA_COLLECT_MAX_DEFAULT))
+
+
 class MRBGStore:
     """The reference's MRBG-Store (ref op A11, PAPER §4-5) as preserved
     intermediate state over DataFrames: keep every intermediate (K2, V2)
@@ -319,11 +342,18 @@ class MRBGStore:
     level, exactly like the reference, so the reduce can be a median, a
     top-k, a string-agg, anything.
 
-    Scale notes (100 TB): `edges` is the big preserved table — keep it
-    bucketed by `key` on disk so the anti-join splice and the re-reduce
-    shuffle only the affected partitions; `results` is O(distinct keys).
-    The affected-key set is derived map-side from the delta (small) and
-    broadcast into both joins by AQE.
+    Scale notes (100 TB): `edges` is the big preserved table, `results`
+    is O(distinct keys).  The mapped delta and its key set are collected
+    once (bounded: MRBG_DELTA_COLLECT_MAX_DEFAULT) and the key set is
+    broadcast into every join, so unaffected edges are scanned but never
+    shuffled.  The splice shuffles only the affected ("hot") edges plus
+    the delta, and the re-reduce only the hot edges: O(affected keys'
+    edges), not O(edges).  Per delta that is 7 Spark jobs for a
+    one-shuffle reduce: the collect; the edges pin (key broadcast, the
+    hot-edge shuffle, the copy); the results pin (key broadcast, the
+    re-reduce shuffle, the copy).  The edges pin still copies every
+    preserved edge; storing `edges` bucketed by `key` would shrink that
+    copy to the affected buckets.
     """
 
     def __init__(self, map_fn: Callable[[DataFrame], DataFrame],
@@ -349,48 +379,91 @@ class MRBGStore:
         self.last_affected_keys = -1
         return self.results
 
+    def _collect_delta(self, delta: DataFrame) -> tuple[DataFrame, DataFrame, int, DataFrame | None]:
+        """(delta, its keys as a one-column `_k` frame, its distinct key
+        count, the checkpoint behind the keys when the store pinned one)
+        for the tagged mapped delta.
+
+        Collected path: one Arrow collect of at most cap + 1 delta rows;
+        the keys are a projection of the collected delta (duplicates do
+        not change a semi- or anti-join).  Past the cap the delta stays
+        distributed, its distinct keys are pinned, counted and joined as
+        AQE decides, and a RuntimeWarning says so: the delta is never
+        truncated."""
+        cap = _mrbg_delta_max()
+        if cap > 0:
+            table = delta.limit(cap + 1).toArrow()
+            if table.num_rows <= cap:
+                n_keys = pc.count_distinct(table[self.key], mode="all").as_py()
+                delta = delta.sparkSession.createDataFrame(table, delta.schema)
+                return delta, F.broadcast(delta.select(F.col(self.key).alias("_k"))), n_keys, None
+            warnings.warn(
+                f"MRBGStore.apply_delta: the delta maps to more than {cap} "
+                "edges (I2MR_MRBG_DELTA_MAX); splicing with a distributed "
+                "delta and key frame instead of collected ones",
+                RuntimeWarning,
+                stacklevel=3,
+            )
+        keys = self._pin(delta.select(F.col(self.key).alias("_k")).distinct())
+        return delta, keys, keys.count(), keys
+
     def apply_delta(self, inserts: DataFrame | None = None,
                     deletes: DataFrame | None = None) -> DataFrame:
         """Incremental run (PAPER §4.1): map the delta, splice preserved
         edges, re-reduce only affected K2 groups, patch results.
 
         `deletes` are input records disappearing from the dataset: their
-        mapped edges are removed from the preserved set (matched on all
-        intermediate columns, bag semantics via a per-row occurrence
-        number, so duplicate edges delete one-for-one).
+        mapped edges leave the preserved set with bag semantics —
+        matched on all intermediate columns with NULLs equal, duplicate
+        edges deleting one-for-one, deletes of absent edges ignored —
+        and deletes apply before inserts.  Keys match null-safely, so a
+        NULL key is a group like any other.
+
+        The superseded `edges` checkpoint is released; a superseded
+        `results` frame is not, since callers may still hold it.
         """
         assert self.edges is not None, "call initial() first"
-        k = self.key
-        new_edges = self.map_fn(inserts) if inserts is not None else None
-        dead_edges = self.map_fn(deletes) if deletes is not None else None
+        cols = self.edges.columns
 
-        affected = None
-        for d in (new_edges, dead_edges):
-            if d is not None:
-                keys = d.select(k).distinct()
-                affected = keys if affected is None else affected.union(keys).distinct()
-        if affected is None:
+        def tag(df: DataFrame, base: int, new: int) -> DataFrame:
+            return df.select(*cols, F.lit(base).alias("_base"), F.lit(new).alias("_new"))
+
+        tagged = [tag(self.map_fn(df), base, new)
+                  for df, base, new in ((inserts, 0, 1), (deletes, -1, 0)) if df is not None]
+        if not tagged:
+            self.last_affected_keys = 0
             return self.results
-        self.last_affected_keys = affected.count()
+        delta = tagged[0] if len(tagged) == 1 else tagged[0].unionByName(tagged[1])
+        delta, keys, self.last_affected_keys, keys_pin = self._collect_delta(delta)
+        if self.last_affected_keys == 0:
+            if keys_pin is not None:
+                release_checkpoint(keys_pin)
+            return self.results
 
-        edges = self.edges
-        if dead_edges is not None:
-            # bag-aware removal: number duplicate edges on both sides and
-            # anti-join on (edge columns, occurrence)
-            cols = edges.columns
-            w = Window.partitionBy(*cols).orderBy(F.lit(1))
-            numbered = edges.withColumn("_occ", F.row_number().over(w))
-            dead_numbered = dead_edges.withColumn(
-                "_occ", F.row_number().over(Window.partitionBy(*cols).orderBy(F.lit(1)))
-            )
-            edges = numbered.join(dead_numbered, [*cols, "_occ"], "left_anti").drop("_occ")
-        if new_edges is not None:
-            edges = edges.unionByName(new_edges)
-        self.edges = self._pin(edges)
+        def split(df: DataFrame, how: str) -> DataFrame:
+            return df.join(keys, df[self.key].eqNullSafe(keys["_k"]), how)
 
-        # re-reduce ONLY the affected groups, patch them into results
-        touched = self.edges.join(affected, k, "left_semi")
-        fresh = self.reduce_fn(touched)
-        kept = self.results.join(affected, k, "left_anti")
-        self.results = self._pin(kept.unionByName(fresh))
+        # hot edges: the affected keys' preserved edges with the delta
+        # merged in by signed counts per distinct edge (groupBy puts
+        # NULLs together): copies = max(old - deleted, 0) + inserted
+        counts = tag(split(self.edges, "left_semi"), 1, 0).unionByName(delta).groupBy(
+            *cols).agg(F.sum("_base").alias("_base"), F.sum("_new").alias("_new"))
+        copies = F.greatest(F.col("_base"), F.lit(0)) + F.col("_new")
+        hot = counts.select(
+            *cols, F.explode(F.array_repeat(F.lit(0), copies.cast("int")))
+        ).select(*cols)
+
+        def patch(df: DataFrame, fresh: DataFrame) -> DataFrame:
+            # coalescing to the old partition count keeps every delta
+            # from adding the fresh rows' partitions to the store (an
+            # empty store's checkpoint can have none)
+            n = max(df.rdd.getNumPartitions(), 1)
+            return self._pin(split(df, "left_anti").unionByName(fresh).coalesce(n))
+
+        old_edges = self.edges
+        self.edges = patch(old_edges, hot)
+        self.results = patch(self.results, self.reduce_fn(split(self.edges, "left_semi")))
+        for df in (old_edges, keys_pin):
+            if df is not None:
+                release_checkpoint(df)
         return self.results

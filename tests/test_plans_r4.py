@@ -98,6 +98,7 @@ APPROVED_BROADCASTS = {
     ("i2mapreduce_spark/queries/r6n_ops.py", "q_dq_k_anonymity"),  # 1-row class-size total
     ("i2mapreduce_spark/queries/r6n_ops.py", "q_pipeline_target_encode"),  # 1-row (n_g, pos_g) global label moments
     ("i2mapreduce_spark/queries/r6o_ops.py", "q_iter_als_topitems"),  # LIMIT ALS_ITEMS=64 item spine (bounded by construction)
+    ("i2mapreduce_spark/streaming/incremental.py", "_collect_delta"),  # driver-collected delta keys, <= MRBG_DELTA_COLLECT_MAX_DEFAULT rows (larger deltas take the unhinted path)
     ("i2mapreduce_spark/queries/r6q_ops.py", "q_dq_freshness"),  # 1-row global max-timestamp
     ("i2mapreduce_spark/queries/r6q_ops.py", "q_agg_survival_km"),  # 1-row dataset edge + 1-row customer total
     ("i2mapreduce_spark/queries/r6q_ops.py", "q_agg_bootstrap_ci"),  # 1-row point estimate

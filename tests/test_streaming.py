@@ -6,6 +6,9 @@ watermark test, which asserts the exact late-drop behavior.
 
 from __future__ import annotations
 
+from collections import Counter
+
+import pytest
 from pyspark.sql import functions as F
 
 from i2mapreduce_spark.catalog import load_tables
@@ -57,6 +60,143 @@ def test_mrbg_store_rereduces_only_affected_keys(spark):
         for r in wordcount_reduce(wordcount_map(remaining)).collect()
     }
     assert got == want and "f" not in got
+
+
+KV = "k long, v long"
+
+
+def _kv_map(records):
+    return records.select("k", "v")
+
+
+def _kv_reduce(edges):
+    return edges.groupBy("k").agg(F.count("*").alias("n"), F.sum("v").alias("s"))
+
+
+def _kv_store(spark, base):
+    store = MRBGStore(_kv_map, _kv_reduce, key="k")
+    store.initial(spark.createDataFrame(base, KV))
+    return store
+
+
+def _assert_recompute(spark, store, live):
+    """The store's results equal a from-scratch reduce over the live
+    records (a bag), row for row and with no duplicate key rows."""
+    want = _kv_reduce(_kv_map(spark.createDataFrame(list(live.elements()), KV)))
+    got = store.results.collect()
+    assert Counter(got) == Counter(want.collect())
+    assert len({r.k for r in got}) == len(got)
+
+
+# (base records, inserts, deletes): every case must agree with a
+# recompute over (base - deletes) + inserts in bag semantics
+BAG_CASES = {
+    "duplicate_edge_deletes_one_for_one":
+        ([(1, 5), (1, 5), (1, 5), (2, 1)], [], [(1, 5)]),
+    "absent_delete_is_noop":
+        ([(1, 5), (2, 1)], [], [(1, 6), (3, 1)]),
+    "insert_and_delete_same_new_record_keeps_it":
+        ([(1, 5)], [(1, 7)], [(1, 7)]),
+    "deleting_every_edge_removes_the_key":
+        ([(1, 5), (1, 6), (2, 1)], [], [(1, 5), (1, 6)]),
+    "null_key_insert_joins_the_null_group":
+        ([(None, 3), (1, 5)], [(None, 8)], []),
+    "null_key_delete":
+        ([(None, 3), (None, 4), (1, 5)], [], [(None, 3)]),
+    "delete_of_edge_with_null_column":
+        ([(1, None), (1, 2), (1, 3)], [], [(1, None)]),
+    "empty_store_takes_inserts":
+        ([], [(1, 5), (1, 5)], []),
+    "mixed_delta":
+        ([(1, 1), (1, 1), (2, 2), (None, None), (3, 3)],
+         [(1, 1), (4, 4), (None, None)], [(1, 1), (2, 2), (None, None), (5, 5)]),
+}
+
+
+@pytest.mark.parametrize("case", sorted(BAG_CASES))
+def test_mrbg_store_bag_semantics(spark, case):
+    base, inserts, deletes = BAG_CASES[case]
+    store = _kv_store(spark, base)
+    store.apply_delta(
+        inserts=spark.createDataFrame(inserts, KV) if inserts else None,
+        deletes=spark.createDataFrame(deletes, KV) if deletes else None,
+    )
+    _assert_recompute(spark, store, Counter(base) - Counter(deletes) + Counter(inserts))
+    assert store.last_affected_keys == len({k for k, _ in inserts + deletes})
+
+
+def test_mrbg_store_empty_delta_keeps_results(spark):
+    store = _kv_store(spark, [(1, 5), (2, 1)])
+    before = store.results
+    assert store.apply_delta() is before
+    assert store.last_affected_keys == 0
+    empty = spark.createDataFrame([], KV)
+    assert store.apply_delta(inserts=empty, deletes=empty) is before
+    assert store.last_affected_keys == 0
+    assert Counter(store.results.collect()) == Counter(before.collect())
+
+
+def _deltas(spark):
+    """Three deltas over keys 0..9: inserts, deletes (one absent), both."""
+    base = [(i % 10, i) for i in range(40)] + [(None, 1), (3, None)]
+    steps = [
+        ([(i % 10, 100 + i) for i in range(0, 30, 3)], []),
+        ([], [(1, 1), (3, None), (None, 1), (7, 999)]),
+        ([(None, 2), (2, 2)], [(2, 2), (4, 4), (4, 14)]),
+    ]
+    return base, [
+        (spark.createDataFrame(i, KV) if i else None,
+         spark.createDataFrame(d, KV) if d else None) for i, d in steps
+    ], steps
+
+
+def _run_deltas(spark):
+    base, frames, steps = _deltas(spark)
+    store = _kv_store(spark, base)
+    live = Counter(base)
+    seen = []
+    for (ins, dels), (i, d) in zip(frames, steps):
+        store.apply_delta(inserts=ins, deletes=dels)
+        live = live - Counter(d) + Counter(i)
+        seen.append((Counter(store.results.collect()), store.last_affected_keys))
+        _assert_recompute(spark, store, live)
+    return seen
+
+
+def test_mrbg_store_collected_and_distributed_paths_agree(spark, monkeypatch):
+    """The driver-collected delta (default) and the distributed fallback
+    (I2MR_MRBG_DELTA_MAX=0, and a cap the delta exceeds) give the same
+    results and affected-key counts after every delta; only the
+    exceeded cap warns."""
+    collected = _run_deltas(spark)
+    monkeypatch.setenv("I2MR_MRBG_DELTA_MAX", "0")
+    assert _run_deltas(spark) == collected
+    monkeypatch.setenv("I2MR_MRBG_DELTA_MAX", "2")
+    with pytest.warns(RuntimeWarning, match="I2MR_MRBG_DELTA_MAX"):
+        assert _run_deltas(spark) == collected
+
+
+def _ckpt_rdd_id(df) -> int:
+    return df._jdf.queryExecution().analyzed().rdd().id()
+
+
+def test_mrbg_store_releases_old_edges_but_not_results(spark):
+    """Each delta releases the superseded edges checkpoint; a results
+    frame handed out earlier stays readable."""
+    base, frames, steps = _deltas(spark)
+    store = _kv_store(spark, base)
+    handed_out = [store.results]
+    for ins, dels in frames:
+        old_edges = store.edges
+        handed_out.append(store.apply_delta(inserts=ins, deletes=dels))
+        persisted = spark.sparkContext._jsc.sc().getPersistentRDDs()
+        assert not persisted.contains(_ckpt_rdd_id(old_edges))
+        assert persisted.contains(_ckpt_rdd_id(store.edges))
+    live = Counter(base)
+    for df, (i, d) in zip(handed_out[:-2], [([], [])] + steps):
+        live = live - Counter(d) + Counter(i)
+        want = _kv_reduce(_kv_map(spark.createDataFrame(list(live.elements()), KV)))
+        assert Counter(df.collect()) == Counter(want.collect())
 
 
 def test_fold_delta_ops_retracts_to_nothing(spark):

@@ -307,7 +307,6 @@ def _pairs_with_duplicate_collapse(df: DataFrame, rep_fn, eligible_fn,
 def minhash_lsh_pairs(df: DataFrame, threshold: float, num_hashes: int = 48,
                       bands: int = 12, shingle_n: int = 3, seed: int = 42,
                       text_col: str = "text", id_col: str = "doc_id",
-                      collapse_dups: bool = True,
                       expand_members: bool = True) -> DataFrame:
     """Near-dup pairs via MinHash banding + exact re-score.
 
@@ -317,48 +316,50 @@ def minhash_lsh_pairs(df: DataFrame, threshold: float, num_hashes: int = 48,
     quadratic join — one shuffle for signatures, one per-band bucket
     grouping, exact join only over candidates.
 
-    `collapse_dups=True` (default) collapses EXACT-duplicate texts
-    before the index (r9): on a duplicate-saturated corpus (the regime
-    web-scale dedup actually meets — the sf10 canary's 100-copy docs)
-    every band bucket holds the whole duplicate group, so the candidate
-    join and the shingle re-score go quadratic in the duplication
-    factor (measured: >57 GB of shuffle spill, disk exhaustion).  The
-    collapse runs banding + re-scoring on one representative per
-    distinct text and reconstitutes the pair list afterwards: identical
-    texts pair at jaccard exactly 1.0 without touching their shingles,
-    and each surviving representative pair expands to its groups' cross
-    pairs.  The OUTPUT is unchanged (and inherently quadratic in
-    duplication — it lists all pairs); only the intermediate volume
-    drops from O(dups^2 x bands + pairs x shingles) to O(output).
-    Identity on a duplicate-free corpus.
+    EXACT-duplicate texts are collapsed before the index (r9): on a
+    duplicate-saturated corpus (the regime web-scale dedup actually
+    meets — the sf10 canary's 100-copy docs) every band bucket holds
+    the whole duplicate group, so the candidate join and the shingle
+    re-score go quadratic in the duplication factor (measured: >57 GB
+    of shuffle spill, disk exhaustion).  The collapse runs banding +
+    re-scoring on one representative per distinct text and
+    reconstitutes the pair list afterwards: identical texts pair at
+    jaccard exactly 1.0 without touching their shingles, and each
+    surviving representative pair expands to its groups' cross pairs.
+    The OUTPUT is unchanged (and inherently quadratic in duplication —
+    it lists all pairs); only the intermediate volume drops from
+    O(dups^2 x bands + pairs x shingles) to O(output).  Identity on a
+    duplicate-free corpus.
 
     `expand_members=False` (r10) is the documented scale path when even
     the OUTPUT is duplication-quadratic: one row per group pair
     (d1, d2, jac, g1, g2) instead of the member cross product — see
-    _pairs_with_duplicate_collapse.  Requires collapse_dups=True.
+    _pairs_with_duplicate_collapse.
     """
-    if not expand_members and not collapse_dups:
-        raise ValueError("expand_members=False requires collapse_dups=True")
-    if collapse_dups:
-        return _pairs_with_duplicate_collapse(
-            df,
-            rep_fn=lambda reps: minhash_lsh_pairs(
-                reps, threshold, num_hashes=num_hashes, bands=bands,
-                shingle_n=shingle_n, seed=seed, text_col=text_col,
-                id_col=id_col, collapse_dups=False,
-            ),
-            # a group only pairs if its text yields >= 1 shingle (parity
-            # with the uncollapsed path, where shingle-less docs never
-            # reach the signature stage)
-            eligible_fn=lambda reps: shingles(
-                reps, n=shingle_n, text_col=text_col, id_col=id_col
-            ).select(id_col).distinct(),
-            score_col="jac",
-            within_score=F.lit(1.0),
-            text_col=text_col,
-            id_col=id_col,
-            expand_members=expand_members,
-        )
+    return _pairs_with_duplicate_collapse(
+        df,
+        rep_fn=lambda reps: _minhash_lsh_pairs_raw(
+            reps, threshold, num_hashes, bands, shingle_n, seed, text_col, id_col,
+        ),
+        # a group only pairs if its text yields >= 1 shingle (parity
+        # with the raw kernel, where shingle-less docs never reach the
+        # signature stage)
+        eligible_fn=lambda reps: shingles(
+            reps, n=shingle_n, text_col=text_col, id_col=id_col
+        ).select(id_col).distinct(),
+        score_col="jac",
+        within_score=F.lit(1.0),
+        text_col=text_col,
+        id_col=id_col,
+        expand_members=expand_members,
+    )
+
+
+def _minhash_lsh_pairs_raw(df: DataFrame, threshold: float, num_hashes: int,
+                           bands: int, shingle_n: int, seed: int,
+                           text_col: str, id_col: str) -> DataFrame:
+    """minhash_lsh_pairs' banding + re-score kernel, without the
+    duplicate collapse."""
     rows_per_band = num_hashes // bands
     sh = shingles(df, n=shingle_n, text_col=text_col, id_col=id_col).cache()
     sig = minhash_signatures(sh, num_hashes=num_hashes, seed=seed, id_col=id_col)
@@ -453,17 +454,16 @@ def simhash_values(df: DataFrame, text_col: str = "text",
 
 def simhash_near_pairs(df: DataFrame, max_hamming: int = 3,
                        text_col: str = "text", id_col: str = "doc_id",
-                       collapse_dups: bool = True,
                        expand_members: bool = True) -> DataFrame:
     """Candidate pairs with hamming(simhash) <= max_hamming via 4x16-bit
     block banding (pigeonhole: <=3 differing bits leave >=1 block equal),
     then exact hamming re-check via bit_count(xor).
 
-    `collapse_dups=True` (default, r9): identical texts have identical
-    simhashes, so a duplicate-saturated corpus puts whole duplicate
-    groups into every block bucket and the candidate join grows with
-    the duplication factor squared (6.9x wall at the sf10 canary's
-    100-copy corpus even though it survived).  The collapse emits
+    Exact duplicates are collapsed first (r9): identical texts have
+    identical simhashes, so a duplicate-saturated corpus puts whole
+    duplicate groups into every block bucket and the candidate join
+    grows with the duplication factor squared (6.9x wall at the sf10
+    canary's 100-copy corpus even though it survived).  The collapse emits
     within-group pairs directly at hamming 0 and runs the banding on
     one representative per distinct text — same output, O(output)
     intermediates; see _pairs_with_duplicate_collapse.
@@ -474,29 +474,30 @@ def simhash_near_pairs(df: DataFrame, max_hamming: int = 3,
     volume).  The grouped mode emits one row per group pair
     (d1, d2, hamming, g1, g2) — O(unique^2) output, the shape a 100 TB
     dedup job actually persists (cluster membership, not pair lists).
-    The graded key keeps the expanded contract; requires
-    collapse_dups=True.
+    The graded key keeps the expanded contract.
     """
-    if not expand_members and not collapse_dups:
-        raise ValueError("expand_members=False requires collapse_dups=True")
-    if collapse_dups:
-        return _pairs_with_duplicate_collapse(
-            df,
-            rep_fn=lambda reps: simhash_near_pairs(
-                reps, max_hamming=max_hamming, text_col=text_col,
-                id_col=id_col, collapse_dups=False,
-            ),
-            # parity with the uncollapsed path: a doc pairs only if it
-            # has >= 1 token (token-less docs never get a simhash row)
-            eligible_fn=lambda reps: tokens(reps, text_col, id_col)
-            .filter(F.size("toks") > 0)
-            .select(id_col),
-            score_col="hamming",
-            within_score=F.lit(0),
-            text_col=text_col,
-            id_col=id_col,
-            expand_members=expand_members,
-        )
+    return _pairs_with_duplicate_collapse(
+        df,
+        rep_fn=lambda reps: _simhash_near_pairs_raw(
+            reps, max_hamming, text_col, id_col
+        ),
+        # parity with the raw kernel: a doc pairs only if it has >= 1
+        # token (token-less docs never get a simhash row)
+        eligible_fn=lambda reps: tokens(reps, text_col, id_col)
+        .filter(F.size("toks") > 0)
+        .select(id_col),
+        score_col="hamming",
+        within_score=F.lit(0),
+        text_col=text_col,
+        id_col=id_col,
+        expand_members=expand_members,
+    )
+
+
+def _simhash_near_pairs_raw(df: DataFrame, max_hamming: int, text_col: str,
+                            id_col: str) -> DataFrame:
+    """simhash_near_pairs' block-banding kernel, without the duplicate
+    collapse."""
     sh = simhash_values(df, text_col, id_col)
     blocks = sh.select(
         id_col,

@@ -425,8 +425,7 @@ def _topk_with_duplicate_collapse(spark: SparkSession, emb_df: DataFrame,
 def cosine_topk_ivf(spark: SparkSession, emb_df: DataFrame, k: int = 5,
                     n_lists: int | None = None, n_probe: int | None = None,
                     train_iters: int = 5,
-                    id_col: str = "vec_id", vec_col: str = "embedding",
-                    collapse_dups: bool = True) -> DataFrame:
+                    id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """Approximate top-k via IVF (inverted-file) partitioning — the other
     standard ANN scale path next to LSH: spherical k-means splits the
     space into `n_lists` cells; each query probes only its `n_probe`
@@ -456,22 +455,27 @@ def cosine_topk_ivf(spark: SparkSession, emb_df: DataFrame, k: int = 5,
     layout (the recall fixtures at N<=2k resolve to 16 lists / 4 probes
     either way).
 
-    `collapse_dups=True` (default) indexes only distinct vectors and
-    reconstitutes duplicate members' neighbor lists afterwards — see
-    _topk_with_duplicate_collapse (identity on a duplicate-free corpus;
-    mandatory on duplicate-saturated ones, where cell joins otherwise
-    go quadratic in the duplication factor).
+    Only distinct vectors are indexed; duplicate members' neighbor lists
+    are reconstituted afterwards — see _topk_with_duplicate_collapse
+    (identity on a duplicate-free corpus; mandatory on duplicate-
+    saturated ones, where cell joins otherwise go quadratic in the
+    duplication factor).
     """
-    if collapse_dups:
-        return _topk_with_duplicate_collapse(
-            spark, emb_df, k,
-            lambda reps, kk: cosine_topk_ivf(
-                spark, reps, kk, n_lists=n_lists, n_probe=n_probe,
-                train_iters=train_iters, id_col=id_col, vec_col=vec_col,
-                collapse_dups=False,
-            ),
-            id_col, vec_col,
-        )
+    return _topk_with_duplicate_collapse(
+        spark, emb_df, k,
+        lambda reps, kk: _cosine_topk_ivf_raw(
+            spark, reps, kk, n_lists, n_probe, train_iters, id_col, vec_col,
+        ),
+        id_col, vec_col,
+    )
+
+
+def _cosine_topk_ivf_raw(spark: SparkSession, emb_df: DataFrame, k: int,
+                         n_lists: int | None, n_probe: int | None,
+                         train_iters: int, id_col: str,
+                         vec_col: str) -> DataFrame:
+    """cosine_topk_ivf's index + re-score kernel, without the duplicate
+    collapse."""
     if n_lists is None:
         n_lists = max(16, int(emb_df.count() ** 0.5))
     if n_probe is None:
@@ -542,8 +546,7 @@ def cosine_topk_ivf(spark: SparkSession, emb_df: DataFrame, k: int = 5,
 def cosine_topk_lsh(spark: SparkSession, emb_df: DataFrame, k: int = 5,
                     n_planes: int | None = None, n_tables: int = 16,
                     n_flip: int | None = None, seed: int = 42,
-                    id_col: str = "vec_id", vec_col: str = "embedding",
-                    collapse_dups: bool = True) -> DataFrame:
+                    id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """Approximate top-k via random-hyperplane LSH: the 100TB scale path.
 
     Each table hashes a vector to a signature bucket (sign pattern against
@@ -581,23 +584,28 @@ def cosine_topk_lsh(spark: SparkSession, emb_df: DataFrame, k: int = 5,
     (8 planes, 0 probes) layout, so goldens are unchanged; pass explicit
     values to pin a layout.
 
-    `collapse_dups=True` (default) indexes only distinct vectors and
-    reconstitutes duplicate members' neighbor lists afterwards — see
-    _topk_with_duplicate_collapse (identity on a duplicate-free corpus;
-    mandatory on duplicate-saturated ones, where the bucket join
-    otherwise goes quadratic in the duplication factor — the sf10
-    canary's 100-dup corpus OOM'd a 48 GiB heap without it).
+    Only distinct vectors are indexed; duplicate members' neighbor lists
+    are reconstituted afterwards — see _topk_with_duplicate_collapse
+    (identity on a duplicate-free corpus; mandatory on duplicate-
+    saturated ones, where the bucket join otherwise goes quadratic in
+    the duplication factor — the sf10 canary's 100-dup corpus OOM'd a
+    48 GiB heap without it).
     """
-    if collapse_dups:
-        return _topk_with_duplicate_collapse(
-            spark, emb_df, k,
-            lambda reps, kk: cosine_topk_lsh(
-                spark, reps, kk, n_planes=n_planes, n_tables=n_tables,
-                n_flip=n_flip, seed=seed, id_col=id_col, vec_col=vec_col,
-                collapse_dups=False,
-            ),
-            id_col, vec_col,
-        )
+    return _topk_with_duplicate_collapse(
+        spark, emb_df, k,
+        lambda reps, kk: _cosine_topk_lsh_raw(
+            spark, reps, kk, n_planes, n_tables, n_flip, seed, id_col, vec_col,
+        ),
+        id_col, vec_col,
+    )
+
+
+def _cosine_topk_lsh_raw(spark: SparkSession, emb_df: DataFrame, k: int,
+                         n_planes: int | None, n_tables: int,
+                         n_flip: int | None, seed: int, id_col: str,
+                         vec_col: str) -> DataFrame:
+    """cosine_topk_lsh's signature + re-score kernel, without the
+    duplicate collapse."""
     if n_planes is None:
         n_cnt = emb_df.count()
         n_planes = max(8, int(n_cnt).bit_length() - 3)

@@ -79,287 +79,10 @@ _GROUP_MODULES = [
     "r7w_ops",      # mixed groups — round-6 additions, batch 49 (graded r7)
 ]
 
-# R13 HANDOFF: the r12 window (active below) = _R13_WINDOW (the staged
-# cohort, swapped in verbatim per the r11 verdict item 7: 1 new key +
-# 49 re-grades last graded r2/r3).  CORRECTNESS_r11.json landed 50/50
-# green, so the ledger stays pure rolling freshness.  The r13 rotation
-# is again a one-name swap in build_registry():
-# `_R14_WINDOW + <recomputed next cohort>` — its first-50 is exactly
-# _R14_WINDOW (50 oldest re-grades, 9 r3-era + 41 r4-era; ALWAYS
-# recompute cohorts from the committed CORRECTNESS files, never
-# hard-code counts).  New hash-oracled keys enter at the HEAD of the
-# next staged window so they get a driver row the round after they
-# land.  Rows-only keys (no hash oracle — sim_mmr_rerank, iter_scc,
-# embedding_pq_codes, embedding_whitening, iter_als_topitems,
-# ts_spectral_peak, iter_maximal_matching, the ANN/approx families)
-# stay out of windows by design.
-# tests/test_registry_window.py enforces all window hygiene.
-# Per-round history lives in ROUNDS.md (moved out of this file in r10).
-#
-# Ordering note: the driver grades the FIRST 50 registry keys each round
-# (r1-r7 each produced exactly-50-key CORRECTNESS files cut at the 50th
-# key in registry order).  _R8_WINDOW = the 50 cheapest
-# never-driver-graded hash-oracled keys, verbatim the first 50 of
-# tools/r8_window_costs.json (sf0.01 warm harness cost, measured r7).
-# The r7 window (CORRECTNESS_r07.json) came back 50/50 green, so its
-# keys fold back into module order.  Rows-only keys (no ORACLES entry)
-# are deliberately excluded from windows so they stop burning grading
-# slots as phantom errs.  Remaining backlog after this window: 68
-# hash-oracled keys (_R9_WINDOW + 18 for r10);
-# tests/test_registry_window.py asserts window hygiene.
-_R8_WINDOW = [
-    "agg_kruskal_wallis",
-    "agg_eb_beta_binomial",
-    "agg_circular_mean",
-    "inc_bitemporal_asof",
-    "source_weblog_parse",
-    "source_json_array",
-    "window_underwater_duration",
-    "agg_cuped_adjustment",
-    "pipeline_interleave_order",
-    "join_interpolate_curve",
-    "agg_markov_transitions",
-    "window_fractals",
-    "agg_grouped_linreg",
-    "ts_decompose_additive",
-    "agg_kmv_jaccard",
-    "agg_cramers_v",
-    "text_js_divergence",
-    "dq_shard_balance",
-    "window_control_chart",
-    "window_attribution",
-    "sample_balanced_downsample",
-    "window_awesome_osc",
-    "agg_jackknife_se",
-    "fn_luhn_check",
-    "agg_spearman_corr",
-    "join_not_in_null_trap",
-    "agg_price_index",
-    "setop_division",
-    "ts_burst_days",
-    "join_allen_intervals",
-    "window_longest_streak",
-    "text_bpe_merge_pairs",
-    "agg_oaxaca_blinder",
-    "agg_growth_accounting",
-    "window_aroon",
-    "window_pivot_points",
-    "source_fixed_width",
-    "window_stochastic",
-    "window_linreg_channel",
-    "window_obv",
-    "cte_recursive_rollup",
-    "agg_survival_km",
-    "window_acc_dist",
-    "text_burrows_delta",
-    "ts_runs_test",
-    "ts_seasonal_strength",
-    "agg_bloom_filter",
-    "agg_revenue_bridge",
-    "agg_durbin_watson",
-    "udaf_geometric_mean",
-]
-
-# Pre-staged for round 9 (r7 verdict item 6): the next 50 keys of
-# tools/r8_window_costs.json.  build_registry() already orders these
-# right after _R8_WINDOW so the r9 rotation is a one-name swap.
-_R9_WINDOW = [
-    "window_cci",
-    "window_hull_ma",
-    "fn_hash_avalanche",
-    "agg_dau_wau_mau",
-    "text_feature_hashing",
-    "sample_systematic",
-    "window_vol_of_vol",
-    "dq_catalog_census",
-    "dq_pk_profile",
-    "fn_feistel_permute",
-    "agg_cohort_ltv",
-    "window_atr",
-    "ts_sax_symbols",
-    "window_candle_patterns",
-    "window_ultimate_osc",
-    "agg_auc_roc",
-    "window_ichimoku",
-    "agg_calibration_table",
-    "window_interval_stabbing",
-    "pipeline_curriculum",
-    "window_mfi",
-    "agg_cr4_concentration",
-    "sort_skyline_pareto",
-    "agg_ece",
-    "agg_chain_ladder",
-    "agg_cvar_expected_shortfall",
-    "agg_brier_score",
-    "agg_boxplot_stats",
-    "text_oov_rate",
-    "dq_corr_matrix",
-    "iter_sinkhorn",
-    "fn_business_days",
-    "dedup_ngram_spans",
-    "iter_markov_absorption",
-    "join_basket_overlap",
-    "window_keltner",
-    "agg_winsorized_mean",
-    "window_choppiness",
-    "agg_abc_classification",
-    "agg_decile_lift",
-    "agg_chi_square",
-    "agg_shapley_attribution",
-    "text_bpe_apply",
-    "window_adx",
-    "join_similarity_prefix_filter",
-    "agg_mann_whitney",
-    "agg_pareto_concentration",
-    "window_funnel_time_constrained",
-    "text_ngram_coverage",
-    "window_macd",
-]
-
-# _R10_WINDOW: the FINAL 18 never-driver-graded hash-oracled keys — the
-# tail of tools/r8_window_costs.json after _R8_WINDOW and _R9_WINDOW.
-# Pre-staged so the r10 builder only swaps the name in build_registry()
-# and the window test; after r10 lands, the cumulative driver record
-# covers every hash-oracled key and the window machinery can retire
-# (build_registry then returns plain module order).
-_R10_WINDOW = [  # 18 keys; the r10 first-50 = these + _R11_WINDOW[:32]
-    "window_kama",
-    "agg_kendall_tau",
-    "iter_katz_centrality",
-    "agg_rfm_segments",
-    "agg_welch_ttest",
-    "agg_ks_test",
-    "text_greedy_generate",
-    "sort_quickselect_kth",
-    "iter_bipartite_check",
-    "ts_holt_linear",
-    "iter_closeness_centrality",
-    "window_supertrend",
-    "window_heikin_ashi",
-    "iter_graph_diameter",
-    "stream_attribution",
-    "agg_bootstrap_ci",
-    "window_parabolic_sar",
-    "ts_theil_sen",
-]
-
-# _R11_WINDOW: rolling-freshness re-grades (r8 verdict item 5).  Once
-# _R10_WINDOW drains, every hash-oracled key has a driver row — but the
-# r1-era rows are 9+ rounds stale.  These are the 50 OLDEST-graded hash
-# keys (latest driver row = round 1 or 2; recomputed from the committed
-# CORRECTNESS_r*.json files — 46 keys last graded in r1, plus the 4
-# alphabetically-first r2 keys), staged so the ledger becomes a rolling
-# freshness check instead of a one-shot census.  The r10 first-50 is
-# _R10_WINDOW (18) + _R11_WINDOW[:32]; the r11 builder then rotates to
-# _R11_WINDOW[32:] + the next-oldest cohort.  Unlike _R8-_R10 these
-# keys HAVE green driver rows already — the hygiene test treats
-# re-grades as legitimate window members, not wasted slots.
-_R11_WINDOW = [
-    "agg_bool_bitwise",
-    "agg_corr_covar",
-    "agg_cube",
-    "agg_distinct_count",
-    "agg_filter_clause",
-    "agg_global",
-    "agg_grouping_sets",
-    "agg_having",
-    "agg_histogram_bins",
-    "agg_minmax_by",
-    "agg_percentiles",
-    "agg_pivot",
-    "agg_pricing_summary",
-    "agg_rollup",
-    "agg_stats",
-    "agg_string_concat",
-    "agg_unpivot",
-    "case_coalesce_cast",
-    "cte_exchange_reuse",
-    "filter_in_like_null",
-    "filter_range_pred",
-    "join_anti",
-    "join_asof",
-    "join_broadcast",
-    "join_correlated_subquery",
-    "join_cross",
-    "join_full_outer",
-    "join_lateral",
-    "join_left_outer",
-    "join_multiway",
-    "join_null_safe",
-    "join_range_binned",
-    "join_range_theta",
-    "join_scalar_subquery",
-    "join_semi",
-    "join_shuffle_equi",
-    "project_expr",
-    "sample_hash_bucket",
-    "scan_filter_pushdown",
-    "scan_full",
-    "scan_project_prune",
-    "sink_partitioned_pruning",
-    "source_csv_roundtrip",
-    "source_jsonl_roundtrip",
-    "source_orc_roundtrip",
-    "source_text_kv",
-    "dedup_exact_hash",
-    "dedup_near_jaccard",
-    "fn_array",
-    "fn_array_hof",
-]
-
-
-# _R12_WINDOW: the second rolling-freshness cohort (r9 verdict item 7).
-# The r11 first-50 = _R11_WINDOW[32:] (the 18 re-grades the r10 window
-# didn't reach) + these 32 — the next-oldest driver rows, recomputed
-# this session from CORRECTNESS_r01-r09 (all latest-graded in round 2;
-# the cut inside round 2 is alphabetical, same convention as
-# _R11_WINDOW's r2 tail).  The r11 builder's rotation is again a
-# one-name swap: `_R11_WINDOW[32:] + _R12_WINDOW + <next cohort>`.
-_R12_WINDOW = [
-    "fn_array_setops",
-    "fn_bitwise_conditional",
-    "fn_datetime",
-    "fn_datetime_epoch",
-    "fn_hash_digest",
-    "fn_interval_arith",
-    "fn_json",
-    "fn_levenshtein",
-    "fn_math",
-    "fn_printf_format",
-    "fn_regexp_capture",
-    "fn_sequence_gapfill",
-    "fn_string",
-    "fn_string_pad",
-    "fn_struct_map",
-    "mr_chain_jobs",
-    "mr_flatmap_posexplode",
-    "mr_salted_skew_agg",
-    "mr_secondary_sort",
-    "mr_wordcount",
-    "pipeline_curation",
-    "setop_except",
-    "setop_except_all",
-    "setop_intersect",
-    "setop_intersect_all",
-    "setop_union_all",
-    "setop_union_distinct",
-    "sort_limit_topn",
-    "sort_multi_key",
-    "sort_nulls_ordering",
-    "udaf_weighted_avg",
-    "udf_grouped_map",
-]
-
-
-# _R13_WINDOW: the third rolling-freshness cohort, staged for the r12
-# one-name swap.  Head = dedup_simhash_grouped, the r11-new hash key
-# (the grouped O(unique^2) dedup output mode promoted to the graded
-# surface — r10 verdict item 7): never-graded keys take window priority
-# so no key waits more than one round for a driver row.  The remaining
-# 49 are the next-oldest driver rows, recomputed this session from
-# CORRECTNESS_r01-r10 (the 12 remaining round-2 keys + the 37
-# alphabetically-first round-3 keys — same boundary-round alphabetical
-# cut convention as _R11/_R12).
+# Each graded round checks the first 50 registry keys, so these two
+# lists set the registry order: _R13_WINDOW is the active first 50 and
+# _R14_WINDOW is staged as the next first 50.  ROUNDS.md has the
+# history of how each cohort was chosen.
 _R13_WINDOW = [
     "dedup_simhash_grouped",
     "udf_pandas_vectorized",
@@ -413,18 +136,6 @@ _R13_WINDOW = [
     "text_bigram_top",
 ]
 
-
-# _R14_WINDOW: the fourth rolling-freshness cohort, staged for the r13
-# one-name swap.  No new hash-oracled keys landed in r12 (optimization
-# round — no new features), so the cohort is pure re-grades: the 50
-# next-oldest driver rows outside the active _R13_WINDOW, recomputed
-# this session from CORRECTNESS_r01-r11 (the 9 remaining hash-oracled
-# round-3 keys + the 41 alphabetically-first round-4 keys — same
-# boundary-round alphabetical cut convention as _R11-_R13; the older
-# r1-r4 keys that look skipped — agg_approx_distinct, mr_partition_custom,
-# the ANN/minhash family, agg_approx_percentile, inc_iter_warmstart —
-# are rows-only keys with no hash oracle, excluded from windows by
-# design).
 _R14_WINDOW = [
     "text_fingerprint",
     "text_lang_id",
@@ -493,14 +204,7 @@ def build_registry() -> tuple[dict, dict]:
                 raise ValueError(f"oracle without query: {k}")
             oracles[k] = sql
     ordered: dict = {}
-    # r12 rotation (r11 verdict item 7): the r11 window
-    # (_R11_WINDOW[32:] + _R12_WINDOW) drained 50/50 green in
-    # CORRECTNESS_r11.json, so those keys fold back into module order.
-    # The r12 first-50 = _R13_WINDOW exactly as staged (1 new key,
-    # dedup_simhash_grouped, + the 49 next-oldest re-grades — this puts
-    # official driver rows on the r11-rewritten sim_topk_cosine and
-    # ts_theil_sen).  _R14_WINDOW staged next: the 50 next-oldest
-    # re-grades, recomputed from CORRECTNESS_r01-r11.
+    # graded windows first, in list order (see the note on _R13_WINDOW)
     for k in _R13_WINDOW + _R14_WINDOW:
         ordered[k] = queries.pop(k)  # KeyError = stale window list; fail loud
     ordered.update(queries)          # everything already graded, module order

@@ -105,6 +105,33 @@ def chunk_events(
     return [tiled.filter(F.col("_chunk") == i).drop("_chunk") for i in range(n)]
 
 
+def _replay(q, sources: list[tuple[list[DataFrame], str]]) -> None:
+    """Drive the running query `q` through a deterministic replay, then
+    stop it: arrival i lands chunk i of every (chunks, source_dir) pair,
+    in order, and is fully processed (`processAllAvailable`) before
+    arrival i + 1.  Each chunk is staged then its part-files are moved
+    in flat as `chunk-{i}-{j}.parquet`: a `chunk=i` subdir would be
+    inferred as a partition column and break the stream's fixed
+    schema."""
+    try:
+        for i in range(max(len(chunks) for chunks, _ in sources)):
+            for chunks, src_dir in sources:
+                if i >= len(chunks):
+                    continue
+                stage = os.path.join(src_dir, f"_stage_{i}")
+                chunks[i].write.parquet(stage)
+                for j, f in enumerate(sorted(os.listdir(stage))):
+                    if f.endswith(".parquet"):
+                        os.rename(
+                            os.path.join(stage, f),
+                            os.path.join(src_dir, f"chunk-{i}-{j}.parquet"),
+                        )
+                shutil.rmtree(stage, ignore_errors=True)
+            q.processAllAvailable()
+    finally:
+        q.stop()
+
+
 def stream_over_chunks(
     spark: SparkSession,
     chunks: list[DataFrame],
@@ -134,23 +161,7 @@ def stream_over_chunks(
             .option("checkpointLocation", ckpt_dir)
             .start()
         )
-        try:
-            for i, chunk in enumerate(chunks):
-                # stage then move part-files in flat: a `chunk=i` subdir
-                # would be inferred as a partition column and break the
-                # stream's fixed schema
-                stage = os.path.join(src_dir, f"_stage_{i}")
-                chunk.write.parquet(stage)
-                for j, f in enumerate(sorted(os.listdir(stage))):
-                    if f.endswith(".parquet"):
-                        os.rename(
-                            os.path.join(stage, f),
-                            os.path.join(src_dir, f"chunk-{i}-{j}.parquet"),
-                        )
-                shutil.rmtree(stage, ignore_errors=True)
-                q.processAllAvailable()
-        finally:
-            q.stop()
+        _replay(q, [(chunks, src_dir)])
         # materialize: the memory sink table dies with the query's session
         # state eventually; snapshot it for the caller
         return spark.table(query_name).localCheckpoint(eager=True)
@@ -179,20 +190,7 @@ def stream_over_chunks_foreach(
             .option("checkpointLocation", ckpt_dir)
             .start()
         )
-        try:
-            for i, chunk in enumerate(chunks):
-                stage = os.path.join(src_dir, f"_stage_{i}")
-                chunk.write.parquet(stage)
-                for j, f in enumerate(sorted(os.listdir(stage))):
-                    if f.endswith(".parquet"):
-                        os.rename(
-                            os.path.join(stage, f),
-                            os.path.join(src_dir, f"chunk-{i}-{j}.parquet"),
-                        )
-                shutil.rmtree(stage, ignore_errors=True)
-                q.processAllAvailable()
-        finally:
-            q.stop()
+        _replay(q, [(chunks, src_dir)])
     finally:
         shutil.rmtree(src_dir, ignore_errors=True)
         shutil.rmtree(ckpt_dir, ignore_errors=True)
@@ -212,10 +210,11 @@ def stream_over_two_sources(
     deterministic replay of two correlated delta feeds."""
     dirs = [tempfile.mkdtemp(prefix=f"i2mr-2stream-{query_name}-{s}-")
             for s in ("l", "r", "ckpt")]
+    sources = [(left_chunks, dirs[0]), (right_chunks, dirs[1])]
     try:
         streams = [
             spark.readStream.schema(chunks[0].schema).parquet(d)
-            for chunks, d in ((left_chunks, dirs[0]), (right_chunks, dirs[1]))
+            for chunks, d in sources
         ]
         q = (
             transform(*streams)
@@ -225,23 +224,7 @@ def stream_over_two_sources(
             .option("checkpointLocation", dirs[2])
             .start()
         )
-        try:
-            for i in range(max(len(left_chunks), len(right_chunks))):
-                for chunks, d in ((left_chunks, dirs[0]), (right_chunks, dirs[1])):
-                    if i >= len(chunks):
-                        continue
-                    stage = os.path.join(d, f"_stage_{i}")
-                    chunks[i].write.parquet(stage)
-                    for j, f in enumerate(sorted(os.listdir(stage))):
-                        if f.endswith(".parquet"):
-                            os.rename(
-                                os.path.join(stage, f),
-                                os.path.join(d, f"chunk-{i}-{j}.parquet"),
-                            )
-                    shutil.rmtree(stage, ignore_errors=True)
-                q.processAllAvailable()
-        finally:
-            q.stop()
+        _replay(q, sources)
         return spark.table(query_name).localCheckpoint(eager=True)
     finally:
         for d in dirs:

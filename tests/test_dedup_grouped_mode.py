@@ -8,7 +8,7 @@ group pair (d1, d2, score, g1, g2) — O(unique^2).  These tests expand
 the grouped rows through the membership map (md5 of text -> member ids)
 and assert the result equals the expanded mode EXACTLY, on a
 duplicate-saturated corpus built by replicating sf0.001 documents
-4x with fresh ids (the same construction as tools/make_dups.py).
+4x with fresh ids (the construction of tools/make_fixture.py sf001dup).
 """
 
 from __future__ import annotations
@@ -130,12 +130,6 @@ def test_exact_jaccard_grouped_mode_information_equivalent(dup_docs):
 
 
 def test_grouped_mode_requires_collapse(dup_docs):
-    with pytest.raises(ValueError):
-        dedup.simhash_near_pairs(dup_docs, collapse_dups=False, expand_members=False)
-    with pytest.raises(ValueError):
-        dedup.minhash_lsh_pairs(
-            dup_docs, threshold=0.5, collapse_dups=False, expand_members=False
-        )
     with pytest.raises(ValueError):
         dedup.near_jaccard_pairs(dup_docs, 0.5, expand_members=False)
 

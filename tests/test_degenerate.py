@@ -12,14 +12,16 @@ zero variance).  This file pins one representative per failure class on
 BOTH fixtures; the FULL 469-key x 2-fixture gate is
 ``tools/sweep_degenerate.sh`` (469/469 green on each, 2026-08-16).
 
-Fixtures are regenerated into tmp from the sf0.001 schemas by the same
-pyarrow path as tools/make_empty.py, so the parquet physical types
-(including events.ts INT64 TIMESTAMP(NANOS)) match the driver's.
+Fixtures are regenerated into tmp by tools/make_fixture.py, the same
+script the sweep uses; its sf0/sfmin slices keep the parquet physical
+types (including events.ts INT64 TIMESTAMP(NANOS)) of the source.
 """
 
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
 
 import pyarrow.parquet as pq
 import pytest
@@ -29,10 +31,35 @@ from i2mapreduce_spark.queries import build_registry
 
 from conftest import SF_SMALL
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+_MAKE_FIXTURE = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "tools", "make_fixture.py",
+)
+FIXTURES = ["sf0", "sfmin", "sf001nulls", "sf001nullfk", "sf001uni", "sf001big", "sf001dup"]
+
+
+def _make_fixture(fixture: str, src: str, out: str) -> subprocess.CompletedProcess:
+    return subprocess.run(
+        [sys.executable, _MAKE_FIXTURE, fixture, src, out],
+        capture_output=True, text=True,
+    )
+
+
+@pytest.fixture(scope="module")
+def fixture_dir(tmp_path_factory):
+    """fixture name -> directory built from SF_SMALL, once per module."""
+    built: dict = {}
+
+    def get(fixture: str) -> str:
+        if fixture not in built:
+            out = str(tmp_path_factory.mktemp(fixture))
+            res = _make_fixture(fixture, SF_SMALL, out)
+            assert res.returncode == 0, res.stderr
+            built[fixture] = out
+        return built[fixture]
+
+    return get
+
 
 #: one key per r8 degenerate-crash class (see module docstring)
 REPRESENTATIVE_KEYS = [
@@ -51,14 +78,9 @@ REPRESENTATIVE_KEYS = [
 ]
 
 
-@pytest.fixture(scope="module", params=[0, 1], ids=["sf0", "sfmin"])
-def degenerate_dir(request, tmp_path_factory):
-    n_rows = request.param
-    out = str(tmp_path_factory.mktemp(f"deg{n_rows}"))
-    for t in TABLES:
-        tbl = pq.read_table(os.path.join(SF_SMALL, f"{t}.parquet"))
-        pq.write_table(tbl.slice(0, n_rows), os.path.join(out, f"{t}.parquet"))
-    return out
+@pytest.fixture(scope="module", params=["sf0", "sfmin"])
+def degenerate_dir(request, fixture_dir):
+    return fixture_dir(request.param)
 
 
 #: one key per r8 NULL-injection divergence class (SWEEP_DEGENERATE.md)
@@ -74,24 +96,9 @@ NULL_KEYS = [
 ]
 
 
-@pytest.fixture(scope="module")
-def nulls_dir(tmp_path_factory):
-    import subprocess
-    import sys as _sys
-
-    out = str(tmp_path_factory.mktemp("nulls"))
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    subprocess.run(
-        [_sys.executable, os.path.join(root, "tools", "make_nulls.py"),
-         SF_SMALL, out],
-        check=True,
-        capture_output=True,
-    )
-    return out
-
-
 @pytest.mark.parametrize("key", NULL_KEYS)
-def test_null_injected_inputs_match_oracle(spark, nulls_dir, key):
+def test_null_injected_inputs_match_oracle(spark, fixture_dir, key):
+    nulls_dir = fixture_dir("sf001nulls")
     queries, oracles = build_registry()
     df = queries[key](spark, nulls_dir)
     con = oracle_connect(nulls_dir)
@@ -125,24 +132,9 @@ NULLFK_KEYS = [
 ]
 
 
-@pytest.fixture(scope="module")
-def nullfk_dir(tmp_path_factory):
-    import subprocess
-    import sys as _sys
-
-    out = str(tmp_path_factory.mktemp("nullfk"))
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    subprocess.run(
-        [_sys.executable, os.path.join(root, "tools", "make_nulls.py"),
-         SF_SMALL, out, "--fks"],
-        check=True,
-        capture_output=True,
-    )
-    return out
-
-
 @pytest.mark.parametrize("key", NULLFK_KEYS)
-def test_null_join_key_inputs_match_oracle(spark, nullfk_dir, key):
+def test_null_join_key_inputs_match_oracle(spark, fixture_dir, key):
+    nullfk_dir = fixture_dir("sf001nullfk")
     queries, oracles = build_registry()
     df = queries[key](spark, nullfk_dir)
     if key in oracles:
@@ -167,24 +159,9 @@ UNICODE_KEYS = [
 ]
 
 
-@pytest.fixture(scope="module")
-def unicode_dir(tmp_path_factory):
-    import subprocess
-    import sys as _sys
-
-    out = str(tmp_path_factory.mktemp("uni"))
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    subprocess.run(
-        [_sys.executable, os.path.join(root, "tools", "make_unicode.py"),
-         SF_SMALL, out],
-        check=True,
-        capture_output=True,
-    )
-    return out
-
-
 @pytest.mark.parametrize("key", UNICODE_KEYS)
-def test_unicode_inputs_match_oracle(spark, unicode_dir, key):
+def test_unicode_inputs_match_oracle(spark, fixture_dir, key):
+    unicode_dir = fixture_dir("sf001uni")
     queries, oracles = build_registry()
     df = queries[key](spark, unicode_dir)
     con = oracle_connect(unicode_dir)
@@ -214,20 +191,20 @@ def onesided_dir(tmp_path_factory):
     import pyarrow as pa
 
     out = str(tmp_path_factory.mktemp("onesided"))
-    for t in TABLES:
-        tbl = pq.read_table(os.path.join(SF_SMALL, f"{t}.parquet"))
-        if t == "orders":
+    for f in os.listdir(SF_SMALL):
+        tbl = pq.read_table(os.path.join(SF_SMALL, f))
+        if f == "orders.parquet":
             df = tbl.slice(0, 5).to_pandas()
             df["o_orderdate"] = pd.to_datetime(
                 ["1995-01-0%d" % d for d in range(1, 6)]
             )
             df["o_totalprice"] = np.array([0.01, 0.01, 0.01, 0.02, 0.03])
             tbl = pa.Table.from_pandas(df, schema=tbl.schema, preserve_index=False)
-        elif t == "events":
+        elif f == "events.parquet":
             df = tbl.to_pandas()
             df["event_type"] = "view"  # both variants, zero conversions
             tbl = pa.Table.from_pandas(df, schema=tbl.schema, preserve_index=False)
-        pq.write_table(tbl, os.path.join(out, f"{t}.parquet"))
+        pq.write_table(tbl, os.path.join(out, f))
     return out
 
 
@@ -266,3 +243,31 @@ def test_degenerate_inputs_are_well_defined(spark, degenerate_dir, key):
         assert res.ok, str(res)
     else:
         assert df.count() >= 0  # rows-only: well-defined, no crash
+
+
+@pytest.mark.parametrize("fixture", FIXTURES)
+def test_fixture_keeps_every_table_and_schema(fixture_dir, fixture):
+    out = fixture_dir(fixture)
+    tables = sorted(os.listdir(SF_SMALL))
+    assert len(tables) == 10 and sorted(os.listdir(out)) == tables
+    for f in tables:
+        src = pq.read_table(os.path.join(SF_SMALL, f))
+        got = pq.read_table(os.path.join(out, f))
+        assert got.schema.equals(src.schema), f
+        if fixture == "sf0":
+            want = 0
+        elif fixture == "sfmin":
+            want = 1
+        elif fixture == "sf001dup" and f in ("documents.parquet", "embeddings.parquet"):
+            want = 10 * src.num_rows
+        else:
+            want = src.num_rows
+        assert got.num_rows == want, f
+
+
+def test_dup_fixture_fails_loudly_on_empty_source(fixture_dir, tmp_path):
+    # max(id) over an empty table has no stride: writing NULL ids would
+    # pass silently, so the script must exit non-zero instead
+    res = _make_fixture("sf001dup", fixture_dir("sf0"), str(tmp_path))
+    assert res.returncode != 0
+    assert "empty" in res.stderr

@@ -1,18 +1,9 @@
-"""Window hygiene: the driver grades the FIRST 50 registry keys each
-round (observed r1-r8: every CORRECTNESS_r*.json is exactly the first
-50 keys in registry order).  Draining the grading backlog therefore
-depends on the active window being exactly 50 hash-oracled keys the
-driver has not yet green-lit.  This test keeps the window honest
-against the committed CORRECTNESS files, and — per the r7 verdict/
-advice — is lifecycle-aware: a window key whose latest driver row is
-GREEN is fine (the round completed; the suite must survive its own
-success), only a red/err row or a stale-resubmission marks a wasted
-slot.
-
-Round 9 adds the rolling-freshness era (r8 verdict item 5): once the
-never-graded backlog drains (_R10_WINDOW), windows become re-grades of
-the OLDEST-graded keys (_R11_WINDOW and successors), so a green driver
-row on an _R11 key is expected, not a wasted slot.
+"""Window hygiene: each graded round checks the FIRST 50 registry keys
+(every CORRECTNESS_r*.json is exactly the first 50 keys in registry
+order).  `build_registry()` puts `_R13_WINDOW` (the active window)
+first and `_R14_WINDOW` (the staged next window) second; these tests
+keep both lists honest against the committed CORRECTNESS files.
+ROUNDS.md has the history of earlier windows.
 """
 
 from __future__ import annotations
@@ -21,25 +12,12 @@ import glob
 import json
 import os
 
-from i2mapreduce_spark.queries import (
-    _R9_WINDOW,
-    _R10_WINDOW,
-    _R11_WINDOW,
-    _R12_WINDOW,
-    _R13_WINDOW,
-    _R14_WINDOW,
-    build_registry,
-)
+from i2mapreduce_spark.queries import _R13_WINDOW, _R14_WINDOW, build_registry
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-#: keys allowed in the window despite a non-green driver row (stale
-#: `err: no_oracle` from before they gained a hash oracle).  Empty
-#: since r7: iter_kmeans' resubmission came back hash-green.
-RESUBMITTED: set = set()
 
-
-def _driver_rows_with_round() -> dict:
+def _graded_rows_with_round() -> dict:
     """key -> (latest round graded, latest row)."""
     rows: dict = {}
     for f in sorted(glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json"))):
@@ -49,99 +27,71 @@ def _driver_rows_with_round() -> dict:
     return rows
 
 
-def _latest_driver_rows() -> dict:
-    return {k: row for k, (_, row) in _driver_rows_with_round().items()}
-
-
 def _is_green(row: dict) -> bool:
     return (
         row.get("err") is None
         and row.get("rows_match") is True
         and row.get("schema_match") is True
-        # rows-only keys have hash_match None; window keys are all
-        # hash-oracled so demand the full hash pass
         and row.get("hash_match") is True
     )
 
 
 def test_window_is_first_50_registry_keys():
-    # r12 era: first-50 = _R13_WINDOW verbatim (1 new key + 49 oldest
-    # re-grades, swapped in per the r11 verdict item 7) — pure rolling
-    # freshness.
     queries, _ = build_registry()
     assert list(queries)[:50] == _R13_WINDOW
-    assert len(set(_R10_WINDOW)) == 18
-    assert len(set(_R11_WINDOW)) == 50
-    assert len(set(_R12_WINDOW)) == 32
 
 
 def test_r13_rotation_staged_right_after_r12():
-    # r13 must be a one-name swap: its first-50 = _R14_WINDOW (the 50
-    # next-oldest re-grades), which is exactly registry positions
-    # 50..100 today.
+    # the next rotation is a one-name swap: the staged window already
+    # holds registry positions 50..100
     queries, _ = build_registry()
     assert list(queries)[50:100] == _R14_WINDOW
-    assert len(set(_R13_WINDOW)) == 50
-    assert len(set(_R14_WINDOW)) == 50
-    assert not set(_R9_WINDOW) & set(_R10_WINDOW)
-    assert not (set(_R9_WINDOW) | set(_R10_WINDOW)) & set(_R11_WINDOW)
-    assert not (set(_R10_WINDOW) | set(_R11_WINDOW)) & set(_R12_WINDOW)
-    assert not (set(_R11_WINDOW) | set(_R12_WINDOW)) & set(_R13_WINDOW)
-    assert not (set(_R12_WINDOW) | set(_R13_WINDOW)) & set(_R14_WINDOW)
+    assert len(set(_R13_WINDOW)) == len(_R13_WINDOW) == 50
+    assert len(set(_R14_WINDOW)) == len(_R14_WINDOW) == 50
+    assert not set(_R13_WINDOW) & set(_R14_WINDOW)
+
+
+def test_window_keys_all_have_hash_oracles():
+    # rows-only keys can never hash-pass; one in the window burns a
+    # grading slot on a guaranteed `err: no_oracle`
+    _, oracles = build_registry()
+    assert [k for k in _R13_WINDOW + _R14_WINDOW if k not in oracles] == []
 
 
 def test_windows_cover_the_never_graded_backlog_exactly():
-    # The never-graded backlog drained in r10 (CORRECTNESS_r10.json,
-    # 50/50 green).  From r11 on, the only never-graded hash keys are
-    # keys NEW this round, and they must sit at the head of the staged
-    # window (_R14_WINDOW) so no key waits more than one round for a
-    # driver row.  (dedup_simhash_grouped, new in r11, got its driver
-    # row in CORRECTNESS file r11 or sits in the active r12 window.)
+    # a new hash-oracled key outside the active window must sit at the
+    # head of the staged window so it waits at most one round for a
+    # CORRECTNESS row
     queries, oracles = build_registry()
-    rows = _latest_driver_rows()
+    rows = _graded_rows_with_round()
     never_graded = [
         k for k in queries
         if k in oracles and k not in rows and k not in _R13_WINDOW
     ]
-    n = len(never_graded)
-    assert sorted(never_graded) == sorted(_R14_WINDOW[:n]), (
+    assert sorted(never_graded) == sorted(_R14_WINDOW[:len(never_graded)]), (
         "new never-graded hash keys must head the staged window"
     )
-    assert [k for k in _R14_WINDOW if k not in queries] == []
-    assert [k for k in _R14_WINDOW if k not in oracles] == []
 
 
 def test_staged_regrades_are_the_oldest_graded_cohort():
-    # Rolling freshness: the staged re-grade cohort (_R14_WINDOW, 50
-    # keys) must be already-graded hash keys whose latest driver row is
-    # from the OLDEST rounds on record (9 r3-era + 41 r4-era today).
-    # Recomputed from the committed CORRECTNESS files so the list can't
-    # silently rot.  Deliberately computed over the STAGED cohort, not
-    # the active window, so the test survives CORRECTNESS_r12.json
-    # landing (which refreshes the active window's keys but not these).
+    # Rolling freshness: the graded keys of the staged window must be the
+    # ones whose latest CORRECTNESS row is oldest.  No graded key outside both
+    # windows may be older than the staged cohort's newest round (ties
+    # at the boundary round cut alphabetically).  Computed over the
+    # STAGED cohort, not the active window, so the test survives the
+    # active window's next CORRECTNESS file landing.
     queries, oracles = build_registry()
-    rows = _driver_rows_with_round()
-    staged = _R14_WINDOW
-    assert len(staged) == 50
-    active = set(_R13_WINDOW)
-    assert all(k in oracles for k in staged)
-    assert not set(staged) & active
-    graded_rounds = {k: rnd for k, (rnd, _) in rows.items()}
-    # every staged key either has a driver row or is new this round
-    # (never-graded keys head the staged window, checked above); no
-    # graded key outside the active window + staged cohort is older
-    # than the staged cohort's newest round (ties at the boundary round
-    # cut alphabetically)
-    staged_graded = [k for k in staged if k in graded_rounds]
-    assert len(staged) - len(staged_graded) <= 1  # only the new key
+    graded_rounds = {k: rnd for k, (rnd, _) in _graded_rows_with_round().items()}
+    staged_graded = [k for k in _R14_WINDOW if k in graded_rounds]
+    assert len(_R14_WINDOW) - len(staged_graded) <= 1  # only a new key
     window_max = max(graded_rounds[k] for k in staged_graded)
+    windows = set(_R13_WINDOW) | set(_R14_WINDOW)
     stale_outside = [
         k
         for k in queries
         if k in oracles
         and k in graded_rounds
-        and k not in active
-        and k not in staged
+        and k not in windows
         and graded_rounds[k] < window_max
     ]
     assert stale_outside == [], (
@@ -150,24 +100,10 @@ def test_staged_regrades_are_the_oldest_graded_cohort():
     )
 
 
-def test_window_keys_all_have_hash_oracles():
-    # rows-only keys can never hash-pass; putting one in the window
-    # burns a grading slot on a guaranteed `err: no_oracle` (r6 burned
-    # 2 of 50 slots this way — agg_hll_union, iter_mst_forest)
-    _, oracles = build_registry()
-    missing = [
-        k
-        for k in _R9_WINDOW + _R10_WINDOW + _R11_WINDOW + _R12_WINDOW
-        + _R13_WINDOW + _R14_WINDOW
-        if k not in oracles
-    ]
-    assert missing == []
-
-
 def test_rows_only_keys_document_their_no_oracle_rationale():
-    # r6 verdict item 5: every key without a hash oracle must say WHY a
-    # portable oracle is impossible (float artifact, approx sketch,
-    # partition-dependent, greedy/adaptive chain) right in its docstring
+    # every key without a hash oracle must say WHY a portable oracle is
+    # impossible (float artifact, approx sketch, partition-dependent,
+    # greedy/adaptive chain) right in its docstring
     import inspect
 
     queries, oracles = build_registry()
@@ -186,35 +122,24 @@ def test_rows_only_keys_document_their_no_oracle_rationale():
 
 
 def test_window_keys_are_ungraded_or_green():
-    # Lifecycle-aware (r7 verdict item 1): a window key may have either
-    # no driver row yet (the round hasn't run) or a green latest row
-    # (the round ran and passed — including _R11 re-grades, which have
-    # green rows BY DESIGN).  A red/err latest row means the window
-    # burned a slot on a key that needs fixing, and the suite should say
-    # so loudly.
-    rows = _latest_driver_rows()
-    for k in (_R9_WINDOW + _R10_WINDOW + _R11_WINDOW + _R12_WINDOW
-              + _R13_WINDOW + _R14_WINDOW):
-        if k in RESUBMITTED:
-            # resubmission is only justified while the stale err stands
-            assert rows[k].get("err") == "no_oracle", k
-        elif k in rows:
-            assert _is_green(rows[k]), f"{k} has a non-green driver row"
+    # Every hash-oracled key (the window keys among them) has a green
+    # latest CORRECTNESS row, or is new, has never been graded, and waits
+    # in one of the windows.
+    _, oracles = build_registry()
+    rows = _graded_rows_with_round()
+    windows = set(_R13_WINDOW) | set(_R14_WINDOW)
+    red = [k for k in oracles if k in rows and not _is_green(rows[k][1])]
+    assert red == [], f"non-green latest CORRECTNESS rows: {red}"
+    unscheduled = [k for k in oracles if k not in rows and k not in windows]
+    assert unscheduled == [], f"never-graded keys outside the windows: {unscheduled}"
 
 
 def test_backlog_accounting_matches_cost_table():
-    # The r7 verdict dinged stale hard-coded backlog counts twice; pin
-    # the arithmetic to the committed artifacts instead.  Every key in
-    # tools/r8_window_costs.json must be hash-oracled and either
-    # never-graded or green; _R9_WINDOW is its keys 50..100 verbatim and
-    # _R10_WINDOW its final 18.
+    # Every key of tools/r8_window_costs.json (tools/canary_sf1.sh takes
+    # its first 20) is hash-oracled, and green where it has been graded.
+    _, oracles = build_registry()
+    rows = _graded_rows_with_round()
     costs = json.load(open(os.path.join(_REPO, "tools", "r8_window_costs.json")))
-    cost_keys = list(costs)
-    assert cost_keys[50:100] == _R9_WINDOW
-    assert cost_keys[100:] == _R10_WINDOW
-    queries, oracles = build_registry()
-    assert all(k in oracles for k in cost_keys)
-    rows = _latest_driver_rows()
-    for k in cost_keys:
-        if k in rows:
-            assert _is_green(rows[k]), f"{k} regressed in a driver round"
+    assert [k for k in costs if k not in oracles] == []
+    red = [k for k in costs if k in rows and not _is_green(rows[k][1])]
+    assert red == [], f"cost-table keys with non-green CORRECTNESS rows: {red}"

@@ -8,20 +8,17 @@
 # silently diverges from the oracle (NULL sort order, concat-vs-||,
 # CASE-ELSE-0 vs boolean-cast-NULL) fails exactly when a production
 # pipeline meets real data.  Runs the FULL 469-key registry,
-# hash-compared against DuckDB where an oracle exists, on all three
+# hash-compared against DuckDB where an oracle exists, on all seven
 # fixtures.  Exit 1 on any error or mismatch.
 set -e
 cd "$(dirname "$0")/.."
 OUT_ROOT=${OUT_ROOT:-/tmp/testdata}
 # ALWAYS regenerate (r8 advice): gating on file existence silently
 # reused a stale /tmp copy after a generator edit, making the gate
-# report green against old data.  The generators run in ~1s each.
-python tools/make_empty.py /root/testdata/sf0.001 "$OUT_ROOT"
-python tools/make_nulls.py /root/testdata/sf0.001 "$OUT_ROOT/sf001nulls"
-python tools/make_nulls.py /root/testdata/sf0.001 "$OUT_ROOT/sf001nullfk" --fks
-python tools/make_unicode.py /root/testdata/sf0.001 "$OUT_ROOT/sf001uni"
-python tools/make_dups.py /root/testdata/sf0.001 "$OUT_ROOT/sf001dup"
-python tools/make_extreme.py /root/testdata/sf0.001 "$OUT_ROOT/sf001big"
+# report green against old data.  Each fixture takes ~1s.
+for fx in sf0 sfmin sf001nulls sf001nullfk sf001uni sf001dup sf001big; do
+  python tools/make_fixture.py "$fx" /root/testdata/sf0.001 "$OUT_ROOT/$fx"
+done
 echo "== sf0 (all tables empty) =="
 I2MR_SF_DIR="$OUT_ROOT/sf0" python tools/check_oracle.py
 echo "== sfmin (one row per table) =="

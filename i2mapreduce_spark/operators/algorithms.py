@@ -305,64 +305,64 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 12) -> DataFrame:
     )
 
 
-def sssp(edges: DataFrame, source: int, max_hops: int = 4) -> DataFrame:
-    """Hop-limited BFS min-distance from `source` (GIM-V / iMapReduce
-    shortest-path shape): per hop, frontier ⋈ edges -> min-dist fold.
-    Monotone min-aggregation means re-visiting nodes is harmless — the
-    classic MapReduce SSSP the reference ships as an example app.
+def bfs(edges: DataFrame, seeds: DataFrame, max_hops: int = 4) -> DataFrame:
+    """Hop-limited, multi-source BFS min-distance (GIM-V / iMapReduce
+    shortest-path shape, the classic MapReduce SSSP the reference ships
+    as an example app): per hop, frontier ⋈ edges -> min-dist fold, one
+    `iterate()` round, checkpointed and releasing the hop it supersedes.
 
-    Memory hygiene (r10, same class as iterate()): each hop's eager
-    checkpoint supersedes the previous one, which is released so loop
-    memory stays O(1) hops; the edge cache is dropped before returning
-    (the final dist is already materialized and no longer reads it).
+    `seeds` is (*labels, node), each at dist 0; the result is (*labels,
+    node, dist int) for every (labels, node) reached within `max_hops`.
+    Labels run independent searches in one pass (K landmarks cost the
+    rounds of one).  Messages leave only the FRONTIER, the rows first
+    reached on the previous hop: an unweighted distance is final the
+    first time the min-fold assigns it, so a re-sent message could only
+    lose — same result, per-hop shuffle O(edges out of the new frontier)
+    instead of O(edges out of everything reached).
 
-    r12 (guide §2.3 shuffle fewer bytes): messages propagate from the
-    FRONTIER only — the nodes first reached on the previous hop (dist
-    == h), not the whole reached set.  In unweighted BFS a node's
-    distance is final the first time the min-fold assigns it, so a
-    non-frontier node's re-sent message can only lose to an existing
-    minimum: dropping those messages is result-identical while the
-    per-hop join/shuffle volume falls from O(edges out of everything
-    reached so far) to O(edges out of the new frontier) — on the dense
-    co-purchase graph hops 3+ previously re-shipped nearly the whole
-    reached subgraph every round.  An empty frontier ends the loop
-    early (the remaining hops were no-ops)."""
-    dist = edges.sparkSession.createDataFrame(
-        [(source, 0)], "node long, dist int"
-    )
+    An empty frontier ends the loop early.  That probe costs one job,
+    so it runs only where it can pay for itself: not on the final hop
+    and not before hop 3 (a frontier that dies at hop 1/2 leaves trivial
+    rounds; the probe costs more than it saves there — measured at
+    sf0.1)."""
+    labels = [c for c in seeds.columns if c != "node"]
+    keys = [*labels, "node"]
     edges, owned = _own_edges(edges)
-    prev = None
+
+    def step(dist: DataFrame, i: int) -> DataFrame:
+        frontier = dist.filter(F.col("dist") == i - 1).alias("f")
+        grown = frontier.join(
+            edges.alias("e"), F.col("f.node") == F.col("e.src")
+        ).select(
+            *[F.col(f"f.{c}") for c in labels],
+            F.col("e.dst").alias("node"),
+            (F.col("f.dist") + 1).alias("dist"),
+        )
+        return dist.union(grown).groupBy(*keys).agg(F.min("dist").alias("dist"))
+
+    hop = [0]
+
+    def frontier_left(_old: DataFrame, new: DataFrame) -> float:
+        hop[0] += 1
+        if not 3 <= hop[0] < max_hops:
+            return 1.0
+        return 0.0 if new.filter(F.col("dist") == hop[0]).isEmpty() else 1.0
+
     try:
-        for h in range(max_hops):
-            frontier = dist.filter(F.col("dist") == h)
-            grown = (
-                frontier.join(edges, frontier.node == edges.src)
-                .select(
-                    edges.dst.alias("node"), (frontier.dist + 1).alias("dist")
-                )
-            )
-            dist = (
-                dist.union(grown)
-                .groupBy("node")
-                .agg(F.min("dist").alias("dist"))
-                .transform(checkpoint_without_stats)
-            )
-            if prev is not None:
-                release_checkpoint(prev)
-            prev = dist
-            # early-exit probe only where it can pay for itself: not on
-            # the final hop (the loop ends either way) and not before
-            # hop 3 (a frontier that dies at hop 1/2 means a near-empty
-            # reach whose remaining rounds are trivial; the probe job
-            # costs more than it saves there — measured at sf0.1)
-            if 3 <= h + 1 < max_hops and dist.filter(
-                F.col("dist") == h + 1
-            ).isEmpty():
-                break  # no new nodes: every later hop is a no-op
+        return iterate(
+            seeds.select(*keys, F.lit(0).alias("dist")), step, max_hops,
+            delta_fn=frontier_left, tol=0.5, checkpoint_every=1,
+        ).state
     finally:
         if owned:
             release_checkpoint(edges)
-    return dist
+
+
+def sssp(edges: DataFrame, source: int, max_hops: int = 4) -> DataFrame:
+    """Hop-limited BFS min-distance (node, dist) from `source`: `bfs`
+    with one unlabelled seed."""
+    seed = edges.sparkSession.createDataFrame([(source,)], "node long")
+    return bfs(edges, seed, max_hops)
 
 
 def gimv(

@@ -21,25 +21,35 @@ where the range boundaries land.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
-__all__ = ["global_row_number", "global_running_sum"]
+__all__ = ["global_row_number", "global_running_sum", "global_running_max_excl"]
 
 
-def global_row_number(
+def _chunk_offsets(
     df: DataFrame,
     order_cols: list[str],
-    out_col: str = "i",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Append 1-based global ``row_number`` under ``order_cols`` (must be
-    a unique total order for determinism) as ``out_col``.
+    partials: dict[str, Column],
+    fold,
+    init,
+    num_partitions: int | None,
+) -> tuple[DataFrame, dict[str, Column]]:
+    """The chunked-offset steps shared by every operator here.
 
-    Scale: the only global coordination is the per-partition-count
-    collect (``num_partitions`` longs); everything row-wise stays
-    parallel.  The input is localCheckpointed once to pin partition ids
-    to the data (at 100 TB use reliable checkpoint()/a persisted stage
-    boundary instead — same call site).
+    Range-partitions ``df`` on ``order_cols``, sorts each partition,
+    pins the partition ids to the data as ``_pid`` and collects one row
+    of ``partials`` aggregates per partition (``num_partitions`` rows,
+    independent of data size: the only global coordination; everything
+    row-wise stays parallel).  Each partial is then folded over the
+    partitions in order, ``fold(acc, partial)`` from ``init``; the
+    returned column per name holds, keyed by ``_pid``, the fold over all
+    EARLIER partitions, cast to the partial's own type (a bare literal
+    would truncate double/decimal maxima, and a None offset would break
+    the map's value-type inference).
+
+    The ids are pinned by a plain ``localCheckpoint`` (executor blocks,
+    lost with their executor).  No option selects a reliable
+    ``checkpoint()``; at 100 TB that change goes at this one call site.
     """
     if num_partitions is None:
         n_conf = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
@@ -50,23 +60,41 @@ def global_row_number(
         .withColumn("_pid", F.spark_partition_id())
         .localCheckpoint(eager=True)  # pin partition ids with the data
     )
-    counts = {
-        r["_pid"]: r["cnt"]
-        for r in ranged.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
-    }
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    off_expr = F.element_at(
-        F.create_map(
-            *[F.lit(x) for pid in sorted(offsets) for x in (pid, offsets[pid])]
-        ),
-        F.col("_pid"),
+    per_pid = ranged.groupBy("_pid").agg(
+        *[agg.alias(name) for name, agg in partials.items()]
+    )
+    rows = sorted(per_pid.collect(), key=lambda r: r["_pid"])
+    offsets = {}
+    for name in partials:
+        val_type = per_pid.schema[name].dataType
+        pairs, acc = [], init
+        for r in rows:
+            pairs += [F.lit(r["_pid"]), F.lit(acc).cast(val_type)]
+            acc = fold(acc, r[name])
+        offsets[name] = F.element_at(F.create_map(*pairs), F.col("_pid"))
+    return ranged, offsets
+
+
+def _add(acc, t):
+    """Prefix-sum fold (from 0); a NULL partial sum counts as 0."""
+    return acc + (t or 0)
+
+
+def global_row_number(
+    df: DataFrame,
+    order_cols: list[str],
+    out_col: str = "i",
+    num_partitions: int | None = None,
+) -> DataFrame:
+    """Append 1-based global ``row_number`` under ``order_cols`` (must be
+    a unique total order for determinism) as ``out_col``: the local
+    ``row_number`` plus the row count of all earlier partitions."""
+    ranged, off = _chunk_offsets(
+        df, order_cols, {"cnt": F.count("*")}, _add, 0, num_partitions
     )
     wp = Window.partitionBy("_pid").orderBy(*order_cols)
     return ranged.withColumn(
-        out_col, (F.row_number().over(wp) + off_expr).cast("long")
+        out_col, (F.row_number().over(wp) + off["cnt"]).cast("long")
     ).drop("_pid")
 
 
@@ -79,51 +107,25 @@ def global_running_sum(
     """Append running ``SUM(c)`` for each ``c`` in ``sum_cols`` under the
     unique total order ``order_cols`` as ``cum_<c>`` — the prefix-sum
     twin of :func:`global_row_number`, and the distributed replacement
-    for an unpartitioned cumulative window:
-
-    1. range-partition + sort locally (parallel);
-    2. per-partition RUNNING sums (parallel, partition-local);
-    3. add the total of all earlier partitions — one bounded collect of
-       ``num_partitions`` partial sums per column, independent of rows.
+    for an unpartitioned cumulative window: per-partition RUNNING sums
+    plus the total of all earlier partitions.
 
     Identical to ``SUM(c) OVER (ORDER BY ... ROWS UNBOUNDED PRECEDING)``
     for any placement of the range boundaries, because integer/decimal
     addition is associative (use only exact-typed columns here — float
     prefix sums would be boundary-dependent).
     """
-    if num_partitions is None:
-        n_conf = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        num_partitions = int(n_conf)
-    ranged = (
-        df.repartitionByRange(num_partitions, *order_cols)
-        .sortWithinPartitions(*order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)  # pin partition ids with the data
+    ranged, off = _chunk_offsets(
+        df, order_cols, {c: F.sum(c) for c in sum_cols}, _add, 0, num_partitions
     )
-    totals = {
-        r["_pid"]: r
-        for r in ranged.groupBy("_pid")
-        .agg(*[F.sum(c).alias(c) for c in sum_cols])
-        .collect()
-    }
-    out = ranged
     wp = (
         Window.partitionBy("_pid")
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
+    out = ranged
     for c in sum_cols:
-        offsets, acc = {}, 0
-        for pid in sorted(totals):
-            offsets[pid] = acc
-            acc += totals[pid][c] or 0
-        off_expr = F.element_at(
-            F.create_map(
-                *[F.lit(x) for pid in sorted(offsets) for x in (pid, offsets[pid])]
-            ),
-            F.col("_pid"),
-        )
-        out = out.withColumn(f"cum_{c}", (F.sum(c).over(wp) + off_expr).cast("long"))
+        out = out.withColumn(f"cum_{c}", (F.sum(c).over(wp) + off[c]).cast("long"))
     return out.drop("_pid")
 
 
@@ -140,45 +142,19 @@ def global_running_max_excl(
     ``MAX(c) OVER (ORDER BY ... ROWS BETWEEN UNBOUNDED PRECEDING AND 1
     PRECEDING)`` without the single-partition window.  Same chunked
     scheme as :func:`global_running_sum` (max is associative too):
-    range-partition, partition-local exclusive running max, then fold in
-    the max of all earlier partitions via one bounded collect."""
-    if num_partitions is None:
-        n_conf = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        num_partitions = int(n_conf)
-    ranged = (
-        df.repartitionByRange(num_partitions, *order_cols)
-        .sortWithinPartitions(*order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)  # pin partition ids with the data
+    partition-local exclusive running max, then the max of all earlier
+    partitions (None before the first)."""
+
+    def fold_max(acc, t):
+        return t if acc is None or (t is not None and t > acc) else acc
+
+    ranged, off = _chunk_offsets(
+        df, order_cols, {"mx": F.max(max_col)}, fold_max, None, num_partitions
     )
-    totals = {
-        r["_pid"]: r["mx"]
-        for r in ranged.groupBy("_pid").agg(F.max(max_col).alias("mx")).collect()
-    }
-    offsets, acc = {}, None
-    for pid in sorted(totals):
-        offsets[pid] = acc  # max over all EARLIER partitions (None if none)
-        t = totals[pid]
-        acc = t if acc is None or (t is not None and t > acc) else acc
     wp = (
         Window.partitionBy("_pid")
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    # cast offsets to max_col's own type: a hard 'long' cast would
-    # silently truncate double/decimal maxima
-    val_type = ranged.schema[max_col].dataType
-    off_expr = F.element_at(
-        F.create_map(
-            *[
-                c
-                for pid in sorted(offsets)
-                # explicit cast: the first partition's offset is None and
-                # a bare NULL literal would break map value-type inference
-                for c in (F.lit(pid), F.lit(offsets[pid]).cast(val_type))
-            ]
-        ),
-        F.col("_pid"),
-    )
     local = F.max(max_col).over(wp)
-    return ranged.withColumn(out_col, F.greatest(local, off_expr)).drop("_pid")
+    return ranged.withColumn(out_col, F.greatest(local, off["mx"])).drop("_pid")

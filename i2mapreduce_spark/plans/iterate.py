@@ -17,8 +17,10 @@ The Spark equivalents, all realized here:
   (the warm start drops iterations-to-converge; asserted in tests).
 
 Lineage control: logical plans double per iteration; `localCheckpoint`
-(eager) every `checkpoint_every` iterations truncates them.  At 100 TB use
-reliable `checkpoint()` to HDFS instead — same call site, configurable.
+(eager) every `checkpoint_every` iterations truncates them.  No option
+selects a reliable `checkpoint()` to HDFS: `$I2MR_CKPT_LEVEL` sets only
+the local checkpoint's storage level (see checkpoint_without_stats), and
+at 100 TB the reliable variant would replace that one call site.
 """
 
 from __future__ import annotations

@@ -10,7 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Window, functions as F
 
 from ..catalog import cte, load_tables
-from ..plans.iterate import checkpoint_without_stats, release_checkpoint
+from ..operators import algorithms
+from ..plans.iterate import checkpoint_without_stats
 
 #: closeness centrality: landmark count and BFS hop cap
 CLOSE_K = 6
@@ -131,10 +132,11 @@ def q_agg_kruskal_wallis(spark, sf_dir):
 
 def q_iter_closeness_centrality(spark, sf_dir):
     """Hop-bounded closeness centrality of the CLOSE_K smallest-id parts
-    in the co-purchase graph: one MULTI-SOURCE labeled BFS (frontier
-    rows carry their landmark id), so K landmarks cost the same 5
-    join+min-fold rounds as one — the standard landmark/pivot scheme
-    for centrality at scale, vs K sequential BFS sweeps or all-pairs.
+    in the co-purchase graph: one MULTI-SOURCE labeled BFS
+    (`algorithms.bfs` with (lm, node) seeds: frontier rows carry their
+    landmark id), so K landmarks cost the same 5 join+min-fold rounds
+    as one — the standard landmark/pivot scheme for centrality at scale,
+    vs K sequential BFS sweeps or all-pairs.
     Closeness = n_reached / sum_dist as a half-up x10^6 integer
     quotient on exact BIGINT counts.  Oracle: DuckDB replays the same
     labeled BFS as one recursive CTE with the same hop cap."""
@@ -146,47 +148,9 @@ def q_iter_closeness_centrality(spark, sf_dir):
         .orderBy("lm")
         .limit(CLOSE_K)
     )
-    dist = lands.select(
-        "lm", F.col("lm").alias("node"), F.lit(0).alias("dist")
+    dist = algorithms.bfs(
+        edges, lands.select("lm", F.col("lm").alias("node")), CLOSE_HOPS
     )
-    # r12 (guide §2.3, the sssp frontier rewrite applied to its labeled
-    # multi-source twin): messages propagate from the FRONTIER only —
-    # the (lm, node) pairs first reached on the previous hop — not the
-    # whole reached set.  In unweighted BFS a (landmark, node) distance
-    # is final the first time the min-fold assigns it, so a re-sent
-    # non-frontier message can only lose to an existing minimum:
-    # result-identical, while the per-hop join volume falls from
-    # O(K x reached) to O(K x new frontier) — by hop 3 the reached set
-    # is ~the whole graph per landmark.  Superseded hop checkpoints are
-    # released (same O(1)-hops memory contract as sssp).
-    prev = None
-    for h in range(CLOSE_HOPS):
-        frontier = dist.filter(F.col("dist") == h)
-        grown = (
-            frontier.alias("d")
-            .join(edges.alias("e"), F.col("d.node") == F.col("e.src"))
-            .select(
-                F.col("d.lm").alias("lm"),
-                F.col("e.dst").alias("node"),
-                (F.col("d.dist") + 1).alias("dist"),
-            )
-        )
-        dist = (
-            dist.union(grown)
-            .groupBy("lm", "node")
-            .agg(F.min("dist").alias("dist"))
-            .transform(checkpoint_without_stats)
-        )
-        if prev is not None:
-            release_checkpoint(prev)
-        prev = dist
-        # early-exit probe, same cadence rule as sssp: never on the
-        # final hop, not before hop 3 (the probe job outcosts the
-        # trivial remaining rounds of a near-dead frontier there)
-        if 3 <= h + 1 < CLOSE_HOPS and dist.filter(
-            F.col("dist") == h + 1
-        ).isEmpty():
-            break
     res = dist.groupBy("lm").agg(
         (F.count(F.lit(1)) - 1).alias("n_reached"),
         F.sum("dist").alias("sum_dist"),

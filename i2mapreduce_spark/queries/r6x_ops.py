@@ -27,7 +27,8 @@ LRC_SIGMAS = 2.0
 FISCAL_ANCHOR = "1991-12-30"
 
 #: maximal matching: handshake round cap (loop exits when no active
-#: edge remains — expected O(log E) rounds with hashed priorities)
+#: edge remains — expected O(log E) rounds with hashed priorities); a
+#: safety cap: exhausting it with edges left raises
 MATCH_MAX_ROUNDS = 40
 
 
@@ -286,6 +287,13 @@ def q_iter_maximal_matching(spark, sf_dir):
             .join(gone, F.col("dst") == F.col("g"), "left_anti")
             .transform(checkpoint_without_stats)
         )
+    else:
+        if not active.isEmpty():
+            raise RuntimeError(
+                f"iter_maximal_matching: MATCH_MAX_ROUNDS={MATCH_MAX_ROUNDS} "
+                "exhausted with active edges left; the matching would not "
+                "be maximal"
+            )
     return matched.select(
         F.col("src").alias("u"), F.col("dst").alias("v")
     ).orderBy("u")

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_tables
 from ..operators.ranking import global_row_number
-from ..plans.iterate import checkpoint_without_stats
+from ..plans.iterate import iterate
 
 #: Sinkhorn sweeps (each = one row-normalize + one col-normalize)
 SINK_ITERS = 8
@@ -60,7 +60,7 @@ def q_iter_sinkhorn(spark, sf_dir):
 
     The grid is the bounded enum cross (5 types x 7 weekdays), so the
     whole matrix travels as ONE sorted array of {r, d, v} structs and
-    the 8 unrolled sweeps run inside a single expression; every
+    the 8 sweeps run as 16 one-row `iterate()` half-sweeps; every
     row/column sum is an ORDERED fold over that array, so both engines
     stream identical doubles (the same generator emits both dialects).
     Output: the scaled matrix plus each cell's row/col id, 6dp."""
@@ -70,22 +70,21 @@ def q_iter_sinkhorn(spark, sf_dir):
         F.col("event_type").alias("r"), F.dayofweek("ts").alias("d")
     ).agg(F.count(F.lit(1)).cast("double").alias("v"))
     packed = cells.groupBy().agg(
-        F.array_sort(F.collect_list(F.struct("r", "d", "v"))).alias("a0")
+        F.array_sort(F.collect_list(F.struct("r", "d", "v"))).alias("a")
     )
-    cur = "a0"
-    for k in range(SINK_ITERS):
-        # localCheckpoint per sweep: Catalyst's ProjectCollapse would
-        # otherwise inline all 16 sweeps into ONE expression, and each
-        # sweep references its input array 3x -> a 3^16-node tree.  The
-        # checkpointed frame is a single row (the bounded enum grid).
-        packed = packed.select(
-            F.expr(_sinkhorn_sweep(cur, "r", "spark")).alias(f"ar{k}")
-        ).transform(checkpoint_without_stats)
-        packed = packed.select(
-            F.expr(_sinkhorn_sweep(f"ar{k}", "d", "spark")).alias(f"a{k + 1}")
-        ).transform(checkpoint_without_stats)
-        cur = f"a{k + 1}"
-    out = packed.select(F.explode(F.col(cur)).alias("c"))
+
+    def half_sweep(state, i):
+        axis = "r" if i % 2 else "d"  # odd: rows, even: columns
+        return state.select(
+            F.expr(_sinkhorn_sweep("a", axis, "spark")).alias("a")
+        )
+
+    # checkpoint per half-sweep: Catalyst's ProjectCollapse would
+    # otherwise inline all 16 half-sweeps into ONE expression, and each
+    # references its input array 3x -> a 3^16-node tree.  The
+    # checkpointed frame is a single row (the bounded enum grid).
+    res = iterate(packed, half_sweep, 2 * SINK_ITERS, checkpoint_every=1)
+    out = res.state.select(F.explode("a").alias("c"))
     return out.select(
         F.col("c")["r"].alias("event_type"),
         F.col("c")["d"].alias("dow"),

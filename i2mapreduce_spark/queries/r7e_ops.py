@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..catalog import load_tables
-from ..plans.iterate import checkpoint_without_stats
+from ..plans.iterate import iterate
 
 #: Shapley channels (the grand coalition) and the conversion event
 SHAP_CHANNELS = ("view", "click", "signup")
@@ -223,17 +223,17 @@ def q_iter_markov_absorption(spark, sf_dir):
         )
     ).crossJoin(
         v0.groupBy().agg(
-            F.array_sort(F.collect_list(F.struct("s", "p"))).alias("vp0")
+            F.array_sort(F.collect_list(F.struct("s", "p"))).alias("vp")
         )
     )
-    cur = "vp0"
-    for i in range(MARKOV_K):
-        packed = packed.select(
-            "tm",
-            F.expr(_markov_step(cur, "tm", "spark")).alias(f"vp{i + 1}"),
-        ).transform(checkpoint_without_stats)
-        cur = f"vp{i + 1}"
-    out = packed.select(F.explode(F.col(cur)).alias("c"))
+
+    def sweep(state, _i):
+        return state.select(
+            "tm", F.expr(_markov_step("vp", "tm", "spark")).alias("vp")
+        )
+
+    res = iterate(packed, sweep, MARKOV_K, checkpoint_every=1)
+    out = res.state.select(F.explode("vp").alias("c"))
     return out.select(
         F.col("c")["s"].alias("state"),
         F.round(F.col("c")["p"], 6).alias("mass_after_k"),

@@ -17,7 +17,7 @@ from ..plans.iterate import checkpoint_without_stats
 #: quickselect: which order statistic (fraction per-mille) and caps
 QS_PM = 500          # the median
 QS_SAMPLE = 101      # pivot sample size per round
-QS_MAX_ROUNDS = 24
+QS_MAX_ROUNDS = 24  # safety cap: raises when exhausted
 
 #: BPE apply: number of merge rules
 BPE_MERGES = 20
@@ -92,9 +92,7 @@ def q_sort_quickselect_kth(spark, sf_dir):
             [(0, 0, None)], "n long, k long, kth_value double"
         )
     cur = o
-    rounds = 0
-    kth = None
-    for rounds in range(1, QS_MAX_ROUNDS + 1):
+    for _ in range(QS_MAX_ROUNDS):
         sample = [
             r["c"]
             for r in cur.orderBy(
@@ -118,10 +116,15 @@ def q_sort_quickselect_kth(spark, sf_dir):
         else:
             cur = cur.filter(F.col("c") > pivot).transform(checkpoint_without_stats)
             k -= lt + eq
+    else:
+        raise RuntimeError(
+            f"sort_quickselect_kth: QS_MAX_ROUNDS={QS_MAX_ROUNDS} exhausted "
+            "before the pivot landed on rank k"
+        )
     return spark.createDataFrame(
-        [(n, (QS_PM * n + 999) // 1000, rounds, kth / 100.0)],
-        "n long, k long, rounds int, kth_value double",
-    ).select("n", "k", "kth_value")
+        [(n, (QS_PM * n + 999) // 1000, kth / 100.0)],
+        "n long, k long, kth_value double",
+    )
 
 
 def q_text_bpe_apply(spark, sf_dir):

@@ -203,6 +203,18 @@ def test_sssp_distances_are_bfs(spark, sf_dir, edges_pp):
         frontier = nxt
     assert got == dist
 
+    # two labelled seeds in one bfs pass == two separate sssp runs
+    src2 = max(u for u, _ in edges_pp)
+    seeds = spark.createDataFrame([(7, src), (9, src2)], "lm long, node long")
+    both = algorithms.bfs(spark.table("edges_pp"), seeds, 4).collect()
+    assert both and {r.lm for r in both} == {7, 9}
+    for lm, s in ((7, src), (9, src2)):
+        want = {
+            r.node: r.dist
+            for r in algorithms.sssp(spark.table("edges_pp"), s, 4).collect()
+        }
+        assert {r.node: r.dist for r in both if r.lm == lm} == want
+
 
 def test_cc_warmstart_converges_faster(spark, sf_dir):
     """A13 on a third example app: connected components warm-started
@@ -330,3 +342,52 @@ def test_mst_forest_distributed_rounds_match_local(spark, sf_dir, monkeypatch):
     forced = {(r.a, r.b, r.dist)
               for r in q_iter_mst_forest(spark, sf_dir).collect()}
     assert forced == baseline
+
+
+#: persisted frames each query still holds after it returns: the final
+#: state, plus the edges checkpoint (sssp, closeness) and the node set
+#: (Katz) — never one checkpoint per round
+LOOP_KEPT_FRAMES = {
+    "iter_sssp": 2,
+    "iter_closeness_centrality": 2,
+    "iter_katz_centrality": 3,
+    "iter_sinkhorn": 1,
+    "iter_markov_absorption": 1,
+}
+
+
+@pytest.mark.parametrize("key", sorted(LOOP_KEPT_FRAMES))
+def test_loop_releases_superseded_rounds(spark, sf_dir, key):
+    """The loop memory rule of iterate(): superseded round checkpoints
+    are released, so a query leaves behind only the frames it keeps.
+    ContextCleaner can only remove RDDs from the persisted set, so the
+    bound cannot flake."""
+    from i2mapreduce_spark.queries import build_registry
+
+    q = build_registry()[0][key]
+    q(spark, sf_dir).collect()  # first call builds the lazy table caches
+
+    def persisted() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    q(spark, sf_dir).collect()
+    assert len(persisted() - before) <= LOOP_KEPT_FRAMES[key]
+
+
+@pytest.mark.parametrize(
+    "module, cap, query",
+    [
+        ("r6x_ops", "MATCH_MAX_ROUNDS", "q_iter_maximal_matching"),
+        ("r7m_ops", "QS_MAX_ROUNDS", "q_sort_quickselect_kth"),
+    ],
+)
+def test_exhausted_safety_cap_raises(spark, sf_dir, monkeypatch, module, cap, query):
+    """A safety cap that runs out before the loop's own stop condition
+    raises, naming the cap, instead of returning a wrong answer."""
+    import importlib
+
+    mod = importlib.import_module(f"i2mapreduce_spark.queries.{module}")
+    monkeypatch.setattr(mod, cap, 0)
+    with pytest.raises(RuntimeError, match=cap):
+        getattr(mod, query)(spark, sf_dir).collect()

@@ -10,6 +10,10 @@ Two repo-wide scale guards added after the round-3 review:
 2. the Gini query (total order over base-table cardinality) must not
    plan an unpartitioned window — its global rank comes from the
    chunked-offset construction instead.
+
+A third guard keeps one fixpoint driver: a loop that checkpoints or
+releases by hand outside ``plans/iterate.py`` must be argued in
+``APPROVED_LOOP_CHECKPOINTS``.
 """
 
 from __future__ import annotations
@@ -24,31 +28,46 @@ from i2mapreduce_spark.catalog import load_tables
 PKG = pathlib.Path(__file__).resolve().parents[1] / "i2mapreduce_spark"
 
 
-def _broadcast_sites() -> set[tuple[str, str]]:
-    """(module-relative-path, enclosing def name) for every F.broadcast
-    call in non-test source, via AST (no false hits from docstrings)."""
+def _sites(match, in_loops_only: bool = False) -> set[tuple[str, str]]:
+    """(module-relative-path, enclosing def) for every AST node of the
+    non-test source that ``match`` accepts, via AST (no false hits from
+    docstrings).  Methods are named ``Class.method``.  With
+    ``in_loops_only`` only nodes inside a ``for``/``while`` body of that
+    def count."""
     sites = set()
     for py in sorted(PKG.rglob("*.py")):
         tree = ast.parse(py.read_text(), filename=str(py))
         rel = str(py.relative_to(PKG.parent))
 
-        def walk(node, fn_name):
+        def walk(node, fn_name, in_loop):
             for child in ast.iter_child_nodes(node):
-                name = fn_name
-                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                name, loop = fn_name, in_loop
+                if isinstance(child, ast.ClassDef):
                     name = child.name
-                if (
-                    isinstance(child, ast.Call)
-                    and isinstance(child.func, ast.Attribute)
-                    and child.func.attr == "broadcast"
-                    and isinstance(child.func.value, ast.Name)
-                    and child.func.value.id == "F"
-                ):
+                elif isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    name = (
+                        f"{fn_name}.{child.name}"
+                        if isinstance(node, ast.ClassDef) else child.name
+                    )
+                    loop = False
+                elif isinstance(child, (ast.For, ast.AsyncFor, ast.While)):
+                    loop = True
+                if (in_loop or not in_loops_only) and match(child):
                     sites.add((rel, fn_name))
-                walk(child, name)
+                walk(child, name, loop)
 
-        walk(tree, "<module>")
+        walk(tree, "<module>", False)
     return sites
+
+
+def _is_f_broadcast(node) -> bool:
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "broadcast"
+        and isinstance(node.func.value, ast.Name)
+        and node.func.value.id == "F"
+    )
 
 
 #: every approved forced-broadcast site, with why the build side is
@@ -98,7 +117,7 @@ APPROVED_BROADCASTS = {
     ("i2mapreduce_spark/queries/r6n_ops.py", "q_dq_k_anonymity"),  # 1-row class-size total
     ("i2mapreduce_spark/queries/r6n_ops.py", "q_pipeline_target_encode"),  # 1-row (n_g, pos_g) global label moments
     ("i2mapreduce_spark/queries/r6o_ops.py", "q_iter_als_topitems"),  # LIMIT ALS_ITEMS=64 item spine (bounded by construction)
-    ("i2mapreduce_spark/streaming/incremental.py", "_collect_delta"),  # driver-collected delta keys, <= MRBG_DELTA_COLLECT_MAX_DEFAULT rows (larger deltas take the unhinted path)
+    ("i2mapreduce_spark/streaming/incremental.py", "MRBGStore._collect_delta"),  # driver-collected delta keys, <= MRBG_DELTA_COLLECT_MAX_DEFAULT rows (larger deltas take the unhinted path)
     ("i2mapreduce_spark/queries/r6q_ops.py", "q_dq_freshness"),  # 1-row global max-timestamp
     ("i2mapreduce_spark/queries/r6q_ops.py", "q_agg_survival_km"),  # 1-row dataset edge + 1-row customer total
     ("i2mapreduce_spark/queries/r6q_ops.py", "q_agg_bootstrap_ci"),  # 1-row point estimate
@@ -136,8 +155,50 @@ APPROVED_BROADCASTS = {
 }
 
 
+#: names whose use inside a loop means the loop manages its own round
+#: checkpoints (as a call or as a `.transform(...)` argument)
+_CHECKPOINT_NAMES = {"checkpoint_without_stats", "localCheckpoint", "release_checkpoint"}
+
+
+def _names_checkpoint(node) -> bool:
+    return (
+        getattr(node, "id", None) in _CHECKPOINT_NAMES
+        or getattr(node, "attr", None) in _CHECKPOINT_NAMES
+    )
+
+
+#: the loops that still checkpoint or release by hand, with why they
+#: are not `iterate()` rounds over one state frame.  Every other loop
+#: runs on plans/iterate.py, which owns the checkpoint-and-release
+#: rule; a new hand-rolled loop fails this test until argued here.
+APPROVED_LOOP_CHECKPOINTS = {
+    ("i2mapreduce_spark/operators/algorithms.py", "boruvka_msf"),  # contracts edges AND grows the forest: two frames per round, plus a local finish
+    ("i2mapreduce_spark/operators/algorithms.py", "scc"),  # peels colored SCCs off the active graph: a result frame grows beside the shrinking state
+    ("i2mapreduce_spark/queries/iterative.py", "q_inc_apriori_pairs"),  # delta fold: one fold_delta checkpoint per incoming delta batch, not a fixpoint round
+    ("i2mapreduce_spark/queries/r6x_ops.py", "q_iter_maximal_matching"),  # two frames: the shrinking active edges and the growing matching
+    ("i2mapreduce_spark/queries/r7b_ops.py", "q_text_greedy_generate"),  # every step frame stays live in the growing union chain: nothing is superseded
+    ("i2mapreduce_spark/queries/r7m_ops.py", "q_sort_quickselect_kth"),  # two collects per round feed a driver-side pivot and branch; the rank k shifts with the side kept
+    ("i2mapreduce_spark/queries/streaming_q.py", "q_stream_stateful_running"),  # delta fold: one fold_delta checkpoint per event chunk, not a fixpoint round
+    ("i2mapreduce_spark/streaming/incremental.py", "MRBGStore.apply_delta"),  # one delta per call; the loop releases its two superseded pins (edges, key set)
+}
+
+
+def test_loop_checkpoints_only_in_approved_loops():
+    found = {
+        site for site in _sites(_names_checkpoint, in_loops_only=True)
+        if site[0] != "i2mapreduce_spark/plans/iterate.py"
+    }
+    new = found - APPROVED_LOOP_CHECKPOINTS
+    gone = APPROVED_LOOP_CHECKPOINTS - found
+    assert not new, (
+        "hand-rolled loop checkpoint(s): run the loop on "
+        f"plans.iterate.iterate() or argue it here: {sorted(new)}"
+    )
+    assert not gone, f"stale allowlist entries: {sorted(gone)}"
+
+
 def test_every_forced_broadcast_is_on_a_bounded_table():
-    found = _broadcast_sites()
+    found = _sites(_is_f_broadcast)
     new = found - APPROVED_BROADCASTS
     gone = APPROVED_BROADCASTS - found
     assert not new, (

@@ -14,7 +14,9 @@ line numpy replicas with pre-round tolerance.
 
 from __future__ import annotations
 
+import operator
 import os
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -414,19 +416,96 @@ def gimv(
             release_checkpoint(edges)
 
 
-def connected_components(edges: DataFrame, iters: int = 16,
-                         init_labels: DataFrame | None = None) -> DataFrame:
-    """Min-label CC over symmetric edges with pointer-doubling: each round
-    (1) propagates min neighbor labels (GIM-V combine2 = neighbor label,
-    combineAll = min, assign = least), then (2) shortcuts label <-
-    label-of-label.  The shortcut makes convergence O(log diameter)
-    instead of O(diameter), and a changed-label count ends the loop at the
-    TRUE fixpoint — a path graph of any length converges in ~log2(n)
-    rounds, where plain propagation with a fixed budget silently splits
-    long components.  `iters` is a safety cap, not the expected rounds.
+#: round cap of every min-label fixpoint (connected_components and the
+#: scc coloring).  Pointer doubling converges in O(log diameter) rounds,
+#: so 64 is headroom only; a cap that runs out raises.
+MIN_LABEL_ITERS = 64
 
-    100TB: both joins are on the label/node key; the changed-label count
-    is the reference's global fixpoint barrier (one cheap action/round).
+
+def _min_label_fixpoint(state0: DataFrame, edges: DataFrame,
+                        dirs: dict[str, tuple[str, str]],
+                        iters: int) -> IterationResult:
+    """Min-label propagation with pointer doubling, run to its fixpoint.
+
+    `state0` holds `node` plus one label column per key of `dirs`; each
+    label column maps to the edge columns a message leaves from and
+    arrives at (CC is `{"val": ("src", "dst")}`).  Each round (1) sends
+    every label along its direction and keeps least(old, min message)
+    (GIM-V combine2 = neighbor label, combineAll = min, assign = least),
+    then (2) shortcuts label <- label-of-label off one lookup table.  A
+    node's label is always a node it can reach along its direction, so
+    the label's own label is reachable too; the shortcut makes
+    convergence O(log diameter) instead of O(diameter).
+
+    Fixpoint check: labels only ever decrease, so the sum over all label
+    columns strictly decreases until the fixpoint — one aggregate scan
+    of the checkpointed state per round, exact over longs, no old ⋈ new
+    join.  The sum over an empty state is NULL and counts as 0, so an
+    empty graph stops after 2 rounds.  A cap that runs out raises: an
+    unconverged labeling splits components."""
+    cols = list(dirs)
+
+    def step(state: DataFrame, _i: int) -> DataFrame:
+        s, e = state.alias("s"), edges.alias("e")
+        aggs = [
+            s.join(e, F.col("s.node") == F.col(f"e.{frm}"))
+            .select(F.col(f"e.{to}").alias("node"), F.col(f"s.{c}").alias(f"m{c}"))
+            .groupBy("node").agg(F.min(f"m{c}").alias(f"m{c}"))
+            for c, (frm, to) in dirs.items()
+        ]
+        prop = state.alias("s")
+        for c, agg in zip(cols, aggs):
+            prop = prop.join(agg.alias(f"a{c}"), "node", "left")
+        prop = prop.select("node", *(
+            F.least(F.col(f"s.{c}"),
+                    F.coalesce(F.col(f"a{c}.m{c}"), F.col(f"s.{c}"))).alias(c)
+            for c in cols
+        ))
+        # pointer doubling (renamed columns make the self-join unambiguous)
+        lut = prop.select(F.col("node").alias("l_node"),
+                          *(F.col(c).alias(f"l_{c}") for c in cols))
+        for c in cols:
+            prop = (
+                prop.alias("p")
+                .join(lut.alias("q"), F.col(f"p.{c}") == F.col("q.l_node"), "left")
+                .select(F.col("p.node").alias("node"), *(
+                    F.coalesce(F.col(f"q.l_{k}"), F.col(f"p.{k}")).alias(k)
+                    if k == c else F.col(f"p.{k}").alias(k)
+                    for k in cols
+                ))
+            )
+        return prop
+
+    total = reduce(operator.add, (F.sum(c) for c in cols))
+    last_sum = [None]
+
+    def changed(_old: DataFrame, new: DataFrame) -> float:
+        s = new.agg(total).collect()[0][0] or 0
+        d = 1.0 if last_sum[0] is None else float(last_sum[0] - s)
+        last_sum[0] = s
+        return d
+
+    res = iterate(state0, step, iters, delta_fn=changed, tol=0.5)
+    if not res.converged:
+        raise RuntimeError(
+            f"min-label fixpoint over {cols}: {iters}-round cap exhausted "
+            f"before the fixpoint (last deltas {[int(d) for d in res.deltas[-3:]]})"
+            " — raise iters; an unconverged labeling is never returned"
+        )
+    return res
+
+
+def connected_components(edges: DataFrame, iters: int = MIN_LABEL_ITERS,
+                         init_labels: DataFrame | None = None) -> DataFrame:
+    """Min-label CC over symmetric edges with pointer doubling
+    (`_min_label_fixpoint`): the loop stops at the TRUE fixpoint, so a
+    path graph of any length converges in ~log2(n) rounds, where plain
+    propagation with a fixed budget silently splits long components.
+    `iters` is a safety cap, not the expected rounds, and a cap that runs
+    out raises RuntimeError.
+
+    100TB: both joins are on the label/node key; the label-sum check is
+    the reference's global fixpoint barrier (one cheap action/round).
 
     `init_labels` (node, label) warm-starts from a prior run's labels —
     the A13 incremental restart, valid under EDGE ADDITIONS ONLY (min
@@ -451,52 +530,8 @@ def connected_components(edges: DataFrame, iters: int = 16,
             )
         )
     edges, owned = _own_edges(edges)
-
-    def step(state: DataFrame, _i: int) -> DataFrame:
-        s, e = state.alias("s"), edges.alias("e")
-        msgs = s.join(e, F.col("s.node") == F.col("e.src")).select(
-            F.col("e.dst").alias("node"), F.col("s.val").alias("msg")
-        )
-        agg = msgs.groupBy("node").agg(F.min("msg").alias("agg"))
-        prop = (
-            state.alias("s")
-            .join(agg.alias("a"), "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("s.val"), F.coalesce(F.col("a.agg"), F.col("s.val"))
-                ).alias("val"),
-            )
-        )
-        # pointer doubling: follow my label's label (renamed columns make
-        # the self-join unambiguous)
-        lut = prop.select(
-            F.col("node").alias("l_node"), F.col("val").alias("l_val")
-        )
-        return (
-            prop.alias("p")
-            .join(lut.alias("q"), F.col("p.val") == F.col("q.l_node"), "left")
-            .select(
-                F.col("p.node").alias("node"),
-                F.coalesce(F.col("q.l_val"), F.col("p.val")).alias("val"),
-            )
-        )
-
-    # Convergence via the monotone invariant instead of an old ⋈ new diff:
-    # min-label propagation only ever DECREASES labels, so sum(label) is
-    # strictly decreasing until the fixpoint and equal sums <=> no change.
-    # One aggregate scan of the just-checkpointed state per round — no
-    # join, and exact (labels are longs; F.sum over long stays integral).
-    last_sum = [None]
-
-    def changed(_old: DataFrame, new: DataFrame) -> float:
-        s = new.agg(F.sum("val")).collect()[0][0]
-        d = 1.0 if last_sum[0] is None else float(last_sum[0] - s)
-        last_sum[0] = s
-        return d
-
     try:
-        res = iterate(labels, step, iters, delta_fn=changed, tol=0.5)
+        res = _min_label_fixpoint(labels, edges, {"val": ("src", "dst")}, iters)
     finally:
         if owned:
             release_checkpoint(edges)
@@ -725,9 +760,27 @@ def kmeans(
     return assign, centroids
 
 
+def _collect_if_fits(cap: int, *frames: DataFrame) -> list[pd.DataFrame] | None:
+    """The bounded local-finish probe: every frame's rows over Arrow, or
+    None when `cap <= 0` or any frame holds more than `cap` rows.
+
+    Each probe is a `limit(cap+1).count()`, in the given order: limit
+    pushes into the plan, so it scans at most cap+1 rows of an already
+    materialized frame and moves ZERO rows to the driver until the
+    finish fires.  A `limit(cap+1).collect()` probe would instead pay a
+    full cap-row Py4J transfer every round just to learn "still too
+    big" (measured at sf100)."""
+    if cap <= 0:
+        return None
+    for df in frames:
+        if df.limit(cap + 1).count() > cap:
+            return None
+    return [df.toPandas() for df in frames]
+
+
 #: contracted-graph size below which Borůvka finishes with one driver
-#: Kruskal instead of further distributed rounds.  The probe is a
-#: `limit`-bounded collect of the min-edge-per-component-pair graph
+#: Kruskal instead of further distributed rounds.  The finish is one
+#: `_collect_if_fits` collect of the min-edge-per-component-pair graph
 #: (5 longs/doubles x 4M rows ~ 160 MB), not a scan of base data — the
 #: standard "local finish" of distributed MST: early rounds with
 #: billions of components run distributed; the tail, where fixed
@@ -787,13 +840,16 @@ def boruvka_msf(edges: DataFrame, max_rounds: int = 8) -> DataFrame:
     collect + an O(E α(E)) union-find.  Correctness does not depend on
     WHEN the switch happens, only the constant factor does.
 
+    The contracted graph is probed once more after the last of the
+    `max_rounds` distributed rounds; if it still does not fit, the call
+    raises RuntimeError — a partial forest is never returned.
+
     Returns the forest edges (a, b, w).
     """
     spark = edges.sparkSession
     comp = None  # (node, label); None = every node its own component
     chosen = spark.createDataFrame([], "a long, b long, w double")
-    local_rows: list[tuple] = []
-    for _ in range(max_rounds):
+    for rnd in range(max_rounds + 1):
         if comp is None:
             e = edges.select(
                 F.col("src").alias("cs"), F.col("dst").alias("cd"),
@@ -828,31 +884,16 @@ def boruvka_msf(edges: DataFrame, max_rounds: int = 8) -> DataFrame:
             .select("cs", "cd", "m.w", "m.a", "m.b")
             .transform(checkpoint_without_stats)
         )
-        # bounded probe, JVM-side only: limit pushes into the plan, so
-        # the count scans AT MOST BORUVKA_LOCAL_EDGES_MAX+1 rows of the
-        # (already checkpoint-materialized) contracted graph and moves
-        # ZERO rows to the driver.  The r11 sf100 sweep caught the
-        # previous spelling (`limit(MAX+1).collect()` as the probe):
-        # while the graph is still big every round paid a full
-        # MAX-row Py4J collect just to learn "still too big" — a
-        # per-round driver transfer that never shows up at SFs where
-        # round 0 already fits locally.  The one real transfer (the
-        # local-finish edge list, below) goes over Arrow instead of
-        # row-at-a-time Py4J.
-        probe_n = contracted.limit(BORUVKA_LOCAL_EDGES_MAX + 1).count()
-        if probe_n == 0:
+        fit = _collect_if_fits(BORUVKA_LOCAL_EDGES_MAX, contracted)
+        if fit is not None:
             break
-        if probe_n <= BORUVKA_LOCAL_EDGES_MAX:
-            pdf = contracted.toPandas()
-            # .tolist() yields native python ints/floats — numpy
-            # scalars would fail createDataFrame's LongType check on
-            # the finish edges
-            local_rows = list(
-                zip(pdf["w"].tolist(), pdf["a"].tolist(),
-                    pdf["b"].tolist(), pdf["cs"].tolist(),
-                    pdf["cd"].tolist())
+        if rnd == max_rounds:
+            raise RuntimeError(
+                f"boruvka_msf: max_rounds={max_rounds} distributed rounds "
+                "exhausted and the contracted graph still exceeds "
+                f"BORUVKA_LOCAL_EDGES_MAX={BORUVKA_LOCAL_EDGES_MAX} rows — "
+                "raise max_rounds; a partial forest is never returned"
             )
-            break
         # distributed Borůvka round
         pick = (
             contracted.groupBy("cs")
@@ -864,9 +905,7 @@ def boruvka_msf(edges: DataFrame, max_rounds: int = 8) -> DataFrame:
             chosen.unionByName(pick.select("a", "b", "w"))
             # within a round both endpoint components can pick the same
             # edge; across rounds re-picks are impossible once
-            # contraction converged — the dedup also makes a CC-cap
-            # under-merge degrade to a duplicate-free (if cyclic) pick,
-            # never a double-counted edge
+            # contraction converged
             .dropDuplicates(["a", "b"])
             .transform(checkpoint_without_stats)
         )
@@ -874,9 +913,7 @@ def boruvka_msf(edges: DataFrame, max_rounds: int = 8) -> DataFrame:
         pick_sym = pick_sym.union(
             pick_sym.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-        # iters is a safety cap only — CC exits at its true fixpoint; 16
-        # pointer-doubling rounds cover pick-graph chains to depth 2^16
-        m = connected_components(pick_sym, iters=16).select(
+        m = connected_components(pick_sym).select(
             F.col("node").alias("old"), F.col("label").alias("new")
         )
         # contract on component LABELS: every picked (cs, cd) pair merges
@@ -887,12 +924,17 @@ def boruvka_msf(edges: DataFrame, max_rounds: int = 8) -> DataFrame:
                 "node", F.coalesce("new", "label").alias("label")
             )
         comp = comp.transform(checkpoint_without_stats)
-    if local_rows:
-        finish = _local_kruskal(local_rows)
-        if finish:
-            chosen = chosen.unionByName(
-                spark.createDataFrame(finish, "a long, b long, w double")
-            )
+    (pdf,) = fit
+    # .tolist() yields native python ints/floats — numpy scalars would
+    # fail createDataFrame's LongType check on the finish edges
+    finish = _local_kruskal(list(zip(
+        pdf["w"].tolist(), pdf["a"].tolist(), pdf["b"].tolist(),
+        pdf["cs"].tolist(), pdf["cd"].tolist(),
+    )))
+    if finish:
+        chosen = chosen.unionByName(
+            spark.createDataFrame(finish, "a long, b long, w double")
+        )
     return chosen
 
 
@@ -916,17 +958,17 @@ def _scc_local_max() -> int:
     return int(os.environ.get("I2MR_SCC_LOCAL_MAX", SCC_LOCAL_MAX_DEFAULT))
 
 
-def _local_scc_min_labels(
-    node_ids, srcs, dsts
-) -> list[tuple[int, int]]:
-    """Exact SCC labels (node, min member id) over a bounded digraph via
-    iterative Tarjan — the scc() local finish.  `node_ids` must cover
-    every edge endpoint (scc() guarantees this: active edges are always
-    filtered to active-node endpoints); nodes without edges come out as
-    their own singleton SCC.  Deterministic: the label is the component
-    MINIMUM, independent of visit order."""
+def _local_scc(spark: SparkSession, npdf: pd.DataFrame,
+               epdf: pd.DataFrame) -> DataFrame:
+    """Exact SCC labels (node, scc = min member id) over a collected
+    digraph via iterative Tarjan — the scc() local finish.  The nodes
+    `npdf` must cover every endpoint of the edges `epdf` (scc()
+    guarantees this: active edges are always filtered to active-node
+    endpoints); nodes without edges come out as their own singleton SCC.
+    Deterministic: the label is the component MINIMUM, independent of
+    visit order."""
     adj: dict[int, list[int]] = {}
-    for u, v in zip(srcs, dsts):
+    for u, v in zip(epdf["src"].tolist(), epdf["dst"].tolist()):
         adj.setdefault(u, []).append(v)
     index: dict[int, int] = {}
     low: dict[int, int] = {}
@@ -935,7 +977,7 @@ def _local_scc_min_labels(
     out: list[tuple[int, int]] = []
     counter = 0
     empty: tuple[int, ...] = ()
-    for root in node_ids:
+    for root in npdf["node"].tolist():
         if root in index:
             continue
         work: list[list] = [[root, 0]]  # (node, next-neighbor position)
@@ -973,139 +1015,36 @@ def _local_scc_min_labels(
                 out.extend((w, m) for w in comp)
             if work and low[v] < low[work[-1][0]]:
                 low[work[-1][0]] = low[v]
-    return out
-
-
-def _scc_try_local_finish(
-    active: DataFrame, active_nodes: DataFrame
-) -> DataFrame | None:
-    """Bounded probe + local finish for scc(): if the active subgraph
-    fits in `_scc_local_max()` rows (edges and nodes each), collect it
-    over Arrow, Tarjan it, and return the (node, scc) labels; else None.
-
-    The probes are `limit`-bounded counts over already-materialized
-    checkpoint blocks — zero rows move to the driver until the finish
-    actually fires (the Borůvka probe discipline, r11)."""
-    cap = _scc_local_max()
-    if cap <= 0:
-        return None
-    if active_nodes.limit(cap + 1).count() > cap:
-        return None
-    if active.limit(cap + 1).count() > cap:
-        return None
-    spark = active.sparkSession
-    epdf = active.toPandas()
-    npdf = active_nodes.toPandas()
-    labels = _local_scc_min_labels(
-        npdf["node"].tolist(), epdf["src"].tolist(), epdf["dst"].tolist()
-    )
     return spark.createDataFrame(
-        pd.DataFrame(labels, columns=["node", "scc"]),
-        schema="node long, scc long",
+        pd.DataFrame(out, columns=["node", "scc"]), schema="node long, scc long"
     )
 
 
 def _fwbw_coloring(active: DataFrame, active_nodes: DataFrame,
-                   iters: int = 64) -> DataFrame:
+                   iters: int = MIN_LABEL_ITERS) -> DataFrame:
     """Fused forward+backward min-label coloring for scc(): ONE
-    pointer-doubling fixpoint over state (node, f, b) where
-    f[v] = min id reachable FROM v and b[v] = min id reaching v.
+    pointer-doubling fixpoint (`_min_label_fixpoint`) over state
+    (node, f, b) where f[v] = min id reachable FROM v (for edge u->v, u
+    can reach whatever v reaches) and b[v] = min id reaching v (whatever
+    reaches u also reaches v).
 
-    r12 rewrite (guide §2.4 remove shuffles / §5.1 fewer actions): the
-    r6-r11 shape ran TWO independent `connected_components` fixpoints
-    (forward on reversed edges, backward on the originals) and joined
-    their outputs.  Each fixpoint paid its own per-round checkpoint +
-    fixpoint-sum action, its own `_nodes` build (union+distinct
-    shuffle), and the forward pass re-checkpointed the reversed edge
-    frame (a full second copy of the edge blocks); the final fwd ⋈ bwd
-    join added one more shuffle + checkpoint.  Min-label fixpoints are
-    UNIQUE (the min over a fixed reachable set), so computing both
-    labels in one loop returns bit-identical results while: rounds run
-    max(r_f, r_b) instead of r_f + r_b wall-clock, one checkpoint + one
-    sum action per round instead of two of each, zero extra edge
-    copies, no nodes rebuilds, and no final join (the state already
-    holds both labels).  Per round: two msg joins (one per direction,
-    both against the SAME checkpointed edge blocks), one two-sided
-    propagation join, two label-of-label doubling joins."""
+    Min-label fixpoints are UNIQUE (the min over a fixed reachable set),
+    so both labels come out of one loop instead of two CC runs joined
+    afterwards: rounds run max(r_f, r_b) instead of r_f + r_b, one
+    checkpoint and one sum action per round, both message joins read the
+    SAME checkpointed edge blocks, and no final join (the state already
+    holds both labels).
+
+    A cap that runs out raises: the f == b certificate is only sound at
+    the true fixpoint — an unconverged run leaves far nodes still holding
+    f == b == own id, and scc() would label them singleton SCCs (at sf1
+    the trimmed core needs 18 rounds; a 16-round cap split a ~4k-member
+    SCC into singletons)."""
     labels = active_nodes.select(
         "node", F.col("node").alias("f"), F.col("node").alias("b")
     )
-
-    def step(state: DataFrame, _i: int) -> DataFrame:
-        s, e = state.alias("s"), active.alias("e")
-        # fwd: for edge u->v, u can reach whatever v reaches
-        fagg = (
-            s.join(e, F.col("s.node") == F.col("e.dst"))
-            .select(F.col("e.src").alias("node"), F.col("s.f").alias("mf"))
-            .groupBy("node").agg(F.min("mf").alias("mf"))
-        )
-        # bwd: for edge u->v, whatever reaches u also reaches v
-        bagg = (
-            s.join(e, F.col("s.node") == F.col("e.src"))
-            .select(F.col("e.dst").alias("node"), F.col("s.b").alias("mb"))
-            .groupBy("node").agg(F.min("mb").alias("mb"))
-        )
-        prop = (
-            state.alias("s")
-            .join(fagg.alias("fa"), "node", "left")
-            .join(bagg.alias("ba"), "node", "left")
-            .select(
-                "node",
-                F.least(F.col("s.f"),
-                        F.coalesce(F.col("fa.mf"), F.col("s.f"))).alias("f"),
-                F.least(F.col("s.b"),
-                        F.coalesce(F.col("ba.mb"), F.col("s.b"))).alias("b"),
-            )
-        )
-        # pointer doubling, both directions off one LUT: my f-label is a
-        # node I can reach, so ITS f-label is still reachable (and dually
-        # for b) — label-of-label keeps convergence O(log diameter)
-        lut = prop.select(F.col("node").alias("l_node"),
-                          F.col("f").alias("l_f"), F.col("b").alias("l_b"))
-        p2 = (
-            prop.alias("p")
-            .join(lut.alias("q"), F.col("p.f") == F.col("q.l_node"), "left")
-            .select(F.col("p.node").alias("node"),
-                    F.coalesce(F.col("q.l_f"), F.col("p.f")).alias("f"),
-                    F.col("p.b").alias("b"))
-        )
-        return (
-            p2.alias("p")
-            .join(lut.alias("q"), F.col("p.b") == F.col("q.l_node"), "left")
-            .select(F.col("p.node").alias("node"), F.col("p.f").alias("f"),
-                    F.coalesce(F.col("q.l_b"), F.col("p.b")).alias("b"))
-        )
-
-    # monotone fixpoint: both label columns only ever decrease, so
-    # sum(f)+sum(b) is strictly decreasing until the joint fixpoint
-    last_sum = [None]
-
-    def changed(_old: DataFrame, new: DataFrame) -> float:
-        s = new.agg((F.sum("f") + F.sum("b")).alias("t")).collect()[0][0]
-        d = 1.0 if last_sum[0] is None else float(last_sum[0] - s)
-        last_sum[0] = s
-        return d
-
-    res = iterate(labels, step, iters, delta_fn=changed, tol=0.5)
-    if not res.converged:
-        # r12 FIX of a latent correctness bug: the coloring's f == b
-        # certificate is only sound at the TRUE fixpoint — an
-        # unconverged run leaves far nodes still holding f == b == own
-        # id and scc() would silently label them singleton SCCs.
-        # Measured at sf1: the trimmed core converges in 18 rounds, two
-        # OVER the old 16-round cap, splitting a ~4k-member SCC into
-        # singletons (caught by a driver-Tarjan referee when the r12
-        # local finish landed; the sf1 leg was rows-only so counts
-        # still matched).  The cap is now headroom (64 doublings), and
-        # exhausting it is a loud failure — never a wrong labeling.
-        raise RuntimeError(
-            f"scc coloring: {iters}-round cap exhausted before the "
-            "fixpoint (last deltas "
-            f"{[int(d) for d in res.deltas[-3:]]}) — raise iters; an "
-            "unconverged coloring must never be used (f==b is only a "
-            "mutual-reachability certificate at the fixpoint)"
-        )
-    return res.state
+    dirs = {"f": ("dst", "src"), "b": ("src", "dst")}
+    return _min_label_fixpoint(labels, active, dirs, iters).state
 
 
 def scc(edges: DataFrame, max_passes: int = 64,
@@ -1144,27 +1083,28 @@ def scc(edges: DataFrame, max_passes: int = 64,
     minimum member id.  Deterministic — no randomness, fixpoints only.
     Raises RuntimeError if `max_passes` outer passes leave active nodes
     (each pass resolves >=1 SCC — better a loud failure than a silent
-    partial labeling).  Empty edge input returns an empty (node, scc)
+    partial labeling) or a coloring runs out of its round cap.  Empty edge input returns an empty (node, scc)
     frame.
 
     100TB: every step is an equi-join/agg on node id; the trim fixpoint
     and coloring fixpoint are each one cheap count/sum action per round
     (the reference's global barrier); state never leaves the cluster.
     """
+    spark = edges.sparkSession
     active = edges.select("src", "dst").distinct().transform(checkpoint_without_stats)
     active_nodes = _nodes(active).transform(checkpoint_without_stats)
     labeled_parts: list[DataFrame] = []
     finished_local = False
     for _ in range(max_passes):
-        # bounded local finish (r12, guide §5.1 with the Borůvka probe
-        # discipline): once the active subgraph fits locally, every
+        # bounded local finish (`_collect_if_fits`, as in Borůvka):
+        # once the active subgraph fits locally, every
         # further trim/coloring round is a fixed-cost distributed job
         # over a near-empty graph — one Arrow collect + an O(V+E)
         # driver Tarjan replaces the whole tail.  Result-identical (SCC
         # labels are min member ids, algorithm-independent).
-        local = _scc_try_local_finish(active, active_nodes)
-        if local is not None:
-            labeled_parts.append(local)
+        fit = _collect_if_fits(_scc_local_max(), active_nodes, active)
+        if fit is not None:
+            labeled_parts.append(_local_scc(spark, *fit))
             release_checkpoint(active)
             finished_local = True
             break
@@ -1226,9 +1166,9 @@ def scc(edges: DataFrame, max_passes: int = 64,
             break
         # second probe site: trimming may have shrunk the core under the
         # local cap — bail before paying a distributed coloring fixpoint
-        local = _scc_try_local_finish(active, active_nodes)
-        if local is not None:
-            labeled_parts.append(local)
+        fit = _collect_if_fits(_scc_local_max(), active_nodes, active)
+        if fit is not None:
+            labeled_parts.append(_local_scc(spark, *fit))
             release_checkpoint(active)
             finished_local = True
             break

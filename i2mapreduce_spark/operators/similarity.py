@@ -244,10 +244,7 @@ def embedding_dedup_groups(spark: SparkSession, emb_df: DataFrame,
     edges = pairs.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
         pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )
-    # fixture-scale graphs are shallow; 12 min-label rounds covers any
-    # component a 500-2000-node similarity graph produces (the oracle is
-    # a true-fixpoint recursive CTE, so under-iterating would hash-fail)
-    comp = connected_components(edges, iters=12)
+    comp = connected_components(edges)
     return (
         comp.groupBy("label")
         .agg(F.count("*").alias("group_size"))

@@ -20,7 +20,6 @@ from ..plans.iterate import checkpoint_without_stats, release_checkpoint
 PAGERANK_ITERS = 10
 PAGERANK_DAMPING = 0.85
 SSSP_MAX_HOPS = 4
-CC_ITERS = 8
 KMEANS_K = 10
 KMEANS_ITERS = 5
 APRIORI_MIN_SUPPORT = 3
@@ -62,12 +61,12 @@ def q_iter_sssp(spark, sf_dir):
 
 
 def q_iter_connected_components(spark, sf_dir):
-    """Min-label CC over edges_pp (pointer-doubling, fixpoint-stopped; the
-    8 rounds are a safety cap, so the result is the TRUE component
-    labeling).  Hash-checked against unrolled pointer-doubling CTEs in
+    """Min-label CC over edges_pp (pointer-doubling, stopped at the TRUE
+    fixpoint; a round cap that runs out raises, so the result is the
+    true component labeling).  Hash-checked against unrolled pointer-doubling CTEs in
     DuckDB (_cc_oracle_sql) plus a python propagation golden in tests."""
     load_tables(spark, sf_dir)
-    return algorithms.connected_components(spark.table("edges_pp"), iters=CC_ITERS)
+    return algorithms.connected_components(spark.table("edges_pp"))
 
 
 def q_iter_kmeans(spark, sf_dir):
@@ -476,7 +475,7 @@ def q_iter_mst_forest(spark, sf_dir):
         .select("src", "dst", (F.lit(1.0) / F.col("c")).alias("w"))
         .transform(checkpoint_without_stats)
     )
-    forest = algorithms.boruvka_msf(weighted, max_rounds=8)
+    forest = algorithms.boruvka_msf(weighted)
     return forest.select("a", "b", F.round("w", 6).alias("dist"))
 
 
@@ -498,10 +497,8 @@ def q_inc_cc_delta(spark, sf_dir):
     load_tables(spark, sf_dir)
     edges = spark.table("edges_pp").transform(checkpoint_without_stats)
     base = edges.filter((F.col("src") + F.col("dst")) % 7 != 0)
-    cold_labels = algorithms.connected_components(base, iters=CC_ITERS)
-    return algorithms.connected_components(
-        edges, iters=CC_ITERS, init_labels=cold_labels
-    )
+    cold_labels = algorithms.connected_components(base)
+    return algorithms.connected_components(edges, init_labels=cold_labels)
 
 
 def q_iter_triangle_count(spark, sf_dir):

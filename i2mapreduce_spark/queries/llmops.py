@@ -356,7 +356,7 @@ def q_dedup_cluster_resolve(spark, sf_dir):
     edges = pairs.select(F.col("d1").alias("src"), F.col("d2").alias("dst")).union(
         pairs.select(F.col("d2").alias("src"), F.col("d1").alias("dst"))
     )
-    comp = connected_components(edges, iters=12)
+    comp = connected_components(edges)
     member = comp.join(d, comp.node == d.doc_id).select(
         "label", "doc_id", "n_chars"
     )

@@ -37,14 +37,25 @@ SQL_CONFS = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
 }
 
+#: The SQL_CONFS that results depend on: configure_session raises when one
+#: of them cannot be set.  The others only tune speed, so a build that
+#: refuses them computes the same results and they degrade quietly.
+REQUIRED_CONFS = ("spark.sql.session.timeZone", "spark.sql.legacy.parquet.nanosAsLong")
+
 
 def configure_session(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSession:
-    """Apply the engine's runtime confs to an existing session (idempotent)."""
+    """Apply the engine's runtime confs to an existing session (idempotent).
+    Raises RuntimeError when a REQUIRED_CONFS entry cannot be set."""
     for k, v in SQL_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # non-settable on this build — keep going, features degrade
+        except Exception as e:
+            if k in REQUIRED_CONFS:
+                raise RuntimeError(
+                    f"configure_session: cannot set {k}={v}; query results "
+                    "depend on it"
+                ) from e
+            # non-settable on this build — keep going, features degrade
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("I2MR_SHUFFLE_PARTITIONS", "32"))
     try:

@@ -65,6 +65,7 @@ def fixture_dir(tmp_path_factory):
 REPRESENTATIVE_KEYS = [
     "iter_sssp",                  # seed collect()[0] -> None guard
     "iter_pagerank",              # n_nodes == 0 -> 1/n guard
+    "iter_connected_components",  # sum-over-empty NULL stalls a fixpoint
     "iter_kmeans",                # np.stack on zero seed rows
     "iter_triangle_count",        # sum-over-empty NULL vs count 0
     "sim_ann_ivf",                # centroid training on tiny samples

@@ -391,3 +391,53 @@ def test_exhausted_safety_cap_raises(spark, sf_dir, monkeypatch, module, cap, qu
     monkeypatch.setattr(mod, cap, 0)
     with pytest.raises(RuntimeError, match=cap):
         getattr(mod, query)(spark, sf_dir).collect()
+
+
+def test_cc_on_empty_graph_converges(spark):
+    """The label sum over an empty state is NULL; read as 0 it repeats on
+    round 2, so an empty graph converges instead of running out its cap."""
+    edges = spark.createDataFrame([], "src long, dst long")
+    out = algorithms.connected_components(edges)
+    assert out.count() == 0
+    assert algorithms.connected_components.last_iters_run <= 2
+
+
+def test_cc_raises_when_cap_runs_out(spark):
+    # a 64-node path needs ~log2(64) pointer-doubling rounds, not 2
+    path = [(i, i + 1) for i in range(63)]
+    edges = spark.createDataFrame(
+        path + [(b, a) for a, b in path], "src long, dst long"
+    )
+    with pytest.raises(RuntimeError, match="cap exhausted"):
+        algorithms.connected_components(edges, iters=2)
+
+
+def test_boruvka_raises_when_max_rounds_runs_out(spark, monkeypatch):
+    """With BORUVKA_LOCAL_EDGES_MAX = 1 only an empty contracted graph
+    (a symmetric graph has no 1-row contraction) finishes locally, so
+    every merge is a distributed round.  A forest that completes in
+    exactly `max_rounds` rounds returns normally; one round fewer
+    raises instead of returning a partial forest."""
+    n = 32
+    path = [(i, i + 1, float((i * 7) % n + 1)) for i in range(n - 1)]
+    edges = spark.createDataFrame(
+        path + [(b, a, w) for a, b, w in path], "src long, dst long, w double"
+    )
+
+    def forest(max_rounds: int) -> set:
+        return {(r.a, r.b) for r in
+                algorithms.boruvka_msf(edges, max_rounds=max_rounds).collect()}
+
+    want = forest(8)  # round 0 fits the default cap: one local Kruskal
+    assert want == {(a, b) for a, b, _ in path}
+    monkeypatch.setattr(algorithms, "BORUVKA_LOCAL_EDGES_MAX", 1)
+    rounds = []
+    cc = algorithms.connected_components
+    monkeypatch.setattr(algorithms, "connected_components",
+                        lambda e, **kw: rounds.append(1) or cc(e, **kw))
+    assert forest(8) == want
+    assert len(rounds) >= 2
+    exact = len(rounds)
+    assert forest(exact) == want
+    with pytest.raises(RuntimeError, match=f"max_rounds={exact - 1}"):
+        forest(exact - 1)

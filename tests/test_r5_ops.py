@@ -245,16 +245,14 @@ def test_inc_cc_delta_warm_start_is_faster_and_exact(spark, sf_dir):
     labels must reach the full-graph fixpoint in no more rounds than a
     cold run — and the labels must be IDENTICAL to the cold run."""
     from i2mapreduce_spark.operators import algorithms
-    from i2mapreduce_spark.queries.iterative import CC_ITERS, q_inc_cc_delta
+    from i2mapreduce_spark.queries.iterative import q_inc_cc_delta
 
     load_tables(spark, sf_dir)
     warm = {
         (r.node, r.label) for r in q_inc_cc_delta(spark, sf_dir).collect()
     }
     warm_rounds = algorithms.connected_components.last_iters_run
-    cold_full = algorithms.connected_components(
-        spark.table("edges_pp"), iters=CC_ITERS
-    )
+    cold_full = algorithms.connected_components(spark.table("edges_pp"))
     cold = {(r.node, r.label) for r in cold_full.collect()}
     cold_rounds = algorithms.connected_components.last_iters_run
     assert warm == cold

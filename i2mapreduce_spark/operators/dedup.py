@@ -3,7 +3,10 @@
 Correctness surfaces are exact and hash-checkable (md5 groupBy; shingle
 join Jaccard).  MinHash-LSH and SimHash are the sub-quadratic scale paths:
 candidate generation is probabilistic, the final score is always exact, so
-precision never degrades — only recall, which tests measure.
+precision never degrades — only recall, which tests measure.  Every
+family scores through shingle_overlap / jaccard_for_candidates (or its
+own exact hamming check) and collapses exact duplicates through
+duplicate_groups, which similarity's ANN kernels share.
 
 All token/shingle hashing uses Spark's xxhash64 (JVM-side, deterministic
 across partitions/executors) — never Python hash() (salted per process).
@@ -12,11 +15,15 @@ across partitions/executors) — never Python hash() (salted per process).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 #: large Mersenne prime for minhash universal hashing
 _MERSENNE = (1 << 61) - 1
+#: MinHash layout: 12 bands x 4 rows over 48 hashes puts the banding
+#: s-curve at ~(1/12)^(1/4) ~= 0.54, just above the 0.5 Jaccard threshold
+MINHASH_HASHES = 48
+MINHASH_BANDS = 12
+MINHASH_SEED = 42
 
 
 def exact_dedup_keys(df: DataFrame, text_col: str = "text",
@@ -58,13 +65,13 @@ def shingles(df: DataFrame, n: int = 3, text_col: str = "text",
     )
 
 
-def jaccard_pairs(shingle_df: DataFrame, threshold: float,
-                  id_col: str = "doc_id") -> DataFrame:
-    """Exact Jaccard >= threshold pairs via shingle-equality join.
+def shingle_overlap(shingle_df: DataFrame, id_col: str) -> DataFrame:
+    """(d1, d2, i, n1, n2) for every pair d1 < d2 sharing a shingle: the
+    intersection size and both shingle counts, from the co-shingle
+    self-join.  An exact shingle score is one expression over these.
 
-    Output (d1, d2, jac) with jac rounded 4dp.  100TB note: the shingle
-    join explodes on stop-shingles — the LSH variant below replaces it;
-    this exact form remains the semantics oracle.
+    100TB note: the self-join explodes on stop-shingles; the MinHash path
+    never runs it (jaccard_for_candidates scores only its candidates).
     """
     a, b = shingle_df.alias("a"), shingle_df.alias("b")
     inter = (
@@ -78,50 +85,67 @@ def jaccard_pairs(shingle_df: DataFrame, threshold: float,
         )
         .agg(F.count("*").alias("i"))
     )
+    return _with_shingle_counts(inter, shingle_df, id_col)
+
+
+def _with_shingle_counts(inter: DataFrame, shingle_df: DataFrame,
+                         id_col: str) -> DataFrame:
+    """(d1, d2, i) -> (d1, d2, i, n1, n2): join each side's shingle count."""
     cnt = shingle_df.groupBy(id_col).agg(F.count("*").alias("n"))
-    jac = F.col("i").cast("double") / (F.col("na.n") + F.col("nb.n") - F.col("i"))
     return (
         inter.join(cnt.alias("na"), F.col("d1") == F.col(f"na.{id_col}"))
         .join(cnt.alias("nb"), F.col("d2") == F.col(f"nb.{id_col}"))
-        .filter(jac >= threshold)
-        .select("d1", "d2", F.round(jac, 4).alias("jac"))
+        .select("d1", "d2", "i", F.col("na.n").alias("n1"),
+                F.col("nb.n").alias("n2"))
     )
 
 
-def near_jaccard_pairs(df: DataFrame, threshold: float, shingle_n: int = 3,
-                       text_col: str = "text", id_col: str = "doc_id",
-                       collapse_dups: bool = False,
-                       expand_members: bool = True) -> DataFrame:
-    """Document-level exact Jaccard >= threshold pairs (r10).
+def jaccard_score():
+    """Jaccard |A∩B| / |A∪B| over shingle_overlap's columns."""
+    return F.col("i").cast("double") / (F.col("n1") + F.col("n2") - F.col("i"))
 
-    The default path is the declared correctness surface — jaccard_pairs
-    over the full shingle set, quadratic-in-duplication by contract (the
-    graded `dedup_near_jaccard` key).  `collapse_dups=True` adds the
-    same exact-duplicate collapse the banded kernels got in r9, which is
-    EXACT here too: byte-identical texts have identical shingle sets, so
-    jaccard(member of G1, member of G2) == jaccard(rep1, rep2) and
-    within-group pairs score exactly 1.0 — the collapse changes
-    intermediate volume (O(unique shingle join) instead of
-    O(dups^2 x shared shingles)), never values.  `expand_members=False`
-    additionally returns one row per GROUP pair with group sizes
-    (O(unique^2) output) — the scale shape for duplicate-saturated
-    corpora; see _pairs_with_duplicate_collapse.
+
+def _jaccard_at_least(overlap: DataFrame, threshold: float) -> DataFrame:
+    jac = jaccard_score()
+    return overlap.filter(jac >= threshold).select(
+        "d1", "d2", F.round(jac, 4).alias("jac")
+    )
+
+
+def jaccard_pairs(shingle_df: DataFrame, threshold: float,
+                  id_col: str = "doc_id") -> DataFrame:
+    """Exact Jaccard >= threshold pairs via shingle-equality join.
+
+    Output (d1, d2, jac) with jac rounded 4dp.  Quadratic in duplication
+    by contract: this is the graded `dedup_near_jaccard` surface.
     """
-    if not expand_members and not collapse_dups:
-        raise ValueError("expand_members=False requires collapse_dups=True")
-    if not collapse_dups:
-        return jaccard_pairs(
-            shingles(df, n=shingle_n, text_col=text_col, id_col=id_col),
-            threshold, id_col=id_col,
-        )
+    return _jaccard_at_least(shingle_overlap(shingle_df, id_col), threshold)
+
+
+def near_jaccard_pairs(df: DataFrame, threshold: float,
+                       text_col: str = "text", id_col: str = "doc_id",
+                       expand_members: bool = True) -> DataFrame:
+    """Document-level exact Jaccard >= threshold pairs over 3-shingles,
+    with exact duplicates collapsed first.
+
+    The collapse is EXACT here: byte-identical texts have identical
+    shingle sets, so jaccard(member of G1, member of G2) == jaccard(rep1,
+    rep2) and within-group pairs score exactly 1.0 — it changes
+    intermediate volume (O(unique shingle join) instead of O(dups^2 x
+    shared shingles)), never values; the uncollapsed form is
+    jaccard_pairs(shingles(df)).  `expand_members=False` returns one row
+    per GROUP pair with group sizes (O(unique^2) output) — the scale
+    shape for duplicate-saturated corpora; see
+    _pairs_with_duplicate_collapse.
+    """
     return _pairs_with_duplicate_collapse(
         df,
         rep_fn=lambda reps: jaccard_pairs(
-            shingles(reps, n=shingle_n, text_col=text_col, id_col=id_col),
+            shingles(reps, text_col=text_col, id_col=id_col),
             threshold, id_col=id_col,
         ),
         eligible_fn=lambda reps: shingles(
-            reps, n=shingle_n, text_col=text_col, id_col=id_col
+            reps, text_col=text_col, id_col=id_col
         ).select(id_col).distinct(),
         score_col="jac",
         within_score=F.lit(1.0),
@@ -159,39 +183,55 @@ def jaccard_for_candidates(cand: DataFrame, shingle_df: DataFrame,
         .groupBy("d1", "d2")
         .agg(F.count("*").alias("i"))
     )
-    cnt = shingle_df.groupBy(id_col).agg(F.count("*").alias("n"))
-    jac = F.col("i").cast("double") / (F.col("na.n") + F.col("nb.n") - F.col("i"))
-    return (
-        inter.join(cnt.alias("na"), F.col("d1") == F.col(f"na.{id_col}"))
-        .join(cnt.alias("nb"), F.col("d2") == F.col(f"nb.{id_col}"))
-        .filter(jac >= threshold)
-        .select("d1", "d2", F.round(jac, 4).alias("jac"))
+    return _jaccard_at_least(
+        _with_shingle_counts(inter, shingle_df, id_col), threshold
     )
 
 
-def minhash_signatures(shingle_df: DataFrame, num_hashes: int = 48,
-                       seed: int = 42, id_col: str = "doc_id") -> DataFrame:
+def minhash_signatures(shingle_df: DataFrame,
+                       id_col: str = "doc_id") -> DataFrame:
     """MinHash signature per doc: h_i = min over shingles of a_i*x+b_i mod p.
 
-    x = xxhash64(shingle) (stable, JVM-side); all num_hashes minima are
-    computed in ONE aggregation pass (num_hashes min() columns), so the
+    x = xxhash64(shingle) (stable, JVM-side); all MINHASH_HASHES minima
+    are computed in ONE aggregation pass (one min() column each), so the
     shuffle carries one row per doc.
     """
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(MINHASH_SEED)
     # 31-bit hash domain and coefficients: x*a+b < 2^62 so the modular
     # arithmetic never overflows int64 (Spark 4 runs ANSI mode — overflow
     # would throw, not wrap)
-    a = rng.integers(1, 1 << 31, num_hashes, dtype=np.int64)
-    b = rng.integers(0, 1 << 31, num_hashes, dtype=np.int64)
+    a = rng.integers(1, 1 << 31, MINHASH_HASHES, dtype=np.int64)
+    b = rng.integers(0, 1 << 31, MINHASH_HASHES, dtype=np.int64)
     x = F.xxhash64("shingle").bitwiseAND(F.lit((1 << 31) - 1))
     mins = [
         F.min((x * int(a[i]) + int(b[i])) % _MERSENNE).alias(f"h{i}")
-        for i in range(num_hashes)
+        for i in range(MINHASH_HASHES)
     ]
     sig = shingle_df.groupBy(id_col).agg(*mins)
     return sig.select(
-        id_col, F.array(*[f"h{i}" for i in range(num_hashes)]).alias("sig")
+        id_col, F.array(*[f"h{i}" for i in range(MINHASH_HASHES)]).alias("sig")
     )
+
+
+def duplicate_groups(df: DataFrame, id_col: str, payload_col: str,
+                     key) -> DataFrame:
+    """Exact-duplicate groups, one row per member whose payload is not
+    NULL: (id_col, gid = `key`, the md5 Column that decides
+    byte-identity, payload_col, idx = 0-based index within the group by
+    id, gsize, rep_id = the group's smallest id).  One Exchange and one
+    Sort feed the three window columns; checkpointed lazily because every
+    collapse reads the frame several times.
+    """
+    keyed = df.filter(F.col(payload_col).isNotNull()).select(
+        F.col(id_col), F.col(payload_col), key.alias("gid")
+    )
+    wg = Window.partitionBy("gid").orderBy(id_col)
+    return keyed.select(
+        id_col, "gid", payload_col,
+        (F.row_number().over(wg) - 1).alias("idx"),
+        F.count(F.lit(1)).over(Window.partitionBy("gid")).alias("gsize"),
+        F.first(id_col).over(wg).alias("rep_id"),
+    ).localCheckpoint(eager=False)
 
 
 def _pairs_with_duplicate_collapse(df: DataFrame, rep_fn, eligible_fn,
@@ -199,61 +239,49 @@ def _pairs_with_duplicate_collapse(df: DataFrame, rep_fn, eligible_fn,
                                    text_col: str = "text",
                                    id_col: str = "doc_id",
                                    expand_members: bool = True) -> DataFrame:
-    """Exact-duplicate collapse around a pair-listing dedup kernel (r9).
+    """Exact-duplicate collapse around a pair-listing dedup kernel.
 
-    Shared machinery for minhash_lsh_pairs / simhash_near_pairs: group
-    identical texts (md5), emit within-group pairs directly at the
-    known score (`within_score` — jaccard 1.0 / hamming 0: identical
-    text means identical shingles AND identical simhash), run the
-    banded kernel via `rep_fn` on one representative per distinct text,
-    and expand surviving representative pairs to all member cross
-    pairs.  `eligible_fn(reps) -> DataFrame[id_col]` names the reps
-    whose text can pair at all (>=1 shingle / >=1 token) so the
+    Shared by near_jaccard_pairs / minhash_lsh_pairs /
+    simhash_near_pairs: group identical texts (md5), emit within-group
+    pairs directly at the known score (`within_score` — jaccard 1.0 /
+    hamming 0: identical text means identical shingles AND identical
+    simhash), run the kernel via `rep_fn` on one representative per
+    distinct text, and expand surviving representative pairs to all
+    member cross pairs.  `eligible_fn(reps) -> DataFrame[id_col]` names
+    the reps whose text can pair at all (>=1 shingle / >=1 token) so the
     within-group pass matches the uncollapsed path exactly.  Output is
     unchanged; intermediate volume drops from O(dups^2 x bands) to
     O(output).  Identity on a duplicate-free corpus.
 
-    `expand_members=False` (r10, the sf10 canary's lesson): the
-    expanded pair list is inherently quadratic in the duplication
-    factor — at 100 copies per doc each surviving group pair emits 10k
-    member rows, which is OUTPUT volume no plan can shrink.  The
-    grouped mode instead returns one row per GROUP pair,
-    (d1, d2, score, g1, g2) with d1/d2 the groups' representative ids
-    (min id) and g1/g2 the group sizes; within-group duplicate "pairs"
-    appear as the diagonal row d1 == d2 at the known `within_score`
-    (only for groups of size >= 2 whose text is pairable, matching the
-    expanded mode's within-pair population).  O(unique^2) output.
-    Information-equivalent to the expanded list given the membership
-    map (gid -> member ids): a diagonal row expands to its group's
-    g*(g-1)/2 within pairs, an off-diagonal row to g1*g2 cross pairs —
-    tests/test_dedup_grouped_mode.py performs exactly that expansion
-    and asserts equality on a duplicate-saturated fixture.
+    `expand_members=False`: the expanded pair list is inherently
+    quadratic in the duplication factor — at 100 copies per doc each
+    surviving group pair emits 10k member rows, which is OUTPUT volume
+    no plan can shrink.  The grouped mode instead returns one row per
+    GROUP pair, (d1, d2, score, g1, g2) with d1/d2 the groups'
+    representative ids (min id) and g1/g2 the group sizes; within-group
+    duplicate "pairs" appear as the diagonal row d1 == d2 at the known
+    `within_score` (only for groups of size >= 2 whose text is pairable,
+    matching the expanded mode's within-pair population).  O(unique^2)
+    output.  Information-equivalent to the expanded list given the
+    membership map (gid -> member ids): a diagonal row expands to its
+    group's g*(g-1)/2 within pairs, an off-diagonal row to g1*g2 cross
+    pairs — tests/test_dedup_grouped_mode.py performs exactly that
+    expansion and asserts equality on a duplicate-saturated fixture.
     """
-    eligible = df.filter(F.col(text_col).isNotNull())
-    keyed = eligible.select(
-        F.col(id_col), F.col(text_col),
-        F.md5(F.col(text_col).cast("binary")).alias("gid"),
+    members = duplicate_groups(
+        df, id_col, text_col, F.md5(F.col(text_col).cast("binary"))
     )
-    wg = Window.partitionBy("gid").orderBy(id_col)
-    members = keyed.select(
-        id_col, "gid", F.col(text_col),
-        F.row_number().over(wg).alias("rn"),
-        F.count(F.lit(1)).over(Window.partitionBy("gid")).alias("gsize"),
-    ).localCheckpoint(eager=False)
-    reps = members.filter(F.col("rn") == 1).select(id_col, text_col)
-    pairable_gids = (
-        eligible_fn(reps)
-        .join(members.filter(F.col("rn") == 1), id_col)
-        .select("gid")
-    )
+    rep_rows = members.filter(F.col("idx") == 0)
+    reps = rep_rows.select(id_col, text_col)
+    pairable_gids = eligible_fn(reps).join(rep_rows, id_col).select("gid")
     rep_pairs = rep_fn(reps)
-    rep_gid = members.filter(F.col("rn") == 1).select(
+    rep_gid = rep_rows.select(
         F.col(id_col).alias("__rid"), F.col("gid").alias("__rgid"),
         F.col("gsize").alias("__rgsize"),
     )
     if not expand_members:
         within_groups = (
-            members.filter((F.col("rn") == 1) & (F.col("gsize") >= 2))
+            rep_rows.filter(F.col("gsize") >= 2)
             .join(pairable_gids, "gid")
             .select(
                 F.col(id_col).alias("d1"),
@@ -304,19 +332,18 @@ def _pairs_with_duplicate_collapse(df: DataFrame, rep_fn, eligible_fn,
     return within.unionByName(expanded)
 
 
-def minhash_lsh_pairs(df: DataFrame, threshold: float, num_hashes: int = 48,
-                      bands: int = 12, shingle_n: int = 3, seed: int = 42,
+def minhash_lsh_pairs(df: DataFrame, threshold: float,
                       text_col: str = "text", id_col: str = "doc_id",
                       expand_members: bool = True) -> DataFrame:
     """Near-dup pairs via MinHash banding + exact re-score.
 
-    bands=12 x rows=4 over 48 hashes -> s-curve threshold ~ (1/12)^(1/4)
-    ~= 0.54; candidates sharing any band bucket are re-scored with the
-    EXACT Jaccard join restricted to candidate pairs.  100TB path: no
-    quadratic join — one shuffle for signatures, one per-band bucket
-    grouping, exact join only over candidates.
+    MINHASH_BANDS=12 x rows=4 over MINHASH_HASHES=48 hashes -> s-curve
+    threshold ~ (1/12)^(1/4) ~= 0.54; candidates sharing any band bucket
+    are re-scored with the EXACT Jaccard join restricted to candidate
+    pairs.  100TB path: no quadratic join — one shuffle for signatures,
+    one per-band bucket grouping, exact join only over candidates.
 
-    EXACT-duplicate texts are collapsed before the index (r9): on a
+    EXACT-duplicate texts are collapsed before the index: on a
     duplicate-saturated corpus (the regime web-scale dedup actually
     meets — the sf10 canary's 100-copy docs) every band bucket holds
     the whole duplicate group, so the candidate join and the shingle
@@ -331,21 +358,21 @@ def minhash_lsh_pairs(df: DataFrame, threshold: float, num_hashes: int = 48,
     O(dups^2 x bands + pairs x shingles) to O(output).  Identity on a
     duplicate-free corpus.
 
-    `expand_members=False` (r10) is the documented scale path when even
-    the OUTPUT is duplication-quadratic: one row per group pair
-    (d1, d2, jac, g1, g2) instead of the member cross product — see
+    `expand_members=False` is the scale path when even the OUTPUT is
+    duplication-quadratic: one row per group pair (d1, d2, jac, g1, g2)
+    instead of the member cross product — see
     _pairs_with_duplicate_collapse.
     """
     return _pairs_with_duplicate_collapse(
         df,
         rep_fn=lambda reps: _minhash_lsh_pairs_raw(
-            reps, threshold, num_hashes, bands, shingle_n, seed, text_col, id_col,
+            reps, threshold, text_col, id_col,
         ),
         # a group only pairs if its text yields >= 1 shingle (parity
         # with the raw kernel, where shingle-less docs never reach the
         # signature stage)
         eligible_fn=lambda reps: shingles(
-            reps, n=shingle_n, text_col=text_col, id_col=id_col
+            reps, text_col=text_col, id_col=id_col
         ).select(id_col).distinct(),
         score_col="jac",
         within_score=F.lit(1.0),
@@ -355,14 +382,13 @@ def minhash_lsh_pairs(df: DataFrame, threshold: float, num_hashes: int = 48,
     )
 
 
-def _minhash_lsh_pairs_raw(df: DataFrame, threshold: float, num_hashes: int,
-                           bands: int, shingle_n: int, seed: int,
-                           text_col: str, id_col: str) -> DataFrame:
+def _minhash_lsh_pairs_raw(df: DataFrame, threshold: float, text_col: str,
+                           id_col: str) -> DataFrame:
     """minhash_lsh_pairs' banding + re-score kernel, without the
     duplicate collapse."""
-    rows_per_band = num_hashes // bands
-    sh = shingles(df, n=shingle_n, text_col=text_col, id_col=id_col).cache()
-    sig = minhash_signatures(sh, num_hashes=num_hashes, seed=seed, id_col=id_col)
+    rows_per_band = MINHASH_HASHES // MINHASH_BANDS
+    sh = shingles(df, text_col=text_col, id_col=id_col).cache()
+    sig = minhash_signatures(sh, id_col=id_col)
     band_cols = [
         F.xxhash64(
             F.concat_ws(
@@ -371,14 +397,14 @@ def _minhash_lsh_pairs_raw(df: DataFrame, threshold: float, num_hashes: int,
                 *[F.col("sig")[bi * rows_per_band + r] for r in range(rows_per_band)],
             )
         ).alias(f"b{bi}")
-        for bi in range(bands)
+        for bi in range(MINHASH_BANDS)
     ]
     banded = sig.select(id_col, *band_cols)
     bucket = banded.select(
         id_col,
         F.explode(
             F.array(*[F.struct(F.lit(bi).alias("band"), F.col(f"b{bi}").alias("bucket"))
-                      for bi in range(bands)])
+                      for bi in range(MINHASH_BANDS)])
         ).alias("bb"),
     ).select(id_col, "bb.band", "bb.bucket")
     l, r = bucket.alias("l"), bucket.alias("r")
@@ -410,9 +436,8 @@ def simhash_values(df: DataFrame, text_col: str = "text",
     hex_ = F.md5(F.col("w").cast("binary"))
     # byte j of the digest = hex chars (2j+1, 2j+2); little-endian lower
     # 64 bits = bytes 8..15, where byte 8+k carries result bits 8k..8k+7.
-    # r12 (guide §2.3 cheaper per-row work, bit-exact): the old spelling
-    # ran EIGHT conv(substring)->cast string parses per token; two
-    # 8-hex-char words carry the same 64 bits.  conv() reads the hex
+    # Two 8-hex-char words carry those 64 bits with two
+    # conv(substring) parses per token instead of eight.  conv() reads the hex
     # big-endian, so word wlo = b8<<24 | b9<<16 | b10<<8 | b11 (bytes
     # 8..11) and whi likewise for bytes 12..15: digest bit b = 8k + j
     # (little-endian byte k, bit j) sits at word bit 8*(3 - k%4) + j of
@@ -459,7 +484,7 @@ def simhash_near_pairs(df: DataFrame, max_hamming: int = 3,
     block banding (pigeonhole: <=3 differing bits leave >=1 block equal),
     then exact hamming re-check via bit_count(xor).
 
-    Exact duplicates are collapsed first (r9): identical texts have
+    Exact duplicates are collapsed first: identical texts have
     identical simhashes, so a duplicate-saturated corpus puts whole
     duplicate groups into every block bucket and the candidate join
     grows with the duplication factor squared (6.9x wall at the sf10
@@ -468,7 +493,7 @@ def simhash_near_pairs(df: DataFrame, max_hamming: int = 3,
     one representative per distinct text — same output, O(output)
     intermediates; see _pairs_with_duplicate_collapse.
 
-    `expand_members=False` (r10): the sf10 canary measured 6.85x wall
+    `expand_members=False`: the sf10 canary measured 6.85x wall
     on the 100-copy corpus even WITH the collapse, because the expanded
     member-pair list itself is quadratic in duplication (pure output
     volume).  The grouped mode emits one row per group pair

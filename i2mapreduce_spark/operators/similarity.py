@@ -10,53 +10,57 @@ kernel — each vector is assigned a block by id, replicated JVM-side
 and every pair lands once on an executor via groupBy(gi, gj)
 .applyInPandas, where numpy does the dense matmul.  Nothing is collected
 to the driver; per-task memory is (2 blocks x dim) doubles, tuned by
-n_blocks (communication is O(n_blocks x corpus): each row is shipped to
-n_blocks block pairs through a single Exchange).
-At 100 TB, size n_blocks so one block fits an executor core's memory
+N_BLOCKS (communication is O(N_BLOCKS x corpus): each row is shipped to
+N_BLOCKS block pairs through a single Exchange).
+At 100 TB, size N_BLOCKS so one block fits an executor core's memory
 budget; the quadratic block-pair fan-out is inherent to EXACT all-pairs —
-the LSH/IVF paths below are the sub-quadratic scale route, re-scoring
-only bucketed candidates with the same arithmetic.
+the LSH/IVF paths below are the sub-quadratic scale route: each supplies
+only candidate pairs, which one shared tail deduplicates, scores exactly
+and cuts to the top k, after exact-duplicate vectors are collapsed.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-#: default block count for the exact all-pairs kernel (fixtures: 500-2000
+from .dedup import duplicate_groups
+
+#: block count for the exact all-pairs kernel (fixtures: 500-2000
 #: vectors -> blocks of 125-500 rows; raise with corpus size so one block
 #: fits in an executor core's memory budget).  Swept {1,2,3,4,6} at sf0.1
 #: min-of-3 warm: 1.72/1.48/1.36/1.23/1.29 s — 4 wins; below that the
 #: task count starves local[32], above it replication overhead dominates.
 #: A repeat sweep of {2,3,4,6} in a different session gave
-#: 1.25/1.22/1.25/1.28 s — 3 and 4 are within run-to-run noise (±5%),
-#: so the r1→r2 bench drift on this key was scheduler variance, not a
-#: block-count regression.
+#: 1.25/1.22/1.25/1.28 s — 3 and 4 are within run-to-run noise (±5%).
 N_BLOCKS = 4
+#: IVF: spherical k-means rounds over the training sample
+IVF_TRAIN_ITERS = 5
+#: LSH: hash tables, and the seed of their random hyperplanes
+LSH_TABLES = 16
+LSH_SEED = 42
 
 
 def _block_pair_grouped(emb_df: DataFrame, id_col: str, vec_col: str,
-                        extra_cols: tuple = (),
-                        n_blocks: int = N_BLOCKS) -> DataFrame:
+                        extra_cols: tuple) -> DataFrame:
     """Tag each row with its id-block and explode it to every (gi <= gj)
     block pair it participates in, with a `side` marker (0 = the row
     belongs to block gi, 1 = to block gj; diagonal pairs carry each row
     once, side 0).  Single-frame feed for a grouped applyInPandas kernel.
 
-    r11 optimization (guide §2.3/§2.4): the previous spelling built two
-    frames (left/right) for cogroup, which cost TWO parquet scans, two
-    broadcast joins against a Python-RDD pair list, and two Exchanges —
-    and shipped diagonal-block rows twice (n_blocks+1 copies per row).
-    This single frame costs one scan, zero joins (the pair fan-out is a
-    JVM-side explode of a sequence literal) and ONE Exchange, at
-    n_blocks copies per row.  NULL ids are dropped exactly as the old
-    inner join on pmod(id) did.  The corpus is never collected."""
-    e = emb_df.select(id_col, vec_col, *extra_cols).withColumn(
-        "_g", F.pmod(F.col(id_col), F.lit(n_blocks)).cast("int")
-    ).filter(F.col("_g").isNotNull())
+    One scan, zero joins (the pair fan-out is a JVM-side explode of a
+    sequence literal) and ONE Exchange, at N_BLOCKS copies per row; a
+    two-frame cogroup spelling costs two scans, two joins and two
+    Exchanges.  Rows with a NULL id or a NULL vector are dropped: neither
+    can be scored.  The corpus is never collected."""
+    e = (
+        emb_df.select(id_col, vec_col, *extra_cols)
+        .withColumn("_g", F.pmod(F.col(id_col), F.lit(N_BLOCKS)).cast("int"))
+        .filter(F.col("_g").isNotNull() & F.col(vec_col).isNotNull())
+    )
     pair_expr = F.expr(
-        f"transform(sequence(0, {n_blocks - 1}), h -> "
+        f"transform(sequence(0, {N_BLOCKS - 1}), h -> "
         "struct(least(_g, h) AS gi, greatest(_g, h) AS gj, "
         "if(_g <= h, 0, 1) AS side))"
     )
@@ -67,8 +71,7 @@ def _block_pair_grouped(emb_df: DataFrame, id_col: str, vec_col: str,
 
 def _split_sides(key, pdf: pd.DataFrame):
     """Kernel-side view of a block-pair group: (same_block, lpdf, rpdf).
-    Diagonal groups expose the whole group as both sides — identical to
-    what the old cogroup delivered (both sides held the same rows)."""
+    Diagonal groups expose the whole group as both sides."""
     if key[0] == key[1]:
         return True, pdf, pdf
     mask = pdf["side"].values == 0
@@ -82,9 +85,55 @@ def _norm_rows(pdf: pd.DataFrame, vec_col: str) -> np.ndarray:
     return M / n
 
 
+def _block_pair_cosine(emb_df: DataFrame, id_col: str, vec_col: str,
+                       schema: str, emit, extra_cols: tuple = ()) -> DataFrame:
+    """The exact all-pairs driver: every block pair lands once on an
+    executor, which normalises both sides, forms S = Ln @ Rn.T and hands
+    `emit(S, lpdf, rpdf, same_block)` the pandas frame of rows to return
+    (columns per `schema`).  A block pair with an empty side returns no
+    rows without calling `emit`."""
+    empty = pd.DataFrame({c.split()[0]: [] for c in schema.split(",")})
+
+    def kernel(key, pdf):
+        same_block, lpdf, rpdf = _split_sides(key, pdf)
+        if len(lpdf) == 0 or len(rpdf) == 0:
+            return empty
+        Ln = _norm_rows(lpdf, vec_col)
+        S = Ln @ (Ln if same_block else _norm_rows(rpdf, vec_col)).T
+        return emit(S, lpdf, rpdf, same_block)
+
+    return (
+        _block_pair_grouped(emb_df, id_col, vec_col, extra_cols)
+        .groupBy("gi", "gj")
+        .applyInPandas(kernel, schema=schema)
+    )
+
+
+def _threshold_hits(S: np.ndarray, lid: np.ndarray, rid: np.ndarray,
+                    threshold: float, same_block: bool):
+    """Every pair of a block-pair kernel with cosine >= threshold, once.
+
+    Returns (li, rj, swap): hit k is left row li[k] against right row
+    rj[k], and swap[k] says the smaller id is the right row's.  A
+    diagonal block holds each pair twice, so only its left < right cells
+    count; an off-diagonal block holds each pair once, in either order."""
+    hit = S >= threshold
+    li, rj = np.nonzero(hit & (rid[None, :] > lid[:, None]))
+    if same_block:
+        return li, rj, np.zeros(len(li), dtype=bool)
+    li2, rj2 = np.nonzero(hit & (rid[None, :] < lid[:, None]))
+    return (np.concatenate([li, li2]), np.concatenate([rj, rj2]),
+            np.repeat([False, True], [len(li), len(li2)]))
+
+
+def _ordered(lv: np.ndarray, rv: np.ndarray, li, rj, swap):
+    """Per hit, (value of the smaller-id row, value of the larger-id
+    row) for the per-row values lv (left rows) and rv (right rows)."""
+    return np.where(swap, rv[rj], lv[li]), np.where(swap, lv[li], rv[rj])
+
+
 def cosine_topk(spark: SparkSession, emb_df: DataFrame, k: int = 5,
-                id_col: str = "vec_id", vec_col: str = "embedding",
-                n_blocks: int = N_BLOCKS) -> DataFrame:
+                id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """Exact top-k cosine neighbors per vector among ids > own id.
 
     Output: (vec_id, nbr, sim) with sim rounded to 4dp; deterministic
@@ -94,17 +143,9 @@ def cosine_topk(spark: SparkSession, emb_df: DataFrame, k: int = 5,
     keeps the true top-k — exact because the global top-k is a subset of
     the union of per-block-pair top-ks.
     """
-    grouped = _block_pair_grouped(emb_df, id_col, vec_col, n_blocks=n_blocks)
-
-    def kernel(key, pdf):
-        same_block, lpdf, rpdf = _split_sides(key, pdf)
-        if len(lpdf) == 0 or len(rpdf) == 0:
-            return pd.DataFrame({"vec_id": [], "nbr": [], "sim": []})
-        Ln = _norm_rows(lpdf, vec_col)
-        Rn = Ln if same_block else _norm_rows(rpdf, vec_col)
+    def emit(S, lpdf, rpdf, same_block):
         lid = lpdf[id_col].values
         rid = rpdf[id_col].values
-        S = Ln @ Rn.T
         out_v, out_n, out_s = [], [], []
 
         def emit_topk(q_ids, c_ids, sims_qc):
@@ -139,89 +180,41 @@ def cosine_topk(spark: SparkSession, emb_df: DataFrame, k: int = 5,
             "sim": np.concatenate(out_s),
         })
 
-    cand = grouped.groupBy("gi", "gj").applyInPandas(
-        kernel, schema="vec_id long, nbr long, sim double"
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("nbr"))
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("vec_id", "nbr", F.round("sim", 4).alias("sim"))
-    )
+    cand = _block_pair_cosine(emb_df, id_col, vec_col,
+                              "vec_id long, nbr long, sim double", emit)
+    return _topk(cand, k).select("vec_id", "nbr", F.round("sim", 4).alias("sim"))
 
 
 def cosine_threshold_pairs(spark: SparkSession, emb_df: DataFrame, threshold: float,
                            label_col: str = "label", id_col: str = "vec_id",
-                           vec_col: str = "embedding",
-                           n_blocks: int = N_BLOCKS) -> DataFrame:
+                           vec_col: str = "embedding") -> DataFrame:
     """Count pairs with cosine >= threshold, grouped by (label_a, label_b)
     where a is the smaller vec_id.  Same block-pair kernel, fully
     vectorized emission (2-D nonzero, no per-row python loop)."""
-    grouped = _block_pair_grouped(emb_df, id_col, vec_col, (label_col,),
-                                  n_blocks=n_blocks)
+    def emit(S, lpdf, rpdf, same_block):
+        hits = _threshold_hits(S, lpdf[id_col].values, rpdf[id_col].values,
+                               threshold, same_block)
+        la, lb = _ordered(lpdf[label_col].values, rpdf[label_col].values, *hits)
+        return pd.DataFrame({"label_a": la, "label_b": lb})
 
-    def kernel(key, pdf):
-        same_block, lpdf, rpdf = _split_sides(key, pdf)
-        if len(lpdf) == 0 or len(rpdf) == 0:
-            return pd.DataFrame({"label_a": [], "label_b": []})
-        Ln = _norm_rows(lpdf, vec_col)
-        S = Ln @ (Ln if same_block else _norm_rows(rpdf, vec_col)).T
-        lid = lpdf[id_col].values
-        rid = rpdf[id_col].values
-        llab = lpdf[label_col].values
-        rlab = rpdf[label_col].values
-        hit = S >= threshold
-        la_parts, lb_parts = [], []
-        ii, jj = np.nonzero(hit & (rid[None, :] > lid[:, None]))
-        la_parts.append(llab[ii]); lb_parts.append(rlab[jj])
-        if not same_block:
-            ii, jj = np.nonzero(hit & (rid[None, :] < lid[:, None]))
-            la_parts.append(rlab[jj]); lb_parts.append(llab[ii])
-        return pd.DataFrame({
-            "label_a": np.concatenate(la_parts),
-            "label_b": np.concatenate(lb_parts),
-        })
-
-    pairs = grouped.groupBy("gi", "gj").applyInPandas(
-        kernel, schema="label_a int, label_b int"
-    )
+    pairs = _block_pair_cosine(emb_df, id_col, vec_col,
+                               "label_a int, label_b int", emit, (label_col,))
     return pairs.groupBy("label_a", "label_b").agg(F.count("*").alias("n_pairs"))
 
 
 def cosine_pairs(spark: SparkSession, emb_df: DataFrame, threshold: float,
-                 id_col: str = "vec_id", vec_col: str = "embedding",
-                 n_blocks: int = N_BLOCKS) -> DataFrame:
+                 id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """All pairs (a < b) with cosine >= threshold: (a, b, sim) rounded 4dp.
     Same block-pair kernel as cosine_topk; at 100 TB the LSH/IVF candidate
     generators replace exact all-pairs and this becomes their re-scorer."""
-    grouped = _block_pair_grouped(emb_df, id_col, vec_col, n_blocks=n_blocks)
+    def emit(S, lpdf, rpdf, same_block):
+        lid, rid = lpdf[id_col].values, rpdf[id_col].values
+        li, rj, swap = _threshold_hits(S, lid, rid, threshold, same_block)
+        a, b = _ordered(lid, rid, li, rj, swap)
+        return pd.DataFrame({"a": a, "b": b, "sim": np.round(S[li, rj], 4)})
 
-    def kernel(key, pdf):
-        same_block, lpdf, rpdf = _split_sides(key, pdf)
-        if len(lpdf) == 0 or len(rpdf) == 0:
-            return pd.DataFrame({"a": [], "b": [], "sim": []})
-        Ln = _norm_rows(lpdf, vec_col)
-        S = Ln @ (Ln if same_block else _norm_rows(rpdf, vec_col)).T
-        lid = lpdf[id_col].values
-        rid = rpdf[id_col].values
-        hit = S >= threshold
-        a_parts, b_parts, s_parts = [], [], []
-        ii, jj = np.nonzero(hit & (rid[None, :] > lid[:, None]))
-        a_parts.append(lid[ii]); b_parts.append(rid[jj]); s_parts.append(S[ii, jj])
-        if not same_block:
-            ii, jj = np.nonzero(hit & (rid[None, :] < lid[:, None]))
-            a_parts.append(rid[jj]); b_parts.append(lid[ii]); s_parts.append(S[ii, jj])
-        return pd.DataFrame({
-            "a": np.concatenate(a_parts),
-            "b": np.concatenate(b_parts),
-            "sim": np.round(np.concatenate(s_parts), 4),
-        })
-
-    return grouped.groupBy("gi", "gj").applyInPandas(
-        kernel, schema="a long, b long, sim double"
-    )
+    return _block_pair_cosine(emb_df, id_col, vec_col,
+                              "a long, b long, sim double", emit)
 
 
 def embedding_dedup_groups(spark: SparkSession, emb_df: DataFrame,
@@ -235,7 +228,7 @@ def embedding_dedup_groups(spark: SparkSession, emb_df: DataFrame,
 
     # materialize the kernel output ONCE: the symmetric union below and
     # CC's node derivation + cache fill would otherwise re-run the
-    # block-pair cogroup (the expensive part) several times over
+    # block-pair kernel (the expensive part) several times over
     pairs = (
         cosine_pairs(spark, emb_df, threshold)
         .select("a", "b")
@@ -289,10 +282,30 @@ def _score_id_pairs(cand: DataFrame, emb_df: DataFrame,
     return paired.select("vec_id", "nbr", F.round(sim, 4).alias("sim"))
 
 
+def _topk(df: DataFrame, k: int) -> DataFrame:
+    """Per vec_id, the k best (vec_id, nbr, sim) rows by (sim DESC, nbr
+    ASC)."""
+    w = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("nbr"))
+    return df.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k).drop("rn")
+
+
+def _rescored_topk(spark: SparkSession, cand: DataFrame | None,
+                   emb_df: DataFrame, k: int, id_col: str,
+                   vec_col: str) -> DataFrame:
+    """The ANN kernels' shared tail: deduplicate the candidate (vec_id,
+    nbr) pairs (nbr > vec_id; a pair met in several buckets or cells
+    arrives once per meeting), score them exactly and keep each vector's
+    top k.  `cand` is None when the corpus is empty."""
+    if cand is None:
+        return spark.createDataFrame([], "vec_id long, nbr long, sim double")
+    cand = cand.dropDuplicates(["vec_id", "nbr"])
+    return _topk(_score_id_pairs(cand, emb_df, id_col, vec_col), k)
+
+
 def _topk_with_duplicate_collapse(spark: SparkSession, emb_df: DataFrame,
                                   k: int, raw_kernel, id_col: str,
                                   vec_col: str) -> DataFrame:
-    """Exact-duplicate collapse around an ANN pair kernel (r9).
+    """Exact-duplicate collapse around an ANN pair kernel.
 
     A duplicate-saturated corpus is the regime a training-data pipeline
     actually feeds an ANN index (boilerplate pages, mirrored docs): the
@@ -303,8 +316,9 @@ def _topk_with_duplicate_collapse(spark: SparkSession, emb_df: DataFrame,
     wrapper does exactly that, preserving the kernels' output contract
     (per vec_id, top-k among LARGER ids by (sim DESC, nbr ASC)):
 
-    1. group identical vectors (md5 of the embedding's JSON bytes) —
-       one narrow map + one shuffle on the group key;
+    1. group identical vectors (md5 of the embedding's JSON bytes) with
+       dedup.duplicate_groups — one narrow map + one shuffle on the
+       group key;
     2. WITHIN a group, member #i's neighbors are simply its next-k
        larger twins at sim 1.0 (k lead() columns over the group window
        — N*k rows, no pair join at all);
@@ -322,7 +336,7 @@ def _topk_with_duplicate_collapse(spark: SparkSession, emb_df: DataFrame,
     the same N).  With duplicates, the knobs see the UNIQUE count,
     which is the honest index density.
 
-    Two contract notes (r9 advice):
+    Two contract notes:
     - The rep kernel is asked for 2k pairs per representative, not k,
       so that step 4's member-level `nbr > vec_id` filter has slack — a
       high-id member of a large group whose nearest neighbor groups
@@ -341,34 +355,21 @@ def _topk_with_duplicate_collapse(spark: SparkSession, emb_df: DataFrame,
       out.  Both are bounded recall loss in an already-approximate
       kernel, covered by the recall gates; both vanish on a
       duplicate-free corpus (the wrapper is then identity).
-    - NULL embeddings are filtered before grouping (mirroring the
-      dedup wrapper's NULL-text filter): grouping keys on exact
-      serialized bytes, so a NULL group would otherwise reach the
+    - NULL embeddings are dropped before grouping: grouping keys on
+      exact serialized bytes, so a NULL group would otherwise reach the
       window step before the kernel could reject it.  Byte-different
       but numerically equal encodings (-0.0 vs 0.0) intentionally land
       in separate groups — the kernel then treats them as the distinct
       vectors they are; collapse is an optimization for byte-identical
       payloads only.
     """
-    from pyspark.sql import Window
-
-    keyed = emb_df.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("__vec"),
-        F.md5(F.to_json(F.col(vec_col))).alias("gid"),
+    members = duplicate_groups(
+        emb_df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__vec")),
+        "vec_id", "__vec", F.md5(F.to_json(F.col("__vec"))),
     )
-    wg = Window.partitionBy("gid").orderBy("vec_id")
-    wg_all = Window.partitionBy("gid")
-    members = keyed.select(
-        "vec_id",
-        "gid",
-        "__vec",
-        (F.row_number().over(wg) - 1).alias("idx"),
-        F.count(F.lit(1)).over(wg_all).alias("gsize"),
-        F.first("vec_id").over(wg).alias("rep_id"),
-    ).localCheckpoint(eager=False)
 
     # 2. within-group twins: next-k larger ids at sim 1.0
+    wg = Window.partitionBy("gid").orderBy("vec_id")
     lead_cols = [F.lead("vec_id", j).over(wg).alias(f"__l{j}")
                  for j in range(1, k + 1)]
     within = (
@@ -409,48 +410,40 @@ def _topk_with_duplicate_collapse(spark: SparkSession, emb_df: DataFrame,
         .filter(F.col("nbr") > F.col("vec_id"))
         .select("vec_id", "nbr", "sim")
     )
-
-    w = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("nbr"))
-    return (
-        within.unionByName(cross)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    return _topk(within.unionByName(cross), k)
 
 
 def cosine_topk_ivf(spark: SparkSession, emb_df: DataFrame, k: int = 5,
-                    n_lists: int | None = None, n_probe: int | None = None,
-                    train_iters: int = 5,
+                    n_probe: int | None = None,
                     id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """Approximate top-k via IVF (inverted-file) partitioning — the other
     standard ANN scale path next to LSH: spherical k-means splits the
-    space into `n_lists` cells; each query probes only its `n_probe`
+    space into n_lists cells; each query probes only its `n_probe`
     nearest cells and re-scores candidates EXACTLY.
 
     Distributed shape (100 TB): centroids train on a driver-side sample
     (standard IVF practice — the sample, not the corpus, bounds driver
     memory), then assignment is a narrow broadcast map, candidate
     generation a cell-keyed equi-join (shuffle on cell id, the big
-    corpus moves once), scoring an Arrow kernel, top-k a per-key window.
-    Recall vs the exact kernel is asserted in tests; raising n_probe
-    trades compute for recall with no precision loss.
+    corpus moves once), scoring a JVM-side expression, top-k a per-key
+    window.  Recall vs the exact kernel is asserted in tests; raising
+    n_probe trades compute for recall with no precision loss.
 
-    `n_lists=None` (default) scales the cell count with the corpus —
-    max(16, floor(sqrt(N))), textbook IVF sizing: candidate volume is
-    ~N * n_probe * N/n_lists, so a FIXED list count is quadratic in N
-    (the r7 sf1 stress sweep measured 19.4x wall at 10x vectors);
-    sqrt-N lists keep it O(N^1.5 * n_probe) while the per-cell
-    candidate re-scoring stays exact.
+    The cell count scales with the corpus — n_lists = max(16,
+    floor(sqrt(N))), textbook IVF sizing: candidate volume is ~N *
+    n_probe * N/n_lists, so a FIXED list count is quadratic in N (the
+    sf1 stress sweep measured 19.4x wall at 10x vectors); sqrt-N lists
+    keep it O(N^1.5 * n_probe) while the per-cell candidate re-scoring
+    stays exact.
 
     `n_probe=None` scales WITH the list count — max(4, floor(log2
-    n_lists)) (r7 advice: a fixed probe count over sqrt-N cells shrinks
-    the probed corpus fraction as 4/sqrt(N), so recall would decay
-    silently at exactly the scale the sqrt sizing targets; one extra
-    probe per cell-count doubling holds recall roughly flat for
-    O(N^1.5 log N) candidate volume).  Pass explicit values to pin the
-    layout (the recall fixtures at N<=2k resolve to 16 lists / 4 probes
-    either way).
+    n_lists)): a fixed probe count over sqrt-N cells shrinks the probed
+    corpus fraction as 4/sqrt(N), so recall would decay silently at
+    exactly the scale the sqrt sizing targets; one extra probe per
+    cell-count doubling holds recall roughly flat for O(N^1.5 log N)
+    candidate volume.  Pass an explicit value to pin the probe count
+    (the recall fixtures at N<=2k resolve to 16 lists / 4 probes either
+    way).
 
     Only distinct vectors are indexed; duplicate members' neighbor lists
     are reconstituted afterwards — see _topk_with_duplicate_collapse
@@ -460,28 +453,27 @@ def cosine_topk_ivf(spark: SparkSession, emb_df: DataFrame, k: int = 5,
     """
     return _topk_with_duplicate_collapse(
         spark, emb_df, k,
-        lambda reps, kk: _cosine_topk_ivf_raw(
-            spark, reps, kk, n_lists, n_probe, train_iters, id_col, vec_col,
+        lambda reps, kk: _rescored_topk(
+            spark, _ivf_candidates(spark, reps, n_probe, id_col, vec_col),
+            reps, kk, id_col, vec_col,
         ),
         id_col, vec_col,
     )
 
 
-def _cosine_topk_ivf_raw(spark: SparkSession, emb_df: DataFrame, k: int,
-                         n_lists: int | None, n_probe: int | None,
-                         train_iters: int, id_col: str,
-                         vec_col: str) -> DataFrame:
-    """cosine_topk_ivf's index + re-score kernel, without the duplicate
-    collapse."""
-    if n_lists is None:
-        n_lists = max(16, int(emb_df.count() ** 0.5))
+def _ivf_candidates(spark: SparkSession, emb_df: DataFrame,
+                    n_probe: int | None, id_col: str,
+                    vec_col: str) -> DataFrame | None:
+    """cosine_topk_ivf's candidate generator: (vec_id, nbr) for every
+    member nbr > vec_id of a cell vec_id probes, repeated once per
+    shared cell; None on an empty corpus."""
+    n_lists = max(16, int(emb_df.count() ** 0.5))
     if n_probe is None:
         n_probe = max(4, int(n_lists).bit_length() - 1)
     # --- train on a deterministic sample (smallest ids), spherical k-means
     sample = emb_df.orderBy(id_col).limit(max(64, n_lists * 8)).select(vec_col).collect()
     if not sample:
-        # empty corpus: no cells to train, no neighbors to return
-        return spark.createDataFrame([], "vec_id long, nbr long, sim double")
+        return None
     S = np.stack([np.asarray(r[0], dtype=np.float64) for r in sample])
     S /= np.maximum(np.linalg.norm(S, axis=1, keepdims=True), 1e-12)
     C = S[:n_lists].copy()
@@ -490,7 +482,7 @@ def _cosine_topk_ivf_raw(spark: SparkSession, emb_df: DataFrame, k: int,
     # probe fan-out would index past the centroid matrix
     n_lists = C.shape[0]
     n_probe = min(n_probe, n_lists)
-    for _ in range(train_iters):
+    for _ in range(IVF_TRAIN_ITERS):
         a = (S @ C.T).argmax(axis=1)
         for c in range(n_lists):
             if (a == c).any():
@@ -527,59 +519,53 @@ def _cosine_topk_ivf_raw(spark: SparkSession, emb_df: DataFrame, k: int,
         F.col("vec_id").alias("m_id"), "cell"
     )
     probes = placed.select(F.col("vec_id").alias("q_id"), "cell")
-    cand = (
+    return (
         probes.join(members, "cell")
         .filter(F.col("m_id") > F.col("q_id"))
         .select(F.col("q_id").alias("vec_id"), F.col("m_id").alias("nbr"))
-        .dropDuplicates(["vec_id", "nbr"])
     )
-    scored = _score_id_pairs(cand, emb_df, id_col, vec_col)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("nbr"))
-    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k).drop("rn")
 
 
 def cosine_topk_lsh(spark: SparkSession, emb_df: DataFrame, k: int = 5,
-                    n_planes: int | None = None, n_tables: int = 16,
-                    n_flip: int | None = None, seed: int = 42,
+                    n_flip: int | None = None,
                     id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """Approximate top-k via random-hyperplane LSH: the 100TB scale path.
 
-    Each table hashes a vector to a signature bucket (sign pattern against
-    n_planes hyperplanes); only same-bucket pairs are scored — exactly —
-    then per-vector top-k over candidates.
+    Each of LSH_TABLES tables hashes a vector to a signature bucket (sign
+    pattern against n_planes hyperplanes); only same-bucket pairs are
+    scored — exactly — then per-vector top-k over candidates.
 
     Tuning: P(candidate) per table = p^n_planes with p = 1 - theta/pi.
-    Defaults (8 planes x 16 tables, no probes) give ~25-45%% recall for
-    cos 0.3-0.5 neighbors at ~6%% background pair rate — appropriate for
-    the fixtures' RANDOM embeddings, whose top-k neighbors are barely
-    above background.  On real clustered embeddings (cos >= 0.7 within
-    near-dup groups) the same defaults give >99%% recall.  Fully
-    distributed: signature assignment is a narrow map, candidate
-    generation is a bucket-keyed probe/member join (shuffle on bucket),
-    no broadcast of the full matrix.  Recall is tested against the exact
-    kernel in tests/test_llmops.py, including at an autoscale-engaging N.
+    The fixture layout (8 planes x 16 tables, no probes) gives ~25-45%%
+    recall for cos 0.3-0.5 neighbors at ~6%% background pair rate —
+    appropriate for the fixtures' RANDOM embeddings, whose top-k
+    neighbors are barely above background.  On real clustered embeddings
+    (cos >= 0.7 within near-dup groups) the same layout gives >99%%
+    recall.  Fully distributed: signature assignment is a narrow map,
+    candidate generation is a bucket-keyed probe/member join (shuffle on
+    bucket), no broadcast of the full matrix.  Recall is tested against
+    the exact kernel in tests/test_llmops.py, including at an
+    autoscale-engaging N.
 
-    Corpus-aware defaults (r7 advice: the two knobs must scale TOGETHER
-    or recall decays geometrically with each added plane):
+    The plane count and the probe count scale TOGETHER with the corpus,
+    or recall decays geometrically with each added plane:
 
-    - `n_planes=None` -> max(8, bit_length(N) - 3), pinning mean bucket
-      occupancy at ~4/table: with FIXED planes per-bucket pair volume is
-      (N/2^planes)^2-quadratic (the r7 sf1 sweep measured 9.0x wall at
-      10x vectors); one extra plane per corpus doubling keeps candidate
-      volume ~linear in N.
+    - n_planes = max(8, bit_length(N) - 3), pinning mean
+      bucket occupancy at ~4/table: with FIXED planes per-bucket pair
+      volume is (N/2^planes)^2-quadratic (the sf1 sweep measured 9.0x
+      wall at 10x vectors); one extra plane per corpus doubling keeps
+      candidate volume ~linear in N.
     - `n_flip=None` -> n_planes - 8 DIRECTED multiprobes (Lv et al.,
       VLDB'07): each query additionally probes the buckets reached by
       flipping its lowest-|margin| bits — the bits most likely to
       disagree with a true neighbor's signature.  Each probe restores
       roughly the candidate-probability mass one extra plane removes,
       at the cost of probe rows only (members stay home-bucket-only, so
-      signature storage and table count don't grow).
+      signature storage and table count don't grow).  Pass an explicit
+      value to pin the probe count.
 
-    At the test fixtures' N <= 2k both defaults resolve to the original
-    (8 planes, 0 probes) layout, so goldens are unchanged; pass explicit
-    values to pin a layout.
+    At the test fixtures' N <= 2k the layout resolves to 8 planes and 0
+    probes.
 
     Only distinct vectors are indexed; duplicate members' neighbor lists
     are reconstituted afterwards — see _topk_with_duplicate_collapse
@@ -590,31 +576,36 @@ def cosine_topk_lsh(spark: SparkSession, emb_df: DataFrame, k: int = 5,
     """
     return _topk_with_duplicate_collapse(
         spark, emb_df, k,
-        lambda reps, kk: _cosine_topk_lsh_raw(
-            spark, reps, kk, n_planes, n_tables, n_flip, seed, id_col, vec_col,
+        lambda reps, kk: _rescored_topk(
+            spark, _lsh_candidates(spark, reps, n_flip, id_col, vec_col),
+            reps, kk, id_col, vec_col,
         ),
         id_col, vec_col,
     )
 
 
-def _cosine_topk_lsh_raw(spark: SparkSession, emb_df: DataFrame, k: int,
-                         n_planes: int | None, n_tables: int,
-                         n_flip: int | None, seed: int, id_col: str,
-                         vec_col: str) -> DataFrame:
-    """cosine_topk_lsh's signature + re-score kernel, without the
-    duplicate collapse."""
-    if n_planes is None:
-        n_cnt = emb_df.count()
-        n_planes = max(8, int(n_cnt).bit_length() - 3)
+def _lsh_layout(n_vectors: int) -> tuple[int, int]:
+    """(hyperplanes per table, default directed probes) for a corpus of
+    n_vectors distinct vectors (see cosine_topk_lsh)."""
+    n_planes = max(8, int(n_vectors).bit_length() - 3)
+    return n_planes, n_planes - 8
+
+
+def _lsh_candidates(spark: SparkSession, emb_df: DataFrame,
+                    n_flip: int | None, id_col: str,
+                    vec_col: str) -> DataFrame | None:
+    """cosine_topk_lsh's candidate generator: (vec_id, nbr) with vec_id <
+    nbr for every probe/member pair sharing a (table, bucket), once per
+    shared bucket; None on an empty corpus."""
+    n_planes, auto_flip = _lsh_layout(emb_df.count())
     if n_flip is None:
-        n_flip = max(0, n_planes - 8)
+        n_flip = auto_flip
     probe_row = emb_df.select(vec_col).first()
     if probe_row is None:
-        # empty corpus: no planes to draw, no neighbors to return
-        return spark.createDataFrame([], "vec_id long, nbr long, sim double")
+        return None
     dim = len(probe_row[0])
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_tables, n_planes, dim))
+    rng = np.random.default_rng(LSH_SEED)
+    planes = rng.standard_normal((LSH_TABLES, n_planes, dim))
     bc = spark.sparkContext.broadcast(planes)
 
     def signatures(batches):
@@ -652,15 +643,15 @@ def _cosine_topk_lsh_raw(spark: SparkSession, emb_df: DataFrame, k: int,
             })
 
     # id-only signatures: the bucket-keyed probe/member join exchanges
-    # (id, table, bucket) rows — width independent of n_tables and dim;
-    # vectors are joined back once after candidate dedup
+    # (id, table, bucket) rows — width independent of the table count and
+    # dim; vectors are joined back once after candidate dedup
     sig = emb_df.select(id_col, vec_col).mapInPandas(
         signatures, schema="vec_id long, table int, bucket long, is_probe boolean"
     )
     members = sig.filter(~F.col("is_probe")).drop("is_probe")
     probes = sig.drop("is_probe")  # home bucket + directed flips
     a, b = probes.alias("a"), members.alias("b")
-    cand = (
+    return (
         a.join(
             b,
             (F.col("a.table") == F.col("b.table"))
@@ -671,10 +662,4 @@ def _cosine_topk_lsh_raw(spark: SparkSession, emb_df: DataFrame, k: int,
             F.least("a.vec_id", "b.vec_id").alias("vec_id"),
             F.greatest("a.vec_id", "b.vec_id").alias("nbr"),
         )
-        .dropDuplicates(["vec_id", "nbr"])
     )
-    scored = _score_id_pairs(cand, emb_df, id_col, vec_col)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("nbr"))
-    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k).drop("rn")

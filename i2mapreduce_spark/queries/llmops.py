@@ -306,6 +306,11 @@ def q_multimodal_phash(spark, sf_dir):
 CONTAINMENT_THRESHOLD = 0.9
 
 
+def _containment():
+    """|A∩B| / min(|A|, |B|) over dedup.shingle_overlap's columns."""
+    return F.col("i").cast("double") / F.least(F.col("n1"), F.col("n2"))
+
+
 def q_dedup_containment(spark, sf_dir):
     """Shingle-containment near-dup pairs: C(A,B) = |A∩B| / |A| >= 0.9 —
     catches sub/superset duplication (a doc embedded in a longer one)
@@ -314,21 +319,9 @@ def q_dedup_containment(spark, sf_dir):
     count, emitted with d1 < d2 and both directions checked."""
     load_tables(spark, sf_dir)
     sh = dedup.shingles(spark.table("documents"), n=3)
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .agg(F.count("*").alias("i"))
-    )
-    cnt = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    containment = F.col("i").cast("double") / F.least(F.col("na.n"), F.col("nb.n"))
+    containment = _containment()
     return (
-        inter.join(cnt.alias("na"), F.col("d1") == F.col("na.doc_id"))
-        .join(cnt.alias("nb"), F.col("d2") == F.col("nb.doc_id"))
+        dedup.shingle_overlap(sh, "doc_id")
         .filter(containment >= CONTAINMENT_THRESHOLD)
         .select("d1", "d2", F.round(containment, 4).alias("containment"))
     )
@@ -709,27 +702,10 @@ def q_dedup_ensemble_vote(spark, sf_dir):
     load_tables(spark, sf_dir)
     d = spark.table("documents")
     sh = dedup.shingles(d, n=3)
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .agg(F.count("*").alias("i"))
-    )
-    cnt = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    scored = (
-        inter.join(cnt.alias("na"), F.col("d1") == F.col("na.doc_id"))
-        .join(cnt.alias("nb"), F.col("d2") == F.col("nb.doc_id"))
-        .select(
-            "d1", "d2",
-            (F.col("i") / (F.col("na.n") + F.col("nb.n") - F.col("i"))).alias("jac"),
-            (F.col("i").cast("double") / F.least(F.col("na.n"), F.col("nb.n"))).alias(
-                "cont"
-            ),
-        )
+    scored = dedup.shingle_overlap(sh, "doc_id").select(
+        "d1", "d2",
+        dedup.jaccard_score().alias("jac"),
+        _containment().alias("cont"),
     )
     hashed = d.select("doc_id", F.md5("text").alias("h"))
     ha, hb = hashed.alias("ha"), hashed.alias("hb")

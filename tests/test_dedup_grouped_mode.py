@@ -101,17 +101,17 @@ def test_grouped_mode_information_equivalent(dup_docs, kernel, score_name, kwarg
 
 
 def test_exact_jaccard_collapse_is_value_exact(dup_docs):
-    """The r10 exact-family collapse must be IDENTITY on values (unlike
+    """The exact-family collapse must be IDENTITY on values (unlike
     the banded kernels, where collapse only fixes intermediates, the
     exact kernel's output is fully determined): byte-identical texts
     have identical shingle sets, so rep-level jaccard == member-level."""
     plain = {
         (r.d1, r.d2, r.jac)
-        for r in dedup.near_jaccard_pairs(dup_docs, 0.5).collect()
+        for r in dedup.jaccard_pairs(dedup.shingles(dup_docs), 0.5).collect()
     }
     collapsed = {
         (r.d1, r.d2, r.jac)
-        for r in dedup.near_jaccard_pairs(dup_docs, 0.5, collapse_dups=True).collect()
+        for r in dedup.near_jaccard_pairs(dup_docs, 0.5).collect()
     }
     assert collapsed == plain and plain  # non-trivial on a 4x-dup corpus
 
@@ -119,19 +119,14 @@ def test_exact_jaccard_collapse_is_value_exact(dup_docs):
 def test_exact_jaccard_grouped_mode_information_equivalent(dup_docs):
     expanded = {
         (r.d1, r.d2, r.jac)
-        for r in dedup.near_jaccard_pairs(dup_docs, 0.5, collapse_dups=True).collect()
+        for r in dedup.near_jaccard_pairs(dup_docs, 0.5).collect()
     }
     grouped = dedup.near_jaccard_pairs(
-        dup_docs, 0.5, collapse_dups=True, expand_members=False
+        dup_docs, 0.5, expand_members=False
     ).collect()
     reconstructed = _expand_grouped(grouped, _membership(dup_docs), "jac")
     assert reconstructed == expanded
     assert len(grouped) < len(expanded)
-
-
-def test_grouped_mode_requires_collapse(dup_docs):
-    with pytest.raises(ValueError):
-        dedup.near_jaccard_pairs(dup_docs, 0.5, expand_members=False)
 
 
 def test_grouped_mode_on_duplicate_free_corpus(spark, sf_dir):

@@ -301,3 +301,36 @@ def test_fingerprint_matches_golden_and_is_order_sensitive(spark):
     assert got[1] == golden("join filter window")
     assert got[2] == golden("window filter join")
     assert got[1] != got[2], "fingerprint must be order-sensitive"
+
+
+#: five in-memory vectors, one with a NULL embedding
+_NULL_EMB_ROWS = [
+    (1, 0, [1.0, 0.0, 0.0]),
+    (2, 1, [0.9, 0.1, 0.0]),
+    (3, 0, None),
+    (4, 1, [0.0, 1.0, 0.2]),
+    (5, 0, [0.8, 0.0, 0.3]),
+]
+
+
+@pytest.mark.parametrize(
+    "kernel",
+    [
+        lambda spark, e: similarity.cosine_topk(spark, e, k=2),
+        lambda spark, e: similarity.cosine_pairs(spark, e, 0.5),
+        lambda spark, e: similarity.cosine_threshold_pairs(spark, e, 0.5),
+        lambda spark, e: similarity.embedding_dedup_groups(spark, e, 0.5),
+        lambda spark, e: similarity.cosine_topk_lsh(spark, e, k=2),
+        lambda spark, e: similarity.cosine_topk_ivf(spark, e, k=2),
+    ],
+    ids=["topk", "pairs", "threshold_pairs", "dedup_groups", "ann_lsh", "ann_ivf"],
+)
+def test_similarity_kernels_skip_null_embeddings(spark, kernel):
+    """A NULL embedding cannot be scored: every similarity kernel answers
+    as if its row were absent, instead of crashing in the numpy kernel."""
+    emb = spark.createDataFrame(
+        _NULL_EMB_ROWS, "vec_id long, label int, embedding array<double>"
+    )
+    got = sorted(kernel(spark, emb).collect())
+    want = sorted(kernel(spark, emb.filter(F.col("embedding").isNotNull())).collect())
+    assert got == want

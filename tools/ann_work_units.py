@@ -1,4 +1,4 @@
-"""Work-unit accounting for the ANN scale path (r11 verdict item 4).
+"""Work-unit accounting for the ANN scale path.
 
 sim_ann_lsh read 93.3 s at sf100 (4.8x/decade) — the worst in-gate
 decade ratio.  This tool separates the components that MUST grow with
@@ -11,7 +11,8 @@ adjudicate the wall-clock ratio as contract growth, not algorithmic
 blow-up.
 
 Usage: python tools/ann_work_units.py <sf_dir> [<sf_dir> ...]
-Prints one table row per sf_dir; measurement-only (no query-path code).
+Prints one table row per sf_dir.  The counts come from the kernel's own
+duplicate grouping and LSH candidate stage; the tool changes nothing.
 """
 
 from __future__ import annotations
@@ -21,12 +22,10 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import numpy as np  # noqa: E402
-import pandas as pd  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from i2mapreduce_spark.catalog import load_tables  # noqa: E402
-from i2mapreduce_spark.operators import similarity  # noqa: E402
+from i2mapreduce_spark.operators import dedup, similarity  # noqa: E402
 from i2mapreduce_spark.session import get_spark  # noqa: E402
 
 
@@ -34,95 +33,22 @@ def counts_for(spark, sf_dir: str) -> dict:
     load_tables(spark, sf_dir)
     emb = spark.table("embeddings")
     n_total = emb.count()
-    keyed = emb.filter(F.col("embedding").isNotNull()).select(
-        F.col("vec_id"), F.md5(F.to_json(F.col("embedding"))).alias("gid")
+    # the kernel's own grouping and candidate stage, on one
+    # representative per group
+    members = dedup.duplicate_groups(
+        emb, "vec_id", "embedding", F.md5(F.to_json(F.col("embedding")))
     )
-    grp = keyed.groupBy("gid").agg(F.count("*").alias("gsize"))
-    gstats = grp.agg(
-        F.count("*").alias("uniq"), F.max("gsize").alias("max_gsize")
+    reps = members.filter(F.col("idx") == 0).select("vec_id", "embedding")
+    gstats = members.agg(
+        F.count(F.when(F.col("idx") == 0, 1)).alias("uniq"),
+        F.max("gsize").alias("max_gsize"),
     ).collect()[0]
     n_uniq, max_gsize = gstats["uniq"], gstats["max_gsize"]
-
-    # knobs exactly as the kernel resolves them on the UNIQUE count
-    n_planes = max(8, int(n_uniq).bit_length() - 3)
-    n_flip = max(0, n_planes - 8)
-    n_tables = 16
-
-    # rep-level candidate pairs: rebuild the kernel's candidate stage on
-    # one representative per group (same signature fan-out) and count
-    reps = (
-        emb.filter(F.col("embedding").isNotNull())
-        .withColumn("gid", F.md5(F.to_json(F.col("embedding"))))
-        .groupBy("gid")
-        .agg(F.min("vec_id").alias("vec_id"),
-             F.first("embedding").alias("embedding"))
-        .select("vec_id", "embedding")
-    )
-    rng = np.random.default_rng(42)
-    probe_row = reps.select("embedding").first()
-    if probe_row is None:
+    bucket_pairs = similarity._lsh_candidates(spark, reps, None, "vec_id",
+                                              "embedding")
+    if bucket_pairs is None:
         return {"sf_dir": sf_dir, "n_total": n_total, "n_uniq": 0}
-    dim = len(probe_row[0])
-    planes = rng.standard_normal((n_tables, n_planes, dim))
-    bc = spark.sparkContext.broadcast(planes)
-
-    def signatures(batches):
-        pl = bc.value
-        w = 1 << np.arange(pl.shape[1])
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            A = np.stack(pdf["embedding"].values).astype(np.float64)
-            ids = pdf["vec_id"].values
-            T = pl.shape[0]
-            proj = np.einsum("nd,tpd->tnp", A, pl)
-            home = (proj > 0).dot(w)
-            out_ids = [np.tile(ids, T)]
-            out_tbl = [np.repeat(np.arange(T, dtype=np.int32), len(ids))]
-            out_bkt = [home.reshape(-1)]
-            out_prb = [np.zeros(T * len(ids), dtype=bool)]
-            if n_flip:
-                order = np.argsort(np.abs(proj), axis=2,
-                                   kind="stable")[:, :, :n_flip]
-                flips = home[:, :, None] ^ w[order]
-                out_ids.append(np.tile(np.repeat(ids, n_flip), T))
-                out_tbl.append(np.repeat(np.arange(T, dtype=np.int32),
-                                         len(ids) * n_flip))
-                out_bkt.append(flips.reshape(-1))
-                out_prb.append(np.ones(T * len(ids) * n_flip, dtype=bool))
-            yield pd.DataFrame({
-                "vec_id": np.concatenate(out_ids),
-                "table": np.concatenate(out_tbl),
-                "bucket": np.concatenate(out_bkt),
-                "is_probe": np.concatenate(out_prb),
-            })
-
-    sig = reps.mapInPandas(
-        signatures, schema="vec_id long, table int, bucket long, is_probe boolean"
-    )
-    members = sig.filter(~F.col("is_probe")).drop("is_probe")
-    probes = sig.drop("is_probe")
-    a, b = probes.alias("a"), members.alias("b")
-    raw_pairs = a.join(
-        b,
-        (F.col("a.table") == F.col("b.table"))
-        & (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col("a.vec_id") != F.col("b.vec_id")),
-    ).count()
-    cand_pairs = (
-        a.join(
-            b,
-            (F.col("a.table") == F.col("b.table"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") != F.col("b.vec_id")),
-        )
-        .select(
-            F.least("a.vec_id", "b.vec_id").alias("vec_id"),
-            F.greatest("a.vec_id", "b.vec_id").alias("nbr"),
-        )
-        .dropDuplicates(["vec_id", "nbr"])
-        .count()
-    )
+    n_planes, n_flip = similarity._lsh_layout(n_uniq)
     out_rows = similarity.cosine_topk_lsh(spark, emb, k=5).count()
     return {
         "sf_dir": sf_dir,
@@ -131,9 +57,9 @@ def counts_for(spark, sf_dir: str) -> dict:
         "max_gsize": max_gsize,
         "n_planes": n_planes,
         "n_flip": n_flip,
-        "sig_rows": n_uniq * n_tables * (1 + n_flip),
-        "raw_bucket_pairs": raw_pairs,
-        "cand_pairs_deduped": cand_pairs,
+        "sig_rows": n_uniq * similarity.LSH_TABLES * (1 + n_flip),
+        "raw_bucket_pairs": bucket_pairs.count(),
+        "cand_pairs_deduped": bucket_pairs.dropDuplicates().count(),
         "output_rows": out_rows,
     }
 

@@ -1,1 +1,1 @@
-from .vector import l2_norm_expr, l2_norm_oracle_sql  # noqa: F401
+from .vector import l2_norm_expr  # noqa: F401

@@ -1,10 +1,8 @@
 """Shared vector column expressions (JVM-side, whole-stage-codegen
-friendly) and their DuckDB oracle fragments.
+friendly).
 
 These are the scalar/per-row kernels; the batch-matrix kernels (top-k
-cosine etc.) live in operators/similarity.py.  Keeping the expression and
-its oracle fragment side by side guarantees the two engines compute the
-same formula (SURVEY Appendix B determinism contract).
+cosine etc.) live in operators/similarity.py.
 """
 
 from __future__ import annotations
@@ -12,8 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Column, functions as F
 
 
-def l2_norm_expr(vec_col: str | Column, scale: int = 4) -> Column:
-    """round(sqrt(sum(x^2)), scale) over an array column.
+def l2_norm_expr(vec_col: str | Column) -> Column:
+    """round(sqrt(sum(x^2)), 4) over an array column.
 
     Elements are cast float->double BEFORE squaring: the fixtures store
     float32, and squaring in float32 then widening drifts from DuckDB's
@@ -25,12 +23,4 @@ def l2_norm_expr(vec_col: str | Column, scale: int = 4) -> Column:
         F.lit(0.0).cast("double"),
         lambda acc, x: acc + x.cast("double") * x.cast("double"),
     )
-    return F.round(F.sqrt(sq), scale)
-
-
-def l2_norm_oracle_sql(vec_col: str = "embedding", scale: int = 4) -> str:
-    """DuckDB fragment computing the same rounded L2 norm."""
-    return (
-        f"round(sqrt(list_sum(list_transform({vec_col}, "
-        f"x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), {scale})"
-    )
+    return F.round(F.sqrt(sq), 4)

@@ -539,16 +539,19 @@ def connected_components(edges: DataFrame, iters: int = MIN_LABEL_ITERS,
     return res.state.select("node", F.col("val").alias("label"))
 
 
-def label_propagation(edges: DataFrame, labels0: DataFrame, iters: int = 3,
-                      max_label: int = 1000) -> DataFrame:
+#: label_propagation's labels lie in [0, LPA_LABEL_BOUND)
+LPA_LABEL_BOUND = 1000
+
+
+def label_propagation(edges: DataFrame, labels0: DataFrame, iters: int = 3) -> DataFrame:
     """Synchronous majority label propagation (community detection /
     semi-supervised label spreading): each round every node adopts the
     most frequent label among its in-neighbors, ties broken toward the
     SMALLEST label; a node with no in-edges keeps its label.
 
-    Deterministic argmax via one scalar key — max_by(label, c*max_label -
-    label) picks the (count DESC, label ASC) winner; requires labels in
-    [0, max_label).  labels0: (node, label int).
+    Deterministic argmax via one scalar key — max_by(label,
+    c*LPA_LABEL_BOUND - label) picks the (count DESC, label ASC) winner;
+    requires labels in [0, LPA_LABEL_BOUND).  labels0: (node, label int).
 
     100TB: per round one shuffle keyed by edge dst for the (node, label)
     count and one keyed by node for the argmax — state shuffles O(nodes x
@@ -563,7 +566,7 @@ def label_propagation(edges: DataFrame, labels0: DataFrame, iters: int = 3,
             .agg(F.count("*").alias("c"))
         )
         best = cnt.groupBy("node").agg(
-            F.max_by("msg", F.col("c") * max_label - F.col("msg")).alias("blab")
+            F.max_by("msg", F.col("c") * LPA_LABEL_BOUND - F.col("msg")).alias("blab")
         )
         return (
             state.alias("p")
@@ -577,20 +580,19 @@ def label_propagation(edges: DataFrame, labels0: DataFrame, iters: int = 3,
     return iterate(labels0, step, iters, checkpoint_every=1).state
 
 
-def apriori_levels(
-    baskets: DataFrame,
-    min_support: int,
-    max_k: int = 3,
-    item_col: str = "item",
-    basket_col: str = "basket",
-) -> dict[int, DataFrame]:
-    """Level-wise APriori (the reference's iterative form of its 4th
-    example app [PAPER §7]): L1 = frequent items; Lk extends each
-    surviving (k-1)-itemset occurrence with a larger item from the same
-    basket, counts support, prunes.
+#: apriori_levels' largest itemset size
+APRIORI_MAX_K = 3
 
-    Returns {k: DataFrame(items array<...>, support)}.  The two pruning
-    rules are both applied the classic way:
+
+def apriori_levels(baskets: DataFrame, min_support: int) -> dict[int, DataFrame]:
+    """Level-wise APriori (the reference's iterative form of its 4th
+    example app [PAPER §7]) over (basket, item) rows: L1 = frequent
+    items; Lk extends each surviving (k-1)-itemset occurrence with a
+    larger item from the same basket, counts support, prunes.
+
+    Returns {k: DataFrame(items array<...>, support)} for k = 1 ..
+    APRIORI_MAX_K.  The two pruning rules are both applied the classic
+    way:
     - anti-monotone: occurrences whose itemset fell below min_support are
       semi-join-filtered out before extending (no candidate explosion);
     - lexicographic extension (new item > last item) generates each
@@ -599,23 +601,23 @@ def apriori_levels(
     100TB: each level is one join + hash agg, shuffling (basket, itemset)
     occurrences — the set the pruning just shrank; nothing is collected.
     """
-    b = baskets.select(basket_col, item_col)
+    b = baskets.select("basket", "item")
     sup1 = (
-        b.groupBy(item_col)
+        b.groupBy("item")
         .agg(F.count("*").alias("support"))
         .filter(F.col("support") >= min_support)
     )
-    levels = {1: sup1.select(F.array(item_col).alias("items"), "support")}
-    occs = b.join(sup1.select(item_col), item_col, "left_semi").select(
-        basket_col, F.array(item_col).alias("items")
+    levels = {1: sup1.select(F.array("item").alias("items"), "support")}
+    occs = b.join(sup1.select("item"), "item", "left_semi").select(
+        "basket", F.array("item").alias("items")
     )
-    for k in range(2, max_k + 1):
+    for k in range(2, APRIORI_MAX_K + 1):
         ext = (
-            occs.join(b.alias("x"), basket_col)
-            .filter(F.col(f"x.{item_col}") > F.element_at("items", -1))
+            occs.join(b.alias("x"), "basket")
+            .filter(F.col("x.item") > F.element_at("items", -1))
             .select(
-                basket_col,
-                F.concat("items", F.array(f"x.{item_col}")).alias("items"),
+                "basket",
+                F.concat("items", F.array("x.item")).alias("items"),
             )
         )
         sup = (
@@ -633,8 +635,6 @@ def kmeans(
     emb_df: DataFrame,
     k: int = 10,
     iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     init_centroids: np.ndarray | None = None,
     tol: float | None = None,
 ) -> tuple[DataFrame, np.ndarray]:
@@ -656,17 +656,25 @@ def kmeans(
         centroids = np.asarray(init_centroids, dtype=np.float64).copy()
     else:
         seeds = (
-            emb_df.orderBy(id_col).limit(k).select(vec_col).collect()
+            emb_df.orderBy("vec_id").limit(k).select("embedding").collect()
         )
         if not seeds:
             # empty corpus: no centroids to train, no rows to assign —
             # return the empty assignment with the declared schema
             kmeans.last_iters_run = 0
             empty = emb_df.sparkSession.createDataFrame(
-                [], f"{id_col} long, cluster int"
+                [], "vec_id long, cluster int"
             )
             return empty, np.empty((0, 0))
         centroids = np.stack([np.asarray(r[0], dtype=np.float64) for r in seeds])
+
+    def nearest(pdf: pd.DataFrame, C: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """(the batch's vectors, each one's nearest centroid index)."""
+        A = np.stack(pdf["embedding"].values).astype(np.float64)
+        # ||a-c||^2 = |a|^2 - 2 a.c + |c|^2 ; argmin ties -> lowest
+        # centroid index (np.argmin returns the first minimum)
+        d2 = (A * A).sum(1, keepdims=True) - 2 * A @ C.T + (C * C).sum(1)
+        return A, d2.argmin(axis=1)
 
     def make_kernel(bc):
         # factory, not a loop closure: all loop iterations would share one
@@ -677,19 +685,9 @@ def kmeans(
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                A = np.stack(pdf[vec_col].values).astype(np.float64)
-                # ||a-c||^2 = |a|^2 - 2 a.c + |c|^2 ; argmin ties -> lowest
-                # centroid index (np.argmin returns the first minimum)
-                d2 = (
-                    (A * A).sum(1, keepdims=True)
-                    - 2 * A @ C.T
-                    + (C * C).sum(1)
-                )
+                _, lab = nearest(pdf, C)
                 yield pd.DataFrame(
-                    {
-                        id_col: pdf[id_col].values,
-                        "cluster": d2.argmin(axis=1).astype(np.int32),
-                    }
+                    {"vec_id": pdf["vec_id"].values, "cluster": lab.astype(np.int32)}
                 )
 
         return assign_kernel
@@ -703,13 +701,7 @@ def kmeans(
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                A = np.stack(pdf[vec_col].values).astype(np.float64)
-                d2 = (
-                    (A * A).sum(1, keepdims=True)
-                    - 2 * A @ C.T
-                    + (C * C).sum(1)
-                )
-                lab = d2.argmin(axis=1)
+                A, lab = nearest(pdf, C)
                 present = np.unique(lab)
                 yield pd.DataFrame(
                     {
@@ -725,14 +717,14 @@ def kmeans(
     kmeans.last_iters_run = 0
     for _ in range(iters):
         bc = spark.sparkContext.broadcast(centroids)
-        assign = emb_df.select(id_col, vec_col).mapInPandas(
-            make_kernel(bc), schema=f"{id_col} long, cluster int"
+        assign = emb_df.select("vec_id", "embedding").mapInPandas(
+            make_kernel(bc), schema="vec_id long, cluster int"
         )
         # centroid update: per-partition partials from the same distance
         # kernel, then one k-row aggregate (element-wise vector sum via
         # zip_with) — only k x dim numbers reach the driver
         upd = (
-            emb_df.select(vec_col)
+            emb_df.select("embedding")
             .mapInPandas(
                 make_partials_kernel(bc),
                 schema="cluster int, cnt long, vsum array<double>",
@@ -1047,8 +1039,12 @@ def _fwbw_coloring(active: DataFrame, active_nodes: DataFrame,
     return _min_label_fixpoint(labels, active, dirs, iters).state
 
 
-def scc(edges: DataFrame, max_passes: int = 64,
-        max_trim_rounds: int = 32) -> DataFrame:
+#: most trim rounds per scc() pass; trimming only peels the DAG
+#: periphery early, and the coloring pass labels whatever it leaves
+SCC_TRIM_ROUNDS = 32
+
+
+def scc(edges: DataFrame, max_passes: int = 64) -> DataFrame:
     """Strongly connected components of a directed graph via
     Trim + Forward-Backward min-label coloring (the FW-BW-Trim scheme of
     the parallel-SCC literature, with Orzan-style coloring as the reach
@@ -1114,7 +1110,7 @@ def scc(edges: DataFrame, max_passes: int = 64,
         # MEASURED SLOWER (26s vs 16s at sf0.01) because the three
         # checkpoint branches (edges, nodes, trimmed batch) each
         # re-execute the overlapping peel subplans.
-        for _t in range(max_trim_rounds):
+        for _t in range(SCC_TRIM_ROUNDS):
             # one fused shuffle computes both degree flags
             deg = (
                 active.select(F.col("src").alias("node"),

@@ -10,11 +10,13 @@ Design for image/audio/video at 100 TB:
 - decoded features are fixed-width `array<float>` columns that flow into
   the similarity operators unchanged.
 
-The decode step itself needs codec libraries that are NOT in this
-container, so it is stubbed: `decode_stub` raises NotImplementedError
-unless `fake=True`, where a clearly-marked deterministic fake produces
-bytes-derived features — the Spark-side plumbing (schema, batching,
-partitioning, UDF signatures) is real and tested either way.
+The decode step itself needs codec libraries that are NOT installed, so
+it is stubbed: `decode_stub` raises NotImplementedError unless
+`fake=True`, where a clearly-marked deterministic fake produces
+bytes-derived features.  Every kernel here always calls it with
+`fake=True`; `decode_stub` is the one place a real decoder goes.  The
+Spark-side plumbing (schema, batching, partitioning, UDF signatures) is
+real and tested.
 """
 
 from __future__ import annotations
@@ -37,13 +39,18 @@ def _round_half_away(x: float, nd: int = 4) -> float:
 META_SCHEMA = (
     "modality string, byte_len int, width int, height int, sample_rate int"
 )
+#: feature-vector width of extract_features (one histogram bucket each)
+FEATURE_DIM = 16
+#: pooled grid of resize and phash: 6 rows x 8 columns (a 48-bit phash)
+POOL_H, POOL_W = 6, 8
+#: payload bytes per frame_sample frame
+FRAME_BYTES = 10
 
 
-def attach_binary_payload(df: DataFrame, text_col: str = "text",
-                          id_col: str = "doc_id") -> DataFrame:
-    """Fixture adapter: wrap a text column as an opaque binary payload with
-    typed metadata, standing in for real image/audio bytes."""
-    payload = F.col(text_col).cast("binary")
+def attach_binary_payload(df: DataFrame) -> DataFrame:
+    """Fixture adapter: wrap the documents' text as an opaque binary
+    payload with typed metadata, standing in for real image/audio bytes."""
+    payload = F.col("text").cast("binary")
     meta = F.struct(
         F.lit("image").alias("modality"),
         F.length(payload).alias("byte_len"),
@@ -55,7 +62,7 @@ def attach_binary_payload(df: DataFrame, text_col: str = "text",
     # downstream decode/feature kernel sees only real payloads (their
     # oracles filter `text IS NOT NULL` identically)
     return df.select(
-        F.col(id_col), payload.alias("payload"), meta.alias("meta")
+        "doc_id", payload.alias("payload"), meta.alias("meta")
     ).filter(F.col("payload").isNotNull())
 
 
@@ -75,84 +82,92 @@ def decode_stub(payload: bytes, modality: str, fake: bool = False) -> np.ndarray
     return arr
 
 
-def extract_features(df: DataFrame, dim: int = 16, fake: bool = True,
-                     id_col: str = "doc_id") -> DataFrame:
+def extract_features(df: DataFrame) -> DataFrame:
     """Binary payload -> fixed-width feature vector via mapInPandas.
 
-    Deterministic fake 'feature extractor': bucket byte histogram, L2
-    normalized.  The stage shape (Arrow batch in, fixed array<double>
-    out) is exactly what a real CLIP/audio embedder would use.
+    Deterministic fake 'feature extractor': FEATURE_DIM-bucket byte
+    histogram, L2 normalized.  The stage shape (Arrow batch in, fixed
+    array<double> out) is exactly what a real CLIP/audio embedder would
+    use.
     """
     def extract(batches):
         for pdf in batches:
             ids, feats, lens = [], [], []
             for did, payload, meta in zip(
-                pdf[id_col].values, pdf["payload"].values, pdf["meta"].values
+                pdf["doc_id"].values, pdf["payload"].values, pdf["meta"].values
             ):
-                arr = decode_stub(bytes(payload), meta["modality"], fake=fake)
-                hist, _ = np.histogram(arr % dim, bins=dim, range=(0, dim))
+                arr = decode_stub(bytes(payload), meta["modality"], fake=True)
+                hist, _ = np.histogram(
+                    arr % FEATURE_DIM, bins=FEATURE_DIM, range=(0, FEATURE_DIM)
+                )
                 v = hist.astype(np.float64)
                 norm = np.linalg.norm(v)
                 feats.append((v / norm if norm else v).round(6).tolist())
                 ids.append(did)
                 lens.append(int(meta["byte_len"]))
-            yield pd.DataFrame({id_col: ids, "byte_len": lens, "feature": feats})
+            yield pd.DataFrame({"doc_id": ids, "byte_len": lens, "feature": feats})
 
     return df.mapInPandas(
-        extract, schema=f"{id_col} long, byte_len int, feature array<double>"
+        extract, schema="doc_id long, byte_len int, feature array<double>"
     )
 
 
-def resize(df: DataFrame, out_w: int = 8, out_h: int = 6,
-           fake: bool = True, id_col: str = "doc_id") -> DataFrame:
+def _pool(payload, meta, dtype) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Decode (stubbed) one payload, tile its bytes to a meta.height x
+    meta.width image and sum it into the POOL_H x POOL_W grid by integer
+    bucket maps: (image, per-cell sums, per-cell pixel counts), all of
+    `dtype`.  The fake 'image' is np.resize pad-by-repeat — deterministic
+    — so the pooling is exactly reproducible across partitionings."""
+    arr = decode_stub(bytes(payload), meta["modality"], fake=True)
+    h, w = int(meta["height"]), int(meta["width"])
+    img = np.resize(arr, (h, w)).astype(dtype)
+    ys = (np.arange(h) * POOL_H) // h
+    xs = (np.arange(w) * POOL_W) // w
+    sums = np.zeros((POOL_H, POOL_W), dtype=dtype)
+    cnts = np.zeros((POOL_H, POOL_W), dtype=dtype)
+    np.add.at(sums, (ys[:, None], xs[None, :]), img)
+    np.add.at(cnts, (ys[:, None], xs[None, :]), 1)
+    return img, sums, cnts
+
+
+def resize(df: DataFrame) -> DataFrame:
     """Image-resize stage shape: payload -> decode (stubbed) -> H x W
-    pixel grid -> area-average pool to a fixed out_h x out_w grid, via
+    pixel grid -> area-average pool to a fixed POOL_H x POOL_W grid, via
     Arrow-batched mapInPandas.  Output is reduced to scalars (pixel mean
     + two pooled corner cells) so downstream stays flat-columnar.
 
-    The fake 'image' tiles the payload bytes to meta.height x meta.width
-    (np.resize pad-by-repeat — deterministic); pooling uses integer bucket
-    maps, so the result is exactly reproducible across partitionings.
-    Every emitted value is a single exact-integer-sum / count quotient:
-    one IEEE division, bit-identical in any engine — a mean over the 48
-    bucket AVERAGES would instead be float-summation-order-sensitive and
-    flaps 4dp rounding ties (observed on the fixtures).
+    Pooling is `_pool` in float64.  Every emitted value is a single
+    exact-integer-sum / count quotient: one IEEE division, bit-identical
+    in any engine — a mean over the 48 bucket AVERAGES would instead be
+    float-summation-order-sensitive and flaps 4dp rounding ties (observed
+    on the fixtures).
     """
     def _resize(batches):
         for pdf in batches:
             ids, means, c00s, clasts = [], [], [], []
             for did, payload, meta in zip(
-                pdf[id_col].values, pdf["payload"].values, pdf["meta"].values
+                pdf["doc_id"].values, pdf["payload"].values, pdf["meta"].values
             ):
-                arr = decode_stub(bytes(payload), meta["modality"], fake=fake)
-                h, w = int(meta["height"]), int(meta["width"])
-                img = np.resize(arr, (h, w))
-                ys = (np.arange(h) * out_h) // h
-                xs = (np.arange(w) * out_w) // w
-                pooled = np.zeros((out_h, out_w))
-                cnt = np.zeros((out_h, out_w))
-                np.add.at(pooled, (ys[:, None], xs[None, :]), img)
-                np.add.at(cnt, (ys[:, None], xs[None, :]), 1.0)
+                img, pooled, cnt = _pool(payload, meta, np.float64)
                 grid = pooled / np.maximum(cnt, 1.0)
                 ids.append(did)
                 means.append(_round_half_away(float(img.sum()) / img.size))
                 c00s.append(_round_half_away(float(grid[0, 0])))
                 clasts.append(_round_half_away(float(grid[-1, -1])))
             yield pd.DataFrame({
-                id_col: ids, "px_mean": means, "px_c00": c00s, "px_last": clasts,
+                "doc_id": ids, "px_mean": means, "px_c00": c00s, "px_last": clasts,
             })
 
     return df.mapInPandas(
         _resize,
-        schema=f"{id_col} long, px_mean double, px_c00 double, px_last double",
+        schema="doc_id long, px_mean double, px_c00 double, px_last double",
     )
 
 
-def phash(df: DataFrame, out_w: int = 8, out_h: int = 6,
-          fake: bool = True, id_col: str = "doc_id") -> DataFrame:
+def phash(df: DataFrame) -> DataFrame:
     """Perceptual-hash stage shape: payload -> decode (stubbed) -> pool to
-    an out_h x out_w grid -> one bit per cell (cell above the global
-    pixel mean) packed into a 48-bit integer — the aHash family used for
+    the POOL_H x POOL_W grid (`_pool` in int64) -> one bit per cell (cell
+    above the global pixel mean) packed into a 48-bit integer — the aHash family used for
     near-duplicate image detection at corpus scale (hamming distance on
     the hash replaces pixel comparison).
 
@@ -164,50 +179,41 @@ def phash(df: DataFrame, out_w: int = 8, out_h: int = 6,
         for pdf in batches:
             ids, hs, nb = [], [], []
             for did, payload, meta in zip(
-                pdf[id_col].values, pdf["payload"].values, pdf["meta"].values
+                pdf["doc_id"].values, pdf["payload"].values, pdf["meta"].values
             ):
-                arr = decode_stub(bytes(payload), meta["modality"], fake=fake)
-                h, w = int(meta["height"]), int(meta["width"])
-                img = np.resize(arr, (h, w)).astype(np.int64)
-                ys = (np.arange(h) * out_h) // h
-                xs = (np.arange(w) * out_w) // w
-                sums = np.zeros((out_h, out_w), dtype=np.int64)
-                cnts = np.zeros((out_h, out_w), dtype=np.int64)
-                np.add.at(sums, (ys[:, None], xs[None, :]), img)
-                np.add.at(cnts, (ys[:, None], xs[None, :]), 1)
+                img, sums, cnts = _pool(payload, meta, np.int64)
                 tot_s, tot_c = int(img.sum()), int(img.size)
                 bits = (sums * tot_c) > (tot_s * cnts)
                 val = 0
-                for by in range(out_h):
-                    for bx in range(out_w):
+                for by in range(POOL_H):
+                    for bx in range(POOL_W):
                         if bits[by, bx]:
-                            val |= 1 << (by * out_w + bx)
+                            val |= 1 << (by * POOL_W + bx)
                 ids.append(did)
                 hs.append(val)
                 nb.append(int(bits.sum()))
-            yield pd.DataFrame({id_col: ids, "phash": hs, "n_bits": nb})
+            yield pd.DataFrame({"doc_id": ids, "phash": hs, "n_bits": nb})
 
-    return df.mapInPandas(
-        _hash, schema=f"{id_col} long, phash long, n_bits int"
-    )
+    return df.mapInPandas(_hash, schema="doc_id long, phash long, n_bits int")
 
 
-def frame_sample(df: DataFrame, every_n: int = 10, id_col: str = "doc_id") -> DataFrame:
-    """Frame-sampling stage shape: one payload -> N frame rows (1->N
-    explode through mapInPandas, like video frame extraction)."""
+def frame_sample(df: DataFrame) -> DataFrame:
+    """Frame-sampling stage shape: one payload -> one row per FRAME_BYTES
+    bytes (1->N explode through mapInPandas, like video frame
+    extraction)."""
     def sample(batches):
         for pdf in batches:
             ids, frames, offsets = [], [], []
-            for did, payload in zip(pdf[id_col].values, pdf["payload"].values):
+            for did, payload in zip(pdf["doc_id"].values, pdf["payload"].values):
                 raw = bytes(payload)
-                for off in range(0, len(raw), every_n):
+                for off in range(0, len(raw), FRAME_BYTES):
                     ids.append(did)
                     offsets.append(off)
-                    frames.append(raw[off:off + every_n])
-            yield pd.DataFrame({id_col: ids, "frame_off": offsets, "frame": frames})
+                    frames.append(raw[off:off + FRAME_BYTES])
+            yield pd.DataFrame({"doc_id": ids, "frame_off": offsets, "frame": frames})
 
-    return df.select(id_col, "payload").mapInPandas(
-        sample, schema=f"{id_col} long, frame_off int, frame binary"
+    return df.select("doc_id", "payload").mapInPandas(
+        sample, schema="doc_id long, frame_off int, frame binary"
     )
 
 
@@ -215,7 +221,7 @@ AUDIO_FRAME = 64         # samples per analysis frame
 AUDIO_MAX_FRAMES = 4     # analyze the first N complete frames
 
 
-def audio_frame_energy(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def audio_frame_energy(df: DataFrame) -> DataFrame:
     """Audio-analysis stage shape: payload -> PCM samples (stubbed
     decode: raw bytes as uint8 amplitudes) -> framewise RMS energy over
     the first 4 complete 64-sample frames, via Arrow-batched mapInPandas
@@ -229,7 +235,7 @@ def audio_frame_energy(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
         for pdf in batches:
             ids, fidx, rms = [], [], []
             for did, payload, meta in zip(
-                pdf[id_col].values, pdf["payload"].values, pdf["meta"].values
+                pdf["doc_id"].values, pdf["payload"].values, pdf["meta"].values
             ):
                 arr = decode_stub(bytes(payload), meta["modality"], fake=True)
                 n_frames = min(AUDIO_MAX_FRAMES, len(arr) // AUDIO_FRAME)
@@ -239,8 +245,8 @@ def audio_frame_energy(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                     ids.append(did)
                     fidx.append(f)
                     rms.append(_round_half_away(e, 6))
-            yield pd.DataFrame({id_col: ids, "frame_idx": fidx, "rms": rms})
+            yield pd.DataFrame({"doc_id": ids, "frame_idx": fidx, "rms": rms})
 
     return df.mapInPandas(
-        energies, schema=f"{id_col} long, frame_idx int, rms double"
+        energies, schema="doc_id long, frame_idx int, rms double"
     )

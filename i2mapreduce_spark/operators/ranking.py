@@ -3,9 +3,9 @@
 An unpartitioned ``Window.orderBy(...)`` moves EVERY row to one task —
 the classic scale-killer Spark itself warns about ("No Partition Defined
 for Window operation").  For a unique total order the global rank is
-computable fully distributed with the chunked-offset construction the
-incremental engine already uses for deterministic event chunking
-(streaming/incremental.py:chunk_events):
+computable fully distributed with a chunked-offset construction (the
+incremental engine's deterministic event chunking,
+streaming/incremental.py:chunk_events, ranks with it too):
 
 1. ``repartitionByRange`` on the order key — rows land in globally
    ordered, parallel range partitions;
@@ -23,7 +23,12 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-__all__ = ["global_row_number", "global_running_sum", "global_running_max_excl"]
+__all__ = [
+    "global_row_number",
+    "global_row_number_and_count",
+    "global_running_sum",
+    "global_running_max_excl",
+]
 
 
 def _chunk_offsets(
@@ -33,7 +38,7 @@ def _chunk_offsets(
     fold,
     init,
     num_partitions: int | None,
-) -> tuple[DataFrame, dict[str, Column]]:
+) -> tuple[DataFrame, dict[str, Column], dict]:
     """The chunked-offset steps shared by every operator here.
 
     Range-partitions ``df`` on ``order_cols``, sorts each partition,
@@ -45,7 +50,8 @@ def _chunk_offsets(
     returned column per name holds, keyed by ``_pid``, the fold over all
     EARLIER partitions, cast to the partial's own type (a bare literal
     would truncate double/decimal maxima, and a None offset would break
-    the map's value-type inference).
+    the map's value-type inference).  The last dict holds the fold over
+    ALL partitions per name, as a driver-side value.
 
     The ids are pinned by a plain ``localCheckpoint`` (executor blocks,
     lost with their executor).  No option selects a reliable
@@ -64,7 +70,7 @@ def _chunk_offsets(
         *[agg.alias(name) for name, agg in partials.items()]
     )
     rows = sorted(per_pid.collect(), key=lambda r: r["_pid"])
-    offsets = {}
+    offsets, totals = {}, {}
     for name in partials:
         val_type = per_pid.schema[name].dataType
         pairs, acc = [], init
@@ -72,7 +78,8 @@ def _chunk_offsets(
             pairs += [F.lit(r["_pid"]), F.lit(acc).cast(val_type)]
             acc = fold(acc, r[name])
         offsets[name] = F.element_at(F.create_map(*pairs), F.col("_pid"))
-    return ranged, offsets
+        totals[name] = acc
+    return ranged, offsets, totals
 
 
 def _add(acc, t):
@@ -89,13 +96,25 @@ def global_row_number(
     """Append 1-based global ``row_number`` under ``order_cols`` (must be
     a unique total order for determinism) as ``out_col``: the local
     ``row_number`` plus the row count of all earlier partitions."""
-    ranged, off = _chunk_offsets(
+    return global_row_number_and_count(df, order_cols, out_col, num_partitions)[0]
+
+
+def global_row_number_and_count(
+    df: DataFrame,
+    order_cols: list[str],
+    out_col: str,
+    num_partitions: int | None,
+) -> tuple[DataFrame, int]:
+    """:func:`global_row_number` and the row count of ``df``, which the
+    per-partition counts already hold on the driver (no extra job)."""
+    ranged, off, total = _chunk_offsets(
         df, order_cols, {"cnt": F.count("*")}, _add, 0, num_partitions
     )
     wp = Window.partitionBy("_pid").orderBy(*order_cols)
-    return ranged.withColumn(
+    ranked = ranged.withColumn(
         out_col, (F.row_number().over(wp) + off["cnt"]).cast("long")
     ).drop("_pid")
+    return ranked, total["cnt"]
 
 
 def global_running_sum(
@@ -115,7 +134,7 @@ def global_running_sum(
     addition is associative (use only exact-typed columns here — float
     prefix sums would be boundary-dependent).
     """
-    ranged, off = _chunk_offsets(
+    ranged, off, _ = _chunk_offsets(
         df, order_cols, {c: F.sum(c) for c in sum_cols}, _add, 0, num_partitions
     )
     wp = (
@@ -148,7 +167,7 @@ def global_running_max_excl(
     def fold_max(acc, t):
         return t if acc is None or (t is not None and t > acc) else acc
 
-    ranged, off = _chunk_offsets(
+    ranged, off, _ = _chunk_offsets(
         df, order_cols, {"mx": F.max(max_col)}, fold_max, None, num_partitions
     )
     wp = (

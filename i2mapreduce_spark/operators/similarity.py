@@ -42,8 +42,7 @@ LSH_TABLES = 16
 LSH_SEED = 42
 
 
-def _block_pair_grouped(emb_df: DataFrame, id_col: str, vec_col: str,
-                        extra_cols: tuple) -> DataFrame:
+def _block_pair_grouped(emb_df: DataFrame, extra_cols: tuple) -> DataFrame:
     """Tag each row with its id-block and explode it to every (gi <= gj)
     block pair it participates in, with a `side` marker (0 = the row
     belongs to block gi, 1 = to block gj; diagonal pairs carry each row
@@ -55,9 +54,9 @@ def _block_pair_grouped(emb_df: DataFrame, id_col: str, vec_col: str,
     Exchanges.  Rows with a NULL id or a NULL vector are dropped: neither
     can be scored.  The corpus is never collected."""
     e = (
-        emb_df.select(id_col, vec_col, *extra_cols)
-        .withColumn("_g", F.pmod(F.col(id_col), F.lit(N_BLOCKS)).cast("int"))
-        .filter(F.col("_g").isNotNull() & F.col(vec_col).isNotNull())
+        emb_df.select("vec_id", "embedding", *extra_cols)
+        .withColumn("_g", F.pmod(F.col("vec_id"), F.lit(N_BLOCKS)).cast("int"))
+        .filter(F.col("_g").isNotNull() & F.col("embedding").isNotNull())
     )
     pair_expr = F.expr(
         f"transform(sequence(0, {N_BLOCKS - 1}), h -> "
@@ -65,8 +64,8 @@ def _block_pair_grouped(emb_df: DataFrame, id_col: str, vec_col: str,
         "if(_g <= h, 0, 1) AS side))"
     )
     return e.select(
-        F.explode(pair_expr).alias("_p"), id_col, vec_col, *extra_cols
-    ).select("_p.gi", "_p.gj", "_p.side", id_col, vec_col, *extra_cols)
+        F.explode(pair_expr).alias("_p"), "vec_id", "embedding", *extra_cols
+    ).select("_p.gi", "_p.gj", "_p.side", "vec_id", "embedding", *extra_cols)
 
 
 def _split_sides(key, pdf: pd.DataFrame):
@@ -78,15 +77,15 @@ def _split_sides(key, pdf: pd.DataFrame):
     return False, pdf[mask], pdf[~mask]
 
 
-def _norm_rows(pdf: pd.DataFrame, vec_col: str) -> np.ndarray:
-    M = np.stack(pdf[vec_col].values).astype(np.float64)
+def _norm_rows(pdf: pd.DataFrame) -> np.ndarray:
+    M = np.stack(pdf["embedding"].values).astype(np.float64)
     n = np.linalg.norm(M, axis=1, keepdims=True)
     n[n == 0] = 1.0
     return M / n
 
 
-def _block_pair_cosine(emb_df: DataFrame, id_col: str, vec_col: str,
-                       schema: str, emit, extra_cols: tuple = ()) -> DataFrame:
+def _block_pair_cosine(emb_df: DataFrame, schema: str, emit,
+                       extra_cols: tuple = ()) -> DataFrame:
     """The exact all-pairs driver: every block pair lands once on an
     executor, which normalises both sides, forms S = Ln @ Rn.T and hands
     `emit(S, lpdf, rpdf, same_block)` the pandas frame of rows to return
@@ -98,12 +97,12 @@ def _block_pair_cosine(emb_df: DataFrame, id_col: str, vec_col: str,
         same_block, lpdf, rpdf = _split_sides(key, pdf)
         if len(lpdf) == 0 or len(rpdf) == 0:
             return empty
-        Ln = _norm_rows(lpdf, vec_col)
-        S = Ln @ (Ln if same_block else _norm_rows(rpdf, vec_col)).T
+        Ln = _norm_rows(lpdf)
+        S = Ln @ (Ln if same_block else _norm_rows(rpdf)).T
         return emit(S, lpdf, rpdf, same_block)
 
     return (
-        _block_pair_grouped(emb_df, id_col, vec_col, extra_cols)
+        _block_pair_grouped(emb_df, extra_cols)
         .groupBy("gi", "gj")
         .applyInPandas(kernel, schema=schema)
     )
@@ -132,8 +131,7 @@ def _ordered(lv: np.ndarray, rv: np.ndarray, li, rj, swap):
     return np.where(swap, rv[rj], lv[li]), np.where(swap, lv[li], rv[rj])
 
 
-def cosine_topk(spark: SparkSession, emb_df: DataFrame, k: int = 5,
-                id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def cosine_topk(spark: SparkSession, emb_df: DataFrame, k: int = 5) -> DataFrame:
     """Exact top-k cosine neighbors per vector among ids > own id.
 
     Output: (vec_id, nbr, sim) with sim rounded to 4dp; deterministic
@@ -144,8 +142,8 @@ def cosine_topk(spark: SparkSession, emb_df: DataFrame, k: int = 5,
     the union of per-block-pair top-ks.
     """
     def emit(S, lpdf, rpdf, same_block):
-        lid = lpdf[id_col].values
-        rid = rpdf[id_col].values
+        lid = lpdf["vec_id"].values
+        rid = rpdf["vec_id"].values
         out_v, out_n, out_s = [], [], []
 
         def emit_topk(q_ids, c_ids, sims_qc):
@@ -180,41 +178,36 @@ def cosine_topk(spark: SparkSession, emb_df: DataFrame, k: int = 5,
             "sim": np.concatenate(out_s),
         })
 
-    cand = _block_pair_cosine(emb_df, id_col, vec_col,
-                              "vec_id long, nbr long, sim double", emit)
+    cand = _block_pair_cosine(emb_df, "vec_id long, nbr long, sim double", emit)
     return _topk(cand, k).select("vec_id", "nbr", F.round("sim", 4).alias("sim"))
 
 
-def cosine_threshold_pairs(spark: SparkSession, emb_df: DataFrame, threshold: float,
-                           label_col: str = "label", id_col: str = "vec_id",
-                           vec_col: str = "embedding") -> DataFrame:
+def cosine_threshold_pairs(spark: SparkSession, emb_df: DataFrame,
+                           threshold: float) -> DataFrame:
     """Count pairs with cosine >= threshold, grouped by (label_a, label_b)
     where a is the smaller vec_id.  Same block-pair kernel, fully
     vectorized emission (2-D nonzero, no per-row python loop)."""
     def emit(S, lpdf, rpdf, same_block):
-        hits = _threshold_hits(S, lpdf[id_col].values, rpdf[id_col].values,
+        hits = _threshold_hits(S, lpdf["vec_id"].values, rpdf["vec_id"].values,
                                threshold, same_block)
-        la, lb = _ordered(lpdf[label_col].values, rpdf[label_col].values, *hits)
+        la, lb = _ordered(lpdf["label"].values, rpdf["label"].values, *hits)
         return pd.DataFrame({"label_a": la, "label_b": lb})
 
-    pairs = _block_pair_cosine(emb_df, id_col, vec_col,
-                               "label_a int, label_b int", emit, (label_col,))
+    pairs = _block_pair_cosine(emb_df, "label_a int, label_b int", emit, ("label",))
     return pairs.groupBy("label_a", "label_b").agg(F.count("*").alias("n_pairs"))
 
 
-def cosine_pairs(spark: SparkSession, emb_df: DataFrame, threshold: float,
-                 id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def cosine_pairs(spark: SparkSession, emb_df: DataFrame, threshold: float) -> DataFrame:
     """All pairs (a < b) with cosine >= threshold: (a, b, sim) rounded 4dp.
     Same block-pair kernel as cosine_topk; at 100 TB the LSH/IVF candidate
     generators replace exact all-pairs and this becomes their re-scorer."""
     def emit(S, lpdf, rpdf, same_block):
-        lid, rid = lpdf[id_col].values, rpdf[id_col].values
+        lid, rid = lpdf["vec_id"].values, rpdf["vec_id"].values
         li, rj, swap = _threshold_hits(S, lid, rid, threshold, same_block)
         a, b = _ordered(lid, rid, li, rj, swap)
         return pd.DataFrame({"a": a, "b": b, "sim": np.round(S[li, rj], 4)})
 
-    return _block_pair_cosine(emb_df, id_col, vec_col,
-                              "a long, b long, sim double", emit)
+    return _block_pair_cosine(emb_df, "a long, b long, sim double", emit)
 
 
 def embedding_dedup_groups(spark: SparkSession, emb_df: DataFrame,
@@ -245,8 +238,7 @@ def embedding_dedup_groups(spark: SparkSession, emb_df: DataFrame,
     )
 
 
-def _score_id_pairs(cand: DataFrame, emb_df: DataFrame,
-                    id_col: str, vec_col: str) -> DataFrame:
+def _score_id_pairs(cand: DataFrame, emb_df: DataFrame) -> DataFrame:
     """Exact cosine for an id-pair candidate frame (vec_id, nbr).
 
     The ANN candidate generators ship ONLY ids through their bucket/cell
@@ -259,7 +251,7 @@ def _score_id_pairs(cand: DataFrame, emb_df: DataFrame,
     two vectors into Python — ~1 KB x candidates of pure transfer — and
     measured 10x slower on the sf1 fixture's 4.2M candidates (5.0s ->
     0.5s), with bit-identical scores (max |diff| 0.0 on those pairs)."""
-    v = emb_df.select(F.col(id_col).alias("__vid"), F.col(vec_col).alias("__v"))
+    v = emb_df.select(F.col("vec_id").alias("__vid"), F.col("embedding").alias("__v"))
     paired = (
         cand.join(v, cand["vec_id"] == v["__vid"])
         .select("vec_id", "nbr", F.col("__v").alias("va"))
@@ -290,8 +282,7 @@ def _topk(df: DataFrame, k: int) -> DataFrame:
 
 
 def _rescored_topk(spark: SparkSession, cand: DataFrame | None,
-                   emb_df: DataFrame, k: int, id_col: str,
-                   vec_col: str) -> DataFrame:
+                   emb_df: DataFrame, k: int) -> DataFrame:
     """The ANN kernels' shared tail: deduplicate the candidate (vec_id,
     nbr) pairs (nbr > vec_id; a pair met in several buckets or cells
     arrives once per meeting), score them exactly and keep each vector's
@@ -299,12 +290,11 @@ def _rescored_topk(spark: SparkSession, cand: DataFrame | None,
     if cand is None:
         return spark.createDataFrame([], "vec_id long, nbr long, sim double")
     cand = cand.dropDuplicates(["vec_id", "nbr"])
-    return _topk(_score_id_pairs(cand, emb_df, id_col, vec_col), k)
+    return _topk(_score_id_pairs(cand, emb_df), k)
 
 
 def _topk_with_duplicate_collapse(spark: SparkSession, emb_df: DataFrame,
-                                  k: int, raw_kernel, id_col: str,
-                                  vec_col: str) -> DataFrame:
+                                  k: int, raw_kernel) -> DataFrame:
     """Exact-duplicate collapse around an ANN pair kernel.
 
     A duplicate-saturated corpus is the regime a training-data pipeline
@@ -364,8 +354,7 @@ def _topk_with_duplicate_collapse(spark: SparkSession, emb_df: DataFrame,
       payloads only.
     """
     members = duplicate_groups(
-        emb_df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__vec")),
-        "vec_id", "__vec", F.md5(F.to_json(F.col("__vec"))),
+        emb_df, "vec_id", "embedding", F.md5(F.to_json(F.col("embedding")))
     )
 
     # 2. within-group twins: next-k larger ids at sim 1.0
@@ -383,10 +372,7 @@ def _topk_with_duplicate_collapse(spark: SparkSession, emb_df: DataFrame,
     )
 
     # 3. ANN over unique representatives only
-    reps = (
-        members.filter(F.col("idx") == 0)
-        .select(F.col("vec_id").alias(id_col), F.col("__vec").alias(vec_col))
-    )
+    reps = members.filter(F.col("idx") == 0).select("vec_id", "embedding")
     # 2k, not k: slack for the member-level id-order filter in step 4
     rep_pairs = raw_kernel(reps, 2 * k)  # (vec_id=q_rep, nbr=n_rep, sim), nbr > vec_id
 
@@ -414,8 +400,7 @@ def _topk_with_duplicate_collapse(spark: SparkSession, emb_df: DataFrame,
 
 
 def cosine_topk_ivf(spark: SparkSession, emb_df: DataFrame, k: int = 5,
-                    n_probe: int | None = None,
-                    id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+                    n_probe: int | None = None) -> DataFrame:
     """Approximate top-k via IVF (inverted-file) partitioning — the other
     standard ANN scale path next to LSH: spherical k-means splits the
     space into n_lists cells; each query probes only its `n_probe`
@@ -454,16 +439,13 @@ def cosine_topk_ivf(spark: SparkSession, emb_df: DataFrame, k: int = 5,
     return _topk_with_duplicate_collapse(
         spark, emb_df, k,
         lambda reps, kk: _rescored_topk(
-            spark, _ivf_candidates(spark, reps, n_probe, id_col, vec_col),
-            reps, kk, id_col, vec_col,
+            spark, _ivf_candidates(spark, reps, n_probe), reps, kk
         ),
-        id_col, vec_col,
     )
 
 
 def _ivf_candidates(spark: SparkSession, emb_df: DataFrame,
-                    n_probe: int | None, id_col: str,
-                    vec_col: str) -> DataFrame | None:
+                    n_probe: int | None) -> DataFrame | None:
     """cosine_topk_ivf's candidate generator: (vec_id, nbr) for every
     member nbr > vec_id of a cell vec_id probes, repeated once per
     shared cell; None on an empty corpus."""
@@ -471,7 +453,9 @@ def _ivf_candidates(spark: SparkSession, emb_df: DataFrame,
     if n_probe is None:
         n_probe = max(4, int(n_lists).bit_length() - 1)
     # --- train on a deterministic sample (smallest ids), spherical k-means
-    sample = emb_df.orderBy(id_col).limit(max(64, n_lists * 8)).select(vec_col).collect()
+    sample = (
+        emb_df.orderBy("vec_id").limit(max(64, n_lists * 8)).select("embedding").collect()
+    )
     if not sample:
         return None
     S = np.stack([np.asarray(r[0], dtype=np.float64) for r in sample])
@@ -497,11 +481,11 @@ def _ivf_candidates(spark: SparkSession, emb_df: DataFrame,
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            A = np.stack(pdf[vec_col].values).astype(np.float64)
+            A = np.stack(pdf["embedding"].values).astype(np.float64)
             A /= np.maximum(np.linalg.norm(A, axis=1, keepdims=True), 1e-12)
             sims = A @ cen.T
             order = np.argsort(-sims, axis=1, kind="stable")[:, :n_probe]
-            ids = pdf[id_col].values
+            ids = pdf["vec_id"].values
             yield pd.DataFrame({
                 "vec_id": np.repeat(ids, n_probe),
                 "cell": order.reshape(-1).astype(np.int32),
@@ -512,7 +496,7 @@ def _ivf_candidates(spark: SparkSession, emb_df: DataFrame,
     # id-only placement: the cell-keyed exchange carries (id, cell, flag)
     # rows — candidate row width is independent of n_probe and dim; the
     # full vectors are joined back exactly once, after candidate dedup
-    placed = emb_df.select(id_col, vec_col).mapInPandas(
+    placed = emb_df.select("vec_id", "embedding").mapInPandas(
         assign, schema="vec_id long, cell int, is_probe boolean"
     )
     members = placed.filter(~F.col("is_probe")).select(
@@ -527,8 +511,7 @@ def _ivf_candidates(spark: SparkSession, emb_df: DataFrame,
 
 
 def cosine_topk_lsh(spark: SparkSession, emb_df: DataFrame, k: int = 5,
-                    n_flip: int | None = None,
-                    id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+                    n_flip: int | None = None) -> DataFrame:
     """Approximate top-k via random-hyperplane LSH: the 100TB scale path.
 
     Each of LSH_TABLES tables hashes a vector to a signature bucket (sign
@@ -577,10 +560,8 @@ def cosine_topk_lsh(spark: SparkSession, emb_df: DataFrame, k: int = 5,
     return _topk_with_duplicate_collapse(
         spark, emb_df, k,
         lambda reps, kk: _rescored_topk(
-            spark, _lsh_candidates(spark, reps, n_flip, id_col, vec_col),
-            reps, kk, id_col, vec_col,
+            spark, _lsh_candidates(spark, reps, n_flip), reps, kk
         ),
-        id_col, vec_col,
     )
 
 
@@ -592,15 +573,14 @@ def _lsh_layout(n_vectors: int) -> tuple[int, int]:
 
 
 def _lsh_candidates(spark: SparkSession, emb_df: DataFrame,
-                    n_flip: int | None, id_col: str,
-                    vec_col: str) -> DataFrame | None:
+                    n_flip: int | None) -> DataFrame | None:
     """cosine_topk_lsh's candidate generator: (vec_id, nbr) with vec_id <
     nbr for every probe/member pair sharing a (table, bucket), once per
     shared bucket; None on an empty corpus."""
     n_planes, auto_flip = _lsh_layout(emb_df.count())
     if n_flip is None:
         n_flip = auto_flip
-    probe_row = emb_df.select(vec_col).first()
+    probe_row = emb_df.select("embedding").first()
     if probe_row is None:
         return None
     dim = len(probe_row[0])
@@ -617,8 +597,8 @@ def _lsh_candidates(spark: SparkSession, emb_df: DataFrame,
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            A = np.stack(pdf[vec_col].values).astype(np.float64)
-            ids = pdf[id_col].values
+            A = np.stack(pdf["embedding"].values).astype(np.float64)
+            ids = pdf["vec_id"].values
             T = pl.shape[0]
             proj = np.einsum("nd,tpd->tnp", A, pl)  # (T, n, n_planes)
             home = (proj > 0).dot(w)  # (T, n)
@@ -645,7 +625,7 @@ def _lsh_candidates(spark: SparkSession, emb_df: DataFrame,
     # id-only signatures: the bucket-keyed probe/member join exchanges
     # (id, table, bucket) rows — width independent of the table count and
     # dim; vectors are joined back once after candidate dedup
-    sig = emb_df.select(id_col, vec_col).mapInPandas(
+    sig = emb_df.select("vec_id", "embedding").mapInPandas(
         signatures, schema="vec_id long, table int, bucket long, is_probe boolean"
     )
     members = sig.filter(~F.col("is_probe")).drop("is_probe")

@@ -21,19 +21,19 @@ STOPWORDS = ("a", "the", "row", "value", "table")
 TOKEN_REGEX = "[a-z]+|[0-9]+|[^a-z0-9 ]"
 
 
-def token_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def token_stats(df: DataFrame) -> DataFrame:
     """Whitespace-token and regex-token counts per document."""
-    ws_toks = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
-    re_toks = F.regexp_extract_all(F.col(text_col), F.lit(TOKEN_REGEX), 0)
+    ws_toks = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+    re_toks = F.regexp_extract_all(F.col("text"), F.lit(TOKEN_REGEX), 0)
     return df.select(
-        F.col(id_col),
+        "doc_id",
         F.size(ws_toks).alias("n_ws_tokens"),
         F.size(re_toks).alias("n_re_tokens"),
-        F.length(text_col).alias("n_chars"),
+        F.length("text").alias("n_chars"),
     )
 
 
-def quality_score(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def quality_score(df: DataFrame) -> DataFrame:
     """Heuristic quality score from length / token-shape / stopword ratios.
 
     score = ln(1+n_tok) * (1-stop_ratio) * min(avg_token_len/6, 1).
@@ -43,16 +43,16 @@ def quality_score(df: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     counts <= 99 any terminating ratio has <= 6 decimals (worst case /64),
     so scale-6 rounding is the identity — again no ties.
     """
-    toks = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
+    toks = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
     n_tok = F.size(toks)
     n_stop = F.size(F.filter(toks, lambda x: x.isin(*STOPWORDS)))
-    avg_len = (F.length(text_col) - (n_tok - 1)).cast("double") / n_tok
+    avg_len = (F.length("text") - (n_tok - 1)).cast("double") / n_tok
     stop_ratio = n_stop.cast("double") / n_tok
     score = F.log(1 + n_tok.cast("double")) * (1 - stop_ratio) * F.least(
         avg_len / 6, F.lit(1.0)
     )
     return df.select(
-        F.col(id_col),
+        "doc_id",
         n_tok.alias("n_tokens"),
         F.round(stop_ratio, 6).alias("stop_ratio"),
         F.round(avg_len, 6).alias("avg_token_len"),
@@ -74,7 +74,7 @@ _LANG_PROFILES = {
 }
 
 
-def lang_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def lang_id(df: DataFrame) -> DataFrame:
     """Char-trigram language guess (deterministic tie-break by lang code).
 
     mapInPandas: Arrow batches in, one (id, lang_guess, score) row per doc.
@@ -82,7 +82,7 @@ def lang_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
     def guess(batches):
         for pdf in batches:
             out_id, out_lang, out_score = [], [], []
-            for did, text in zip(pdf[id_col].values, pdf[text_col].values):
+            for did, text in zip(pdf["doc_id"].values, pdf["text"].values):
                 if text is None:
                     continue  # missing document: no language to guess
                 tri = {text[i:i + 3] for i in range(max(len(text) - 2, 0))}
@@ -95,11 +95,11 @@ def lang_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
                 out_lang.append(best_lang)
                 out_score.append(best)
             yield pd.DataFrame(
-                {id_col: out_id, "lang_guess": out_lang, "score": out_score}
+                {"doc_id": out_id, "lang_guess": out_lang, "score": out_score}
             )
 
-    return df.select(id_col, text_col).mapInPandas(
-        guess, schema=f"{id_col} long, lang_guess string, score int"
+    return df.select("doc_id", "text").mapInPandas(
+        guess, schema="doc_id long, lang_guess string, score int"
     )
 
 
@@ -116,7 +116,7 @@ def _token_int(tok: str) -> int:
     return int.from_bytes(hashlib.md5(tok.encode()).digest()[8:], "little")
 
 
-def fingerprint(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def fingerprint(df: DataFrame) -> DataFrame:
     """Order-sensitive polynomial rolling hash over tokens:
     fp = sum(tok_int_i * BASE^i) mod (2^61-1).  Token ints come from md5
     (stable across processes — python hash() is salted and must never be
@@ -125,7 +125,7 @@ def fingerprint(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     def roll(batches):
         for pdf in batches:
             ids, fps = [], []
-            for did, text in zip(pdf[id_col].values, pdf[text_col].values):
+            for did, text in zip(pdf["doc_id"].values, pdf["text"].values):
                 if text is None:
                     continue  # missing document: no fingerprint
                 acc, power = 0, 1
@@ -134,8 +134,6 @@ def fingerprint(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
                     power = (power * _FP_BASE) % _FP_MOD
                 ids.append(did)
                 fps.append(acc)
-            yield pd.DataFrame({id_col: ids, "fp": fps})
+            yield pd.DataFrame({"doc_id": ids, "fp": fps})
 
-    return df.select(id_col, text_col).mapInPandas(
-        roll, schema=f"{id_col} long, fp long"
-    )
+    return df.select("doc_id", "text").mapInPandas(roll, schema="doc_id long, fp long")

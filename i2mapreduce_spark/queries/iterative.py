@@ -135,7 +135,7 @@ def q_iter_apriori_triples(spark, sf_dir):
     level-wise pruning must not change the answer, only the work."""
     load_tables(spark, sf_dir)
     levels = algorithms.apriori_levels(
-        spark.table("baskets"), min_support=APRIORI_TRIPLE_SUPPORT, max_k=3
+        spark.table("baskets"), min_support=APRIORI_TRIPLE_SUPPORT
     )
     return levels[3].select(
         F.element_at("items", 1).alias("item1"),

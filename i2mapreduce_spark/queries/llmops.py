@@ -252,7 +252,7 @@ def q_multimodal_extract(spark, sf_dir):
     (mod-16 byte histogram, L2-normalized) is reconstructed in SQL."""
     load_tables(spark, sf_dir)
     wrapped = multimodal.attach_binary_payload(spark.table("documents"))
-    feats = multimodal.extract_features(wrapped, dim=16, fake=True)
+    feats = multimodal.extract_features(wrapped)
     # feature values are already rounded 6dp in the kernel; re-rounding to
     # 4dp here would double-round (the 6dp value can sit exactly on a 4dp
     # tie, which engines break differently — observed at sf0.001)
@@ -274,7 +274,7 @@ def q_multimodal_frame_sample(spark, sf_dir):
     multimodal_extract."""
     load_tables(spark, sf_dir)
     wrapped = multimodal.attach_binary_payload(spark.table("documents"))
-    frames = multimodal.frame_sample(wrapped, every_n=10)
+    frames = multimodal.frame_sample(wrapped)
     # frames surface as HEX, not a string cast: a byte slice can split a
     # multibyte code point, and casting invalid UTF-8 to string is
     # engine-fragile — hex is exact for any payload (r8 unicode sweep)
@@ -288,7 +288,7 @@ def q_multimodal_resize(spark, sf_dir):
     stage).  Rows-only; determinism + range invariants in pytest."""
     load_tables(spark, sf_dir)
     wrapped = multimodal.attach_binary_payload(spark.table("documents"))
-    return multimodal.resize(wrapped, out_w=8, out_h=6, fake=True)
+    return multimodal.resize(wrapped)
 
 
 
@@ -300,7 +300,7 @@ def q_multimodal_phash(spark, sf_dir):
     like multimodal_resize."""
     load_tables(spark, sf_dir)
     wrapped = multimodal.attach_binary_payload(spark.table("documents"))
-    return multimodal.phash(wrapped, out_w=8, out_h=6, fake=True)
+    return multimodal.phash(wrapped)
 
 
 CONTAINMENT_THRESHOLD = 0.9
@@ -321,7 +321,7 @@ def q_dedup_containment(spark, sf_dir):
     sh = dedup.shingles(spark.table("documents"), n=3)
     containment = _containment()
     return (
-        dedup.shingle_overlap(sh, "doc_id")
+        dedup.shingle_overlap(sh)
         .filter(containment >= CONTAINMENT_THRESHOLD)
         .select("d1", "d2", F.round(containment, 4).alias("containment"))
     )
@@ -702,7 +702,7 @@ def q_dedup_ensemble_vote(spark, sf_dir):
     load_tables(spark, sf_dir)
     d = spark.table("documents")
     sh = dedup.shingles(d, n=3)
-    scored = dedup.shingle_overlap(sh, "doc_id").select(
+    scored = dedup.shingle_overlap(sh).select(
         "d1", "d2",
         dedup.jaccard_score().alias("jac"),
         _containment().alias("cont"),

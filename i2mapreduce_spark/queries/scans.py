@@ -145,7 +145,7 @@ def q_source_text_kv(spark, sf_dir):
     order-insensitive totals so the hash check is layout-independent."""
     load_tables(spark, sf_dir)
     out = _scratch_dir("i2mr_text_") + "/docs"
-    formats.write_text(spark.table("documents"), out, text_col="text")
+    formats.write_text(spark.table("documents"), out)
     kv = formats.read_text_kv(spark, out)
     return kv.agg(
         F.count("*").alias("n_lines"),

@@ -21,8 +21,7 @@ from urllib.parse import urlparse
 from pyspark.sql import DataFrame, SparkSession
 
 
-def write_bucketed(df: DataFrame, table: str, n_buckets: int, *bucket_cols: str,
-                   sort: bool = True) -> None:
+def write_bucketed(df: DataFrame, table: str, n_buckets: int, *bucket_cols: str) -> None:
     """Persist as a bucketed (and bucket-sorted) managed table.
 
     Sorting within buckets lets sort-merge joins skip their Sort node
@@ -46,15 +45,18 @@ def write_bucketed(df: DataFrame, table: str, n_buckets: int, *bucket_cols: str,
             for f in os.listdir(stale)
         ):
             shutil.rmtree(stale, ignore_errors=True)
-    w = df.write.mode("overwrite").bucketBy(n_buckets, *bucket_cols)
-    if sort:
-        w = w.sortBy(*bucket_cols)
-    w.format("parquet").saveAsTable(table)
+    (
+        df.write.mode("overwrite")
+        .bucketBy(n_buckets, *bucket_cols)
+        .sortBy(*bucket_cols)
+        .format("parquet")
+        .saveAsTable(table)
+    )
 
 
 def bucketed_join(spark: SparkSession, left_table: str, right_table: str,
-                  on: list[str], how: str = "inner") -> DataFrame:
-    """Join two same-bucketed tables on their bucket key.  With
+                  on: list[str]) -> DataFrame:
+    """Inner-join two same-bucketed tables on their bucket key.  With
     bucketing.enabled (default) Catalyst plans NO Exchange on either
     side — asserted in tests/test_plans.py."""
-    return spark.table(left_table).join(spark.table(right_table), on, how)
+    return spark.table(left_table).join(spark.table(right_table), on)

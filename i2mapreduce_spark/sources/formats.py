@@ -24,10 +24,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 
-def write_text(df: DataFrame, path: str, text_col: str = "text") -> None:
-    """Sink one string column as newline-delimited text (A8's
+def write_text(df: DataFrame, path: str) -> None:
+    """Sink the `text` column as newline-delimited text (A8's
     TextOutputFormat)."""
-    df.select(text_col).write.mode("overwrite").text(path)
+    df.select("text").write.mode("overwrite").text(path)
 
 
 def read_text_kv(spark: SparkSession, path: str) -> DataFrame:

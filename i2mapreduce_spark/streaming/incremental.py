@@ -28,8 +28,8 @@ from collections.abc import Callable
 
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.window import Window
 
+from ..operators.ranking import global_row_number_and_count
 from ..plans.iterate import release_checkpoint
 
 __all__ = [
@@ -52,39 +52,16 @@ def chunk_events(
 
     Deterministic: exact ntile semantics over the total order
     (ts, event_id) — but computed WITHOUT a single-partition global
-    window.  The global rank of each row is per-partition row_number
-    (parallel) plus the cumulative count of earlier range partitions
-    (n_partitions scalars collected to the driver — bounded).  Because
-    (ts, event_id) is a unique total order, the rank — and therefore the
-    chunk — is independent of where the range boundaries land, so the
-    assignment is bit-identical to the old global-ntile one.  With
-    `late_every` set, events from the FIRST chunk whose event_id is
-    divisible by it are displaced into the LAST chunk — out-of-order
-    "late" arrivals for watermark tests.
+    window: the global rank is operators.ranking's chunked-offset
+    row_number, so the chunk is independent of where the range
+    boundaries land.  With `late_every` set, events from the FIRST chunk
+    whose event_id is divisible by it are displaced into the LAST chunk
+    — out-of-order "late" arrivals for watermark tests.
     """
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    ranged = (
-        events.repartitionByRange(n_part, "ts", "event_id")
-        .sortWithinPartitions("ts", "event_id")
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)  # pin partition ids with the data
+    ranked, total = global_row_number_and_count(
+        events, ["ts", "event_id"], "_rank", None
     )
-    counts = dict(
-        (r["_pid"], r["cnt"])
-        for r in ranged.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
-    )
-    total = sum(counts.values())
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    off_expr = F.element_at(
-        F.create_map(*[F.lit(x) for pid in sorted(offsets)
-                       for x in (pid, offsets[pid])]),
-        F.col("_pid"),
-    )
-    wp = Window.partitionBy("_pid").orderBy("ts", "event_id")
-    rank = (F.row_number().over(wp) - 1 + off_expr).cast("long")
+    rank = F.col("_rank") - 1
     # exact ntile(n) from the 0-based global rank: the first (total % n)
     # tiles get ceil(total/n) rows, the rest floor(total/n)
     q, rem = divmod(total, n)
@@ -92,7 +69,7 @@ def chunk_events(
     chunk = F.when(rank < big, (rank / (q + 1)).cast("int")).otherwise(
         (F.lit(rem) + (rank - big) / q).cast("int") if q else F.lit(n - 1)
     )
-    tiled = ranged.withColumn("_chunk", chunk).drop("_pid")
+    tiled = ranked.withColumn("_chunk", chunk).drop("_rank")
     if late_every:
         tiled = tiled.withColumn(
             "_chunk",
@@ -265,18 +242,17 @@ def fold_delta_ops(
     delta: DataFrame,
     key_cols: list[str],
     sum_cols: dict[str, str],
-    op_col: str = "op",
     count_col: str = "n",
 ) -> DataFrame:
-    """A12's full delta-input contract: records tagged '+' (insert) or '-'
-    (delete).  Deletes RETRACT from the preserved state — the signed merge
+    """A12's full delta-input contract: records whose `op` column is '+'
+    (insert) or '-' (delete).  Deletes RETRACT from the preserved state — the signed merge
     the MRBG-Store performs when a record disappears from the input.
 
     Additive aggregates retract exactly (count -= 1, sum -= value); keys
     whose count reaches zero leave the state entirely, so a fully-deleted
     key is indistinguishable from one never seen — asserted in tests.
     """
-    sign = F.when(F.col(op_col) == "-", F.lit(-1)).otherwise(F.lit(1))
+    sign = F.when(F.col("op") == "-", F.lit(-1)).otherwise(F.lit(1))
     partial = delta.groupBy(*key_cols).agg(
         F.sum(sign).alias(count_col),
         *[F.sum(sign * F.col(src)).alias(dst) for dst, src in sum_cols.items()],

@@ -1,15 +1,7 @@
 """Custom keyed streaming state — the closest surface Spark has to the
 reference's MRBG-Store (A11): explicit per-key state read-merge-write on
-every arriving micro-batch.
-
-Two realizations:
-- `running_totals_transform` (primary): applyInPandasWithState — works on
-  the default HDFS-backed state store, no extra deps.
-- `RunningTotalsProcessor` (Spark 4 transformWithStateInPandas): the
-  newer StatefulProcessor API.  Its driver<->worker channel needs a
-  working google.protobuf, which this container lacks (ImportError at
-  stream start, verified) — kept behind `use_tws=True` for environments
-  that have it.  Same semantics either way; tests run the primary path.
+every arriving micro-batch, through applyInPandasWithState on the
+default HDFS-backed state store (no extra deps).
 
 Scale: state lives in the state store (RocksDB provider on clusters —
 off-heap, incrementally checkpointed); the function sees one key group
@@ -52,16 +44,9 @@ def _running_totals(key, pdf_iter, state: GroupState):
     yield pd.DataFrame({"user_id": [key[0]], "n_events": [n], "total_value": [total]})
 
 
-def running_totals_transform(stream: DataFrame, use_tws: bool = False) -> DataFrame:
+def running_totals_transform(stream: DataFrame) -> DataFrame:
     """Wire the stateful fold into a stream grouped by user (update mode:
     one refreshed row per user per micro-batch that touched it)."""
-    if use_tws:
-        return stream.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=RunningTotalsProcessor(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
     return stream.groupBy("user_id").applyInPandasWithState(
         _running_totals,
         outputStructType=OUTPUT_SCHEMA,
@@ -69,32 +54,6 @@ def running_totals_transform(stream: DataFrame, use_tws: bool = False) -> DataFr
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-try:  # Spark 4 StatefulProcessor API (needs protobuf at stream runtime)
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class RunningTotalsProcessor(StatefulProcessor):
-        """transformWithStateInPandas form of `_running_totals`."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("totals", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total = self._state.get() if self._state.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._state.update((n, total))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-            )
-
-        def close(self) -> None:
-            pass
-
-except ImportError:  # pragma: no cover - older builds
-    RunningTotalsProcessor = None
 
 
 # ---------------------------------------------------------------------------

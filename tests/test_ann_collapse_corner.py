@@ -81,7 +81,6 @@ def _collapsed(spark, emb):
     return similarity._topk_with_duplicate_collapse(
         spark, emb, K,
         raw_kernel=lambda reps, n: similarity.cosine_topk(spark, reps, k=n),
-        id_col="vec_id", vec_col="embedding",
     )
 
 

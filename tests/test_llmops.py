@@ -31,6 +31,22 @@ def test_minhash_lsh_finds_all_planted_near_dups(spark, sf_dir, docs):
     assert lsh == exact, f"missed={exact - lsh} spurious={lsh - exact}"
 
 
+def test_minhash_lsh_pairs_persists_one_rdd_per_call(spark, docs):
+    """A collected minhash_lsh_pairs call leaves exactly one persisted
+    RDD behind, the duplicate_groups checkpoint its collapse reads
+    several times; its shingle frame is not cached."""
+    jsc = spark.sparkContext._jsc
+    # ids, not the map's size: the context cleaner may unpersist RDDs of
+    # earlier tests meanwhile; holding each result keeps its own RDDs
+    kept, added = [], []
+    for _ in range(3):
+        before = set(jsc.getPersistentRDDs().keys())
+        kept.append(dedup.minhash_lsh_pairs(docs, 0.5))
+        kept[-1].collect()
+        added.append(len(set(jsc.getPersistentRDDs().keys()) - before))
+    assert added == [1, 1, 1], added
+
+
 def test_simhash_recalls_planted_near_dups(spark, sf_dir, docs):
     """SimHash is a candidate generator: on the planted jac>=0.9 pairs it
     must recall the large majority at hamming<=3 (measured 21/27 at
@@ -235,7 +251,7 @@ def test_multimodal_extract_deterministic(spark, sf_dir, docs):
 
 def test_multimodal_frame_sample_shape(spark, sf_dir, docs):
     wrapped = multimodal.attach_binary_payload(docs.limit(5))
-    frames = multimodal.frame_sample(wrapped, every_n=10).collect()
+    frames = multimodal.frame_sample(wrapped).collect()
     by_doc = {}
     for r in frames:
         by_doc.setdefault(r.doc_id, []).append(r)

@@ -14,6 +14,10 @@ Two repo-wide scale guards added after the round-3 review:
 A third guard keeps one fixpoint driver: a loop that checkpoints or
 releases by hand outside ``plans/iterate.py`` must be argued in
 ``APPROVED_LOOP_CHECKPOINTS``.
+
+A fourth keeps the operator layer's signatures to what callers vary: a
+defaulted column-name option must name, in ``APPROVED_COLUMN_OPTIONS``,
+the caller that sets it to another column.
 """
 
 from __future__ import annotations
@@ -206,6 +210,56 @@ def test_every_forced_broadcast_is_on_a_bounded_table():
         f"APPROVED_BROADCASTS or drop the hint: {sorted(new)}"
     )
     assert not gone, f"stale whitelist entries: {sorted(gone)}"
+
+
+#: the operator layer, whose column-name options are checked below
+_OPERATOR_LAYER = tuple(
+    f"i2mapreduce_spark/{d}/" for d in ("operators", "streaming", "sources", "functions")
+)
+
+
+def _defaulted_col_params(node) -> set[str]:
+    """Names of the defaulted ``*_col`` parameters of a def's arguments."""
+    if not isinstance(node, ast.arguments):
+        return set()
+    pos = node.posonlyargs + node.args
+    defaulted = pos[len(pos) - len(node.defaults):] + [
+        a for a, d in zip(node.kwonlyargs, node.kw_defaults) if d is not None
+    ]
+    return {a.arg for a in defaulted if a.arg.endswith("_col")}
+
+
+#: every defaulted column-name option of the operator layer, with the
+#: caller that sets it to another column.  A column no caller renames is
+#: the catalog's own name and a literal in the operator; a new option
+#: fails this test until a caller that varies it is named here.
+APPROVED_COLUMN_OPTIONS = {
+    ("i2mapreduce_spark/operators/algorithms.py", "gimv", "weight_col"),  # queries/iterative.py 'w' (default None: unweighted)
+    ("i2mapreduce_spark/operators/ranking.py", "global_row_number", "out_col"),  # queries/pipelines.py 'g', r7a_ops.py 'rk', mapred_q.py 'rnk'
+    ("i2mapreduce_spark/operators/ranking.py", "global_running_max_excl", "out_col"),  # tests/test_advice_r7.py 'pre'
+    ("i2mapreduce_spark/streaming/incremental.py", "fold_delta", "count_col"),  # queries/streaming_q.py 'n_events'
+    ("i2mapreduce_spark/streaming/incremental.py", "fold_delta_ops", "count_col"),  # queries/streaming_q.py 'n_events'
+}
+
+
+def test_operator_column_options_are_varied_by_a_caller():
+    # first walk: collect the option names (the match records and
+    # returns None, so it adds no site); then one walk per name
+    names: set[str] = set()
+    _sites(lambda node: names.update(_defaulted_col_params(node)))
+    found = {
+        (rel, fn, name)
+        for name in names
+        for rel, fn in _sites(lambda node, name=name: name in _defaulted_col_params(node))
+        if rel.startswith(_OPERATOR_LAYER)
+    }
+    new = found - APPROVED_COLUMN_OPTIONS
+    gone = APPROVED_COLUMN_OPTIONS - found
+    assert not new, (
+        "defaulted column-name option(s) no approved caller varies — use "
+        f"the catalog's column as a literal or name the caller: {sorted(new)}"
+    )
+    assert not gone, f"stale allowlist entries: {sorted(gone)}"
 
 
 def test_gini_rank_is_distributed(spark, sf_dir):

@@ -25,7 +25,7 @@ def test_ann_candidate_scoring_stays_jvm_side(spark):
     )
     cand = spark.createDataFrame([(1, 2), (3, 4)], "vec_id long, nbr long")
     plan = (
-        _score_id_pairs(cand, emb, "vec_id", "embedding")
+        _score_id_pairs(cand, emb)
         ._jdf.queryExecution().executedPlan().toString()
     )
     python_nodes = [

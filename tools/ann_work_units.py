@@ -44,8 +44,7 @@ def counts_for(spark, sf_dir: str) -> dict:
         F.max("gsize").alias("max_gsize"),
     ).collect()[0]
     n_uniq, max_gsize = gstats["uniq"], gstats["max_gsize"]
-    bucket_pairs = similarity._lsh_candidates(spark, reps, None, "vec_id",
-                                              "embedding")
+    bucket_pairs = similarity._lsh_candidates(spark, reps, None)
     if bucket_pairs is None:
         return {"sf_dir": sf_dir, "n_total": n_total, "n_uniq": 0}
     n_planes, n_flip = similarity._lsh_layout(n_uniq)

@@ -424,46 +424,86 @@ MIN_LABEL_ITERS = 64
 
 def _min_label_fixpoint(state0: DataFrame, edges: DataFrame,
                         dirs: dict[str, tuple[str, str]],
-                        iters: int) -> IterationResult:
-    """Min-label propagation with pointer doubling, run to its fixpoint.
+                        iters: int, warm: bool = False) -> IterationResult:
+    """Min-label propagation with pointer doubling, run to its fixpoint
+    over a changed set.
 
     `state0` holds `node` plus one label column per key of `dirs`; each
     label column maps to the edge columns a message leaves from and
-    arrives at (CC is `{"val": ("src", "dst")}`).  Each round (1) sends
-    every label along its direction and keeps least(old, min message)
-    (GIM-V combine2 = neighbor label, combineAll = min, assign = least),
-    then (2) shortcuts label <- label-of-label off one lookup table.  A
-    node's label is always a node it can reach along its direction, so
-    the label's own label is reachable too; the shortcut makes
-    convergence O(log diameter) instead of O(diameter).
+    arrives at (CC is `{"val": ("src", "dst")}`).  The state also carries
+    a `changed` flag, and the flagged rows are the FRONTIER.  Each round
+    (1) sends the labels of the frontier only along their directions and
+    keeps least(old, min message) (GIM-V combine2 = neighbor label,
+    combineAll = min, assign = least), then (2) shortcuts label <-
+    label-of-label over the whole state off one lookup table.  A node is
+    flagged for the next round when any of its labels fell, by message
+    or by jump.  A node's label is always a node it can reach along its
+    direction, so the label's own label is reachable too; the shortcut
+    makes convergence O(log diameter) instead of O(diameter).
 
-    Fixpoint check: labels only ever decrease, so the sum over all label
-    columns strictly decreases until the fixpoint — one aggregate scan
-    of the checkpointed state per round, exact over longs, no old ⋈ new
-    join.  The sum over an empty state is NULL and counts as 0, so an
-    empty graph stops after 2 rounds.  A cap that runs out raises: an
-    unconverged labeling splits components."""
+    Why the frontier suffices: an edge whose target's label is above its
+    source's always has a flagged source.  A source whose labels did not
+    fall last round sent them the round before, and targets' labels only
+    fall, so its messages would change nothing.  The labels therefore
+    move exactly as if every node sent every round.
+
+    Fixpoint check: the count of flagged nodes, one aggregate scan of the
+    checkpointed state per round; the loop stops at the first round that
+    flags none, so `deltas` are the frontier sizes after each round and a
+    converged run's last delta is 0.  A cold start flags every node.
+
+    `warm=True` is the incremental restart from a prior fixpoint under
+    edge ADDITIONS: `state0` is materialized once with only the nodes
+    flagged that leave an edge whose target holds a larger label —
+    while no edge leaves a flagged node, no label can fall.  When no
+    node is flagged, the checkpointed `state0` is the fixpoint: it is
+    returned after 0 rounds (`converged=True`) without calling
+    `iterate()`.
+
+    A cap that runs out raises: an unconverged labeling splits
+    components."""
     cols = list(dirs)
+    # a NULL node can neither send nor receive a label: it is no node
+    state0 = state0.filter(F.col("node").isNotNull())
+    if warm:
+        a, b, e = state0.alias("a"), state0.alias("b"), edges.alias("e")
+        seed = reduce(DataFrame.union, (
+            e.join(a, F.col(f"e.{frm}") == F.col("a.node"))
+            .join(b, F.col(f"e.{to}") == F.col("b.node"))
+            .filter(F.col(f"a.{c}") < F.col(f"b.{c}"))
+            .select(F.col("a.node").alias("node"))
+            for c, (frm, to) in dirs.items()
+        )).distinct().withColumn("changed", F.lit(True))
+        state0 = checkpoint_without_stats(
+            state0.join(seed, "node", "left")
+            .select("node", *cols, F.coalesce("changed", F.lit(False)).alias("changed")))
+    else:
+        state0 = state0.withColumn("changed", F.lit(True))
 
     def step(state: DataFrame, _i: int) -> DataFrame:
-        s, e = state.alias("s"), edges.alias("e")
+        s, e = state.filter("changed").alias("s"), edges.alias("e")
         aggs = [
             s.join(e, F.col("s.node") == F.col(f"e.{frm}"))
             .select(F.col(f"e.{to}").alias("node"), F.col(f"s.{c}").alias(f"m{c}"))
             .groupBy("node").agg(F.min(f"m{c}").alias(f"m{c}"))
             for c, (frm, to) in dirs.items()
         ]
-        prop = state.alias("s")
+        # No state row has a NULL node, but the jump's lookup side reads
+        # the state through the optimizer's inferred `node IS NOT NULL`;
+        # the same filter here lets both reads share one exchange (one job
+        # per round fewer).
+        prop = state.filter(F.col("node").isNotNull()).alias("s")
         for c, agg in zip(cols, aggs):
             prop = prop.join(agg.alias(f"a{c}"), "node", "left")
         prop = prop.select("node", *(
             F.least(F.col(f"s.{c}"),
                     F.coalesce(F.col(f"a{c}.m{c}"), F.col(f"s.{c}"))).alias(c)
             for c in cols
-        ))
+        ), *(F.col(f"s.{c}").alias(f"o_{c}") for c in cols))
         # pointer doubling (renamed columns make the self-join unambiguous)
         lut = prop.select(F.col("node").alias("l_node"),
                           *(F.col(c).alias(f"l_{c}") for c in cols))
+        keep = [*cols, *(f"o_{c}" for c in cols)]
         for c in cols:
             prop = (
                 prop.alias("p")
@@ -471,25 +511,24 @@ def _min_label_fixpoint(state0: DataFrame, edges: DataFrame,
                 .select(F.col("p.node").alias("node"), *(
                     F.coalesce(F.col(f"q.l_{k}"), F.col(f"p.{k}")).alias(k)
                     if k == c else F.col(f"p.{k}").alias(k)
-                    for k in cols
+                    for k in keep
                 ))
             )
-        return prop
+        fell = reduce(operator.or_, (F.col(c) < F.col(f"o_{c}") for c in cols))
+        return prop.select("node", *cols, fell.alias("changed"))
 
-    total = reduce(operator.add, (F.sum(c) for c in cols))
-    last_sum = [None]
+    def frontier(_old: DataFrame, new: DataFrame) -> float:
+        return float(new.agg(F.count_if("changed")).collect()[0][0])
 
-    def changed(_old: DataFrame, new: DataFrame) -> float:
-        s = new.agg(total).collect()[0][0] or 0
-        d = 1.0 if last_sum[0] is None else float(last_sum[0] - s)
-        last_sum[0] = s
-        return d
-
-    res = iterate(state0, step, iters, delta_fn=changed, tol=0.5)
+    if warm and frontier(None, state0) == 0:
+        return IterationResult(state=state0, iterations=0, converged=True, deltas=[])
+    res = iterate(state0, step, iters, delta_fn=frontier, tol=0.5)
+    if warm:
+        release_checkpoint(state0)  # the helper's own; iterate() keeps state0
     if not res.converged:
         raise RuntimeError(
             f"min-label fixpoint over {cols}: {iters}-round cap exhausted "
-            f"before the fixpoint (last deltas {[int(d) for d in res.deltas[-3:]]})"
+            f"before the fixpoint (last frontiers {[int(d) for d in res.deltas[-3:]]})"
             " — raise iters; an unconverged labeling is never returned"
         )
     return res
@@ -502,9 +541,10 @@ def connected_components(edges: DataFrame, iters: int = MIN_LABEL_ITERS,
     path graph of any length converges in ~log2(n) rounds, where plain
     propagation with a fixed budget silently splits long components.
     `iters` is a safety cap, not the expected rounds, and a cap that runs
-    out raises RuntimeError.
+    out raises RuntimeError.  Each round sends labels only from the
+    frontier (the nodes whose label fell in the round before).
 
-    100TB: both joins are on the label/node key; the label-sum check is
+    100TB: both joins are on the label/node key; the frontier count is
     the reference's global fixpoint barrier (one cheap action/round).
 
     `init_labels` (node, label) warm-starts from a prior run's labels —
@@ -512,8 +552,12 @@ def connected_components(edges: DataFrame, iters: int = MIN_LABEL_ITERS,
     labels are monotone decreasing as components merge; deletions can
     split components, which would need a recompute of the affected
     labels, not a warm start).  Nodes absent from init_labels seed with
-    their own id.  `connected_components.last_iters_run` records the
-    rounds the call actually used.
+    their own id.  The warm state is materialized once, and the first
+    frontier is only the endpoints of edges that join two labels (the
+    endpoint with the smaller label).  When every edge already joins
+    equal labels, the warm labels are returned after 0 rounds.
+    `connected_components.last_iters_run` records the rounds the call
+    actually used.
     """
     labels = _nodes(edges).withColumn("val", F.col("node"))
     if init_labels is not None:
@@ -531,7 +575,8 @@ def connected_components(edges: DataFrame, iters: int = MIN_LABEL_ITERS,
         )
     edges, owned = _own_edges(edges)
     try:
-        res = _min_label_fixpoint(labels, edges, {"val": ("src", "dst")}, iters)
+        res = _min_label_fixpoint(labels, edges, {"val": ("src", "dst")}, iters,
+                                  warm=init_labels is not None)
     finally:
         if owned:
             release_checkpoint(edges)
@@ -1023,7 +1068,7 @@ def _fwbw_coloring(active: DataFrame, active_nodes: DataFrame,
     Min-label fixpoints are UNIQUE (the min over a fixed reachable set),
     so both labels come out of one loop instead of two CC runs joined
     afterwards: rounds run max(r_f, r_b) instead of r_f + r_b, one
-    checkpoint and one sum action per round, both message joins read the
+    checkpoint and one frontier count per round, both message joins read the
     SAME checkpointed edge blocks, and no final join (the state already
     holds both labels).
 
@@ -1059,7 +1104,7 @@ def scc(edges: DataFrame, max_passes: int = 64) -> DataFrame:
        fixpoint (`_fwbw_coloring` — directed propagation is sound for
        doubling because a node's current label is always a node it can
        reach, so label-of-label is still reachable) — O(log diameter)
-       rounds, monotone-sum fixpoint detection.
+       rounds, frontier-count fixpoint detection.
        fwd[v] == bwd[v] == m proves v and m mutually reachable, so every
        such v is labeled scc = m (this always finishes at least the SCC
        of each class minimum — see step 3 — so passes are O(log #SCC)
@@ -1083,7 +1128,7 @@ def scc(edges: DataFrame, max_passes: int = 64) -> DataFrame:
     frame.
 
     100TB: every step is an equi-join/agg on node id; the trim fixpoint
-    and coloring fixpoint are each one cheap count/sum action per round
+    and coloring fixpoint are each one cheap count action per round
     (the reference's global barrier); state never leaves the cluster.
     """
     spark = edges.sparkSession

@@ -17,7 +17,11 @@ Scale notes (100 TB deployment):
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+from functools import cache
 
 from pyspark.sql import SparkSession
 
@@ -65,6 +69,17 @@ def configure_session(spark: SparkSession, shuffle_partitions: int | None = None
     return spark
 
 
+@cache
+def warehouse_dir() -> str:
+    """This process's own `spark.sql.warehouse.dir`, removed at exit.  A
+    managed table's LOCATION lives under it, so two processes on one host
+    that write the same bucketed table (`write_bucketed`) cannot collide
+    on it with LOCATION_ALREADY_EXISTS."""
+    path = tempfile.mkdtemp(prefix="i2mr-warehouse-")
+    atexit.register(shutil.rmtree, path, True)
+    return path
+
+
 def get_spark(app_name: str = "i2mapreduce-spark", cpus: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or fetch) a local SparkSession with the engine defaults."""
@@ -74,7 +89,7 @@ def get_spark(app_name: str = "i2mapreduce-spark", cpus: str | None = None,
         .master(f"local[{cpus}]")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("I2MR_DRIVER_MEM", "8g"))
-        .config("spark.sql.warehouse.dir", "/tmp/i2mr-warehouse")
+        .config("spark.sql.warehouse.dir", warehouse_dir())
         # Iterative fixpoints make old shuffle files garbage every
         # round, but ContextCleaner only deletes them after the stale
         # lineage is GC'd — and a big-heap driver can go the default

@@ -241,7 +241,7 @@ def test_cc_warmstart_converges_faster(spark, sf_dir):
     got = {(r.node, r.label) for r in warm.collect()}
     want = {(r.node, r.label) for r in cold_full.collect()}
     assert got == want, "warm start changed the final labeling"
-    assert warm_iters <= cold_iters, f"warm {warm_iters} vs cold {cold_iters}"
+    assert warm_iters < cold_iters, f"warm {warm_iters} vs cold {cold_iters}"
 
 
 def test_sssp_parents_form_valid_tree(spark, sf_dir):
@@ -394,8 +394,8 @@ def test_exhausted_safety_cap_raises(spark, sf_dir, monkeypatch, module, cap, qu
 
 
 def test_cc_on_empty_graph_converges(spark):
-    """The label sum over an empty state is NULL; read as 0 it repeats on
-    round 2, so an empty graph converges instead of running out its cap."""
+    """An empty state flags no node, so an empty graph converges instead
+    of running out its cap."""
     edges = spark.createDataFrame([], "src long, dst long")
     out = algorithms.connected_components(edges)
     assert out.count() == 0
@@ -410,6 +410,66 @@ def test_cc_raises_when_cap_runs_out(spark):
     )
     with pytest.raises(RuntimeError, match="cap exhausted"):
         algorithms.connected_components(edges, iters=2)
+
+
+def _sym(spark, pairs):
+    return spark.createDataFrame(
+        [*pairs, *((b, a) for a, b in pairs)], "src long, dst long")
+
+
+def _warm_vs_cold(spark, base, added):
+    """(warm labels, warm rounds, cold labels) for CC on base + added,
+    warm-started from the labels of `base`."""
+    old = algorithms.connected_components(_sym(spark, base)).localCheckpoint()
+    full = _sym(spark, [*base, *added])
+    warm = {tuple(r) for r in algorithms.connected_components(
+        full, init_labels=old).collect()}
+    rounds = algorithms.connected_components.last_iters_run
+    cold = {tuple(r) for r in algorithms.connected_components(full).collect()}
+    return warm, rounds, cold
+
+
+def test_warm_cc_stops_at_round_0_when_added_edges_join_equal_labels(spark):
+    warm, rounds, cold = _warm_vs_cold(
+        spark, [(1, 2), (2, 3), (3, 4)], [(1, 4), (2, 4)])
+    assert rounds == 0
+    assert warm == cold == {(n, 1) for n in (1, 2, 3, 4)}
+
+
+def test_warm_cc_merging_two_paths_propagates_to_cold_labels(spark):
+    warm, rounds, cold = _warm_vs_cold(
+        spark, [(1, 2), (2, 3), (5, 6), (6, 7)], [(3, 5)])
+    assert rounds > 0
+    assert warm == cold == {(n, 1) for n in (1, 2, 3, 5, 6, 7)}
+
+
+def test_warm_cc_seeds_nodes_absent_from_init_labels(spark):
+    # node 0 joins with the smallest id, node 9 with the largest
+    warm, rounds, cold = _warm_vs_cold(
+        spark, [(1, 2), (2, 3)], [(3, 0), (9, 2)])
+    assert rounds > 0
+    assert warm == cold == {(n, 0) for n in (0, 1, 2, 3, 9)}
+
+
+def test_warm_cc_on_empty_graph_runs_no_round(spark):
+    warm, rounds, cold = _warm_vs_cold(spark, [], [])
+    assert rounds == 0
+    assert warm == cold == set()
+
+
+def test_min_label_fixpoint_deltas_are_frontier_sizes(spark):
+    """A cold run flags every node for round 1; its deltas are the
+    frontiers after each round and end at the empty one."""
+    from i2mapreduce_spark.operators.algorithms import _min_label_fixpoint
+
+    path = _sym(spark, [(i, i + 1) for i in range(7)])
+    state0 = spark.range(8).select(F.col("id").alias("node"),
+                                   F.col("id").alias("val"))
+    res = _min_label_fixpoint(state0, path, {"val": ("src", "dst")}, 16)
+    assert res.converged and res.deltas[-1] == 0
+    assert 0 < res.deltas[0] <= 7  # node 0 never falls
+    assert {tuple(r) for r in res.state.select("node", "val").collect()} == {
+        (n, 0) for n in range(8)}
 
 
 def test_boruvka_raises_when_max_rounds_runs_out(spark, monkeypatch):

@@ -5,7 +5,12 @@ from __future__ import annotations
 
 import pytest
 
-from i2mapreduce_spark.session import REQUIRED_CONFS, SQL_CONFS, configure_session
+from i2mapreduce_spark.session import (
+    REQUIRED_CONFS,
+    SQL_CONFS,
+    configure_session,
+    warehouse_dir,
+)
 
 
 class _Conf:
@@ -36,3 +41,11 @@ def test_speed_conf_refusal_degrades_quietly():
     s = _Session(optional | {"spark.sql.shuffle.partitions"})
     configure_session(s, shuffle_partitions=8)
     assert s.conf.values == {k: SQL_CONFS[k] for k in REQUIRED_CONFS}
+
+
+def test_warehouse_dir_is_this_process_own(spark):
+    """Two processes writing one bucketed table must not share a managed
+    LOCATION: the warehouse is a fresh directory of this process."""
+    wh = spark.conf.get("spark.sql.warehouse.dir")
+    assert wh.rstrip("/").endswith(warehouse_dir())
+    assert "/tmp/i2mr-warehouse" not in {wh, wh.removeprefix("file:")}

@@ -4,7 +4,7 @@ The reference's whole programming model is map/combine/shuffle/reduce over
 untyped KV pairs (SURVEY §2A).  This module offers that paradigm as a
 library over DataFrames so a reference user can port jobs 1:1 — while the
 execution is Catalyst-planned (combine = automatic partial aggregation,
-shuffle = sort-based exchange, secondary sort = window/sortWithinPartitions).
+shuffle = sort-based exchange, secondary sort = window functions).
 
 A KV dataset is any DataFrame; `key_cols` names the key.  Nothing here
 drops to RDDs: RDD map/flatMap would lose codegen and columnar execution.
@@ -17,7 +17,7 @@ downstream per-partition logic — the analog of the reference Partitioner.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
@@ -60,23 +60,6 @@ combine = reduce_by_key
 def partition_by(df: DataFrame, n: int, *cols: str) -> DataFrame:
     """Custom key->partition routing (ref op A5): explicit hash Exchange."""
     return df.repartition(n, *cols)
-
-
-def secondary_sort(df: DataFrame, key_cols: Sequence[str],
-                   order_cols: Sequence[Column | str]) -> DataFrame:
-    """Per-key ordered iteration (ref op A6): shuffle by key, sort within
-    partitions by (key, order).  Downstream per-partition logic sees each
-    key's rows contiguous and ordered — exactly the reducer's view."""
-    return df.repartition(*[F.col(c) for c in key_cols]).sortWithinPartitions(
-        *[F.col(c) if isinstance(c, str) else c for c in key_cols],
-        *[F.col(c) if isinstance(c, str) else c for c in order_cols],
-    )
-
-
-def map_partitions_pandas(df: DataFrame, fn: Callable, schema) -> DataFrame:
-    """Escape hatch for genuinely imperative per-partition logic —
-    Arrow-batched (mapInPandas), never row-at-a-time Python."""
-    return df.mapInPandas(fn, schema=schema)
 
 
 def salted_reduce_by_key(df: DataFrame, key_cols: Sequence[str], n_salts: int,

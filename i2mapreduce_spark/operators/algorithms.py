@@ -219,6 +219,12 @@ def hits(spark: SparkSession, edges: DataFrame, iters: int = 4) -> DataFrame:
     e = checkpoint_without_stats(
         edges.select("src", "dst").repartition(n_part, "src")
     )
+    if e.isEmpty():
+        # no scores to compute; and the loop must not run: on an empty
+        # join side AQE drops the join but leaves the broadcast job it
+        # already started reading `e`, and releasing `e` fails that job
+        release_checkpoint(e)
+        return spark.createDataFrame([], "side string, node long, score double")
     srcs = e.select(F.col("src").alias("node")).distinct()
 
     def _l1_normalize(df: DataFrame, col: str) -> DataFrame:
@@ -923,6 +929,7 @@ def boruvka_msf(edges: DataFrame, max_rounds: int = 8) -> DataFrame:
         )
         fit = _collect_if_fits(BORUVKA_LOCAL_EDGES_MAX, contracted)
         if fit is not None:
+            release_checkpoint(contracted)
             break
         if rnd == max_rounds:
             raise RuntimeError(
@@ -938,7 +945,7 @@ def boruvka_msf(edges: DataFrame, max_rounds: int = 8) -> DataFrame:
             .select("cs", "m.w", "m.a", "m.b", "m.cd")
             .transform(checkpoint_without_stats)
         )
-        chosen = (
+        prev_chosen, chosen = chosen, (
             chosen.unionByName(pick.select("a", "b", "w"))
             # within a round both endpoint components can pick the same
             # edge; across rounds re-picks are impossible once
@@ -954,6 +961,7 @@ def boruvka_msf(edges: DataFrame, max_rounds: int = 8) -> DataFrame:
             F.col("node").alias("old"), F.col("label").alias("new")
         )
         # contract on component LABELS: every picked (cs, cd) pair merges
+        prev_comp = comp
         if comp is None:
             comp = m.select(F.col("old").alias("node"), F.col("new").alias("label"))
         else:
@@ -961,6 +969,15 @@ def boruvka_msf(edges: DataFrame, max_rounds: int = 8) -> DataFrame:
                 "node", F.coalesce("new", "label").alias("label")
             )
         comp = comp.transform(checkpoint_without_stats)
+        # the round's successors are materialized: drop what they replace
+        # (round 0's `chosen` is the empty literal, not a checkpoint)
+        superseded = [contracted, pick, m]
+        if prev_comp is not None:
+            superseded += [prev_chosen, prev_comp]
+        for df in superseded:
+            release_checkpoint(df)
+    if comp is not None:
+        release_checkpoint(comp)
     (pdf,) = fit
     # .tolist() yields native python ints/floats — numpy scalars would
     # fail createDataFrame's LongType check on the finish edges

@@ -313,6 +313,38 @@ def _pairs_with_duplicate_collapse(df: DataFrame, rep_fn, eligible_fn,
     return within.unionByName(expanded)
 
 
+def bucket_pairs(df: DataFrame, keys: list, carry: str | None = None) -> DataFrame:
+    """Candidate generation for the banded near-duplicate families
+    (MinHash bands, SimHash blocks): one symmetric self-join of the docs
+    on (bucket index, bucket key) that emits each pair once per shared
+    bucket as (d1, d2) with d1 < d2.
+
+    `df` holds one row per doc_id; `keys[i]` is the doc's key in bucket
+    i.  A `carry` column comes back as <carry>1 (of d1) and <carry>2 (of
+    d2).  Exact scoring stays with the caller, as in V-SMART-Join's split
+    of candidate generation from exact similarity.
+    """
+    cols = ["doc_id"] + ([carry] if carry else [])
+    bucketed = df.select(
+        *cols,
+        F.explode(
+            F.array(*[F.struct(F.lit(i).alias("i"), k.alias("k")) for i, k in enumerate(keys)])
+        ).alias("bk"),
+    ).select(*cols, "bk.i", "bk.k")
+    l, r = bucketed.alias("l"), bucketed.alias("r")
+    return l.join(
+        r,
+        (F.col("l.i") == F.col("r.i"))
+        & (F.col("l.k") == F.col("r.k"))
+        & (F.col("l.doc_id") < F.col("r.doc_id")),
+    ).select(
+        F.col("l.doc_id").alias("d1"),
+        F.col("r.doc_id").alias("d2"),
+        *([F.col(f"l.{carry}").alias(f"{carry}1"), F.col(f"r.{carry}").alias(f"{carry}2")]
+          if carry else []),
+    )
+
+
 def minhash_lsh_pairs(df: DataFrame, threshold: float,
                       expand_members: bool = True) -> DataFrame:
     """Near-dup pairs via MinHash banding + exact re-score.
@@ -367,34 +399,17 @@ def _minhash_lsh_pairs_raw(df: DataFrame, threshold: float) -> DataFrame:
     # against 2.2-2.7 s uncached)
     sh = shingles(df)
     sig = minhash_signatures(sh)
-    band_cols = [
+    bands = [
         F.xxhash64(
             F.concat_ws(
                 ",",
                 F.lit(bi),
                 *[F.col("sig")[bi * rows_per_band + r] for r in range(rows_per_band)],
             )
-        ).alias(f"b{bi}")
+        )
         for bi in range(MINHASH_BANDS)
     ]
-    banded = sig.select("doc_id", *band_cols)
-    bucket = banded.select(
-        "doc_id",
-        F.explode(
-            F.array(*[F.struct(F.lit(bi).alias("band"), F.col(f"b{bi}").alias("bucket"))
-                      for bi in range(MINHASH_BANDS)])
-        ).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bucket")
-    l, r = bucket.alias("l"), bucket.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(F.col("l.doc_id").alias("d1"), F.col("r.doc_id").alias("d2"))
-    )
+    cand = bucket_pairs(sig, bands)
     # exact re-score restricted to candidates (never the full shingle
     # join); the helper deduplicates the multi-band candidate pairs
     return jaccard_for_candidates(cand, sh, threshold)
@@ -495,36 +510,12 @@ def _simhash_near_pairs_raw(df: DataFrame, max_hamming: int) -> DataFrame:
     """simhash_near_pairs' block-banding kernel, without the duplicate
     collapse."""
     sh = simhash_values(df)
-    blocks = sh.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).alias("blk"),
-                    F.shiftright(F.col("simhash"), 16 * i).bitwiseAND(F.lit(0xFFFF)).alias("val"),
-                )
-                for i in range(4)
-            ])
-        ).alias("bb"),
-    ).select("doc_id", "simhash", "bb.blk", "bb.val")
-    l, r = blocks.alias("l"), blocks.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.blk") == F.col("r.blk"))
-            & (F.col("l.val") == F.col("r.val"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(
-            F.col("l.doc_id").alias("d1"),
-            F.col("r.doc_id").alias("d2"),
-            F.col("l.simhash").alias("h1"),
-            F.col("r.simhash").alias("h2"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("h1").bitwiseXOR(F.col("h2")))
+    blocks = [
+        F.shiftright(F.col("simhash"), 16 * i).bitwiseAND(F.lit(0xFFFF))
+        for i in range(4)
+    ]
+    cand = bucket_pairs(sh, blocks, carry="simhash").distinct()
+    hamming = F.bit_count(F.col("simhash1").bitwiseXOR(F.col("simhash2")))
     return cand.select("d1", "d2", hamming.alias("hamming")).filter(
         F.col("hamming") <= max_hamming
     )

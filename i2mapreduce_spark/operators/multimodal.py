@@ -35,10 +35,6 @@ def _round_half_away(x: float, nd: int = 4) -> float:
     m = 10 ** nd
     return math.floor(x * m + 0.5) / m
 
-#: metadata struct carried alongside every binary payload
-META_SCHEMA = (
-    "modality string, byte_len int, width int, height int, sample_rate int"
-)
 #: feature-vector width of extract_features (one histogram bucket each)
 FEATURE_DIM = 16
 #: pooled grid of resize and phash: 6 rows x 8 columns (a 48-bit phash)

@@ -151,7 +151,8 @@ def is_local_checkpoint(df: DataFrame) -> bool:
 
 
 def release_checkpoint(df: DataFrame) -> None:
-    """Drop the cached blocks behind a SUPERSEDED local checkpoint.
+    """Drop the cached blocks behind a SUPERSEDED local checkpoint, or
+    behind the checkpoint a column projection of one reads.
 
     localCheckpoint persists its RDD and nothing ever unpersists it, so
     a fixpoint loop that checkpoints every round pins O(iterations)
@@ -180,6 +181,8 @@ def release_checkpoint(df: DataFrame) -> None:
     global _RELEASE_LOGGED
     try:
         plan = df._jdf.queryExecution().analyzed()
+        while plan.getClass().getSimpleName() == "Project":
+            plan = plan.child()
         if plan.getClass().getSimpleName() == "LogicalRDD":
             plan.rdd().unpersist(False)
             if not _RELEASE_LOGGED:

@@ -28,55 +28,6 @@ _GROUP_MODULES = [
     "quality",      # Q  — data-quality audits (r3)
     "timeseries",   # T  — time-series analytics (r3)
     "tpch_q",       # H  — TPC-H-shaped composite analytics (r4)
-    "r6_ops",       # mixed groups — round-6 additions
-    "r6b_ops",      # mixed groups — round-6 additions, batch 2 (graded r7)
-    "r6c_ops",      # mixed groups — round-6 additions, batch 3 (graded r7)
-    "r6d_ops",      # mixed groups — round-6 additions, batch 4 (graded r7)
-    "r6e_ops",      # mixed groups — round-6 additions, batch 5 (graded r7)
-    "r6f_ops",      # mixed groups — round-6 additions, batch 6 (graded r7)
-    "r6g_ops",      # mixed groups — round-6 additions, batch 7 (graded r7)
-    "r6h_ops",      # mixed groups — round-6 additions, batch 8 (graded r7)
-    "r6i_ops",      # mixed groups — round-6 additions, batch 9 (graded r7)
-    "r6j_ops",      # mixed groups — round-6 additions, batch 10 (graded r7)
-    "r6k_ops",      # mixed groups — round-6 additions, batch 11 (graded r7)
-    "r6l_ops",      # mixed groups — round-6 additions, batch 12 (graded r7)
-    "r6m_ops",      # mixed groups — round-6 additions, batch 13 (graded r7)
-    "r6n_ops",      # mixed groups — round-6 additions, batch 14 (graded r7)
-    "r6o_ops",      # mixed groups — round-6 additions, batch 15 (graded r7)
-    "r6p_ops",      # mixed groups — round-6 additions, batch 16 (graded r7)
-    "r6q_ops",      # mixed groups — round-6 additions, batch 17 (graded r7)
-    "r6r_ops",      # mixed groups — round-6 additions, batch 18 (graded r7)
-    "r6s_ops",      # mixed groups — round-6 additions, batch 19 (graded r7)
-    "r6t_ops",      # mixed groups — round-6 additions, batch 20 (graded r7)
-    "r6u_ops",      # mixed groups — round-6 additions, batch 21 (graded r7)
-    "r6v_ops",      # mixed groups — round-6 additions, batch 22 (graded r7)
-    "r6w_ops",      # mixed groups — round-6 additions, batch 23 (graded r7)
-    "r6x_ops",      # mixed groups — round-6 additions, batch 24 (graded r7)
-    "r6y_ops",      # mixed groups — round-6 additions, batch 25 (graded r7)
-    "r6z_ops",      # mixed groups — round-6 additions, batch 26 (graded r7)
-    "r7a_ops",      # mixed groups — round-6 additions, batch 27 (graded r7)
-    "r7b_ops",      # mixed groups — round-6 additions, batch 28 (graded r7)
-    "r7c_ops",      # mixed groups — round-6 additions, batch 29 (graded r7)
-    "r7d_ops",      # mixed groups — round-6 additions, batch 30 (graded r7)
-    "r7e_ops",      # mixed groups — round-6 additions, batch 31 (graded r7)
-    "r7f_ops",      # mixed groups — round-6 additions, batch 32 (graded r7)
-    "r7g_ops",      # mixed groups — round-6 additions, batch 33 (graded r7)
-    "r7h_ops",      # mixed groups — round-6 additions, batch 34 (graded r7)
-    "r7i_ops",      # mixed groups — round-6 additions, batch 35 (graded r7)
-    "r7j_ops",      # mixed groups — round-6 additions, batch 36 (graded r7)
-    "r7k_ops",      # mixed groups — round-6 additions, batch 37 (graded r7)
-    "r7l_ops",      # mixed groups — round-6 additions, batch 38 (graded r7)
-    "r7m_ops",      # mixed groups — round-6 additions, batch 39 (graded r7)
-    "r7n_ops",      # mixed groups — round-6 additions, batch 40 (graded r7)
-    "r7o_ops",      # mixed groups — round-6 additions, batch 41 (graded r7)
-    "r7p_ops",      # mixed groups — round-6 additions, batch 42 (graded r7)
-    "r7q_ops",      # mixed groups — round-6 additions, batch 43 (graded r7)
-    "r7r_ops",      # mixed groups — round-6 additions, batch 44 (graded r7)
-    "r7s_ops",      # mixed groups — round-6 additions, batch 45 (graded r7)
-    "r7t_ops",      # mixed groups — round-6 additions, batch 46 (graded r7)
-    "r7u_ops",      # mixed groups — round-6 additions, batch 47 (graded r7)
-    "r7v_ops",      # mixed groups — round-6 additions, batch 48 (graded r7)
-    "r7w_ops",      # mixed groups — round-6 additions, batch 49 (graded r7)
 ]
 
 # Each graded round checks the first 50 registry keys, so these two

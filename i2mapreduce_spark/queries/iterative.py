@@ -11,11 +11,15 @@ driver records rows-only for them).
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from ..catalog import cte, load_tables
 from ..operators import algorithms
-from ..plans.iterate import checkpoint_without_stats, release_checkpoint
+from ..plans.iterate import checkpoint_without_stats, iterate, release_checkpoint
+from .aggregates import _md5_le
 
 PAGERANK_ITERS = 10
 PAGERANK_DAMPING = 0.85
@@ -371,7 +375,10 @@ def q_inc_apriori_pairs(spark, sf_dir):
             (F.col("a.basket") == F.col("b.basket"))
             & (F.col("a.item") < F.col("b.item")),
         ).select(F.col("a.item").alias("item1"), F.col("b.item").alias("item2"))
-        state = fold_delta(state, pairs, ["item1", "item2"], {}).transform(checkpoint_without_stats)
+        new = fold_delta(state, pairs, ["item1", "item2"], {}).transform(checkpoint_without_stats)
+        if state is not None:
+            release_checkpoint(state)
+        state = new
     return (
         state.filter(F.col("n") >= APRIORI_MIN_SUPPORT)
         .select("item1", "item2", F.col("n").alias("support"))
@@ -610,6 +617,736 @@ def q_iter_markov_walk(spark, sf_dir):
     return out
 
 
+#: edge-sampling modulus for the SCC digraph: the raw part-sequence
+#: graph is one giant SCC (measured: 2000 nodes / 29k edges, a single
+#: component at sf0.01) — keeping each directed edge with probability
+#: 1/8 via the portable md5 coin yields a graph with real SCC structure
+#: (measured sf0.01: 1934 nodes, 3560 edges, 892 SCCs — one 1043-node
+#: giant plus singletons).
+SCC_EDGE_MOD = 8
+
+
+def _sequence_digraph(spark):
+    """Directed part-transition graph: an edge a→b for consecutive line
+    numbers within an order, md5-coin-sampled at 1/SCC_EDGE_MOD.  One
+    self-join on (orderkey, linenumber) — co-partitioned on the shuffle
+    key, linear in the fact table."""
+    li = spark.table("lineitem").select(
+        F.col("l_orderkey").alias("ok"),
+        F.col("l_linenumber").alias("ln"),
+        F.col("l_partkey").alias("pk"),
+    )
+    nxt = li.select(
+        "ok", (F.col("ln") - 1).alias("ln"), F.col("pk").alias("pk2")
+    )
+    raw = (
+        li.join(nxt, ["ok", "ln"])
+        .filter(F.col("pk") != F.col("pk2"))
+        .select(F.col("pk").alias("src"), F.col("pk2").alias("dst"))
+        .distinct()
+    )
+    coin = _md5_le(
+        F.concat(
+            F.col("src").cast("string"), F.lit(">"), F.col("dst").cast("string")
+        ),
+        4,
+    )
+    return raw.filter(coin % SCC_EDGE_MOD == 0)
+
+
+def q_iter_scc(spark, sf_dir):
+    """Strongly connected components of the sampled part-transition
+    digraph via Trim + Forward-Backward min-label coloring
+    (operators/algorithms.py::scc): trim peels in/out-degree-0 nodes as
+    singleton SCCs to fixpoint, then fwd/bwd pointer-doubling min-reach
+    labels certify scc = m where fwd == bwd == m (mutual reachability),
+    repeating on the residual.  Deterministic fixpoints, no randomness.
+    Rows-only key (SCC is a recursive property SQL can't express at
+    this size); correctness = python Tarjan replay in pytest, identical
+    component sets at sf0.001 AND sf0.01."""
+    load_tables(spark, sf_dir)
+    return algorithms.scc(_sequence_digraph(spark)).select(
+        "node", "scc"
+    )
+
+
+ALS_ITEMS = 64   #: factorize the top-64 parts by popularity (bounded →
+                 #: the item-factor matrix broadcasts at any SF)
+ALS_RANK = 8     #: latent dimensions
+ALS_ITERS = 3    #: alternating sweeps
+ALS_LAMBDA = 0.1  #: L2 regularization
+
+_FCOLS = [f"f{i}" for i in range(ALS_RANK)]
+
+_FAC_SCHEMA = StructType(
+    [StructField("id", LongType())]
+    + [StructField(c, DoubleType()) for c in _FCOLS]
+)
+
+
+def _init_item_factors() -> np.ndarray:
+    """Deterministic item-factor init: a fixed rational lattice in
+    [-0.5, 0.5) — no RNG anywhere, so every run (and every engine
+    replay) trains the identical model."""
+    j = np.arange(ALS_ITEMS)[:, None] + 1
+    f = np.arange(ALS_RANK)[None, :] + 1
+    return ((j * f) % 97) / 97.0 - 0.5
+
+
+def _ridge(V: np.ndarray, r: np.ndarray) -> np.ndarray:
+    A = V.T @ V + ALS_LAMBDA * len(r) * np.eye(ALS_RANK)
+    return np.linalg.solve(A, V.T @ r)
+
+
+def _solve_users(ratings, item_fac, spark):
+    """U half-sweep: per-user ridge solve against the BROADCAST item
+    factors (the item side is bounded by the top-k cut).  Returns a
+    DISTRIBUTED (user, f0..f7) frame — user factors never land on the
+    driver.
+
+    BATCHED, not per-group: ratings arrive hash-partitioned on `user`
+    (set once at build time) and sorted within partitions, so one
+    mapInPandas pass solves EVERY user in an Arrow batch with a single
+    batched ``np.linalg.solve`` over segment sums (``np.add.reduceat``)
+    — the per-group pandas overhead of groupBy().applyInPandas was 4ms
+    x n_users, 11s of a 25s run at sf0.1 for ~50us of actual solve
+    work per user.  A user whose rows straddle an Arrow batch boundary
+    is carried into the next batch (partitioning guarantees all their
+    rows share the partition).  Rows are pre-sorted by (user, item), so
+    the in-order segment sums are order-deterministic under any
+    partitioning."""
+    ids = sorted(item_fac)
+    idx = {iid: k for k, iid in enumerate(ids)}
+    Vmat = np.stack([item_fac[iid] for iid in ids])
+    bc = spark.sparkContext.broadcast((idx, Vmat))
+    eye = ALS_LAMBDA * np.eye(ALS_RANK)
+
+    def solve_batches(batches):
+        ix, V = bc.value
+
+        def solve_block(users, items, r):
+            starts = np.r_[0, 1 + np.flatnonzero(users[1:] != users[:-1])]
+            counts = np.diff(np.r_[starts, len(users)])
+            Vr = V[[ix[i] for i in items]]
+            b = np.add.reduceat(Vr * r[:, None], starts, axis=0)
+            A = np.add.reduceat(
+                np.einsum("ni,nj->nij", Vr, Vr).reshape(len(users), -1),
+                starts, axis=0,
+            ).reshape(-1, ALS_RANK, ALS_RANK)
+            A += counts[:, None, None] * eye
+            u = np.linalg.solve(A, b)
+            out = {"user": users[starts]}
+            for i, c in enumerate(_FCOLS):
+                out[c] = u[:, i]
+            return pd.DataFrame(out)
+
+        carry = None
+        for pdf in batches:
+            if carry is not None:
+                pdf = pd.concat([carry, pdf], ignore_index=True)
+                carry = None
+            if len(pdf) == 0:
+                continue
+            users = pdf["user"].values
+            # hold back the last user: their rows may continue in the
+            # next Arrow batch of this partition
+            tail = users == users[-1]
+            carry = pdf[tail]
+            head = pdf[~tail]
+            if len(head):
+                yield solve_block(
+                    head["user"].values, head["item"].values,
+                    head["rating"].values.astype(np.float64),
+                )
+        if carry is not None and len(carry):
+            yield solve_block(
+                carry["user"].values, carry["item"].values,
+                carry["rating"].values.astype(np.float64),
+            )
+
+    return ratings.sortWithinPartitions("user", "item").mapInPandas(
+        solve_batches, "user long, " + ", ".join(f"{c} double" for c in _FCOLS)
+    )
+
+
+def _solve_items(ratings, user_fac_df):
+    """V half-sweep, FULLY DISTRIBUTED: user factors join onto the
+    ratings (both sides shuffle on `user`), then one
+    groupBy(item).applyInPandas ridge solve per item — no collect of
+    the unbounded user side anywhere; only the resulting ITEM factors
+    (bounded by the top-k cut) ever reach the driver."""
+    joined = ratings.join(user_fac_df, "user")
+
+    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("user")
+        U = pdf[_FCOLS].to_numpy(dtype=np.float64)
+        v = _ridge(U, pdf["rating"].values.astype(np.float64))
+        row = {"id": [int(pdf["item"].iloc[0])]}
+        for i, c in enumerate(_FCOLS):
+            row[c] = [float(v[i])]
+        return pd.DataFrame(row)
+
+    rows = joined.groupBy("item").applyInPandas(solve, _FAC_SCHEMA).collect()
+    return {r["id"]: np.array([r[c] for c in _FCOLS]) for r in rows}
+
+
+def q_iter_als_topitems(spark, sf_dir, iters=ALS_ITERS):
+    """ALS matrix factorization (implicit co-purchase strength) over the
+    top-64 parts: rating(u, i) = total quantity customer u ordered of
+    part i; 3 alternating ridge sweeps at rank 8, deterministic lattice
+    init, no RNG.  Outputs the trained ITEM factors with per-item
+    training RMSE — the model artifact a recommender pipeline ships.
+
+    Scale shape: the item side is BOUNDED by construction (top-k
+    popularity cut → its 64×8 factor matrix broadcasts), the user side
+    is unbounded and stays DISTRIBUTED end-to-end — the U-step is a
+    per-user grouped solve against broadcast item factors, the V-step
+    joins the user-factor frame to the ratings and groups by item, and
+    only item factors (bounded) are ever collected.  In-group rows sort
+    before each solve, so float sums are order-deterministic under any
+    partitioning.  Rows-only key (a trained float artifact SQL can't
+    replay); pytest pins convergence (RMSE strictly decreases over
+    sweeps) and bit-identical retrains."""
+    load_tables(spark, sf_dir)
+    li = spark.table("lineitem")
+    o = spark.table("orders")
+    # NULL keys are not entities: a NULL l_partkey is not an item (and
+    # would crash the sorted() over collected item ids), a NULL
+    # o_custkey is not a user — both drop before the ratings matrix
+    top = (
+        li.filter(F.col("l_partkey").isNotNull())
+        .groupBy("l_partkey")
+        .agg(F.sum("l_quantity").alias("pop"))
+        .orderBy(F.col("pop").desc(), "l_partkey")
+        .limit(ALS_ITEMS)
+        .select("l_partkey")
+    )
+    # Projector-style co-partitioning (plans/iterate.py): the ratings
+    # frame is grouped/joined on `user` SEVEN times across the sweeps
+    # (3 U-solves, 3 V-step joins, 1 error pass) — repartition it on
+    # `user` ONCE before the checkpoint so the checkpointed LogicalRDD
+    # carries hashpartitioning(user) and every downstream
+    # groupBy(user)/join(user) reuses the exchange instead of
+    # re-shuffling the big side per sweep (r7 verdict item 5).
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    ratings = (
+        li.join(F.broadcast(top), "l_partkey")
+        .join(o, li.l_orderkey == o.o_orderkey)
+        .filter(F.col("o_custkey").isNotNull())
+        .groupBy(
+            F.col("o_custkey").alias("user"),
+            F.col("l_partkey").alias("item"),
+        )
+        .agg(F.sum("l_quantity").cast("double").alias("rating"))
+        .repartition(n_part, "user")
+        .localCheckpoint(eager=True)
+    )
+    item_ids = sorted(r["l_partkey"] for r in top.collect())
+    # empty ratings matrix (no items, or no lineitem⋈orders matches at
+    # all): nothing to factorize, no model to ship.  The limit(1) probe
+    # is a narrow read of the already-checkpointed frame.
+    if not item_ids or ratings.limit(1).count() == 0:
+        return spark.createDataFrame(
+            [],
+            "item long, n_ratings long, rmse double, "
+            "f0 double, f1 double, f2 double, f3 double",
+        )
+    V0 = _init_item_factors()
+    item_fac = {iid: V0[k] for k, iid in enumerate(item_ids)}
+
+    user_fac_df = None
+    for _ in range(iters):
+        user_fac_df = _solve_users(ratings, item_fac, spark)
+        item_fac = _solve_items(ratings, user_fac_df)
+
+    bc_i = spark.sparkContext.broadcast(item_fac)
+
+    err_schema = StructType(
+        [
+            StructField("item", LongType()),
+            StructField("n_ratings", LongType()),
+            StructField("rmse", DoubleType()),
+        ]
+    )
+
+    def per_item_err(pdf: pd.DataFrame) -> pd.DataFrame:
+        itf = bc_i.value
+        pdf = pdf.sort_values("user")
+        v = itf[int(pdf["item"].iloc[0])]
+        U = pdf[_FCOLS].to_numpy(dtype=np.float64)
+        err = pdf["rating"].values - U @ v
+        return pd.DataFrame(
+            {
+                "item": [int(pdf["item"].iloc[0])],
+                "n_ratings": [len(pdf)],
+                "rmse": [float(np.sqrt((err**2).mean()))],
+            }
+        )
+
+    errs = (
+        ratings.join(user_fac_df, "user")
+        .groupBy("item")
+        .applyInPandas(per_item_err, err_schema)
+    )
+    fac_rows = [
+        (int(iid), *[round(float(x), 4) for x in item_fac[iid][:4]])
+        for iid in item_ids
+    ]
+    fac_df = spark.createDataFrame(
+        fac_rows, ["item", "f0", "f1", "f2", "f3"]
+    )
+    return errs.join(fac_df, "item").select(
+        "item",
+        "n_ratings",
+        F.round("rmse", 4).alias("rmse"),
+        "f0",
+        "f1",
+        "f2",
+        "f3",
+    )
+
+
+DIAM_HOPS = 6  #: BFS hop cap per sweep
+
+
+def q_iter_graph_diameter(spark, sf_dir):
+    """Graph diameter lower bound via the classic DOUBLE-SWEEP BFS: one
+    hop-limited BFS from the minimum node, a second from the farthest
+    node the first sweep reached (ties → smallest id), reporting the
+    second sweep's eccentricity — the textbook 2-sweep estimator that
+    is exact on trees and near-exact on real graphs, at the cost of two
+    BFS passes instead of all-pairs.
+
+    Reuses the MapReduce-shaped frontier BFS (operators.algorithms.sssp:
+    per hop one co-partitioned join + min fold); the only driver
+    traffic is two 1-row argmax picks.  Hash-checked: DuckDB replays
+    both sweeps as chained recursive CTEs with the same hop cap and
+    tie-breaks."""
+    load_tables(spark, sf_dir)
+    edges = spark.table("edges_pp").localCheckpoint(eager=True)
+    seed = edges.agg(F.min("src")).collect()[0][0]
+    if seed is None:  # empty graph: no sweep source, nothing to estimate
+        return spark.createDataFrame(
+            [],
+            "sweep1_source int, peripheral_node int, diameter_est int, "
+            "n_reached long",
+        )
+    s0 = int(seed)
+    d1 = algorithms.sssp(edges, s0, max_hops=DIAM_HOPS)
+    far = d1.orderBy(F.col("dist").desc(), "node").limit(1).collect()[0]
+    u = int(far["node"])
+    d2 = algorithms.sssp(edges, u, max_hops=DIAM_HOPS)
+    return d2.agg(
+        F.lit(s0).alias("sweep1_source"),
+        F.lit(u).alias("peripheral_node"),
+        F.max("dist").alias("diameter_est"),
+        F.count(F.lit(1)).alias("n_reached"),
+    )
+
+
+#: Katz centrality: alpha = 1/KATZ_DEN (exact rational), fixed sweeps
+KATZ_DEN = 20
+KATZ_ITERS = 4
+KATZ_UNIT = 1_000_000  #: centrality fixed-point unit
+
+
+def q_iter_katz_centrality(spark, sf_dir):
+    """Katz centrality over the co-purchase graph in PURE INTEGER
+    fixed-point: x' = UNIT + (2·Σ_in x + DEN) div (2·DEN) per node
+    (alpha = 1/20 exact), 4 synchronous sweeps from x = UNIT — integer
+    sums are order-free-exact, so unlike float PageRank there is no
+    reduction-order hazard anywhere.  Each sweep is one `algorithms.gimv`
+    round (combine2 = neighbor value, combineAll = sum, assign = the
+    fixed-point update): one co-partitioned join + hash agg.  The DuckDB
+    oracle unrolls the same 4 sweeps."""
+    load_tables(spark, sf_dir)
+    edges = spark.table("edges_pp").transform(checkpoint_without_stats)
+    nodes = (
+        edges.select(F.col("src").alias("node"))
+        .unionByName(edges.select(F.col("dst").alias("node")))
+        .distinct()
+        .transform(checkpoint_without_stats)
+    )
+    res = algorithms.gimv(
+        edges,
+        nodes.select("node", F.lit(KATZ_UNIT).cast("long").alias("val")),
+        combine2=lambda _w, v: v,
+        combine_all=F.sum,
+        assign=lambda _v, agg: (
+            F.lit(KATZ_UNIT)
+            + F.call_function(
+                "div", 2 * F.coalesce(agg, F.lit(0)) + KATZ_DEN,
+                F.lit(2 * KATZ_DEN),
+            )
+        ).cast("long"),
+        iters=KATZ_ITERS,
+        checkpoint_every=1,
+    )
+    return res.state.select(
+        "node",
+        F.col("val").alias("x"),
+        F.round(F.col("val") / KATZ_UNIT, 6).alias("katz"),
+    )
+
+
+def _katz_unroll() -> str:
+    """Unrolled 4-sweep integer Katz as chained CTEs."""
+    out = (
+        ", nodes AS (SELECT src AS node FROM edges_pp UNION "
+        "SELECT dst FROM edges_pp), "
+        f"x0 AS (SELECT node, CAST({KATZ_UNIT} AS BIGINT) AS x FROM nodes)"
+    )
+    for i in range(KATZ_ITERS):
+        out += (
+            f", m{i} AS (SELECT e.dst AS node, sum(x.x) AS s "
+            f"FROM x{i} x JOIN edges_pp e ON e.src = x.node GROUP BY e.dst)"
+            f", x{i + 1} AS (SELECT n.node, CAST({KATZ_UNIT} + "
+            f"(2 * coalesce(m.s, 0) + {KATZ_DEN}) // {2 * KATZ_DEN} "
+            f"AS BIGINT) AS x FROM nodes n LEFT JOIN m{i} m USING (node))"
+        )
+    return out
+
+
+#: closeness centrality: landmark count and BFS hop cap
+CLOSE_K = 6
+CLOSE_HOPS = 5
+
+
+def q_iter_closeness_centrality(spark, sf_dir):
+    """Hop-bounded closeness centrality of the CLOSE_K smallest-id parts
+    in the co-purchase graph: one MULTI-SOURCE labeled BFS
+    (`algorithms.bfs` with (lm, node) seeds: frontier rows carry their
+    landmark id), so K landmarks cost the same 5 join+min-fold rounds
+    as one — the standard landmark/pivot scheme for centrality at scale,
+    vs K sequential BFS sweeps or all-pairs.
+    Closeness = n_reached / sum_dist as a half-up x10^6 integer
+    quotient on exact BIGINT counts.  Oracle: DuckDB replays the same
+    labeled BFS as one recursive CTE with the same hop cap."""
+    load_tables(spark, sf_dir)
+    edges = spark.table("edges_pp").transform(checkpoint_without_stats)
+    lands = (
+        edges.select(F.col("src").alias("lm"))
+        .distinct()
+        .orderBy("lm")
+        .limit(CLOSE_K)
+    )
+    dist = algorithms.bfs(
+        edges, lands.select("lm", F.col("lm").alias("node")), CLOSE_HOPS
+    )
+    res = dist.groupBy("lm").agg(
+        (F.count(F.lit(1)) - 1).alias("n_reached"),
+        F.sum("dist").alias("sum_dist"),
+    )
+    return res.select(
+        F.col("lm").alias("landmark"),
+        "n_reached",
+        "sum_dist",
+        (
+            F.expr("(2 * 1000000 * n_reached + sum_dist) div (2 * sum_dist)")
+            / 1000000.0
+        ).alias("closeness"),
+    )
+
+
+#: bipartite check: BFS hop cap (covers the giant component here)
+BIP_HOPS = 6
+
+
+def q_iter_bipartite_check(spark, sf_dir):
+    """Bipartiteness test of the co-purchase graph by 2-coloring: BFS
+    from the minimum node, color = parity of hop distance, then count
+    MONOCHROMATIC edges (same color on both endpoints = odd cycle
+    witness).  The input validator run before any bipartite-only
+    algorithm (ALS, bipartite matching); co-purchase co-occurrence is
+    densely triangular, so it fails loudly — the point of the audit.
+
+    Plan: one hop-capped frontier BFS (operators.algorithms.sssp — per
+    hop one co-partitioned join + min fold) and one edges-to-colors
+    equi-join pair; scope is the BFS-reached subgraph, declared by the
+    hop cap.  Oracle replays the BFS as a recursive CTE with the same
+    cap."""
+    load_tables(spark, sf_dir)
+    edges = spark.table("edges_pp").localCheckpoint(eager=True)
+    seed = edges.agg(F.min("src")).collect()[0][0]
+    if seed is None:  # empty graph: no edges to color, nothing to report
+        return spark.createDataFrame(
+            [],
+            "bfs_source int, n_edges_colored long, n_monochrome long, "
+            "is_bipartite boolean",
+        )
+    s0 = int(seed)
+    col = algorithms.sssp(edges, s0, max_hops=BIP_HOPS).select(
+        "node", (F.col("dist") % 2).alias("c")
+    )
+    e2 = (
+        edges.join(col.withColumnRenamed("node", "src").withColumnRenamed("c", "cs"), "src")
+        .join(col.withColumnRenamed("node", "dst").withColumnRenamed("c", "cd"), "dst")
+    )
+    return e2.agg(
+        F.lit(s0).alias("bfs_source"),
+        F.count(F.lit(1)).alias("n_edges_colored"),
+        F.sum((F.col("cs") == F.col("cd")).cast("long")).alias("n_monochrome"),
+        (F.sum((F.col("cs") == F.col("cd")).cast("long")) == 0).alias(
+            "is_bipartite"
+        ),
+    )
+
+
+#: maximal matching: handshake round cap (loop exits when no active
+#: edge remains — expected O(log E) rounds with hashed priorities); a
+#: safety cap: exhausting it with edges left raises
+MATCH_MAX_ROUNDS = 40
+
+
+def q_iter_maximal_matching(spark, sf_dir):
+    """Parallel MAXIMAL MATCHING on the co-purchase graph by Luby-style
+    rounds on the LINE GRAPH: give every active edge a per-round hashed
+    priority (xxhash64(src, dst, round) with (src, dst) tiebreak — a
+    deterministic stand-in for Luby randomness), select every edge that
+    is the STRICT minimum among all edges touching either endpoint
+    (locally-min edges are vertex-disjoint by construction), remove the
+    matched vertices, repeat until NO active edge remains — so
+    maximality holds by construction (an empty active set means every
+    original edge touches a matched vertex).  Expected constant
+    fraction of edges cleared per round => O(log E) rounds; per round
+    one symmetrized incidence agg and one self-join, all co-partitioned
+    by vertex; the only driver traffic is the per-round empty check.
+    Deterministic, so the result is stable across partitionings.
+
+    Rows-only key by design: a maximal matching is not unique SQL —
+    correctness is the PROPERTY pair verified in pytest
+    (tests/test_r6x_matching.py): (1) no vertex appears twice;
+    (2) no edge has both endpoints unmatched (maximality)."""
+    load_tables(spark, sf_dir)
+    active = (
+        spark.table("edges_pp")
+        .filter(F.col("src") < F.col("dst"))
+        .transform(checkpoint_without_stats)
+    )
+    # start from a zero-row frame with the edge schema so an empty graph
+    # (the loop breaks before matching anything) returns empty, not None
+    matched = active.select("src", "dst").limit(0)
+    for rnd in range(MATCH_MAX_ROUNDS):
+        if active.limit(1).count() == 0:
+            break
+        # r12: no checkpoint here — pri is a deterministic narrow map
+        # (xxhash64 of the row + round literal) over the ALREADY
+        # materialized `active`, so the three consumers below recompute
+        # it from in-memory blocks for less than the full second copy
+        # of the edge set the old per-round checkpoint wrote (one fewer
+        # action and one fewer resident block set per round; identical
+        # priorities, hence identical matching)
+        e = active.withColumn(
+            "pri",
+            F.struct(
+                F.xxhash64(F.col("src"), F.col("dst"), F.lit(rnd)),
+                F.col("src"),
+                F.col("dst"),
+            ),
+        )
+        inc = e.select(F.col("src").alias("x"), "pri").unionAll(
+            e.select(F.col("dst").alias("x"), "pri")
+        )
+        vmin = inc.groupBy("x").agg(F.min("pri").alias("m"))
+        hands = (
+            e.join(
+                vmin.select(F.col("x").alias("u"), F.col("m").alias("mu")),
+                (F.col("src") == F.col("u")) & (F.col("pri") == F.col("mu")),
+            )
+            .join(
+                vmin.select(F.col("x").alias("v"), F.col("m").alias("mv")),
+                (F.col("dst") == F.col("v")) & (F.col("pri") == F.col("mv")),
+            )
+            .select("src", "dst")
+            .transform(checkpoint_without_stats)
+        )
+        matched = matched.unionAll(hands)
+        gone = (
+            hands.select(F.col("src").alias("g"))
+            .unionAll(hands.select(F.col("dst").alias("g")))
+            .distinct()
+        )
+        active = (
+            active.join(gone, F.col("src") == F.col("g"), "left_anti")
+            .join(gone, F.col("dst") == F.col("g"), "left_anti")
+            .transform(checkpoint_without_stats)
+        )
+    else:
+        if not active.isEmpty():
+            raise RuntimeError(
+                f"iter_maximal_matching: MATCH_MAX_ROUNDS={MATCH_MAX_ROUNDS} "
+                "exhausted with active edges left; the matching would not "
+                "be maximal"
+            )
+    return matched.select(
+        F.col("src").alias("u"), F.col("dst").alias("v")
+    ).orderBy("u")
+
+
+#: Sinkhorn sweeps (each = one row-normalize + one col-normalize)
+SINK_ITERS = 8
+
+
+def _sinkhorn_sweep(arr: str, axis: str, dialect: str) -> str:
+    """One Sinkhorn half-sweep (normalize along `axis`) over a sorted
+    array of {r, d, v} cells named `arr`.  The row/col sum is an ORDERED
+    fold over the array, so every float add happens in the same fixed
+    order on both engines.  Each sweep is bound to its own column/CTE by
+    the caller — inlining them would nest the array expression
+    exponentially."""
+    pred = f"y.{axis} = x.{axis}"
+    if dialect == "spark":
+        fold = (
+            f"aggregate(filter({arr}, y -> {pred}), "
+            "cast(0.0 as double), (acc, z) -> acc + z.v)"
+        )
+        return (
+            f"transform({arr}, x -> named_struct('r', x.r, 'd', x.d, "
+            f"'v', x.v / {fold}))"
+        )
+    fold = (
+        f"list_reduce(list_prepend(0.0, list_transform("
+        f"list_filter({arr}, y -> {pred}), z -> z.v)), "
+        "(acc, w) -> acc + w)"
+    )
+    return (
+        f"list_transform({arr}, x -> {{'r': x.r, 'd': x.d, "
+        f"'v': x.v / {fold}}})"
+    )
+
+
+def q_iter_sinkhorn(spark, sf_dir):
+    """Sinkhorn-Knopp scaling of the event_type x day-of-week count
+    matrix to (nearly) doubly stochastic — the optimal-transport /
+    rate-bias-correction workhorse: what remains after row and column
+    effects are scaled away is the pure interaction structure.
+
+    The grid is the bounded enum cross (5 types x 7 weekdays), so the
+    whole matrix travels as ONE sorted array of {r, d, v} structs and
+    the 8 sweeps run as 16 one-row `iterate()` half-sweeps; every
+    row/column sum is an ORDERED fold over that array, so both engines
+    stream identical doubles (the same generator emits both dialects).
+    Output: the scaled matrix plus each cell's row/col id, 6dp."""
+    load_tables(spark, sf_dir)
+    e = spark.table("events")
+    cells = e.groupBy(
+        F.col("event_type").alias("r"), F.dayofweek("ts").alias("d")
+    ).agg(F.count(F.lit(1)).cast("double").alias("v"))
+    packed = cells.groupBy().agg(
+        F.array_sort(F.collect_list(F.struct("r", "d", "v"))).alias("a")
+    )
+
+    def half_sweep(state, i):
+        axis = "r" if i % 2 else "d"  # odd: rows, even: columns
+        return state.select(
+            F.expr(_sinkhorn_sweep("a", axis, "spark")).alias("a")
+        )
+
+    # checkpoint per half-sweep: Catalyst's ProjectCollapse would
+    # otherwise inline all 16 half-sweeps into ONE expression, and each
+    # references its input array 3x -> a 3^16-node tree.  The
+    # checkpointed frame is a single row (the bounded enum grid).
+    res = iterate(packed, half_sweep, 2 * SINK_ITERS, checkpoint_every=1)
+    out = res.state.select(F.explode("a").alias("c"))
+    return out.select(
+        F.col("c")["r"].alias("event_type"),
+        F.col("c")["d"].alias("dow"),
+        F.round(F.col("c")["v"], 6).alias("scaled"),
+    )
+
+
+#: Markov absorption sweeps and the absorbing state
+MARKOV_K = 12
+MARKOV_ABSORB = "purchase"
+
+
+def _markov_step(vp: str, tm: str, dialect: str) -> str:
+    """One v' = vP sweep: for every state b, sum over incoming
+    transitions of v[a] * k_ab / k_a, folded in the (sorted) transition
+    array's fixed order — identical float sequences on both engines."""
+    if dialect == "spark":
+        look = f"element_at(filter({vp}, y -> y.s = x.a), 1).p"
+        return (
+            f"transform({vp}, vb -> named_struct('s', vb.s, 'p', "
+            f"aggregate(filter({tm}, x -> x.b = vb.s), cast(0.0 as double), "
+            f"(acc, x) -> acc + {look} * x.k / x.ka)))"
+        )
+    look = f"list_filter({vp}, y -> y.s = x.a)[1].p"
+    return (
+        f"list_transform({vp}, vb -> {{'s': vb.s, 'p': "
+        f"list_reduce(list_prepend(0.0, list_transform("
+        f"list_filter({tm}, x -> x.b = vb.s), "
+        f"x -> {look} * x.k / x.ka)), (acc, w) -> acc + w)}})"
+    )
+
+
+def q_iter_markov_absorption(spark, sf_dir):
+    """ABSORBING Markov funnel: iterate the per-user event-transition
+    chain K=12 steps from a uniform start over non-purchase states, with
+    'purchase' made absorbing — the probability mass absorbed by step K
+    is the funnel's eventual-conversion estimate (the iteration on top
+    of the matrix that agg_markov_transitions only reports).
+
+    The state space is the bounded event-type enum, so the transition
+    matrix and the state vector travel as two sorted struct arrays and
+    each sweep is one ordered-fold transform, bound per iteration to a
+    localCheckpoint / MATERIALIZED CTE (the Sinkhorn lesson: engines
+    inline chained array expressions exponentially otherwise)."""
+    load_tables(spark, sf_dir)
+    from pyspark.sql import Window
+
+    e = spark.table("events").select(
+        "user_id", "event_type", "ts", "event_id"
+    )
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    pairs = e.select(
+        F.col("event_type").alias("a"),
+        F.lead("event_type").over(w).alias("b"),
+    ).filter(F.col("b").isNotNull())
+    # absorbing: rewrite purchase's outgoing edges as a self-loop
+    pairs = pairs.select(
+        "a",
+        F.when(F.col("a") == MARKOV_ABSORB, F.lit(MARKOV_ABSORB)).otherwise(
+            F.col("b")
+        ).alias("b"),
+    )
+    tm = (
+        pairs.groupBy("a", "b")
+        .agg(F.count(F.lit(1)).cast("double").alias("k"))
+        .withColumn(
+            "ka", F.sum("k").over(Window.partitionBy("a"))
+        )
+    )
+    states = tm.select(F.col("a").alias("s")).distinct()
+    v0 = states.select(
+        "s",
+        F.when(F.col("s") == MARKOV_ABSORB, F.lit(0.0))
+        .otherwise(F.lit(0.25))
+        .alias("p"),
+    )
+    packed = tm.groupBy().agg(
+        F.array_sort(F.collect_list(F.struct("a", "b", "k", "ka"))).alias(
+            "tm"
+        )
+    ).crossJoin(
+        v0.groupBy().agg(
+            F.array_sort(F.collect_list(F.struct("s", "p"))).alias("vp")
+        )
+    )
+
+    def sweep(state, _i):
+        return state.select(
+            "tm", F.expr(_markov_step("vp", "tm", "spark")).alias("vp")
+        )
+
+    res = iterate(packed, sweep, MARKOV_K, checkpoint_every=1)
+    out = res.state.select(F.explode("vp").alias("c"))
+    return out.select(
+        F.col("c")["s"].alias("state"),
+        F.round(F.col("c")["p"], 6).alias("mass_after_k"),
+    )
+
+
 QUERIES = {
     "iter_markov_walk": q_iter_markov_walk,
     "iter_label_propagation": q_iter_label_propagation,
@@ -630,6 +1367,15 @@ QUERIES = {
     "inc_apriori_pairs": q_inc_apriori_pairs,
     "inc_iter_warmstart": q_inc_iter_warmstart,
     "iter_triangle_count": q_iter_triangle_count,
+    "iter_scc": q_iter_scc,
+    "iter_als_topitems": q_iter_als_topitems,
+    "iter_graph_diameter": q_iter_graph_diameter,
+    "iter_katz_centrality": q_iter_katz_centrality,
+    "iter_closeness_centrality": q_iter_closeness_centrality,
+    "iter_bipartite_check": q_iter_bipartite_check,
+    "iter_maximal_matching": q_iter_maximal_matching,
+    "iter_sinkhorn": q_iter_sinkhorn,
+    "iter_markov_absorption": q_iter_markov_absorption,
 }
 
 ORACLES = {
@@ -733,6 +1479,131 @@ ORACLES = {
     # golden-checked (numpy replica) remains: inc_iter_warmstart
     # (tol-converged floats — the iteration COUNT depends on float
     # comparisons, which no fixed unrolling can express).
+    "iter_graph_diameter": (
+        cte("edges_pp")
+        + ", w1(node, dist) AS ( "
+        "SELECT CAST((SELECT min(src) FROM edges_pp) AS BIGINT), 0 "
+        "UNION "
+        "SELECT e.dst, w.dist + 1 FROM w1 w JOIN edges_pp e ON e.src = w.node "
+        f"WHERE w.dist < {DIAM_HOPS}), "
+        "d1 AS (SELECT node, min(dist) AS dist FROM w1 GROUP BY node), "
+        "per AS (SELECT node FROM d1 ORDER BY dist DESC, node LIMIT 1), "
+        "w2(node, dist) AS ( "
+        "SELECT CAST((SELECT node FROM per) AS BIGINT), 0 "
+        "UNION "
+        "SELECT e.dst, w.dist + 1 FROM w2 w JOIN edges_pp e ON e.src = w.node "
+        f"WHERE w.dist < {DIAM_HOPS}), "
+        "d2 AS (SELECT node, min(dist) AS dist FROM w2 GROUP BY node) "
+        "SELECT CAST((SELECT min(src) FROM edges_pp) AS BIGINT) "
+        "AS sweep1_source, "
+        "CAST((SELECT node FROM per) AS BIGINT) AS peripheral_node, "
+        "CAST(max(dist) AS INT) AS diameter_est, "
+        "count(*) AS n_reached FROM d2 "
+        # empty graph: the Spark side returns no row (empty-seed guard)
+        "HAVING (SELECT min(src) FROM edges_pp) IS NOT NULL"
+    ).replace("WITH ", "WITH RECURSIVE ", 1),
+    "iter_katz_centrality": (
+        cte("edges_pp")
+        + _katz_unroll()
+        + f" SELECT node, x, round(x / {KATZ_UNIT}.0, 6) AS katz "
+        f"FROM x{KATZ_ITERS}"
+    ),
+    "iter_closeness_centrality": (
+        cte("edges_pp")
+        + (
+            f", land AS (SELECT DISTINCT src AS lm FROM edges_pp "
+            f"ORDER BY lm LIMIT {CLOSE_K}), "
+            "bfs(lm, node, dist) AS ("
+            "SELECT lm, lm, 0 FROM land "
+            "UNION "
+            "SELECT b.lm, e.dst, b.dist + 1 FROM bfs b "
+            f"JOIN edges_pp e ON e.src = b.node WHERE b.dist < {CLOSE_HOPS}"
+            "), "
+            "md AS (SELECT lm, node, min(dist) AS dist FROM bfs "
+            "GROUP BY 1, 2) "
+            "SELECT lm AS landmark, "
+            "CAST(count(*) - 1 AS BIGINT) AS n_reached, "
+            "CAST(sum(dist) AS BIGINT) AS sum_dist, "
+            "((2 * 1000000 * (count(*) - 1) + sum(dist)) // "
+            "(2 * sum(dist))) / 1000000.0 AS closeness "
+            "FROM md GROUP BY 1"
+        )
+    ).replace("WITH ", "WITH RECURSIVE ", 1),
+    "iter_bipartite_check": (
+        cte("edges_pp")
+        + (
+            ", bfs(node, dist) AS ("
+            "SELECT (SELECT min(src) FROM edges_pp), 0 "
+            "UNION "
+            "SELECT e.dst, b.dist + 1 FROM bfs b "
+            f"JOIN edges_pp e ON e.src = b.node WHERE b.dist < {BIP_HOPS}"
+            "), "
+            "col AS (SELECT node, min(dist) % 2 AS c FROM bfs GROUP BY 1) "
+            "SELECT (SELECT min(src) FROM edges_pp) AS bfs_source, "
+            "CAST(count(*) AS BIGINT) AS n_edges_colored, "
+            "CAST(sum(CASE WHEN s.c = d.c THEN 1 ELSE 0 END) AS BIGINT) "
+            "AS n_monochrome, "
+            "sum(CASE WHEN s.c = d.c THEN 1 ELSE 0 END) = 0 AS is_bipartite "
+            "FROM edges_pp e JOIN col s ON e.src = s.node "
+            "JOIN col d ON e.dst = d.node "
+            # empty graph: no colored edges, no report row (matches the
+            # Spark-side empty-seed guard)
+            "HAVING count(*) > 0"
+        )
+    ).replace("WITH ", "WITH RECURSIVE ", 1),
+    "iter_sinkhorn": (
+        "WITH cells AS (SELECT event_type AS r, dayofweek(ts) + 1 AS d, "
+        "CAST(count(*) AS DOUBLE) AS v FROM events GROUP BY 1, 2), "
+        "t0 AS (SELECT list({'r': r, 'd': d, 'v': v} ORDER BY r, d) "
+        "AS a0 FROM cells), "
+        # MATERIALIZED: DuckDB inlines plain CTEs, and each sweep
+        # references its input twice -> 2^16 copies of the seed array
+        + ", ".join(
+            f"tr{k} AS MATERIALIZED (SELECT "
+            + _sinkhorn_sweep(f"a{k}", "r", "duckdb")
+            + f" AS ar{k} FROM t{k}), "
+            f"t{k + 1} AS MATERIALIZED (SELECT "
+            + _sinkhorn_sweep(f"ar{k}", "d", "duckdb")
+            + f" AS a{k + 1} FROM tr{k})"
+            for k in range(SINK_ITERS)
+        )
+        + f", s AS (SELECT unnest(a{SINK_ITERS}) AS c FROM t{SINK_ITERS}) "
+        "SELECT c.r AS event_type, CAST(c.d AS INT) AS dow, "
+        "round(c.v, 6) AS scaled FROM s"
+    ),
+    "iter_markov_absorption": (
+        "WITH pairs0 AS (SELECT event_type AS a, "
+        "lead(event_type) OVER (PARTITION BY user_id "
+        "ORDER BY ts, event_id) AS b FROM events), "
+        f"pairs AS (SELECT a, CASE WHEN a = '{MARKOV_ABSORB}' "
+        f"THEN '{MARKOV_ABSORB}' ELSE b END AS b FROM pairs0 "
+        "WHERE b IS NOT NULL), "
+        "tm0 AS (SELECT a, b, CAST(count(*) AS DOUBLE) AS k "
+        "FROM pairs GROUP BY 1, 2), "
+        "tmr AS (SELECT a, b, k, sum(k) OVER (PARTITION BY a) AS ka "
+        "FROM tm0), "
+        "t0 AS MATERIALIZED (SELECT "
+        "(SELECT list({'a': a, 'b': b, 'k': k, 'ka': ka} "
+        "ORDER BY a, b) FROM tmr) AS tm, "
+        "(SELECT list({'s': s, 'p': CASE WHEN s = "
+        f"'{MARKOV_ABSORB}' THEN 0.0 ELSE 0.25 END}} ORDER BY s) "
+        "FROM (SELECT DISTINCT a AS s FROM tmr)) AS vp0), "
+        + ", ".join(
+            f"t{i + 1} AS MATERIALIZED (SELECT tm, "
+            + _markov_step(f"vp{i}", "tm", "duckdb")
+            + f" AS vp{i + 1} FROM t{i})"
+            for i in range(MARKOV_K)
+        )
+        + f", s AS (SELECT unnest(vp{MARKOV_K}) AS c FROM t{MARKOV_K}) "
+        "SELECT c.s AS state, round(c.p, 6) AS mass_after_k FROM s"
+    ),
+    # iter_scc: rows-only by design (recursive mutual-reachability);
+    # python Tarjan golden in test_scc_matches_tarjan_golden.
+    # iter_maximal_matching: rows-only by design (matching is not unique
+    # SQL); property-verified in test_is_a_matching and test_maximality.
+    # iter_als_topitems: rows-only (trained float artifact);
+    # test_als_converges_and_is_deterministic pins convergence (RMSE
+    # decreases over sweeps) and determinism.
 }
 
 

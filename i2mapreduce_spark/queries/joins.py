@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Window, functions as F
 
 from ..catalog import load_tables
+from .aggregates import _md5_le
 
 
 def q_join_broadcast(spark, sf_dir):
@@ -766,6 +767,512 @@ def q_join_point_in_time(spark, sf_dir):
     )
 
 
+# =================================================================
+# Group C — join shapes
+# =================================================================
+BLOOM_BITS = 1024
+BLOOM_HASHES = 3
+BLOOM_TOPN = 5
+
+
+def q_join_bloom_prefilter(spark, sf_dir):
+    """Bloom-filter pre-filtered semi join — the runtime-filter pattern:
+    the dim side (top-5 customers by total order value) builds a tiny
+    bit set (3 portable md5 hashes into 1024 bits, collected as a
+    BOUNDED driver list of set bit positions — the broadcast runtime
+    filter), the fact side drops rows whose 3 probe bits are not all
+    set BEFORE the shuffle, and an exact semi join afterwards removes
+    bloom false positives — so the RESULT equals the plain semi join
+    (hash-checked) while the plan ships only pre-filtered rows.  At
+    100 TB this is Spark's own runtime-filtering shape, spelled
+    explicitly."""
+    load_tables(spark, sf_dir)
+    o = spark.table("orders")
+    # NULL custkeys are not customers and can never equi-match the semi
+    # join — drop them BEFORE the top-N ranking so they neither burn a
+    # rank slot (engine NULL-ordering divergence on ties) nor reach the
+    # driver-side bit-position collect as None
+    top = (
+        o.filter(F.col("o_custkey").isNotNull())
+        .groupBy("o_custkey")
+        .agg(F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("v"))
+        .withColumn(
+            "rn", F.row_number().over(Window.orderBy(F.col("v").desc(), "o_custkey"))
+        )
+        .filter(F.col("rn") <= BLOOM_TOPN)
+        .select("o_custkey")
+    )
+    key = F.col("o_custkey").cast("string")
+    pos_cols = [
+        (_md5_le(F.concat(key, F.lit(f"@{i}")), 4) % BLOOM_BITS).alias(f"p{i}")
+        for i in range(BLOOM_HASHES)
+    ]
+    # bounded collect: <= TOPN * HASHES bit positions (the runtime filter)
+    bits = sorted(
+        {
+            r[f"p{i}"]
+            for r in top.select(*pos_cols).collect()
+            for i in range(BLOOM_HASHES)
+        }
+    )
+    bit_arr = F.array(*[F.lit(b) for b in bits])
+    probe_ok = None
+    for i in range(BLOOM_HASHES):
+        c = F.array_contains(
+            bit_arr, _md5_le(F.concat(key, F.lit(f"@{i}")), 4) % BLOOM_BITS
+        )
+        probe_ok = c if probe_ok is None else (probe_ok & c)
+    return (
+        o.filter(probe_ok)  # bloom pre-filter: false positives possible
+        .join(top, "o_custkey", "left_semi")  # exact: removes them
+        .groupBy("o_custkey")
+        .agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            F.round(
+                F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast(
+                    "double"
+                ),
+                2,
+            ).alias("total_value"),
+        )
+    )
+
+
+# =================================================================
+# Group C/J — hierarchical rollup (the recursive-CTE query class)
+# =================================================================
+def q_cte_recursive_rollup(spark, sf_dir):
+    """Hierarchical subtree rollup over the implicit decimal tree on
+    customer keys (parent(k) = k div 10, roots 1-9): every customer's
+    descendant count and total subtree order revenue — the recursive-CTE
+    query class (org charts, BOM explosions, category trees).
+
+    Plan: recursion is REWRITTEN as a bounded ancestor-explode — each
+    customer emits (ancestor, revenue) for its div-10 ancestors — 18
+    levels, enough for ANY int64 key (10^18 > 2^63/10), so the bound is
+    type-derived, not data-derived — then one partial+final
+    agg on the ancestor key.  That is the scale-appropriate plan: a
+    loop of self-joins runs depth sequential shuffles, while this is
+    ONE generate + ONE shuffle regardless of depth; the DuckDB oracle
+    keeps the textbook WITH RECURSIVE form to pin identical semantics.
+    Revenue is exact integer cents."""
+    load_tables(spark, sf_dir)
+    c = spark.table("customer").select("c_custkey")
+    o = spark.table("orders").select(
+        "o_custkey",
+        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
+        .cast("long")
+        .alias("cents"),
+    )
+    rev = (
+        c.join(o, c.c_custkey == o.o_custkey, "left")
+        .groupBy("c_custkey")
+        .agg(F.coalesce(F.sum("cents"), F.lit(0)).alias("own_cents"))
+    )
+    # ancestors of k: always k itself, then k div 10, k div 100, ... while
+    # > 0 (custkeys start at 0 — key 0 is a single-node root, so self
+    # membership cannot hinge on the a > 0 walk condition)
+    anc = rev.select(
+        F.explode(
+            F.expr(
+                "array_distinct(concat(array(c_custkey), "
+                "filter(transform(sequence(1, 18), "
+                "p -> c_custkey div cast(pow(10, p) as bigint)), a -> a > 0)))"
+            )
+        ).alias("anc_key"),
+        "own_cents",
+    )
+    rolled = anc.groupBy("anc_key").agg(
+        F.count(F.lit(1)).alias("n_desc"),
+        F.sum("own_cents").alias("subtree_cents"),
+    )
+    # report only keys that are actual customers (interior synthetic
+    # ancestors like 12 exist as customers too under TPC-H dense keys)
+    return (
+        rolled.join(rev, rolled.anc_key == rev.c_custkey)
+        .select(
+            F.col("c_custkey").alias("custkey"),
+            "n_desc",
+            (F.col("subtree_cents") / 100.0).alias("subtree_revenue"),
+        )
+    )
+
+
+# =================================================================
+# Group C — blocked fuzzy join (entity resolution)
+# =================================================================
+FUZZY_T = 3  #: max edit distance for a match
+
+
+def q_join_fuzzy_blocked(spark, sf_dir):
+    """Entity-resolution fuzzy join over the part-name vocabulary:
+    candidate pairs are generated ONLY within a blocking key (the name's
+    last token — the head noun), then scored by exact Levenshtein and
+    kept at distance ≤ 3 — the blocking+scoring shape of every record-
+    linkage pipeline (never the quadratic all-pairs).
+
+    Plan: names dedupe to the vocabulary first (64 names at any SF —
+    name count is a fixture vocabulary, part count scales), so the pair
+    join runs on the TINY distinct spine and the per-name part counts
+    join back.  At 100 TB the same plan holds: block-keyed equi-join on
+    the deduped vocabulary; a skewed block is re-blocked by a second key
+    (length bucket), the standard ER mitigation.  Levenshtein semantics
+    already hash-checked cross-engine by fn_levenshtein."""
+    load_tables(spark, sf_dir)
+    p = spark.table("part")
+    names = p.groupBy("p_name").agg(F.count(F.lit(1)).alias("n_parts"))
+    blocked = names.select(
+        "p_name",
+        "n_parts",
+        F.element_at(F.split("p_name", " "), -1).alias("blk"),
+    )
+    a = blocked.select(
+        F.col("p_name").alias("name_a"),
+        F.col("n_parts").alias("parts_a"),
+        "blk",
+    )
+    b = blocked.select(
+        F.col("p_name").alias("name_b"),
+        F.col("n_parts").alias("parts_b"),
+        "blk",
+    )
+    pairs = (
+        a.join(b, "blk")
+        .filter(F.col("name_a") < F.col("name_b"))
+        .withColumn("dist", F.levenshtein("name_a", "name_b"))
+        .filter(F.col("dist") <= FUZZY_T)
+    )
+    return pairs.select("blk", "name_a", "name_b", "dist", "parts_a", "parts_b")
+
+
+def q_join_allen_intervals(spark, sf_dir):
+    """Allen's interval algebra over order fulfilment windows: classify
+    every ordered pair of a customer's orders (interval = orderdate ..
+    last shipdate) into the 13 Allen relations (precedes, meets,
+    overlaps, starts, during, finishes, equals + inverses) and count
+    each — the temporal-reasoning primitive behind scheduling and
+    process-mining engines.
+
+    Plan: one agg to per-order intervals, one SELF-JOIN CO-PARTITIONED
+    BY CUSTOMER (pair counts bounded per key by orders-per-customer,
+    never a global cross product), a CASE ladder of pure date
+    comparisons, then a bounded 13-row count.  Pairs are ordered by
+    (start, end, orderkey) so each unordered pair is classified exactly
+    once and inverse relations are genuinely distinct outcomes."""
+    load_tables(spark, sf_dir)
+    o = spark.table("orders")
+    li = spark.table("lineitem")
+    iv = (
+        o.join(li, F.col("l_orderkey") == F.col("o_orderkey"))
+        .groupBy("o_orderkey", "o_custkey", "o_orderdate")
+        .agg(F.max("l_shipdate").alias("e"))
+        .select(
+            "o_custkey",
+            F.col("o_orderkey").alias("ok"),
+            F.col("o_orderdate").alias("s"),
+            "e",
+        )
+    )
+    pairs = (
+        iv.alias("a")
+        .join(iv.alias("b"), "o_custkey")
+        .filter(
+            F.expr(
+                "struct(a.s, a.e, a.ok) < struct(b.s, b.e, b.ok)"
+            )
+        )
+    )
+    rel = F.expr(
+        "CASE "
+        "WHEN a.e < b.s THEN 'precedes' "
+        "WHEN a.e = b.s AND a.s < b.s THEN 'meets' "
+        "WHEN a.s = b.s AND a.e = b.e THEN 'equals' "
+        "WHEN a.s = b.s AND a.e < b.e THEN 'starts' "
+        "WHEN a.s = b.s AND a.e > b.e THEN 'started_by' "
+        "WHEN a.s < b.s AND a.e = b.e THEN 'finished_by' "
+        "WHEN a.s < b.s AND a.e > b.e THEN 'contains' "
+        "WHEN a.s < b.s AND a.e < b.e THEN 'overlaps' "
+        "ELSE 'other' END"
+    )
+    return (
+        pairs.select(rel.alias("relation"))
+        .groupBy("relation")
+        .agg(F.count(F.lit(1)).alias("n_pairs"))
+    )
+
+
+#: similarity join threshold (Jaccard, as a ratio p/q = 4/5)
+SIMJ_P, SIMJ_Q = 4, 5
+
+
+def q_join_similarity_prefix_filter(spark, sf_dir):
+    """Set-similarity self-join with PREFIX FILTERING (PPJoin family):
+    find document pairs whose word-TRIGRAM sets have Jaccard >= 4/5.
+    The naive candidate set — every pair sharing ANY trigram — explodes
+    on common shingles; the prefix filter orders each doc's trigrams by
+    ascending global frequency and probes only the first
+    |s| - ceil(t|s|) + 1 RAREST of them, which provably cannot miss a
+    qualifying pair (two sets with Jaccard >= t must collide inside
+    their prefixes under any consistent global order).
+
+    Plan: trigram df agg, per-doc rank window (co-partitioned by doc),
+    candidate equi-join keyed by rare trigrams, exact intersection
+    count on candidates only, INTEGER threshold test
+    (J >= p/q  <=>  (p+q)*c >= p*(sa+sb)).  The oracle is the
+    unfiltered all-shared-trigram join — correct at fixture scale and
+    precisely the blowup the prefix plan avoids at 100 TB."""
+    load_tables(spark, sf_dir)
+    # complete-case: a missing document has no trigram set — and the
+    # NULL-length sequence(1, greatest(NULL, 0)) = sequence(1, 0) is
+    # Spark's DESCENDING [1, 0], which would fabricate '' trigrams
+    d = spark.table("documents").filter(F.col("text").isNotNull())
+    ws = F.split("text", " ")
+    tri = (
+        d.select(
+            "doc_id",
+            F.explode(
+                F.expr(
+                    "transform(sequence(1, greatest(size(split(text, ' ')) - 2, 0)), "
+                    "i -> concat_ws(' ', slice(split(text, ' '), i, 3)))"
+                )
+            ).alias("t"),
+        )
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    sizes = tri.groupBy("doc_id").agg(F.count(F.lit(1)).alias("s"))
+    df = tri.groupBy("t").agg(F.count(F.lit(1)).alias("df"))
+    wd = Window.partitionBy("doc_id").orderBy("df", "t")
+    ranked = (
+        tri.join(df, "t")
+        .withColumn("rn", F.row_number().over(wd))
+        .join(sizes, "doc_id")
+    )
+    # prefix_len = s - ceil(t*s) + 1, ceil(p*s/q) = (p*s + q - 1) div q
+    prefix = ranked.filter(
+        F.col("rn")
+        <= F.col("s") - F.expr(f"({SIMJ_P} * s + {SIMJ_Q} - 1) div {SIMJ_Q}") + 1
+    ).select("doc_id", "t")
+    cand = (
+        prefix.alias("a")
+        .join(prefix.alias("b"), "t")
+        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+        .select(
+            F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db")
+        )
+        .distinct()
+    )
+    inter = (
+        cand.join(tri.alias("x"), F.col("da") == F.col("x.doc_id"))
+        .join(
+            tri.alias("y"),
+            (F.col("db") == F.col("y.doc_id"))
+            & (F.col("x.t") == F.col("y.t")),
+        )
+        .groupBy("da", "db")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    scored = (
+        inter.join(sizes.withColumnRenamed("doc_id", "da"), "da")
+        .withColumnRenamed("s", "sa")
+        .join(sizes.withColumnRenamed("doc_id", "db"), "db")
+        .withColumnRenamed("s", "sb")
+    )
+    return scored.filter(
+        (SIMJ_P + SIMJ_Q) * F.col("c") >= SIMJ_P * (F.col("sa") + F.col("sb"))
+    ).select(
+        "da",
+        "db",
+        "c",
+        "sa",
+        "sb",
+        F.expr(
+            "(2 * 1000 * c + (sa + sb - c)) div (2 * (sa + sb - c))"
+        ).alias("jaccard_pm"),
+    )
+
+
+#: longest-prefix routing rules (prefix -> route), '' = default route
+LPM_RULES = (
+    ("STANDARD", "std"),
+    ("STANDARD ANODIZED", "std-anodized"),
+    ("SMALL", "small"),
+    ("SMALL PLATED", "small-plated"),
+    ("PROMO", "promo"),
+    ("PROMO BURNISHED", "promo-burnished"),
+    ("ECONOMY", "economy"),
+    ("", "default"),
+)
+
+
+def q_join_longest_prefix(spark, sf_dir):
+    """LONGEST-PREFIX-MATCH join: classify every part type against a
+    rule table where more specific prefixes win ('PROMO BURNISHED'
+    beats 'PROMO' beats the '' default) — the routing-table semantics
+    behind CIDR lookup, URL rules and product taxonomies, which a plain
+    equi- or any-match join cannot express.
+
+    Plan: the rule table is a literal bounded VALUES relation, the match
+    is a starts_with theta-join (Spark auto-broadcasts the tiny build
+    side), and the winner per part is one max_by on (prefix length,
+    prefix) — deterministic even if two rules tie in length.  Output is
+    the bounded per-route roll-up."""
+    load_tables(spark, sf_dir)
+    p = spark.table("part")
+    rows = ", ".join(f"('{pre}', '{route}')" for pre, route in LPM_RULES)
+    rules = spark.sql(f"SELECT * FROM VALUES {rows} AS t(prefix, route)")
+    m = p.join(rules, F.expr("startswith(p_type, prefix)"))
+    best = m.groupBy("p_partkey").agg(
+        F.max_by(
+            "route", F.struct(F.length("prefix"), F.col("prefix"))
+        ).alias("route")
+    )
+    return best.groupBy("route").agg(
+        F.count(F.lit(1)).alias("n_parts"),
+        F.min("p_partkey").alias("min_key"),
+        F.max("p_partkey").alias("max_key"),
+    )
+
+
+_LPM_ROWS = ", ".join(f"('{p}', '{r}')" for p, r in LPM_RULES)
+
+
+#: interpolation curve: (quantity breakpoint, rate per-million)
+CURVE = ((1, 0), (10, 20_000), (25, 55_000), (40, 80_000), (50, 100_000))
+
+
+def q_join_interpolate_curve(spark, sf_dir):
+    """PIECEWISE-LINEAR interpolation join: look up each lineitem's
+    quantity on a breakpoint rate curve and LINEARLY INTERPOLATE
+    between the surrounding knots — the rate-card / yield-curve / tax-
+    bracket lookup that is neither an equi-join (values fall between
+    knots) nor an as-of join (as-of would step, not slope).
+
+    Plan: the bounded literal curve gains its next knot via lead(),
+    the knot interval matches with ONE theta-join (auto-broadcast tiny
+    build side), and the interpolated rate is an EXACT half-up
+    per-million integer: r = r0 + (q - q0) * (r1 - r0) / (q1 - q0) on
+    integer operands (the numerator is non-negative: the curve is
+    monotone)."""
+    load_tables(spark, sf_dir)
+    li = spark.table("lineitem").select(
+        "l_orderkey",
+        "l_linenumber",
+        F.col("l_quantity").cast("long").alias("q"),
+    )
+    rows = ", ".join(f"({q}, {r})" for q, r in CURVE)
+    curve = spark.sql(
+        f"SELECT q0, r0, lead(q0) OVER (ORDER BY q0) AS q1, "
+        f"lead(r0) OVER (ORDER BY q0) AS r1 "
+        f"FROM VALUES {rows} AS t(q0, r0)"
+    ).filter(F.col("q1").isNotNull())
+    j = li.join(
+        curve,
+        (F.col("q") >= F.col("q0")) & (F.col("q") < F.col("q1")),
+    )
+    rate = F.expr(
+        "r0 + (2 * (q - q0) * (r1 - r0) + (q1 - q0)) div (2 * (q1 - q0))"
+    )
+    return j.select(
+        "l_orderkey",
+        "l_linenumber",
+        "q",
+        (rate / 1000000.0).alias("interp_rate"),
+    )
+
+
+_CURVE_ROWS = ", ".join(f"({q}, {r})" for q, r in CURVE)
+
+
+def q_join_not_in_null_trap(spark, sf_dir):
+    """The NOT-IN-WITH-NULL trap, codified: a probe list CONTAINING A
+    NULL makes `x NOT IN (list)` evaluate to UNKNOWN for every row
+    (three-valued logic), so the NOT IN branch returns ZERO rows while
+    the NOT EXISTS branch returns the expected complement — the ANSI
+    semantics both engines implement and production queries routinely
+    get wrong.  Output: both counts side by side plus the trap's row
+    deficit, a regression guard on the engines' null logic."""
+    load_tables(spark, sf_dir)
+    spark.sql(
+        "CREATE OR REPLACE TEMP VIEW _probe AS "
+        "SELECT * FROM VALUES (1), (2), (3), (NULL) AS t(k)"
+    )
+    not_in = spark.sql(
+        "SELECT count(*) AS c FROM nation "
+        "WHERE n_nationkey NOT IN (SELECT k FROM _probe)"
+    )
+    not_exists = spark.sql(
+        "SELECT count(*) AS c FROM nation n WHERE NOT EXISTS "
+        "(SELECT 1 FROM _probe p WHERE p.k = n.n_nationkey)"
+    )
+    return (
+        not_in.select(F.col("c").alias("not_in_rows"))
+        .crossJoin(
+            not_exists.select(F.col("c").alias("not_exists_rows"))
+        )
+        .select(
+            "not_in_rows",
+            "not_exists_rows",
+            (F.col("not_exists_rows") - F.col("not_in_rows")).alias(
+                "trap_deficit"
+            ),
+        )
+    )
+
+
+def q_join_basket_overlap(spark, sf_dir):
+    """BASKET-OVERLAP matrix: for every pair of nations, the overlap
+    coefficient |A ∩ B| / min(|A|, |B|) of their customers' purchased-
+    part sets — entity-level set similarity (which markets buy the same
+    catalog), the 25x25 bounded cousin of the document-level similarity
+    joins.  Part sets come from one distinct projection; intersections
+    from ONE self-join keyed by part (co-partitioned); the coefficient
+    is a half-up per-mille integer quotient."""
+    load_tables(spark, sf_dir)
+    li = spark.table("lineitem")
+    o = spark.table("orders")
+    c = spark.table("customer")
+    n = spark.table("nation")
+    np = (
+        li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(c, F.col("o_custkey") == F.col("c_custkey"))
+        .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
+        .select("n_name", "l_partkey")
+        .distinct()
+    )
+    sizes = np.groupBy("n_name").agg(F.count(F.lit(1)).alias("sz"))
+    inter = (
+        np.alias("a")
+        .join(
+            np.alias("b"),
+            (F.col("a.l_partkey") == F.col("b.l_partkey"))
+            & (F.col("a.n_name") < F.col("b.n_name")),
+        )
+        .groupBy(
+            F.col("a.n_name").alias("na"), F.col("b.n_name").alias("nb")
+        )
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
+    j = (
+        inter.join(
+            F.broadcast(sizes.withColumnRenamed("n_name", "na")), "na"
+        )
+        .withColumnRenamed("sz", "sa")
+        .join(F.broadcast(sizes.withColumnRenamed("n_name", "nb")), "nb")
+        .withColumnRenamed("sz", "sb")
+    )
+    return j.select(
+        "na",
+        "nb",
+        "inter",
+        "sa",
+        "sb",
+        F.expr(
+            "(2 * 1000 * inter + least(sa, sb)) div (2 * least(sa, sb))"
+        ).alias("overlap_pm"),
+    )
+
+
 QUERIES = {
     "join_prefilter_bitmap": q_join_prefilter_bitmap,
     "join_geo_radius": q_join_geo_radius,
@@ -792,6 +1299,15 @@ QUERIES = {
     "cte_exchange_reuse": q_cte_exchange_reuse,
     "join_lateral": q_join_lateral,
     "join_range_binned": q_join_range_binned,
+    "join_bloom_prefilter": q_join_bloom_prefilter,
+    "cte_recursive_rollup": q_cte_recursive_rollup,
+    "join_fuzzy_blocked": q_join_fuzzy_blocked,
+    "join_allen_intervals": q_join_allen_intervals,
+    "join_similarity_prefix_filter": q_join_similarity_prefix_filter,
+    "join_longest_prefix": q_join_longest_prefix,
+    "join_interpolate_curve": q_join_interpolate_curve,
+    "join_not_in_null_trap": q_join_not_in_null_trap,
+    "join_basket_overlap": q_join_basket_overlap,
 }
 
 ORACLES = {
@@ -1013,5 +1529,136 @@ ORACLES = {
         "SELECT o_orderkey, round(o_totalprice, 2) AS price"
         " FROM orders"
         " WHERE o_totalprice > 1.5 * (SELECT avg(o_totalprice) FROM orders)"
+    ),
+    "join_bloom_prefilter": (
+        "WITH top AS (SELECT o_custkey, "
+        "row_number() OVER (ORDER BY sum(CAST(o_totalprice AS DECIMAL(18,2))) "
+        "DESC, o_custkey) AS rn FROM orders "
+        "WHERE o_custkey IS NOT NULL GROUP BY o_custkey "
+        f"QUALIFY rn <= {BLOOM_TOPN}) "
+        "SELECT o.o_custkey, count(*) AS n_orders, "
+        "round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE), 2) "
+        "AS total_value FROM orders o JOIN top USING (o_custkey) "
+        "GROUP BY 1"
+    ),
+    "cte_recursive_rollup": (
+        "WITH RECURSIVE rev AS (SELECT c_custkey, coalesce(sum("
+        "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)), 0) "
+        "AS own_cents FROM customer LEFT JOIN orders "
+        "ON c_custkey = o_custkey GROUP BY c_custkey), "
+        # pairs (node, member-of-subtree): seed with self, walk child->parent
+        "walk AS (SELECT c_custkey AS anc_key, c_custkey AS node, "
+        "own_cents FROM rev "
+        "UNION ALL SELECT anc_key // 10, node, own_cents FROM walk "
+        "WHERE anc_key // 10 > 0), "
+        "rolled AS (SELECT anc_key, count(*) AS n_desc, "
+        "sum(own_cents) AS subtree_cents FROM walk GROUP BY anc_key) "
+        "SELECT r.c_custkey AS custkey, CAST(n_desc AS BIGINT) AS n_desc, "
+        "subtree_cents / 100.0 AS subtree_revenue "
+        "FROM rolled JOIN rev r ON anc_key = r.c_custkey"
+    ),
+    "join_fuzzy_blocked": (
+        "WITH names AS (SELECT p_name, count(*) AS n_parts FROM part "
+        "GROUP BY p_name), "
+        "blocked AS (SELECT p_name, n_parts, "
+        "string_split(p_name, ' ')[-1] AS blk FROM names), "
+        "pairs AS (SELECT a.blk, a.p_name AS name_a, b.p_name AS name_b, "
+        "levenshtein(a.p_name, b.p_name) AS dist, "
+        "a.n_parts AS parts_a, b.n_parts AS parts_b "
+        "FROM blocked a JOIN blocked b ON a.blk = b.blk "
+        "AND a.p_name < b.p_name) "
+        f"SELECT blk, name_a, name_b, CAST(dist AS BIGINT) AS dist, "
+        f"parts_a, parts_b FROM pairs WHERE dist <= {FUZZY_T}"
+    ),
+    "join_allen_intervals": (
+        "WITH iv AS (SELECT o_custkey, o_orderkey AS ok, "
+        "o_orderdate AS s, max(l_shipdate) AS e "
+        "FROM orders JOIN lineitem ON l_orderkey = o_orderkey "
+        "GROUP BY 1, 2, 3), "
+        "p AS (SELECT a.s AS s1, a.e AS e1, b.s AS s2, b.e AS e2 "
+        "FROM iv a JOIN iv b ON a.o_custkey = b.o_custkey "
+        "AND (a.s, a.e, a.ok) < (b.s, b.e, b.ok)) "
+        "SELECT CASE "
+        "WHEN e1 < s2 THEN 'precedes' "
+        "WHEN e1 = s2 AND s1 < s2 THEN 'meets' "
+        "WHEN s1 = s2 AND e1 = e2 THEN 'equals' "
+        "WHEN s1 = s2 AND e1 < e2 THEN 'starts' "
+        "WHEN s1 = s2 AND e1 > e2 THEN 'started_by' "
+        "WHEN s1 < s2 AND e1 = e2 THEN 'finished_by' "
+        "WHEN s1 < s2 AND e1 > e2 THEN 'contains' "
+        "WHEN s1 < s2 AND e1 < e2 THEN 'overlaps' "
+        "ELSE 'other' END AS relation, "
+        "CAST(count(*) AS BIGINT) AS n_pairs FROM p GROUP BY 1"
+    ),
+    "join_similarity_prefix_filter": (
+        "WITH tri AS (SELECT DISTINCT doc_id, t FROM (SELECT doc_id, "
+        "unnest(list_transform(range(1, "
+        "greatest(len(string_split(text, ' ')) - 2, 0) + 1), "
+        "i -> array_to_string(string_split(text, ' ')[i:i+2], ' '))) AS t "
+        "FROM documents)), "
+        "sizes AS (SELECT doc_id, count(*) AS s FROM tri GROUP BY 1), "
+        "cand AS (SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS c "
+        "FROM tri a JOIN tri b ON a.t = b.t AND a.doc_id < b.doc_id "
+        "GROUP BY 1, 2), "
+        "scored AS (SELECT da, db, c, sa.s AS sa, sb.s AS sb FROM cand "
+        "JOIN sizes sa ON sa.doc_id = da JOIN sizes sb ON sb.doc_id = db) "
+        f"SELECT da, db, CAST(c AS BIGINT) AS c, sa, sb, "
+        "(2 * 1000 * c + (sa + sb - c)) // (2 * (sa + sb - c)) "
+        "AS jaccard_pm FROM scored "
+        f"WHERE ({SIMJ_P} + {SIMJ_Q}) * c >= {SIMJ_P} * (sa + sb)"
+    ),
+    "join_longest_prefix": (
+        f"WITH rules AS (SELECT * FROM (VALUES {_LPM_ROWS}) "
+        "AS t(prefix, route)), "
+        "m AS (SELECT p_partkey, route, prefix FROM part JOIN rules "
+        "ON starts_with(p_type, prefix)), "
+        "best AS (SELECT p_partkey, route FROM (SELECT p_partkey, route, "
+        "row_number() OVER (PARTITION BY p_partkey "
+        "ORDER BY length(prefix) DESC, prefix DESC) AS rn FROM m) "
+        "WHERE rn = 1) "
+        "SELECT route, CAST(count(*) AS BIGINT) AS n_parts, "
+        "min(p_partkey) AS min_key, max(p_partkey) AS max_key "
+        "FROM best GROUP BY 1"
+    ),
+    "join_interpolate_curve": (
+        f"WITH c0 AS (SELECT * FROM (VALUES {_CURVE_ROWS}) AS t(q0, r0)), "
+        "curve AS (SELECT q0, r0, lead(q0) OVER (ORDER BY q0) AS q1, "
+        "lead(r0) OVER (ORDER BY q0) AS r1 FROM c0), "
+        "k AS (SELECT * FROM curve WHERE q1 IS NOT NULL), "
+        "j AS (SELECT l_orderkey, l_linenumber, "
+        "CAST(l_quantity AS BIGINT) AS q, q0, r0, q1, r1 "
+        "FROM lineitem JOIN k ON CAST(l_quantity AS BIGINT) >= q0 "
+        "AND CAST(l_quantity AS BIGINT) < q1) "
+        "SELECT l_orderkey, l_linenumber, q, "
+        "(r0 + (2 * (q - q0) * (r1 - r0) + (q1 - q0)) "
+        "// (2 * (q1 - q0))) / 1000000.0 AS interp_rate FROM j"
+    ),
+    "join_not_in_null_trap": (
+        "WITH probe AS (SELECT * FROM (VALUES (1), (2), (3), (NULL)) "
+        "AS t(k)), "
+        "ni AS (SELECT count(*) AS c FROM nation "
+        "WHERE n_nationkey NOT IN (SELECT k FROM probe)), "
+        "ne AS (SELECT count(*) AS c FROM nation n WHERE NOT EXISTS "
+        "(SELECT 1 FROM probe p WHERE p.k = n.n_nationkey)) "
+        "SELECT CAST(ni.c AS BIGINT) AS not_in_rows, "
+        "CAST(ne.c AS BIGINT) AS not_exists_rows, "
+        "CAST(ne.c - ni.c AS BIGINT) AS trap_deficit FROM ni, ne"
+    ),
+    "join_basket_overlap": (
+        "WITH np AS (SELECT DISTINCT n_name, l_partkey FROM lineitem "
+        "JOIN orders ON l_orderkey = o_orderkey "
+        "JOIN customer ON o_custkey = c_custkey "
+        "JOIN nation ON c_nationkey = n_nationkey), "
+        "sizes AS (SELECT n_name, count(*) AS sz FROM np GROUP BY 1), "
+        "inter AS (SELECT a.n_name AS na, b.n_name AS nb, "
+        "count(*) AS inter FROM np a JOIN np b "
+        "ON a.l_partkey = b.l_partkey AND a.n_name < b.n_name "
+        "GROUP BY 1, 2) "
+        "SELECT na, nb, CAST(inter AS BIGINT) AS inter, "
+        "CAST(sa.sz AS BIGINT) AS sa, CAST(sb.sz AS BIGINT) AS sb, "
+        "CAST((2 * 1000 * inter + least(sa.sz, sb.sz)) "
+        "// (2 * least(sa.sz, sb.sz)) AS BIGINT) AS overlap_pm "
+        "FROM inter JOIN sizes sa ON sa.n_name = na "
+        "JOIN sizes sb ON sb.n_name = nb"
     ),
 }

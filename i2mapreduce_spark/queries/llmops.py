@@ -9,11 +9,15 @@ Hash-checked keys use exact algorithms; the probabilistic scale paths
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Window, functions as F
+from pyspark.sql.types import DoubleType, IntegerType, LongType, StructField, StructType
 
 from ..catalog import load_tables
-from ..operators import dedup, multimodal, similarity, text as text_ops
 from ..functions import l2_norm_expr
+from ..operators import dedup, multimodal, similarity, text as text_ops
+from ..plans.iterate import checkpoint_without_stats
 
 #: thresholds calibrated on the fixtures (25 planted near-dup pairs have
 #: jaccard ~0.97; cosine max is ~0.51 with 990 pairs >= 0.3)
@@ -766,6 +770,1073 @@ def q_text_zipf_fit(spark, sf_dir):
     )
 
 
+# =================================================================
+# Group L — corpus construction / dedup / embeddings
+# =================================================================
+
+#: chunk size (words) for sub-document dedup
+PARA_CHUNK_WORDS = 20
+
+
+def q_dedup_paragraph(spark, sf_dir):
+    """Sub-document (paragraph-level) exact dedup — the RefinedWeb/
+    CCNet-style pass that removes boilerplate chunks ACROSS documents
+    while keeping the containing docs: split every document into fixed
+    20-word chunks (the fixture's documents are single-line word
+    streams, so chunking stands in for paragraph splitting), keep each
+    distinct chunk only at its first (doc_id, chunk_idx) occurrence, and
+    report per-document survival.
+
+    100 TB shape: one explode (rows = chunks, each carries ~20 words,
+    never the whole doc body twice), one first-occurrence window keyed
+    by the chunk HASH (16-byte md5 shuffles, not chunk text), one
+    per-doc re-aggregation.  All JVM-side expressions."""
+    load_tables(spark, sf_dir)
+    d = spark.table("documents")
+    words = F.split(F.col("text"), " ")
+    n_chunks = F.ceil(F.size(words) / float(PARA_CHUNK_WORDS)).cast("int")
+    chunks = (
+        d.select(
+            "doc_id",
+            F.posexplode(
+                F.expr(
+                    "transform(sequence(0, int(ceil(size(split(text,' '))"
+                    f"/{PARA_CHUNK_WORDS}.0)) - 1), i -> "
+                    f"array_join(slice(split(text,' '), i*{PARA_CHUNK_WORDS}+1, "
+                    f"{PARA_CHUNK_WORDS}), ' '))"
+                )
+            ).alias("chunk_idx", "chunk"),
+        )
+        .withColumn("h", F.md5("chunk"))
+    )
+    w = Window.partitionBy("h").orderBy("doc_id", "chunk_idx")
+    kept = chunks.withColumn(
+        "is_first", (F.row_number().over(w) == 1).cast("long")
+    )
+    return (
+        kept.groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_chunks"),
+            F.sum("is_first").alias("n_kept"),
+        )
+        .withColumn(
+            "keep_ratio",
+            F.round(F.col("n_kept") / F.col("n_chunks"), 4),
+        )
+    )
+
+
+def q_text_vocab_growth(spark, sf_dir):
+    """Vocabulary growth (Heaps'-law) curve: scanning documents in
+    doc_id order, the cumulative token count and cumulative DISTINCT
+    vocabulary size after each document.  The tokenizer-budget planning
+    stat for corpus construction.
+
+    Distributed shape: 'running distinct' is NOT computed with a global
+    running set — each word contributes at its FIRST document
+    (min(doc_id) per word, one partial+final agg over exploded tokens),
+    then the per-doc first-word counts prefix-sum over the doc spine via
+    the chunked-offset construction (operators/ranking.py:
+    global_running_sum) — the doc spine SCALES WITH DATA, so an
+    unpartitioned cumulative window here would be the classic
+    single-partition scale bug.  Token explosion shuffles bounded words,
+    never doc bodies."""
+    from ..operators.ranking import global_running_sum
+
+    load_tables(spark, sf_dir)
+    d = spark.table("documents")
+    toks = d.select(
+        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("w")
+    ).filter(F.col("w") != "")
+    first = toks.groupBy("w").agg(F.min("doc_id").alias("first_doc"))
+    new_per_doc = first.groupBy(F.col("first_doc").alias("doc_id")).agg(
+        F.count(F.lit(1)).alias("new_words")
+    )
+    toks_per_doc = toks.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_toks")
+    )
+    per_doc = (
+        toks_per_doc.join(new_per_doc, "doc_id", "left")
+        .fillna(0, ["new_words"])
+    )
+    return global_running_sum(per_doc, ["doc_id"], ["n_toks", "new_words"]).select(
+        "doc_id",
+        F.col("cum_n_toks").alias("cum_tokens"),
+        F.col("cum_new_words").alias("vocab_size"),
+    )
+
+
+#: Matryoshka prefix lengths probed (full dim is 64 in the fixture)
+MATRYOSHKA_DIMS = [8, 16, 32, 64]
+
+
+def q_embedding_matryoshka_truncate(spark, sf_dir):
+    """Matryoshka-style truncation audit: for each embedding and each
+    prefix length d in {8,16,32,64}, the share of the vector's L2 energy
+    captured by the first d dimensions — the measurement behind choosing
+    a truncated serving dimension.  Per-vector output (no cross-row
+    float aggregation, so the only floats are one fold per row of
+    identical operands on both engines: float32 elements are cast to
+    DOUBLE before squaring, per the cross-engine list-math contract)."""
+    load_tables(spark, sf_dir)
+    e = spark.table("embeddings")
+    sq = (
+        "aggregate(slice(embedding, 1, {d}), CAST(0.0 AS DOUBLE), "
+        "(acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"
+    )
+    full = F.expr(sq.format(d=64))
+    rows = [
+        e.select(
+            "vec_id",
+            F.lit(d).alias("dim"),
+            F.round(F.expr(sq.format(d=d)) / full, 6).alias("energy_share"),
+        )
+        for d in MATRYOSHKA_DIMS
+    ]
+    out = rows[0]
+    for r in rows[1:]:
+        out = out.unionByName(r)
+    return out
+
+
+#: MMR parameters: fixed bounded query set, candidate pool, picks
+MMR_N_QUERIES = 20
+MMR_CANDS = 8
+MMR_K = 3
+MMR_LAMBDA = 0.7
+
+
+def q_sim_mmr_rerank(spark, sf_dir):
+    """Maximal Marginal Relevance re-ranking — the diversity-aware
+    selection used when sampling near-duplicate-free exemplars from a
+    candidate pool: for each of a bounded query set (vec_id < 20), take
+    the top-8 cosine candidates, then greedily pick 3 maximizing
+    λ·sim(q,c) − (1−λ)·max_{s∈picked} sim(c,s), λ=0.7.
+
+    Plan: the bounded query block broadcasts against the corpus (one
+    pass, no all-pairs), per-query top-8 via ranked window on the
+    (query × corpus) sims, then the 8-candidate greedy runs inside one
+    applyInPandas group per query (8x8 numpy matmul — trivially
+    bounded).  Rows-only by design (greedy argmax chains are not
+    SQL-expressible); pytest replays the greedy in pure numpy and
+    asserts identical picks."""
+    import numpy as np
+    import pandas as pd
+
+    load_tables(spark, sf_dir)
+    e = spark.table("embeddings")
+    q = e.filter(F.col("vec_id") < MMR_N_QUERIES).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
+    )
+    dot = F.expr(
+        "aggregate(zip_with(q_vec, embedding, (a, b) -> "
+        "CAST(a AS DOUBLE) * CAST(b AS DOUBLE)), "
+        "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
+    )
+    nrm = (
+        "sqrt(aggregate({v}, CAST(0.0 AS DOUBLE), "
+        "(acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
+    )
+    sims = (
+        e.join(F.broadcast(q), F.col("vec_id") != F.col("q_id"))
+        .withColumn(
+            "sim",
+            dot / (F.expr(nrm.format(v="q_vec")) * F.expr(nrm.format(v="embedding"))),
+        )
+        .select("q_id", "q_vec", "vec_id", "embedding", "sim")
+    )
+    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), "vec_id")
+    cands = sims.withColumn("rn", F.row_number().over(w)).filter(
+        F.col("rn") <= MMR_CANDS
+    )
+
+    def mmr(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("rn").reset_index(drop=True)
+        V = np.stack(pdf["embedding"].map(np.asarray)).astype(np.float64)
+        Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
+        cc = Vn @ Vn.T  # candidate-candidate cosine
+        rel = pdf["sim"].to_numpy()
+        picked: list[int] = []
+        for _ in range(min(MMR_K, len(pdf))):
+            best, best_score = None, None
+            for i in range(len(pdf)):
+                if i in picked:
+                    continue
+                div = max(cc[i][j] for j in picked) if picked else 0.0
+                score = MMR_LAMBDA * rel[i] - (1 - MMR_LAMBDA) * div
+                if best is None or score > best_score:
+                    best, best_score = i, score
+            picked.append(best)
+        return pd.DataFrame(
+            {
+                "q_id": pdf["q_id"].iloc[0],
+                "rank": range(1, len(picked) + 1),
+                "picked_id": pdf["vec_id"].iloc[picked].to_numpy(),
+            }
+        )
+
+    return cands.groupBy("q_id").applyInPandas(
+        mmr, schema="q_id long, rank int, picked_id long"
+    )
+
+
+# =================================================================
+# Group L — n-gram coverage
+# =================================================================
+NGRAM_COVER_TOPK = 20
+
+
+def q_text_ngram_coverage(spark, sf_dir):
+    """Bigram coverage curve: the top-20 corpus bigrams ranked by count
+    (ties -> lexicographic) with each rank's CUMULATIVE share of all
+    bigram occurrences — 'how much of the corpus do the top-k patterns
+    explain', the compression/boilerplate diagnostic.  Counts and the
+    cumulative sum are exact integers over the top-20 spine (bounded);
+    one double division per row."""
+    load_tables(spark, sf_dir)
+    d = spark.table("documents")
+    toks = d.select(
+        "doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("pos", "w")
+    ).filter(F.col("w") != "")
+    nxt = toks.select(
+        "doc_id", (F.col("pos") - 1).alias("pos"), F.col("w").alias("w2")
+    )
+    bg = (
+        toks.join(nxt, ["doc_id", "pos"])
+        .select(F.concat_ws(" ", "w", "w2").alias("bigram"))
+        .groupBy("bigram")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+    total = bg.agg(F.sum("cnt").alias("total"))
+    ranked = (
+        bg.withColumn(
+            "rank",
+            F.row_number().over(Window.orderBy(F.col("cnt").desc(), "bigram")),
+        )
+        .filter(F.col("rank") <= NGRAM_COVER_TOPK)
+    )
+    wcum = Window.orderBy("rank").rowsBetween(Window.unboundedPreceding, 0)
+    return (
+        ranked.crossJoin(F.broadcast(total))
+        .select(
+            "rank",
+            "bigram",
+            "cnt",
+            F.round(
+                F.sum("cnt").over(wcum).cast("double") / F.col("total"), 6
+            ).alias("cum_share"),
+        )
+    )
+
+
+def q_text_hapax_ratio(spark, sf_dir):
+    """Hapax-legomena profile per document: token count, distinct-type
+    count, hapax count (types occurring exactly once in that doc) and
+    the half-up per-mille hapax/type ratio — the lexical-novelty signal
+    complementing TTR.  Two cheap aggs (doc×type, then doc), all
+    integer."""
+    load_tables(spark, sf_dir)
+    d = spark.table("documents")
+    toks = d.select(
+        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("w")
+    ).filter(F.col("w") != "")
+    types = toks.groupBy("doc_id", "w").agg(F.count(F.lit(1)).alias("cnt"))
+    per_doc = types.groupBy("doc_id").agg(
+        F.sum("cnt").alias("n_tokens"),
+        F.count(F.lit(1)).alias("n_types"),
+        F.sum((F.col("cnt") == 1).cast("long")).alias("n_hapax"),
+    )
+    return per_doc.select(
+        "doc_id",
+        "n_tokens",
+        "n_types",
+        "n_hapax",
+        F.expr("(2000 * n_hapax + n_types) div (2 * n_types)").alias(
+            "hapax_pm"
+        ),
+    )
+
+
+def q_text_js_divergence(spark, sf_dir):
+    """Jensen-Shannon divergence cells between the even-doc and odd-doc
+    corpus halves' word distributions — the text-drift detector.  Per
+    vocabulary word: counts in each half, probabilities from exact
+    integer (count, total) pairs, and the word's JS contribution
+    ½·p·ln(p/m) + ½·q·ln(q/m) with m = (p+q)/2 and 0·ln0 = 0.  Per-cell
+    output (the vocabulary is the bounded grain); summing would be an
+    unordered float reduction — the cross-engine trap the repo never
+    takes.  One partial+final agg over the token stream."""
+    load_tables(spark, sf_dir)
+    d = spark.table("documents")
+    toks = d.select(
+        (F.col("doc_id") % 2 == 0).alias("is_a"),
+        F.explode(F.split(F.col("text"), " ")).alias("w"),
+    ).filter(F.col("w") != "")
+    cells = toks.groupBy("w").agg(
+        F.sum(F.col("is_a").cast("long")).alias("ca"),
+        F.sum((~F.col("is_a")).cast("long")).alias("cb"),
+    )
+    tot = cells.agg(
+        F.sum("ca").alias("na"), F.sum("cb").alias("nb")
+    )
+    j = cells.crossJoin(F.broadcast(tot))  # 1-row totals
+    # try_divide: a degenerate corpus can leave one side with zero
+    # tokens (na/nb = 0) — its distribution is undefined, NULL on both
+    # engines (DuckDB x/0 is NULL)
+    p = F.try_divide("ca", F.col("na").cast("double"))
+    q = F.try_divide("cb", F.col("nb").cast("double"))
+    m = (p + q) / 2
+    term_p = F.when(F.col("ca") > 0, p * F.log(p / m)).otherwise(F.lit(0.0))
+    term_q = F.when(F.col("cb") > 0, q * F.log(q / m)).otherwise(F.lit(0.0))
+    return j.select(
+        "w",
+        "ca",
+        "cb",
+        F.round(p, 6).alias("p_a"),
+        F.round(q, 6).alias("p_b"),
+        F.round((term_p + term_q) / 2, 6).alias("js_cell"),
+    )
+
+
+# =================================================================
+# Group L — product quantization
+# =================================================================
+PQ_M = 8        #: subspaces (64 dims -> 8 x 8)
+PQ_K = 16       #: codebook entries per subspace (4-bit codes)
+PQ_ITERS = 8    #: k-means refinement iterations
+PQ_SAMPLE = 256  #: driver-side training sample (smallest vec_ids)
+
+_PQ_SCHEMA = StructType(
+    [StructField("vec_id", LongType())]
+    + [StructField(f"code_{m}", IntegerType()) for m in range(PQ_M)]
+    + [StructField("recon_err", DoubleType())]
+)
+
+
+def _pq_train(sample: np.ndarray) -> np.ndarray:
+    """Deterministic per-subspace Lloyd k-means: init = the first PQ_K
+    sample subvectors (ids are sorted, so the seed is reproducible),
+    argmin ties -> lowest centroid index, empty clusters keep their
+    previous centroid.  Returns (M, K, dsub) float64 codebooks."""
+    n, dim = sample.shape
+    dsub = dim // PQ_M
+    books = np.empty((PQ_M, PQ_K, dsub))
+    for m in range(PQ_M):
+        X = sample[:, m * dsub: (m + 1) * dsub]
+        C = X[:PQ_K].copy()
+        for _ in range(PQ_ITERS):
+            d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+            a = d2.argmin(axis=1)  # ties -> lowest index (numpy argmin)
+            for k in range(PQ_K):
+                if (a == k).any():
+                    C[k] = X[a == k].mean(axis=0)
+        books[m] = C
+    return books
+
+
+def q_embedding_pq_codes(spark, sf_dir):
+    """Product-quantization encoding of the embedding corpus — the
+    codebook compression behind billion-scale vector stores (a 64-dim
+    float vector becomes 8 4-bit codes, 64x smaller): codebooks train
+    on a bounded driver-side sample (the IVF pattern — sample size, not
+    corpus size, bounds driver memory), broadcast to executors, and
+    encoding is one Arrow-batched argmin kernel per subspace; the
+    reported reconstruction error is the L2 distance to the decoded
+    vector.  Deterministic end-to-end (sorted-sample init, fixed
+    iterations, argmin tie -> lowest index).  Rows-only key (the
+    codebook is a trained float artifact SQL can't replay); pytest
+    replays the exact numpy computation."""
+    load_tables(spark, sf_dir)
+    emb = spark.table("embeddings")
+    sample = emb.orderBy("vec_id").limit(PQ_SAMPLE).select("embedding").collect()
+    if not sample:  # empty corpus: no codebooks to train, nothing to encode
+        return spark.createDataFrame([], _PQ_SCHEMA)
+    S = np.stack([np.asarray(r[0], dtype=np.float64) for r in sample])
+    books = _pq_train(S)
+    bc = spark.sparkContext.broadcast(books)
+
+    def encode(batches):
+        B = bc.value
+        dsub = B.shape[2]
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            A = np.stack(pdf["embedding"].values).astype(np.float64)
+            out = {"vec_id": pdf["vec_id"].values}
+            err2 = np.zeros(len(pdf))
+            for m in range(PQ_M):
+                X = A[:, m * dsub: (m + 1) * dsub]
+                d2 = ((X[:, None, :] - B[m][None, :, :]) ** 2).sum(axis=2)
+                codes = d2.argmin(axis=1)
+                out[f"code_{m}"] = codes.astype("int32")
+                err2 += d2[np.arange(len(pdf)), codes]
+            out["recon_err"] = np.round(np.sqrt(err2), 4)
+            yield pd.DataFrame(out)
+
+    return emb.select("vec_id", "embedding").mapInPandas(encode, _PQ_SCHEMA)
+
+
+#: duplicated-span shingle width (tokens) — the training-data-dedup
+#: literature's "repeated n-gram" grain (C4/RefinedWeb use 3-13; 8 keeps
+#: the fixture's collision rate informative at every SF)
+SPAN_W = 8
+
+#: BPE statistics: top-k adjacent-symbol pairs reported
+BPE_TOPK = 20
+
+
+# =================================================================
+# Group L — repeated n-gram span detection (training-data dedup)
+# =================================================================
+def q_dedup_ngram_spans(spark, sf_dir):
+    """Per-document duplicated-span fraction: the share of a document's
+    8-token shingles that occur in MORE THAN ONE document — the
+    repeated-n-gram contamination signal behind C4-style span dedup
+    ("how much of this page is boilerplate shared with other pages").
+
+    Plan: ONE generate (shingles via a sequence/slice lambda — no
+    self-join, and the explode is never repeated: an earlier join-back
+    formulation made Spark regenerate the shingle stream twice), then
+    (doc, shingle) occurrence counts, a shingle-partitioned window for
+    the cross-doc flag (no join), and one per-doc agg.  Both shuffles
+    key on the shingle string; at 100 TB the grouping key would be
+    xxhash64(shingle) (16-byte key, bodies never shuffled) — kept as
+    the raw string here so the oracle comparison is collision-free by
+    construction.  The ratio is a half-up per-mille integer; docs
+    shorter than 8 tokens report 0 shingles and 0 coverage."""
+    load_tables(spark, sf_dir)
+    d = spark.table("documents")
+    toks = F.array_remove(F.split(F.col("text"), " "), "")
+    sh = d.select(
+        "doc_id",
+        F.explode(
+            F.when(
+                F.size(toks) >= SPAN_W,
+                F.transform(
+                    F.sequence(F.lit(1), F.size(toks) - (SPAN_W - 1)),
+                    lambda i: F.array_join(F.slice(toks, i, SPAN_W), " "),
+                ),
+            ).otherwise(F.array().cast("array<string>"))
+        ).alias("shingle"),
+    )
+    # collapse to per-(doc, shingle) occurrence counts first; a shingle
+    # repeated WITHIN one doc is not cross-doc duplication, so the dup
+    # flag is "this shingle has >1 (doc, shingle) row" — a count over
+    # the shingle partition, no join back
+    occ = sh.groupBy("doc_id", "shingle").agg(F.count(F.lit(1)).alias("occ"))
+    wsh = Window.partitionBy("shingle")
+    flagged = occ.withColumn("n_docs", F.count(F.lit(1)).over(wsh))
+    per_doc = flagged.groupBy("doc_id").agg(
+        F.sum("occ").alias("n_shingles"),
+        F.sum(F.when(F.col("n_docs") > 1, F.col("occ")).otherwise(0)).alias(
+            "n_dup"
+        ),
+    )
+    base = d.select("doc_id").join(per_doc, "doc_id", "left").select(
+        "doc_id",
+        F.coalesce("n_shingles", F.lit(0)).alias("n_shingles"),
+        F.coalesce("n_dup", F.lit(0)).alias("n_dup"),
+    )
+    return base.select(
+        "doc_id",
+        "n_shingles",
+        "n_dup",
+        F.expr(
+            "CASE WHEN n_shingles = 0 THEN 0 "
+            "ELSE (2000 * n_dup + n_shingles) div (2 * n_shingles) END"
+        )
+        .cast("long")
+        .alias("dup_pm"),
+    )
+
+
+# =================================================================
+# Group L — BPE merge-candidate statistics (tokenizer training)
+# =================================================================
+def q_text_bpe_merge_pairs(spark, sf_dir):
+    """First-iteration BPE merge candidates: the corpus-wide top-20
+    adjacent CHARACTER pairs inside words, ranked by frequency (ties →
+    lexicographic) — exactly the statistic a byte-pair-encoding
+    tokenizer trainer computes before its first merge.  One generate
+    (char bigrams via sequence/substring — JVM-side lambdas, no Python),
+    one partial+final count, one bounded top-k.  Counts are exact
+    integers; the corpus share is one double division per output row."""
+    load_tables(spark, sf_dir)
+    d = spark.table("documents")
+    words = d.select(
+        F.explode(F.array_remove(F.split(F.col("text"), " "), "")).alias("w")
+    )
+    # substring with a DYNAMIC position needs expr(): the Python DSL
+    # binds substring's pos/len as literals only
+    pairs = words.select(
+        F.explode(
+            F.when(
+                F.length("w") >= 2,
+                F.expr(
+                    "transform(sequence(1, length(w) - 1), "
+                    "i -> substring(w, i, 2))"
+                ),
+            ).otherwise(F.array().cast("array<string>"))
+        ).alias("pair")
+    )
+    counted = pairs.groupBy("pair").agg(F.count(F.lit(1)).alias("cnt"))
+    total = counted.agg(F.sum("cnt").alias("total"))
+    ranked = counted.withColumn(
+        "rank", F.row_number().over(Window.orderBy(F.col("cnt").desc(), "pair"))
+    ).filter(F.col("rank") <= BPE_TOPK)
+    return ranked.crossJoin(F.broadcast(total)).select(
+        "rank",
+        "pair",
+        "cnt",
+        # half-up x10^6 integer quotient — round(cnt/total, 6) on the
+        # raw double lands 1 ulp apart across engines at some SFs (the
+        # same drift class the r6 cross-SF sweep caught elsewhere)
+        (
+            F.expr("(2 * 1000000 * cnt + total) div (2 * total)") / 1000000.0
+        ).alias("share"),
+    )
+
+
+# =================================================================
+# Group L — embedding whitening (retrieval preprocessing)
+# =================================================================
+WHITEN_EPS = 1e-6  #: eigenvalue floor (degenerate-direction guard)
+WHITEN_OUT = 4     #: whitened components reported per vector
+
+
+def q_embedding_whitening(spark, sf_dir):
+    """ZCA whitening of the embedding corpus — the standard retrieval
+    preprocessing that decorrelates dimensions and equalizes variance
+    (BERT-flow/whitening-BERT lineage): W = U·diag(1/sqrt(λ+ε))·Uᵀ of
+    the corpus covariance; outputs each vector's first 4 whitened
+    components.
+
+    Scale plan: covariance is ONE distributed pass — mapInPandas emits
+    per-partition moment PARTIALS (count, 64-vector sum, 64×64 Gram),
+    the driver collects only #partitions × (64 + 4096) floats (bounded
+    by partition count, never corpus size), eigendecomposes the 64×64
+    covariance (driver-side, O(d³) with d=64), and broadcasts W for one
+    Arrow-batched projection pass.  Partials are summed in sorted
+    partition order so the float reduction is deterministic.  Rows-only
+    key (a trained float artifact SQL can't replay); pytest replays the
+    numpy computation and checks whitened covariance ≈ identity."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.types import (
+        ArrayType,
+        DoubleType,
+        IntegerType,
+        LongType,
+        StructField,
+        StructType,
+    )
+
+    load_tables(spark, sf_dir)
+    emb = spark.table("embeddings")
+
+    # arrays-of-double carry the packed moments
+    partial_schema = StructType(
+        [
+            StructField("pid", IntegerType()),
+            StructField("n", LongType()),
+            StructField("s", ArrayType(DoubleType())),
+            StructField("g", ArrayType(DoubleType())),
+        ]
+    )
+
+    def moments(it):
+        pid = -1
+        n = 0
+        s = None
+        g = None
+        for pdf in it:
+            if len(pdf) == 0:
+                continue
+            A = np.stack(pdf["embedding"].values).astype(np.float64)
+            pid = int(pdf["pid"].iloc[0])
+            n += len(A)
+            s = A.sum(axis=0) if s is None else s + A.sum(axis=0)
+            g = A.T @ A if g is None else g + A.T @ A
+        if n:
+            yield pd.DataFrame(
+                {"pid": [pid], "n": [n], "s": [list(s)], "g": [list(g.ravel())]}
+            )
+
+    parts = (
+        emb.select(F.spark_partition_id().alias("pid"), "embedding")
+        .mapInPandas(moments, partial_schema)
+        .collect()
+    )
+    # deterministic float reduction: fixed partition order
+    parts = sorted(parts, key=lambda r: r["pid"])
+    if not parts:
+        # empty corpus: no moments, no whitening matrix — return the
+        # empty projection with the declared schema
+        return spark.createDataFrame(
+            [],
+            "vec_id long, " + ", ".join(
+                f"w{i} double" for i in range(WHITEN_OUT)
+            ),
+        )
+    n = sum(r["n"] for r in parts)
+    d = len(parts[0]["s"])
+    s = np.zeros(d)
+    g = np.zeros((d, d))
+    for r in parts:
+        s += np.asarray(r["s"])
+        g += np.asarray(r["g"]).reshape(d, d)
+    mu = s / n
+    cov = g / n - np.outer(mu, mu)
+    lam, U = np.linalg.eigh(cov)
+    W = U @ np.diag(1.0 / np.sqrt(lam + WHITEN_EPS)) @ U.T
+    bc = spark.sparkContext.broadcast((mu, W))
+
+    out_schema = StructType(
+        [StructField("vec_id", LongType())]
+        + [StructField(f"w{i}", DoubleType()) for i in range(WHITEN_OUT)]
+    )
+
+    def project(it):
+        m, Wm = bc.value
+        for pdf in it:
+            if len(pdf) == 0:
+                continue
+            A = np.stack(pdf["embedding"].values).astype(np.float64)
+            Z = (A - m) @ Wm.T
+            out = {"vec_id": pdf["vec_id"].astype("int64").values}
+            for i in range(WHITEN_OUT):
+                out[f"w{i}"] = np.round(Z[:, i], 4)
+            yield pd.DataFrame(out)
+
+    return emb.select("vec_id", "embedding").mapInPandas(project, out_schema)
+
+
+#: code-detection signal thresholds (per-mille)
+CODE_SYM_PM = 30      # symbol chars ({};()=<>) over all chars
+CODE_KW_MIN = 1       # distinct code keywords present
+
+
+def q_text_code_detect(spark, sf_dir):
+    """Code-vs-prose detection per document — the corpus-construction
+    filter that routes source code away from natural-language pipelines:
+    symbol density ({}();=<>[] chars per mille of text), code keywords
+    present (def/return/import/var/const/function), and the verdict
+    rule symbols ≥ 30‰ AND ≥ 1 keyword.
+    Every signal is an exact integer count or a half-up per-mille —
+    JVM-side regexp counts, no Python."""
+    load_tables(spark, sf_dir)
+    # complete-case: a missing document cannot be classified (the NULL
+    # verdict boolean normalizes differently per engine)
+    d = spark.table("documents").filter(F.col("text").isNotNull())
+    n_chars = F.length("text")
+    n_sym = F.regexp_count("text", F.lit(r"[{}();=<>\[\]]"))
+    kw = F.regexp_count(
+        "text", F.lit(r"\b(def|return|import|var|const|function)\b")
+    )
+    sym_pm = F.expr(
+        "CASE WHEN length(text) = 0 THEN 0 "
+        "ELSE (2000 * n_sym + length(text)) div (2 * length(text)) END"
+    )
+    return (
+        d.select("doc_id", "text", n_sym.alias("n_sym"), kw.alias("n_kw"))
+        .select(
+            "doc_id",
+            "n_sym",
+            "n_kw",
+            sym_pm.cast("long").alias("sym_pm"),
+            (
+                (sym_pm >= CODE_SYM_PM) & (F.col("n_kw") >= CODE_KW_MIN)
+            ).alias("looks_like_code"),
+        )
+    )
+
+
+#: bucket purity: sign bits of the first k dimensions
+PURITY_BITS = 8
+
+
+def q_sim_bucket_purity(spark, sf_dir):
+    """LSH bucket PURITY against ground-truth labels — the index-quality
+    eval metric for the similarity stack: bucket every vector by the
+    sign bits of its first k dimensions (the cheapest hyperplane
+    signature), then purity = sum over buckets of the majority-label
+    count / corpus size.  High purity = the signature preserves label
+    locality; ~1/n_labels = it does not.  Exact integer counts end to
+    end; sign tests read the same parquet floats in both engines."""
+    load_tables(spark, sf_dir)
+    emb = spark.table("embeddings")
+    bucket = F.expr(
+        " + ".join(
+            f"CASE WHEN element_at(embedding, {i + 1}) > 0 "
+            f"THEN {1 << i} ELSE 0 END"
+            for i in range(PURITY_BITS)
+        )
+    )
+    bl = emb.select(bucket.alias("bucket"), "label")
+    counts = bl.groupBy("bucket", "label").agg(
+        F.count(F.lit(1)).alias("c")
+    )
+    per_bucket = counts.groupBy("bucket").agg(
+        F.max("c").alias("maj"), F.sum("c").alias("tot")
+    )
+    return per_bucket.agg(
+        F.count(F.lit(1)).alias("n_buckets"),
+        F.sum("tot").alias("n_vecs"),
+        F.sum("maj").alias("majority_sum"),
+        F.expr(
+            "(2 * 1000 * sum(maj) + sum(tot)) div (2 * sum(tot))"
+        ).alias("purity_pm"),
+    )
+
+
+#: greedy generation length (tokens after the seed)
+GEN_STEPS = 20
+
+
+#: ViT patch size (pixels)
+TILE_P = 16
+
+
+def q_text_greedy_generate(spark, sf_dir):
+    """GREEDY text generation from the corpus bigram LM: seed with the
+    globally most-frequent token, then 20 steps of argmax next-token
+    (ties break lexicographically) — deterministic decoding, the
+    inference half of the n-gram stack (text_bigram_lm_score is the
+    scoring half).  The successor table is one rank-1 window over the
+    bigram counts (vocab-bounded); the unrolled chain is GEN_STEPS
+    joins against that bounded table.  Oracle: a recursive CTE walks
+    the same successor function."""
+    load_tables(spark, sf_dir)
+    d = spark.table("documents")
+    ws = F.split("text", " ")
+    big = (
+        # the size >= 2 guard matters: Spark's sequence(1, 0) counts DOWN
+        # ([1, 0]), which would fabricate an invalid bigram for a 1-word doc
+        d.filter(F.size(ws) >= 2)
+        .select(
+            F.explode(
+                F.expr(
+                    "transform(sequence(1, size(split(text, ' ')) - 1), "
+                    "i -> struct(element_at(split(text, ' '), i) as w1, "
+                    "element_at(split(text, ' '), i + 1) as w2))"
+                )
+            ).alias("b")
+        )
+        .select(F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2"))
+        .groupBy("w1", "w2")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+    wsucc = Window.partitionBy("w1").orderBy(F.col("cnt").desc(), "w2")
+    succ = (
+        big.withColumn("rn", F.row_number().over(wsucc))
+        .filter(F.col("rn") == 1)
+        .select("w1", "w2")
+        .transform(checkpoint_without_stats)
+    )
+    uni = (
+        d.select(F.explode(ws).alias("w"))
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    wseed = Window.orderBy(F.col("c").desc(), "w")
+    seed = (
+        uni.withColumn("rn", F.row_number().over(wseed))
+        .filter(F.col("rn") == 1)
+        .select(F.lit(0).alias("step"), F.col("w").alias("word"))
+        .transform(checkpoint_without_stats)
+    )
+    chain = seed
+    cur = seed
+    for i in range(1, GEN_STEPS + 1):
+        cur = (
+            cur.join(succ, cur.word == succ.w1)
+            .select(F.lit(i).alias("step"), F.col("w2").alias("word"))
+            .transform(checkpoint_without_stats)
+        )
+        chain = chain.unionAll(cur)
+    return chain
+
+
+def q_multimodal_tile_grid(spark, sf_dir):
+    """ViT-style PATCH TILING over the multimodal metadata: from each
+    payload's (width, height), emit the 16x16 patch grid — patch index,
+    pixel box (clamped at the right/bottom edges), and per-image patch
+    count — the exact plumbing a vision encoder's preprocessing step
+    feeds from, with no codec in the loop (the fixture adapter derives
+    width/height from the payload length, the same contract the other
+    multimodal keys use).  One generate, embarrassingly parallel."""
+    from ..operators.multimodal import attach_binary_payload
+
+    load_tables(spark, sf_dir)
+    d = attach_binary_payload(spark.table("documents"))
+    g = d.select(
+        "doc_id",
+        F.col("meta")["width"].alias("w"),
+        F.col("meta")["height"].alias("h"),
+    ).select(
+        "doc_id",
+        "w",
+        "h",
+        F.expr(f"(w + {TILE_P} - 1) div {TILE_P}").alias("nx"),
+        F.expr(f"(h + {TILE_P} - 1) div {TILE_P}").alias("ny"),
+    )
+    t = g.select(
+        "doc_id",
+        "w",
+        "h",
+        (F.col("nx") * F.col("ny")).alias("n_patches"),
+        F.explode(F.expr("sequence(0, nx * ny - 1)")).alias("p"),
+        F.col("nx"),
+    )
+    px = F.col("p") % F.col("nx")
+    py = F.expr("p div nx")
+    return t.select(
+        "doc_id",
+        "n_patches",
+        F.col("p").alias("patch_idx"),
+        (px * TILE_P).alias("x0"),
+        (py * TILE_P).alias("y0"),
+        F.least(px * TILE_P + TILE_P, F.col("w")).alias("x1"),
+        F.least(py * TILE_P + TILE_P, F.col("h")).alias("y1"),
+    )
+
+
+#: feature hashing: slot count (power of two)
+FH_SLOTS = 64
+
+
+def q_text_feature_hashing(spark, sf_dir):
+    """HASHING-TRICK featurizer: every document's character trigrams
+    hash into a FIXED 64-slot vector (slot = 16 md5 bits mod 64) — the
+    feature-hashing primitive that gives unbounded vocabularies a
+    bounded, join-free feature space (Weinberger et al.).  Output is
+    the sparse (doc, slot, count) triple table; collisions are part of
+    the declared semantics.  Pure string/hash builtins, one explode +
+    one agg keyed by doc — embarrassingly parallel."""
+    load_tables(spark, sf_dir)
+    d = spark.table("documents")
+    tri = d.select(
+        "doc_id",
+        F.explode(
+            F.expr(
+                "transform(sequence(1, greatest(length(text) - 2, 1)), "
+                "i -> substring(text, i, 3))"
+            )
+        ).alias("t"),
+    )
+    slot = (
+        F.conv(F.substring(F.md5("t"), 1, 4), 16, 10).cast("long")
+        % FH_SLOTS
+    )
+    return tri.select("doc_id", slot.alias("slot")).groupBy(
+        "doc_id", "slot"
+    ).agg(F.count(F.lit(1)).alias("cnt"))
+
+
+#: Burrows: number of top corpus words profiled
+BURROWS_K = 10
+
+
+def q_text_burrows_delta(spark, sf_dir):
+    """BURROWS' stylometric z-score table: for the corpus's top-K words,
+    each source's relative rate (per-million tokens, half-up quantized)
+    standardized against the across-source mean and standard deviation
+    — the feature table Burrows' Delta authorship attribution sums.
+    Rates quantize to exact integers BEFORE any cross-source moment, so
+    the mean/sd run on identical integers in both engines (the source
+    enum is bounded, the z is one fixed-shape double)."""
+    load_tables(spark, sf_dir)
+    d = spark.table("documents")
+    toks = d.select(
+        "source", F.explode(F.split("text", " ")).alias("w")
+    )
+    topk = (
+        toks.groupBy("w")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .withColumn(
+            "rk",
+            F.row_number().over(
+                Window.orderBy(F.col("c").desc(), F.col("w"))
+            ),
+        )
+        .filter(F.col("rk") <= BURROWS_K)
+        .select("w")
+    )
+    per_src = toks.groupBy("source").agg(F.count(F.lit(1)).alias("tot"))
+    cnt = (
+        toks.join(topk, "w")
+        .groupBy("source", "w")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .join(per_src, "source")
+    )
+    rated = cnt.select(
+        "source",
+        "w",
+        F.expr("(2 * 1000000 * c + tot) div (2 * tot)").alias("r6"),
+    )
+    ww = Window.partitionBy("w")
+    scored = rated.select(
+        "source",
+        "w",
+        "r6",
+        F.sum("r6").over(ww).alias("s1"),
+        F.sum(F.col("r6") * F.col("r6")).over(ww).alias("s2"),
+        F.count(F.lit(1)).over(ww).alias("k"),
+    )
+    # try_divide: with a single source (k = 1) the cross-source spread
+    # is undefined — NULL on both engines (DuckDB x/0 is NULL)
+    mean = F.try_divide(F.col("s1").cast("double"), F.col("k"))
+    sd = F.sqrt(
+        F.try_divide(
+            F.col("k").cast("double") * F.col("s2").cast("double")
+            - F.col("s1").cast("double") * F.col("s1").cast("double"),
+            F.col("k").cast("double") * (F.col("k") - 1),
+        )
+    )
+    return scored.select(
+        "w",
+        "source",
+        (F.col("r6") / 1000000.0).alias("rate"),
+        F.round((F.col("r6") - mean) / sd, 6).alias("z"),
+    )
+
+
+#: BPE apply: number of merge rules
+BPE_MERGES = 20
+
+
+def q_text_bpe_apply(spark, sf_dir):
+    """APPLY the learned BPE merges: take the corpus's top-20 word
+    bigrams (the text_bpe_merge_pairs vocabulary) and greedily merge
+    NON-OVERLAPPING occurrences left-to-right in every document — the
+    tokenizer-application pass, reporting each doc's token count before
+    and after and the compression per-mille.
+
+    The greedy count is PURELY RELATIONAL: a maximal run of L
+    consecutive matching bigrams yields exactly ceil(L/2) greedy
+    merges, so runs come from the classic (position - rank) gaps-and-
+    islands grouping and the count is an integer sum — no fold at all.
+    (A list_reduce formulation measurably returned DIFFERENT values
+    under DuckDB 1.0's batched execution than under row-filtered
+    execution; folds with CASE accumulators are not batch-safe there.)"""
+    load_tables(spark, sf_dir)
+    from pyspark.sql import Window
+
+    d = spark.table("documents")
+    big = (
+        d.select(
+            F.explode(
+                F.expr(
+                    "transform(sequence(1, size(split(text, ' ')) - 1), "
+                    "i -> concat_ws(' ', slice(split(text, ' '), i, 2)))"
+                )
+            ).alias("p")
+        )
+        .groupBy("p")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    merges = (
+        big.withColumn(
+            "rk",
+            F.row_number().over(Window.orderBy(F.col("c").desc(), "p")),
+        )
+        .filter(F.col("rk") <= BPE_MERGES)
+        .groupBy()
+        .agg(F.array_sort(F.collect_list("p")).alias("m"))
+    )
+    j = d.crossJoin(F.broadcast(merges))
+    sizes = j.select(
+        "doc_id",
+        F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
+    )
+    hits = j.select(
+        "doc_id",
+        F.explode(
+            F.expr(
+                "filter(transform(sequence(1, size(split(text, ' ')) - 1), "
+                "i -> CASE WHEN array_contains(m, "
+                "concat_ws(' ', slice(split(text, ' '), i, 2))) "
+                "THEN i ELSE -1 END), p -> p > 0)"
+            )
+        ).alias("i"),
+    )
+    wd = Window.partitionBy("doc_id").orderBy("i")
+    runs = (
+        hits.withColumn("rn", F.row_number().over(wd))
+        .groupBy("doc_id", (F.col("i") - F.col("rn")).alias("grp"))
+        .agg(F.count(F.lit(1)).alias("len"))
+    )
+    merged = runs.groupBy("doc_id").agg(
+        F.sum(F.expr("(len + 1) div 2")).alias("n_merges")
+    )
+    return (
+        sizes.join(merged, "doc_id", "left")
+        .select(
+            "doc_id",
+            "n_tokens",
+            F.coalesce("n_merges", F.lit(0)).alias("n_merges"),
+        )
+        .select(
+            "doc_id",
+            "n_tokens",
+            "n_merges",
+            (F.col("n_tokens") - F.col("n_merges")).alias("tokens_after"),
+            F.expr(
+                "(2 * 1000 * (n_tokens - n_merges) + n_tokens) "
+                "div (2 * n_tokens)"
+            ).alias("kept_pm"),
+        )
+    )
+
+
+#: OOV split: train = doc_id below this fraction per-mille of max id
+OOV_SPLIT_PM = 800
+
+
+def q_text_oov_rate(spark, sf_dir):
+    """OUT-OF-VOCABULARY rate of the eval split: for every eval document
+    (top 20% of doc ids), the share of its word bigrams that NEVER
+    occur in the train split — the novelty metric that complements
+    pipeline_decontaminate (a well-decontaminated eval set scores high;
+    near-zero means the split leaks).  One distinct train-bigram set,
+    one left-anti-style flag join keyed by bigram, per-doc half-up
+    per-mille — all co-partitioned by bigram then by doc."""
+    load_tables(spark, sf_dir)
+    d = spark.table("documents")
+    cut = d.agg(
+        F.expr(f"(max(doc_id) * {OOV_SPLIT_PM}) div 1000").alias("cut")
+    )
+    big = d.crossJoin(F.broadcast(cut)).select(
+        "doc_id",
+        (F.col("doc_id") > F.col("cut")).alias("is_eval"),
+        F.explode(
+            F.expr(
+                "transform(sequence(1, size(split(text, ' ')) - 1), "
+                "i -> concat_ws(' ', slice(split(text, ' '), i, 2)))"
+            )
+        ).alias("p"),
+    )
+    train_vocab = (
+        big.filter(~F.col("is_eval")).select("p").distinct()
+        .withColumn("seen", F.lit(1))
+    )
+    ev = big.filter(F.col("is_eval")).join(train_vocab, "p", "left")
+    per_doc = ev.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_bigrams"),
+        F.sum(F.when(F.col("seen").isNull(), 1).otherwise(0)).alias(
+            "n_oov"
+        ),
+    )
+    return per_doc.select(
+        "doc_id",
+        "n_bigrams",
+        "n_oov",
+        F.expr("(2 * 1000 * n_oov + n_bigrams) div (2 * n_bigrams)").alias(
+            "oov_pm"
+        ),
+    )
+
+
 QUERIES = {
     "multimodal_audio_energy": q_multimodal_audio_energy,
     "text_zipf_fit": q_text_zipf_fit,
@@ -805,6 +1876,25 @@ QUERIES = {
     "text_bigram_lm_score": q_text_bigram_lm_score,
     "text_boilerplate_ratio": q_text_boilerplate_ratio,
     "sim_label_centroid": q_sim_label_centroid,
+    "dedup_paragraph": q_dedup_paragraph,
+    "text_vocab_growth": q_text_vocab_growth,
+    "embedding_matryoshka_truncate": q_embedding_matryoshka_truncate,
+    "sim_mmr_rerank": q_sim_mmr_rerank,
+    "text_ngram_coverage": q_text_ngram_coverage,
+    "text_hapax_ratio": q_text_hapax_ratio,
+    "text_js_divergence": q_text_js_divergence,
+    "embedding_pq_codes": q_embedding_pq_codes,
+    "dedup_ngram_spans": q_dedup_ngram_spans,
+    "text_bpe_merge_pairs": q_text_bpe_merge_pairs,
+    "embedding_whitening": q_embedding_whitening,
+    "text_code_detect": q_text_code_detect,
+    "sim_bucket_purity": q_sim_bucket_purity,
+    "text_greedy_generate": q_text_greedy_generate,
+    "multimodal_tile_grid": q_multimodal_tile_grid,
+    "text_feature_hashing": q_text_feature_hashing,
+    "text_burrows_delta": q_text_burrows_delta,
+    "text_bpe_apply": q_text_bpe_apply,
+    "text_oov_rate": q_text_oov_rate,
 }
 
 ORACLES = {
@@ -1022,6 +2112,273 @@ ORACLES = {
     ),
     # rows-only: dedup_minhash_lsh, sim_ann_lsh, sim_ann_ivf (probabilistic
     # scale paths)
+    "dedup_paragraph": (
+        "WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents), "
+        "c AS (SELECT doc_id, CAST(i AS INT) AS chunk_idx, "
+        f"array_to_string(ws[(i*{PARA_CHUNK_WORDS}+1):(i*{PARA_CHUNK_WORDS}+{PARA_CHUNK_WORDS})], ' ') AS chunk "
+        f"FROM w, unnest(range(CAST(ceil(len(ws)/{PARA_CHUNK_WORDS}.0) AS BIGINT))) AS t(i)), "
+        "k AS (SELECT doc_id, chunk_idx, CASE WHEN row_number() OVER "
+        "(PARTITION BY md5(chunk) ORDER BY doc_id, chunk_idx) = 1 "
+        "THEN 1 ELSE 0 END AS is_first FROM c) "
+        "SELECT doc_id, count(*) AS n_chunks, "
+        "CAST(sum(is_first) AS BIGINT) AS n_kept, "
+        "round(sum(is_first) * 1.0 / count(*), 4) AS keep_ratio "
+        "FROM k GROUP BY doc_id"
+    ),
+    "text_vocab_growth": (
+        "WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w "
+        "FROM documents), "
+        "tf AS (SELECT doc_id, w FROM toks WHERE w <> ''), "
+        "first AS (SELECT w, min(doc_id) AS first_doc FROM tf GROUP BY w), "
+        "npd AS (SELECT first_doc AS doc_id, count(*) AS new_words "
+        "FROM first GROUP BY 1), "
+        "tpd AS (SELECT doc_id, count(*) AS n_toks FROM tf GROUP BY 1) "
+        "SELECT tpd.doc_id, "
+        "CAST(sum(n_toks) OVER (ORDER BY tpd.doc_id) AS BIGINT) AS cum_tokens, "
+        "CAST(sum(coalesce(new_words, 0)) OVER (ORDER BY tpd.doc_id) AS BIGINT) "
+        "AS vocab_size FROM tpd LEFT JOIN npd ON tpd.doc_id = npd.doc_id"
+    ),
+    "embedding_matryoshka_truncate": (
+        "WITH d AS (SELECT unnest([" +
+        ", ".join(str(d) for d in MATRYOSHKA_DIMS) + "]) AS dim) "
+        "SELECT vec_id, CAST(dim AS INT) AS dim, "
+        "round(list_sum(list_transform(embedding[1:dim], "
+        "x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) / "
+        "list_sum(list_transform(embedding[1:64], "
+        "x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), 6) AS energy_share "
+        "FROM embeddings, d"
+    ),
+    "text_ngram_coverage": (
+        "WITH toks AS (SELECT doc_id, "
+        "generate_subscripts(string_split(text, ' '), 1) AS pos, "
+        "unnest(string_split(text, ' ')) AS w FROM documents), "
+        "tf AS (SELECT doc_id, pos, w FROM toks WHERE w <> ''), "
+        "bg AS (SELECT a.w || ' ' || b.w AS bigram, count(*) AS cnt "
+        "FROM tf a JOIN tf b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1 "
+        "GROUP BY 1), "
+        "t AS (SELECT sum(cnt) AS total FROM bg), "
+        "ranked AS (SELECT bigram, cnt, "
+        "row_number() OVER (ORDER BY cnt DESC, bigram) AS rank FROM bg "
+        f"QUALIFY rank <= {NGRAM_COVER_TOPK}) "
+        "SELECT rank, bigram, cnt, "
+        "round(CAST(sum(cnt) OVER (ORDER BY rank) AS DOUBLE) / total, 6) "
+        "AS cum_share FROM ranked, t"
+    ),
+    "text_hapax_ratio": (
+        "WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w "
+        "FROM documents), "
+        "types AS (SELECT doc_id, w, count(*) AS cnt FROM toks "
+        "WHERE w <> '' GROUP BY 1, 2), "
+        "per_doc AS (SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_tokens, "
+        "count(*) AS n_types, "
+        "CAST(sum(CASE WHEN cnt = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_hapax "
+        "FROM types GROUP BY 1) "
+        "SELECT doc_id, n_tokens, n_types, n_hapax, "
+        "CAST((2000 * n_hapax + n_types) // (2 * n_types) AS BIGINT) AS hapax_pm "
+        "FROM per_doc"
+    ),
+    "text_js_divergence": (
+        "WITH toks AS (SELECT doc_id % 2 = 0 AS is_a, "
+        "unnest(string_split(text, ' ')) AS w FROM documents), "
+        "cells AS (SELECT w, "
+        "CAST(sum(CASE WHEN is_a THEN 1 ELSE 0 END) AS BIGINT) AS ca, "
+        "CAST(sum(CASE WHEN is_a THEN 0 ELSE 1 END) AS BIGINT) AS cb "
+        "FROM toks WHERE w <> '' GROUP BY 1), "
+        "tot AS (SELECT CAST(sum(ca) AS BIGINT) AS na, "
+        "CAST(sum(cb) AS BIGINT) AS nb FROM cells), "
+        "j AS (SELECT w, ca, cb, ca / CAST(na AS DOUBLE) AS p, "
+        "cb / CAST(nb AS DOUBLE) AS q FROM cells, tot) "
+        "SELECT w, ca, cb, round(p, 6) AS p_a, round(q, 6) AS p_b, "
+        "round(((CASE WHEN ca > 0 THEN p * ln(p / ((p + q) / 2)) ELSE 0 END) + "
+        "(CASE WHEN cb > 0 THEN q * ln(q / ((p + q) / 2)) ELSE 0 END)) / 2, 6) "
+        "AS js_cell FROM j"
+    ),
+    "dedup_ngram_spans": (
+        "WITH toks AS (SELECT doc_id, list_filter(string_split(text, ' '), "
+        "x -> x <> '') AS ts FROM documents), "
+        "sh AS (SELECT doc_id, unnest(CASE WHEN len(ts) >= "
+        f"{SPAN_W} THEN list_transform(generate_series(1, len(ts) - "
+        f"{SPAN_W - 1}), i -> array_to_string(ts[i : i + {SPAN_W - 1}], ' ')) "
+        "ELSE [] END) AS shingle FROM toks), "
+        "dup AS (SELECT shingle, count(DISTINCT doc_id) > 1 AS is_dup "
+        "FROM sh GROUP BY shingle), "
+        "per_doc AS (SELECT s.doc_id, count(*) AS n_shingles, "
+        "sum(CASE WHEN d.is_dup THEN 1 ELSE 0 END) AS n_dup "
+        "FROM sh s JOIN dup d USING (shingle) GROUP BY s.doc_id) "
+        "SELECT doc_id, "
+        "CAST(coalesce(n_shingles, 0) AS BIGINT) AS n_shingles, "
+        "CAST(coalesce(n_dup, 0) AS BIGINT) AS n_dup, "
+        "CAST(CASE WHEN coalesce(n_shingles, 0) = 0 THEN 0 ELSE "
+        "(2000 * n_dup + n_shingles) // (2 * n_shingles) END AS BIGINT) "
+        "AS dup_pm "
+        "FROM documents LEFT JOIN per_doc USING (doc_id)"
+    ),
+    "text_bpe_merge_pairs": (
+        "WITH words AS (SELECT unnest(list_filter(string_split(text, ' '), "
+        "x -> x <> '')) AS w FROM documents), "
+        "pairs AS (SELECT unnest(CASE WHEN length(w) >= 2 THEN "
+        "list_transform(generate_series(1, length(w) - 1), "
+        "i -> w[i : i + 1]) ELSE [] END) AS pair FROM words), "
+        "counted AS (SELECT pair, count(*) AS cnt FROM pairs GROUP BY pair), "
+        "total AS (SELECT sum(cnt) AS total FROM counted), "
+        "ranked AS (SELECT pair, cnt, row_number() OVER "
+        "(ORDER BY cnt DESC, pair) AS rank FROM counted) "
+        "SELECT rank, pair, cnt, "
+        "((2 * 1000000 * cnt + total) // (2 * total)) / 1000000.0 "
+        f"AS share FROM ranked, total WHERE rank <= {BPE_TOPK}"
+    ),
+    "text_code_detect": (
+        "WITH sig AS (SELECT doc_id, length(text) AS n_chars, "
+        "length(text) - length(regexp_replace(text, "
+        "'[{}();=<>\\[\\]]', '', 'g')) AS n_sym, "
+        "len(regexp_extract_all(text, "
+        "'\\b(def|return|import|var|const|function)\\b')) AS n_kw "
+        "FROM documents WHERE text IS NOT NULL) "
+        "SELECT doc_id, CAST(n_sym AS BIGINT) AS n_sym, "
+        "CAST(n_kw AS BIGINT) AS n_kw, "
+        "CAST(CASE WHEN n_chars = 0 THEN 0 "
+        "ELSE (2000 * n_sym + n_chars) // (2 * n_chars) END AS BIGINT) "
+        "AS sym_pm, "
+        "(CASE WHEN n_chars = 0 THEN 0 "
+        f"ELSE (2000 * n_sym + n_chars) // (2 * n_chars) END) >= {CODE_SYM_PM} "
+        f"AND n_kw >= {CODE_KW_MIN} AS looks_like_code "
+        "FROM sig"
+    ),
+    "sim_bucket_purity": (
+        "WITH bl AS (SELECT "
+        + " + ".join(
+            f"CASE WHEN embedding[{i + 1}] > 0 THEN {1 << i} ELSE 0 END"
+            for i in range(PURITY_BITS)
+        )
+        + " AS bucket, label FROM embeddings), "
+        "c AS (SELECT bucket, label, count(*) AS c FROM bl GROUP BY 1, 2), "
+        "pb AS (SELECT bucket, max(c) AS maj, sum(c) AS tot "
+        "FROM c GROUP BY 1) "
+        "SELECT CAST(count(*) AS BIGINT) AS n_buckets, "
+        "CAST(sum(tot) AS BIGINT) AS n_vecs, "
+        "CAST(sum(maj) AS BIGINT) AS majority_sum, "
+        "CAST((2 * 1000 * sum(maj) + sum(tot)) // (2 * sum(tot)) "
+        "AS BIGINT) AS purity_pm FROM pb"
+    ),
+    "text_greedy_generate": (
+        "WITH RECURSIVE big AS (SELECT w1, w2, count(*) AS cnt FROM ("
+        "SELECT ws[i] AS w1, ws[i + 1] AS w2 FROM "
+        "(SELECT string_split(text, ' ') AS ws FROM documents), "
+        "unnest(range(1, len(ws))) AS t(i)) GROUP BY 1, 2), "
+        "succ AS (SELECT w1, w2 FROM (SELECT w1, w2, row_number() OVER "
+        "(PARTITION BY w1 ORDER BY cnt DESC, w2) AS rn FROM big) "
+        "WHERE rn = 1), "
+        "seed AS (SELECT w FROM (SELECT w, row_number() OVER "
+        "(ORDER BY count(*) DESC, w) AS rn FROM (SELECT unnest("
+        "string_split(text, ' ')) AS w FROM documents) GROUP BY w) "
+        "WHERE rn = 1), "
+        "gen(step, word) AS ("
+        "SELECT 0, w FROM seed "
+        "UNION ALL "
+        "SELECT g.step + 1, s.w2 FROM gen g JOIN succ s ON s.w1 = g.word "
+        f"WHERE g.step < {GEN_STEPS}) "
+        "SELECT CAST(step AS INT) AS step, word FROM gen"
+    ),
+    "multimodal_tile_grid": (
+        # encode(), not CAST(text AS BLOB): the cast demands ASCII and
+        # hard-errors on any multibyte character (r8 unicode sweep)
+        "WITH d AS (SELECT doc_id, "
+        "(octet_length(encode(text)) % 64) + 1 AS w, "
+        "(octet_length(encode(text)) % 48) + 1 AS h FROM documents "
+        "WHERE text IS NOT NULL), "
+        f"g AS (SELECT doc_id, w, h, (w + {TILE_P} - 1) // {TILE_P} AS nx, "
+        f"(h + {TILE_P} - 1) // {TILE_P} AS ny FROM d), "
+        "t AS (SELECT doc_id, w, h, nx * ny AS n_patches, "
+        "CAST(i AS INT) AS p, nx FROM g, unnest(range(nx * ny)) AS u(i)) "
+        "SELECT doc_id, CAST(n_patches AS INT) AS n_patches, "
+        "p AS patch_idx, "
+        f"CAST((p % nx) * {TILE_P} AS INT) AS x0, "
+        f"CAST((p // nx) * {TILE_P} AS INT) AS y0, "
+        f"CAST(least((p % nx) * {TILE_P} + {TILE_P}, w) AS INT) AS x1, "
+        f"CAST(least((p // nx) * {TILE_P} + {TILE_P}, h) AS INT) AS y1 "
+        "FROM t"
+    ),
+    "text_feature_hashing": (
+        "WITH tri AS (SELECT doc_id, unnest(list_transform("
+        "range(1, greatest(length(text) - 2, 1) + 1), "
+        "i -> substr(text, CAST(i AS INT), 3))) AS t FROM documents) "
+        "SELECT doc_id, "
+        f"(('0x' || substr(md5(t), 1, 4))::BIGINT % {FH_SLOTS}) AS slot, "
+        "CAST(count(*) AS BIGINT) AS cnt FROM tri GROUP BY 1, 2"
+    ),
+    "text_burrows_delta": (
+        "WITH toks AS (SELECT source, unnest(string_split(text, ' ')) "
+        "AS w FROM documents), "
+        "topk AS (SELECT w FROM (SELECT w, row_number() OVER "
+        "(ORDER BY count(*) DESC, w) AS rk FROM toks GROUP BY w) "
+        f"WHERE rk <= {BURROWS_K}), "
+        "ps AS (SELECT source, count(*) AS tot FROM toks GROUP BY 1), "
+        "cnt AS (SELECT t.source, t.w, count(*) AS c FROM toks t "
+        "JOIN topk USING (w) GROUP BY 1, 2), "
+        "rated AS (SELECT cnt.source, w, "
+        "(2 * 1000000 * c + tot) // (2 * tot) AS r6 "
+        "FROM cnt JOIN ps ON cnt.source = ps.source), "
+        "scored AS (SELECT source, w, r6, "
+        "sum(r6) OVER (PARTITION BY w) AS s1, "
+        "sum(r6 * r6) OVER (PARTITION BY w) AS s2, "
+        "count(*) OVER (PARTITION BY w) AS k FROM rated) "
+        "SELECT w, source, r6 / 1000000.0 AS rate, "
+        "round((r6 - CAST(s1 AS DOUBLE) / k) / "
+        "sqrt((CAST(k AS DOUBLE) * CAST(s2 AS DOUBLE) "
+        "- CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE)) "
+        "/ (CAST(k AS DOUBLE) * (k - 1))), 6) AS z FROM scored"
+    ),
+    "text_bpe_apply": (
+        "WITH big AS (SELECT p, count(*) AS c FROM (SELECT "
+        "array_to_string(ws[i:i+1], ' ') AS p FROM "
+        "(SELECT string_split(text, ' ') AS ws FROM documents), "
+        "unnest(range(1, len(ws))) AS t(i)) GROUP BY 1), "
+        "mg AS (SELECT list(p ORDER BY p) AS m FROM (SELECT p, "
+        "row_number() OVER (ORDER BY c DESC, p) AS rk FROM big) "
+        f"WHERE rk <= {BPE_MERGES}), "
+        "sizes AS (SELECT doc_id, "
+        "CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens "
+        "FROM documents), "
+        "hits AS (SELECT doc_id, CAST(i AS BIGINT) AS i FROM "
+        "(SELECT doc_id, string_split(text, ' ') AS ws FROM documents), "
+        "mg, unnest(range(1, len(ws))) AS t(i) "
+        "WHERE list_contains(m, array_to_string(ws[i:i+1], ' '))), "
+        "runs AS (SELECT doc_id, i - row_number() OVER "
+        "(PARTITION BY doc_id ORDER BY i) AS grp, count(*) OVER () AS _x, "
+        "i FROM hits), "
+        "rl AS (SELECT doc_id, grp, count(*) AS len FROM runs "
+        "GROUP BY 1, 2), "
+        "mg2 AS (SELECT doc_id, CAST(sum((len + 1) // 2) AS BIGINT) "
+        "AS n_merges FROM rl GROUP BY 1) "
+        "SELECT s.doc_id, n_tokens, "
+        "CAST(coalesce(n_merges, 0) AS BIGINT) AS n_merges, "
+        "CAST(n_tokens - coalesce(n_merges, 0) AS BIGINT) AS tokens_after, "
+        "CAST((2 * 1000 * (n_tokens - coalesce(n_merges, 0)) + n_tokens) "
+        "// (2 * n_tokens) AS BIGINT) AS kept_pm "
+        "FROM sizes s LEFT JOIN mg2 ON s.doc_id = mg2.doc_id"
+    ),
+    "text_oov_rate": (
+        "WITH cut AS (SELECT (max(doc_id) * "
+        f"{OOV_SPLIT_PM}) // 1000 AS cut FROM documents), "
+        "big AS (SELECT doc_id, doc_id > cut AS is_eval, "
+        "array_to_string(ws[i:i+1], ' ') AS p FROM "
+        "(SELECT doc_id, string_split(text, ' ') AS ws FROM documents), "
+        "cut, unnest(range(1, len(ws))) AS t(i)), "
+        "tv AS (SELECT DISTINCT p FROM big WHERE NOT is_eval), "
+        "ev AS (SELECT b.doc_id, b.p, tv.p IS NOT NULL AS seen "
+        "FROM big b LEFT JOIN tv ON b.p = tv.p WHERE b.is_eval) "
+        "SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams, "
+        "CAST(sum(CASE WHEN NOT seen THEN 1 ELSE 0 END) AS BIGINT) "
+        "AS n_oov, "
+        "CAST((2 * 1000 * sum(CASE WHEN NOT seen THEN 1 ELSE 0 END) "
+        "+ count(*)) // (2 * count(*)) AS BIGINT) AS oov_pm "
+        "FROM ev GROUP BY 1"
+    ),
+    # embedding_pq_codes: rows-only by design (trained codebook); numpy
+    # replay in test_pq_codes_match_numpy_replay.
+    # embedding_whitening: rows-only (the whitening matrix is a trained
+    # float artifact); test_whitening_matches_numpy_and_decorrelates
+    # replays the numpy computation.
 }
 
 

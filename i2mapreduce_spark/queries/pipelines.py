@@ -15,6 +15,8 @@ from pyspark.sql import Window, functions as F
 
 from ..catalog import load_tables
 from ..operators import algorithms, dedup
+from .aggregates import _md5_le, _md5_le_sql
+from .quality import CKSUM_MOD
 
 #: benchmark membership: ~6% of docs, deterministic (doc_id % 17 == 0)
 DECON_BENCH_MOD = 17
@@ -429,6 +431,351 @@ def q_pipeline_epoch_shuffle(spark, sf_dir):
     )
 
 
+def q_pipeline_importance_sample(spark, sf_dir):
+    """Deterministic importance sampling by a per-document acceptance
+    probability (longer docs kept more often: p = min(n_chars, 1000)/
+    1000) — the quality-weighted downsampling step of a corpus mixer,
+    made engine-independent by the portable md5 coin: accept iff
+    (md5_le16(doc_id) * 1000) < (p * 1000) * 65536, compared entirely in
+    integers.  Unlike rand()-based sampling this is reproducible across
+    engines, retries and repartitioning, and pushes down as a scan
+    filter at 100 TB."""
+    load_tables(spark, sf_dir)
+    d = spark.table("documents")
+    coin = _md5_le(F.col("doc_id").cast("string"), 2)  # 0..65535
+    p_millis = F.least(F.col("n_chars"), F.lit(1000))  # p * 1000
+    return (
+        d.filter(coin * 1000 < p_millis * 65536)
+        .agg(
+            F.count(F.lit(1)).alias("n_sampled"),
+            F.sum("n_chars").alias("sampled_chars"),
+            F.min("doc_id").alias("min_doc"),
+            F.max("doc_id").alias("max_doc"),
+        )
+    )
+
+
+# =================================================================
+# Group L — curriculum staging + hapax profile
+# =================================================================
+CURR_STAGES = 4
+
+
+def q_pipeline_curriculum(spark, sf_dir):
+    """Curriculum staging: order the corpus by example difficulty
+    (token count here — short to long, the standard length curriculum)
+    and cut it into 4 equal-rank stages with the same integer quartile
+    rule as decile lift; emit each stage's doc count, token mass and
+    length range.  Ordering uses the distributed chunked-offset
+    row_number — the corpus scales, the 4-row output does not."""
+    from ..operators.ranking import global_row_number
+
+    load_tables(spark, sf_dir)
+    # complete-case: a missing document has no difficulty to rank (the
+    # engines' default NULL sort orders differ) — excluded on both sides
+    d = spark.table("documents").filter(F.col("text").isNotNull())
+    toks = d.select(
+        "doc_id",
+        F.size(
+            F.filter(F.split(F.col("text"), " "), lambda w: w != "")
+        ).alias("tok_cnt"),
+    )
+    ranked = global_row_number(toks, ["tok_cnt", "doc_id"])
+    n = ranked.agg(F.count(F.lit(1)).alias("n"))
+    staged = ranked.crossJoin(F.broadcast(n)).select(
+        F.expr(f"((i - 1) * {CURR_STAGES}) div n + 1").alias("stage"),
+        "tok_cnt",
+    )
+    return staged.groupBy("stage").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("tok_cnt").alias("total_tokens"),
+        F.min("tok_cnt").alias("min_tokens"),
+        F.max("tok_cnt").alias("max_tokens"),
+    )
+
+
+#: target-encoding smoothing pseudo-count (additive / Laplace-style):
+#: enc(c) = (sum_c + m * global_mean) / (n_c + m) — an integer-exact
+#: blend once revenues are cents and the global mean is a cents ratio
+TE_SMOOTH_M = 20
+
+
+def q_pipeline_target_encode(spark, sf_dir):
+    """Smoothed target encoding of order priority against the
+    late-shipment label — the categorical-feature transform used when
+    one-hot is too wide: enc(c) = (positives_c + m·global_rate) /
+    (n_c + m) with pseudo-count m=20, shrinking rare categories toward
+    the global rate (the leak-control that makes target encoding safe).
+
+    Exact arithmetic: label sums and counts are integers and the
+    encoding is a TWO-STAGE half-up composition — first the global rate
+    as a x10^6 integer (bounded ≤ 10^6), then
+    (10^6·pos_c + m·rate_x1e6) div (n_c + m).  The single-rational form
+    (N·pos_c + m·P)/(N·(n_c+m)) is algebraically cleaner but its
+    numerator grows O(rows²) and leaves BIGINT near sf1 (review
+    finding); the staged form's intermediates stay ≤ 10^6·rows.  Both
+    engines evaluate the identical two stages, so the key is still
+    hash-exact by construction.  Two aggs and one 1-row broadcast; the
+    category spine is the priority enum (bounded at any SF)."""
+    load_tables(spark, sf_dir)
+    li = spark.table("lineitem")
+    o = spark.table("orders")
+    lab = li.join(o, li.l_orderkey == o.o_orderkey).select(
+        "o_orderpriority",
+        F.when(
+            F.col("l_shipdate") > F.date_add(F.col("o_orderdate"), 90), 1
+        )
+        .otherwise(0)
+        .alias("late"),
+    )
+    per_cat = lab.groupBy("o_orderpriority").agg(
+        F.count(F.lit(1)).alias("n_c"),
+        F.sum("late").alias("pos_c"),
+    )
+    glob = lab.agg(
+        F.count(F.lit(1)).alias("n_g"), F.sum("late").alias("pos_g")
+    )
+    return per_cat.crossJoin(F.broadcast(glob)).select(
+        "o_orderpriority",
+        "n_c",
+        "pos_c",
+        # stage 1: rate_x1e6 = half-up(1e6*pos_g/n_g)  (bounded <= 1e6)
+        # stage 2: enc_x1e6 = half-up((1e6*pos_c + m*rate_x1e6)/(n_c+m))
+        (
+            F.expr(
+                "(2 * (1000000 * pos_c + "
+                f"{TE_SMOOTH_M} * ((2 * 1000000 * pos_g + n_g) div (2 * n_g)))"
+                f" + (n_c + {TE_SMOOTH_M})) div (2 * (n_c + {TE_SMOOTH_M}))"
+            )
+            / 1000000.0
+        ).alias("target_enc"),
+        (
+            F.expr("(2 * 1000000 * pos_g + n_g) div (2 * n_g)") / 1000000.0
+        ).alias("global_rate"),
+    )
+
+
+def q_pipeline_tokenizer_fertility(spark, sf_dir):
+    """Tokenizer fertility table per (lang, source): docs, whitespace
+    tokens, chars, tokens-per-1000-chars and mean chars-per-token — the
+    budget telemetry that converts a corpus's bytes into a training
+    token count (and flags languages whose tokenizer fragments text).
+    One partial+final agg; all counts exact integers, ratios half-up
+    fixed-point quotients of the group SUMS (never means of means)."""
+    load_tables(spark, sf_dir)
+    d = spark.table("documents")
+    per = d.select(
+        "lang",
+        "source",
+        F.size(F.split("text", " ")).cast("long").alias("toks"),
+        F.col("n_chars").cast("long").alias("chars"),
+    )
+    g = per.groupBy("lang", "source").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("toks").alias("tokens"),
+        F.sum("chars").alias("chars"),
+    )
+    return g.select(
+        "lang",
+        "source",
+        "n_docs",
+        "tokens",
+        "chars",
+        F.expr("(2 * 1000 * tokens + chars) div (2 * chars)").alias(
+            "toks_per_kchar"
+        ),
+        (
+            F.expr("(2 * 1000 * chars + tokens) div (2 * tokens)") / 1000.0
+        ).alias("chars_per_tok"),
+    )
+
+
+#: chunker geometry (words)
+CHUNK_SIZE = 64
+CHUNK_STRIDE = 48
+
+
+def q_pipeline_chunk_overlap(spark, sf_dir):
+    """Overlapping sliding-window chunking — the RAG-ingestion splitter:
+    each document becomes CHUNK_SIZE-word windows advancing by
+    CHUNK_STRIDE (overlap = size - stride keeps sentences that straddle
+    a boundary retrievable; dedup_paragraph's disjoint chunks cannot).
+    Emits (doc_id, chunk_idx, start_word, n_words, chunk).  One
+    generate + narrow maps, embarrassingly parallel over documents;
+    chunk count is the closed form max(1, ceil((len-size)/stride)+1),
+    evaluated with non-negative integer operands only."""
+    load_tables(spark, sf_dir)
+    d = spark.table("documents")
+    n_chunks = (
+        f"CASE WHEN size(split(text, ' ')) <= {CHUNK_SIZE} THEN 1 "
+        f"ELSE (size(split(text, ' ')) - {CHUNK_SIZE} + {CHUNK_STRIDE} - 1) "
+        f"div {CHUNK_STRIDE} + 1 END"
+    )
+    ch = d.select(
+        "doc_id",
+        F.explode(F.expr(f"sequence(0, {n_chunks} - 1)")).alias("chunk_idx"),
+        F.split("text", " ").alias("ws"),
+    )
+    return ch.select(
+        "doc_id",
+        "chunk_idx",
+        (F.col("chunk_idx") * CHUNK_STRIDE + 1).alias("start_word"),
+        F.expr(
+            f"size(slice(ws, chunk_idx * {CHUNK_STRIDE} + 1, {CHUNK_SIZE}))"
+        ).alias("n_words"),
+        F.expr(
+            f"concat_ws(' ', slice(ws, chunk_idx * {CHUNK_STRIDE} + 1, "
+            f"{CHUNK_SIZE}))"
+        ).alias("chunk"),
+    )
+
+
+#: token budget to allocate across documents.source groups
+BUDGET_TOKENS = 100_000
+
+
+def q_pipeline_token_budget(spark, sf_dir):
+    """WATER-FILLING token-budget allocation across corpus sources: give
+    every source an equal share of the training-token budget, but a
+    source can't supply more than it has — its surplus redistributes
+    among the rest (the classic max-min fair allocator; the scheduler
+    that turns pipeline_mixture_weights into an executable plan).
+
+    Closed form over the bounded source enum: sort sources by available
+    tokens ascending, then alloc_i = min(avail_i, floor(remaining /
+    sources_left)) with `remaining` folded over the prefix — evaluated
+    per source as an O(k^2) ordered fold over ONE sorted array, all
+    exact integers (the fold accumulator is a single BIGINT slot, safe
+    under DuckDB's in-place fold)."""
+    load_tables(spark, sf_dir)
+    # complete-case: a missing document supplies no tokens to budget
+    d = spark.table("documents").filter(F.col("text").isNotNull())
+    per = d.groupBy("source").agg(
+        F.sum(F.size(F.split("text", " ")).cast("long")).alias("avail")
+    )
+    from pyspark.sql import Window
+
+    per = per.withColumn(
+        "idx",
+        F.row_number().over(Window.orderBy("avail", "source")).cast("long"),
+    )
+    packed = per.groupBy().agg(
+        F.array_sort(F.collect_list(F.struct("idx", "source", "avail"))).alias(
+            "arr"
+        ),
+        F.count(F.lit(1)).alias("k"),
+    )
+    # spent before element idx: fold the allocation rule over the prefix
+    spent = (
+        "aggregate(slice(arr, 1, CAST(x.idx - 1 AS INT)), 0L, (acc, y) -> "
+        f"acc + least(y.avail, ({BUDGET_TOKENS} - acc) div (k - y.idx + 1)))"
+    )
+    rows = packed.select("k", F.explode("arr").alias("x"), F.col("arr"))
+    alloc = F.expr(
+        f"least(x.avail, ({BUDGET_TOKENS} - {spent}) div (k - x.idx + 1))"
+    )
+    return rows.select(
+        F.col("x")["source"].alias("source"),
+        F.col("x")["avail"].alias("avail_tokens"),
+        alloc.cast("long").alias("alloc_tokens"),
+        (F.col("x")["avail"] <= alloc).alias("supply_capped"),
+    )
+
+
+#: manifest shards and checksum modulus (2^61 - 1)
+MANIFEST_SHARDS = 16
+
+
+def q_pipeline_shard_manifest(spark, sf_dir):
+    """Per-shard DATA MANIFEST: for each of 16 hash shards of orders,
+    the row count, key range and an order-insensitive 60-bit checksum
+    (md5 row hash summed mod 2^61-1 in DECIMAL(38)/HUGEINT) — the
+    artifact a dataset publisher signs so any consumer can verify a
+    shard without re-reading the rest (dq_table_checksum's single
+    fingerprint, sharded).  One partial+final agg keyed by the shard
+    id; shard assignment is the same key mod the pipeline uses."""
+    load_tables(spark, sf_dir)
+    o = spark.table("orders")
+    # canonical NULL rendering: a checksum must COVER missing values, so
+    # NULL price encodes as the empty field (a price string is never
+    # empty otherwise).  concat_ws would silently DROP the field (and
+    # its separator) where the oracle's || propagates NULL — coalesce
+    # pins one rendering on both engines.
+    canon = F.concat_ws(
+        "|",
+        F.col("o_orderkey").cast("string"),
+        F.coalesce(
+            (F.col("o_totalprice").cast("decimal(18,2)") * 100)
+            .cast("long")
+            .cast("string"),
+            F.lit(""),
+        ),
+        F.col("o_orderpriority"),
+    )
+    h = F.conv(F.substring(F.md5(canon), 1, 15), 16, 10).cast(
+        "decimal(38,0)"
+    )
+    return (
+        o.select((F.col("o_orderkey") % MANIFEST_SHARDS).alias("shard"),
+                 "o_orderkey", h.alias("h"))
+        .groupBy("shard")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.min("o_orderkey").alias("min_key"),
+            F.max("o_orderkey").alias("max_key"),
+            F.expr(f"CAST(sum(h) % {CKSUM_MOD} AS BIGINT)").alias(
+                "checksum"
+            ),
+        )
+    )
+
+
+#: interleave: how many scheduled positions to emit
+ILV_HEAD = 100
+
+
+def q_pipeline_interleave_order(spark, sf_dir):
+    """Deterministic WEIGHTED INTERLEAVING of corpus sources into one
+    training stream: each document's schedule key is its within-source
+    rank STRETCHED by the inverse of the source's document share, so
+    sources appear in proportion everywhere in the stream (not in
+    blocks) — the step that turns pipeline_mixture_weights into an
+    actual example order a trainer can consume.
+
+    Plan: per-source ranks from co-partitioned md5-ordered windows,
+    source sizes from one bounded agg, schedule key = rank * N / n_src
+    as an EXACT half-up integer, global order materialized for the
+    first 100 positions via distributed sort+limit.  Everything
+    deterministic and integer-exact."""
+    load_tables(spark, sf_dir)
+    d = spark.table("documents")
+    ws = Window.partitionBy("source").orderBy(
+        F.md5(F.col("doc_id").cast("string")), "doc_id"
+    )
+    ranked = d.select(
+        "doc_id",
+        "source",
+        F.row_number().over(ws).cast("long").alias("r"),
+    )
+    sizes = ranked.groupBy("source").agg(F.max("r").alias("ns"))
+    tot = sizes.agg(F.sum("ns").alias("n"))
+    keyed = (
+        ranked.join(F.broadcast(sizes), "source")
+        .crossJoin(F.broadcast(tot))
+        .select(
+            "doc_id",
+            "source",
+            "r",
+            F.expr("(2 * r * n + ns) div (2 * ns)").alias("sched"),
+        )
+    )
+    return (
+        keyed.orderBy("sched", "source", "doc_id")
+        .limit(ILV_HEAD)
+        .select("sched", "source", "doc_id", "r")
+    )
+
+
 QUERIES = {
     "pipeline_epoch_shuffle": q_pipeline_epoch_shuffle,
     "pipeline_quality_gate": q_pipeline_quality_gate,
@@ -439,6 +786,14 @@ QUERIES = {
     "pipeline_split_leakage_safe": q_pipeline_split_leakage_safe,
     "pipeline_mixture_weights": q_pipeline_mixture_weights,
     "text_repetition_ratio": q_text_repetition_ratio,
+    "pipeline_importance_sample": q_pipeline_importance_sample,
+    "pipeline_curriculum": q_pipeline_curriculum,
+    "pipeline_target_encode": q_pipeline_target_encode,
+    "pipeline_tokenizer_fertility": q_pipeline_tokenizer_fertility,
+    "pipeline_chunk_overlap": q_pipeline_chunk_overlap,
+    "pipeline_token_budget": q_pipeline_token_budget,
+    "pipeline_shard_manifest": q_pipeline_shard_manifest,
+    "pipeline_interleave_order": q_pipeline_interleave_order,
 }
 
 ORACLES = {
@@ -581,5 +936,121 @@ ORACLES = {
         "round(CAST(t.top_c AS DOUBLE) / t.n_tokens, 4) AS top_word_frac, "
         "round(CAST(d.n_dup AS DOUBLE) / d.n_tri, 4) AS dup_trigram_frac "
         "FROM top t JOIN dup d ON t.doc_id = d.doc_id"
+    ),
+    "pipeline_importance_sample": (
+        "SELECT count(*) AS n_sampled, CAST(sum(n_chars) AS BIGINT) AS sampled_chars, "
+        "min(doc_id) AS min_doc, max(doc_id) AS max_doc FROM documents "
+        f"WHERE {_md5_le_sql('CAST(doc_id AS VARCHAR)', 2)} * 1000 "
+        "< least(n_chars, 1000) * 65536"
+    ),
+    "pipeline_curriculum": (
+        "WITH toks AS (SELECT doc_id, "
+        "len(list_filter(string_split(text, ' '), w -> w <> '')) AS tok_cnt "
+        "FROM documents WHERE text IS NOT NULL), "
+        "ranked AS (SELECT tok_cnt, "
+        "row_number() OVER (ORDER BY tok_cnt, doc_id) AS i FROM toks), "
+        "n AS (SELECT count(*) AS n FROM ranked), "
+        f"staged AS (SELECT ((i - 1) * {CURR_STAGES}) // n + 1 AS stage, "
+        "tok_cnt FROM ranked, n) "
+        "SELECT CAST(stage AS BIGINT) AS stage, count(*) AS n_docs, "
+        "CAST(sum(tok_cnt) AS BIGINT) AS total_tokens, "
+        "CAST(min(tok_cnt) AS BIGINT) AS min_tokens, "
+        "CAST(max(tok_cnt) AS BIGINT) AS max_tokens FROM staged GROUP BY 1"
+    ),
+    "pipeline_target_encode": (
+        "WITH lab AS (SELECT o_orderpriority, "
+        "CASE WHEN l_shipdate > o_orderdate + INTERVAL 90 DAY "
+        "THEN 1 ELSE 0 END AS late "
+        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey), "
+        "per_cat AS (SELECT o_orderpriority, count(*) AS n_c, "
+        "sum(late) AS pos_c FROM lab GROUP BY 1), "
+        "gtot AS (SELECT count(*) AS n_g, sum(late) AS pos_g FROM lab) "
+        "SELECT o_orderpriority, n_c, CAST(pos_c AS BIGINT) AS pos_c, "
+        "((2 * (1000000 * pos_c + "
+        f"{TE_SMOOTH_M} * ((2 * 1000000 * pos_g + n_g) // (2 * n_g))) "
+        f"+ (n_c + {TE_SMOOTH_M})) // (2 * (n_c + {TE_SMOOTH_M}))) "
+        "/ 1000000.0 AS target_enc, "
+        "((2 * 1000000 * pos_g + n_g) // (2 * n_g)) / 1000000.0 "
+        "AS global_rate FROM per_cat, gtot"
+    ),
+    "pipeline_tokenizer_fertility": (
+        "WITH per AS (SELECT lang, source, "
+        "CAST(len(string_split(text, ' ')) AS BIGINT) AS toks, "
+        "CAST(n_chars AS BIGINT) AS chars FROM documents), "
+        "g AS (SELECT lang, source, count(*) AS n_docs, "
+        "CAST(sum(toks) AS BIGINT) AS tokens, "
+        "CAST(sum(chars) AS BIGINT) AS chars FROM per GROUP BY 1, 2) "
+        "SELECT lang, source, n_docs, tokens, chars, "
+        "(2 * 1000 * tokens + chars) // (2 * chars) AS toks_per_kchar, "
+        "((2 * 1000 * chars + tokens) // (2 * tokens)) / 1000.0 "
+        "AS chars_per_tok FROM g"
+    ),
+    "pipeline_chunk_overlap": (
+        "WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws, "
+        f"CASE WHEN len(string_split(text, ' ')) <= {CHUNK_SIZE} THEN 1 "
+        f"ELSE (len(string_split(text, ' ')) - {CHUNK_SIZE} "
+        f"+ {CHUNK_STRIDE} - 1) // {CHUNK_STRIDE} + 1 END AS nc "
+        "FROM documents), "
+        "ch AS (SELECT doc_id, CAST(i AS INT) AS chunk_idx, ws "
+        "FROM d, unnest(range(nc)) AS t(i)) "
+        "SELECT doc_id, chunk_idx, "
+        f"CAST(chunk_idx * {CHUNK_STRIDE} + 1 AS INT) AS start_word, "
+        f"CAST(len(ws[(chunk_idx * {CHUNK_STRIDE} + 1):"
+        f"(chunk_idx * {CHUNK_STRIDE} + {CHUNK_SIZE})]) AS INT) AS n_words, "
+        f"array_to_string(ws[(chunk_idx * {CHUNK_STRIDE} + 1):"
+        f"(chunk_idx * {CHUNK_STRIDE} + {CHUNK_SIZE})], ' ') AS chunk "
+        "FROM ch"
+    ),
+    # the prefix fold uses a UNIFORM struct list with a zero sentinel as
+    # the init element (DuckDB 1.0 list_reduce has no explicit init and
+    # rejects heterogeneous acc/element types); only the .sp slot
+    # accumulates and it reads only itself -> in-place-fold safe
+    "pipeline_token_budget": (
+        "WITH per AS (SELECT source, "
+        "CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS avail "
+        "FROM documents WHERE text IS NOT NULL GROUP BY 1), "
+        "idxd AS (SELECT source, avail, CAST(row_number() OVER "
+        "(ORDER BY avail, source) AS BIGINT) AS idx FROM per), "
+        "packed AS (SELECT list({'idx': idx, 'source': source, "
+        "'avail': avail} ORDER BY idx) AS arr, count(*) AS k FROM idxd), "
+        "rows AS (SELECT k, unnest(arr) AS x, arr FROM packed), "
+        "sp AS (SELECT k, x, list_reduce(list_prepend("
+        "{'idx': CAST(0 AS BIGINT), 'avail': CAST(0 AS BIGINT), "
+        "'sp': CAST(0 AS BIGINT)}, "
+        "list_transform(arr[1:CAST(x.idx - 1 AS INT)], y -> "
+        "{'idx': y.idx, 'avail': y.avail, 'sp': CAST(0 AS BIGINT)})), "
+        "(acc, y) -> {'idx': y.idx, 'avail': y.avail, "
+        f"'sp': acc.sp + least(y.avail, ({BUDGET_TOKENS} - acc.sp) "
+        "// (k - y.idx + 1))}).sp AS spent FROM rows) "
+        "SELECT x.source AS source, x.avail AS avail_tokens, "
+        f"CAST(least(x.avail, ({BUDGET_TOKENS} - spent) "
+        "// (k - x.idx + 1)) AS BIGINT) AS alloc_tokens, "
+        f"x.avail <= least(x.avail, ({BUDGET_TOKENS} - spent) "
+        "// (k - x.idx + 1)) AS supply_capped FROM sp"
+    ),
+    "pipeline_shard_manifest": (
+        "WITH h AS (SELECT o_orderkey % "
+        f"{MANIFEST_SHARDS} AS shard, o_orderkey, "
+        "('0x' || substr(md5(o_orderkey::VARCHAR || '|' "
+        "|| coalesce(CAST(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 "
+        "AS BIGINT) AS VARCHAR), '') || '|' || o_orderpriority), 1, 15))"
+        "::BIGINT AS h FROM orders) "
+        "SELECT shard, CAST(count(*) AS BIGINT) AS n_rows, "
+        "min(o_orderkey) AS min_key, max(o_orderkey) AS max_key, "
+        f"CAST(sum(h) % {CKSUM_MOD} AS BIGINT) AS checksum "
+        "FROM h GROUP BY 1"
+    ),
+    "pipeline_interleave_order": (
+        "WITH r AS (SELECT doc_id, source, "
+        "CAST(row_number() OVER (PARTITION BY source "
+        "ORDER BY md5(doc_id::VARCHAR), doc_id) AS BIGINT) AS r "
+        "FROM documents), "
+        "sz AS (SELECT source, max(r) AS ns FROM r GROUP BY 1), "
+        "t AS (SELECT sum(ns) AS n FROM sz), "
+        "k AS (SELECT doc_id, r.source, r, "
+        "(2 * r * n + ns) // (2 * ns) AS sched "
+        "FROM r JOIN sz ON r.source = sz.source, t) "
+        "SELECT CAST(sched AS BIGINT) AS sched, source, doc_id, r "
+        f"FROM k ORDER BY sched, source, doc_id LIMIT {ILV_HEAD}"
     ),
 }

@@ -7,9 +7,11 @@ Here they are Catalyst expressions: codegen'd, null-safe, and pushed down.
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from pyspark.sql import Window, functions as F
 
 from ..catalog import load_tables
+from ..operators.ranking import global_row_number
+from .aggregates import _md5_le, _md5_le_sql
 
 
 def q_project_expr(spark, sf_dir):
@@ -146,6 +148,153 @@ def q_sample_reservoir(spark, sf_dir):
     )
 
 
+RES_K = 50  #: weighted-reservoir sample size
+RES_SCALE = float(2 ** 56)
+
+
+def q_sample_weighted_reservoir(spark, sf_dir):
+    """Weighted reservoir sample (Efraimidis-Spirakis A-Res) of 50 docs
+    with probability ∝ token count: key_i = u_i^(1/w_i) ranked
+    descending, realized as ln(u_i)/w_i with u_i = (md5_56(doc)+1)/2^56
+    — the PORTABLE md5 makes the sample (and the reported keys)
+    bit-reproducible across engines AND across runs, which uuid()/rand()
+    sampling cannot be.  The top-k is a distributed TakeOrdered
+    (per-partition heads + k-row merge); A-Res keys are mergeable, so
+    the same construction shards at 100 TB."""
+    load_tables(spark, sf_dir)
+    d = spark.table("documents")
+    toks = d.select(
+        "doc_id",
+        F.size(
+            F.filter(F.split(F.col("text"), " "), lambda w: w != "")
+        ).alias("w"),
+    ).filter(F.col("w") > 0)
+    h = _md5_le(F.col("doc_id").cast("string"), 7)
+    scored = toks.select(
+        "doc_id",
+        "w",
+        (F.log((h + 1) / F.lit(RES_SCALE)) / F.col("w")).alias("score"),
+    )
+    picked = scored.orderBy(F.col("score").desc(), "doc_id").limit(RES_K)
+    return picked.select("doc_id", "w", F.round("score", 6).alias("score"))
+
+
+#: systematic sampling interval
+SYS_K = 40
+
+
+def q_sample_systematic(spark, sf_dir):
+    """SYSTEMATIC sample of orders: every SYS_K-th row under the unique
+    total order (o_orderdate, o_orderkey) — the even-coverage design
+    (stratifies implicitly over the sort dimension, here time) used
+    when a uniform hash sample would leave date gaps.  The global rank
+    comes from the distributed chunked-offset row_number
+    (ranking.global_row_number), NOT a single-partition window; the
+    filter is a pure modulus on that rank."""
+    load_tables(spark, sf_dir)
+    o = spark.table("orders").select(
+        "o_orderkey", "o_orderdate", "o_totalprice"
+    )
+    ranked = global_row_number(o, ["o_orderdate", "o_orderkey"], "rk")
+    return ranked.filter(F.col("rk") % SYS_K == 1).select(
+        "o_orderkey", "o_orderdate", "o_totalprice", "rk"
+    )
+
+
+#: Neyman: total sample budget to allocate across strata
+NEYMAN_BUDGET = 1000
+
+
+def q_sample_neyman_allocation(spark, sf_dir):
+    """NEYMAN ALLOCATION — the optimal stratified-sampling design: given
+    a total budget of n draws across strata (order priority), allocate
+    n_h proportional to N_h * S_h (stratum size x stratum std dev),
+    which minimizes the variance of the stratified mean — the planning
+    step the sample_stratified operator should be fed with.
+
+    Per-stratum moments are exact DECIMAL(38)/HUGEINT integer sums; the
+    allocation weights become doubles in one fixed shape, and the final
+    integer allocation uses the floor of the proportional share (the
+    deterministic largest-remainder step is reported as the residual
+    column rather than re-distributed, keeping every number a pure
+    function of the exact moments)."""
+    load_tables(spark, sf_dir)
+    o = spark.table("orders").select(
+        "o_orderpriority",
+        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
+        .cast("long")
+        .alias("cents"),
+    )
+    g = o.groupBy("o_orderpriority").agg(
+        F.count(F.lit(1)).alias("n_h"),
+        F.sum(F.col("cents").cast("decimal(38,0)")).alias("s1"),
+        F.sum(
+            (F.col("cents").cast("decimal(38,0)") * F.col("cents")).cast(
+                "decimal(38,0)"
+            )
+        ).alias("s2"),
+    )
+    # try_divide: a 1-row stratum has no sample variance — NULL on both
+    # engines (DuckDB x/0 is NULL; Spark ANSI / would throw)
+    sd = F.sqrt(
+        F.try_divide(
+            F.col("n_h").cast("double") * F.col("s2").cast("double")
+            - F.col("s1").cast("double") * F.col("s1").cast("double"),
+            F.col("n_h").cast("double") * (F.col("n_h") - 1),
+        )
+    )
+    weighted = g.select(
+        "o_orderpriority", "n_h", (F.col("n_h") * sd).alias("w")
+    )
+    tot = weighted.agg(F.sum("w").alias("tw"))
+    return (
+        weighted.crossJoin(F.broadcast(tot))
+        .select(
+            "o_orderpriority",
+            "n_h",
+            F.round(F.col("w") / F.col("tw"), 6).alias("weight"),
+            F.floor(NEYMAN_BUDGET * F.col("w") / F.col("tw"))
+            .cast("long")
+            .alias("n_alloc"),
+        )
+    )
+
+
+def q_sample_balanced_downsample(spark, sf_dir):
+    """CLASS-BALANCED downsampling: keep exactly min-class-count rows of
+    EVERY event type, chosen by deterministic md5 rank within the class
+    — the majority-class subsample imbalanced training pipelines apply
+    (and reproducibly: same data -> same sample, any partitioning).
+    One per-class ranked window (co-partitioned by class), one bounded
+    1-row minimum, and a rank filter; the output is the per-class
+    before/after audit."""
+    load_tables(spark, sf_dir)
+    e = spark.table("events")
+    wc = Window.partitionBy("event_type").orderBy(
+        F.md5(F.col("event_id").cast("string")), "event_id"
+    )
+    ranked = e.select(
+        "event_type",
+        "event_id",
+        F.row_number().over(wc).cast("long").alias("rk"),
+    )
+    counts = ranked.groupBy("event_type").agg(F.max("rk").alias("n"))
+    mn = counts.agg(F.min("n").alias("m"))
+    kept = ranked.crossJoin(F.broadcast(mn)).filter(
+        F.col("rk") <= F.col("m")
+    )
+    return (
+        kept.groupBy("event_type")
+        .agg(F.count(F.lit(1)).alias("n_kept"))
+        .join(counts, "event_type")
+        .select(
+            "event_type",
+            F.col("n").alias("n_original"),
+            "n_kept",
+        )
+    )
+
+
 QUERIES = {
     "project_expr": q_project_expr,
     "sample_reservoir": q_sample_reservoir,
@@ -154,6 +303,10 @@ QUERIES = {
     "case_coalesce_cast": q_case_coalesce_cast,
     "sample_hash_bucket": q_sample_hash_bucket,
     "sample_stratified": q_sample_stratified,
+    "sample_weighted_reservoir": q_sample_weighted_reservoir,
+    "sample_systematic": q_sample_systematic,
+    "sample_neyman_allocation": q_sample_neyman_allocation,
+    "sample_balanced_downsample": q_sample_balanced_downsample,
 }
 
 ORACLES = {
@@ -200,5 +353,51 @@ ORACLES = {
         "coalesce(CAST(NULL AS VARCHAR), o_orderstatus) AS status_nn, "
         "CAST(CAST(o_orderkey % 1000 AS DOUBLE) AS VARCHAR) AS key_dbl_str "
         "FROM orders"
+    ),
+    "sample_weighted_reservoir": (
+        "WITH toks AS (SELECT doc_id, "
+        "len(list_filter(string_split(text, ' '), w -> w <> '')) AS w "
+        "FROM documents), "
+        "scored AS (SELECT doc_id, w, "
+        "ln((" + _md5_le_sql("CAST(doc_id AS VARCHAR)", 7) + " + 1) / "
+        f"{RES_SCALE!r}) / w AS score FROM toks WHERE w > 0) "
+        f"SELECT doc_id, CAST(w AS BIGINT) AS w, round(score, 6) AS score "
+        f"FROM scored ORDER BY score DESC, doc_id LIMIT {RES_K}"
+    ),
+    "sample_systematic": (
+        "WITH r AS (SELECT o_orderkey, o_orderdate, o_totalprice, "
+        "row_number() OVER (ORDER BY o_orderdate, o_orderkey) AS rk "
+        "FROM orders) "
+        "SELECT o_orderkey, o_orderdate, o_totalprice, rk FROM r "
+        f"WHERE rk % {SYS_K} = 1"
+    ),
+    "sample_neyman_allocation": (
+        "WITH o AS (SELECT o_orderpriority, "
+        "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) "
+        "AS cents FROM orders), "
+        "g AS (SELECT o_orderpriority, count(*) AS n_h, sum(cents::HUGEINT) AS s1, "
+        "sum(cents::HUGEINT * cents) AS s2 FROM o GROUP BY 1), "
+        "w AS (SELECT o_orderpriority, n_h, "
+        "n_h * sqrt((CAST(n_h AS DOUBLE) * CAST(s2 AS DOUBLE) "
+        "- CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE)) "
+        "/ (CAST(n_h AS DOUBLE) * (n_h - 1))) AS wt FROM g), "
+        "t AS (SELECT sum(wt) AS tw FROM w) "
+        "SELECT o_orderpriority, CAST(n_h AS BIGINT) AS n_h, "
+        "round(wt / tw, 6) AS weight, "
+        f"CAST(floor({NEYMAN_BUDGET} * wt / tw) AS BIGINT) AS n_alloc "
+        "FROM w, t"
+    ),
+    "sample_balanced_downsample": (
+        "WITH ranked AS (SELECT event_type, event_id, "
+        "CAST(row_number() OVER (PARTITION BY event_type "
+        "ORDER BY md5(event_id::VARCHAR), event_id) AS BIGINT) AS rk "
+        "FROM events), "
+        "counts AS (SELECT event_type, max(rk) AS n FROM ranked "
+        "GROUP BY 1), "
+        "mn AS (SELECT min(n) AS m FROM counts) "
+        "SELECT r.event_type, CAST(c.n AS BIGINT) AS n_original, "
+        "CAST(count(*) AS BIGINT) AS n_kept "
+        "FROM ranked r, mn JOIN counts c ON r.event_type = c.event_type "
+        "WHERE r.rk <= mn.m GROUP BY 1, 2"
     ),
 }

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
-from ..catalog import load_tables
+from ..catalog import TABLES, load_tables
 
 #: profiled lineitem columns: (name, is_numeric) — numeric min/max are cast
 #: through DECIMAL(18,2) so both engines render identical varchar forms
@@ -335,6 +335,497 @@ def q_dq_iqr_outliers(spark, sf_dir):
     )
 
 
+# =================================================================
+# Group Q — profiling audits
+# =================================================================
+
+#: lineitem numeric columns profiled by the correlation matrix
+CORR_COLS = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
+
+
+def q_dq_corr_matrix(spark, sf_dir):
+    """Pearson correlation matrix cells across the lineitem numeric
+    columns — the multicollinearity / redundant-column audit.  ONE
+    partial+final agg computes every exact-DECIMAL moment (n, Sx, Sxx
+    per column, Sxy per pair); each of the 6 upper-triangle cells is
+    then one double expression over those identical exact operands —
+    the same knife-edge-free recipe as ts_autocorr, generalized to a
+    column matrix.  Output grain = column pairs (bounded), never an
+    unordered float reduction."""
+    load_tables(spark, sf_dir)
+    li = spark.table("lineitem")
+    # integer CENTS moments (r10 extreme-magnitude sweep): the DECIMAL
+    # value-unit form overflowed DuckDB's DECIMAL(18) multiply at
+    # 1e6-scaled prices and its cross-products left exactness past
+    # width 38; cents moments keep every term an exact integer
+    # (cents^2 sums ~1e31 << DECIMAL(38,0)/HUGEINT range) and the
+    # correlation ratio is unit-free, so cells are value-identical
+    cen = {
+        c: (F.col(c).cast("decimal(18,2)") * 100).cast("long")
+        for c in CORR_COLS
+    }
+    aggs = [F.count(F.lit(1)).alias("n")]
+    for c in CORR_COLS:
+        aggs.append(F.sum(cen[c].cast("decimal(38,0)")).alias(f"s_{c}"))
+        aggs.append(
+            F.sum(cen[c].cast("decimal(19,0)") * cen[c]).alias(f"ss_{c}")
+        )
+    pairs = [
+        (a, b) for i, a in enumerate(CORR_COLS) for b in CORR_COLS[i + 1:]
+    ]
+    for a, b in pairs:
+        aggs.append(
+            F.sum(cen[a].cast("decimal(19,0)") * cen[b]).alias(f"sp_{a}_{b}")
+        )
+    row = li.agg(*aggs)
+    cells = []
+    for a, b in pairs:
+        num = (
+            F.col("n") * F.col(f"sp_{a}_{b}") - F.col(f"s_{a}") * F.col(f"s_{b}")
+        ).cast("double")
+        da = (
+            F.col("n") * F.col(f"ss_{a}") - F.col(f"s_{a}") * F.col(f"s_{a}")
+        ).cast("double")
+        db = (
+            F.col("n") * F.col(f"ss_{b}") - F.col(f"s_{b}") * F.col(f"s_{b}")
+        ).cast("double")
+        cells.append(
+            F.struct(
+                F.lit(a).alias("col_a"),
+                F.lit(b).alias("col_b"),
+                # try_divide: one row -> zero variance -> correlation
+                # undefined, NULL on both engines (DuckDB x/0 is NULL)
+                F.round(F.try_divide(num, F.sqrt(da * db)), 6).alias("corr"),
+            )
+        )
+    return row.select(F.explode(F.array(*cells)).alias("c"), "n").select(
+        F.col("c.col_a").alias("col_a"),
+        F.col("c.col_b").alias("col_b"),
+        F.col("c.corr").alias("corr"),
+        F.col("n").alias("n_rows"),
+    )
+
+
+#: orders columns profiled for key candidacy
+PK_COLS = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
+           "o_orderdate", "o_orderpriority"]
+
+
+def q_dq_pk_profile(spark, sf_dir):
+    """Primary-key candidate discovery over `orders`: per column the
+    row count, exact distinct count, null count and the PK verdict
+    (distinct == rows AND no nulls) — the schema-inference audit every
+    ingestion pipeline runs first.  One pass; exact count(distinct)
+    per the repo's hash-key rule (never approx in checked keys)."""
+    load_tables(spark, sf_dir)
+    o = spark.table("orders")
+    aggs = [F.count(F.lit(1)).alias("n")]
+    for c in PK_COLS:
+        aggs.append(F.countDistinct(c).alias(f"d_{c}"))
+        # coalesce: on a zero-row table the null COUNT is 0, not NULL
+        # (sum over empty) — the PK verdict stays boolean
+        aggs.append(
+            F.coalesce(
+                F.sum(F.col(c).isNull().cast("long")), F.lit(0)
+            ).alias(f"z_{c}")
+        )
+    row = o.agg(*aggs)
+    cells = [
+        F.struct(
+            F.lit(c).alias("col_name"),
+            F.col(f"d_{c}").alias("n_distinct"),
+            F.col(f"z_{c}").alias("n_nulls"),
+        )
+        for c in PK_COLS
+    ]
+    return row.select(F.explode(F.array(*cells)).alias("c"), "n").select(
+        F.col("c.col_name").alias("col_name"),
+        F.col("n").alias("n_rows"),
+        F.col("c.n_distinct").alias("n_distinct"),
+        F.col("c.n_nulls").alias("n_nulls"),
+        (
+            (F.col("c.n_distinct") == F.col("n")) & (F.col("c.n_nulls") == 0)
+        ).alias("pk_candidate"),
+    )
+
+
+def _corr_cell_sql(a: str, b: str) -> str:
+    return (
+        f"SELECT '{a}' AS col_a, '{b}' AS col_b, "
+        f"round(CAST(n * sp_{a}_{b} - s_{a} * s_{b} AS DOUBLE) / "
+        f"sqrt(CAST(n * ss_{a} - s_{a} * s_{a} AS DOUBLE) * "
+        f"CAST(n * ss_{b} - s_{b} * s_{b} AS DOUBLE)), 6) AS corr, "
+        "n AS n_rows FROM moments"
+    )
+
+
+_CORR_PAIRS = [
+    (a, b) for i, a in enumerate(CORR_COLS) for b in CORR_COLS[i + 1:]
+]
+
+_CORR_MOMENTS = ", ".join(
+    ["count(*) AS n"]
+    + [
+        f"sum(CAST(CAST({c} AS DECIMAL(18,2)) * 100 AS BIGINT)::HUGEINT) "
+        f"AS s_{c}, "
+        f"sum(CAST(CAST({c} AS DECIMAL(18,2)) * 100 AS BIGINT)::HUGEINT * "
+        f"CAST(CAST({c} AS DECIMAL(18,2)) * 100 AS BIGINT)) AS ss_{c}"
+        for c in CORR_COLS
+    ]
+    + [
+        f"sum(CAST(CAST({a} AS DECIMAL(18,2)) * 100 AS BIGINT)::HUGEINT * "
+        f"CAST(CAST({b} AS DECIMAL(18,2)) * 100 AS BIGINT)) AS sp_{a}_{b}"
+        for a, b in _CORR_PAIRS
+    ]
+)
+
+_PK_CELLS = " UNION ALL ".join(
+    f"SELECT '{c}' AS col_name, n AS n_rows, d_{c} AS n_distinct, "
+    f"z_{c} AS n_nulls, d_{c} = n AND z_{c} = 0 AS pk_candidate FROM p"
+    for c in PK_COLS
+)
+
+
+#: k-anonymity threshold under audit
+K_ANON = 5
+
+
+def q_dq_k_anonymity(spark, sf_dir):
+    """k-anonymity audit of the customer projection (mktsegment,
+    nation, acctbal sign) — the pre-release privacy check: for each
+    quasi-identifier combination, its equivalence-class size; flagged
+    when below k=5 (a released row in such a class re-identifies to ≤ 4
+    candidates).  Reports per-class sizes plus each class's share of
+    the table — the analyst's risk summary.
+
+    One partial+final agg on the quasi-identifier tuple (a single
+    shuffle at any scale; class count is bounded by the QI domain, not
+    the row count), one broadcastable 1-row total for the share."""
+    load_tables(spark, sf_dir)
+    c = spark.table("customer")
+    qi = c.select(
+        "c_mktsegment",
+        "c_nationkey",
+        F.when(F.col("c_acctbal") < 0, "neg").otherwise("nonneg").alias(
+            "bal_sign"
+        ),
+    )
+    classes = qi.groupBy("c_mktsegment", "c_nationkey", "bal_sign").agg(
+        F.count(F.lit(1)).alias("class_size")
+    )
+    total = classes.agg(F.sum("class_size").alias("total"))
+    return classes.crossJoin(F.broadcast(total)).select(
+        "c_mktsegment",
+        "c_nationkey",
+        "bal_sign",
+        "class_size",
+        (F.col("class_size") < K_ANON).alias("violates_k"),
+        F.expr("(2000 * class_size + total) div (2 * total)")
+        .cast("long")
+        .alias("share_pm"),
+    )
+
+
+def q_dq_freshness(spark, sf_dir):
+    """Data-freshness audit per event type: last event timestamp, the
+    integer lag in hours behind the NEWEST event anywhere in the table,
+    and a staleness flag at > 24 h — the monitoring query under every
+    "is this feed still alive" alert.  One partial+final agg plus a
+    1-row global max joined back by cross-multiplication; lag stays in
+    exact integer microseconds until the final integer-hours division."""
+    load_tables(spark, sf_dir)
+    ev = spark.table("events").select(
+        "event_type",
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
+    )
+    per_type = ev.groupBy("event_type").agg(
+        F.max("us").alias("last_us"), F.count(F.lit(1)).alias("n_events")
+    )
+    glob = per_type.agg(F.max("last_us").alias("max_us"))
+    return per_type.crossJoin(F.broadcast(glob)).select(
+        "event_type",
+        "n_events",
+        F.timestamp_micros(F.col("last_us"))
+        .cast("timestamp_ntz")
+        .alias("last_event"),
+        F.expr("(max_us - last_us) div 3600000000")
+        .cast("long")
+        .alias("lag_hours"),
+        (F.col("max_us") - F.col("last_us") > 24 * 3600 * 1000000).alias(
+            "is_stale"
+        ),
+    )
+
+
+def q_dq_functional_dependency(spark, sf_dir):
+    """Functional-dependency audit: does o_custkey -> o_orderpriority
+    hold?  The TANE-style single-FD check behind schema-inference and
+    key-discovery tools: per LHS value count DISTINCT RHS values, then
+    report how many LHS keys violate (>1 RHS), the worst variant count,
+    and the violation rate.  One partial+final agg pair, all integers;
+    the per-mille is a half-up integer quotient."""
+    load_tables(spark, sf_dir)
+    o = spark.table("orders")
+    per = o.groupBy("o_custkey").agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.count_distinct("o_orderpriority").alias("n_rhs"),
+    )
+    return per.agg(
+        F.count(F.lit(1)).alias("n_lhs"),
+        F.sum((F.col("n_rhs") > 1).cast("long")).alias("n_violating"),
+        F.max("n_rhs").alias("max_variants"),
+        F.expr(
+            "(2 * 1000 * sum(CASE WHEN n_rhs > 1 THEN 1 ELSE 0 END) "
+            "+ count(*)) div (2 * count(*))"
+        ).alias("violation_pm"),
+    )
+
+
+def q_dq_inclusion_dependency(spark, sf_dir):
+    """Inclusion-dependency audit (Bellman-style FK discovery): for the
+    candidate pair (lineitem.l_partkey, part.p_partkey), measure BOTH
+    containment directions on distinct key sets — |A∩B|/|A| and
+    |A∩B|/|B| — plus orphan counts.  Direction A⊆B at ~1000‰ nominates
+    a foreign key; the reverse coefficient exposes unreferenced parent
+    rows.  Two distinct-projections and one join on the key (all
+    co-partitioned by the audited column); per-mille values are
+    half-up integer quotients."""
+    load_tables(spark, sf_dir)
+    a = spark.table("lineitem").select(
+        F.col("l_partkey").alias("k")
+    ).distinct()
+    b = spark.table("part").select(F.col("p_partkey").alias("k")).distinct()
+    both = a.join(b, "k").agg(F.count(F.lit(1)).alias("n_both"))
+    na = a.agg(F.count(F.lit(1)).alias("n_a"))
+    nb = b.agg(F.count(F.lit(1)).alias("n_b"))
+    return (
+        both.crossJoin(na)
+        .crossJoin(nb)
+        .select(
+            "n_a",
+            "n_b",
+            "n_both",
+            (F.col("n_a") - F.col("n_both")).alias("orphans_a"),
+            (F.col("n_b") - F.col("n_both")).alias("unreferenced_b"),
+            # zero-denominator guards match DuckDB (x // 0 is NULL): the
+            # containment of an empty key set is undefined, not an error
+            F.expr(
+                "CASE WHEN n_a = 0 THEN CAST(NULL AS BIGINT) "
+                "ELSE (2 * 1000 * n_both + n_a) div (2 * n_a) END"
+            ).alias("a_in_b_pm"),
+            F.expr(
+                "CASE WHEN n_b = 0 THEN CAST(NULL AS BIGINT) "
+                "ELSE (2 * 1000 * n_both + n_b) div (2 * n_b) END"
+            ).alias("b_in_a_pm"),
+        )
+    )
+
+
+#: table checksum modulus (2^61 - 1, keeps the residue in BIGINT)
+CKSUM_MOD = 2305843009213693951
+
+
+def q_dq_table_checksum(spark, sf_dir):
+    """Order-insensitive table CHECKSUM — the cross-system compare that
+    validates a migration without moving the data twice: every row maps
+    to a 60-bit integer (md5 of a canonical '|'-joined rendering, money
+    as integer cents, dates as ISO strings), and the table fingerprint
+    is the exact sum of those integers mod 2^61-1.  Commutative, so
+    partitioning/row order is irrelevant; the sum runs in DECIMAL(38)
+    (Spark) / HUGEINT (DuckDB) so it is EXACT at any row count, and
+    only the bounded residue crosses engines."""
+    load_tables(spark, sf_dir)
+    o = spark.table("orders")
+    # canonical NULL rendering: the checksum must COVER missing values —
+    # NULL price encodes as the empty field (see pipeline_shard_manifest)
+    canon = F.concat_ws(
+        "|",
+        F.col("o_orderkey").cast("string"),
+        F.coalesce(
+            (F.col("o_totalprice").cast("decimal(18,2)") * 100)
+            .cast("long")
+            .cast("string"),
+            F.lit(""),
+        ),
+        F.date_format("o_orderdate", "yyyy-MM-dd"),
+        F.col("o_orderpriority"),
+    )
+    h = F.conv(F.substring(F.md5(canon), 1, 15), 16, 10).cast(
+        "decimal(38,0)"
+    )
+    return o.select(h.alias("h")).agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.expr(f"CAST(sum(h) % {CKSUM_MOD} AS BIGINT)").alias("checksum"),
+    )
+
+
+def q_dq_monotonic_violations(spark, sf_dir):
+    """MONOTONICITY audit: within each priority stream, does key order
+    track time order?  Counts adjacent inversions (previous key's date
+    later than this one) under the (priority, key) order — the check
+    that validates k-sortable id schemes (fn_snowflake_id's property)
+    and append-only ingestion assumptions.  One co-partitioned lag
+    window and a per-mille summary in exact integers."""
+    load_tables(spark, sf_dir)
+    o = spark.table("orders")
+    w = Window.partitionBy("o_orderpriority").orderBy("o_orderkey")
+    lagged = o.select(
+        "o_orderpriority",
+        (F.col("o_orderdate") < F.lag("o_orderdate").over(w))
+        .cast("long")
+        .alias("inv"),
+    ).filter(F.col("inv").isNotNull())
+    g = lagged.groupBy("o_orderpriority").agg(
+        F.count(F.lit(1)).alias("n_pairs"),
+        F.sum("inv").alias("n_inversions"),
+    )
+    return g.select(
+        "o_orderpriority",
+        "n_pairs",
+        "n_inversions",
+        F.expr(
+            "(2 * 1000 * n_inversions + n_pairs) div (2 * n_pairs)"
+        ).alias("inversion_pm"),
+    )
+
+
+#: validation rules: (rule_id, column, op, threshold) over orders
+RULES = (
+    (1, "o_totalprice", "gt", 0),
+    (2, "o_totalprice", "lt", 60000000),
+    (3, "o_orderkey", "gt", 0),
+    (4, "o_custkey", "gt", 0),
+)
+
+
+def q_dq_rules_engine(spark, sf_dir):
+    """METADATA-DRIVEN validation: the rules live in a TABLE
+    (rule_id, column, op, threshold), the engine cross-applies every
+    rule to every row with one generic CASE dispatch, and reports per-
+    rule violation counts — validation-as-data, so adding a rule is an
+    INSERT, not a deploy (the dq_constraint_check keys hard-code their
+    predicates; this one interprets them).
+
+    Plan: orders x bounded literal rule table (auto-broadcast), one
+    dispatch expression, one partial+final agg keyed by rule."""
+    load_tables(spark, sf_dir)
+    o = spark.table("orders")
+    rows = ", ".join(
+        f"({rid}, '{col}', '{op}', {thr})" for rid, col, op, thr in RULES
+    )
+    rules = spark.sql(
+        f"SELECT * FROM VALUES {rows} AS t(rule_id, col, op, thr)"
+    )
+    val = F.expr(
+        "CASE col WHEN 'o_totalprice' THEN "
+        "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) "
+        "WHEN 'o_orderkey' THEN o_orderkey "
+        "WHEN 'o_custkey' THEN o_custkey END"
+    )
+    ok = F.expr(
+        "CASE op WHEN 'gt' THEN v > thr WHEN 'lt' THEN v < thr END"
+    )
+    j = o.crossJoin(rules).select(
+        "rule_id", "col", "op", "thr", val.alias("v")
+    )
+    return (
+        j.select("rule_id", "col", "op", ok.alias("ok"))
+        .groupBy("rule_id", "col", "op")
+        .agg(
+            F.count(F.lit(1)).alias("n_checked"),
+            F.sum((~F.col("ok")).cast("long")).alias("n_violations"),
+        )
+    )
+
+
+_RULE_ROWS = ", ".join(
+    f"({rid}, '{col}', '{op}', {thr})" for rid, col, op, thr in RULES
+)
+
+
+def q_dq_catalog_census(spark, sf_dir):
+    """Whole-CATALOG census: one result with every fixture table's row
+    count and its share of total rows — the first query anyone runs
+    against a new warehouse, and the sanity anchor for every other
+    count in the repo.  A union of ten 1-row aggregates (each a
+    parallel scan-count with no shuffle beyond the final 10-row agg);
+    shares are half-up per-mille integers."""
+    load_tables(spark, sf_dir)
+    counts = None
+    for t in TABLES:
+        c = spark.table(t).agg(
+            F.lit(t).alias("tbl"), F.count(F.lit(1)).alias("n_rows")
+        )
+        counts = c if counts is None else counts.unionAll(c)
+    tot = counts.agg(F.sum("n_rows").alias("total"))
+    return counts.crossJoin(F.broadcast(tot)).select(
+        "tbl",
+        "n_rows",
+        # the zero-total guard matches DuckDB, where x // 0 is NULL (an
+        # all-empty catalog has no shares); Spark ANSI div would throw
+        F.expr(
+            "CASE WHEN total = 0 THEN CAST(NULL AS BIGINT) "
+            "ELSE (2 * 1000 * n_rows + total) div (2 * total) END"
+        ).alias("share_pm"),
+    )
+
+
+#: shard count for the balance audit
+SB_SHARDS = 16
+
+
+def q_dq_shard_balance(spark, sf_dir):
+    """SHARD-BALANCE entropy: the normalized Shannon entropy of the
+    md5-shard size distribution — 1000 per-mille means perfectly
+    uniform load, lower means the partitioner skews (the partition-
+    grain companion to fn_hash_avalanche's bit-grain audit).  Shares
+    quantize to exact per-million integers BEFORE the bounded 16-term
+    entropy fold (sorted by shard id), so both engines stream identical
+    doubles into the logs."""
+    load_tables(spark, sf_dir)
+    o = spark.table("orders")
+    shards = o.groupBy(
+        (
+            F.conv(
+                F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 4),
+                16,
+                10,
+            ).cast("long")
+            % SB_SHARDS
+        ).alias("shard")
+    ).agg(F.count(F.lit(1)).alias("n"))
+    tot = shards.agg(F.sum("n").alias("t"), F.count(F.lit(1)).alias("k"))
+    q = shards.crossJoin(F.broadcast(tot)).select(
+        "shard",
+        "k",
+        F.expr("(2 * 1000000 * n + t) div (2 * t)").alias("p6"),
+    )
+    arr = q.groupBy("k").agg(
+        F.array_sort(F.collect_list(F.struct("shard", "p6"))).alias("a")
+    )
+    h = F.expr(
+        "aggregate(a, cast(0.0 as double), (acc, x) -> "
+        "acc + CASE WHEN x.p6 > 0 THEN "
+        "-(x.p6 / 1e6) * ln(x.p6 / 1e6) ELSE 0.0 END)"
+    )
+    return arr.select(
+        F.col("k").alias("n_shards"),
+        F.round(h, 6).alias("entropy_nats"),
+        # floor, not div: Spark's div rejects DOUBLE operands; floor of
+        # the identical double is engine-identical
+        # try_divide: a single occupied shard (k = 1, ln k = 0) has no
+        # balance to normalize — NULL on both engines (DuckDB x/0 NULL)
+        F.expr(
+            "CAST(FLOOR(try_divide(2 * 1000 * aggregate(a, "
+            "cast(0.0 as double), "
+            "(acc, x) -> acc + CASE WHEN x.p6 > 0 THEN "
+            "-(x.p6 / 1e6) * ln(x.p6 / 1e6) ELSE 0.0 END) "
+            "+ ln(CAST(k AS DOUBLE)), 2 * ln(CAST(k AS DOUBLE)))) "
+            "AS BIGINT)"
+        ).alias("balance_pm"),
+    )
+
+
 QUERIES = {
     "dq_iqr_outliers": q_dq_iqr_outliers,
     "dq_uniqueness": q_dq_uniqueness,
@@ -343,6 +834,17 @@ QUERIES = {
     "dq_profile": q_dq_profile,
     "dq_referential_integrity": q_dq_referential_integrity,
     "dq_constraint_check": q_dq_constraint_check,
+    "dq_corr_matrix": q_dq_corr_matrix,
+    "dq_pk_profile": q_dq_pk_profile,
+    "dq_k_anonymity": q_dq_k_anonymity,
+    "dq_freshness": q_dq_freshness,
+    "dq_functional_dependency": q_dq_functional_dependency,
+    "dq_inclusion_dependency": q_dq_inclusion_dependency,
+    "dq_table_checksum": q_dq_table_checksum,
+    "dq_monotonic_violations": q_dq_monotonic_violations,
+    "dq_rules_engine": q_dq_rules_engine,
+    "dq_catalog_census": q_dq_catalog_census,
+    "dq_shard_balance": q_dq_shard_balance,
 }
 
 
@@ -426,4 +928,132 @@ ORACLES = {
     "dq_profile": _profile_oracle(),
     "dq_referential_integrity": _ri_oracle(),
     "dq_constraint_check": _constraint_oracle(),
+    "dq_corr_matrix": (
+        f"WITH moments AS (SELECT {_CORR_MOMENTS} FROM lineitem) "
+        + " UNION ALL ".join(_corr_cell_sql(a, b) for a, b in _CORR_PAIRS)
+    ),
+    "dq_pk_profile": (
+        "WITH p AS (SELECT count(*) AS n, "
+        + ", ".join(
+            f"count(DISTINCT {c}) AS d_{c}, "
+            # coalesce mirrors the Spark side: 0 nulls on a 0-row table
+            f"CAST(coalesce(sum(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END), 0) "
+            f"AS BIGINT) AS z_{c}"
+            for c in PK_COLS
+        )
+        + f" FROM orders) {_PK_CELLS}"
+    ),
+    "dq_k_anonymity": (
+        "WITH qi AS (SELECT c_mktsegment, c_nationkey, "
+        "CASE WHEN c_acctbal < 0 THEN 'neg' ELSE 'nonneg' END AS bal_sign "
+        "FROM customer), "
+        "classes AS (SELECT c_mktsegment, c_nationkey, bal_sign, "
+        "count(*) AS class_size FROM qi GROUP BY 1, 2, 3), "
+        "t AS (SELECT sum(class_size) AS total FROM classes) "
+        "SELECT c_mktsegment, c_nationkey, bal_sign, class_size, "
+        f"class_size < {K_ANON} AS violates_k, "
+        "CAST((2000 * class_size + total) // (2 * total) AS BIGINT) "
+        "AS share_pm FROM classes, t"
+    ),
+    "dq_freshness": (
+        "WITH per_type AS (SELECT event_type, "
+        "max(epoch_us(ts)) AS last_us, count(*) AS n_events "
+        "FROM events GROUP BY 1), "
+        "g AS (SELECT max(last_us) AS max_us FROM per_type) "
+        "SELECT event_type, n_events, "
+        "make_timestamp(last_us) AS last_event, "
+        "CAST((max_us - last_us) // 3600000000 AS BIGINT) AS lag_hours, "
+        "max_us - last_us > CAST(86400 AS BIGINT) * 1000000 AS is_stale "
+        "FROM per_type, g"
+    ),
+    "dq_functional_dependency": (
+        "WITH per AS (SELECT o_custkey, count(*) AS n_rows, "
+        "count(DISTINCT o_orderpriority) AS n_rhs FROM orders GROUP BY 1) "
+        "SELECT CAST(count(*) AS BIGINT) AS n_lhs, "
+        "CAST(sum(CASE WHEN n_rhs > 1 THEN 1 ELSE 0 END) AS BIGINT) "
+        "AS n_violating, "
+        "CAST(max(n_rhs) AS BIGINT) AS max_variants, "
+        "CAST((2 * 1000 * sum(CASE WHEN n_rhs > 1 THEN 1 ELSE 0 END) "
+        "+ count(*)) // (2 * count(*)) AS BIGINT) AS violation_pm FROM per"
+    ),
+    "dq_inclusion_dependency": (
+        "WITH a AS (SELECT DISTINCT l_partkey AS k FROM lineitem), "
+        "b AS (SELECT DISTINCT p_partkey AS k FROM part), "
+        "s AS (SELECT (SELECT count(*) FROM a) AS n_a, "
+        "(SELECT count(*) FROM b) AS n_b, "
+        "(SELECT count(*) FROM a JOIN b USING (k)) AS n_both) "
+        "SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b, "
+        "CAST(n_both AS BIGINT) AS n_both, "
+        "CAST(n_a - n_both AS BIGINT) AS orphans_a, "
+        "CAST(n_b - n_both AS BIGINT) AS unreferenced_b, "
+        "(2 * 1000 * n_both + n_a) // (2 * n_a) AS a_in_b_pm, "
+        "(2 * 1000 * n_both + n_b) // (2 * n_b) AS b_in_a_pm FROM s"
+    ),
+    "dq_table_checksum": (
+        "WITH h AS (SELECT ('0x' || substr(md5(o_orderkey::VARCHAR || '|' "
+        "|| coalesce(CAST(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 "
+        "AS BIGINT) AS VARCHAR), '') "
+        "|| '|' || strftime(o_orderdate, '%Y-%m-%d') || '|' "
+        "|| o_orderpriority), 1, 15))::BIGINT AS h FROM orders) "
+        "SELECT CAST(count(*) AS BIGINT) AS n_rows, "
+        f"CAST(sum(h) % {CKSUM_MOD} AS BIGINT) AS checksum FROM h"
+    ),
+    "dq_monotonic_violations": (
+        "WITH lagged AS (SELECT o_orderpriority, "
+        "CASE WHEN o_orderdate < lag(o_orderdate) OVER "
+        "(PARTITION BY o_orderpriority ORDER BY o_orderkey) "
+        "THEN 1 ELSE 0 END AS inv, "
+        "lag(o_orderdate) OVER (PARTITION BY o_orderpriority "
+        "ORDER BY o_orderkey) AS prev FROM orders) "
+        "SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_pairs, "
+        "CAST(sum(inv) AS BIGINT) AS n_inversions, "
+        "CAST((2 * 1000 * sum(inv) + count(*)) // (2 * count(*)) "
+        "AS BIGINT) AS inversion_pm "
+        "FROM lagged WHERE prev IS NOT NULL GROUP BY 1"
+    ),
+    "dq_rules_engine": (
+        f"WITH rules AS (SELECT * FROM (VALUES {_RULE_ROWS}) "
+        "AS t(rule_id, col, op, thr)), "
+        "j AS (SELECT rule_id, col, op, thr, "
+        "CASE col WHEN 'o_totalprice' THEN "
+        "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) "
+        "WHEN 'o_orderkey' THEN o_orderkey "
+        "WHEN 'o_custkey' THEN o_custkey END AS v "
+        "FROM orders CROSS JOIN rules) "
+        "SELECT CAST(rule_id AS INT) AS rule_id, col, op, "
+        "CAST(count(*) AS BIGINT) AS n_checked, "
+        "CAST(sum(CASE WHEN NOT (CASE op WHEN 'gt' THEN v > thr "
+        "WHEN 'lt' THEN v < thr END) THEN 1 ELSE 0 END) AS BIGINT) "
+        "AS n_violations FROM j GROUP BY 1, 2, 3"
+    ),
+    "dq_catalog_census": (
+        "WITH counts AS ("
+        + " UNION ALL ".join(
+            f"SELECT '{t}' AS tbl, count(*) AS n_rows FROM {t}"
+            for t in TABLES
+        )
+        + "), t AS (SELECT sum(n_rows) AS total FROM counts) "
+        "SELECT tbl, CAST(n_rows AS BIGINT) AS n_rows, "
+        "CAST((2 * 1000 * n_rows + total) // (2 * total) AS BIGINT) "
+        "AS share_pm FROM counts, t"
+    ),
+    "dq_shard_balance": (
+        "WITH shards AS (SELECT "
+        "('0x' || substr(md5(o_orderkey::VARCHAR), 1, 4))::BIGINT "
+        f"% {SB_SHARDS} AS shard, count(*) AS n FROM orders GROUP BY 1), "
+        "tot AS (SELECT CAST(sum(n) AS BIGINT) AS t, count(*) AS k "
+        "FROM shards), "
+        "q AS (SELECT shard, k, (2 * 1000000 * n + t) // (2 * t) AS p6 "
+        "FROM shards, tot), "
+        "arr AS (SELECT k, list({'shard': shard, 'p6': p6} "
+        "ORDER BY shard) AS a FROM q GROUP BY 1), "
+        "h AS (SELECT k, list_reduce(list_prepend(0.0, "
+        "list_transform(a, x -> CASE WHEN x.p6 > 0 THEN "
+        "-(x.p6 / 1e6) * ln(x.p6 / 1e6) ELSE 0.0 END)), "
+        "(acc, v) -> acc + v) AS ent FROM arr) "
+        "SELECT CAST(k AS BIGINT) AS n_shards, "
+        "round(ent, 6) AS entropy_nats, "
+        "CAST(FLOOR((2 * 1000 * ent + ln(CAST(k AS DOUBLE))) "
+        "/ (2 * ln(CAST(k AS DOUBLE)))) AS BIGINT) AS balance_pm FROM h"
+    ),
 }

@@ -8,7 +8,7 @@ B.7: ln not log, no week/dow, POSIX regex, 1-based positions).
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from pyspark.sql import Window, functions as F
 
 from ..catalog import load_tables
 from ..functions import l2_norm_expr
@@ -485,6 +485,618 @@ def q_fn_variant_json(spark, sf_dir):
     )
 
 
+# =================================================================
+# Group X — scalar data-layout / identity primitives
+# =================================================================
+ZORDER_BITS = 8
+
+
+def q_fn_zorder_interleave(spark, sf_dir):
+    """Morton (Z-order) curve interleaving of (partkey%256, suppkey%256)
+    — the multi-dimensional clustering key data-layout engines sort by
+    so range predicates on EITHER dimension prune row groups.  Pure bit
+    arithmetic (shift/and/or), identical in both engines; emitted for a
+    bounded order range with the z-ordered rank."""
+    load_tables(spark, sf_dir)
+    li = spark.table("lineitem").filter(F.col("l_orderkey") < 400)
+    terms = []
+    for i in range(ZORDER_BITS):
+        terms.append(
+            f"shiftleft(shiftright(l_partkey % 256, {i}) & 1, {2 * i})"
+        )
+        terms.append(
+            f"shiftleft(shiftright(l_suppkey % 256, {i}) & 1, {2 * i + 1})"
+        )
+    z = F.expr(" + ".join(terms))
+    return li.select(
+        "l_orderkey",
+        "l_linenumber",
+        F.col("l_partkey").alias("x"),
+        F.col("l_suppkey").alias("y"),
+        z.alias("zcode"),
+    )
+
+
+def q_fn_uuid_deterministic(spark, sf_dir):
+    """Deterministic name-based UUIDs (md5 name-hash with version-3 and
+    RFC-variant nibbles patched in, the UUIDv3 layout) for part names —
+    the reproducible surrogate-key primitive: unlike uuid(), identical
+    on every engine, every retry and every partitioning."""
+    load_tables(spark, sf_dir)
+    p = spark.table("part").filter(F.col("p_partkey") <= 100)
+    h = F.md5(F.col("p_name"))
+    uuid = F.concat(
+        F.substring(h, 1, 8), F.lit("-"),
+        F.substring(h, 9, 4), F.lit("-3"),
+        F.substring(h, 14, 3), F.lit("-8"),
+        F.substring(h, 18, 3), F.lit("-"),
+        F.substring(h, 21, 12),
+    )
+    return p.select("p_partkey", "p_name", uuid.alias("uuid3"))
+
+
+def _zorder_sql() -> str:
+    # each term fully parenthesized: DuckDB's << binds LOOSER than +, so
+    # an unwrapped `a + b << k` parses as `(a + b) << k` and overflows
+    terms = []
+    for i in range(ZORDER_BITS):
+        terms.append(f"((((l_partkey % 256) >> {i}) & 1) << {2 * i})")
+        terms.append(f"((((l_suppkey % 256) >> {i}) & 1) << {2 * i + 1})")
+    return " + ".join(terms)
+
+
+def q_fn_luhn_check(spark, sf_dir):
+    """Luhn checksum validation of 12-digit account strings derived
+    from order keys — the checksum-column DQ primitive (card/IMEI/SIREN
+    formats).  The digit fold is a JVM-side `aggregate` over a
+    `sequence` (doubling every second digit from the right, −9 above
+    9); no UDF, no python.  Output: per-order account, Luhn sum and
+    validity verdict."""
+    load_tables(spark, sf_dir)
+    o = spark.table("orders")
+    acct = F.lpad(F.col("o_orderkey").cast("string"), 12, "0")
+    withacct = o.select("o_orderkey", acct.alias("acct"))
+    luhn = F.expr(
+        "aggregate(sequence(0, 11), 0, (acc, i) -> acc + "
+        "CASE WHEN i % 2 = 1 THEN "
+        "IF(2 * CAST(substring(acct, 12 - i, 1) AS INT) > 9, "
+        "2 * CAST(substring(acct, 12 - i, 1) AS INT) - 9, "
+        "2 * CAST(substring(acct, 12 - i, 1) AS INT)) "
+        "ELSE CAST(substring(acct, 12 - i, 1) AS INT) END)"
+    )
+    return withacct.select(
+        "o_orderkey",
+        "acct",
+        luhn.cast("long").alias("luhn_sum"),
+        (luhn % 10 == 0).alias("luhn_valid"),
+    )
+
+
+#: geohash precision: bits per axis (15+15 = 30 bits = 6 base32 chars)
+GH_BITS = 15
+GH32 = "0123456789bcdefghjkmnpqrstuvwxyz"
+
+
+def _gh_interleave(latb: str, lonb: str, dialect: str) -> str:
+    """30-bit Morton interleave, geohash bit order (MSB-first pair =
+    longitude then latitude).  Same unrolled integer expression rendered
+    per dialect (fn_zorder_interleave convention; DuckDB terms fully
+    parenthesized — its << binds looser than +)."""
+    terms = []
+    for i in range(GH_BITS):
+        j = GH_BITS - 1 - i  # source bit, MSB first
+        for src, pos in ((lonb, 2 * GH_BITS - 1 - 2 * i),
+                         (latb, 2 * GH_BITS - 2 - 2 * i)):
+            if dialect == "spark":
+                terms.append(
+                    f"shiftleft(shiftright({src}, {j}) & 1, {pos})"
+                )
+            else:
+                terms.append(f"((({src} >> {j}) & 1) << {pos})")
+    return " + ".join(terms)
+
+
+def _gh_chars(g: str, dialect: str) -> str:
+    """Base32 chars from the 30-bit code, 5 bits per char, MSB first."""
+    parts = []
+    for k in range(2 * GH_BITS // 5):
+        s = 2 * GH_BITS - 5 * (k + 1)
+        if dialect == "spark":
+            idx = f"CAST(shiftright({g}, {s}) & 31 AS INT) + 1"
+        else:
+            idx = f"CAST(({g} >> {s}) & 31 AS INT) + 1"
+        parts.append(f"substr('{GH32}', {idx}, 1)")
+    return " || ".join(parts)
+
+
+def q_fn_geohash(spark, sf_dir):
+    """Geohash-6 encoding of the deterministic customer coordinates
+    (join_geo_radius's md5 0.1-degree grid): quantize lat/lon to 15-bit
+    buckets with pure integer math (coords are integer TENTHS of a
+    degree, so the bucket is ((tenths + 900) * 32768) div 1800 — no
+    float anywhere), Morton-interleave lon/lat MSB-first, emit 6 base32
+    chars.  The geo sharding/clustering key: prefix-equality ==
+    proximity, so sorting by it co-locates nearby points for the
+    spatial joins.  All bit arithmetic, identical in both engines."""
+    load_tables(spark, sf_dir)
+    c = spark.table("customer")
+    key = F.md5(F.col("c_custkey").cast("string"))
+    h1 = F.conv(F.substring(key, 1, 4), 16, 10).cast("long")
+    h2 = F.conv(F.substring(key, 5, 4), 16, 10).cast("long")
+    pts = c.select(
+        "c_custkey",
+        (h1 % 120 - 60).alias("lat_t"),
+        (h2 % 360 - 180).alias("lon_t"),
+    )
+    b = pts.select(
+        "c_custkey",
+        "lat_t",
+        "lon_t",
+        F.expr("((lat_t + 900) * 32768) div 1800").alias("latb"),
+        F.expr("((lon_t + 1800) * 32768) div 3600").alias("lonb"),
+    )
+    g = b.select(
+        "c_custkey",
+        "lat_t",
+        "lon_t",
+        F.expr(_gh_interleave("latb", "lonb", "spark")).alias("zcode"),
+    )
+    return g.select(
+        "c_custkey",
+        "lat_t",
+        "lon_t",
+        "zcode",
+        F.expr(_gh_chars("zcode", "spark")).alias("geohash6"),
+    )
+
+
+#: business-day anchor: a Monday preceding every fixture date
+BD_ANCHOR = "1991-12-30"
+
+
+def q_fn_business_days(spark, sf_dir):
+    """Business days between order placement and line shipment — the
+    lead-time metric behind every SLA dashboard.  Closed form, NO
+    calendar join or explode: with x = days since an anchor Monday,
+    f(x) = 5*(x div 7) + least(x mod 7, 5) counts weekdays before x, so
+    bd = f(ship) - f(order) counts weekdays in [order, ship) in two
+    integer ops per row.  The anchor (1991-12-30) precedes every
+    fixture date, keeping both div and mod on non-negative operands
+    where Spark and DuckDB agree.  One co-keyed equi-join, then a pure
+    per-row map."""
+    load_tables(spark, sf_dir)
+    li = spark.table("lineitem").join(
+        spark.table("orders"),
+        F.col("l_orderkey") == F.col("o_orderkey"),
+    )
+    xo = f"datediff(o_orderdate, DATE '{BD_ANCHOR}')"
+    xs = f"datediff(l_shipdate, DATE '{BD_ANCHOR}')"
+
+    def f(x):
+        return 5 * F.expr(f"({x}) div 7") + F.least(
+            F.expr(f"({x}) % 7"), F.lit(5)
+        )
+
+    return li.select(
+        "l_orderkey",
+        "l_linenumber",
+        F.expr(xo).alias("order_x"),
+        F.expr(xs).alias("ship_x"),
+        (F.expr(xo) % 7).alias("order_dow"),
+        (f(xs) - f(xo)).alias("biz_days"),
+    )
+
+
+def _kw_f(x: str) -> str:
+    return f"(5 * (({x}) // 7) + least(({x}) % 7, 5))"
+
+
+#: fiscal 4-4-5 calendar anchor: Monday starting FY1992 week 1
+FISCAL_ANCHOR = "1991-12-30"
+
+
+def q_fn_fiscal_445(spark, sf_dir):
+    """4-4-5 fiscal retail calendar mapping for every order date — the
+    BI primitive plain date functions cannot express: 52-week fiscal
+    years of 4-4-5-week periods (每 quarter = 13 weeks split 4+4+5), so
+    every period contains whole weeks and same-period comparisons align
+    by weekday.  Pure integer arithmetic from the anchor Monday: week =
+    days div 7, fy = week div 52, quarter = (week mod 52) div 13,
+    period-in-quarter by the 4/8 split.  All operands non-negative."""
+    load_tables(spark, sf_dir)
+    o = spark.table("orders")
+    x = f"datediff(o_orderdate, DATE '{FISCAL_ANCHOR}')"
+    wk = f"(({x}) div 7)"
+    wiy = f"({wk} % 52)"
+    wiq = f"({wiy} % 13)"
+    return o.select(
+        "o_orderkey",
+        "o_orderdate",
+        F.expr(f"1992 + {wk} div 52").alias("fiscal_year"),
+        F.expr(f"1 + {wiy} div 13").alias("fiscal_quarter"),
+        F.expr(
+            f"CASE WHEN {wiq} < 4 THEN 1 WHEN {wiq} < 8 THEN 2 ELSE 3 END"
+        ).alias("period_in_quarter"),
+        F.expr(f"1 + {wiy}").alias("fiscal_week"),
+    )
+
+
+#: snowflake layout: 41-bit ms timestamp | 10-bit worker | 12-bit seq
+SNOW_EPOCH_MS = 1_288_834_974_657  # the classic custom epoch
+
+
+def q_fn_snowflake_id(spark, sf_dir):
+    """Snowflake-style distributed ID encode + decode: pack
+    (41-bit ms timestamp | 10-bit worker | 12-bit sequence) into one
+    BIGINT and unpack it back — the k-sortable id layout id generators
+    use so ORDER BY id == ORDER BY creation time across workers.  IDs
+    are synthesized deterministically from the order key, then decoded
+    with pure shift/mask arithmetic identical in both engines; the
+    decoded timestamp re-emerges via epoch-millis addition."""
+    load_tables(spark, sf_dir)
+    o = spark.table("orders")
+    ms = "(o_orderkey * 1000 + o_orderkey % 997)"
+    worker = "(o_orderkey % 32)"
+    seq = "(o_orderkey % 4096)"
+    sid = (
+        f"shiftleft({ms}, 22) + shiftleft({worker}, 12) + {seq}"
+    )
+    enc = o.select(
+        "o_orderkey", F.expr(sid).cast("long").alias("snowflake_id")
+    )
+    return enc.select(
+        "o_orderkey",
+        "snowflake_id",
+        F.expr("shiftright(snowflake_id, 22)").alias("dec_ms"),
+        F.expr("shiftright(snowflake_id, 12) & 1023").alias("dec_worker"),
+        F.expr("snowflake_id & 4095").alias("dec_seq"),
+        F.expr(
+            f"timestamp_millis({SNOW_EPOCH_MS} + shiftright(snowflake_id, 22))"
+        )
+        .cast("timestamp_ntz")
+        .alias("dec_ts"),
+    )
+
+
+#: base62 alphabet and max digits (62^11 > 2^63)
+B62 = "0123456789abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ"
+B62_DIGITS = 11
+
+
+def _b62_encode(key: str, dialect: str) -> str:
+    div = "div" if dialect == "spark" else "//"
+    parts = []
+    for i in range(B62_DIGITS - 1, -1, -1):
+        parts.append(
+            f"substr('{B62}', CAST((({key}) {div} {62 ** i}) % 62 AS INT) + 1, 1)"
+        )
+    joined = " || ".join(parts) if dialect == "duckdb" else None
+    if dialect == "spark":
+        joined = "concat(" + ", ".join(parts) + ")"
+    return f"TRIM(LEADING '0' FROM {joined})"
+
+
+def _b62_decode(code: str) -> str:
+    """Shared-dialect decode: sum over reversed positions; instr/substr/
+    reverse/length spell identically in Spark SQL and DuckDB."""
+    terms = []
+    for i in range(B62_DIGITS):
+        terms.append(
+            f"(CASE WHEN {i} < length({code}) THEN "
+            f"(instr('{B62}', substr(reverse({code}), {i + 1}, 1)) - 1) "
+            f"* {62 ** i} ELSE 0 END)"
+        )
+    return " + ".join(terms)
+
+
+def q_fn_base62_codec(spark, sf_dir):
+    """Base62 short-code ENCODE + DECODE for order keys — the
+    URL-shortener primitive: compact, case-sensitive, k-sortable for
+    fixed width.  Encode is an unrolled division chain into alphabet
+    lookups with leading-zero-digit trim; decode reverses the string
+    and folds positional values back with instr — pure string/integer
+    builtins, identical semantics in both engines, and the roundtrip
+    (decoded == o_orderkey) is asserted as an output column."""
+    load_tables(spark, sf_dir)
+    o = spark.table("orders")
+    enc = o.select(
+        "o_orderkey",
+        F.expr(_b62_encode("o_orderkey", "spark")).alias("b62"),
+    )
+    return enc.select(
+        "o_orderkey",
+        "b62",
+        F.expr(_b62_decode("b62")).cast("long").alias("decoded"),
+        (F.expr(_b62_decode("b62")) == F.col("o_orderkey")).alias(
+            "roundtrip_ok"
+        ),
+    )
+
+
+#: fixed-date holidays (month, day, name) with observed shifting
+HOLIDAYS = ((1, 1, "new_year"), (7, 4, "independence"), (12, 25, "christmas"))
+
+
+def q_fn_holiday_observed(spark, sf_dir):
+    """OBSERVED-holiday calendar: fixed-date holidays shift to Friday
+    when they fall on Saturday and to Monday when on Sunday (the US
+    federal observance rule) — the calendar-join primitive behind
+    settlement dates, SLA clocks and staffing models; plain date
+    functions cannot express the shift.  Weekday from pure day-number
+    arithmetic (anchor Monday, (x % 7): 5 = Sat, 6 = Sun); orders gain
+    (is_holiday_observed, holiday_name).  One small equi-join on the
+    synthesized holiday spine (bounded: years x holidays)."""
+    load_tables(spark, sf_dir)
+    o = spark.table("orders")
+    years = range(1992, 1999)
+    rows = ", ".join(
+        f"(DATE '{y}-{m:02d}-{d:02d}', '{name}')"
+        for y in years
+        for (m, d, name) in HOLIDAYS
+    )
+    spine = spark.sql(
+        f"SELECT raw, name, "
+        "CASE datediff(raw, DATE '1991-12-30') % 7 "
+        "WHEN 5 THEN date_sub(raw, 1) "
+        "WHEN 6 THEN date_add(raw, 1) "
+        "ELSE raw END AS observed "
+        f"FROM VALUES {rows} AS t(raw, name)"
+    )
+    return (
+        o.join(
+            F.broadcast(spine), F.col("o_orderdate") == F.col("observed")
+        )
+        .groupBy(
+            # string, not DATE: Spark DATE -> datetime.date but DuckDB
+            # DATE -> pandas Timestamp, and the value-hash renders them
+            # differently ('1996-01-01' vs '1996-01-01T00:00:00')
+            F.date_format("observed", "yyyy-MM-dd").alias("holiday_date"),
+            "name",
+        )
+        .agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            (F.sum(F.col("o_totalprice").cast("decimal(18,2)")) * 100)
+            .cast("long")
+            .alias("rev_cents"),
+        )
+        .select(
+            "holiday_date",
+            "name",
+            "n_orders",
+            (F.col("rev_cents") / 100.0).alias("holiday_revenue"),
+        )
+    )
+
+
+_HOLIDAY_ROWS = ", ".join(
+    f"(DATE '{y}-{m:02d}-{d:02d}', '{name}')"
+    for y in range(1992, 1999)
+    for (m, d, name) in HOLIDAYS
+)
+
+
+#: Feistel: rounds and 16-bit half modulus
+FEISTEL_ROUNDS = 4
+FEISTEL_M = 65536
+
+
+def _feistel(key: str, dialect: str, inverse: bool = False) -> str:
+    """Unrolled Feistel network with modular ADDITION (invertible like
+    XOR but dialect-portable: DuckDB's ^ is power, Spark lacks xor()).
+    Round function = 16 bits of md5(half || '|' || round).  Returns an
+    expression for the permuted (or recovered) 32-bit id."""
+    if dialect == "spark":
+        def h2i(s):
+            return f"CAST(conv(substring(md5({s}), 1, 4), 16, 10) AS BIGINT)"
+
+        str_t = "STRING"
+        div = "div"
+    else:
+        def h2i(s):
+            return f"(('0x' || substr(md5({s}), 1, 4))::BIGINT)"
+
+        str_t = "VARCHAR"
+        div = "//"
+    L = f"(({key}) {div} {FEISTEL_M})"
+    R = f"(({key}) % {FEISTEL_M})"
+    rounds = range(FEISTEL_ROUNDS)
+    if not inverse:
+        for r in rounds:
+            arg = f"CAST({R} AS {str_t}) || '|{r}'"
+            fr = f"({h2i(arg)} % {FEISTEL_M})"
+            L, R = R, f"(({L} + {fr}) % {FEISTEL_M})"
+    else:
+        for r in reversed(rounds):
+            arg = f"CAST({L} AS {str_t}) || '|{r}'"
+            fr = f"({h2i(arg)} % {FEISTEL_M})"
+            L, R = (
+                f"((({R} - {fr}) % {FEISTEL_M} + {FEISTEL_M}) % {FEISTEL_M})",
+                L,
+            )
+    return f"({L} * {FEISTEL_M} + {R})"
+
+
+def q_fn_feistel_permute(spark, sf_dir):
+    """Format-preserving PSEUDORANDOM PERMUTATION of order keys — a
+    4-round Feistel network over 16-bit halves with md5 round functions
+    and modular addition: deterministic, collision-free by construction,
+    and INVERTIBLE — the decode chain runs the rounds backwards and the
+    roundtrip equality ships as an output column.  The id-obfuscation
+    primitive for sharing keyed data without leaking sequence order.
+    Spark VARCHAR cast quirk avoided by casting halves to string before
+    hashing; everything else is md5 + integer ops identical in both
+    engines."""
+    load_tables(spark, sf_dir)
+    o = spark.table("orders")
+    enc = o.select(
+        "o_orderkey",
+        F.expr(_feistel("o_orderkey", "spark")).alias("permuted_id"),
+    )
+    return enc.select(
+        "o_orderkey",
+        "permuted_id",
+        F.expr(_feistel("permuted_id", "spark", inverse=True)).alias(
+            "recovered"
+        ),
+        (
+            F.expr(_feistel("permuted_id", "spark", inverse=True))
+            == F.col("o_orderkey")
+        ).alias("roundtrip_ok"),
+    )
+
+
+def q_fn_delta_encode(spark, sf_dir):
+    """DELTA-ENCODING analytics per order-priority stream: sort each
+    group's order keys, take consecutive deltas, and report the
+    bit-width the deltas need vs the raw 64-bit ids — the estimator a
+    columnar encoder (parquet DELTA_BINARY_PACKED) uses to pick its
+    layout.  ceil(log2(x)) comes from the portable bit-length identity
+    length(base-2 string) rather than any log float; everything is
+    exact integers over one co-partitioned window."""
+    load_tables(spark, sf_dir)
+    o = spark.table("orders")
+    w = Window.partitionBy("o_orderpriority").orderBy("o_orderkey")
+    d = o.select(
+        "o_orderpriority",
+        (F.col("o_orderkey") - F.lag("o_orderkey").over(w)).alias("delta"),
+    ).filter(F.col("delta").isNotNull())
+    # bits(x) = length of x in binary = position of highest set bit
+    bits = F.length(F.conv(F.col("delta").cast("string"), 10, 2))
+    g = d.groupBy("o_orderpriority").agg(
+        F.count(F.lit(1)).alias("n_deltas"),
+        F.max("delta").alias("max_delta"),
+        F.max(bits).alias("bits_needed"),
+        F.sum(bits).alias("sum_bits"),
+    )
+    return g.select(
+        "o_orderpriority",
+        "n_deltas",
+        "max_delta",
+        F.col("bits_needed").cast("int").alias("bits_needed"),
+        # packed size at the group's fixed width vs 64-bit raw, per mille
+        F.expr(
+            "(2 * 1000 * bits_needed * n_deltas + 64 * n_deltas) "
+            "div (2 * 64 * n_deltas)"
+        ).alias("packed_pm"),
+    )
+
+
+def q_fn_iso_duration(spark, sf_dir):
+    """ISO-8601 DURATION parsing: P#DT#H#M#S strings (the interchange
+    format of every scheduling API) synthesized from order keys, parsed
+    back to total seconds with one regexp_extract per component and
+    pure integer arithmetic — and re-serialized, with the roundtrip
+    asserted per row.  Regex and arithmetic identical in both
+    engines."""
+    load_tables(spark, sf_dir)
+    o = spark.table("orders")
+    d = "(o_orderkey % 28)"
+    h = "(o_orderkey % 24)"
+    m = "(o_orderkey % 60)"
+    s = "(o_orderkey % 45)"
+    iso = (
+        f"concat('P', {d}, 'DT', {h}, 'H', {m}, 'M', {s}, 'S')"
+    )
+    enc = o.select("o_orderkey", F.expr(iso).alias("iso"))
+    rex = r"P(\d+)DT(\d+)H(\d+)M(\d+)S"
+    total = (
+        F.regexp_extract("iso", rex, 1).cast("long") * 86400
+        + F.regexp_extract("iso", rex, 2).cast("long") * 3600
+        + F.regexp_extract("iso", rex, 3).cast("long") * 60
+        + F.regexp_extract("iso", rex, 4).cast("long")
+    )
+    expect = F.expr(
+        f"{d} * 86400 + {h} * 3600 + {m} * 60 + {s}"
+    ).cast("long")
+    return enc.select(
+        "o_orderkey",
+        "iso",
+        total.alias("total_seconds"),
+        (total == expect).alias("roundtrip_ok"),
+    )
+
+
+def q_fn_iban_mod97(spark, sf_dir):
+    """Big-number MOD-97 validation (the IBAN / ISO 7064 check): an
+    18-digit account string (synthesized from the order key) reduced
+    mod 97 by FOLDING 6-digit chunks — (acc*10^6 + chunk) mod 97 —
+    because the whole number exceeds every integer type; then the check
+    digits that make the full number ≡ 1 (mod 97), re-validated in the
+    same pass.  Three unrolled chunk steps, pure integer arithmetic,
+    identical in both engines."""
+    load_tables(spark, sf_dir)
+    o = spark.table("orders")
+    acct = "lpad(CAST(o_orderkey AS STRING), 18, '0')"
+    acct_d = "lpad(CAST(o_orderkey AS VARCHAR), 18, '0')"
+    # fold three 6-digit chunks: ((c1 % 97 * 10^6 + c2) % 97 ...) % 97
+    def fold(a, div):
+        m = f"CAST(substring({a}, 1, 6) AS BIGINT)"
+        for k in (7, 13):
+            m = f"(({m} % 97) * 1000000 + CAST(substring({a}, {k}, 6) AS BIGINT))"
+        return f"({m} % 97)"
+
+    rem_s = fold(acct, "div")
+    # check digits: full number = acct * 100 + cd must be ≡ 1 mod 97
+    # => cd = (1 - (rem * 100) % 97 + 97*2) % 97, kept in [2..98] per spec
+    cd_s = f"((1 - ({rem_s} * 100) % 97) % 97 + 97) % 97"
+    enc = o.select(
+        "o_orderkey",
+        F.expr(acct).alias("acct"),
+        F.expr(rem_s).cast("long").alias("base_mod97"),
+        F.expr(cd_s).cast("long").alias("check_digits"),
+    )
+    # validate: (rem*100 + cd) % 97 == 1
+    return enc.select(
+        "o_orderkey",
+        "acct",
+        "base_mod97",
+        "check_digits",
+        (
+            F.expr("(base_mod97 * 100 + check_digits) % 97") == 1
+        ).alias("valid"),
+    )
+
+
+def _fold_duck() -> str:
+    a = "lpad(CAST(o_orderkey AS VARCHAR), 18, '0')"
+    m = f"CAST(substring({a}, 1, 6) AS BIGINT)"
+    for k in (7, 13):
+        m = f"(({m} % 97) * 1000000 + CAST(substring({a}, {k}, 6) AS BIGINT))"
+    return f"({m} % 97)"
+
+
+#: avalanche audit: bits of the md5-derived word examined
+AVAL_BITS = 32
+
+
+def q_fn_hash_avalanche(spark, sf_dir):
+    """HASH AVALANCHE audit: for every bit position of a 32-bit
+    md5-derived word over all order keys, the share of ones — a healthy
+    hash sits at ~500 per-mille on every bit, and a biased bit means
+    skewed hash partitions (the diagnostic run before trusting any
+    hash-partitioner or sampler in this repo).  One explode over the
+    literal bit range and one exact integer agg per bit."""
+    load_tables(spark, sf_dir)
+    o = spark.table("orders")
+    word = F.conv(
+        F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 8), 16, 10
+    ).cast("long")
+    bits = o.select(
+        word.alias("w"),
+        F.explode(F.expr(f"sequence(0, {AVAL_BITS - 1})")).alias("bit"),
+    )
+    g = bits.groupBy("bit").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.expr("shiftright(w, bit) & 1")).alias("ones"),
+    )
+    return g.select(
+        "bit",
+        "n",
+        "ones",
+        F.expr("(2 * 1000 * ones + n) div (2 * n)").alias("ones_pm"),
+    )
+
+
 QUERIES = {
     "fn_variant_json": q_fn_variant_json,
     "fn_try_arith": q_fn_try_arith,
@@ -510,6 +1122,20 @@ QUERIES = {
     "fn_printf_format": q_fn_printf_format,
     "fn_sequence_gapfill": q_fn_sequence_gapfill,
     "fn_array_setops": q_fn_array_setops,
+    "fn_zorder_interleave": q_fn_zorder_interleave,
+    "fn_uuid_deterministic": q_fn_uuid_deterministic,
+    "fn_luhn_check": q_fn_luhn_check,
+    "fn_geohash": q_fn_geohash,
+    "fn_business_days": q_fn_business_days,
+    "fn_fiscal_445": q_fn_fiscal_445,
+    "fn_snowflake_id": q_fn_snowflake_id,
+    "fn_base62_codec": q_fn_base62_codec,
+    "fn_holiday_observed": q_fn_holiday_observed,
+    "fn_feistel_permute": q_fn_feistel_permute,
+    "fn_delta_encode": q_fn_delta_encode,
+    "fn_iso_duration": q_fn_iso_duration,
+    "fn_iban_mod97": q_fn_iban_mod97,
+    "fn_hash_avalanche": q_fn_hash_avalanche,
 }
 
 ORACLES = {
@@ -702,5 +1328,170 @@ ORACLES = {
     ),
     "fn_struct_map": (
         "SELECT doc_id, lang, n_chars % 100 AS chars_mod FROM documents"
+    ),
+    "fn_zorder_interleave": (
+        "SELECT l_orderkey, l_linenumber, l_partkey AS x, l_suppkey AS y, "
+        f"{_zorder_sql()} AS zcode FROM lineitem WHERE l_orderkey < 400"
+    ),
+    "fn_uuid_deterministic": (
+        "SELECT p_partkey, p_name, "
+        "substr(md5(p_name), 1, 8) || '-' || substr(md5(p_name), 9, 4) || "
+        "'-3' || substr(md5(p_name), 14, 3) || '-8' || "
+        "substr(md5(p_name), 18, 3) || '-' || substr(md5(p_name), 21, 12) "
+        "AS uuid3 FROM part WHERE p_partkey <= 100"
+    ),
+    "fn_luhn_check": (
+        "WITH a AS (SELECT o_orderkey, "
+        "lpad(CAST(o_orderkey AS VARCHAR), 12, '0') AS acct FROM orders), "
+        "s AS (SELECT o_orderkey, acct, "
+        "CAST(list_sum(list_transform(range(0, 12), i -> "
+        "CASE WHEN i % 2 = 1 THEN "
+        "CASE WHEN 2 * CAST(substring(acct, CAST(12 - i AS INT), 1) AS INT) > 9 "
+        "THEN 2 * CAST(substring(acct, CAST(12 - i AS INT), 1) AS INT) - 9 "
+        "ELSE 2 * CAST(substring(acct, CAST(12 - i AS INT), 1) AS INT) END "
+        "ELSE CAST(substring(acct, CAST(12 - i AS INT), 1) AS INT) END)) "
+        "AS BIGINT) AS luhn_sum FROM a) "
+        "SELECT o_orderkey, acct, luhn_sum, luhn_sum % 10 = 0 AS luhn_valid "
+        "FROM s"
+    ),
+    "fn_geohash": (
+        "WITH h AS (SELECT c_custkey, "
+        "(('0x' || substr(md5(c_custkey::VARCHAR), 1, 4))::BIGINT % 120) "
+        "- 60 AS lat_t, "
+        "(('0x' || substr(md5(c_custkey::VARCHAR), 5, 4))::BIGINT % 360) "
+        "- 180 AS lon_t FROM customer), "
+        "b AS (SELECT c_custkey, lat_t, lon_t, "
+        "((lat_t + 900) * 32768) // 1800 AS latb, "
+        "((lon_t + 1800) * 32768) // 3600 AS lonb FROM h), "
+        "g AS (SELECT c_custkey, lat_t, lon_t, "
+        + _gh_interleave("latb", "lonb", "duckdb")
+        + " AS zcode FROM b) "
+        "SELECT c_custkey, lat_t, lon_t, zcode, "
+        + _gh_chars("zcode", "duckdb")
+        + " AS geohash6 FROM g"
+    ),
+    "fn_business_days": (
+        "SELECT l_orderkey, l_linenumber, "
+        f"CAST(date_diff('day', DATE '{BD_ANCHOR}', o_orderdate) AS INT) "
+        "AS order_x, "
+        f"CAST(date_diff('day', DATE '{BD_ANCHOR}', l_shipdate) AS INT) "
+        "AS ship_x, "
+        f"CAST(date_diff('day', DATE '{BD_ANCHOR}', o_orderdate) % 7 AS INT) "
+        "AS order_dow, "
+        "CAST("
+        + _kw_f(f"date_diff('day', DATE '{BD_ANCHOR}', l_shipdate)")
+        + " - "
+        + _kw_f(f"date_diff('day', DATE '{BD_ANCHOR}', o_orderdate)")
+        + " AS INT) AS biz_days "
+        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey"
+    ),
+    "fn_fiscal_445": (
+        "WITH d AS (SELECT o_orderkey, o_orderdate, "
+        f"date_diff('day', DATE '{FISCAL_ANCHOR}', o_orderdate) AS x "
+        "FROM orders) "
+        "SELECT o_orderkey, o_orderdate, "
+        "CAST(1992 + (x // 7) // 52 AS INT) AS fiscal_year, "
+        "CAST(1 + ((x // 7) % 52) // 13 AS INT) AS fiscal_quarter, "
+        "CAST(CASE WHEN ((x // 7) % 52) % 13 < 4 THEN 1 "
+        "WHEN ((x // 7) % 52) % 13 < 8 THEN 2 ELSE 3 END AS INT) "
+        "AS period_in_quarter, "
+        "CAST(1 + (x // 7) % 52 AS INT) AS fiscal_week FROM d"
+    ),
+    "fn_snowflake_id": (
+        "WITH enc AS (SELECT o_orderkey, "
+        "((o_orderkey * 1000 + o_orderkey % 997) << 22) "
+        "+ ((o_orderkey % 32) << 12) + (o_orderkey % 4096) "
+        "AS snowflake_id FROM orders) "
+        "SELECT o_orderkey, snowflake_id, "
+        "snowflake_id >> 22 AS dec_ms, "
+        "(snowflake_id >> 12) & 1023 AS dec_worker, "
+        "snowflake_id & 4095 AS dec_seq, "
+        f"epoch_ms({SNOW_EPOCH_MS} + (snowflake_id >> 22)) AS dec_ts "
+        "FROM enc"
+    ),
+    "fn_base62_codec": (
+        "WITH enc AS (SELECT o_orderkey, "
+        + _b62_encode("o_orderkey", "duckdb")
+        + " AS b62 FROM orders) "
+        "SELECT o_orderkey, b62, "
+        "CAST(" + _b62_decode("b62") + " AS BIGINT) AS decoded, "
+        "(" + _b62_decode("b62") + ") = o_orderkey AS roundtrip_ok "
+        "FROM enc"
+    ),
+    "fn_holiday_observed": (
+        f"WITH spine AS (SELECT raw, name, "
+        "CAST(CASE date_diff('day', DATE '1991-12-30', raw) % 7 "
+        "WHEN 5 THEN raw - INTERVAL 1 DAY "
+        "WHEN 6 THEN raw + INTERVAL 1 DAY "
+        f"ELSE raw END AS DATE) AS observed FROM (VALUES {_HOLIDAY_ROWS}) "
+        "AS t(raw, name)) "
+        "SELECT strftime(observed, '%Y-%m-%d') AS holiday_date, name, "
+        "CAST(count(*) AS BIGINT) AS n_orders, "
+        "CAST(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 "
+        "AS BIGINT) AS BIGINT) / 100.0 AS holiday_revenue "
+        "FROM orders JOIN spine ON o_orderdate = observed "
+        "GROUP BY 1, 2"
+    ),
+    "fn_feistel_permute": (
+        "WITH enc AS (SELECT o_orderkey, "
+        + _feistel("o_orderkey", "duckdb")
+        + " AS permuted_id FROM orders) "
+        "SELECT o_orderkey, permuted_id, "
+        + _feistel("permuted_id", "duckdb", inverse=True)
+        + " AS recovered, "
+        + _feistel("permuted_id", "duckdb", inverse=True)
+        + " = o_orderkey AS roundtrip_ok FROM enc"
+    ),
+    "fn_delta_encode": (
+        "WITH d AS (SELECT o_orderpriority, "
+        "o_orderkey - lag(o_orderkey) OVER (PARTITION BY o_orderpriority "
+        "ORDER BY o_orderkey) AS delta FROM orders), "
+        "b AS (SELECT o_orderpriority, delta, "
+        "length(to_base(delta, 2)) AS bits FROM d WHERE delta IS NOT NULL), "
+        "g AS (SELECT o_orderpriority, count(*) AS n_deltas, "
+        "max(delta) AS max_delta, max(bits) AS bits_needed, "
+        "sum(bits) AS sum_bits FROM b GROUP BY 1) "
+        "SELECT o_orderpriority, CAST(n_deltas AS BIGINT) AS n_deltas, "
+        "CAST(max_delta AS BIGINT) AS max_delta, "
+        "CAST(bits_needed AS INT) AS bits_needed, "
+        "CAST((2 * 1000 * bits_needed * n_deltas + 64 * n_deltas) "
+        "// (2 * 64 * n_deltas) AS BIGINT) AS packed_pm FROM g"
+    ),
+    "fn_iso_duration": (
+        "WITH enc AS (SELECT o_orderkey, "
+        "concat('P', o_orderkey % 28, 'DT', o_orderkey % 24, 'H', "
+        "o_orderkey % 60, 'M', o_orderkey % 45, 'S') AS iso FROM orders) "
+        "SELECT o_orderkey, iso, "
+        "CAST(regexp_extract(iso, 'P(\\d+)DT', 1) AS BIGINT) * 86400 "
+        "+ CAST(regexp_extract(iso, 'DT(\\d+)H', 1) AS BIGINT) * 3600 "
+        "+ CAST(regexp_extract(iso, 'H(\\d+)M', 1) AS BIGINT) * 60 "
+        "+ CAST(regexp_extract(iso, 'M(\\d+)S', 1) AS BIGINT) "
+        "AS total_seconds, "
+        "(CAST(regexp_extract(iso, 'P(\\d+)DT', 1) AS BIGINT) * 86400 "
+        "+ CAST(regexp_extract(iso, 'DT(\\d+)H', 1) AS BIGINT) * 3600 "
+        "+ CAST(regexp_extract(iso, 'H(\\d+)M', 1) AS BIGINT) * 60 "
+        "+ CAST(regexp_extract(iso, 'M(\\d+)S', 1) AS BIGINT)) "
+        "= ((o_orderkey % 28) * 86400 + (o_orderkey % 24) * 3600 "
+        "+ (o_orderkey % 60) * 60 + (o_orderkey % 45)) AS roundtrip_ok "
+        "FROM enc"
+    ),
+    "fn_iban_mod97": (
+        "SELECT o_orderkey, "
+        "lpad(CAST(o_orderkey AS VARCHAR), 18, '0') AS acct, "
+        f"CAST({_fold_duck()} AS BIGINT) AS base_mod97, "
+        f"CAST(((1 - ({_fold_duck()} * 100) % 97) % 97 + 97) % 97 "
+        "AS BIGINT) AS check_digits, "
+        f"(({_fold_duck()} * 100 + "
+        f"((1 - ({_fold_duck()} * 100) % 97) % 97 + 97) % 97) % 97) = 1 "
+        "AS valid FROM orders"
+    ),
+    "fn_hash_avalanche": (
+        "WITH w AS (SELECT ('0x' || substr(md5(o_orderkey::VARCHAR), "
+        "1, 8))::BIGINT AS w FROM orders), "
+        f"b AS (SELECT w, unnest(range({AVAL_BITS})) AS bit FROM w) "
+        "SELECT CAST(bit AS INT) AS bit, CAST(count(*) AS BIGINT) AS n, "
+        "CAST(sum((w >> CAST(bit AS INT)) & 1) AS BIGINT) AS ones, "
+        "CAST((2 * 1000 * sum((w >> CAST(bit AS INT)) & 1) + count(*)) "
+        "// (2 * count(*)) AS BIGINT) AS ones_pm FROM b GROUP BY 1"
     ),
 }

@@ -10,6 +10,7 @@ makes a 100 TB scan read only the bytes the query needs.
 from __future__ import annotations
 
 import atexit
+import os
 import shutil
 import tempfile
 
@@ -514,6 +515,221 @@ def q_source_csv_malformed(spark, sf_dir):
     return p.unionByName(d)
 
 
+# =================================================================
+# Group S — ingestion semantics
+# =================================================================
+def q_source_csv_multiline(spark, sf_dir):
+    """Multi-line CSV parsing semantics (ref op A7, quoted-embedded-
+    newline case): part names are rewritten with real newlines,
+    written as a quoted CSV, and read back with multiLine=true — the
+    parser mode that cannot split files (a whole-file read unit), which
+    is exactly why the check matters: the roundtrip must preserve row
+    count and content despite records spanning physical lines."""
+    load_tables(spark, sf_dir)
+    p = spark.table("part").filter(F.col("p_partkey") <= 200)
+    staged = p.select(
+        "p_partkey",
+        F.regexp_replace(F.col("p_name"), " ", "\n").alias("name_multi"),
+    )
+    out_dir = os.path.join(
+        tempfile.gettempdir(), f"i2mr_csv_multiline_{os.path.basename(sf_dir)}"
+    )
+    (
+        staged.coalesce(1)
+        .write.mode("overwrite")
+        .option("header", True)
+        .option("quoteAll", True)
+        .csv(out_dir)
+    )
+    back = (
+        spark.read.option("header", True)
+        .option("multiLine", True)
+        .schema("p_partkey long, name_multi string")
+        .csv(out_dir)
+    )
+    return back.select(
+        "p_partkey",
+        F.size(F.split(F.col("name_multi"), "\n")).alias("n_lines"),
+        F.regexp_replace(F.col("name_multi"), "\n", " ").alias("restored"),
+    )
+
+
+BINF_N = 50  #: files materialized for the binaryFile scan
+
+
+def q_source_binary_files(spark, sf_dir):
+    """Opaque binary ingest via `spark.read.format("binaryFile")` — the
+    source path every multimodal (image/audio/video) pipeline starts
+    from: bytes land as one `binary` column plus path/length metadata,
+    no decode attempted at scan time.  The fixture materializes 50
+    documents as standalone .bin files (content = utf-8 text bytes),
+    scans them back, and emits (file name, byte length, md5 of the
+    BYTES).  Hash-checked: the oracle derives the same triple from the
+    documents table itself, so any byte corruption in the write-scan
+    path flips the md5.  At 100 TB this scan partitions by file and
+    never materializes more than a partition of blobs at once."""
+    load_tables(spark, sf_dir)
+    # NULL text: no blob to materialize (the oracle filters identically)
+    d = spark.table("documents").filter(
+        (F.col("doc_id") < BINF_N) & F.col("text").isNotNull()
+    )
+    root = _scratch_dir("i2mr_binf_") + "/blobs"
+    os.makedirs(root, exist_ok=True)
+    for r in d.select("doc_id", "text").collect():  # bounded: 50 files
+        with open(f"{root}/doc_{r['doc_id']:05d}.bin", "wb") as f:
+            f.write(r["text"].encode("utf-8"))
+    scanned = spark.read.format("binaryFile").load(root)
+    return scanned.select(
+        F.element_at(F.split(F.col("path"), "/"), -1).alias("fname"),
+        F.col("length").alias("n_bytes"),
+        F.md5(F.col("content")).alias("content_md5"),
+    )
+
+
+#: fixed-width layout for the part table (field widths, in order)
+FW_KEY_W, FW_NAME_W, FW_BRAND_W, FW_TYPE_W, FW_SIZE_W, FW_CENTS_W = (
+    8, 60, 10, 25, 4, 12,
+)
+
+
+def q_source_fixed_width(spark, sf_dir):
+    """Fixed-width text source — the mainframe/COBOL interchange format
+    A7-class readers still meet: part rows serialized as padded
+    column-aligned lines (key 8, name 60, brand 10, type 25, size 4,
+    retail CENTS 12 — money as an integer field, the COBOL convention),
+    written through the text sink, read back as raw lines and re-parsed
+    by 1-based substring slicing + rtrim + cast.  Parsing is pure JVM
+    substring arithmetic on the scan (at 100 TB this is a map-only
+    format conversion, no shuffle); the oracle recomputes the declared
+    layout semantics straight from the base table."""
+    load_tables(spark, sf_dir)
+    p = spark.table("part")
+    cents = (F.col("p_retailprice").cast("decimal(12,2)") * 100).cast("long")
+    line = F.concat(
+        F.rpad(F.col("p_partkey").cast("string"), FW_KEY_W, " "),
+        F.rpad(F.col("p_name"), FW_NAME_W, " "),
+        F.rpad(F.col("p_brand"), FW_BRAND_W, " "),
+        F.rpad(F.col("p_type"), FW_TYPE_W, " "),
+        F.rpad(F.col("p_size").cast("string"), FW_SIZE_W, " "),
+        F.rpad(cents.cast("string"), FW_CENTS_W, " "),
+    )
+    out = _scratch_dir("i2mr_fw_") + "/part"
+    p.select(line.alias("value")).write.mode("overwrite").text(out)
+    raw = spark.read.text(out)
+    pos_name = 1 + FW_KEY_W
+    pos_brand = pos_name + FW_NAME_W
+    pos_type = pos_brand + FW_BRAND_W
+    pos_size = pos_type + FW_TYPE_W
+    pos_cents = pos_size + FW_SIZE_W
+    return raw.select(
+        F.rtrim(F.substring("value", 1, FW_KEY_W)).cast("long").alias(
+            "p_partkey"
+        ),
+        F.rtrim(F.substring("value", pos_name, FW_NAME_W)).alias("p_name"),
+        F.rtrim(F.substring("value", pos_brand, FW_BRAND_W)).alias("p_brand"),
+        F.rtrim(F.substring("value", pos_type, FW_TYPE_W)).alias("p_type"),
+        F.rtrim(F.substring("value", pos_size, FW_SIZE_W)).cast("int").alias(
+            "p_size"
+        ),
+        F.rtrim(F.substring("value", pos_cents, FW_CENTS_W))
+        .cast("long")
+        .alias("retail_cents"),
+    )
+
+
+def q_source_weblog_parse(spark, sf_dir):
+    """Apache combined-log SOURCE: events serialize to classic access-log
+    lines (ip - - [-] "GET /path HTTP/1.1" status bytes), go through the
+    text sink, come back as raw lines, and are re-parsed by ONE
+    regexp_extract per field — the grep-shaped ETL that still feeds
+    most traffic analytics.  Parsing is JVM-side regex on the scan (a
+    map-only format conversion at any scale); the oracle recomputes the
+    aggregate straight from events with the same synthesis rules."""
+    load_tables(spark, sf_dir)
+    # complete-case: an event without a byte count OR without a user
+    # (NULL user_id -> NULL IP octets) cannot form a log line (concat
+    # with NULL serializes an empty line that fails the read-back
+    # cast) — excluded on both sides
+    e = spark.table("events").filter(
+        F.col("value").isNotNull() & F.col("user_id").isNotNull()
+    )
+    line = F.concat(
+        F.lit("10."),
+        (F.col("user_id") % 256).cast("string"),
+        F.lit("."),
+        (F.expr("user_id div 256") % 256).cast("string"),
+        F.lit('.1 - - [-] "GET /'),
+        F.col("event_type"),
+        F.lit(' HTTP/1.1" '),
+        F.when(F.col("event_type") == "error", F.lit(500))
+        .otherwise(F.lit(200))
+        .cast("string"),
+        F.lit(" "),
+        F.expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)").cast(
+            "string"
+        ),
+    )
+    out = _scratch_dir("i2mr_weblog_") + "/access"
+    e.select(line.alias("value")).write.mode("overwrite").text(out)
+    raw = spark.read.text(out)
+    parsed = raw.select(
+        F.regexp_extract("value", r'^(\S+) - - \[-\] "GET /(\S+) HTTP/1\.1" (\d+) (\d+)$', 2).alias("path"),
+        F.regexp_extract("value", r'^(\S+) - - \[-\] "GET /(\S+) HTTP/1\.1" (\d+) (\d+)$', 3)
+        .cast("int")
+        .alias("status"),
+        F.regexp_extract("value", r'^(\S+) - - \[-\] "GET /(\S+) HTTP/1\.1" (\d+) (\d+)$', 4)
+        .cast("long")
+        .alias("bytes"),
+    )
+    return parsed.groupBy("path", "status").agg(
+        F.count(F.lit(1)).alias("n_requests"),
+        F.sum("bytes").alias("total_bytes"),
+    )
+
+
+def q_source_json_array(spark, sf_dir):
+    """JSON-ARRAY source: the whole nation table serialized as ONE json
+    array in ONE file (the API-dump / config shape), read back with
+    wholetext + from_json(array<struct>) + explode — the ingestion path
+    JSONL line readers cannot handle because no row boundary aligns
+    with a line.  Roundtrips the bounded table exactly; the oracle is
+    the base table."""
+    load_tables(spark, sf_dir)
+    n = spark.table("nation")
+    payload = n.agg(
+        F.concat(
+            F.lit("["),
+            F.concat_ws(
+                ",",
+                F.array_sort(
+                    F.collect_list(
+                        F.to_json(
+                            F.struct("n_nationkey", "n_name", "n_regionkey")
+                        )
+                    )
+                ),
+            ),
+            F.lit("]"),
+        ).alias("value")
+    )
+    out = _scratch_dir("i2mr_jsonarr_") + "/nation"
+    payload.coalesce(1).write.mode("overwrite").text(out)
+    raw = spark.read.option("wholetext", True).text(out)
+    schema = (
+        "array<struct<n_nationkey: int, n_name: string, n_regionkey: int>>"
+    )
+    return (
+        raw.select(
+            F.explode(F.from_json("value", schema)).alias("r")
+        )
+        .select(
+            F.col("r")["n_nationkey"].alias("n_nationkey"),
+            F.col("r")["n_name"].alias("n_name"),
+            F.col("r")["n_regionkey"].alias("n_regionkey"),
+        )
+    )
+
+
 QUERIES = {
     "source_csv_malformed": q_source_csv_malformed,
     "sink_time_travel": q_sink_time_travel,
@@ -535,6 +751,11 @@ QUERIES = {
     "sink_upsert_merge": q_sink_upsert_merge,
     "sink_bucketed_join": q_sink_bucketed_join,
     "source_incremental_files": q_source_incremental_files,
+    "source_csv_multiline": q_source_csv_multiline,
+    "source_binary_files": q_source_binary_files,
+    "source_fixed_width": q_source_fixed_width,
+    "source_weblog_parse": q_source_weblog_parse,
+    "source_json_array": q_source_json_array,
 }
 
 ORACLES = {
@@ -637,5 +858,39 @@ ORACLES = {
         "round(sum(l_quantity), 2) AS sum_qty, count(*) AS n_lines "
         "FROM orders JOIN lineitem ON l_orderkey = o_orderkey "
         "GROUP BY o_orderkey"
+    ),
+    "source_csv_multiline": (
+        # oracle recomputes from the base table: the roundtrip must not
+        # lose rows or content, so line counts and the reassembled text
+        # match the pre-split values
+        "SELECT p_partkey, len(string_split(p_name, ' ')) AS n_lines, "
+        "p_name AS restored FROM part WHERE p_partkey <= 200"
+    ),
+    "source_binary_files": (
+        "SELECT 'doc_' || lpad(CAST(doc_id AS VARCHAR), 5, '0') || '.bin' "
+        "AS fname, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes, "
+        "md5(text) AS content_md5 FROM documents "
+        f"WHERE doc_id < {BINF_N} AND text IS NOT NULL"
+    ),
+    "source_fixed_width": (
+        "SELECT p_partkey, "
+        f"rtrim(substr(p_name, 1, {FW_NAME_W})) AS p_name, "
+        f"rtrim(substr(p_brand, 1, {FW_BRAND_W})) AS p_brand, "
+        f"rtrim(substr(p_type, 1, {FW_TYPE_W})) AS p_type, "
+        "CAST(p_size AS INT) AS p_size, "
+        "CAST(CAST(p_retailprice AS DECIMAL(12,2)) * 100 AS BIGINT) "
+        "AS retail_cents FROM part"
+    ),
+    "source_weblog_parse": (
+        "SELECT event_type AS path, "
+        "CAST(CASE WHEN event_type = 'error' THEN 500 ELSE 200 END AS INT) "
+        "AS status, CAST(count(*) AS BIGINT) AS n_requests, "
+        "CAST(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) "
+        "AS BIGINT) AS total_bytes FROM events "
+        "WHERE value IS NOT NULL AND user_id IS NOT NULL GROUP BY 1, 2"
+    ),
+    "source_json_array": (
+        "SELECT CAST(n_nationkey AS INT) AS n_nationkey, n_name, "
+        "CAST(n_regionkey AS INT) AS n_regionkey FROM nation"
     ),
 }

@@ -78,6 +78,36 @@ def q_setop_except_all(spark, sf_dir):
     return _cust_nations(spark).exceptAll(_supp_nations(spark))
 
 
+def q_setop_division(spark, sf_dir):
+    """Relational DIVISION — the textbook 'for all' operator: customers
+    whose orders span EVERY priority class (rows related to every
+    member of the divisor set), which no join alone expresses.  The
+    standard set-cover rewrite: count DISTINCT divisor members per
+    candidate and keep those matching the divisor's cardinality — one
+    co-partitioned agg plus a 1-row divisor count, no double-negation
+    NOT EXISTS pair.  Output is the qualifying set's bounded summary
+    plus its exact membership count."""
+    load_tables(spark, sf_dir)
+    o = spark.table("orders")
+    divisor_n = o.select("o_orderpriority").distinct().count()
+    per_cust = o.groupBy("o_custkey").agg(
+        F.count_distinct("o_orderpriority").alias("n_prio"),
+        F.count(F.lit(1)).alias("n_orders"),
+    )
+    q = per_cust.filter(F.col("n_prio") == divisor_n)
+    res = q.agg(
+        F.lit(divisor_n).alias("divisor_size"),
+        F.count(F.lit(1)).alias("n_qualifying"),
+        F.min("o_custkey").alias("min_cust"),
+        F.max("o_custkey").alias("max_cust"),
+        F.sum("n_orders").alias("their_orders"),
+    )
+    # empty divisor set (empty input): division by the empty relation is
+    # undefined — no summary row, matching the oracle's GROUP BY dn,
+    # which grows no group when `per` is empty
+    return res.limit(0) if divisor_n == 0 else res
+
+
 QUERIES = {
     "setop_symmetric_diff": q_setop_symmetric_diff,
     "setop_union_all": q_setop_union_all,
@@ -86,6 +116,7 @@ QUERIES = {
     "setop_except": q_setop_except,
     "setop_intersect_all": q_setop_intersect_all,
     "setop_except_all": q_setop_except_all,
+    "setop_division": q_setop_division,
 }
 
 ORACLES = {
@@ -120,5 +151,16 @@ ORACLES = {
     "setop_except_all": (
         "SELECT c_nationkey AS nationkey FROM customer "
         "EXCEPT ALL SELECT s_nationkey FROM supplier"
+    ),
+    "setop_division": (
+        "WITH per AS (SELECT o_custkey, "
+        "count(DISTINCT o_orderpriority) AS n_prio, count(*) AS n_orders "
+        "FROM orders GROUP BY 1), "
+        "d AS (SELECT count(DISTINCT o_orderpriority) AS dn FROM orders) "
+        "SELECT CAST(dn AS INT) AS divisor_size, "
+        "CAST(count(*) AS BIGINT) AS n_qualifying, "
+        "min(o_custkey) AS min_cust, max(o_custkey) AS max_cust, "
+        "CAST(sum(n_orders) AS BIGINT) AS their_orders "
+        "FROM per, d WHERE n_prio = dn GROUP BY dn"
     ),
 }

@@ -11,11 +11,14 @@ their driver entries.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 from pyspark.sql.window import Window
 
 from ..catalog import load_tables
-from ..plans.iterate import checkpoint_without_stats
+from ..plans.iterate import checkpoint_without_stats, release_checkpoint
 from ..streaming.incremental import (
     MRBGStore,
     chunk_events,
@@ -23,6 +26,7 @@ from ..streaming.incremental import (
     fold_delta_ops,
     stream_over_chunks,
 )
+from .windows_q import ATTR_WINDOW_H, ORACLES as _WINDOW_ORACLES
 
 SESSION_GAP = "30 minutes"
 N_DELTA_BATCHES = 3
@@ -132,9 +136,12 @@ def q_stream_stateful_running(spark, sf_dir):
     chunks = chunk_events(spark, spark.table("events"), n=N_DELTA_BATCHES)
     state = None
     for chunk in chunks:
-        state = fold_delta(
+        new = fold_delta(
             state, chunk, ["user_id"], {"total_value": "value"}, count_col="n_events"
         ).transform(checkpoint_without_stats)
+        if state is not None:
+            release_checkpoint(state)
+        state = new
     return state.select(
         "user_id", "n_events", F.round("total_value", 2).alias("total_value")
     )
@@ -615,6 +622,228 @@ def q_stream_cdc_apply(spark, sf_dir):
     )
 
 
+_ATTR_STATE = StructType([StructField("last_click_us", LongType())])
+_ATTR_OUT = StructType(
+    [
+        StructField("user_id", LongType()),
+        StructField("day", StringType()),
+        StructField("cents", LongType()),
+        StructField("attr", IntegerType()),
+    ]
+)
+_ATTR_US = ATTR_WINDOW_H * 3600 * 1_000_000
+
+
+def _attr_fn(key, pdf_iter, state: GroupState):
+    """Per-user keyed state = the latest click timestamp (µs).  Each
+    micro-batch is sorted on (ts, event_id) and the carry-forward is a
+    VECTORIZED cummax of click timestamps seeded from preserved state —
+    no per-row python; purchases emit (day, cents, attributed)."""
+    last = state.get[0] if state.exists else None
+    for pdf in pdf_iter:
+        if len(pdf) == 0:
+            continue
+        pdf = pdf.sort_values(["ts", "event_id"]).reset_index(drop=True)
+        us = pdf["ts"].astype("int64") // 1000  # ns -> µs, tz-less
+        clicks = us.where(pdf["event_type"] == "click").astype("float64")
+        # strictly-before semantics: shift(1) excludes the current row
+        # (its position 0 is always NaN, so the preserved cross-batch
+        # state seeds it), then ffill carries the latest click forward —
+        # rows are ts-sorted, so last-click == max-click, and ffill is
+        # the correct carry (pandas cummax(skipna=True) yields NaN AT
+        # NaN positions, which silently dropped attributions here)
+        carried = clicks.shift(1)
+        if last is not None:
+            carried.iloc[0] = float(last)
+        carried = carried.ffill()
+        is_p = (pdf["event_type"] == "purchase").to_numpy()
+        if is_p.any():
+            p_us = us[is_p]
+            p_carried = carried[is_p]
+            attr = (
+                p_carried.notna()
+                & ((p_us - p_carried) <= _ATTR_US)
+            ).astype("int32")
+            yield pd.DataFrame(
+                {
+                    # nullable Int64: the NULL-user group is a real keyed
+                    # group here (window PARTITION BY semantics in the
+                    # batch oracle group NULLs together), and its user_id
+                    # arrives as NaN — plain int64 astype would throw
+                    "user_id": pdf["user_id"][is_p].astype("Int64"),
+                    "day": pdf["ts"][is_p].dt.strftime("%Y-%m-%d"),
+                    # nullable Int64: a purchase with no recorded value
+                    # still counts, its cents stay NULL (plain int64
+                    # astype would throw on the NaN) — the downstream
+                    # sum skips NULLs exactly like the batch oracle's
+                    # CASE/sum
+                    "cents": pdf["cents"][is_p].astype("Int64"),
+                    "attr": attr,
+                }
+            )
+        mx = clicks.max()
+        if pd.notna(mx):
+            last = int(mx) if last is None else max(last, int(mx))
+    state.update((last,))
+
+
+def q_stream_attribution(spark, sf_dir):
+    """Streaming last-touch attribution: events arrive in 3
+    chronological micro-batches; per-user keyed state preserves the
+    latest click across batches (applyInPandasWithState — the
+    MRBG-style read-merge-write cycle), purchases are credited within
+    the 24 h lookback as they arrive, and the memory-sink rows roll up
+    to the same daily attach table as the batch key.  The oracle IS the
+    batch oracle — stream and batch must hash identically."""
+    load_tables(spark, sf_dir)
+    e = spark.table("events").select(
+        "user_id",
+        "event_id",
+        "event_type",
+        "ts",
+        (F.col("value").cast("decimal(18,2)") * 100).cast("long").alias("cents"),
+    )
+    chunks = chunk_events(spark, e, n=3)
+
+    def transform(stream):
+        return stream.groupBy("user_id").applyInPandasWithState(
+            _attr_fn,
+            outputStructType=_ATTR_OUT,
+            stateStructType=_ATTR_STATE,
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+
+    sink = stream_over_chunks(
+        spark, chunks, transform, "update", "stream_attr_sink"
+    )
+    daily = sink.groupBy("day").agg(
+        F.count(F.lit(1)).alias("n_purchases"),
+        F.sum("attr").alias("n_attributed"),
+        F.sum(F.when(F.col("attr") == 1, F.col("cents")).otherwise(0)).alias(
+            "ac"
+        ),
+    )
+    return daily.select(
+        "day",
+        "n_purchases",
+        F.col("n_attributed").cast("long").alias("n_attributed"),
+        (F.col("ac") / 100.0).alias("attributed_revenue"),
+        F.expr(
+            "(2000 * n_attributed + n_purchases) div (2 * n_purchases)"
+        ).alias("attach_pm"),
+    )
+
+
+#: snapshot-diff simulation rules (deterministic, SF-independent)
+DIFF_DEL_MOD = 7        # v1 drops orderkeys divisible by 7
+DIFF_UPD_MOD = 5        # v1 rewrites priority where orderkey % 5 == 0
+DIFF_ADD_MOD = 97       # v1 inserts a shifted clone where key % 97 == 0
+DIFF_ADD_OFFSET = 1_000_000_000
+
+
+def q_inc_snapshot_diff(spark, sf_dir):
+    """Snapshot diff — the CDC table-compare validating every migration
+    / time-travel pair: given version v0 and version v1 of the orders
+    table (v1 deterministically drops keys divisible by 7 and rewrites
+    the priority where key % 5 == 0), a FULL OUTER join on the primary
+    key classifies every row as added / removed / changed / unchanged
+    and returns the reconciliation counts.  One co-partitioned
+    full-outer join on the key; the compared payload is hashed
+    column-wise, never collected."""
+    load_tables(spark, sf_dir)
+    o = spark.table("orders")
+    v0 = o.select("o_orderkey", "o_totalprice", "o_orderpriority")
+    v1 = (
+        o.filter(F.col("o_orderkey") % DIFF_DEL_MOD != 0)
+        .select(
+            "o_orderkey",
+            "o_totalprice",
+            F.when(
+                F.col("o_orderkey") % DIFF_UPD_MOD == 0, F.lit("0-REWRITTEN")
+            )
+            .otherwise(F.col("o_orderpriority"))
+            .alias("o_orderpriority"),
+        )
+        .unionAll(
+            o.filter(F.col("o_orderkey") % DIFF_ADD_MOD == 0).select(
+                (F.col("o_orderkey") + DIFF_ADD_OFFSET).alias("o_orderkey"),
+                "o_totalprice",
+                "o_orderpriority",
+            )
+        )
+    )
+    j = v0.alias("x").join(
+        v1.alias("y"), F.col("x.o_orderkey") == F.col("y.o_orderkey"), "full"
+    )
+    status = (
+        F.when(F.col("x.o_orderkey").isNull(), "added")
+        .when(F.col("y.o_orderkey").isNull(), "removed")
+        .when(
+            (F.col("x.o_totalprice") == F.col("y.o_totalprice"))
+            & (F.col("x.o_orderpriority") == F.col("y.o_orderpriority")),
+            "unchanged",
+        )
+        .otherwise("changed")
+    )
+    return (
+        j.select(status.alias("status"))
+        .groupBy("status")
+        .agg(F.count(F.lit(1)).alias("n_rows"))
+    )
+
+
+#: bitemporal probe: transaction-time version and valid date
+BT_TX_PROBE = 1
+BT_VALID_PROBE = "1995-06-15"
+
+
+def q_inc_bitemporal_asof(spark, sf_dir):
+    """BITEMPORAL as-of query: rows carry BOTH a valid-time interval
+    (when the fact was true in the world) and a transaction-time
+    version (when the warehouse learned it); the probe asks 'as the
+    table stood at transaction version T, what was valid on date V?' —
+    the audit/backdating semantics SQL:2011 temporal tables implement
+    and join_point_in_time (valid time only) cannot answer.
+
+    The bitemporal store is built deterministically from orders: tx 0
+    records each order valid [orderdate, orderdate+90d) with its
+    original priority; tx 1 RESTATES orders with key % 5 == 0 (new
+    priority, validity extended to +180d).  The probe takes the highest
+    tx <= T per key (one co-partitioned window), then filters the valid
+    interval — two narrow passes, no self-join."""
+    load_tables(spark, sf_dir)
+    o = spark.table("orders")
+    v0 = o.select(
+        "o_orderkey",
+        F.lit(0).alias("tx"),
+        F.col("o_orderdate").alias("valid_from"),
+        F.date_add("o_orderdate", 90).alias("valid_to"),
+        F.col("o_orderpriority").alias("prio"),
+    )
+    v1 = o.filter(F.col("o_orderkey") % 5 == 0).select(
+        "o_orderkey",
+        F.lit(1).alias("tx"),
+        F.col("o_orderdate").alias("valid_from"),
+        F.date_add("o_orderdate", 180).alias("valid_to"),
+        F.lit("0-RESTATED").alias("prio"),
+    )
+    bt = v0.unionAll(v1).filter(F.col("tx") <= BT_TX_PROBE)
+    w = Window.partitionBy("o_orderkey").orderBy(F.col("tx").desc())
+    latest = bt.withColumn("rn", F.row_number().over(w)).filter(
+        F.col("rn") == 1
+    )
+    probe = latest.filter(
+        (F.col("valid_from") <= F.lit(BT_VALID_PROBE))
+        & (F.col("valid_to") > F.lit(BT_VALID_PROBE))
+    )
+    return probe.groupBy("prio").agg(
+        F.count(F.lit(1)).alias("n_valid"),
+        F.min("o_orderkey").alias("min_key"),
+        F.max("o_orderkey").alias("max_key"),
+    )
+
+
 QUERIES = {
     "inc_join_delta": q_inc_join_delta,
     "stream_cdc_apply": q_stream_cdc_apply,
@@ -634,6 +863,9 @@ QUERIES = {
     "stream_dedup_watermark": q_stream_dedup_watermark,
     "stream_late_watermark": q_stream_late_watermark,
     "stream_complete_totals": q_stream_complete_totals,
+    "stream_attribution": q_stream_attribution,
+    "inc_snapshot_diff": q_inc_snapshot_diff,
+    "inc_bitemporal_asof": q_inc_bitemporal_asof,
 }
 
 ORACLES = {
@@ -779,5 +1011,45 @@ ORACLES = {
         "OR ws + INTERVAL 1 HOUR > (SELECT v FROM wm2)) "
         "SELECT ws, count(*) AS n FROM kept "
         "WHERE ws + INTERVAL 1 HOUR <= (SELECT v FROM fwm) GROUP BY ws"
+    ),
+    #: stream-batch equivalence: the ORACLE is the batch query's oracle.
+    "stream_attribution": _WINDOW_ORACLES["window_attribution"],
+    "inc_snapshot_diff": (
+        "WITH v0 AS (SELECT o_orderkey, o_totalprice, o_orderpriority "
+        "FROM orders), "
+        f"v1 AS (SELECT o_orderkey, o_totalprice, "
+        f"CASE WHEN o_orderkey % {DIFF_UPD_MOD} = 0 THEN '0-REWRITTEN' "
+        "ELSE o_orderpriority END AS o_orderpriority FROM orders "
+        f"WHERE o_orderkey % {DIFF_DEL_MOD} <> 0 "
+        f"UNION ALL SELECT o_orderkey + {DIFF_ADD_OFFSET}, o_totalprice, "
+        f"o_orderpriority FROM orders WHERE o_orderkey % {DIFF_ADD_MOD} = 0) "
+        "SELECT CASE WHEN x.o_orderkey IS NULL THEN 'added' "
+        "WHEN y.o_orderkey IS NULL THEN 'removed' "
+        "WHEN x.o_totalprice = y.o_totalprice "
+        "AND x.o_orderpriority = y.o_orderpriority THEN 'unchanged' "
+        "ELSE 'changed' END AS status, "
+        "CAST(count(*) AS BIGINT) AS n_rows "
+        "FROM v0 x FULL OUTER JOIN v1 y ON x.o_orderkey = y.o_orderkey "
+        "GROUP BY 1"
+    ),
+    "inc_bitemporal_asof": (
+        "WITH v0 AS (SELECT o_orderkey, 0 AS tx, "
+        "CAST(o_orderdate AS DATE) AS valid_from, "
+        "CAST(o_orderdate AS DATE) + 90 AS valid_to, "
+        "o_orderpriority AS prio FROM orders), "
+        "v1 AS (SELECT o_orderkey, 1 AS tx, "
+        "CAST(o_orderdate AS DATE) AS valid_from, "
+        "CAST(o_orderdate AS DATE) + 180 AS valid_to, "
+        "'0-RESTATED' AS prio FROM orders WHERE o_orderkey % 5 = 0), "
+        "bt AS (SELECT * FROM v0 UNION ALL SELECT * FROM v1), "
+        "latest AS (SELECT *, row_number() OVER (PARTITION BY o_orderkey "
+        "ORDER BY tx DESC) AS rn FROM bt "
+        f"WHERE tx <= {BT_TX_PROBE}), "
+        "probe AS (SELECT * FROM latest WHERE rn = 1 "
+        f"AND valid_from <= DATE '{BT_VALID_PROBE}' "
+        f"AND valid_to > DATE '{BT_VALID_PROBE}') "
+        "SELECT prio, CAST(count(*) AS BIGINT) AS n_valid, "
+        "min(o_orderkey) AS min_key, max(o_orderkey) AS max_key "
+        "FROM probe GROUP BY 1"
     ),
 }

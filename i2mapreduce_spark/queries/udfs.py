@@ -174,6 +174,42 @@ def q_udaf_kmv_distinct(spark, sf_dir):
     )
 
 
+def q_udaf_geometric_mean(spark, sf_dir):
+    """Geometric mean per priority as a PANDAS (Arrow) GROUPED-AGG UDAF
+    — the custom-aggregate extension point, exercised with the mean
+    that plain SQL lacks.  Cross-engine determinism: the UDAF sorts the
+    group's values and folds log() SEQUENTIALLY (a numpy .sum would
+    pairwise-reduce in a different order than any SQL fold), and python
+    and DuckDB share the platform libm, so the oracle's ordered
+    list_reduce of ln() reproduces the identical double stream."""
+    import math
+
+    import pandas as pd
+
+    load_tables(spark, sf_dir)
+
+    def gmean(pdf: pd.DataFrame) -> pd.DataFrame:
+        acc = 0.0
+        vals = sorted(float(t) for t in pdf["v"])
+        for x in vals:
+            acc += math.log(x)
+        return pd.DataFrame(
+            {
+                "o_orderpriority": [pdf["o_orderpriority"].iloc[0]],
+                "n": [len(vals)],
+                "geometric_mean": [round(math.exp(acc / len(vals)), 6)],
+            }
+        )
+
+    o = spark.table("orders").select(
+        "o_orderpriority", F.col("o_totalprice").cast("double").alias("v")
+    )
+    return o.groupBy("o_orderpriority").applyInPandas(
+        gmean,
+        schema="o_orderpriority string, n long, geometric_mean double",
+    )
+
+
 QUERIES = {
     "udaf_kmv_distinct": q_udaf_kmv_distinct,
     "udf_python_scalar": q_udf_python_scalar,
@@ -182,6 +218,7 @@ QUERIES = {
     "udaf_weighted_avg": q_udaf_weighted_avg,
     "udtf_split_props": q_udtf_split_props,
     "udtf_python_native": q_udtf_python_native,
+    "udaf_geometric_mean": q_udaf_geometric_mean,
 }
 
 ORACLES = {
@@ -228,5 +265,15 @@ ORACLES = {
         "SELECT event_id, 'k' AS key, "
         "CAST(json_extract_string(props, '$.k') AS INT) AS val FROM events "
         "WHERE props IS NOT NULL"
+    ),
+    "udaf_geometric_mean": (
+        "WITH v AS (SELECT o_orderpriority, "
+        "CAST(o_totalprice AS DOUBLE) AS v FROM orders), "
+        "g AS (SELECT o_orderpriority, count(*) AS n, "
+        "list(v ORDER BY v) AS a FROM v GROUP BY 1) "
+        "SELECT o_orderpriority, CAST(n AS BIGINT) AS n, "
+        "round(exp(list_reduce(list_prepend(0.0, "
+        "list_transform(a, x -> ln(x))), (acc, w) -> acc + w) / n), 6) "
+        "AS geometric_mean FROM g"
     ),
 }

@@ -13,9 +13,13 @@ microseconds (epoch_us) so no float or interval-dialect drift.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Window, functions as F
 
 from ..catalog import load_tables
+from ..operators.ranking import global_running_sum
+from .scalar_fns import FISCAL_ANCHOR
 
 
 def q_window_topk_per_group(spark, sf_dir):
@@ -742,6 +746,2140 @@ def q_window_rolling_corr(spark, sf_dir):
     )
 
 
+# =================================================================
+# Group W — TA windows
+# =================================================================
+
+#: Donchian channel lookback (days)
+DONCH_N = 20
+
+
+def q_window_donchian(spark, sf_dir):
+    """Donchian channel breakouts over the daily-revenue series: 20-day
+    rolling high/low of the PRIOR window (frame excludes the current
+    row, as the breakout definition requires) and each day classified
+    breakout_high / breakout_low / inside.  Unlike Bollinger this is
+    min/max arithmetic — exact at any scale, no float discipline needed
+    beyond the final double cast.  Pre-aggregated to the bounded day
+    grain before the ordered window (the percent_of_total pattern)."""
+    load_tables(spark, sf_dir)
+    o = spark.table("orders")
+    daily = o.groupBy(
+        F.date_format("o_orderdate", "yyyy-MM-dd").alias("day")
+    ).agg(F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("rev"))
+    w = Window.orderBy("day").rowsBetween(-DONCH_N, -1)
+    framed = daily.select(
+        "day",
+        "rev",
+        F.count(F.lit(1)).over(w).alias("n"),
+        F.max("rev").over(w).alias("hi"),
+        F.min("rev").over(w).alias("lo"),
+    ).filter(F.col("n") == DONCH_N)
+    return framed.select(
+        "day",
+        F.col("rev").cast("double").alias("revenue"),
+        F.col("hi").cast("double").alias("upper"),
+        F.col("lo").cast("double").alias("lower"),
+        F.when(F.col("rev") > F.col("hi"), "breakout_high")
+        .when(F.col("rev") < F.col("lo"), "breakout_low")
+        .otherwise("inside")
+        .alias("signal"),
+    )
+
+
+def q_window_vwap(spark, sf_dir):
+    """Cumulative VWAP (volume-weighted average price) over the ship-day
+    axis, per return flag: cum(Σ price·qty)/cum(Σ qty) with both
+    cumulative sums exact integer CENTS (day-grain pre-aggregation,
+    ordered running frames are sequential and engine-identical), plus
+    the day's own avg price and its position vs VWAP.  The execution-
+    quality benchmark of every trading system, over the lineitem fact.
+    Float discipline: both reported 4-dp values round HALF-UP in integer
+    space ((2x+y) div (2y), the RSI trick — p/n quotients land exactly
+    on 4-dp ties, which double-rounding flips per engine), and the
+    above/below/at classification is a cross-multiplied integer
+    comparison (pc·cq vs cpqc·n·100) — no float anywhere."""
+    load_tables(spark, sf_dir)
+    li = spark.table("lineitem")
+    daily = li.groupBy(
+        "l_returnflag", F.date_format("l_shipdate", "yyyy-MM-dd").alias("day")
+    ).agg(
+        F.sum(
+            (
+                F.col("l_extendedprice").cast("decimal(18,2)")
+                * F.col("l_quantity").cast("decimal(9,0)")
+                * 100
+            ).cast("long")
+        ).alias("pqc"),
+        F.sum(F.col("l_quantity").cast("decimal(9,0)").cast("long")).alias("q"),
+        F.sum(
+            (F.col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long")
+        ).alias("pc"),
+        F.count(F.lit(1)).alias("n"),
+    )
+    w = (
+        Window.partitionBy("l_returnflag")
+        .orderBy("day")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    # cumulative price-cent-quantity sums and their x10^4 products run
+    # in DECIMAL(38,0) (r10 extreme-magnitude sweep): cpqc alone passes
+    # 1e19 at 1e6-scaled prices — and at plain sf1000 the lifetime
+    # cumulative would too; the div quotients (4-dp prices) stay small
+    cum = daily.select(
+        "l_returnflag",
+        "day",
+        F.sum(F.col("pqc").cast("decimal(38,0)")).over(w).alias("cpqc"),
+        F.sum("q").over(w).alias("cq"),
+        "pc",
+        "n",
+    )
+    return cum.select(
+        "l_returnflag",
+        "day",
+        # vwap = cpqc/(100*cq); x10^4 half-up in integers
+        (
+            F.expr(
+                "((2 * cpqc * 10000 + 100 * cq) "
+                " - (2 * cpqc * 10000 + 100 * cq) % (2 * 100 * cq)) "
+                "/ (2 * 100 * cq)"
+            )
+            / 10000.0
+        ).alias("vwap"),
+        # day avg = pc/(100*n); x10^4 half-up -> x = pc*100, y = n
+        (
+            F.expr(
+                "((2 * CAST(pc AS DECIMAL(38,0)) * 100 + n) "
+                " - (2 * CAST(pc AS DECIMAL(38,0)) * 100 + n) % (2 * n)) "
+                "/ (2 * n)"
+            )
+            / 10000.0
+        ).alias("day_avg_price"),
+        # pc/(100n) vs cpqc/(100cq)  <=>  pc*cq vs cpqc*n
+        F.when(
+            F.col("pc").cast("decimal(38,0)") * F.col("cq")
+            > F.col("cpqc") * F.col("n"),
+            "above",
+        )
+        .when(
+            F.col("pc").cast("decimal(38,0)") * F.col("cq")
+            < F.col("cpqc") * F.col("n"),
+            "below",
+        )
+        .otherwise("at")
+        .alias("vs_vwap"),
+    )
+
+
+# =================================================================
+# Group W — MACD
+# =================================================================
+
+#: EMA spans (days) and the truncation horizon (the residual weight of
+#: data past 64 steps is ~3e-5 of the signal for the fastest span; the
+#: truncation bounds per-row work at any SF and both engines compute the
+#: IDENTICAL truncated definition).
+MACD_FAST, MACD_SLOW, MACD_SIGNAL = 12, 26, 9
+MACD_TRUNC = 64
+#: shift applied before the signal fold so every accumulator stays
+#: positive (macd cents go negative; Spark's `div` truncates while
+#: DuckDB's `//` floors — they agree only on non-negatives).  Fixed-
+#: point EMA is EXACTLY shift-invariant: (s+1)·C divides out of the
+#: half-up quotient, so the offset subtracts back out losslessly.
+MACD_OFFSET = 10 ** 12
+
+
+def _ema_fix(list_col: str, span: int, dialect: str) -> str:
+    """Fixed-point integer-cents EMA as a LEFT fold, seeded with the
+    first element: acc' = round_half_up((2·x + (s−1)·acc) / (s+1)) with
+    the half-up quotient in pure integers ((2v+d) div 2d).  Float EMA
+    folds are NOT reproducible across engines (measured: DuckDB's
+    vectorized lambda contracts the multiply-add, drifting ~1 ulp/step
+    vs Spark/python), so this key defines the indicator in exact
+    fixed-point — deterministic everywhere by construction."""
+    s1 = span + 1
+    body = f"(2 * (2 * x + {span - 1} * acc) + {s1})"
+    if dialect == "spark":
+        return (
+            f"aggregate(slice({list_col}, 2, size({list_col}) - 1), "
+            f"element_at({list_col}, 1), "
+            f"(acc, x) -> {body} div {2 * s1})"
+        )
+    return (
+        f"list_reduce({list_col}, (acc, x) -> {body} // {2 * s1})"
+    )
+
+
+def q_window_macd(spark, sf_dir):
+    """MACD(12,26,9) over the daily-revenue series in FIXED-POINT integer
+    cents: fast/slow EMAs as half-up integer folds over the trailing-64-
+    day ordered frame list, signal = EMA-9 of the (offset-shifted) MACD
+    cents, histogram = macd − signal, standard cross classification.
+    Day-grain pre-aggregation bounds the window input by the SPAN at any
+    SF, and every arithmetic step is integer-exact cross-engine (see
+    _ema_fix: float EMA folds drift per-engine)."""
+    load_tables(spark, sf_dir)
+    # complete-case: a day whose orders all lack a price is a gap in the
+    # series, same as a day with no orders (and collect_list skips NULLs
+    # where DuckDB's list() keeps them — the series must not carry NULL)
+    o = spark.table("orders").filter(F.col("o_totalprice").isNotNull())
+    daily = o.groupBy(
+        F.date_format("o_orderdate", "yyyy-MM-dd").alias("day")
+    ).agg(
+        F.sum(
+            (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
+        ).alias("cents")
+    )
+    w = Window.orderBy("day").rowsBetween(-(MACD_TRUNC - 1), 0)
+    framed = daily.select(
+        "day",
+        F.count(F.lit(1)).over(w).alias("n"),
+        F.collect_list("cents").over(w).alias("xs"),
+    ).filter(F.col("n") == MACD_TRUNC)
+    lined = framed.select(
+        "day",
+        (
+            F.expr(_ema_fix("xs", MACD_FAST, "spark"))
+            - F.expr(_ema_fix("xs", MACD_SLOW, "spark"))
+        ).alias("mc"),
+    )
+    w2 = Window.orderBy("day").rowsBetween(-(MACD_TRUNC - 1), 0)
+    sig = lined.select(
+        "day",
+        "mc",
+        F.count(F.lit(1)).over(w2).alias("n2"),
+        F.collect_list(F.col("mc") + MACD_OFFSET).over(w2).alias("ms"),
+    ).filter(F.col("n2") == MACD_TRUNC)
+    sc = F.expr(_ema_fix("ms", MACD_SIGNAL, "spark")) - MACD_OFFSET
+    return sig.select(
+        "day",
+        (F.col("mc") / 100.0).alias("macd"),
+        (sc / 100.0).alias("signal"),
+        ((F.col("mc") - sc) / 100.0).alias("hist"),
+        F.when(F.col("mc") > sc, "bullish")
+        .when(F.col("mc") < sc, "bearish")
+        .otherwise("cross")
+        .alias("stance"),
+    )
+
+
+# =================================================================
+# Group W — accumulation / volatility windows
+# =================================================================
+STOCH_N = 14   #: %K lookback (days)
+STOCH_D = 3    #: %D smoothing (days)
+ATR_N = 14     #: ATR smoothing (days)
+
+
+def _daily_cents_vol(spark):
+    """Order-date grain: revenue in exact integer cents + order count."""
+    o = spark.table("orders")
+    return o.groupBy(
+        F.date_format("o_orderdate", "yyyy-MM-dd").alias("day")
+    ).agg(
+        F.sum(
+            (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
+        ).alias("cents"),
+        F.count(F.lit(1)).alias("vol"),
+    )
+
+
+def q_window_obv(spark, sf_dir):
+    """On-balance volume over the daily order series: OBV accumulates
+    the day's order count with the SIGN of the day-over-day revenue
+    change (up-day adds volume, down-day subtracts, flat adds nothing;
+    day 1 contributes nothing by convention).  The classic
+    volume-confirms-price indicator — and a pure-integer pipeline: lag,
+    sign, signed volume, running sum, no float anywhere until the
+    revenue display cast."""
+    load_tables(spark, sf_dir)
+    daily = _daily_cents_vol(spark)
+    w = Window.orderBy("day")
+    lagged = daily.select(
+        "day",
+        "cents",
+        "vol",
+        F.lag("cents").over(w).alias("prev"),
+    )
+    signed = lagged.select(
+        "day",
+        "cents",
+        "vol",
+        F.when(F.col("prev").isNull(), F.lit(0))
+        .when(F.col("cents") > F.col("prev"), F.col("vol"))
+        .when(F.col("cents") < F.col("prev"), -F.col("vol"))
+        .otherwise(F.lit(0))
+        .alias("signed_vol"),
+    )
+    wc = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
+    return signed.select(
+        "day",
+        (F.col("cents") / 100.0).alias("revenue"),
+        "vol",
+        F.sum("signed_vol").over(wc).alias("obv"),
+    )
+
+
+def q_window_stochastic(spark, sf_dir):
+    """Stochastic oscillator %K/%D over daily revenue: %K locates today's
+    close inside the 14-day high-low range, %D is its 3-day SMA, zones
+    classify overbought (>80) / oversold (<20).  Both percentages live
+    as HALF-UP PER-MILLE INTEGERS — k_pm = (2000·(c−lo) + (hi−lo)) div
+    (2·(hi−lo)) and d_pm = (2·Σk + 3) div 6 — because a float
+    (c−lo)/(hi−lo) can land exactly on a rounding tie and flip per
+    engine; all operands here are non-negative so Spark `div` and
+    DuckDB `//` agree.  Degenerate flat ranges (hi = lo) pin %K at 500
+    by convention."""
+    load_tables(spark, sf_dir)
+    daily = _daily_cents_vol(spark)
+    w = Window.orderBy("day").rowsBetween(-(STOCH_N - 1), 0)
+    framed = daily.select(
+        "day",
+        "cents",
+        F.count(F.lit(1)).over(w).alias("n"),
+        F.max("cents").over(w).alias("hi"),
+        F.min("cents").over(w).alias("lo"),
+    ).filter(F.col("n") == STOCH_N)
+    rng = F.col("hi") - F.col("lo")
+    k_pm = F.when(rng == 0, F.lit(500)).otherwise(
+        F.expr("(2000 * (cents - lo) + (hi - lo)) div (2 * (hi - lo))")
+    )
+    kd = framed.select("day", k_pm.alias("k_pm"))
+    w2 = Window.orderBy("day").rowsBetween(-(STOCH_D - 1), 0)
+    smoothed = kd.select(
+        "day",
+        "k_pm",
+        F.count(F.lit(1)).over(w2).alias("n2"),
+        F.sum("k_pm").over(w2).alias("ks"),
+    ).filter(F.col("n2") == STOCH_D)
+    d_pm = F.expr(f"(2 * ks + {STOCH_D}) div {2 * STOCH_D}")
+    return smoothed.select(
+        "day",
+        (F.col("k_pm") / 10.0).alias("k_pct"),
+        (d_pm / 10.0).alias("d_pct"),
+        F.when(F.col("k_pm") > 800, "overbought")
+        .when(F.col("k_pm") < 200, "oversold")
+        .otherwise("neutral")
+        .alias("zone"),
+    )
+
+
+def q_window_atr(spark, sf_dir):
+    """Average True Range over daily OHLC bars of the event-value
+    stream: TR = greatest(h−l, |h−prev_close|, |l−prev_close|) (first
+    day falls back to h−l), ATR = 14-day half-up SMA of TR — the
+    volatility yardstick behind position sizing.  OHLC comes from the
+    ranked-window pick pattern (never a float sum): open/close are the
+    first/last value in (ts, event_id) order, extremes are min/max;
+    values are exact 2-dp so integer cents are lossless.  All TR/ATR
+    arithmetic is integer; the one `div` has non-negative operands."""
+    load_tables(spark, sf_dir)
+    e = spark.table("events").select(
+        "event_id",
+        "ts",
+        F.date_format("ts", "yyyy-MM-dd").alias("day"),
+        (F.col("value").cast("decimal(18,2)") * 100).cast("long").alias("cents"),
+    )
+    wa = Window.partitionBy("day").orderBy("ts", "event_id")
+    wd = Window.partitionBy("day").orderBy(
+        F.col("ts").desc(), F.col("event_id").desc()
+    )
+    r = e.withColumn("rn_a", F.row_number().over(wa)).withColumn(
+        "rn_d", F.row_number().over(wd)
+    )
+    bars = r.groupBy("day").agg(
+        F.max(F.when(F.col("rn_a") == 1, F.col("cents"))).alias("open_c"),
+        F.max("cents").alias("high_c"),
+        F.min("cents").alias("low_c"),
+        F.max(F.when(F.col("rn_d") == 1, F.col("cents"))).alias("close_c"),
+    )
+    w = Window.orderBy("day")
+    pc = F.lag("close_c").over(w)
+    tr = F.when(
+        pc.isNull(), F.col("high_c") - F.col("low_c")
+    ).otherwise(
+        F.greatest(
+            F.col("high_c") - F.col("low_c"),
+            F.abs(F.col("high_c") - pc),
+            F.abs(F.col("low_c") - pc),
+        )
+    )
+    trd = bars.select("day", "close_c", tr.alias("tr_c"))
+    wn = Window.orderBy("day").rowsBetween(-(ATR_N - 1), 0)
+    framed = trd.select(
+        "day",
+        "close_c",
+        "tr_c",
+        F.count(F.lit(1)).over(wn).alias("n"),
+        F.sum("tr_c").over(wn).alias("trs"),
+    ).filter(F.col("n") == ATR_N)
+    atr_c = F.expr(f"(2 * trs + {ATR_N}) div {2 * ATR_N}")
+    return framed.select(
+        "day",
+        (F.col("close_c") / 100.0).alias("close_v"),
+        (F.col("tr_c") / 100.0).alias("true_range"),
+        (atr_c / 100.0).alias("atr"),
+    )
+
+
+AROON_N = 25  #: Aroon lookback (100/25 = 4 keeps the pct exact-integer)
+
+
+def q_window_aroon(spark, sf_dir):
+    """Aroon up/down over the daily-revenue series: the AGE of the
+    25-day high/low, aroon = 100·(N − days_since_extreme)/N — with
+    N = 25 the percentage is the exact integer 4·(25 − age).  Extreme
+    position = FIRST occurrence inside the ordered frame (both engines'
+    array_position/list_position return the first match, so ties are
+    deterministic and take the OLDEST day — the conservative age).
+    Day-grain pre-aggregation bounds the frame input at any SF."""
+    load_tables(spark, sf_dir)
+    # complete-case: a day whose orders all lack a price is a series gap,
+    # same as a day with no orders (collect_list would skip the NULL
+    # where DuckDB's list() keeps it)
+    o = spark.table("orders").filter(F.col("o_totalprice").isNotNull())
+    daily = o.groupBy(
+        F.date_format("o_orderdate", "yyyy-MM-dd").alias("day")
+    ).agg(
+        F.sum(
+            (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
+        ).alias("cents")
+    )
+    w = Window.orderBy("day").rowsBetween(-(AROON_N - 1), 0)
+    framed = daily.select(
+        "day",
+        F.count(F.lit(1)).over(w).alias("n"),
+        F.collect_list("cents").over(w).alias("xs"),
+    ).filter(F.col("n") == AROON_N)
+    # position is 1-based; the last element is the current day, so
+    # days_since = N - position
+    ds_hi = AROON_N - F.expr("array_position(xs, array_max(xs))")
+    ds_lo = AROON_N - F.expr("array_position(xs, array_min(xs))")
+    up = 4 * (AROON_N - ds_hi)
+    dn = 4 * (AROON_N - ds_lo)
+    return framed.select(
+        "day",
+        up.cast("long").alias("aroon_up"),
+        dn.cast("long").alias("aroon_down"),
+        F.when(up - dn > 50, "uptrend")
+        .when(dn - up > 50, "downtrend")
+        .otherwise("ranging")
+        .alias("trend"),
+    )
+
+
+def q_window_pivot_points(spark, sf_dir):
+    """Floor-trader pivot points from the PRIOR day's OHLC bar of the
+    event-value stream: P = (H+L+C)/3 (half-up integer cents), R1 =
+    2P−L, S1 = 2P−H, R2 = P+(H−L), S2 = P−(H−L), and today's close
+    classified against the pivot by integer comparison.  OHLC via the
+    ranked-window pick pattern (no float sums anywhere)."""
+    load_tables(spark, sf_dir)
+    e = spark.table("events").select(
+        "event_id",
+        "ts",
+        F.date_format("ts", "yyyy-MM-dd").alias("day"),
+        (F.col("value").cast("decimal(18,2)") * 100).cast("long").alias("cents"),
+    )
+    wd = Window.partitionBy("day").orderBy(
+        F.col("ts").desc(), F.col("event_id").desc()
+    )
+    r = e.withColumn("rn_d", F.row_number().over(wd))
+    bars = r.groupBy("day").agg(
+        F.max("cents").alias("h"),
+        F.min("cents").alias("l"),
+        F.max(F.when(F.col("rn_d") == 1, F.col("cents"))).alias("c"),
+    )
+    w = Window.orderBy("day")
+    prior = bars.select(
+        "day",
+        "c",
+        F.lag("h").over(w).alias("ph"),
+        F.lag("l").over(w).alias("pl"),
+        F.lag("c").over(w).alias("pc"),
+    ).filter(F.col("ph").isNotNull())
+    p = F.expr("(2 * (ph + pl + pc) + 3) div 6")  # half-up /3 in cents
+    return prior.select(
+        "day",
+        (F.col("c") / 100.0).alias("close_v"),
+        (p / 100.0).alias("pivot"),
+        ((2 * p - F.col("pl")) / 100.0).alias("r1"),
+        ((2 * p - F.col("ph")) / 100.0).alias("s1"),
+        ((p + F.col("ph") - F.col("pl")) / 100.0).alias("r2"),
+        ((p - F.col("ph") + F.col("pl")) / 100.0).alias("s2"),
+        F.when(F.col("c") > p, "above").when(F.col("c") < p, "below")
+        .otherwise("at").alias("vs_pivot"),
+    )
+
+
+KELT_EMA = 20    #: middle-line EMA span (days)
+KELT_ATR = 10    #: band ATR lookback (days)
+KELT_TRUNC = 64  #: EMA truncation horizon (residual weight ~1e-6)
+
+
+def q_window_keltner(spark, sf_dir):
+    """Keltner channels over ship-day OHLC bars of lineitem prices:
+    middle = EMA-20 of the close (FIXED-POINT half-up integer fold — the
+    MACD discipline: float EMA folds drift per engine), upper/lower =
+    middle ± 2·ATR-10 (integer true range, half-up SMA), close position
+    classified by integer comparison.  OHLC picks use the ranked-window
+    pattern; day-grain pre-aggregation bounds every ordered frame at
+    any SF (ship-day calendar is ~2.5k days at every scale factor)."""
+    load_tables(spark, sf_dir)
+    li = spark.table("lineitem").select(
+        F.col("l_orderkey").alias("ok"),
+        F.col("l_linenumber").alias("ln"),
+        F.date_format("l_shipdate", "yyyy-MM-dd").alias("day"),
+        (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
+        .cast("long")
+        .alias("cents"),
+    )
+    wd = Window.partitionBy("day").orderBy(
+        F.col("ok").desc(), F.col("ln").desc()
+    )
+    r = li.withColumn("rn_d", F.row_number().over(wd))
+    bars = r.groupBy("day").agg(
+        F.max("cents").alias("h"),
+        F.min("cents").alias("l"),
+        F.max(F.when(F.col("rn_d") == 1, F.col("cents"))).alias("c"),
+    )
+    w = Window.orderBy("day")
+    pc = F.lag("c").over(w)
+    tr = F.when(pc.isNull(), F.col("h") - F.col("l")).otherwise(
+        F.greatest(
+            F.col("h") - F.col("l"),
+            F.abs(F.col("h") - pc),
+            F.abs(F.col("l") - pc),
+        )
+    )
+    trd = bars.select("day", "c", tr.alias("tr_c"))
+    we = Window.orderBy("day").rowsBetween(-(KELT_TRUNC - 1), 0)
+    wa = Window.orderBy("day").rowsBetween(-(KELT_ATR - 1), 0)
+    framed = trd.select(
+        "day",
+        "c",
+        F.count(F.lit(1)).over(we).alias("n"),
+        F.collect_list("c").over(we).alias("cs"),
+        F.count(F.lit(1)).over(wa).alias("na"),
+        F.sum("tr_c").over(wa).alias("trs"),
+    ).filter(F.col("n") == KELT_TRUNC)
+    mid = F.expr(_ema_fix("cs", KELT_EMA, "spark"))
+    atr = F.expr(f"(2 * trs + {KELT_ATR}) div {2 * KELT_ATR}")
+    return framed.select(
+        "day",
+        (F.col("c") / 100.0).alias("close_v"),
+        (mid / 100.0).alias("middle"),
+        ((mid + 2 * atr) / 100.0).alias("upper"),
+        ((mid - 2 * atr) / 100.0).alias("lower"),
+        F.when(F.col("c") > mid + 2 * atr, "above_band")
+        .when(F.col("c") < mid - 2 * atr, "below_band")
+        .otherwise("inside")
+        .alias("position"),
+    )
+
+
+ATTR_WINDOW_H = 24  #: attribution lookback (hours)
+
+
+def q_window_attribution(spark, sf_dir):
+    """Last-touch attribution: each purchase attributes to the user's
+    most recent click within the prior 24 h, rolled up per day —
+    purchases, attributed purchases, attributed revenue (exact cents)
+    and the half-up per-mille attachment rate.  The carry-forward
+    'latest click ts' is ONE per-user ordered window (max of a CASE
+    over unbounded-preceding rows — no self-join, no range explosion);
+    the 24 h test is a timestamp+interval comparison (NTZ-safe in both
+    engines; exact µs semantics).  The standard
+    conversion-credit query of every event pipeline."""
+    load_tables(spark, sf_dir)
+    e = spark.table("events").select(
+        "user_id",
+        "event_id",
+        "event_type",
+        "ts",
+        (F.col("value").cast("decimal(18,2)") * 100).cast("long").alias("cents"),
+    )
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy("ts", "event_id")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    last_click = F.max(
+        F.when(F.col("event_type") == "click", F.col("ts"))
+    ).over(w)
+    marked = e.withColumn("last_click_ts", last_click).filter(
+        F.col("event_type") == "purchase"
+    )
+    attributed = F.col("last_click_ts").isNotNull() & F.expr(
+        f"ts <= last_click_ts + INTERVAL {ATTR_WINDOW_H} HOURS"
+    )
+    daily = marked.groupBy(
+        F.date_format("ts", "yyyy-MM-dd").alias("day")
+    ).agg(
+        F.count(F.lit(1)).alias("n_purchases"),
+        F.sum(attributed.cast("long")).alias("n_attributed"),
+        F.sum(F.when(attributed, F.col("cents")).otherwise(0)).alias("ac"),
+    )
+    return daily.select(
+        "day",
+        "n_purchases",
+        "n_attributed",
+        (F.col("ac") / 100.0).alias("attributed_revenue"),
+        F.expr(
+            "(2000 * n_attributed + n_purchases) div (2 * n_purchases)"
+        ).alias("attach_pm"),
+    )
+
+
+#: Ichimoku horizons (days) — tenkan/kijun/senkou-B lookbacks and the
+#: cloud displacement
+ICHI_TENKAN = 9
+ICHI_KIJUN = 26
+ICHI_SENKOU = 52
+
+
+# =================================================================
+# Group W — Ichimoku cloud (multi-horizon midpoint channels)
+# =================================================================
+def q_window_ichimoku(spark, sf_dir):
+    """Ichimoku Kinko Hyo over ship-day bars of lineitem prices: tenkan
+    (9-day midpoint), kijun (26-day midpoint), senkou A (midpoint of
+    tenkan/kijun displaced 26 days forward), senkou B (52-day midpoint
+    displaced 26 forward), chikou (close displaced 26 back), and the
+    price-vs-cloud classification.  Completes the TA family with the
+    one indicator built from MULTI-HORIZON channel midpoints plus
+    lead/lag displacement.
+
+    Every midpoint is a half-up integer-cents quotient ((h+l+1) div 2 on
+    nonneg cents); day-grain pre-aggregation bounds all five ordered
+    frames at any SF (ship-day calendar ≈ 2.5k days at every scale)."""
+    load_tables(spark, sf_dir)
+    li = spark.table("lineitem").select(
+        F.col("l_orderkey").alias("ok"),
+        F.col("l_linenumber").alias("ln"),
+        F.date_format("l_shipdate", "yyyy-MM-dd").alias("day"),
+        (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
+        .cast("long")
+        .alias("cents"),
+    )
+    wd = Window.partitionBy("day").orderBy(F.col("ok").desc(), F.col("ln").desc())
+    r = li.withColumn("rn_d", F.row_number().over(wd))
+    bars = r.groupBy("day").agg(
+        F.max("cents").alias("h"),
+        F.min("cents").alias("l"),
+        F.max(F.when(F.col("rn_d") == 1, F.col("cents"))).alias("c"),
+    )
+    w = Window.orderBy("day")
+
+    def chan(n):
+        f = w.rowsBetween(-(n - 1), 0)
+        return F.max("h").over(f), F.min("l").over(f), F.count(F.lit(1)).over(f)
+
+    h9, l9, n9 = chan(ICHI_TENKAN)
+    h26, l26, n26 = chan(ICHI_KIJUN)
+    h52, l52, n52 = chan(ICHI_SENKOU)
+    lined = bars.select(
+        "day",
+        "c",
+        ((h9 + l9 + 1).cast("long")).alias("t2"),
+        ((h26 + l26 + 1).cast("long")).alias("k2"),
+        ((h52 + l52 + 1).cast("long")).alias("b2"),
+        n52.alias("n52"),
+    ).filter(F.col("n52") == ICHI_SENKOU)
+    lined = lined.select(
+        "day",
+        "c",
+        F.expr("t2 div 2").alias("tenkan_c"),
+        F.expr("k2 div 2").alias("kijun_c"),
+        F.expr("b2 div 2").alias("senkoub_c"),
+    )
+    w2 = Window.orderBy("day")
+    disp = lined.select(
+        "day",
+        "c",
+        "tenkan_c",
+        "kijun_c",
+        # senkou spans: values computed 26 days AGO project onto today
+        F.lag(
+            F.expr("(tenkan_c + kijun_c + 1) div 2"), ICHI_KIJUN
+        ).over(w2).alias("senkou_a_c"),
+        F.lag("senkoub_c", ICHI_KIJUN).over(w2).alias("senkou_b_c"),
+        # chikou: today's close plotted 26 back == close from 26 ahead
+        F.lead("c", ICHI_KIJUN).over(w2).alias("chikou_c"),
+    ).filter(F.col("senkou_a_c").isNotNull())
+    top = F.greatest("senkou_a_c", "senkou_b_c")
+    bot = F.least("senkou_a_c", "senkou_b_c")
+    return disp.select(
+        "day",
+        (F.col("c") / 100.0).alias("close_v"),
+        (F.col("tenkan_c") / 100.0).alias("tenkan"),
+        (F.col("kijun_c") / 100.0).alias("kijun"),
+        (F.col("senkou_a_c") / 100.0).alias("senkou_a"),
+        (F.col("senkou_b_c") / 100.0).alias("senkou_b"),
+        (F.col("chikou_c") / 100.0).alias("chikou"),
+        F.when(F.col("c") > top, "above_cloud")
+        .when(F.col("c") < bot, "below_cloud")
+        .otherwise("in_cloud")
+        .alias("position"),
+    )
+
+
+# =================================================================
+# Group W — ADX / directional movement (triple parallel Wilder fold)
+# =================================================================
+ADX_N = 14       #: Wilder smoothing span
+ADX_TRUNC = 64   #: fold horizon (days)
+
+
+def _wilder(s: str, x: str, dialect: str) -> str:
+    """One Wilder smoothing step s' = s - s/n + x with the s/n quotient
+    half-up in pure integers — inputs are nonnegative by construction
+    (running sums of nonnegative DM/TR), so the unsigned form suffices."""
+    d = "div" if dialect == "spark" else "//"
+    return f"(({s}) - ((2 * ({s}) + {ADX_N}) {d} {2 * ADX_N}) + ({x}))"
+
+
+def _wilder_fold3(list_col: str, dialect: str) -> str:
+    """Fold a list of (p, m, t) structs through THREE parallel Wilder
+    smoothings (plus-DM, minus-DM, true range), seeded with the first
+    element — one pass, one accumulator."""
+    if dialect == "spark":
+        return (
+            f"aggregate(slice({list_col}, 2, size({list_col}) - 1), "
+            f"element_at({list_col}, 1), "
+            "(acc, x) -> named_struct("
+            f"'p', {_wilder('acc.p', 'x.p', 'spark')}, "
+            f"'m', {_wilder('acc.m', 'x.m', 'spark')}, "
+            f"'t', {_wilder('acc.t', 'x.t', 'spark')}))"
+        )
+    return (
+        f"list_reduce({list_col}, (acc, x) -> {{"
+        f"'p': {_wilder('acc.p', 'x.p', 'duckdb')}, "
+        f"'m': {_wilder('acc.m', 'x.m', 'duckdb')}, "
+        f"'t': {_wilder('acc.t', 'x.t', 'duckdb')}}})"
+    )
+
+
+def _wilder_fold1(list_col: str, dialect: str) -> str:
+    """Scalar Wilder fold (for the second smoothing pass over DX)."""
+    if dialect == "spark":
+        return (
+            f"aggregate(slice({list_col}, 2, size({list_col}) - 1), "
+            f"element_at({list_col}, 1), "
+            f"(acc, x) -> {_wilder('acc', 'x', 'spark')})"
+        )
+    return (
+        f"list_reduce({list_col}, "
+        f"(acc, x) -> {_wilder('acc', 'x', 'duckdb')})"
+    )
+
+
+def q_window_adx(spark, sf_dir):
+    """ADX(14) directional-movement system over ship-day bars of
+    lineitem prices: +DM/−DM/TR per day from the bar-to-bar moves, three
+    PARALLEL Wilder smoothings as ONE struct-accumulator fold, DI+/DI−
+    as half-up x10^4 integer ratios, DX from the DI pair, and ADX as a
+    second Wilder fold over the DX series — trend-strength measurement,
+    the one classic indicator whose state is a VECTOR (the repo's other
+    folds smooth scalars).
+
+    Every arithmetic step is integer-exact cross-engine; both fold
+    passes run over day-grain trailing frames bounded by ADX_TRUNC at
+    any SF.  Seeding is EMA-style (first frame element) rather than
+    Wilder's textbook first-n sum — documented variant, chosen so both
+    fold passes share one uniform shape."""
+    load_tables(spark, sf_dir)
+    li = spark.table("lineitem").select(
+        F.col("l_orderkey").alias("ok"),
+        F.col("l_linenumber").alias("ln"),
+        F.date_format("l_shipdate", "yyyy-MM-dd").alias("day"),
+        (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
+        .cast("long")
+        .alias("cents"),
+    )
+    wd = Window.partitionBy("day").orderBy(F.col("ok").desc(), F.col("ln").desc())
+    r = li.withColumn("rn_d", F.row_number().over(wd))
+    bars = r.groupBy("day").agg(
+        F.max("cents").alias("h"),
+        F.min("cents").alias("l"),
+        F.max(F.when(F.col("rn_d") == 1, F.col("cents"))).alias("c"),
+    )
+    w = Window.orderBy("day")
+    ph, pl, pc = F.lag("h").over(w), F.lag("l").over(w), F.lag("c").over(w)
+    up, dn = F.col("h") - ph, pl - F.col("l")
+    dm = bars.select(
+        "day",
+        F.when(ph.isNull() | ~((up > dn) & (up > 0)), F.lit(0))
+        .otherwise(up)
+        .cast("long")
+        .alias("p"),
+        F.when(pl.isNull() | ~((dn > up) & (dn > 0)), F.lit(0))
+        .otherwise(dn)
+        .cast("long")
+        .alias("m"),
+        F.when(pc.isNull(), F.col("h") - F.col("l"))
+        .otherwise(
+            F.greatest(
+                F.col("h") - F.col("l"),
+                F.abs(F.col("h") - pc),
+                F.abs(F.col("l") - pc),
+            )
+        )
+        .cast("long")
+        .alias("t"),
+    )
+    wf = Window.orderBy("day").rowsBetween(-(ADX_TRUNC - 1), 0)
+    framed = dm.select(
+        "day",
+        F.count(F.lit(1)).over(wf).alias("n"),
+        F.collect_list(F.struct("p", "m", "t")).over(wf).alias("arr"),
+    ).filter(F.col("n") == ADX_TRUNC)
+    sm = F.expr(_wilder_fold3("arr", "spark"))
+    di = framed.select(
+        "day",
+        sm["p"].alias("sp"),
+        sm["m"].alias("sm_"),
+        sm["t"].alias("st"),
+    ).filter(F.col("st") > 0)
+    di = di.select(
+        "day",
+        F.expr("(2 * 10000 * sp + st) div (2 * st)").alias("dip"),
+        F.expr("(2 * 10000 * sm_ + st) div (2 * st)").alias("dim"),
+    ).filter(F.col("dip") + F.col("dim") > 0)
+    dx = di.select(
+        "day",
+        "dip",
+        "dim",
+        F.expr(
+            "(2 * 10000 * abs(dip - dim) + (dip + dim)) div (2 * (dip + dim))"
+        ).alias("dx"),
+    )
+    wf2 = Window.orderBy("day").rowsBetween(-(ADX_TRUNC - 1), 0)
+    framed2 = dx.select(
+        "day",
+        "dip",
+        "dim",
+        "dx",
+        F.count(F.lit(1)).over(wf2).alias("n2"),
+        F.collect_list("dx").over(wf2).alias("dxs"),
+    ).filter(F.col("n2") == ADX_TRUNC)
+    adx = F.expr(_wilder_fold1("dxs", "spark"))
+    return framed2.select(
+        "day",
+        (F.col("dip") / 100.0).alias("di_plus"),
+        (F.col("dim") / 100.0).alias("di_minus"),
+        (F.col("dx") / 100.0).alias("dx_v"),
+        (adx / 100.0).alias("adx"),
+    )
+
+
+# =================================================================
+# Group W — Parabolic SAR (nonlinear 4-field state machine)
+# =================================================================
+SAR_AF0 = 2    #: initial/post-flip acceleration (x0.01)
+SAR_AFS = 2    #: acceleration step on a new extreme (x0.01)
+SAR_AFM = 20   #: acceleration cap (x0.01)
+
+
+def _sar_step(t: str, sar: str, ep: str, af: str, h: str, l: str,
+              dialect: str) -> dict[str, str]:
+    """One Parabolic SAR transition as four field expressions over the
+    previous state (t=trend ±1, sar, ep, af x0.01 — all exact integer
+    cents) and the day's bar (h, l).  The raw stop
+    sar + af·(ep−sar)/100 uses the signed half-up integer quotient; the
+    flip test and extreme updates are pure integer comparisons, so the
+    machine is deterministic on any engine.  Variant notes (documented,
+    both sides identical): seed long with sar=low₁/ep=high₁, no
+    prior-low clamp."""
+    d = "div" if dialect == "spark" else "//"
+    v = f"({af} * ({ep} - {sar}))"
+    raw = (
+        f"({sar} + (CASE WHEN {v} < 0 THEN -((2 * -{v} + 100) {d} 200) "
+        f"ELSE (2 * {v} + 100) {d} 200 END))"
+    )
+    flip = f"(({t} = 1 AND {l} < {raw}) OR ({t} = -1 AND {h} > {raw}))"
+    new_ext = f"(({t} = 1 AND {h} > {ep}) OR ({t} = -1 AND {l} < {ep}))"
+    return {
+        "t": f"(CASE WHEN {flip} THEN -{t} ELSE {t} END)",
+        "sar": f"(CASE WHEN {flip} THEN {ep} ELSE {raw} END)",
+        "ep": (
+            f"(CASE WHEN {t} = 1 AND {l} < {raw} THEN {l} "
+            f"WHEN {t} = -1 AND {h} > {raw} THEN {h} "
+            f"WHEN {t} = 1 AND {h} > {ep} THEN {h} "
+            f"WHEN {t} = -1 AND {l} < {ep} THEN {l} ELSE {ep} END)"
+        ),
+        "af": (
+            f"(CASE WHEN {flip} THEN {SAR_AF0} "
+            f"WHEN {new_ext} THEN least({af} + {SAR_AFS}, {SAR_AFM}) "
+            f"ELSE {af} END)"
+        ),
+    }
+
+
+def q_window_parabolic_sar(spark, sf_dir):
+    """Parabolic SAR over ship-day bars of lineitem prices — the
+    trend-following stop-and-reverse system, and the one classic
+    indicator that is a genuine nonlinear STATE MACHINE (trend flips,
+    accelerating stop, extreme-point memory) rather than a smoothing:
+    state (trend, sar, ep, af) evolves from the series start; outputs
+    the stop level, trend and acceleration per day.
+
+    Exactness: the whole machine is integer cents + the signed half-up
+    quotient for af·(ep−sar)/100 — no float enters any branch decision.
+    Spark folds the day-prefix per row (O(days²) integer steps, bounded
+    by the ship calendar at any SF); the DuckDB oracle walks the same
+    transitions with a RECURSIVE CTE over the MATERIALIZED day series
+    (the ts_holt_linear lessons).  Python replay in pytest pins both."""
+    load_tables(spark, sf_dir)
+    li = spark.table("lineitem").select(
+        F.date_format("l_shipdate", "yyyy-MM-dd").alias("day"),
+        (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
+        .cast("long")
+        .alias("cents"),
+    )
+    bars = li.groupBy("day").agg(
+        F.max("cents").alias("h"), F.min("cents").alias("l")
+    )
+    from pyspark.sql import Window as W
+
+    wf = W.orderBy("day").rowsBetween(W.unboundedPreceding, 0)
+    framed = bars.select(
+        "day",
+        F.collect_list(F.struct("h", "l")).over(wf).alias("arr"),
+    )
+    s = _sar_step("acc.t", "acc.sar", "acc.ep", "acc.af", "x.h", "x.l",
+                  "spark")
+    fold = (
+        "aggregate(slice(arr, 2, size(arr) - 1), "
+        "named_struct('t', 1L, 'sar', element_at(arr, 1).l, "
+        f"'ep', element_at(arr, 1).h, 'af', cast({SAR_AF0} as bigint)), "
+        f"(acc, x) -> named_struct('t', cast({s['t']} as bigint), "
+        f"'sar', {s['sar']}, 'ep', {s['ep']}, "
+        f"'af', cast({s['af']} as bigint)))"
+    )
+    st = F.expr(fold)
+    return framed.select(
+        "day",
+        st["t"].alias("trend"),
+        (st["sar"] / 100.0).alias("sar"),
+        (st["ep"] / 100.0).alias("ep"),
+        st["af"].alias("af_x100"),
+    )
+
+
+_SAR_D = _sar_step("w.t", "w.sar", "w.ep", "w.af", "n.h", "n.l", "duckdb")
+
+
+#: candle-pattern thresholds (per-mille of the bar's total range)
+DOJI_BODY_PM = 100      # body <= 10% of range -> doji
+
+
+def _ha_step(o: str, c: str, h: str, l: str, nh: str, nl: str, no: str,
+             nc: str, dialect: str) -> dict[str, str]:
+    """One Heikin-Ashi transition: ha_close = (o+h+l+c)/4 of the RAW
+    bar, ha_open = (prev ha_open + prev ha_close)/2 — the recursion —
+    ha_high/low = extremes vs the smoothed open/close.  All half-up
+    integer-cents quotients; `o..l` are the PREVIOUS HA state fields,
+    `nh..nc` the next RAW bar."""
+    d = "div" if dialect == "spark" else "//"
+    ho = f"(({o} + {c} + 1) {d} 2)"
+    hc = f"(({no} + {nh} + {nl} + {nc} + 2) {d} 4)"
+    return {
+        "o": ho,
+        "c": hc,
+        "h": f"greatest({nh}, {ho}, {hc})",
+        "l": f"least({nl}, {ho}, {hc})",
+    }
+
+
+def q_window_heikin_ashi(spark, sf_dir):
+    """Heikin-Ashi candles over ship-day OHLC bars of lineitem prices —
+    the smoothed-candle transform whose OPEN is defined RECURSIVELY
+    (ha_open_t = (ha_open_{t-1} + ha_close_{t-1})/2), making it the
+    candle-domain member of this repo's exact-integer recursive family:
+    Spark folds the day prefix, the DuckDB oracle walks a recursive CTE
+    over the MATERIALIZED bar series, every quotient half-up integer
+    cents.  Seed: ha_open_1 = (o_1+c_1)/2, ha_close_1 = OHLC/4 mean.
+
+    NULL join keys (r10): rows with NULL l_orderkey are excluded from
+    the bar construction on BOTH sides — the day-bar open/close are
+    picked by the (ok, ln) total order, which is undefined for NULL ok
+    (engines disagree on NULL sort placement, and NULL-ok rows sharing
+    a day+linenumber tie arbitrarily)."""
+    load_tables(spark, sf_dir)
+    li = spark.table("lineitem").filter(F.col("l_orderkey").isNotNull()).select(
+        F.col("l_orderkey").alias("ok"),
+        F.col("l_linenumber").alias("ln"),
+        F.date_format("l_shipdate", "yyyy-MM-dd").alias("day"),
+        (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
+        .cast("long")
+        .alias("cents"),
+    )
+    wa = Window.partitionBy("day").orderBy("ok", "ln")
+    wd = Window.partitionBy("day").orderBy(F.col("ok").desc(), F.col("ln").desc())
+    r = li.withColumn("rn_a", F.row_number().over(wa)).withColumn(
+        "rn_d", F.row_number().over(wd)
+    )
+    bars = r.groupBy("day").agg(
+        F.max(F.when(F.col("rn_a") == 1, F.col("cents"))).alias("o"),
+        F.max("cents").alias("h"),
+        F.min("cents").alias("l"),
+        F.max(F.when(F.col("rn_d") == 1, F.col("cents"))).alias("c"),
+    )
+    wf = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
+    framed = bars.select(
+        "day",
+        F.collect_list(F.struct("o", "h", "l", "c")).over(wf).alias("arr"),
+    )
+    s = _ha_step("acc.o", "acc.c", "acc.h", "acc.l",
+                 "x.h", "x.l", "x.o", "x.c", "spark")
+    fold = (
+        "aggregate(slice(arr, 2, size(arr) - 1), "
+        "named_struct("
+        "'o', (element_at(arr, 1).o + element_at(arr, 1).c + 1) div 2, "
+        "'h', element_at(arr, 1).h, 'l', element_at(arr, 1).l, "
+        "'c', (element_at(arr, 1).o + element_at(arr, 1).h + "
+        "element_at(arr, 1).l + element_at(arr, 1).c + 2) div 4), "
+        f"(acc, x) -> named_struct('o', {s['o']}, 'h', {s['h']}, "
+        f"'l', {s['l']}, 'c', {s['c']}))"
+    )
+    st = F.expr(fold)
+    return framed.select(
+        "day",
+        (st["o"] / 100.0).alias("ha_open"),
+        (st["h"] / 100.0).alias("ha_high"),
+        (st["l"] / 100.0).alias("ha_low"),
+        (st["c"] / 100.0).alias("ha_close"),
+        F.when(st["c"] > st["o"], "bull")
+        .when(st["c"] < st["o"], "bear")
+        .otherwise("flat")
+        .alias("ha_stance"),
+    )
+
+
+def q_window_candle_patterns(spark, sf_dir):
+    """Rule-based candlestick pattern classification over ship-day OHLC
+    bars: doji (body ≤ 10% of range), bullish/bearish engulfing (body
+    swallows the previous body, opposite color), hammer (lower shadow ≥
+    2× body, close in top third) — every rule an exact integer
+    cross-multiplication over cents, one lag for the previous body, no
+    float in any branch.
+
+    NULL join keys (r10): NULL-l_orderkey rows are excluded on both
+    sides — same (ok, ln) total-order rationale as window_heikin_ashi."""
+    load_tables(spark, sf_dir)
+    li = spark.table("lineitem").filter(F.col("l_orderkey").isNotNull()).select(
+        F.col("l_orderkey").alias("ok"),
+        F.col("l_linenumber").alias("ln"),
+        F.date_format("l_shipdate", "yyyy-MM-dd").alias("day"),
+        (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
+        .cast("long")
+        .alias("cents"),
+    )
+    wa = Window.partitionBy("day").orderBy("ok", "ln")
+    wd = Window.partitionBy("day").orderBy(F.col("ok").desc(), F.col("ln").desc())
+    r = li.withColumn("rn_a", F.row_number().over(wa)).withColumn(
+        "rn_d", F.row_number().over(wd)
+    )
+    bars = r.groupBy("day").agg(
+        F.max(F.when(F.col("rn_a") == 1, F.col("cents"))).alias("o"),
+        F.max("cents").alias("h"),
+        F.min("cents").alias("l"),
+        F.max(F.when(F.col("rn_d") == 1, F.col("cents"))).alias("c"),
+    )
+    w = Window.orderBy("day")
+    po, pc = F.lag("o").over(w), F.lag("c").over(w)
+    lined = bars.select(
+        "day", "o", "h", "l", "c",
+        po.alias("po"), pc.alias("pc"),
+    ).filter(F.col("po").isNotNull())
+    body = F.abs(F.col("c") - F.col("o"))
+    rng = F.col("h") - F.col("l")
+    lower_shadow = F.least("o", "c") - F.col("l")
+    is_doji = (body * 1000) <= (rng * DOJI_BODY_PM)
+    bull_engulf = (
+        (F.col("pc") < F.col("po"))
+        & (F.col("c") > F.col("o"))
+        & (F.col("o") <= F.col("pc"))
+        & (F.col("c") >= F.col("po"))
+    )
+    bear_engulf = (
+        (F.col("pc") > F.col("po"))
+        & (F.col("c") < F.col("o"))
+        & (F.col("o") >= F.col("pc"))
+        & (F.col("c") <= F.col("po"))
+    )
+    hammer = (lower_shadow >= 2 * body) & (
+        3 * (F.greatest("o", "c") - F.col("l")) >= 2 * rng
+    )
+    return lined.select(
+        "day",
+        (F.col("o") / 100.0).alias("open_v"),
+        (F.col("c") / 100.0).alias("close_v"),
+        F.when(is_doji, "doji")
+        .when(bull_engulf, "bullish_engulfing")
+        .when(bear_engulf, "bearish_engulfing")
+        .when(hammer, "hammer")
+        .otherwise("none")
+        .alias("pattern"),
+    )
+
+
+_HA_D = _ha_step("w.o", "w.c", "w.h", "w.l", "n.h", "n.l", "n.o", "n.c",
+                 "duckdb")
+
+
+#: Supertrend parameters
+ST_ATR_N = 10     #: ATR lookback (days)
+ST_MULT = 3       #: band multiplier
+
+
+def _st_step(fub: str, flb: str, t: str, pc: str, bu: str, bl: str, c: str,
+             dialect: str) -> dict[str, str]:
+    """One Supertrend transition over integer cents: the upper band only
+    RATCHETS DOWN (and resets when the prior close broke above it), the
+    lower band only ratchets up; trend flips when the close crosses the
+    new opposite band.  All comparisons are exact integers."""
+    nfub = (
+        f"(CASE WHEN {bu} < {fub} OR {pc} > {fub} THEN {bu} "
+        f"ELSE {fub} END)"
+    )
+    nflb = (
+        f"(CASE WHEN {bl} > {flb} OR {pc} < {flb} THEN {bl} "
+        f"ELSE {flb} END)"
+    )
+    nt = (
+        f"(CASE WHEN {c} > {nfub} THEN 1 "
+        f"WHEN {c} < {nflb} THEN -1 ELSE {t} END)"
+    )
+    return {"fub": nfub, "flb": nflb, "t": nt, "pc": c}
+
+
+def q_window_supertrend(spark, sf_dir):
+    """Supertrend(10, 3) over ship-day bars of lineitem prices — the
+    ratcheting-band trend filter: basic bands mid ± 3·ATR-10, final
+    bands that only tighten until price breaks them, trend from close
+    vs the fresh opposite band, and the supertrend line = the active
+    band.  A second nonlinear integer state machine alongside
+    window_parabolic_sar — the band RATCHET (monotone clamps with
+    breakout resets) is a different transition family from SAR's
+    accelerating stop.
+
+    Bands/ATR are exact integer cents (half-up ATR mean like Keltner);
+    the state (fub, flb, trend, prev close) evolves from the series
+    start — Spark prefix fold, recursive-CTE oracle, python replay in
+    pytest."""
+    load_tables(spark, sf_dir)
+    li = spark.table("lineitem").select(
+        F.col("l_orderkey").alias("ok"),
+        F.col("l_linenumber").alias("ln"),
+        F.date_format("l_shipdate", "yyyy-MM-dd").alias("day"),
+        (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
+        .cast("long")
+        .alias("cents"),
+    )
+    wd = Window.partitionBy("day").orderBy(F.col("ok").desc(), F.col("ln").desc())
+    r = li.withColumn("rn_d", F.row_number().over(wd))
+    bars = r.groupBy("day").agg(
+        F.max("cents").alias("h"),
+        F.min("cents").alias("l"),
+        F.max(F.when(F.col("rn_d") == 1, F.col("cents"))).alias("c"),
+    )
+    w = Window.orderBy("day")
+    pc0 = F.lag("c").over(w)
+    tr = F.when(pc0.isNull(), F.col("h") - F.col("l")).otherwise(
+        F.greatest(
+            F.col("h") - F.col("l"),
+            F.abs(F.col("h") - pc0),
+            F.abs(F.col("l") - pc0),
+        )
+    )
+    wa = Window.orderBy("day").rowsBetween(-(ST_ATR_N - 1), 0)
+    banded = (
+        bars.select("day", "h", "l", "c", tr.alias("tr_c"))
+        .select(
+            "day",
+            "h",
+            "l",
+            "c",
+            F.sum("tr_c").over(wa).alias("trs"),
+            F.count(F.lit(1)).over(wa).alias("na"),
+        )
+        .filter(F.col("na") == ST_ATR_N)
+        .select(
+            "day",
+            "c",
+            (
+                F.expr("(h + l + 1) div 2")
+                + ST_MULT * F.expr(f"(2 * trs + {ST_ATR_N}) div {2 * ST_ATR_N}")
+            ).alias("bu"),
+            (
+                F.expr("(h + l + 1) div 2")
+                - ST_MULT * F.expr(f"(2 * trs + {ST_ATR_N}) div {2 * ST_ATR_N}")
+            ).alias("bl"),
+        )
+    )
+    wf = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
+    framed = banded.select(
+        "day",
+        F.collect_list(F.struct("bu", "bl", "c")).over(wf).alias("arr"),
+    )
+    s = _st_step("acc.fub", "acc.flb", "acc.t", "acc.pc",
+                 "x.bu", "x.bl", "x.c", "spark")
+    fold = (
+        "aggregate(slice(arr, 2, size(arr) - 1), "
+        "named_struct('fub', element_at(arr, 1).bu, "
+        "'flb', element_at(arr, 1).bl, 't', 1L, "
+        "'pc', element_at(arr, 1).c), "
+        f"(acc, x) -> named_struct('fub', {s['fub']}, 'flb', {s['flb']}, "
+        f"'t', cast({s['t']} as bigint), 'pc', {s['pc']}))"
+    )
+    st = F.expr(fold)
+    return framed.select(
+        "day",
+        st["t"].alias("trend"),
+        (st["fub"] / 100.0).alias("upper_band"),
+        (st["flb"] / 100.0).alias("lower_band"),
+        (
+            F.when(st["t"] == 1, st["flb"]).otherwise(st["fub"]) / 100.0
+        ).alias("supertrend"),
+    )
+
+
+_ST_D = _st_step("w.fub", "w.flb", "w.t", "w.pc", "n.bu", "n.bl", "n.c",
+                 "duckdb")
+
+
+#: CCI lookback (days)
+CCI_N = 20
+
+
+def q_window_cci(spark, sf_dir):
+    """Commodity Channel Index over daily lineitem price bars:
+    CCI = (TP - SMA_N(TP)) / (0.015 * meandev_N(TP)), TP=(H+L+C)/3 —
+    the first indicator here whose denominator is a NESTED window
+    statistic (mean |deviation| around the window's OWN mean), which no
+    flat window sum can express: the frame collects once per row and
+    folds twice.
+
+    Exact arithmetic: with integer cents and TP3 = H+L+C (3x TP, scale
+    cancels), CCI = 200*N*(N*tp3 - S) / (3 * sum_j |N*tp3_j - S|) — an
+    exact integer ratio divided ONCE for display; no float enters
+    before the final division.  Single-partition window on the bounded
+    ~2,406-day grain (TA-window precedent)."""
+    load_tables(spark, sf_dir)
+    li = spark.table("lineitem").select(
+        F.col("l_orderkey").alias("ok"),
+        F.col("l_linenumber").alias("ln"),
+        F.date_format("l_shipdate", "yyyy-MM-dd").alias("day"),
+        (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
+        .cast("long")
+        .alias("cents"),
+    )
+    wd = Window.partitionBy("day").orderBy(F.col("ok").desc(), F.col("ln").desc())
+    r = li.withColumn("rn_d", F.row_number().over(wd))
+    bars = r.groupBy("day").agg(
+        (
+            F.max("cents")
+            + F.min("cents")
+            + F.max(F.when(F.col("rn_d") == 1, F.col("cents")))
+        ).alias("tp3")
+    )
+    wf = Window.orderBy("day").rowsBetween(-(CCI_N - 1), 0)
+    framed = bars.select(
+        "day",
+        "tp3",
+        F.collect_list("tp3").over(wf).alias("arr"),
+        F.count(F.lit(1)).over(wf).alias("n"),
+    ).filter(F.col("n") == CCI_N)
+    s = F.expr("aggregate(arr, 0L, (acc, x) -> acc + x)")
+    scored = framed.select("day", "tp3", s.alias("s"), "arr")
+    d = F.expr(
+        f"aggregate(arr, 0L, (acc, x) -> acc + abs({CCI_N} * x - s))"
+    )
+    return scored.select(
+        "day",
+        (F.col("tp3") / 3.0 / 100.0).alias("tp"),
+        F.round(
+            200.0
+            * CCI_N
+            * (CCI_N * F.col("tp3") - F.col("s"))
+            / (3.0 * d),
+            6,
+        ).alias("cci"),
+    )
+
+
+#: KAMA parameters: efficiency-ratio lookback, fast/slow smoothing
+KAMA_N = 10
+KAMA_FAST = 2.0 / (2 + 1)
+KAMA_SLOW = 2.0 / (30 + 1)
+
+#: regression-channel lookback (days) and band width (sigmas)
+LRC_N = 30
+LRC_SIGMAS = 2.0
+
+
+def q_window_kama(spark, sf_dir):
+    """Kaufman's Adaptive Moving Average over daily close prices — the
+    indicator whose smoothing constant CHANGES PER ROW (fast when the
+    market trends, slow when it chops), making it a data-dependent
+    recurrence kama_t = kama_{t-1} + sc_t*(close_t - kama_{t-1}) that
+    no flat window can express.
+
+    Cross-engine discipline: the efficiency ratio's inputs are exact
+    integer cents (|10-day change| / sum of |1-day changes| via lag
+    windows), sc is one fixed-shape double expression of those ints
+    with python-literal fast/slow constants, and the recurrence folds
+    with a SCALAR double accumulator — safe on both engines (DuckDB's
+    in-place fold mutation bites STRUCT accumulators only; ts_holt's
+    coupled recurrence needed a recursive CTE, this one does not).
+    Single-partition window on the bounded daily grain (TA
+    precedent)."""
+    load_tables(spark, sf_dir)
+    li = spark.table("lineitem").select(
+        F.col("l_orderkey").alias("ok"),
+        F.col("l_linenumber").alias("ln"),
+        F.date_format("l_shipdate", "yyyy-MM-dd").alias("day"),
+        (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
+        .cast("long")
+        .alias("cents"),
+    )
+    wd = Window.partitionBy("day").orderBy(F.col("ok").desc(), F.col("ln").desc())
+    r = li.withColumn("rn_d", F.row_number().over(wd))
+    bars = r.groupBy("day").agg(
+        F.max(F.when(F.col("rn_d") == 1, F.col("cents"))).alias("c")
+    )
+    w = Window.orderBy("day")
+    diffed = bars.select(
+        "day",
+        "c",
+        F.abs(F.col("c") - F.lag("c", KAMA_N).over(w)).alias("chg"),
+        F.abs(F.col("c") - F.lag("c", 1).over(w)).alias("d1"),
+    )
+    wv = Window.orderBy("day").rowsBetween(-(KAMA_N - 1), 0)
+    vol = diffed.select(
+        "day",
+        "c",
+        "chg",
+        F.sum("d1").over(wv).alias("vol"),
+        F.count("d1").over(wv).alias("nv"),
+    ).filter(F.col("chg").isNotNull() & (F.col("nv") == KAMA_N))
+    er = F.when(F.col("vol") > 0, F.col("chg") / F.col("vol").cast("double")).otherwise(
+        F.lit(0.0)
+    )
+    sc_expr = (
+        (er * (KAMA_FAST - KAMA_SLOW) + KAMA_SLOW)
+        * (er * (KAMA_FAST - KAMA_SLOW) + KAMA_SLOW)
+    )
+    scored = vol.select("day", "c", sc_expr.alias("sc"))
+
+    # r12 (guide §2.3 / verdict item 5): the r6-r11 spelling collected
+    # the FULL prefix per row (collect_list over an unbounded frame —
+    # O(n^2) structs, ~2.9M copies on the 2.4k-day grain) and re-folded
+    # it per row with an `aggregate` lambda whose generated code is the
+    # reason the key read 45 s single-shot (codegen/JIT) vs 2.1 s warm.
+    # The recurrence is sequential by definition, so compute it ONCE,
+    # linearly, in an Arrow kernel over the single bounded group —
+    # bit-identical arithmetic: the JVM fold evaluates
+    # acc + sc * (double(c) - acc) as plain IEEE-754 double ops (Java
+    # forbids FMA contraction), exactly what the Python float loop
+    # does, in the same order, from the same init (first row's c).
+    # Division by 100 and the 6dp HALF_UP round stay in Spark,
+    # unchanged.  The daily grain is bounded (~2.4k rows at any SF), so
+    # one group/task is the same single-partition shape the global
+    # window already had.
+    def _kama_fold(pdf):
+        import pandas as pd
+
+        pdf = pdf.sort_values("day")
+        c = pdf["c"].tolist()
+        sc = pdf["sc"].tolist()
+        k: list[float] = []
+        acc = 0.0
+        for i in range(len(c)):
+            acc = float(c[0]) if i == 0 else acc + sc[i] * (float(c[i]) - acc)
+            k.append(acc)
+        return pd.DataFrame({"day": pdf["day"], "c": pdf["c"], "kama": k})
+
+    folded = scored.groupBy(F.lit(1).alias("_g")).applyInPandas(
+        _kama_fold, "day string, c long, kama double"
+    )
+    return folded.select(
+        "day",
+        (F.col("c") / 100.0).alias("close"),
+        F.round(F.col("kama") / 100.0, 6).alias("kama"),
+    )
+
+
+def q_window_linreg_channel(spark, sf_dir):
+    """Rolling linear-regression channel: per day, OLS of the last
+    LRC_N daily closes on the day index, reporting the fitted value and
+    the ±2-sigma channel — the drift-plus-band overlay (and the rolling
+    twin of the global agg_linreg).
+
+    Exact arithmetic: x is the integer day index and y integer cents,
+    so every window statistic (n, Σx, Σy, Σxy, Σx², Σy²) is an EXACT
+    integer window sum — no collect, no fold — and slope/intercept/
+    sigma are fixed-shape double expressions of those identical ints:
+    slope = Sxy/Sxx, sigma² = (Syy − Sxy²/Sxx)/(n(n−2)) with
+    S__ = n·Σ__ − Σ_·Σ_.  Bounded daily grain window (TA precedent);
+    at any SF the window sums stay far inside BIGINT."""
+    load_tables(spark, sf_dir)
+    li = spark.table("lineitem").select(
+        F.expr(f"datediff(l_shipdate, DATE '{FISCAL_ANCHOR}')").alias("x"),
+        (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
+        .cast("long")
+        .alias("cents"),
+        "l_orderkey",
+        "l_linenumber",
+    )
+    wd = Window.partitionBy("x").orderBy(
+        F.col("l_orderkey").desc(), F.col("l_linenumber").desc()
+    )
+    bars = (
+        li.withColumn("rn_d", F.row_number().over(wd))
+        .groupBy("x")
+        .agg(F.max(F.when(F.col("rn_d") == 1, F.col("cents"))).alias("y"))
+    )
+    # y² and the S__ cross-terms run in DECIMAL(38,0) (r10 extreme-
+    # magnitude sweep): cents² alone is ~1e27 at hostile magnitudes —
+    # "far inside BIGINT" only held for the original value range
+    wf = Window.orderBy("x").rowsBetween(-(LRC_N - 1), 0)
+    sums = bars.select(
+        "x",
+        "y",
+        F.count(F.lit(1)).over(wf).alias("n"),
+        F.sum("x").over(wf).alias("sx"),
+        F.sum("y").over(wf).alias("sy"),
+        F.sum((F.col("x") * F.col("y")).cast("decimal(38,0)")).over(wf).alias("sxy"),
+        F.sum(F.col("x") * F.col("x")).over(wf).alias("sxx"),
+        F.sum(F.col("y").cast("decimal(19,0)") * F.col("y")).over(wf).alias("syy"),
+    ).filter(F.col("n") == LRC_N)
+    n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
+    syD = sy.cast("decimal(19,0)")
+    big_sxy = (n * F.col("sxy") - sx.cast("decimal(19,0)") * syD).cast("double")
+    big_sxx = (n * F.col("sxx") - sx * sx).cast("double")
+    big_syy = (n * F.col("syy") - syD * syD).cast("double")
+    slope = big_sxy / big_sxx
+    yhat = (sy.cast("double") - slope * sx) / n + slope * F.col("x")
+    sigma = F.sqrt(
+        (big_syy - big_sxy * big_sxy / big_sxx) / (n * (n - 2))
+    )
+    return sums.select(
+        "x",
+        (F.col("y") / 100.0).alias("close"),
+        F.round(yhat / 100.0, 6).alias("mid"),
+        F.round((yhat + LRC_SIGMAS * sigma) / 100.0, 6).alias("upper"),
+        F.round((yhat - LRC_SIGMAS * sigma) / 100.0, 6).alias("lower"),
+        F.round(slope, 6).alias("slope_cents_per_day"),
+    )
+
+
+#: funnel steps and per-step deadline (hours)
+FUNNEL_STEPS = ("view", "click", "purchase")
+FUNNEL_WINDOW_H = 24
+
+
+def q_window_funnel_time_constrained(spark, sf_dir):
+    """Time-constrained funnel (ClickHouse windowFunnel semantics,
+    greedy-earliest variant): per user, step 1 anchors at the FIRST
+    'view'; each later step must be the first matching event STRICTLY
+    AFTER the previous step and within 24h of it.  Reports how many
+    users reach each depth and the step conversion rates — the product
+    funnel where an un-windowed version (window_funnel_stages) would
+    count week-later conversions.
+
+    Plan: one co-partitioned min per user for the anchor, then one
+    conditional-min aggregation PER STEP, each a user-keyed join —
+    depth-many bounded shuffles, all on user_id.  Timestamps stay in
+    exact integer microseconds."""
+    load_tables(spark, sf_dir)
+    e = spark.table("events").select(
+        "user_id",
+        "event_type",
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
+    )
+    win_us = FUNNEL_WINDOW_H * 3600 * 1000000
+    cur = e.filter(F.col("event_type") == FUNNEL_STEPS[0]).groupBy(
+        "user_id"
+    ).agg(F.min("us").alias("t"))
+    reached = [cur.count()]
+    for step in FUNNEL_STEPS[1:]:
+        nxt = (
+            e.filter(F.col("event_type") == step)
+            .join(cur, "user_id")
+            .filter(
+                (F.col("us") > F.col("t"))
+                & (F.col("us") <= F.col("t") + F.lit(win_us))
+            )
+            .groupBy("user_id")
+            .agg(F.min("us").alias("t"))
+        )
+        cur = nxt
+        reached.append(cur.count())
+    spark_sess = spark
+    rows = [
+        (
+            i + 1,
+            FUNNEL_STEPS[i],
+            reached[i],
+            # conversion from previous step, half-up per-mille
+            (2 * 1000 * reached[i] + reached[i - 1]) // (2 * reached[i - 1])
+            if i > 0 and reached[i - 1] > 0
+            else 1000,
+        )
+        for i in range(len(FUNNEL_STEPS))
+    ]
+    return spark_sess.createDataFrame(
+        rows, "step int, event_type string, n_users long, conv_pm long"
+    )
+
+
+#: MFI lookback (days)
+MFI_N = 14
+
+
+def q_window_mfi(spark, sf_dir):
+    """Money Flow Index — the volume-weighted RSI: raw money flow =
+    typical price x volume, split into positive/negative by the typical
+    price's direction, MFI = 100 * pos / (pos + neg) over 14 days.
+    Entirely exact integers: TP stays as the x3 cents sum (H+L+C, scale
+    cancels in the ratio), volume is the integer quantity sum, and the
+    index is ONE half-up per-mille quotient of two exact window sums.
+    Bounded daily grain (TA precedent)."""
+    load_tables(spark, sf_dir)
+    li = spark.table("lineitem").select(
+        F.col("l_orderkey").alias("ok"),
+        F.col("l_linenumber").alias("ln"),
+        F.date_format("l_shipdate", "yyyy-MM-dd").alias("day"),
+        (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
+        .cast("long")
+        .alias("cents"),
+        F.col("l_quantity").cast("long").alias("qty"),
+    )
+    wd = Window.partitionBy("day").orderBy(F.col("ok").desc(), F.col("ln").desc())
+    r = li.withColumn("rn_d", F.row_number().over(wd))
+    bars = r.groupBy("day").agg(
+        (
+            F.max("cents")
+            + F.min("cents")
+            + F.max(F.when(F.col("rn_d") == 1, F.col("cents")))
+        ).alias("tp3"),
+        F.sum("qty").alias("vol"),
+    )
+    w = Window.orderBy("day")
+    flows = bars.select(
+        "day",
+        "tp3",
+        (F.col("tp3") * F.col("vol")).alias("mf"),
+        F.lag("tp3").over(w).alias("ptp3"),
+    ).filter(F.col("ptp3").isNotNull())
+    wf = Window.orderBy("day").rowsBetween(-(MFI_N - 1), 0)
+    summed = flows.select(
+        "day",
+        F.sum(F.when(F.col("tp3") > F.col("ptp3"), F.col("mf")).otherwise(0))
+        .over(wf)
+        .alias("pos"),
+        F.sum(F.when(F.col("tp3") < F.col("ptp3"), F.col("mf")).otherwise(0))
+        .over(wf)
+        .alias("neg"),
+        F.count(F.lit(1)).over(wf).alias("nw"),
+    ).filter(F.col("nw") == MFI_N)
+    return summed.select(
+        "day",
+        "pos",
+        "neg",
+        # the x1000 product widens to DECIMAL(38,0) (r10: 14-day money
+        # flow passes 1e17 at hostile magnitudes, so 2000x overflows
+        # int64); the per-mille quotient <= 1000 keeps div's long result
+        # safe
+        F.expr(
+            "CASE WHEN pos + neg = 0 THEN 500 "
+            "ELSE (2 * 1000 * CAST(pos AS DECIMAL(38,0)) + (pos + neg)) "
+            "div (2 * (pos + neg)) END"
+        ).alias("mfi_pm"),
+    )
+
+
+#: fractal wing width (bars on each side)
+FRACTAL_K = 2
+
+
+def q_window_fractals(spark, sf_dir):
+    """Williams FRACTALS over daily high/low bars: a fractal high is a
+    bar whose high exceeds the highs of the FRACTAL_K bars on each side
+    (strictly, ties lose), symmetrically for lows — the swing-point
+    primitive breakout/support-resistance systems are built on.  Pure
+    lag/lead comparisons on exact integer cents over the bounded daily
+    grain; rows missing a full wing are excluded by construction."""
+    load_tables(spark, sf_dir)
+    li = spark.table("lineitem").select(
+        F.date_format("l_shipdate", "yyyy-MM-dd").alias("day"),
+        (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
+        .cast("long")
+        .alias("cents"),
+    )
+    bars = li.groupBy("day").agg(
+        F.max("cents").alias("h"), F.min("cents").alias("l")
+    )
+    w = Window.orderBy("day")
+    cond_h = F.lit(True)
+    cond_l = F.lit(True)
+    for k in range(1, FRACTAL_K + 1):
+        cond_h = (
+            cond_h
+            & (F.col("h") > F.lag("h", k).over(w))
+            & (F.col("h") > F.lead("h", k).over(w))
+        )
+        cond_l = (
+            cond_l
+            & (F.col("l") < F.lag("l", k).over(w))
+            & (F.col("l") < F.lead("l", k).over(w))
+        )
+    scored = bars.select(
+        "day",
+        (F.col("h") / 100.0).alias("high"),
+        (F.col("l") / 100.0).alias("low"),
+        F.coalesce(cond_h, F.lit(False)).alias("fractal_high"),
+        F.coalesce(cond_l, F.lit(False)).alias("fractal_low"),
+    )
+    return scored.filter(F.col("fractal_high") | F.col("fractal_low"))
+
+
+#: Ultimate Oscillator horizons (days)
+UO_FAST, UO_MID, UO_SLOW = 7, 14, 28
+
+
+def q_window_ultimate_osc(spark, sf_dir):
+    """Ultimate Oscillator — Williams' three-horizon momentum blend:
+    UO = 100 * (4*A7 + 2*A14 + A28) / 7 where A_n = sum(buying
+    pressure) / sum(true range) over n days.  Each A_n is a ratio of
+    two EXACT integer window sums (buying pressure = close - true low,
+    true range = true high - true low, all integer cents with the
+    previous close folded in via lag), and the blend is one fixed-shape
+    double expression of six exact integers.  Bounded daily grain."""
+    load_tables(spark, sf_dir)
+    li = spark.table("lineitem").select(
+        F.col("l_orderkey").alias("ok"),
+        F.col("l_linenumber").alias("ln"),
+        F.date_format("l_shipdate", "yyyy-MM-dd").alias("day"),
+        (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
+        .cast("long")
+        .alias("cents"),
+    )
+    wd = Window.partitionBy("day").orderBy(F.col("ok").desc(), F.col("ln").desc())
+    r = li.withColumn("rn_d", F.row_number().over(wd))
+    bars = r.groupBy("day").agg(
+        F.max("cents").alias("h"),
+        F.min("cents").alias("l"),
+        F.max(F.when(F.col("rn_d") == 1, F.col("cents"))).alias("c"),
+    )
+    w = Window.orderBy("day")
+    pc = F.lag("c").over(w)
+    flows = bars.select(
+        "day",
+        (F.col("c") - F.least(F.col("l"), pc)).alias("bp"),
+        (F.greatest(F.col("h"), pc) - F.least(F.col("l"), pc)).alias("tr"),
+        pc.alias("pc"),
+    ).filter(F.col("pc").isNotNull())
+    sums = flows.select(
+        "day",
+        *[
+            s
+            for n, tag in ((UO_FAST, "f"), (UO_MID, "m"), (UO_SLOW, "s"))
+            for s in (
+                F.sum("bp")
+                .over(Window.orderBy("day").rowsBetween(-(n - 1), 0))
+                .alias(f"bp_{tag}"),
+                F.sum("tr")
+                .over(Window.orderBy("day").rowsBetween(-(n - 1), 0))
+                .alias(f"tr_{tag}"),
+            )
+        ],
+        F.count(F.lit(1))
+        .over(Window.orderBy("day").rowsBetween(-(UO_SLOW - 1), 0))
+        .alias("nw"),
+    ).filter(F.col("nw") == UO_SLOW)
+    uo = (
+        100.0
+        * (
+            4.0 * F.col("bp_f") / F.col("tr_f")
+            + 2.0 * F.col("bp_m") / F.col("tr_m")
+            + F.col("bp_s") / F.col("tr_s")
+        )
+        / 7.0
+    )
+    return sums.select("day", F.round(uo, 6).alias("ultimate_osc"))
+
+
+#: interval stabbing: order 'open' horizon (days)
+STAB_OPEN_DAYS = 30
+
+
+def q_window_interval_stabbing(spark, sf_dir):
+    """INTERVAL STABBING by sweep-line: how many orders are 'open'
+    (within 30 days of placement) on every calendar day — the
+    concurrent-interval count behind occupancy, connection-pool and
+    work-in-progress charts.  The classic rewrite: +1 at each start,
+    -1 at each end, then a running sum over day order — realized with
+    the DISTRIBUTED chunked-offset prefix sum (ranking
+    .global_running_sum), never a single-partition window over the
+    (bounded, but the pattern matters) day spine."""
+    load_tables(spark, sf_dir)
+    o = spark.table("orders")
+    x = F.expr("datediff(o_orderdate, DATE '1991-12-30')")
+    deltas = o.select(x.alias("x"), F.lit(1).alias("d")).unionAll(
+        o.select((x + STAB_OPEN_DAYS).alias("x"), F.lit(-1).alias("d"))
+    )
+    per_day = deltas.groupBy("x").agg(F.sum("d").alias("net"))
+    cum = global_running_sum(per_day, ["x"], ["net"])
+    return cum.select(
+        F.col("x").cast("int").alias("x"),
+        F.col("net").cast("long").alias("net_change"),
+        F.col("cum_net").alias("open_orders"),
+    )
+
+
+def q_window_acc_dist(spark, sf_dir):
+    """Accumulation/Distribution line: per day, the close-location value
+    CLV = ((C-L) - (H-C)) / (H-L) weighted by volume, accumulated over
+    time — the volume-flow indicator answering 'is money entering or
+    leaving'.  The daily increment is a SIGN-DECOMPOSED half-up x100
+    integer (the numerator (2C-L-H) is signed, and truncating div vs
+    flooring // agree only on non-negatives), so the running total is
+    an EXACT integer prefix sum; flat days (H=L) contribute 0 by
+    declared convention.  Bounded daily grain (TA precedent)."""
+    load_tables(spark, sf_dir)
+    li = spark.table("lineitem").select(
+        F.col("l_orderkey").alias("ok"),
+        F.col("l_linenumber").alias("ln"),
+        F.date_format("l_shipdate", "yyyy-MM-dd").alias("day"),
+        (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
+        .cast("long")
+        .alias("cents"),
+        F.col("l_quantity").cast("long").alias("qty"),
+    )
+    wd = Window.partitionBy("day").orderBy(F.col("ok").desc(), F.col("ln").desc())
+    r = li.withColumn("rn_d", F.row_number().over(wd))
+    bars = r.groupBy("day").agg(
+        F.max("cents").alias("h"),
+        F.min("cents").alias("l"),
+        F.max(F.when(F.col("rn_d") == 1, F.col("cents"))).alias("c"),
+        F.sum("qty").alias("v"),
+    )
+    inc = F.expr(
+        "CASE WHEN h = l THEN 0 "
+        "WHEN 2 * c - l - h >= 0 THEN "
+        "(2 * 100 * (2 * c - l - h) * v + (h - l)) div (2 * (h - l)) "
+        "ELSE -((2 * 100 * (l + h - 2 * c) * v + (h - l)) "
+        "div (2 * (h - l))) END"
+    )
+    w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
+    scored = bars.select("day", inc.alias("inc_x"))
+    return scored.select(
+        "day",
+        (F.col("inc_x") / 100.0).alias("ad_increment"),
+        (F.sum("inc_x").over(w) / 100.0).alias("ad_line"),
+    )
+
+
+#: Hull MA lookbacks: n, n/2, sqrt(n)
+HMA_N, HMA_H, HMA_S = 16, 8, 4
+_D_N = HMA_N * (HMA_N + 1) // 2      # 136
+_D_H = HMA_H * (HMA_H + 1) // 2      # 36
+_D_S = HMA_S * (HMA_S + 1) // 2      # 10
+
+
+def q_window_hull_ma(spark, sf_dir):
+    """HULL moving average — the low-lag nested WEIGHTED MA:
+    HMA = WMA_sqrt(n)(2*WMA_n/2 - WMA_n).  Weighted MAs are not plain
+    window sums, but LINEAR weights decompose: with consecutive row
+    positions rn, sum_j (k - rn_t + rn_j) * x_j = (k - rn_t) * S0 +
+    S1 where S0, S1 are ORDINARY window sums of x and rn*x — so every
+    stage stays an EXACT integer numerator over a constant denominator
+    (36, 136, then 10), and only the display division is floating.
+    Bounded daily grain (TA precedent)."""
+    load_tables(spark, sf_dir)
+    li = spark.table("lineitem").select(
+        F.col("l_orderkey").alias("ok"),
+        F.col("l_linenumber").alias("ln"),
+        F.date_format("l_shipdate", "yyyy-MM-dd").alias("day"),
+        (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
+        .cast("long")
+        .alias("cents"),
+    )
+    wd = Window.partitionBy("day").orderBy(F.col("ok").desc(), F.col("ln").desc())
+    r = li.withColumn("rn_d", F.row_number().over(wd))
+    bars = r.groupBy("day").agg(
+        F.max(F.when(F.col("rn_d") == 1, F.col("cents"))).alias("c")
+    )
+    wo = Window.orderBy("day")
+    pos = bars.select(
+        "day", "c", F.row_number().over(wo).cast("long").alias("rn")
+    )
+
+    def wma_num(xcol, k):
+        # numerators in DECIMAL(38,0) (r10 extreme-magnitude sweep):
+        # cents*rn alone passes 1e17 and the staged rawn/hman
+        # numerators 1e20+ at hostile value scales
+        wf = Window.orderBy("day").rowsBetween(-(k - 1), 0)
+        s0 = F.sum(xcol.cast("decimal(38,0)")).over(wf)
+        s1 = F.sum((xcol * F.col("rn")).cast("decimal(38,0)")).over(wf)
+        return (F.lit(k) - F.col("rn")) * s0 + s1
+
+    staged = pos.select(
+        "day",
+        "rn",
+        F.count(F.lit(1))
+        .over(Window.orderBy("day").rowsBetween(-(HMA_N - 1), 0))
+        .alias("nw"),
+        wma_num(F.col("c"), HMA_H).alias("nh"),
+        wma_num(F.col("c"), HMA_N).alias("nn"),
+    ).filter(F.col("nw") == HMA_N)
+    # raw_t = 2*nh/36 - nn/136 = (2*136*nh - 36*nn) / 4896, keep numerator
+    raw = staged.select(
+        "day",
+        "rn",
+        (2 * _D_N * F.col("nh") - _D_H * F.col("nn"))
+        .cast("decimal(38,0)")
+        .alias("rawn"),
+    )
+    wf2 = Window.orderBy("day").rowsBetween(-(HMA_S - 1), 0)
+    final = raw.select(
+        "day",
+        (
+            (F.lit(HMA_S) - F.col("rn")) * F.sum("rawn").over(wf2)
+            + F.sum(F.col("rawn") * F.col("rn")).over(wf2)
+        ).alias("hman"),
+        F.count(F.lit(1)).over(wf2).alias("sw"),
+    ).filter(F.col("sw") == HMA_S)
+    return final.select(
+        "day",
+        (F.col("hman") / float(_D_N * _D_H * 2 * _D_S) * 2.0 / 100.0).alias(
+            "hma"
+        ),
+    )
+
+
+def q_window_longest_streak(spark, sf_dir):
+    """LONGEST STREAK analytics: the maximum run of consecutive
+    up-revenue days, the longest down run, and the streak in force on
+    the final day — gaps-and-islands pushed to its summary form (the
+    'best run' number every momentum report quotes).  Run grouping is
+    the classic day-index-minus-rank trick per direction, all exact
+    integers on the bounded daily grain."""
+    load_tables(spark, sf_dir)
+    o = spark.table("orders")
+    daily = o.groupBy(
+        F.expr("datediff(o_orderdate, DATE '1991-12-30')").alias("x")
+    ).agg(
+        (F.sum("o_totalprice").cast("decimal(18,2)") * 100)
+        .cast("long")
+        .alias("c")
+    )
+    w = Window.orderBy("x")
+    dirs = daily.select(
+        "x",
+        F.when(F.col("c") > F.lag("c").over(w), 1)
+        .when(F.col("c") < F.lag("c").over(w), -1)
+        .otherwise(0)
+        .alias("d"),
+        F.lag("x").over(w).alias("px"),
+    ).filter(F.col("px").isNotNull()).drop("px")
+    wd = Window.partitionBy("d").orderBy("x")
+    runs = (
+        dirs.withColumn("rn", F.row_number().over(wd))
+        .groupBy("d", (F.col("x") - F.col("rn")).alias("grp"))
+        .agg(F.count(F.lit(1)).alias("len"), F.max("x").alias("last_x"))
+    )
+    last = dirs.agg(F.max("x").alias("mx"))
+    return (
+        runs.crossJoin(F.broadcast(last))
+        .groupBy()
+        .agg(
+            F.max(F.when(F.col("d") == 1, F.col("len"))).alias(
+                "longest_up"
+            ),
+            F.max(F.when(F.col("d") == -1, F.col("len"))).alias(
+                "longest_down"
+            ),
+            F.max(
+                F.when(
+                    F.col("last_x") == F.col("mx"),
+                    F.col("d") * F.col("len"),
+                )
+            ).alias("current_streak"),
+        )
+    )
+
+
+#: choppiness lookback (days)
+CHOP_N = 14
+
+
+def q_window_choppiness(spark, sf_dir):
+    """CHOPPINESS INDEX: 100 * log10(sum(TR_14) / (maxH14 - minL14)) /
+    log10(14) — is the market trending (low) or ranging (high)?  The
+    ratio inside the log is exact integer cents (window sum of true
+    ranges over window max/min), both engines evaluate the identical
+    log10 of the identical double, and 6dp rounding of a 0-100-range
+    value sits far inside double precision.  Bounded daily grain."""
+    load_tables(spark, sf_dir)
+    li = spark.table("lineitem").select(
+        F.col("l_orderkey").alias("ok"),
+        F.col("l_linenumber").alias("ln"),
+        F.date_format("l_shipdate", "yyyy-MM-dd").alias("day"),
+        (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
+        .cast("long")
+        .alias("cents"),
+    )
+    wd = Window.partitionBy("day").orderBy(F.col("ok").desc(), F.col("ln").desc())
+    r = li.withColumn("rn_d", F.row_number().over(wd))
+    bars = r.groupBy("day").agg(
+        F.max("cents").alias("h"),
+        F.min("cents").alias("l"),
+        F.max(F.when(F.col("rn_d") == 1, F.col("cents"))).alias("c"),
+    )
+    w = Window.orderBy("day")
+    pc = F.lag("c").over(w)
+    tr = bars.select(
+        "day",
+        "h",
+        "l",
+        (F.greatest(F.col("h"), pc) - F.least(F.col("l"), pc)).alias("tr"),
+        pc.alias("pc"),
+    ).filter(F.col("pc").isNotNull())
+    wf = Window.orderBy("day").rowsBetween(-(CHOP_N - 1), 0)
+    s = tr.select(
+        "day",
+        F.sum("tr").over(wf).alias("trs"),
+        F.max("h").over(wf).alias("hh"),
+        F.min("l").over(wf).alias("ll"),
+        F.count(F.lit(1)).over(wf).alias("nw"),
+    ).filter((F.col("nw") == CHOP_N) & (F.col("hh") > F.col("ll")))
+    import math
+
+    return s.select(
+        "day",
+        F.round(
+            100.0
+            * F.log10(
+                F.col("trs").cast("double")
+                / (F.col("hh") - F.col("ll")).cast("double")
+            )
+            / math.log10(CHOP_N),
+            6,
+        ).alias("choppiness"),
+    )
+
+
+#: AO horizons
+AO_FAST, AO_SLOW = 5, 34
+
+
+def q_window_awesome_osc(spark, sf_dir):
+    """Awesome Oscillator: SMA_5(midpoint) - SMA_34(midpoint) with
+    midpoint = (H+L)/2 — two-horizon momentum.  With MID2 = H+L (2x the
+    midpoint, integer cents) the oscillator is the single exact integer
+    (34*S5 - 5*S34) over the constant denominator 2*5*34, divided once
+    for display — no float before the end.  Bounded daily grain."""
+    load_tables(spark, sf_dir)
+    li = spark.table("lineitem").select(
+        F.date_format("l_shipdate", "yyyy-MM-dd").alias("day"),
+        (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
+        .cast("long")
+        .alias("cents"),
+    )
+    bars = li.groupBy("day").agg(
+        (F.max("cents") + F.min("cents")).alias("mid2")
+    )
+    wf = Window.orderBy("day").rowsBetween(-(AO_FAST - 1), 0)
+    ws = Window.orderBy("day").rowsBetween(-(AO_SLOW - 1), 0)
+    s = bars.select(
+        "day",
+        F.sum("mid2").over(wf).alias("s5"),
+        F.sum("mid2").over(ws).alias("s34"),
+        F.count(F.lit(1)).over(ws).alias("nw"),
+    ).filter(F.col("nw") == AO_SLOW)
+    return s.select(
+        "day",
+        (
+            (AO_SLOW * F.col("s5") - AO_FAST * F.col("s34"))
+            / float(2 * AO_FAST * AO_SLOW)
+            / 100.0
+        ).alias("awesome_osc"),
+    )
+
+
+#: control-chart baseline: first N days freeze the limits
+CTRL_BASE_DAYS = 365
+
+
+def q_window_control_chart(spark, sf_dir):
+    """CONTROL CHART with FROZEN limits: the first year of daily revenue
+    fixes the center line and 3-sigma limits (exact integer baseline
+    moments), then every later day is judged against those frozen
+    limits (Western Electric rule 1) — the SPC discipline that
+    window_anomaly_zscore's rolling z cannot express (rolling limits
+    chase the drift they should flag).  Output: the out-of-control
+    days with their side."""
+    load_tables(spark, sf_dir)
+    o = spark.table("orders")
+    daily = o.groupBy(
+        F.expr("datediff(o_orderdate, DATE '1991-12-30')").alias("x")
+    ).agg(
+        (F.sum("o_totalprice").cast("decimal(18,2)") * 100)
+        .cast("long")
+        .alias("c")
+    )
+    base = daily.filter(F.col("x") <= CTRL_BASE_DAYS).agg(
+        F.count(F.lit(1)).alias("bn"),
+        F.sum(F.col("c").cast("decimal(38,0)")).alias("b1"),
+        F.sum(
+            (F.col("c").cast("decimal(38,0)") * F.col("c")).cast(
+                "decimal(38,0)"
+            )
+        ).alias("b2"),
+    )
+    j = daily.filter(F.col("x") > CTRL_BASE_DAYS).crossJoin(
+        F.broadcast(base)
+    )
+    bn = F.col("bn").cast("double")
+    mu = F.col("b1").cast("double") / bn
+    sd = F.sqrt(
+        (bn * F.col("b2").cast("double")
+         - F.col("b1").cast("double") * F.col("b1").cast("double"))
+        / (bn * (bn - 1))
+    )
+    side = (
+        F.when(F.col("c") > mu + 3 * sd, "above")
+        .when(F.col("c") < mu - 3 * sd, "below")
+        .otherwise("in")
+    )
+    return j.select(
+        "x",
+        (F.col("c") / 100.0).alias("revenue"),
+        side.alias("status"),
+        F.round(mu / 100.0, 6).alias("center"),
+        F.round(sd / 100.0, 6).alias("sigma"),
+    )
+
+
+def q_window_underwater_duration(spark, sf_dir):
+    """UNDERWATER DURATION of daily revenue: the longest run of days
+    spent strictly below the running peak, and the spell in force on
+    the final day — window_drawdown measures depth, this measures TIME
+    (the statistic that separates a sharp dip from a long grind).
+    Running max over the bounded daily grain, underwater flags, then
+    the gaps-and-islands run grouping — all exact integers."""
+    load_tables(spark, sf_dir)
+    o = spark.table("orders")
+    daily = o.groupBy(
+        F.expr("datediff(o_orderdate, DATE '1991-12-30')").alias("x")
+    ).agg(
+        (F.sum("o_totalprice").cast("decimal(18,2)") * 100)
+        .cast("long")
+        .alias("c")
+    )
+    w = Window.orderBy("x").rowsBetween(Window.unboundedPreceding, 0)
+    uw = daily.select(
+        "x",
+        (F.col("c") < F.max("c").over(w)).alias("under"),
+    ).filter(F.col("under"))
+    wr = Window.orderBy("x")
+    runs = (
+        uw.withColumn("rn", F.row_number().over(wr))
+        .groupBy((F.col("x") - F.col("rn")).alias("grp"))
+        .agg(F.count(F.lit(1)).alias("len"), F.max("x").alias("last_x"))
+    )
+    mx = daily.agg(F.max("x").alias("mx"))
+    return (
+        runs.crossJoin(F.broadcast(mx))
+        .groupBy()
+        .agg(
+            F.count(F.lit(1)).alias("n_spells"),
+            F.max("len").alias("longest_underwater"),
+            F.coalesce(
+                F.max(
+                    F.when(F.col("last_x") == F.col("mx"), F.col("len"))
+                ),
+                F.lit(0),
+            ).alias("current_underwater"),
+        )
+    )
+
+
+#: vol-of-vol windows (days)
+VV_INNER, VV_OUTER = 10, 20
+
+
+def q_window_vol_of_vol(spark, sf_dir):
+    """VOLATILITY OF VOLATILITY: the rolling standard deviation OF the
+    rolling variance of daily revenue — second-moment dynamics (is risk
+    itself stable?), the nested statistic variance-regime monitors
+    track.  The inner rolling variance is an EXACT rational of integer
+    window sums, QUANTIZED half-up to integer cents^2 (the r6
+    quantize-then-moment discipline); the outer moments then run on
+    exact integers in DECIMAL(38)/HUGEINT and one sqrt closes it.
+    Bounded daily grain."""
+    load_tables(spark, sf_dir)
+    o = spark.table("orders")
+    daily = o.groupBy(
+        F.expr("datediff(o_orderdate, DATE '1991-12-30')").alias("x")
+    ).agg(
+        (F.sum("o_totalprice").cast("decimal(18,2)") * 100)
+        .cast("long")
+        .alias("c")
+    )
+    wi = Window.orderBy("x").rowsBetween(-(VV_INNER - 1), 0)
+    inner = daily.select(
+        "x",
+        F.count(F.lit(1)).over(wi).alias("n"),
+        F.sum("c").over(wi).alias("s1"),
+        F.sum(
+            (F.col("c").cast("decimal(38,0)") * F.col("c")).cast(
+                "decimal(38,0)"
+            )
+        )
+        .over(wi)
+        .alias("s2"),
+    ).filter(F.col("n") == VV_INNER)
+    # exact rolling variance (population, x cents^2), quantized half-up:
+    # var = (n*s2 - s1^2) / n^2
+    varq = inner.select(
+        "x",
+        F.expr(
+            f"CAST((2 * ({VV_INNER} * s2 "
+            "- CAST(s1 AS DECIMAL(38,0)) * s1) "
+            f"+ {VV_INNER * VV_INNER}) div {2 * VV_INNER * VV_INNER} "
+            "AS DECIMAL(38,0))"
+        ).alias("v"),
+    )
+    wo = Window.orderBy("x").rowsBetween(-(VV_OUTER - 1), 0)
+    outer = varq.select(
+        "x",
+        F.count(F.lit(1)).over(wo).alias("m"),
+        F.sum("v").over(wo).alias("t1"),
+        F.sum((F.col("v") * F.col("v")).cast("decimal(38,0)"))
+        .over(wo)
+        .alias("t2"),
+    ).filter(F.col("m") == VV_OUTER)
+    m = F.col("m").cast("double")
+    vv = F.sqrt(
+        (m * F.col("t2").cast("double")
+         - F.col("t1").cast("double") * F.col("t1").cast("double"))
+        / (m * (m - 1))
+    )
+    return outer.select(
+        "x",
+        F.round(F.sqrt(F.col("t1").cast("double") / m) / 100.0, 6).alias(
+            "mean_vol"
+        ),
+        F.round(F.sqrt(vv) / 100.0, 6).alias("vol_of_vol"),
+    )
+
+
 QUERIES = {
     "window_bollinger": q_window_bollinger,
     "window_rsi": q_window_rsi,
@@ -764,6 +2902,38 @@ QUERIES = {
     "window_cume_dist": q_window_cume_dist,
     "window_topk_per_group": q_window_topk_per_group,
     "window_rank_dense_ntile": q_window_rank_dense_ntile,
+    "window_donchian": q_window_donchian,
+    "window_vwap": q_window_vwap,
+    "window_macd": q_window_macd,
+    "window_obv": q_window_obv,
+    "window_stochastic": q_window_stochastic,
+    "window_atr": q_window_atr,
+    "window_aroon": q_window_aroon,
+    "window_pivot_points": q_window_pivot_points,
+    "window_keltner": q_window_keltner,
+    "window_attribution": q_window_attribution,
+    "window_ichimoku": q_window_ichimoku,
+    "window_adx": q_window_adx,
+    "window_parabolic_sar": q_window_parabolic_sar,
+    "window_heikin_ashi": q_window_heikin_ashi,
+    "window_candle_patterns": q_window_candle_patterns,
+    "window_supertrend": q_window_supertrend,
+    "window_cci": q_window_cci,
+    "window_kama": q_window_kama,
+    "window_linreg_channel": q_window_linreg_channel,
+    "window_funnel_time_constrained": q_window_funnel_time_constrained,
+    "window_mfi": q_window_mfi,
+    "window_fractals": q_window_fractals,
+    "window_ultimate_osc": q_window_ultimate_osc,
+    "window_interval_stabbing": q_window_interval_stabbing,
+    "window_acc_dist": q_window_acc_dist,
+    "window_hull_ma": q_window_hull_ma,
+    "window_longest_streak": q_window_longest_streak,
+    "window_choppiness": q_window_choppiness,
+    "window_awesome_osc": q_window_awesome_osc,
+    "window_control_chart": q_window_control_chart,
+    "window_underwater_duration": q_window_underwater_duration,
+    "window_vol_of_vol": q_window_vol_of_vol,
 }
 
 ORACLES = {
@@ -1022,5 +3192,756 @@ ORACLES = {
         f"(sqrt(CAST({CORR_N} * sxx - sx * sx AS DOUBLE)) * "
         f"sqrt(CAST({CORR_N} * syy - sy * sy AS DOUBLE))), 4) + 0.0 "
         f"END AS rho24h FROM framed WHERE n = {CORR_N}"
+    ),
+    "window_donchian": (
+        "WITH daily AS (SELECT strftime(o_orderdate, '%Y-%m-%d') AS day, "
+        "sum(CAST(o_totalprice AS DECIMAL(18,2))) AS rev FROM orders "
+        "GROUP BY 1), "
+        "framed AS (SELECT day, rev, count(*) OVER w AS n, "
+        "max(rev) OVER w AS hi, min(rev) OVER w AS lo FROM daily "
+        f"WINDOW w AS (ORDER BY day ROWS BETWEEN {DONCH_N} PRECEDING "
+        "AND 1 PRECEDING)) "
+        "SELECT day, CAST(rev AS DOUBLE) AS revenue, "
+        "CAST(hi AS DOUBLE) AS upper, CAST(lo AS DOUBLE) AS lower, "
+        "CASE WHEN rev > hi THEN 'breakout_high' WHEN rev < lo THEN "
+        f"'breakout_low' ELSE 'inside' END AS signal FROM framed WHERE n = {DONCH_N}"
+    ),
+    "window_vwap": (
+        "WITH daily AS (SELECT l_returnflag, "
+        "strftime(l_shipdate, '%Y-%m-%d') AS day, "
+        "sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * "
+        "CAST(l_quantity AS DECIMAL(9,0)) * 100 AS BIGINT)) AS pqc, "
+        "sum(CAST(CAST(l_quantity AS DECIMAL(9,0)) AS BIGINT)) AS q, "
+        "sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS pc, "
+        "count(*) AS n FROM lineitem GROUP BY 1, 2), "
+        "cum AS (SELECT l_returnflag, day, "
+        "sum(pqc::HUGEINT) OVER w AS cpqc, sum(q) OVER w AS cq, pc, n FROM daily "
+        "WINDOW w AS (PARTITION BY l_returnflag ORDER BY day "
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) "
+        "SELECT l_returnflag, day, "
+        "((2 * cpqc * 10000 + 100 * cq) // (2 * 100 * cq)) / 10000.0 AS vwap, "
+        "((2 * pc::HUGEINT * 100 + n) // (2 * n)) / 10000.0 AS day_avg_price, "
+        "CASE WHEN pc::HUGEINT * cq > cpqc * n THEN 'above' "
+        "WHEN pc::HUGEINT * cq < cpqc * n THEN 'below' ELSE 'at' END AS vs_vwap "
+        "FROM cum"
+    ),
+    "window_macd": (
+        "WITH daily AS (SELECT strftime(o_orderdate, '%Y-%m-%d') AS day, "
+        "sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) "
+        "AS cents FROM orders WHERE o_totalprice IS NOT NULL GROUP BY 1), "
+        "framed AS (SELECT day, count(*) OVER w AS n, "
+        "list(cents) OVER w AS xs FROM daily "
+        f"WINDOW w AS (ORDER BY day ROWS BETWEEN {MACD_TRUNC - 1} PRECEDING "
+        "AND CURRENT ROW)), "
+        "lined AS (SELECT day, "
+        f"{_ema_fix('xs', MACD_FAST, 'duckdb')} - "
+        f"{_ema_fix('xs', MACD_SLOW, 'duckdb')} AS mc "
+        f"FROM framed WHERE n = {MACD_TRUNC}), "
+        "sig AS (SELECT day, mc, count(*) OVER w2 AS n2, "
+        f"list(mc + {MACD_OFFSET}) OVER w2 AS ms FROM lined "
+        f"WINDOW w2 AS (ORDER BY day ROWS BETWEEN {MACD_TRUNC - 1} PRECEDING "
+        "AND CURRENT ROW)), "
+        "fin AS (SELECT day, mc, "
+        f"{_ema_fix('ms', MACD_SIGNAL, 'duckdb')} - {MACD_OFFSET} AS sc "
+        f"FROM sig WHERE n2 = {MACD_TRUNC}) "
+        "SELECT day, mc / 100.0 AS macd, sc / 100.0 AS signal, "
+        "(mc - sc) / 100.0 AS hist, "
+        "CASE WHEN mc > sc THEN 'bullish' WHEN mc < sc "
+        "THEN 'bearish' ELSE 'cross' END AS stance FROM fin"
+    ),
+    "window_obv": (
+        "WITH daily AS (SELECT strftime(o_orderdate, '%Y-%m-%d') AS day, "
+        "sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS cents, "
+        "count(*) AS vol FROM orders GROUP BY 1), "
+        "lagged AS (SELECT day, cents, vol, "
+        "lag(cents) OVER (ORDER BY day) AS prev FROM daily), "
+        "signed AS (SELECT day, cents, vol, "
+        "CASE WHEN prev IS NULL THEN 0 WHEN cents > prev THEN vol "
+        "WHEN cents < prev THEN -vol ELSE 0 END AS signed_vol FROM lagged) "
+        "SELECT day, cents / 100.0 AS revenue, vol, "
+        "CAST(sum(signed_vol) OVER (ORDER BY day) AS BIGINT) AS obv FROM signed"
+    ),
+    "window_stochastic": (
+        "WITH daily AS (SELECT strftime(o_orderdate, '%Y-%m-%d') AS day, "
+        "sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS cents "
+        "FROM orders GROUP BY 1), "
+        "framed AS (SELECT day, cents, count(*) OVER w AS n, "
+        "max(cents) OVER w AS hi, min(cents) OVER w AS lo FROM daily "
+        f"WINDOW w AS (ORDER BY day ROWS BETWEEN {STOCH_N - 1} PRECEDING "
+        "AND CURRENT ROW)), "
+        "kd AS (SELECT day, CASE WHEN hi = lo THEN 500 ELSE "
+        "(2000 * (cents - lo) + (hi - lo)) // (2 * (hi - lo)) END AS k_pm "
+        f"FROM framed WHERE n = {STOCH_N}), "
+        "sm AS (SELECT day, k_pm, count(*) OVER w2 AS n2, "
+        "sum(k_pm) OVER w2 AS ks FROM kd "
+        f"WINDOW w2 AS (ORDER BY day ROWS BETWEEN {STOCH_D - 1} PRECEDING "
+        "AND CURRENT ROW)) "
+        "SELECT day, k_pm / 10.0 AS k_pct, "
+        f"((2 * ks + {STOCH_D}) // {2 * STOCH_D}) / 10.0 AS d_pct, "
+        "CASE WHEN k_pm > 800 THEN 'overbought' WHEN k_pm < 200 "
+        f"THEN 'oversold' ELSE 'neutral' END AS zone FROM sm WHERE n2 = {STOCH_D}"
+    ),
+    "window_atr": (
+        "WITH e AS (SELECT event_id, ts, strftime(ts, '%Y-%m-%d') AS day, "
+        "CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents FROM events), "
+        "r AS (SELECT *, row_number() OVER (PARTITION BY day ORDER BY ts, event_id) AS rn_a, "
+        "row_number() OVER (PARTITION BY day ORDER BY ts DESC, event_id DESC) AS rn_d FROM e), "
+        "bars AS (SELECT day, max(CASE WHEN rn_a = 1 THEN cents END) AS open_c, "
+        "max(cents) AS high_c, min(cents) AS low_c, "
+        "max(CASE WHEN rn_d = 1 THEN cents END) AS close_c FROM r GROUP BY 1), "
+        "trd AS (SELECT day, close_c, CASE WHEN lag(close_c) OVER (ORDER BY day) IS NULL "
+        "THEN high_c - low_c ELSE greatest(high_c - low_c, "
+        "abs(high_c - lag(close_c) OVER (ORDER BY day)), "
+        "abs(low_c - lag(close_c) OVER (ORDER BY day))) END AS tr_c FROM bars), "
+        "framed AS (SELECT day, close_c, tr_c, count(*) OVER w AS n, "
+        "sum(tr_c) OVER w AS trs FROM trd "
+        f"WINDOW w AS (ORDER BY day ROWS BETWEEN {ATR_N - 1} PRECEDING "
+        "AND CURRENT ROW)) "
+        "SELECT day, close_c / 100.0 AS close_v, tr_c / 100.0 AS true_range, "
+        f"((2 * trs + {ATR_N}) // {2 * ATR_N}) / 100.0 AS atr "
+        f"FROM framed WHERE n = {ATR_N}"
+    ),
+    "window_aroon": (
+        "WITH daily AS (SELECT strftime(o_orderdate, '%Y-%m-%d') AS day, "
+        "sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS cents "
+        "FROM orders WHERE o_totalprice IS NOT NULL GROUP BY 1), "
+        "framed AS (SELECT day, count(*) OVER w AS n, list(cents) OVER w AS xs "
+        f"FROM daily WINDOW w AS (ORDER BY day ROWS BETWEEN {AROON_N - 1} "
+        "PRECEDING AND CURRENT ROW)), "
+        f"aged AS (SELECT day, "
+        f"{AROON_N} - list_position(xs, list_aggregate(xs, 'max')) AS ds_hi, "
+        f"{AROON_N} - list_position(xs, list_aggregate(xs, 'min')) AS ds_lo "
+        f"FROM framed WHERE n = {AROON_N}) "
+        f"SELECT day, CAST(4 * ({AROON_N} - ds_hi) AS BIGINT) AS aroon_up, "
+        f"CAST(4 * ({AROON_N} - ds_lo) AS BIGINT) AS aroon_down, "
+        "CASE WHEN 4 * (ds_lo - ds_hi) > 50 THEN 'uptrend' "
+        "WHEN 4 * (ds_hi - ds_lo) > 50 THEN 'downtrend' "
+        "ELSE 'ranging' END AS trend FROM aged"
+    ),
+    "window_pivot_points": (
+        "WITH e AS (SELECT event_id, ts, strftime(ts, '%Y-%m-%d') AS day, "
+        "CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents FROM events), "
+        "r AS (SELECT *, row_number() OVER (PARTITION BY day "
+        "ORDER BY ts DESC, event_id DESC) AS rn_d FROM e), "
+        "bars AS (SELECT day, max(cents) AS h, min(cents) AS l, "
+        "max(CASE WHEN rn_d = 1 THEN cents END) AS c FROM r GROUP BY 1), "
+        "prior AS (SELECT day, c, lag(h) OVER (ORDER BY day) AS ph, "
+        "lag(l) OVER (ORDER BY day) AS pl, lag(c) OVER (ORDER BY day) AS pc "
+        "FROM bars), "
+        "pv AS (SELECT day, c, ph, pl, pc, "
+        "(2 * (ph + pl + pc) + 3) // 6 AS p FROM prior WHERE ph IS NOT NULL) "
+        "SELECT day, c / 100.0 AS close_v, p / 100.0 AS pivot, "
+        "(2 * p - pl) / 100.0 AS r1, (2 * p - ph) / 100.0 AS s1, "
+        "(p + ph - pl) / 100.0 AS r2, (p - ph + pl) / 100.0 AS s2, "
+        "CASE WHEN c > p THEN 'above' WHEN c < p THEN 'below' ELSE 'at' END "
+        "AS vs_pivot FROM pv"
+    ),
+    "window_keltner": (
+        "WITH li AS (SELECT l_orderkey AS ok, l_linenumber AS ln, "
+        "strftime(l_shipdate, '%Y-%m-%d') AS day, "
+        "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents "
+        "FROM lineitem), "
+        "r AS (SELECT *, row_number() OVER (PARTITION BY day "
+        "ORDER BY ok DESC, ln DESC) AS rn_d FROM li), "
+        "bars AS (SELECT day, max(cents) AS h, min(cents) AS l, "
+        "max(CASE WHEN rn_d = 1 THEN cents END) AS c FROM r GROUP BY 1), "
+        "trd AS (SELECT day, c, CASE WHEN lag(c) OVER (ORDER BY day) IS NULL "
+        "THEN h - l ELSE greatest(h - l, abs(h - lag(c) OVER (ORDER BY day)), "
+        "abs(l - lag(c) OVER (ORDER BY day))) END AS tr_c FROM bars), "
+        "framed AS (SELECT day, c, count(*) OVER we AS n, "
+        "list(c) OVER we AS cs, sum(tr_c) OVER wa AS trs FROM trd "
+        f"WINDOW we AS (ORDER BY day ROWS BETWEEN {KELT_TRUNC - 1} PRECEDING "
+        "AND CURRENT ROW), "
+        f"wa AS (ORDER BY day ROWS BETWEEN {KELT_ATR - 1} PRECEDING AND "
+        "CURRENT ROW)), "
+        "fin AS (SELECT day, c, "
+        f"{_ema_fix('cs', KELT_EMA, 'duckdb')} AS mid, "
+        f"(2 * trs + {KELT_ATR}) // {2 * KELT_ATR} AS atr "
+        f"FROM framed WHERE n = {KELT_TRUNC}) "
+        "SELECT day, c / 100.0 AS close_v, mid / 100.0 AS middle, "
+        "(mid + 2 * atr) / 100.0 AS upper, (mid - 2 * atr) / 100.0 AS lower, "
+        "CASE WHEN c > mid + 2 * atr THEN 'above_band' "
+        "WHEN c < mid - 2 * atr THEN 'below_band' ELSE 'inside' END "
+        "AS position FROM fin"
+    ),
+    "window_attribution": (
+        "WITH e AS (SELECT user_id, event_id, event_type, ts, "
+        "CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents "
+        "FROM events), "
+        "marked AS (SELECT *, max(CASE WHEN event_type = 'click' THEN ts END) "
+        "OVER (PARTITION BY user_id ORDER BY ts, event_id "
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS last_click_ts "
+        "FROM e), "
+        "p AS (SELECT strftime(ts, '%Y-%m-%d') AS day, cents, "
+        "CASE WHEN last_click_ts IS NOT NULL AND "
+        f"ts <= last_click_ts + INTERVAL {ATTR_WINDOW_H} HOUR "
+        "THEN 1 ELSE 0 END AS attr FROM marked WHERE event_type = 'purchase'), "
+        "d AS (SELECT day, count(*) AS n_purchases, "
+        "CAST(sum(attr) AS BIGINT) AS n_attributed, "
+        "CAST(sum(CASE WHEN attr = 1 THEN cents ELSE 0 END) AS BIGINT) AS ac "
+        "FROM p GROUP BY 1) "
+        "SELECT day, n_purchases, n_attributed, ac / 100.0 AS attributed_revenue, "
+        "CAST((2000 * n_attributed + n_purchases) // (2 * n_purchases) "
+        "AS BIGINT) AS attach_pm FROM d"
+    ),
+    "window_ichimoku": (
+        "WITH li AS (SELECT l_orderkey AS ok, l_linenumber AS ln, "
+        "strftime(l_shipdate, '%Y-%m-%d') AS day, "
+        "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents "
+        "FROM lineitem), "
+        "r AS (SELECT *, row_number() OVER (PARTITION BY day "
+        "ORDER BY ok DESC, ln DESC) AS rn_d FROM li), "
+        "bars AS (SELECT day, max(cents) AS h, min(cents) AS l, "
+        "max(CASE WHEN rn_d = 1 THEN cents END) AS c FROM r GROUP BY 1), "
+        "lined AS (SELECT day, c, "
+        "(max(h) OVER w9 + min(l) OVER w9 + 1) // 2 AS tenkan_c, "
+        "(max(h) OVER w26 + min(l) OVER w26 + 1) // 2 AS kijun_c, "
+        "(max(h) OVER w52 + min(l) OVER w52 + 1) // 2 AS senkoub_c, "
+        "count(*) OVER w52 AS n52 FROM bars "
+        f"WINDOW w9 AS (ORDER BY day ROWS BETWEEN {ICHI_TENKAN - 1} "
+        "PRECEDING AND CURRENT ROW), "
+        f"w26 AS (ORDER BY day ROWS BETWEEN {ICHI_KIJUN - 1} "
+        "PRECEDING AND CURRENT ROW), "
+        f"w52 AS (ORDER BY day ROWS BETWEEN {ICHI_SENKOU - 1} "
+        "PRECEDING AND CURRENT ROW)), "
+        f"full_ AS (SELECT * FROM lined WHERE n52 = {ICHI_SENKOU}), "
+        "disp AS (SELECT day, c, tenkan_c, kijun_c, "
+        f"lag((tenkan_c + kijun_c + 1) // 2, {ICHI_KIJUN}) OVER "
+        "(ORDER BY day) AS senkou_a_c, "
+        f"lag(senkoub_c, {ICHI_KIJUN}) OVER (ORDER BY day) AS senkou_b_c, "
+        f"lead(c, {ICHI_KIJUN}) OVER (ORDER BY day) AS chikou_c FROM full_) "
+        "SELECT day, c / 100.0 AS close_v, tenkan_c / 100.0 AS tenkan, "
+        "kijun_c / 100.0 AS kijun, senkou_a_c / 100.0 AS senkou_a, "
+        "senkou_b_c / 100.0 AS senkou_b, chikou_c / 100.0 AS chikou, "
+        "CASE WHEN c > greatest(senkou_a_c, senkou_b_c) THEN 'above_cloud' "
+        "WHEN c < least(senkou_a_c, senkou_b_c) THEN 'below_cloud' "
+        "ELSE 'in_cloud' END AS position "
+        "FROM disp WHERE senkou_a_c IS NOT NULL"
+    ),
+    "window_adx": (
+            "WITH li AS (SELECT l_orderkey AS ok, l_linenumber AS ln, "
+            "strftime(l_shipdate, '%Y-%m-%d') AS day, "
+            "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) "
+            "AS cents FROM lineitem), "
+            "r AS (SELECT *, row_number() OVER (PARTITION BY day "
+            "ORDER BY ok DESC, ln DESC) AS rn_d FROM li), "
+            "bars AS (SELECT day, max(cents) AS h, min(cents) AS l, "
+            "max(CASE WHEN rn_d = 1 THEN cents END) AS c FROM r GROUP BY 1), "
+            "dm AS (SELECT day, "
+            "CAST(CASE WHEN lag(h) OVER w IS NULL OR NOT "
+            "(h - lag(h) OVER w > lag(l) OVER w - l AND h - lag(h) OVER w > 0) "
+            "THEN 0 ELSE h - lag(h) OVER w END AS BIGINT) AS p, "
+            "CAST(CASE WHEN lag(l) OVER w IS NULL OR NOT "
+            "(lag(l) OVER w - l > h - lag(h) OVER w AND lag(l) OVER w - l > 0) "
+            "THEN 0 ELSE lag(l) OVER w - l END AS BIGINT) AS m, "
+            "CAST(CASE WHEN lag(c) OVER w IS NULL THEN h - l ELSE "
+            "greatest(h - l, abs(h - lag(c) OVER w), abs(l - lag(c) OVER w)) "
+            "END AS BIGINT) AS t FROM bars WINDOW w AS (ORDER BY day)), "
+            "framed AS (SELECT day, count(*) OVER wf AS n, "
+            "list({'p': p, 'm': m, 't': t}) OVER wf AS arr FROM dm "
+            f"WINDOW wf AS (ORDER BY day ROWS BETWEEN {ADX_TRUNC - 1} "
+            "PRECEDING AND CURRENT ROW)), "
+            f"sm AS (SELECT day, {_wilder_fold3('arr', 'duckdb')} AS s "
+            f"FROM framed WHERE n = {ADX_TRUNC}), "
+            "di AS (SELECT day, "
+            "(2 * 10000 * s.p + s.t) // (2 * s.t) AS dip, "
+            "(2 * 10000 * s.m + s.t) // (2 * s.t) AS dim "
+            "FROM sm WHERE s.t > 0), "
+            "dx AS (SELECT day, dip, dim, "
+            "(2 * 10000 * abs(dip - dim) + (dip + dim)) // (2 * (dip + dim)) "
+            "AS dx FROM di WHERE dip + dim > 0), "
+            "framed2 AS (SELECT day, dip, dim, dx, count(*) OVER wf2 AS n2, "
+            "list(dx) OVER wf2 AS dxs FROM dx "
+            f"WINDOW wf2 AS (ORDER BY day ROWS BETWEEN {ADX_TRUNC - 1} "
+            "PRECEDING AND CURRENT ROW)) "
+            "SELECT day, dip / 100.0 AS di_plus, dim / 100.0 AS di_minus, "
+            f"dx / 100.0 AS dx_v, {_wilder_fold1('dxs', 'duckdb')} / 100.0 "
+            f"AS adx FROM framed2 WHERE n2 = {ADX_TRUNC}"
+        ),
+    "window_parabolic_sar": (
+        "WITH RECURSIVE bars AS MATERIALIZED (SELECT "
+        "strftime(l_shipdate, '%Y-%m-%d') AS day, "
+        "max(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS h, "
+        "min(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS l "
+        "FROM lineitem GROUP BY 1), "
+        "idx AS MATERIALIZED (SELECT day, h, l, "
+        "row_number() OVER (ORDER BY day) AS i FROM bars), "
+        "walk(i, day, t, sar, ep, af) AS ("
+        "SELECT i, day, CAST(1 AS BIGINT), l, h, "
+        f"CAST({SAR_AF0} AS BIGINT) FROM idx WHERE i = 1 "
+        "UNION ALL SELECT n.i, n.day, "
+        f"CAST({_SAR_D['t']} AS BIGINT), {_SAR_D['sar']}, {_SAR_D['ep']}, "
+        f"CAST({_SAR_D['af']} AS BIGINT) "
+        "FROM walk w JOIN idx n ON n.i = w.i + 1) "
+        "SELECT day, t AS trend, sar / 100.0 AS sar, ep / 100.0 AS ep, "
+        "af AS af_x100 FROM walk"
+    ),
+    "window_heikin_ashi": (
+        "WITH RECURSIVE li AS (SELECT l_orderkey AS ok, l_linenumber AS ln, "
+        "strftime(l_shipdate, '%Y-%m-%d') AS day, "
+        "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents "
+        "FROM lineitem WHERE l_orderkey IS NOT NULL), "
+        "r AS (SELECT *, row_number() OVER (PARTITION BY day "
+        "ORDER BY ok, ln) AS rn_a, row_number() OVER (PARTITION BY day "
+        "ORDER BY ok DESC, ln DESC) AS rn_d FROM li), "
+        "bars AS (SELECT day, max(CASE WHEN rn_a = 1 THEN cents END) AS o, "
+        "max(cents) AS h, min(cents) AS l, "
+        "max(CASE WHEN rn_d = 1 THEN cents END) AS c FROM r GROUP BY 1), "
+        "idx AS MATERIALIZED (SELECT day, o, h, l, c, "
+        "row_number() OVER (ORDER BY day) AS i FROM bars), "
+        "walk(i, day, o, h, l, c) AS ("
+        "SELECT i, day, (o + c + 1) // 2, h, l, (o + h + l + c + 2) // 4 "
+        "FROM idx WHERE i = 1 "
+        "UNION ALL SELECT n.i, n.day, "
+        f"{_HA_D['o']}, {_HA_D['h']}, {_HA_D['l']}, {_HA_D['c']} "
+        "FROM walk w JOIN idx n ON n.i = w.i + 1) "
+        "SELECT day, o / 100.0 AS ha_open, h / 100.0 AS ha_high, "
+        "l / 100.0 AS ha_low, c / 100.0 AS ha_close, "
+        "CASE WHEN c > o THEN 'bull' WHEN c < o THEN 'bear' ELSE 'flat' END "
+        "AS ha_stance FROM walk"
+    ),
+    "window_candle_patterns": (
+        "WITH li AS (SELECT l_orderkey AS ok, l_linenumber AS ln, "
+        "strftime(l_shipdate, '%Y-%m-%d') AS day, "
+        "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents "
+        "FROM lineitem WHERE l_orderkey IS NOT NULL), "
+        "r AS (SELECT *, row_number() OVER (PARTITION BY day "
+        "ORDER BY ok, ln) AS rn_a, row_number() OVER (PARTITION BY day "
+        "ORDER BY ok DESC, ln DESC) AS rn_d FROM li), "
+        "bars AS (SELECT day, max(CASE WHEN rn_a = 1 THEN cents END) AS o, "
+        "max(cents) AS h, min(cents) AS l, "
+        "max(CASE WHEN rn_d = 1 THEN cents END) AS c FROM r GROUP BY 1), "
+        "lined AS (SELECT day, o, h, l, c, lag(o) OVER (ORDER BY day) AS po, "
+        "lag(c) OVER (ORDER BY day) AS pc FROM bars) "
+        "SELECT day, o / 100.0 AS open_v, c / 100.0 AS close_v, "
+        f"CASE WHEN abs(c - o) * 1000 <= (h - l) * {DOJI_BODY_PM} THEN 'doji' "
+        "WHEN pc < po AND c > o AND o <= pc AND c >= po "
+        "THEN 'bullish_engulfing' "
+        "WHEN pc > po AND c < o AND o >= pc AND c <= po "
+        "THEN 'bearish_engulfing' "
+        "WHEN least(o, c) - l >= 2 * abs(c - o) "
+        "AND 3 * (greatest(o, c) - l) >= 2 * (h - l) THEN 'hammer' "
+        "ELSE 'none' END AS pattern "
+        "FROM lined WHERE po IS NOT NULL"
+    ),
+    "window_supertrend": (
+        "WITH RECURSIVE li AS (SELECT l_orderkey AS ok, l_linenumber AS ln, "
+        "strftime(l_shipdate, '%Y-%m-%d') AS day, "
+        "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents "
+        "FROM lineitem), "
+        "r AS (SELECT *, row_number() OVER (PARTITION BY day "
+        "ORDER BY ok DESC, ln DESC) AS rn_d FROM li), "
+        "bars AS (SELECT day, max(cents) AS h, min(cents) AS l, "
+        "max(CASE WHEN rn_d = 1 THEN cents END) AS c FROM r GROUP BY 1), "
+        "trd AS (SELECT day, h, l, c, CASE WHEN lag(c) OVER (ORDER BY day) "
+        "IS NULL THEN h - l ELSE greatest(h - l, "
+        "abs(h - lag(c) OVER (ORDER BY day)), "
+        "abs(l - lag(c) OVER (ORDER BY day))) END AS tr_c FROM bars), "
+        "banded AS (SELECT day, c, "
+        f"(h + l + 1) // 2 + {ST_MULT} * ((2 * sum(tr_c) OVER wa + "
+        f"{ST_ATR_N}) // {2 * ST_ATR_N}) AS bu, "
+        f"(h + l + 1) // 2 - {ST_MULT} * ((2 * sum(tr_c) OVER wa + "
+        f"{ST_ATR_N}) // {2 * ST_ATR_N}) AS bl, "
+        "count(*) OVER wa AS na FROM trd "
+        f"WINDOW wa AS (ORDER BY day ROWS BETWEEN {ST_ATR_N - 1} "
+        "PRECEDING AND CURRENT ROW)), "
+        f"idx AS MATERIALIZED (SELECT day, bu, bl, c, "
+        f"row_number() OVER (ORDER BY day) AS i FROM banded "
+        f"WHERE na = {ST_ATR_N}), "
+        "walk(i, day, fub, flb, t, pc) AS ("
+        "SELECT i, day, bu, bl, CAST(1 AS BIGINT), c FROM idx WHERE i = 1 "
+        "UNION ALL SELECT n.i, n.day, "
+        f"{_ST_D['fub']}, {_ST_D['flb']}, CAST({_ST_D['t']} AS BIGINT), "
+        f"{_ST_D['pc']} "
+        "FROM walk w JOIN idx n ON n.i = w.i + 1) "
+        "SELECT day, t AS trend, fub / 100.0 AS upper_band, "
+        "flb / 100.0 AS lower_band, "
+        "(CASE WHEN t = 1 THEN flb ELSE fub END) / 100.0 AS supertrend "
+        "FROM walk"
+    ),
+    "window_cci": (
+        "WITH li AS (SELECT l_orderkey AS ok, l_linenumber AS ln, "
+        "strftime(l_shipdate, '%Y-%m-%d') AS day, "
+        "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) "
+        "AS cents FROM lineitem), "
+        "r AS (SELECT *, row_number() OVER (PARTITION BY day "
+        "ORDER BY ok DESC, ln DESC) AS rn_d FROM li), "
+        "bars AS (SELECT day, max(cents) + min(cents) "
+        "+ max(CASE WHEN rn_d = 1 THEN cents END) AS tp3 FROM r GROUP BY 1), "
+        "framed AS (SELECT day, tp3, "
+        f"list(tp3) OVER (ORDER BY day ROWS BETWEEN {CCI_N - 1} PRECEDING "
+        "AND CURRENT ROW) AS arr, "
+        f"count(*) OVER (ORDER BY day ROWS BETWEEN {CCI_N - 1} PRECEDING "
+        "AND CURRENT ROW) AS n FROM bars), "
+        "scored AS (SELECT day, tp3, "
+        "list_reduce(list_prepend(CAST(0 AS BIGINT), arr), "
+        "(acc, x) -> acc + x) AS s, arr "
+        f"FROM framed WHERE n = {CCI_N}) "
+        "SELECT day, tp3 / 3.0 / 100.0 AS tp, "
+        f"round(200.0 * {CCI_N} * ({CCI_N} * tp3 - s) / "
+        "(3.0 * list_reduce(list_prepend(CAST(0 AS BIGINT), "
+        f"list_transform(arr, x -> abs({CCI_N} * x - s))), "
+        "(acc, v) -> acc + v)), 6) AS cci FROM scored"
+    ),
+    "window_kama": (
+        "WITH li AS (SELECT l_orderkey AS ok, l_linenumber AS ln, "
+        "strftime(l_shipdate, '%Y-%m-%d') AS day, "
+        "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) "
+        "AS cents FROM lineitem), "
+        "r AS (SELECT *, row_number() OVER (PARTITION BY day "
+        "ORDER BY ok DESC, ln DESC) AS rn_d FROM li), "
+        "bars AS (SELECT day, max(CASE WHEN rn_d = 1 THEN cents END) AS c "
+        "FROM r GROUP BY 1), "
+        "diffed AS (SELECT day, c, "
+        f"abs(c - lag(c, {KAMA_N}) OVER (ORDER BY day)) AS chg, "
+        "abs(c - lag(c, 1) OVER (ORDER BY day)) AS d1 FROM bars), "
+        "vol AS (SELECT day, c, chg, "
+        f"sum(d1) OVER (ORDER BY day ROWS BETWEEN {KAMA_N - 1} PRECEDING "
+        "AND CURRENT ROW) AS vol, "
+        f"count(d1) OVER (ORDER BY day ROWS BETWEEN {KAMA_N - 1} PRECEDING "
+        "AND CURRENT ROW) AS nv FROM diffed), "
+        "scored AS (SELECT day, c, "
+        "(CASE WHEN vol > 0 THEN chg / CAST(vol AS DOUBLE) ELSE 0.0 END "
+        f"* ({KAMA_FAST!r} - {KAMA_SLOW!r}) + {KAMA_SLOW!r}) "
+        "* (CASE WHEN vol > 0 THEN chg / CAST(vol AS DOUBLE) ELSE 0.0 END "
+        f"* ({KAMA_FAST!r} - {KAMA_SLOW!r}) + {KAMA_SLOW!r}) AS sc "
+        f"FROM vol WHERE chg IS NOT NULL AND nv = {KAMA_N}), "
+        "framed AS (SELECT day, "
+        "list({'day': day, 'sc': sc, 'c': c}) OVER "
+        "(ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) "
+        "AS arr FROM scored) "
+        # acc is a struct of the SAME shape as the elements; only .c
+        # accumulates and it reads only its own slot, so DuckDB 1.0's
+        # in-place field-by-field fold mutation is harmless here
+        "SELECT day, arr[-1].c / 100.0 AS close, "
+        "round(list_reduce(list_transform(arr, x -> "
+        "{'sc': x.sc, 'c': CAST(x.c AS DOUBLE)}), "
+        "(acc, x) -> {'sc': x.sc, 'c': acc.c + x.sc * (x.c - acc.c)}).c "
+        "/ 100.0, 6) AS kama FROM framed"
+    ),
+    "window_linreg_channel": (
+        "WITH li AS (SELECT "
+        f"date_diff('day', DATE '{FISCAL_ANCHOR}', l_shipdate) AS x, "
+        "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) "
+        "AS cents, l_orderkey AS ok, l_linenumber AS ln FROM lineitem), "
+        "r AS (SELECT *, row_number() OVER (PARTITION BY x "
+        "ORDER BY ok DESC, ln DESC) AS rn_d FROM li), "
+        "bars AS (SELECT x, max(CASE WHEN rn_d = 1 THEN cents END) AS y "
+        "FROM r GROUP BY 1), "
+        "sums AS (SELECT x, y, "
+        f"count(*) OVER w AS n, sum(x) OVER w AS sx, sum(y) OVER w AS sy, "
+        "sum(x::HUGEINT * y) OVER w AS sxy, sum(x * x) OVER w AS sxx, "
+        "sum(y::HUGEINT * y) OVER w AS syy FROM bars "
+        f"WINDOW w AS (ORDER BY x ROWS BETWEEN {LRC_N - 1} PRECEDING "
+        "AND CURRENT ROW)), "
+        "s AS (SELECT x, y, n, "
+        "CAST(n * sxy - sx::HUGEINT * sy AS DOUBLE) AS bsxy, "
+        "CAST(n * sxx - sx * sx AS DOUBLE) AS bsxx, "
+        "CAST(n * syy - sy::HUGEINT * sy AS DOUBLE) AS bsyy, sx, sy "
+        f"FROM sums WHERE n = {LRC_N}) "
+        "SELECT CAST(x AS INT) AS x, y / 100.0 AS close, "
+        "round(((CAST(sy AS DOUBLE) - bsxy / bsxx * sx) / n "
+        "+ bsxy / bsxx * x) / 100.0, 6) AS mid, "
+        "round(((CAST(sy AS DOUBLE) - bsxy / bsxx * sx) / n "
+        "+ bsxy / bsxx * x "
+        f"+ {LRC_SIGMAS!r} * sqrt((bsyy - bsxy * bsxy / bsxx) "
+        "/ (n * (n - 2)))) / 100.0, 6) AS upper, "
+        "round(((CAST(sy AS DOUBLE) - bsxy / bsxx * sx) / n "
+        "+ bsxy / bsxx * x "
+        f"- {LRC_SIGMAS!r} * sqrt((bsyy - bsxy * bsxy / bsxx) "
+        "/ (n * (n - 2)))) / 100.0, 6) AS lower, "
+        "round(bsxy / bsxx, 6) AS slope_cents_per_day FROM s"
+    ),
+    "window_funnel_time_constrained": (
+        "WITH e AS (SELECT user_id, event_type, "
+        "epoch_us(ts) AS us FROM events), "
+        f"s1 AS (SELECT user_id, min(us) AS t FROM e "
+        f"WHERE event_type = '{FUNNEL_STEPS[0]}' GROUP BY 1), "
+        f"s2 AS (SELECT e.user_id, min(us) AS t FROM e JOIN s1 "
+        "ON e.user_id = s1.user_id AND e.us > s1.t "
+        f"AND e.us <= s1.t + {FUNNEL_WINDOW_H * 3600 * 1000000} "
+        f"WHERE event_type = '{FUNNEL_STEPS[1]}' GROUP BY 1), "
+        f"s3 AS (SELECT e.user_id, min(us) AS t FROM e JOIN s2 "
+        "ON e.user_id = s2.user_id AND e.us > s2.t "
+        f"AND e.us <= s2.t + {FUNNEL_WINDOW_H * 3600 * 1000000} "
+        f"WHERE event_type = '{FUNNEL_STEPS[2]}' GROUP BY 1), "
+        "c AS (SELECT (SELECT count(*) FROM s1) AS n1, "
+        "(SELECT count(*) FROM s2) AS n2, "
+        "(SELECT count(*) FROM s3) AS n3) "
+        f"SELECT 1 AS step, '{FUNNEL_STEPS[0]}' AS event_type, "
+        "CAST(n1 AS BIGINT) AS n_users, CAST(1000 AS BIGINT) AS conv_pm "
+        "FROM c "
+        f"UNION ALL SELECT 2, '{FUNNEL_STEPS[1]}', CAST(n2 AS BIGINT), "
+        "CAST(CASE WHEN n1 > 0 THEN (2 * 1000 * n2 + n1) // (2 * n1) "
+        "ELSE 1000 END AS BIGINT) FROM c "
+        f"UNION ALL SELECT 3, '{FUNNEL_STEPS[2]}', CAST(n3 AS BIGINT), "
+        "CAST(CASE WHEN n2 > 0 THEN (2 * 1000 * n3 + n2) // (2 * n2) "
+        "ELSE 1000 END AS BIGINT) FROM c"
+    ),
+    "window_mfi": (
+        "WITH li AS (SELECT l_orderkey AS ok, l_linenumber AS ln, "
+        "strftime(l_shipdate, '%Y-%m-%d') AS day, "
+        "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) "
+        "AS cents, CAST(l_quantity AS BIGINT) AS qty FROM lineitem), "
+        "r AS (SELECT *, row_number() OVER (PARTITION BY day "
+        "ORDER BY ok DESC, ln DESC) AS rn_d FROM li), "
+        "bars AS (SELECT day, max(cents) + min(cents) "
+        "+ max(CASE WHEN rn_d = 1 THEN cents END) AS tp3, "
+        "CAST(sum(qty) AS BIGINT) AS vol FROM r GROUP BY 1), "
+        "flows AS (SELECT day, tp3, tp3 * vol AS mf, "
+        "lag(tp3) OVER (ORDER BY day) AS ptp3 FROM bars), "
+        "summed AS (SELECT day, "
+        "CAST(sum(CASE WHEN tp3 > ptp3 THEN mf ELSE 0 END) OVER w "
+        "AS BIGINT) AS pos, "
+        "CAST(sum(CASE WHEN tp3 < ptp3 THEN mf ELSE 0 END) OVER w "
+        "AS BIGINT) AS neg, count(*) OVER w AS nw "
+        "FROM flows WHERE ptp3 IS NOT NULL "
+        f"WINDOW w AS (ORDER BY day ROWS BETWEEN {MFI_N - 1} PRECEDING "
+        "AND CURRENT ROW)) "
+        "SELECT day, pos, neg, "
+        "CAST(CASE WHEN pos + neg = 0 THEN 500 "
+        "ELSE (2 * 1000 * pos::HUGEINT + (pos + neg)) // (2 * (pos + neg)) END "
+        f"AS BIGINT) AS mfi_pm FROM summed WHERE nw = {MFI_N}"
+    ),
+    "window_fractals": (
+        "WITH li AS (SELECT strftime(l_shipdate, '%Y-%m-%d') AS day, "
+        "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) "
+        "AS cents FROM lineitem), "
+        "bars AS (SELECT day, max(cents) AS h, min(cents) AS l "
+        "FROM li GROUP BY 1), "
+        "scored AS (SELECT day, h / 100.0 AS high, l / 100.0 AS low, "
+        "coalesce("
+        + " AND ".join(
+            f"h > lag(h, {k}) OVER (ORDER BY day) "
+            f"AND h > lead(h, {k}) OVER (ORDER BY day)"
+            for k in range(1, FRACTAL_K + 1)
+        )
+        + ", false) AS fractal_high, "
+        "coalesce("
+        + " AND ".join(
+            f"l < lag(l, {k}) OVER (ORDER BY day) "
+            f"AND l < lead(l, {k}) OVER (ORDER BY day)"
+            for k in range(1, FRACTAL_K + 1)
+        )
+        + ", false) AS fractal_low FROM bars) "
+        "SELECT * FROM scored WHERE fractal_high OR fractal_low"
+    ),
+    "window_ultimate_osc": (
+        "WITH li AS (SELECT l_orderkey AS ok, l_linenumber AS ln, "
+        "strftime(l_shipdate, '%Y-%m-%d') AS day, "
+        "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) "
+        "AS cents FROM lineitem), "
+        "r AS (SELECT *, row_number() OVER (PARTITION BY day "
+        "ORDER BY ok DESC, ln DESC) AS rn_d FROM li), "
+        "bars AS (SELECT day, max(cents) AS h, min(cents) AS l, "
+        "max(CASE WHEN rn_d = 1 THEN cents END) AS c FROM r GROUP BY 1), "
+        "flows AS (SELECT day, "
+        "c - least(l, lag(c) OVER (ORDER BY day)) AS bp, "
+        "greatest(h, lag(c) OVER (ORDER BY day)) "
+        "- least(l, lag(c) OVER (ORDER BY day)) AS tr, "
+        "lag(c) OVER (ORDER BY day) AS pc FROM bars), "
+        "sums AS (SELECT day, "
+        f"sum(bp) OVER wf AS bp_f, sum(tr) OVER wf AS tr_f, "
+        f"sum(bp) OVER wm AS bp_m, sum(tr) OVER wm AS tr_m, "
+        f"sum(bp) OVER ws AS bp_s, sum(tr) OVER ws AS tr_s, "
+        "count(*) OVER ws AS nw FROM flows WHERE pc IS NOT NULL "
+        f"WINDOW wf AS (ORDER BY day ROWS BETWEEN {UO_FAST - 1} PRECEDING "
+        "AND CURRENT ROW), "
+        f"wm AS (ORDER BY day ROWS BETWEEN {UO_MID - 1} PRECEDING "
+        "AND CURRENT ROW), "
+        f"ws AS (ORDER BY day ROWS BETWEEN {UO_SLOW - 1} PRECEDING "
+        "AND CURRENT ROW)) "
+        "SELECT day, round(100.0 * ("
+        "4.0 * bp_f / tr_f + 2.0 * bp_m / tr_m + bp_s / tr_s) / 7.0, 6) "
+        f"AS ultimate_osc FROM sums WHERE nw = {UO_SLOW}"
+    ),
+    "window_interval_stabbing": (
+        "WITH deltas AS (SELECT "
+        "date_diff('day', DATE '1991-12-30', o_orderdate) AS x, 1 AS d "
+        "FROM orders UNION ALL SELECT "
+        f"date_diff('day', DATE '1991-12-30', o_orderdate) "
+        f"+ {STAB_OPEN_DAYS}, -1 FROM orders), "
+        "per AS (SELECT x, sum(d) AS net FROM deltas GROUP BY 1) "
+        "SELECT CAST(x AS INT) AS x, CAST(net AS BIGINT) AS net_change, "
+        "CAST(sum(net) OVER (ORDER BY x ROWS UNBOUNDED PRECEDING) "
+        "AS BIGINT) AS open_orders FROM per"
+    ),
+    "window_acc_dist": (
+        "WITH li AS (SELECT l_orderkey AS ok, l_linenumber AS ln, "
+        "strftime(l_shipdate, '%Y-%m-%d') AS day, "
+        "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) "
+        "AS cents, CAST(l_quantity AS BIGINT) AS qty FROM lineitem), "
+        "r AS (SELECT *, row_number() OVER (PARTITION BY day "
+        "ORDER BY ok DESC, ln DESC) AS rn_d FROM li), "
+        "bars AS (SELECT day, max(cents) AS h, min(cents) AS l, "
+        "max(CASE WHEN rn_d = 1 THEN cents END) AS c, "
+        "CAST(sum(qty) AS BIGINT) AS v FROM r GROUP BY 1), "
+        "scored AS (SELECT day, CASE WHEN h = l THEN 0 "
+        "WHEN 2 * c - l - h >= 0 THEN "
+        "(2 * 100 * (2 * c - l - h) * v + (h - l)) // (2 * (h - l)) "
+        "ELSE -((2 * 100 * (l + h - 2 * c) * v + (h - l)) "
+        "// (2 * (h - l))) END AS inc_x FROM bars) "
+        "SELECT day, inc_x / 100.0 AS ad_increment, "
+        "CAST(sum(inc_x) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING) "
+        "AS BIGINT) / 100.0 AS ad_line FROM scored"
+    ),
+    "window_hull_ma": (
+        "WITH li AS (SELECT l_orderkey AS ok, l_linenumber AS ln, "
+        "strftime(l_shipdate, '%Y-%m-%d') AS day, "
+        "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) "
+        "AS cents FROM lineitem), "
+        "r AS (SELECT *, row_number() OVER (PARTITION BY day "
+        "ORDER BY ok DESC, ln DESC) AS rn_d FROM li), "
+        "bars AS (SELECT day, max(CASE WHEN rn_d = 1 THEN cents END) AS c "
+        "FROM r GROUP BY 1), "
+        "pos AS (SELECT day, c, CAST(row_number() OVER (ORDER BY day) "
+        "AS BIGINT) AS rn FROM bars), "
+        "staged AS (SELECT day, rn, "
+        f"count(*) OVER wn AS nw, "
+        f"({HMA_H} - rn) * sum(c::HUGEINT) OVER wh "
+        "+ sum(c::HUGEINT * rn) OVER wh AS nh, "
+        f"({HMA_N} - rn) * sum(c::HUGEINT) OVER wn "
+        "+ sum(c::HUGEINT * rn) OVER wn AS nn "
+        "FROM pos "
+        f"WINDOW wh AS (ORDER BY day ROWS BETWEEN {HMA_H - 1} PRECEDING "
+        "AND CURRENT ROW), "
+        f"wn AS (ORDER BY day ROWS BETWEEN {HMA_N - 1} PRECEDING "
+        "AND CURRENT ROW)), "
+        f"raw AS (SELECT day, rn, 2 * {_D_N} * nh - {_D_H} * nn AS rawn "
+        f"FROM staged WHERE nw = {HMA_N}), "
+        "final AS (SELECT day, "
+        f"({HMA_S} - rn) * sum(rawn) OVER ws + sum(rawn * rn) OVER ws "
+        "AS hman, count(*) OVER ws AS sw FROM raw "
+        f"WINDOW ws AS (ORDER BY day ROWS BETWEEN {HMA_S - 1} PRECEDING "
+        "AND CURRENT ROW)) "
+        f"SELECT day, CAST(hman AS DOUBLE) / {float(_D_N * _D_H * 2 * _D_S)!r} "
+        f"* 2.0 / 100.0 AS hma FROM final WHERE sw = {HMA_S}"
+    ),
+    "window_longest_streak": (
+        "WITH daily AS (SELECT "
+        "date_diff('day', DATE '1991-12-30', o_orderdate) AS x, "
+        "CAST(CAST(sum(o_totalprice) AS DECIMAL(18,2)) * 100 AS BIGINT) "
+        "AS c FROM orders GROUP BY 1), "
+        "dirs AS (SELECT x, CASE WHEN c > lag(c) OVER (ORDER BY x) THEN 1 "
+        "WHEN c < lag(c) OVER (ORDER BY x) THEN -1 ELSE 0 END AS d, "
+        "lag(x) OVER (ORDER BY x) AS px FROM daily), "
+        "f AS (SELECT x, d FROM dirs WHERE px IS NOT NULL), "
+        "runs AS (SELECT d, x - row_number() OVER (PARTITION BY d "
+        "ORDER BY x) AS grp, x FROM f), "
+        "rl AS (SELECT d, grp, count(*) AS len, max(x) AS last_x "
+        "FROM runs GROUP BY 1, 2), "
+        "mx AS (SELECT max(x) AS mx FROM f) "
+        "SELECT CAST(max(CASE WHEN d = 1 THEN len END) AS BIGINT) "
+        "AS longest_up, "
+        "CAST(max(CASE WHEN d = -1 THEN len END) AS BIGINT) "
+        "AS longest_down, "
+        "CAST(max(CASE WHEN last_x = mx THEN d * len END) AS BIGINT) "
+        "AS current_streak FROM rl, mx"
+    ),
+    "window_choppiness": (
+        "WITH li AS (SELECT l_orderkey AS ok, l_linenumber AS ln, "
+        "strftime(l_shipdate, '%Y-%m-%d') AS day, "
+        "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) "
+        "AS cents FROM lineitem), "
+        "r AS (SELECT *, row_number() OVER (PARTITION BY day "
+        "ORDER BY ok DESC, ln DESC) AS rn_d FROM li), "
+        "bars AS (SELECT day, max(cents) AS h, min(cents) AS l, "
+        "max(CASE WHEN rn_d = 1 THEN cents END) AS c FROM r GROUP BY 1), "
+        "tr AS (SELECT day, h, l, "
+        "greatest(h, lag(c) OVER (ORDER BY day)) "
+        "- least(l, lag(c) OVER (ORDER BY day)) AS tr, "
+        "lag(c) OVER (ORDER BY day) AS pc FROM bars), "
+        "s AS (SELECT day, sum(tr) OVER wf AS trs, max(h) OVER wf AS hh, "
+        "min(l) OVER wf AS ll, count(*) OVER wf AS nw "
+        "FROM tr WHERE pc IS NOT NULL "
+        f"WINDOW wf AS (ORDER BY day ROWS BETWEEN {CHOP_N - 1} PRECEDING "
+        "AND CURRENT ROW)) "
+        "SELECT day, round(100.0 * log10(CAST(trs AS DOUBLE) "
+        f"/ CAST(hh - ll AS DOUBLE)) / {math.log10(CHOP_N)!r}, 6) "
+        f"AS choppiness FROM s WHERE nw = {CHOP_N} AND hh > ll"
+    ),
+    "window_awesome_osc": (
+        "WITH li AS (SELECT strftime(l_shipdate, '%Y-%m-%d') AS day, "
+        "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) "
+        "AS cents FROM lineitem), "
+        "bars AS (SELECT day, max(cents) + min(cents) AS mid2 "
+        "FROM li GROUP BY 1), "
+        "s AS (SELECT day, "
+        f"sum(mid2) OVER (ORDER BY day ROWS BETWEEN {AO_FAST - 1} "
+        "PRECEDING AND CURRENT ROW) AS s5, "
+        f"sum(mid2) OVER (ORDER BY day ROWS BETWEEN {AO_SLOW - 1} "
+        "PRECEDING AND CURRENT ROW) AS s34, "
+        f"count(*) OVER (ORDER BY day ROWS BETWEEN {AO_SLOW - 1} "
+        "PRECEDING AND CURRENT ROW) AS nw FROM bars) "
+        f"SELECT day, CAST({AO_SLOW} * s5 - {AO_FAST} * s34 AS BIGINT) "
+        f"/ {float(2 * AO_FAST * AO_SLOW)!r} / 100.0 AS awesome_osc "
+        f"FROM s WHERE nw = {AO_SLOW}"
+    ),
+    "window_control_chart": (
+        "WITH daily AS (SELECT "
+        "date_diff('day', DATE '1991-12-30', o_orderdate) AS x, "
+        "CAST(CAST(sum(o_totalprice) AS DECIMAL(18,2)) * 100 AS BIGINT) "
+        "AS c FROM orders GROUP BY 1), "
+        f"base AS (SELECT count(*) AS bn, sum(c) AS b1, "
+        "sum(CAST(c AS HUGEINT) * c) AS b2 FROM daily "
+        f"WHERE x <= {CTRL_BASE_DAYS}), "
+        f"j AS (SELECT x, c FROM daily WHERE x > {CTRL_BASE_DAYS}) "
+        "SELECT CAST(x AS INT) AS x, c / 100.0 AS revenue, "
+        "CASE WHEN c > CAST(b1 AS DOUBLE) / bn "
+        "+ 3 * sqrt((CAST(bn AS DOUBLE) * CAST(b2 AS DOUBLE) "
+        "- CAST(b1 AS DOUBLE) * CAST(b1 AS DOUBLE)) "
+        "/ (CAST(bn AS DOUBLE) * (bn - 1))) THEN 'above' "
+        "WHEN c < CAST(b1 AS DOUBLE) / bn "
+        "- 3 * sqrt((CAST(bn AS DOUBLE) * CAST(b2 AS DOUBLE) "
+        "- CAST(b1 AS DOUBLE) * CAST(b1 AS DOUBLE)) "
+        "/ (CAST(bn AS DOUBLE) * (bn - 1))) THEN 'below' "
+        "ELSE 'in' END AS status, "
+        "round(CAST(b1 AS DOUBLE) / bn / 100.0, 6) AS center, "
+        "round(sqrt((CAST(bn AS DOUBLE) * CAST(b2 AS DOUBLE) "
+        "- CAST(b1 AS DOUBLE) * CAST(b1 AS DOUBLE)) "
+        "/ (CAST(bn AS DOUBLE) * (bn - 1))) / 100.0, 6) AS sigma "
+        "FROM j, base"
+    ),
+    "window_underwater_duration": (
+        "WITH daily AS (SELECT "
+        "date_diff('day', DATE '1991-12-30', o_orderdate) AS x, "
+        "CAST(CAST(sum(o_totalprice) AS DECIMAL(18,2)) * 100 AS BIGINT) "
+        "AS c FROM orders GROUP BY 1), "
+        "uw AS (SELECT x FROM (SELECT x, c, max(c) OVER (ORDER BY x "
+        "ROWS UNBOUNDED PRECEDING) AS pk FROM daily) WHERE c < pk), "
+        "runs AS (SELECT x - row_number() OVER (ORDER BY x) AS grp, x "
+        "FROM uw), "
+        "rl AS (SELECT grp, count(*) AS len, max(x) AS last_x "
+        "FROM runs GROUP BY 1), "
+        "mx AS (SELECT max(x) AS mx FROM daily) "
+        "SELECT CAST(count(*) AS BIGINT) AS n_spells, "
+        "CAST(max(len) AS BIGINT) AS longest_underwater, "
+        "CAST(coalesce(max(CASE WHEN last_x = mx THEN len END), 0) "
+        "AS BIGINT) AS current_underwater FROM rl, mx"
+    ),
+    "window_vol_of_vol": (
+        "WITH daily AS (SELECT "
+        "date_diff('day', DATE '1991-12-30', o_orderdate) AS x, "
+        "CAST(CAST(sum(o_totalprice) AS DECIMAL(18,2)) * 100 AS BIGINT) "
+        "AS c FROM orders GROUP BY 1), "
+        "inner_w AS (SELECT x, count(*) OVER wi AS n, "
+        "sum(c) OVER wi AS s1, "
+        "sum(CAST(c AS HUGEINT) * c) OVER wi AS s2 FROM daily "
+        f"WINDOW wi AS (ORDER BY x ROWS BETWEEN {VV_INNER - 1} PRECEDING "
+        "AND CURRENT ROW)), "
+        f"varq AS (SELECT x, (2 * ({VV_INNER} * s2 "
+        "- CAST(s1 AS HUGEINT) * s1) "
+        f"+ {VV_INNER * VV_INNER}) // {2 * VV_INNER * VV_INNER} AS v "
+        f"FROM inner_w WHERE n = {VV_INNER}), "
+        "outer_w AS (SELECT x, count(*) OVER wo AS m, "
+        "sum(v) OVER wo AS t1, sum(v * v) OVER wo AS t2 FROM varq "
+        f"WINDOW wo AS (ORDER BY x ROWS BETWEEN {VV_OUTER - 1} PRECEDING "
+        "AND CURRENT ROW)) "
+        "SELECT CAST(x AS INT) AS x, "
+        "round(sqrt(CAST(t1 AS DOUBLE) / m) / 100.0, 6) AS mean_vol, "
+        "round(sqrt(sqrt((CAST(m AS DOUBLE) * CAST(t2 AS DOUBLE) "
+        "- CAST(t1 AS DOUBLE) * CAST(t1 AS DOUBLE)) "
+        "/ (CAST(m AS DOUBLE) * (m - 1)))) / 100.0, 6) AS vol_of_vol "
+        f"FROM outer_w WHERE m = {VV_OUTER}"
     ),
 }

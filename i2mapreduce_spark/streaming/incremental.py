@@ -215,26 +215,16 @@ def fold_delta(
     sum_cols: dict[str, str],
     count_col: str = "n",
 ) -> DataFrame:
-    """A11's MRBG merge, batch form: merge preserved per-key aggregates
-    with one delta batch, touching only additive aggregate state.
+    """A11's MRBG merge, batch form: :func:`fold_delta_ops` over a delta
+    of inserts only.
 
     `state` holds (key_cols, count_col, *sum_cols.keys()); `delta` is raw
-    records.  The delta is partially aggregated first (map-side combine,
-    ref op A2), then merged key-locally with the preserved state — the
-    exact read-merge-write the MRBG-Store performs per changed key.
-    Returns the new state (same schema), ready for the next fold or a
-    final readout.
+    records.  Returns the new state (same schema), ready for the next
+    fold or a final readout.
     """
-    aggs = [F.count("*").alias(count_col)] + [
-        F.sum(src).alias(dst) for dst, src in sum_cols.items()
-    ]
-    partial = delta.groupBy(*key_cols).agg(*aggs)
-    if state is None:
-        return partial
-    merged_aggs = [F.sum(count_col).alias(count_col)] + [
-        F.sum(dst).alias(dst) for dst in sum_cols
-    ]
-    return state.unionByName(partial).groupBy(*key_cols).agg(*merged_aggs)
+    return fold_delta_ops(
+        state, delta.withColumn("op", F.lit("+")), key_cols, sum_cols, count_col
+    )
 
 
 def fold_delta_ops(
@@ -248,14 +238,22 @@ def fold_delta_ops(
     (insert) or '-' (delete).  Deletes RETRACT from the preserved state — the signed merge
     the MRBG-Store performs when a record disappears from the input.
 
-    Additive aggregates retract exactly (count -= 1, sum -= value); keys
-    whose count reaches zero leave the state entirely, so a fully-deleted
-    key is indistinguishable from one never seen — asserted in tests.
+    The delta is partially aggregated first (map-side combine, ref op
+    A2), then merged key-locally with the preserved state — the exact
+    read-merge-write the MRBG-Store performs per changed key.  Additive
+    aggregates retract exactly (count -= 1, sum -= value); keys whose
+    count reaches zero leave the state entirely, so a fully-deleted key
+    is indistinguishable from one never seen — asserted in tests.  A
+    NULL `op` counts as an insert.  The count is never NULL and each sum
+    keeps its source column's type.
     """
-    sign = F.when(F.col("op") == "-", F.lit(-1)).otherwise(F.lit(1))
+    is_del = F.col("op") == "-"
     partial = delta.groupBy(*key_cols).agg(
-        F.sum(sign).alias(count_col),
-        *[F.sum(sign * F.col(src)).alias(dst) for dst, src in sum_cols.items()],
+        (F.count("*") - 2 * F.count_if(is_del)).alias(count_col),
+        *[
+            F.sum(F.when(is_del, -F.col(src)).otherwise(F.col(src))).alias(dst)
+            for dst, src in sum_cols.items()
+        ],
     )
     merged = (
         partial

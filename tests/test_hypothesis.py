@@ -180,7 +180,7 @@ def test_fixed_point_ema_fold_is_engine_identical(spark, xs):
     even 1 here would flap their hashes."""
     import duckdb
 
-    from i2mapreduce_spark.queries.r6b_ops import MACD_FAST, _ema_fix
+    from i2mapreduce_spark.queries.windows_q import MACD_FAST, _ema_fix
 
     span = MACD_FAST
     acc = xs[0]

@@ -5,6 +5,8 @@ the exact same fixed-iteration math on the same fixture graph.
 
 from __future__ import annotations
 
+import time
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -345,14 +347,17 @@ def test_mst_forest_distributed_rounds_match_local(spark, sf_dir, monkeypatch):
 
 
 #: persisted frames each query still holds after it returns: the final
-#: state, plus the edges checkpoint (sssp, closeness) and the node set
-#: (Katz) — never one checkpoint per round
+#: state, plus the edges checkpoint (sssp, closeness), the node set
+#: (Katz) and the two pins chunk_events leaves (stream_stateful_running)
+#: — never one checkpoint per round or per delta batch
 LOOP_KEPT_FRAMES = {
     "iter_sssp": 2,
     "iter_closeness_centrality": 2,
     "iter_katz_centrality": 3,
     "iter_sinkhorn": 1,
     "iter_markov_absorption": 1,
+    "stream_stateful_running": 3,
+    "inc_apriori_pairs": 1,
 }
 
 
@@ -375,11 +380,68 @@ def test_loop_releases_superseded_rounds(spark, sf_dir, key):
     assert len(persisted() - before) <= LOOP_KEPT_FRAMES[key]
 
 
+def test_boruvka_releases_superseded_rounds(spark, monkeypatch):
+    """Borůvka's distributed rounds release each round's contracted,
+    pick, forest, component and CC checkpoints once the next round's are
+    materialized: only the returned forest stays persisted, however many
+    rounds run.  Ruler weights on a 65-node path merge components in
+    pairs, so the forest takes six distributed rounds."""
+    monkeypatch.setattr(algorithms, "BORUVKA_LOCAL_EDGES_MAX", 1)
+    rows = []
+    for i in range(64):
+        w = float(((i + 1) & -(i + 1)).bit_length())
+        rows += [(i, i + 1, w), (i + 1, i, w)]
+    edges = spark.createDataFrame(rows, "src long, dst long, w double")
+
+    def persisted() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    forest = algorithms.boruvka_msf(edges).collect()
+    assert len(forest) == 64
+    assert len(persisted() - before) <= 1
+
+
+def test_hits_on_empty_graph_fails_no_job(spark):
+    """On a graph that is empty only at run time, hits starts no job
+    that fails: nothing still reads its edges checkpoint when it is
+    released.  256 shuffle partitions make a job that does read it run
+    long enough to see the release."""
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    edges = spark.range(64).select(
+        F.col("id").alias("src"), ((F.col("id") + 1) % 64).alias("dst")
+    ).filter(F.col("src") < 0)
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "256")
+    failed = []
+    try:
+        for t in range(3):
+            group = f"hits-empty-{t}"
+            sc.setJobGroup(group, "hits on an empty graph")
+            assert algorithms.hits(spark, edges).collect() == []
+            jobs = st.getJobIdsForGroup(group)
+            deadline = time.time() + 60
+            while time.time() < deadline and any(
+                st.getJobInfo(j).status == "RUNNING" for j in jobs
+            ):
+                time.sleep(0.2)
+            failed += [j for j in jobs if st.getJobInfo(j).status == "FAILED"]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert not failed
+
+
 @pytest.mark.parametrize(
     "module, cap, query",
     [
-        ("r6x_ops", "MATCH_MAX_ROUNDS", "q_iter_maximal_matching"),
-        ("r7m_ops", "QS_MAX_ROUNDS", "q_sort_quickselect_kth"),
+        ("iterative", "MATCH_MAX_ROUNDS", "q_iter_maximal_matching"),
+        ("sorts", "QS_MAX_ROUNDS", "q_sort_quickselect_kth"),
+    ],
+    ids=[
+        "r6x_ops-MATCH_MAX_ROUNDS-q_iter_maximal_matching",
+        "r7m_ops-QS_MAX_ROUNDS-q_sort_quickselect_kth",
     ],
 )
 def test_exhausted_safety_cap_raises(spark, sf_dir, monkeypatch, module, cap, query):

@@ -108,52 +108,52 @@ APPROVED_BROADCASTS = {
     # k-bounded candidate / block tables
     # (similarity.py's block-pair broadcast removed r11: the single-frame
     #  exploded feed has no join, hence no hint — see _block_pair_grouped)
-    ("i2mapreduce_spark/queries/r6_ops.py", "q_sim_mmr_rerank"),  # fixed MMR_N_QUERIES=20-row query block
-    ("i2mapreduce_spark/queries/r6b_ops.py", "q_text_ngram_coverage"),  # 1-row global bigram total
-    ("i2mapreduce_spark/queries/r6b_ops.py", "q_agg_ks_test"),  # 1-row (n1, n2) totals
-    ("i2mapreduce_spark/queries/r6c_ops.py", "q_ts_burst_days"),  # per-event-type moment rows: cardinality = #distinct event types (enum-like, ~6 at any SF)
-    ("i2mapreduce_spark/queries/r6d_ops.py", "q_agg_decile_lift"),  # 1-row (n, total) aggregate
-    ("i2mapreduce_spark/queries/r6d_ops.py", "q_pipeline_curriculum"),  # 1-row corpus count
-    ("i2mapreduce_spark/queries/r6f_ops.py", "q_text_js_divergence"),  # 1-row (na, nb) totals
-    ("i2mapreduce_spark/queries/r6j_ops.py", "q_agg_rfm_segments"),  # 1-row max-date/count/total aggregates
-    ("i2mapreduce_spark/queries/r6l_ops.py", "q_agg_pareto_concentration"),  # 1-row (n,total) + 1-row top-decile aggregates
-    ("i2mapreduce_spark/queries/r6m_ops.py", "q_text_bpe_merge_pairs"),  # 1-row global pair-count total
-    ("i2mapreduce_spark/queries/r6n_ops.py", "q_dq_k_anonymity"),  # 1-row class-size total
-    ("i2mapreduce_spark/queries/r6n_ops.py", "q_pipeline_target_encode"),  # 1-row (n_g, pos_g) global label moments
-    ("i2mapreduce_spark/queries/r6o_ops.py", "q_iter_als_topitems"),  # LIMIT ALS_ITEMS=64 item spine (bounded by construction)
+    ("i2mapreduce_spark/queries/llmops.py", "q_sim_mmr_rerank"),  # fixed MMR_N_QUERIES=20-row query block
+    ("i2mapreduce_spark/queries/llmops.py", "q_text_ngram_coverage"),  # 1-row global bigram total
+    ("i2mapreduce_spark/queries/aggregates.py", "q_agg_ks_test"),  # 1-row (n1, n2) totals
+    ("i2mapreduce_spark/queries/timeseries.py", "q_ts_burst_days"),  # per-event-type moment rows: cardinality = #distinct event types (enum-like, ~6 at any SF)
+    ("i2mapreduce_spark/queries/aggregates.py", "q_agg_decile_lift"),  # 1-row (n, total) aggregate
+    ("i2mapreduce_spark/queries/pipelines.py", "q_pipeline_curriculum"),  # 1-row corpus count
+    ("i2mapreduce_spark/queries/llmops.py", "q_text_js_divergence"),  # 1-row (na, nb) totals
+    ("i2mapreduce_spark/queries/aggregates.py", "q_agg_rfm_segments"),  # 1-row max-date/count/total aggregates
+    ("i2mapreduce_spark/queries/aggregates.py", "q_agg_pareto_concentration"),  # 1-row (n,total) + 1-row top-decile aggregates
+    ("i2mapreduce_spark/queries/llmops.py", "q_text_bpe_merge_pairs"),  # 1-row global pair-count total
+    ("i2mapreduce_spark/queries/quality.py", "q_dq_k_anonymity"),  # 1-row class-size total
+    ("i2mapreduce_spark/queries/pipelines.py", "q_pipeline_target_encode"),  # 1-row (n_g, pos_g) global label moments
+    ("i2mapreduce_spark/queries/iterative.py", "q_iter_als_topitems"),  # LIMIT ALS_ITEMS=64 item spine (bounded by construction)
     ("i2mapreduce_spark/streaming/incremental.py", "MRBGStore._collect_delta"),  # driver-collected delta keys, <= MRBG_DELTA_COLLECT_MAX_DEFAULT rows (larger deltas take the unhinted path)
-    ("i2mapreduce_spark/queries/r6q_ops.py", "q_dq_freshness"),  # 1-row global max-timestamp
-    ("i2mapreduce_spark/queries/r6q_ops.py", "q_agg_survival_km"),  # 1-row dataset edge + 1-row customer total
-    ("i2mapreduce_spark/queries/r6q_ops.py", "q_agg_bootstrap_ci"),  # 1-row point estimate
-    ("i2mapreduce_spark/queries/r6q_ops.py", "q_ts_runs_test"),  # 1-row x2-cent median
-    ("i2mapreduce_spark/queries/r6t_ops.py", "q_ts_theil_sen"),  # 1-row (n_pairs, n_days) totals
-    ("i2mapreduce_spark/queries/r6w_ops.py", "q_agg_winsorized_mean"),  # 1-row count + 1-row (lo, hi) boundary pair
-    ("i2mapreduce_spark/queries/r6y_ops.py", "q_agg_cuped_adjustment"),  # 1-row pooled moment aggregate
-    ("i2mapreduce_spark/queries/r7a_ops.py", "q_agg_cvar_expected_shortfall"),  # 1-row count
-    ("i2mapreduce_spark/queries/r7c_ops.py", "q_agg_abc_classification"),  # 1-row global total
-    ("i2mapreduce_spark/queries/r7c_ops.py", "q_fn_holiday_observed"),  # 21-row literal holiday spine (7 years x 3 holidays)
-    ("i2mapreduce_spark/queries/r7d_ops.py", "q_sample_neyman_allocation"),  # 1-row weight total
-    ("i2mapreduce_spark/queries/r7f_ops.py", "q_agg_eb_beta_binomial"),  # 1-row (alpha, beta) prior
-    ("i2mapreduce_spark/queries/r7h_ops.py", "q_agg_hhi_concentration"),  # nation dim (25)
-    ("i2mapreduce_spark/queries/r7j_ops.py", "q_sample_balanced_downsample"),  # 1-row min class count
-    ("i2mapreduce_spark/queries/r7r_ops.py", "q_window_control_chart"),  # 1-row frozen baseline moments
-    ("i2mapreduce_spark/queries/r7k_ops.py", "q_agg_gini_by_segment"),  # 1-row global minimum
-    ("i2mapreduce_spark/queries/r7l_ops.py", "q_agg_calibration_table"),  # 1-row row count
-    ("i2mapreduce_spark/queries/r7l_ops.py", "q_agg_precision_at_k"),  # 1-row total positives
-    ("i2mapreduce_spark/queries/r7m_ops.py", "q_agg_jackknife_se"),  # 1-row totals (twice)
-    ("i2mapreduce_spark/queries/r7m_ops.py", "q_text_bpe_apply"),  # BPE_MERGES=20-entry merge list
-    ("i2mapreduce_spark/queries/r7n_ops.py", "q_agg_brier_score"),  # 1-row row count
-    ("i2mapreduce_spark/queries/r7o_ops.py", "q_agg_ece"),  # 1-row row count
-    ("i2mapreduce_spark/queries/r7o_ops.py", "q_pipeline_interleave_order"),  # source-enum sizes + 1-row total
-    ("i2mapreduce_spark/queries/r7o_ops.py", "q_window_longest_streak"),  # 1-row final-day scalar
-    ("i2mapreduce_spark/queries/r7p_ops.py", "q_dq_catalog_census"),  # 1-row grand total
-    ("i2mapreduce_spark/queries/r7s_ops.py", "q_agg_durbin_watson"),  # 1-row OLS moments
-    ("i2mapreduce_spark/queries/r7t_ops.py", "q_agg_revenue_bridge"),  # 1-row absolute-delta total
-    ("i2mapreduce_spark/queries/r7u_ops.py", "q_window_underwater_duration"),  # 1-row final-day scalar
-    ("i2mapreduce_spark/queries/r7u_ops.py", "q_text_oov_rate"),  # 1-row split cut-off
-    ("i2mapreduce_spark/queries/r7v_ops.py", "q_agg_cr4_concentration"),  # nation dim (25)
-    ("i2mapreduce_spark/queries/r7w_ops.py", "q_join_basket_overlap"),  # nation dim + 25-row size tables
-    ("i2mapreduce_spark/queries/r7w_ops.py", "q_dq_shard_balance"),  # 1-row (total, k) aggregate
+    ("i2mapreduce_spark/queries/quality.py", "q_dq_freshness"),  # 1-row global max-timestamp
+    ("i2mapreduce_spark/queries/aggregates.py", "q_agg_survival_km"),  # 1-row dataset edge + 1-row customer total
+    ("i2mapreduce_spark/queries/aggregates.py", "q_agg_bootstrap_ci"),  # 1-row point estimate
+    ("i2mapreduce_spark/queries/timeseries.py", "q_ts_runs_test"),  # 1-row x2-cent median
+    ("i2mapreduce_spark/queries/timeseries.py", "q_ts_theil_sen"),  # 1-row (n_pairs, n_days) totals
+    ("i2mapreduce_spark/queries/aggregates.py", "q_agg_winsorized_mean"),  # 1-row count + 1-row (lo, hi) boundary pair
+    ("i2mapreduce_spark/queries/aggregates.py", "q_agg_cuped_adjustment"),  # 1-row pooled moment aggregate
+    ("i2mapreduce_spark/queries/aggregates.py", "q_agg_cvar_expected_shortfall"),  # 1-row count
+    ("i2mapreduce_spark/queries/aggregates.py", "q_agg_abc_classification"),  # 1-row global total
+    ("i2mapreduce_spark/queries/scalar_fns.py", "q_fn_holiday_observed"),  # 21-row literal holiday spine (7 years x 3 holidays)
+    ("i2mapreduce_spark/queries/projection.py", "q_sample_neyman_allocation"),  # 1-row weight total
+    ("i2mapreduce_spark/queries/aggregates.py", "q_agg_eb_beta_binomial"),  # 1-row (alpha, beta) prior
+    ("i2mapreduce_spark/queries/aggregates.py", "q_agg_hhi_concentration"),  # nation dim (25)
+    ("i2mapreduce_spark/queries/projection.py", "q_sample_balanced_downsample"),  # 1-row min class count
+    ("i2mapreduce_spark/queries/windows_q.py", "q_window_control_chart"),  # 1-row frozen baseline moments
+    ("i2mapreduce_spark/queries/aggregates.py", "q_agg_gini_by_segment"),  # 1-row global minimum
+    ("i2mapreduce_spark/queries/aggregates.py", "q_agg_calibration_table"),  # 1-row row count
+    ("i2mapreduce_spark/queries/aggregates.py", "q_agg_precision_at_k"),  # 1-row total positives
+    ("i2mapreduce_spark/queries/aggregates.py", "q_agg_jackknife_se"),  # 1-row totals (twice)
+    ("i2mapreduce_spark/queries/llmops.py", "q_text_bpe_apply"),  # BPE_MERGES=20-entry merge list
+    ("i2mapreduce_spark/queries/aggregates.py", "q_agg_brier_score"),  # 1-row row count
+    ("i2mapreduce_spark/queries/aggregates.py", "q_agg_ece"),  # 1-row row count
+    ("i2mapreduce_spark/queries/pipelines.py", "q_pipeline_interleave_order"),  # source-enum sizes + 1-row total
+    ("i2mapreduce_spark/queries/windows_q.py", "q_window_longest_streak"),  # 1-row final-day scalar
+    ("i2mapreduce_spark/queries/quality.py", "q_dq_catalog_census"),  # 1-row grand total
+    ("i2mapreduce_spark/queries/aggregates.py", "q_agg_durbin_watson"),  # 1-row OLS moments
+    ("i2mapreduce_spark/queries/aggregates.py", "q_agg_revenue_bridge"),  # 1-row absolute-delta total
+    ("i2mapreduce_spark/queries/windows_q.py", "q_window_underwater_duration"),  # 1-row final-day scalar
+    ("i2mapreduce_spark/queries/llmops.py", "q_text_oov_rate"),  # 1-row split cut-off
+    ("i2mapreduce_spark/queries/aggregates.py", "q_agg_cr4_concentration"),  # nation dim (25)
+    ("i2mapreduce_spark/queries/joins.py", "q_join_basket_overlap"),  # nation dim + 25-row size tables
+    ("i2mapreduce_spark/queries/quality.py", "q_dq_shard_balance"),  # 1-row (total, k) aggregate
     # eval-suite-sized by nature (benchmark contamination set, KBs-MBs)
     ("i2mapreduce_spark/queries/pipelines.py", "q_pipeline_decontaminate"),
 }
@@ -179,9 +179,9 @@ APPROVED_LOOP_CHECKPOINTS = {
     ("i2mapreduce_spark/operators/algorithms.py", "boruvka_msf"),  # contracts edges AND grows the forest: two frames per round, plus a local finish
     ("i2mapreduce_spark/operators/algorithms.py", "scc"),  # peels colored SCCs off the active graph: a result frame grows beside the shrinking state
     ("i2mapreduce_spark/queries/iterative.py", "q_inc_apriori_pairs"),  # delta fold: one fold_delta checkpoint per incoming delta batch, not a fixpoint round
-    ("i2mapreduce_spark/queries/r6x_ops.py", "q_iter_maximal_matching"),  # two frames: the shrinking active edges and the growing matching
-    ("i2mapreduce_spark/queries/r7b_ops.py", "q_text_greedy_generate"),  # every step frame stays live in the growing union chain: nothing is superseded
-    ("i2mapreduce_spark/queries/r7m_ops.py", "q_sort_quickselect_kth"),  # two collects per round feed a driver-side pivot and branch; the rank k shifts with the side kept
+    ("i2mapreduce_spark/queries/iterative.py", "q_iter_maximal_matching"),  # two frames: the shrinking active edges and the growing matching
+    ("i2mapreduce_spark/queries/llmops.py", "q_text_greedy_generate"),  # every step frame stays live in the growing union chain: nothing is superseded
+    ("i2mapreduce_spark/queries/sorts.py", "q_sort_quickselect_kth"),  # two collects per round feed a driver-side pivot and branch; the rank k shifts with the side kept
     ("i2mapreduce_spark/queries/streaming_q.py", "q_stream_stateful_running"),  # delta fold: one fold_delta checkpoint per event chunk, not a fixpoint round
     ("i2mapreduce_spark/streaming/incremental.py", "MRBGStore.apply_delta"),  # one delta per call; the loop releases its two superseded pins (edges, key set)
 }
@@ -235,7 +235,7 @@ def _defaulted_col_params(node) -> set[str]:
 #: fails this test until a caller that varies it is named here.
 APPROVED_COLUMN_OPTIONS = {
     ("i2mapreduce_spark/operators/algorithms.py", "gimv", "weight_col"),  # queries/iterative.py 'w' (default None: unweighted)
-    ("i2mapreduce_spark/operators/ranking.py", "global_row_number", "out_col"),  # queries/pipelines.py 'g', r7a_ops.py 'rk', mapred_q.py 'rnk'
+    ("i2mapreduce_spark/operators/ranking.py", "global_row_number", "out_col"),  # queries/pipelines.py 'g', aggregates.py 'rk', mapred_q.py 'rnk'
     ("i2mapreduce_spark/operators/ranking.py", "global_running_max_excl", "out_col"),  # tests/test_advice_r7.py 'pre'
     ("i2mapreduce_spark/streaming/incremental.py", "fold_delta", "count_col"),  # queries/streaming_q.py 'n_events'
     ("i2mapreduce_spark/streaming/incremental.py", "fold_delta_ops", "count_col"),  # queries/streaming_q.py 'n_events'

@@ -19,7 +19,7 @@ def _n_scans(plan: str) -> int:
 def test_corr_matrix_is_single_scan(spark, sf_dir):
     """All 15 moments must come from ONE pass over lineitem — a
     per-pair groupBy would rescan the fact 6 times."""
-    from i2mapreduce_spark.queries.r6g_ops import q_dq_corr_matrix
+    from i2mapreduce_spark.queries.quality import q_dq_corr_matrix
 
     plan = _plan(q_dq_corr_matrix(spark, sf_dir))
     assert _n_scans(plan) == 1, plan
@@ -28,14 +28,14 @@ def test_corr_matrix_is_single_scan(spark, sf_dir):
 def test_pk_profile_is_single_pass(spark, sf_dir):
     """Per-column distinct+null profiling shares one scan of orders
     (expand-based multi-distinct, not one job per column)."""
-    from i2mapreduce_spark.queries.r6g_ops import q_dq_pk_profile
+    from i2mapreduce_spark.queries.quality import q_dq_pk_profile
 
     plan = _plan(q_dq_pk_profile(spark, sf_dir))
     assert _n_scans(plan) == 1, plan
 
 
 def test_log_histogram_scan_prunes_to_one_column(spark, sf_dir):
-    from i2mapreduce_spark.queries.r6d_ops import q_agg_log_histogram
+    from i2mapreduce_spark.queries.aggregates import q_agg_log_histogram
 
     plan = _plan(q_agg_log_histogram(spark, sf_dir))
     assert "ReadSchema: struct<o_totalprice:double>" in plan, plan
@@ -44,14 +44,14 @@ def test_log_histogram_scan_prunes_to_one_column(spark, sf_dir):
 def test_weighted_reservoir_uses_distributed_takeordered(spark, sf_dir):
     """The A-Res top-k must be TakeOrdered (per-partition heads + k-row
     merge), never a global sort of the corpus."""
-    from i2mapreduce_spark.queries.r6e_ops import q_sample_weighted_reservoir
+    from i2mapreduce_spark.queries.projection import q_sample_weighted_reservoir
 
     plan = _plan(q_sample_weighted_reservoir(spark, sf_dir))
     assert "TakeOrderedAndProject" in plan, plan
 
 
 def test_kmv_sketch_uses_distributed_takeordered(spark, sf_dir):
-    from i2mapreduce_spark.queries.r6d_ops import q_agg_kmv_jaccard
+    from i2mapreduce_spark.queries.aggregates import q_agg_kmv_jaccard
 
     plan = _plan(q_agg_kmv_jaccard(spark, sf_dir))
     assert "TakeOrderedAndProject" in plan, plan
@@ -60,7 +60,7 @@ def test_kmv_sketch_uses_distributed_takeordered(spark, sf_dir):
 def test_luhn_fold_stays_jvm_side(spark, sf_dir):
     """The digit fold is a builtin `aggregate` expression — any python
     evaluation node here would put a UDF in a 150k-row/sf0.01 hot path."""
-    from i2mapreduce_spark.queries.r6h_ops import q_fn_luhn_check
+    from i2mapreduce_spark.queries.scalar_fns import q_fn_luhn_check
 
     plan = _plan(q_fn_luhn_check(spark, sf_dir))
     assert "BatchEvalPython" not in plan, plan
@@ -73,8 +73,8 @@ def test_ta_windows_preaggregate_before_ordered_frame(spark, sf_dir):
     directly on the fact table: the plan's window input carries the
     aggregated `cents`/day columns, and the fact scan feeds a hash
     aggregate first."""
-    from i2mapreduce_spark.queries.r6c_ops import q_window_obv
-    from i2mapreduce_spark.queries.r6i_ops import q_window_keltner
+    from i2mapreduce_spark.queries.windows_q import q_window_obv
+    from i2mapreduce_spark.queries.windows_q import q_window_keltner
 
     for fn in (q_window_obv, q_window_keltner):
         plan = _plan(fn(spark, sf_dir))

@@ -43,10 +43,7 @@ def test_als_user_solve_reuses_ratings_exchange(spark):
     per-partition sort + mapInPandas batched solve needs no shuffle.
     One accidental exchange here re-shuffles the (unbounded) ratings
     frame three times per training run."""
-    from i2mapreduce_spark.queries.r6o_ops import (
-        _init_item_factors,
-        _solve_users,
-    )
+    from i2mapreduce_spark.queries.iterative import _init_item_factors, _solve_users
 
     ratings = (
         spark.createDataFrame(
@@ -70,7 +67,7 @@ def test_als_batched_solve_matches_per_user_ridge(spark):
     solve it replaced (same normal equations, numpy reference), and be
     correct when a user's rows straddle Arrow batch boundaries — forced
     here with a 5-row batch size over users whose groups span it."""
-    from i2mapreduce_spark.queries.r6o_ops import (
+    from i2mapreduce_spark.queries.iterative import (
         ALS_LAMBDA,
         ALS_RANK,
         _init_item_factors,

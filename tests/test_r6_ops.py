@@ -11,20 +11,18 @@ import pandas as pd
 import pytest
 
 from i2mapreduce_spark.catalog import load_tables
-from i2mapreduce_spark.queries.r6_ops import (
-    BLOOM_TOPN,
-    CMS_WIDTH,
+from i2mapreduce_spark.queries.aggregates import CMS_WIDTH, q_agg_count_min_sketch
+from i2mapreduce_spark.queries.joins import BLOOM_TOPN, q_join_bloom_prefilter
+from i2mapreduce_spark.queries.llmops import (
     MMR_CANDS,
     MMR_K,
     MMR_LAMBDA,
     MMR_N_QUERIES,
     PARA_CHUNK_WORDS,
-    q_agg_count_min_sketch,
     q_dedup_paragraph,
-    q_join_bloom_prefilter,
-    q_pipeline_importance_sample,
     q_sim_mmr_rerank,
 )
+from i2mapreduce_spark.queries.pipelines import q_pipeline_importance_sample
 
 
 def _md5_le_py(s: str, n_bytes: int) -> int:
@@ -182,7 +180,7 @@ def test_global_running_sum_matches_global_window(spark, sf_dir):
 
 def test_macd_fixed_point_matches_python_replay(spark, sf_dir):
     """The fixed-point EMA recursion replayed in pure-python ints."""
-    from i2mapreduce_spark.queries.r6b_ops import (
+    from i2mapreduce_spark.queries.windows_q import (
         MACD_FAST,
         MACD_SIGNAL,
         MACD_SLOW,
@@ -226,7 +224,7 @@ def test_macd_fixed_point_matches_python_replay(spark, sf_dir):
 
 
 def test_welch_ttest_matches_numpy(spark, sf_dir):
-    from i2mapreduce_spark.queries.r6b_ops import TT_A, TT_B, q_agg_welch_ttest
+    from i2mapreduce_spark.queries.aggregates import TT_A, TT_B, q_agg_welch_ttest
 
     r = q_agg_welch_ttest(spark, sf_dir).collect()[0]
     e = pd.read_parquet(f"{sf_dir}/events.parquet",
@@ -243,7 +241,7 @@ def test_welch_ttest_matches_numpy(spark, sf_dir):
 
 
 def test_chi_square_cells_match_numpy(spark, sf_dir):
-    from i2mapreduce_spark.queries.r6b_ops import q_agg_chi_square
+    from i2mapreduce_spark.queries.aggregates import q_agg_chi_square
 
     rows = q_agg_chi_square(spark, sf_dir).collect()
     e = pd.read_parquet(f"{sf_dir}/events.parquet", columns=["event_type", "ts"])
@@ -261,7 +259,7 @@ def test_chi_square_cells_match_numpy(spark, sf_dir):
 
 
 def test_ks_test_matches_numpy(spark, sf_dir):
-    from i2mapreduce_spark.queries.r6b_ops import q_agg_ks_test
+    from i2mapreduce_spark.queries.aggregates import q_agg_ks_test
 
     r = q_agg_ks_test(spark, sf_dir).collect()[0]
     e = pd.read_parquet(f"{sf_dir}/events.parquet",
@@ -277,7 +275,7 @@ def test_ks_test_matches_numpy(spark, sf_dir):
 
 
 def test_mann_whitney_matches_numpy(spark, sf_dir):
-    from i2mapreduce_spark.queries.r6b_ops import q_agg_mann_whitney
+    from i2mapreduce_spark.queries.aggregates import q_agg_mann_whitney
 
     r = q_agg_mann_whitney(spark, sf_dir).collect()[0]
     e = pd.read_parquet(f"{sf_dir}/events.parquet",

@@ -8,12 +8,11 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from i2mapreduce_spark.queries.r6c_ops import (
+from i2mapreduce_spark.queries.timeseries import q_ts_burst_days, q_ts_peak_detection
+from i2mapreduce_spark.queries.windows_q import (
     ATR_N,
     STOCH_D,
     STOCH_N,
-    q_ts_burst_days,
-    q_ts_peak_detection,
     q_window_atr,
     q_window_obv,
     q_window_stochastic,

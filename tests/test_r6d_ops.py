@@ -9,18 +9,17 @@ from collections import Counter
 
 import pandas as pd
 
-from i2mapreduce_spark.queries.r6d_ops import (
+from i2mapreduce_spark.queries.aggregates import (
     BLOOM_K,
     BLOOM_M,
-    CURR_STAGES,
-    KMV_K,
     q_agg_bloom_filter,
     q_agg_decile_lift,
     q_agg_kmv_jaccard,
     q_agg_log_histogram,
-    q_pipeline_curriculum,
-    q_text_hapax_ratio,
 )
+from i2mapreduce_spark.queries.llmops import q_text_hapax_ratio
+from i2mapreduce_spark.queries.pipelines import CURR_STAGES, q_pipeline_curriculum
+from i2mapreduce_spark.queries.udfs import KMV_K
 
 
 def _md5_le_py(s: str, n_bytes: int) -> int:

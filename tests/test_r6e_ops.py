@@ -10,11 +10,10 @@ from collections import defaultdict
 
 import pandas as pd
 
-from i2mapreduce_spark.queries.r6e_ops import (
+from i2mapreduce_spark.queries.iterative import SCC_EDGE_MOD, q_iter_scc
+from i2mapreduce_spark.queries.projection import (
     RES_K,
     RES_SCALE,
-    SCC_EDGE_MOD,
-    q_iter_scc,
     q_sample_weighted_reservoir,
 )
 

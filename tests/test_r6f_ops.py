@@ -8,9 +8,9 @@ from collections import Counter
 
 import pandas as pd
 
-from i2mapreduce_spark.queries.r6f_ops import (
+from i2mapreduce_spark.queries.llmops import q_text_js_divergence
+from i2mapreduce_spark.queries.windows_q import (
     AROON_N,
-    q_text_js_divergence,
     q_window_aroon,
     q_window_pivot_points,
 )

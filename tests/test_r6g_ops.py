@@ -6,15 +6,17 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from i2mapreduce_spark.queries.r6g_ops import (
-    CORR_COLS,
-    PK_COLS,
+from i2mapreduce_spark.queries.llmops import (
     PQ_M,
     PQ_SAMPLE,
     _pq_train,
+    q_embedding_pq_codes,
+)
+from i2mapreduce_spark.queries.quality import (
+    CORR_COLS,
+    PK_COLS,
     q_dq_corr_matrix,
     q_dq_pk_profile,
-    q_embedding_pq_codes,
 )
 
 

@@ -7,11 +7,8 @@ import hashlib
 
 import pandas as pd
 
-from i2mapreduce_spark.queries.r6h_ops import (
-    BINF_N,
-    q_fn_luhn_check,
-    q_source_binary_files,
-)
+from i2mapreduce_spark.queries.scalar_fns import q_fn_luhn_check
+from i2mapreduce_spark.queries.scans import BINF_N, q_source_binary_files
 
 
 def test_binary_files_roundtrip_bytes_exactly(spark, sf_dir):

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from i2mapreduce_spark.queries.r6i_ops import (
+from i2mapreduce_spark.queries.windows_q import (
     KELT_ATR,
     KELT_EMA,
     KELT_TRUNC,

@@ -7,11 +7,8 @@ from collections import Counter, defaultdict
 
 import pandas as pd
 
-from i2mapreduce_spark.queries.r6j_ops import (
-    ATTR_WINDOW_H,
-    q_agg_rfm_segments,
-    q_window_attribution,
-)
+from i2mapreduce_spark.queries.aggregates import q_agg_rfm_segments
+from i2mapreduce_spark.queries.windows_q import ATTR_WINDOW_H, q_window_attribution
 
 
 def test_attribution_matches_pandas_replay(spark, sf_dir):

@@ -5,8 +5,8 @@ micro-batch boundaries."""
 
 from __future__ import annotations
 
-from i2mapreduce_spark.queries.r6j_ops import q_window_attribution
-from i2mapreduce_spark.queries.r6k_ops import q_stream_attribution
+from i2mapreduce_spark.queries.windows_q import q_window_attribution
+from i2mapreduce_spark.queries.streaming_q import q_stream_attribution
 
 
 def test_stream_attribution_equals_batch(spark, sf_dir):

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from i2mapreduce_spark.queries.r6l_ops import (
+from i2mapreduce_spark.queries.aggregates import (
     LTV_MAX_YEARS,
     PARETO_TARGET_PM,
     q_agg_cohort_ltv,

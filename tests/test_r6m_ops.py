@@ -10,11 +10,10 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from i2mapreduce_spark.catalog import load_tables
-from i2mapreduce_spark.queries.r6m_ops import (
+from i2mapreduce_spark.queries.joins import q_cte_recursive_rollup
+from i2mapreduce_spark.queries.llmops import WHITEN_OUT, q_embedding_whitening
+from i2mapreduce_spark.queries.timeseries import (
     SAX_W,
-    WHITEN_OUT,
-    q_cte_recursive_rollup,
-    q_embedding_whitening,
     q_ts_holt_linear,
     q_ts_sax_symbols,
 )
@@ -132,7 +131,7 @@ def test_sax_words_shape(spark, sf_dir):
 def test_parabolic_sar_matches_python_replay(spark, sf_dir):
     """The SAR state machine replays exactly in python from the same
     day bars — trend, stop, extreme and acceleration on every day."""
-    from i2mapreduce_spark.queries.r6n_ops import (
+    from i2mapreduce_spark.queries.windows_q import (
         SAR_AF0,
         SAR_AFM,
         SAR_AFS,

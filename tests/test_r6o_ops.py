@@ -5,7 +5,7 @@ claims a rows-only trained artifact must prove in pytest.
 from __future__ import annotations
 
 from i2mapreduce_spark.catalog import load_tables
-from i2mapreduce_spark.queries.r6o_ops import q_iter_als_topitems
+from i2mapreduce_spark.queries.iterative import q_iter_als_topitems
 
 
 def _global_rmse(rows) -> float:

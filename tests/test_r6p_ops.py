@@ -10,10 +10,8 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from i2mapreduce_spark.catalog import load_tables
-from i2mapreduce_spark.queries.r6p_ops import (
-    q_ts_spectral_peak,
-    q_window_heikin_ashi,
-)
+from i2mapreduce_spark.queries.timeseries import q_ts_spectral_peak
+from i2mapreduce_spark.queries.windows_q import q_window_heikin_ashi
 
 
 def _numpy_peak(counts: np.ndarray):
@@ -109,7 +107,7 @@ def test_heikin_ashi_matches_python_replay(spark, sf_dir):
 def test_supertrend_matches_python_replay(spark, sf_dir):
     """The Supertrend ratchet machine replays exactly in python from
     the same banded day series."""
-    from i2mapreduce_spark.queries.r6r_ops import (
+    from i2mapreduce_spark.queries.windows_q import (
         ST_ATR_N,
         ST_MULT,
         q_window_supertrend,

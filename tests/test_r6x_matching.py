@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from i2mapreduce_spark.queries.r6x_ops import q_iter_maximal_matching
+from i2mapreduce_spark.queries.iterative import q_iter_maximal_matching
 
 SF_DIR = "/root/testdata/sf0.001"
 

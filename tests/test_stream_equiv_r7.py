@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from i2mapreduce_spark.catalog import load_tables
-from i2mapreduce_spark.queries.r6w_ops import (
+from i2mapreduce_spark.queries.streaming_q import (
     DIFF_ADD_MOD,
     DIFF_ADD_OFFSET,
     DIFF_DEL_MOD,

@@ -11,7 +11,7 @@ exact — this pins it by running the SAME fixture through both branches
 
 from __future__ import annotations
 
-import i2mapreduce_spark.queries.r6t_ops as r6t
+import i2mapreduce_spark.queries.timeseries as r6t
 
 
 def _rows(df):

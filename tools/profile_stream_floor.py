@@ -27,7 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from i2mapreduce_spark.catalog import load_tables  # noqa: E402
-from i2mapreduce_spark.queries.r6k_ops import q_stream_attribution  # noqa: E402
+from i2mapreduce_spark.queries.streaming_q import q_stream_attribution  # noqa: E402
 from i2mapreduce_spark.session import get_spark  # noqa: E402
 from i2mapreduce_spark.streaming.incremental import (  # noqa: E402
     chunk_events,
@@ -48,11 +48,7 @@ def _events(spark, limit: int | None = None):
 def _run_stream(spark, e) -> float:
     from pyspark.sql.streaming.state import GroupStateTimeout  # noqa: F401
 
-    from i2mapreduce_spark.queries.r6k_ops import (
-        _ATTR_OUT,
-        _ATTR_STATE,
-        _attr_fn,
-    )
+    from i2mapreduce_spark.queries.streaming_q import _ATTR_OUT, _ATTR_STATE, _attr_fn
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     chunks = chunk_events(spark, e, n=3)

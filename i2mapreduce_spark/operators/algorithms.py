@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import operator
 import os
+from collections.abc import Callable
 from functools import reduce
 
 import numpy as np
@@ -276,6 +277,37 @@ def hits(spark: SparkSession, edges: DataFrame, iters: int = 4) -> DataFrame:
         release_checkpoint(e)
 
 
+def _peel(edges: DataFrame, keep_fn: Callable[[DataFrame], DataFrame],
+          max_rounds: int) -> tuple[DataFrame, int]:
+    """Peel `edges` to fixpoint on `iterate()` (kcore, scc's trim): each
+    round keeps the edges whose two endpoints are both in `keep_fn(edges)`
+    (a `node` frame).  The edge set only shrinks, so the fixpoint check
+    is the edge count against the one carried from the previous round:
+    one `count()` job per round, plus one for a non-empty `edges` (an
+    empty edge set is a fixpoint).  Every round is checkpointed:
+    chaining scc's peels lazily between checkpoints was measured slower
+    (26 s vs 16 s at sf0.01).  Returns the loop's own checkpoint of the
+    survivors and their count; `edges` stays the caller's."""
+    def step(e: DataFrame, _i: int) -> DataFrame:
+        keep = keep_fn(e)
+        return (
+            e.join(keep.withColumnRenamed("node", "src"), "src", "left_semi")
+            .join(keep.withColumnRenamed("node", "dst"), "dst", "left_semi")
+            .select("src", "dst")
+        )
+
+    counts: list[int] = []
+
+    def dropped(old: DataFrame, new: DataFrame) -> float:
+        n = new.count()
+        d = 0.0 if n == 0 else float((counts[-1] if counts else old.count()) - n)
+        counts.append(n)
+        return d
+
+    res = iterate(edges, step, max_rounds, delta_fn=dropped, tol=0.5, checkpoint_every=1)
+    return res.state, counts[-1] if counts else res.state.count()
+
+
 def kcore(edges: DataFrame, k: int, max_rounds: int = 12) -> DataFrame:
     """k-core decomposition by iterative peeling: drop every node with
     degree < k (and its edges), repeat to fixpoint.  Returns the
@@ -286,29 +318,18 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 12) -> DataFrame:
     the result hash-comparable to an oracle that unrolls exactly
     `max_rounds` rounds regardless of where the fixpoint lands.
 
-    100TB: each round is one degree aggregation + two semi-joins, all
-    keyed on the node id; the edge set only shrinks.  The fixpoint
-    barrier is a count delta (one cheap action per round, ref A10)."""
-    def step(e: DataFrame, _i: int) -> DataFrame:
-        keep = (
+    100TB: the loop is `_peel` with a `deg >= k` keep: per round one
+    degree aggregation + two semi-joins keyed on the node id, and one
+    edge count (the fixpoint barrier, ref A10)."""
+    def keep(e: DataFrame) -> DataFrame:
+        return (
             e.groupBy("src").agg(F.count("*").alias("deg"))
             .filter(F.col("deg") >= k)
             .select(F.col("src").alias("node"))
         )
-        return (
-            e.join(keep.withColumnRenamed("node", "src"), "src", "left_semi")
-            .join(keep.withColumnRenamed("node", "dst"), "dst", "left_semi")
-            .select("src", "dst")
-        )
 
-    def delta(old: DataFrame, new: DataFrame) -> float:
-        return float(old.count() - new.count())
-
-    res = iterate(
-        edges.select("src", "dst"), step, max_rounds,
-        delta_fn=delta, tol=0.5, checkpoint_every=1,
-    )
-    return res.state.groupBy(F.col("src").alias("node")).agg(
+    core, _ = _peel(edges.select("src", "dst"), keep, max_rounds)
+    return core.groupBy(F.col("src").alias("node")).agg(
         F.count("*").alias("core_degree")
     )
 
@@ -1106,6 +1127,17 @@ def _fwbw_coloring(active: DataFrame, active_nodes: DataFrame,
 SCC_TRIM_ROUNDS = 32
 
 
+def _has_in_and_out(edges: DataFrame) -> DataFrame:
+    """scc's trim keep: the nodes with an in-edge and an out-edge.  One
+    shuffle flags each endpoint 1 as a source and 0 as a target."""
+    return (
+        edges.select(F.col("src").alias("node"), F.lit(1).alias("out"))
+        .unionByName(edges.select(F.col("dst").alias("node"), F.lit(0).alias("out")))
+        .groupBy("node").agg((F.min("out") < F.max("out")).alias("keep"))
+        .filter("keep").select("node")
+    )
+
+
 def scc(edges: DataFrame, max_passes: int = 64) -> DataFrame:
     """Strongly connected components of a directed graph via
     Trim + Forward-Backward min-label coloring (the FW-BW-Trim scheme of
@@ -1115,7 +1147,10 @@ def scc(edges: DataFrame, max_passes: int = 64) -> DataFrame:
     1. TRIM to fixpoint: a node with no in-edges or no out-edges inside
        the active subgraph is its own singleton SCC — peel until stable
        (kills the DAG periphery, which is what makes pure coloring
-       O(#SCC) passes in the worst case).
+       O(#SCC) passes in the worst case).  The peel is kcore's `_peel`
+       with a "has an in-edge and an out-edge" keep, one edge count per
+       round; the pass's trimmed singletons are then one anti-join of
+       its node set against the survivors' nodes.
     2. One coloring pass: fwd[v] = min id reachable FROM v, bwd[v] = min
        id reaching v; both computed in ONE fused pointer-doubling
        fixpoint (`_fwbw_coloring` — directed propagation is sound for
@@ -1144,15 +1179,14 @@ def scc(edges: DataFrame, max_passes: int = 64) -> DataFrame:
     partial labeling) or a coloring runs out of its round cap.  Empty edge input returns an empty (node, scc)
     frame.
 
-    100TB: every step is an equi-join/agg on node id; the trim fixpoint
-    and coloring fixpoint are each one cheap count action per round
-    (the reference's global barrier); state never leaves the cluster.
+    100TB: every step is an equi-join/agg on node id; the trim and the
+    coloring are each a fixpoint on `iterate()` with one global barrier
+    per round (ref A10); state never leaves the cluster.
     """
     spark = edges.sparkSession
     active = edges.select("src", "dst").distinct().transform(checkpoint_without_stats)
     active_nodes = _nodes(active).transform(checkpoint_without_stats)
     labeled_parts: list[DataFrame] = []
-    finished_local = False
     for _ in range(max_passes):
         # bounded local finish (`_collect_if_fits`, as in Borůvka):
         # once the active subgraph fits locally, every
@@ -1163,72 +1197,27 @@ def scc(edges: DataFrame, max_passes: int = 64) -> DataFrame:
         fit = _collect_if_fits(_scc_local_max(), active_nodes, active)
         if fit is not None:
             labeled_parts.append(_local_scc(spark, *fit))
-            release_checkpoint(active)
-            finished_local = True
             break
         # --- trim singleton SCCs (no in- or no out-edges, including
-        # nodes isolated by earlier peels) to fixpoint.  One peel per
-        # materialization: chaining peels lazily between checkpoints was
-        # MEASURED SLOWER (26s vs 16s at sf0.01) because the three
-        # checkpoint branches (edges, nodes, trimmed batch) each
-        # re-execute the overlapping peel subplans.
-        for _t in range(SCC_TRIM_ROUNDS):
-            # one fused shuffle computes both degree flags
-            deg = (
-                active.select(F.col("src").alias("node"),
-                              F.lit(1).alias("o"), F.lit(0).alias("i"))
-                .unionByName(
-                    active.select(F.col("dst").alias("node"),
-                                  F.lit(0).alias("o"), F.lit(1).alias("i")))
-                .groupBy("node")
-                .agg(F.max("o").alias("o"), F.max("i").alias("i"))
-            )
-            # checkpoint the survivor set ONCE and reuse the materialized
-            # blocks for the anti-join probe, the node set, and both
-            # edge-rebuild joins — the r6-r11 shape re-derived `both`
-            # lazily at each use site, recomputing the degree aggregation
-            # up to 4x per trim round (guide §2.4: share the exchange)
-            both = (
-                deg.filter((F.col("o") == 1) & (F.col("i") == 1))
-                .select("node")
-                .transform(checkpoint_without_stats)
-            )  # nodes with >=1 in AND >=1 out
-            trimmed = active_nodes.join(both, "node", "left_anti")
-            if trimmed.isEmpty():
-                release_checkpoint(both)  # unchanged: keep prior frames
-                break
-            # trimmed derives from two materialized checkpoints;
-            # no extra checkpoint needed to keep it computable
-            labeled_parts.append(
-                trimmed.select("node", F.col("node").alias("scc"))
-            )
-            active_nodes = both
-            if both.isEmpty():
-                break  # everything peeled — skip a no-op degree round
-            prev_edges = active
-            active = (
-                active.join(both.withColumnRenamed("node", "src"), "src")
-                .join(both.withColumnRenamed("node", "dst"), "dst")
-                .select("src", "dst")
-                .transform(checkpoint_without_stats)
-            )
-            # the superseded edge checkpoint is the loop's BIG block set
-            # (full edge copy per trim round) and nothing reads it again
-            # — labeled parts reference only node-set checkpoints.  Drop
-            # it once the new eager checkpoint re-roots the lineage, or
-            # an sf100 run retains O(rounds) edge copies and dies
-            # unrolling blocks on a real-executor 8 GiB heap (measured;
-            # see release_checkpoint).
-            release_checkpoint(prev_edges)
-        if active_nodes.isEmpty():
+        # nodes isolated by earlier peels or by the last pass's class
+        # split) to fixpoint
+        peeled, n_edges = _peel(active, _has_in_and_out, SCC_TRIM_ROUNDS)
+        release_checkpoint(active)
+        active = peeled
+        pass_nodes = active_nodes
+        active_nodes = _nodes(active).transform(checkpoint_without_stats)
+        # reads two node-set checkpoints only, never an edge frame
+        labeled_parts.append(
+            pass_nodes.join(active_nodes, "node", "left_anti")
+            .select("node", F.col("node").alias("scc"))
+        )
+        if n_edges == 0:
             break
         # second probe site: trimming may have shrunk the core under the
         # local cap — bail before paying a distributed coloring fixpoint
         fit = _collect_if_fits(_scc_local_max(), active_nodes, active)
         if fit is not None:
             labeled_parts.append(_local_scc(spark, *fit))
-            release_checkpoint(active)
-            finished_local = True
             break
         # --- FW-BW coloring pass on the trimmed core (every active node
         # now has >=1 in- and >=1 out-edge, so the colorings cover all)
@@ -1237,8 +1226,7 @@ def scc(edges: DataFrame, max_passes: int = 64) -> DataFrame:
         labeled_parts.append(done.select("node", F.col("f").alias("scc")))
         rest = j.filter(F.col("f") != F.col("b"))
         if rest.isEmpty():
-            active_nodes = rest.select("node")  # converged: all labeled
-            break
+            break  # converged: all labeled
         active_nodes = rest.select("node").transform(checkpoint_without_stats)
         # keep only edges INSIDE one (f, b) class: cross-class edges can
         # never be intra-SCC (see docstring step 3), and dropping them
@@ -1255,21 +1243,15 @@ def scc(edges: DataFrame, max_passes: int = 64) -> DataFrame:
             .select("src", "dst")
             .transform(checkpoint_without_stats)
         )
-        release_checkpoint(prev_edges)  # same O(rounds)->O(1) edge-copy
-        # bound as the trim loop; `done`/`rest` read j's node-level
-        # blocks, never this edge frame
-    if not finished_local and not active_nodes.isEmpty():
+        # the superseded edge copy: `done`/`rest` read j's node-level
+        # blocks, never an edge frame
+        release_checkpoint(prev_edges)
+    else:
+        # every pass left a non-empty residual: the labeling is partial
         raise RuntimeError(
             f"scc(): {max_passes} FW-BW passes exhausted with active nodes "
             "remaining — raise max_passes (every pass resolves each (f,b) "
             "class's minimum SCC, so passes are O(log #SCC) expected)"
         )
-    if not labeled_parts:
-        # empty edge input: no node is incident to an edge
-        return edges.select(
-            F.col("src").alias("node"), F.col("src").alias("scc")
-        ).limit(0)
-    out = labeled_parts[0]
-    for part in labeled_parts[1:]:
-        out = out.unionByName(part)
-    return out
+    release_checkpoint(active)
+    return reduce(DataFrame.unionByName, labeled_parts)

@@ -104,9 +104,10 @@ def global_row_number_and_count(
     order_cols: list[str],
     out_col: str,
     num_partitions: int | None,
-) -> tuple[DataFrame, int]:
-    """:func:`global_row_number` and the row count of ``df``, which the
-    per-partition counts already hold on the driver (no extra job)."""
+) -> tuple[DataFrame, int, DataFrame]:
+    """:func:`global_row_number`, the row count of ``df`` (the per-partition
+    counts already hold it on the driver: no extra job) and the ``_pid``
+    pin the rank reads, for a caller that materializes the rank to release."""
     ranged, off, total = _chunk_offsets(
         df, order_cols, {"cnt": F.count("*")}, _add, 0, num_partitions
     )
@@ -114,7 +115,7 @@ def global_row_number_and_count(
     ranked = ranged.withColumn(
         out_col, (F.row_number().over(wp) + off["cnt"]).cast("long")
     ).drop("_pid")
-    return ranked, total["cnt"]
+    return ranked, total["cnt"], ranged
 
 
 def global_running_sum(

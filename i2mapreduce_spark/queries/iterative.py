@@ -11,9 +11,11 @@ driver records rows-only for them).
 
 from __future__ import annotations
 
+from functools import reduce
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from ..catalog import cte, load_tables
@@ -359,8 +361,8 @@ def q_inc_apriori_pairs(spark, sf_dir):
 
     load_tables(spark, sf_dir)
     baskets = spark.table("baskets")
-    state = None
-    for i in range(N_APRIORI_DELTAS):
+
+    def fold(state, i):
         chunk = baskets.filter(F.pmod("basket", F.lit(N_APRIORI_DELTAS)) == i)
         # r12 measured dead end (do not repeat): generating each batch's
         # pairs ARRAY-side (the q_iter_apriori_rules rewrite) read 0.90x
@@ -375,10 +377,10 @@ def q_inc_apriori_pairs(spark, sf_dir):
             (F.col("a.basket") == F.col("b.basket"))
             & (F.col("a.item") < F.col("b.item")),
         ).select(F.col("a.item").alias("item1"), F.col("b.item").alias("item2"))
-        new = fold_delta(state, pairs, ["item1", "item2"], {}).transform(checkpoint_without_stats)
-        if state is not None:
-            release_checkpoint(state)
-        state = new
+        return fold_delta(state, pairs, ["item1", "item2"], {})
+
+    state = iterate(fold(None, 0), fold, N_APRIORI_DELTAS - 1,
+                    checkpoint_every=1).state
     return (
         state.filter(F.col("n") >= APRIORI_MIN_SUPPORT)
         .select("item1", "item2", F.col("n").alias("support"))
@@ -1118,28 +1120,24 @@ def q_iter_maximal_matching(spark, sf_dir):
     (tests/test_r6x_matching.py): (1) no vertex appears twice;
     (2) no edge has both endpoints unmatched (maximality)."""
     load_tables(spark, sf_dir)
-    active = (
+    active0 = (
         spark.table("edges_pp")
         .filter(F.col("src") < F.col("dst"))
         .transform(checkpoint_without_stats)
     )
-    # start from a zero-row frame with the edge schema so an empty graph
-    # (the loop breaks before matching anything) returns empty, not None
-    matched = active.select("src", "dst").limit(0)
-    for rnd in range(MATCH_MAX_ROUNDS):
-        if active.limit(1).count() == 0:
-            break
-        # r12: no checkpoint here — pri is a deterministic narrow map
+    hands_per_round: list = []
+
+    def handshake(active, i):
+        # r12: no checkpoint of `e` — pri is a deterministic narrow map
         # (xxhash64 of the row + round literal) over the ALREADY
         # materialized `active`, so the three consumers below recompute
         # it from in-memory blocks for less than the full second copy
-        # of the edge set the old per-round checkpoint wrote (one fewer
-        # action and one fewer resident block set per round; identical
-        # priorities, hence identical matching)
+        # of the edge set a checkpoint would write.  Round i hashes
+        # i - 1, the first round 0.
         e = active.withColumn(
             "pri",
             F.struct(
-                F.xxhash64(F.col("src"), F.col("dst"), F.lit(rnd)),
+                F.xxhash64(F.col("src"), F.col("dst"), F.lit(i - 1)),
                 F.col("src"),
                 F.col("dst"),
             ),
@@ -1160,25 +1158,32 @@ def q_iter_maximal_matching(spark, sf_dir):
             .select("src", "dst")
             .transform(checkpoint_without_stats)
         )
-        matched = matched.unionAll(hands)
+        hands_per_round.append(hands)
         gone = (
             hands.select(F.col("src").alias("g"))
             .unionAll(hands.select(F.col("dst").alias("g")))
             .distinct()
         )
-        active = (
+        return (
             active.join(gone, F.col("src") == F.col("g"), "left_anti")
             .join(gone, F.col("dst") == F.col("g"), "left_anti")
-            .transform(checkpoint_without_stats)
         )
-    else:
-        if not active.isEmpty():
-            raise RuntimeError(
-                f"iter_maximal_matching: MATCH_MAX_ROUNDS={MATCH_MAX_ROUNDS} "
-                "exhausted with active edges left; the matching would not "
-                "be maximal"
-            )
-    return matched.select(
+
+    def edges_left(_old, new):
+        return 0.0 if new.isEmpty() else 1.0
+
+    res = iterate(active0, handshake, MATCH_MAX_ROUNDS,
+                  delta_fn=edges_left, tol=0.5, checkpoint_every=1)
+    release_checkpoint(active0)
+    release_checkpoint(res.state)
+    if not res.converged:
+        raise RuntimeError(
+            f"iter_maximal_matching: MATCH_MAX_ROUNDS={MATCH_MAX_ROUNDS} "
+            "exhausted with active edges left; the matching would not "
+            "be maximal"
+        )
+    # a converged run ran >= 1 round: an empty graph matches no edge
+    return reduce(DataFrame.unionAll, hands_per_round).select(
         F.col("src").alias("u"), F.col("dst").alias("v")
     ).orderBy("u")
 

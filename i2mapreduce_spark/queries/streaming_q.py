@@ -18,7 +18,7 @@ from pyspark.sql.types import IntegerType, LongType, StringType, StructField, St
 from pyspark.sql.window import Window
 
 from ..catalog import load_tables
-from ..plans.iterate import checkpoint_without_stats, release_checkpoint
+from ..plans.iterate import checkpoint_without_stats, iterate
 from ..streaming.incremental import (
     MRBGStore,
     chunk_events,
@@ -134,14 +134,13 @@ def q_stream_stateful_running(spark, sf_dir):
     from-scratch batch recompute (that is the oracle)."""
     load_tables(spark, sf_dir)
     chunks = chunk_events(spark, spark.table("events"), n=N_DELTA_BATCHES)
-    state = None
-    for chunk in chunks:
-        new = fold_delta(
-            state, chunk, ["user_id"], {"total_value": "value"}, count_col="n_events"
-        ).transform(checkpoint_without_stats)
-        if state is not None:
-            release_checkpoint(state)
-        state = new
+
+    def fold(state, i):
+        return fold_delta(
+            state, chunks[i], ["user_id"], {"total_value": "value"}, count_col="n_events"
+        )
+
+    state = iterate(fold(None, 0), fold, len(chunks) - 1, checkpoint_every=1).state
     return state.select(
         "user_id", "n_events", F.round("total_value", 2).alias("total_value")
     )

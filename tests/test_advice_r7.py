@@ -95,6 +95,28 @@ def test_scc_local_finish_matches_distributed(spark, monkeypatch):
     assert local == want
 
 
+def test_scc_distributed_keeps_only_node_sets_and_colorings(spark, monkeypatch):
+    # The trim is one peel per pass, so the frames scc() leaves pinned do
+    # not grow with its trim rounds (the 4-edge DAG tail takes 5), and no
+    # edge copy outlives the call: the initial node set, then per pass
+    # the trimmed node set and the coloring state, and the residual node
+    # set between the two passes — 1 + 2 * 2 + 1 frames.
+    monkeypatch.setenv("I2MR_SCC_LOCAL_MAX", "0")
+    n = 5
+    tail = [(2 * n - 1, 100), (100, 101), (101, 102), (102, 103)]
+    g = _chain_of_two_cycles(spark, n_cycles=n).unionByName(
+        spark.createDataFrame(tail, "src long, dst long"))
+
+    def persisted() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    got = {(r["node"], r["scc"]) for r in scc(g, max_passes=n + 1).collect()}
+    assert len(persisted() - before) <= 6
+    want = {(2 * i + j, 2 * i) for i in range(n) for j in (0, 1)}
+    assert got == want | {(v, v) for v in range(100, 104)}
+
+
 def test_scc_local_finish_fires_after_distributed_head(spark, monkeypatch):
     # a cap of 7 keeps the probe cold for the 8-node/11-edge start, so
     # pass 0 runs distributed and resolves the minimum's cycle; the

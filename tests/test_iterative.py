@@ -348,16 +348,19 @@ def test_mst_forest_distributed_rounds_match_local(spark, sf_dir, monkeypatch):
 
 #: persisted frames each query still holds after it returns: the final
 #: state, plus the edges checkpoint (sssp, closeness), the node set
-#: (Katz) and the two pins chunk_events leaves (stream_stateful_running)
-#: — never one checkpoint per round or per delta batch
+#: (Katz) and the tiling pin chunk_events leaves (stream_stateful_running)
+#: — never one checkpoint per round or per delta batch.  The matching is
+#: the union of its rounds' handshake checkpoints, one per round (7
+#: rounds on sf0.001); its edge copies are all released.
 LOOP_KEPT_FRAMES = {
     "iter_sssp": 2,
     "iter_closeness_centrality": 2,
     "iter_katz_centrality": 3,
     "iter_sinkhorn": 1,
     "iter_markov_absorption": 1,
-    "stream_stateful_running": 3,
+    "stream_stateful_running": 2,
     "inc_apriori_pairs": 1,
+    "iter_maximal_matching": 7,
 }
 
 

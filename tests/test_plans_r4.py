@@ -177,12 +177,9 @@ def _names_checkpoint(node) -> bool:
 #: rule; a new hand-rolled loop fails this test until argued here.
 APPROVED_LOOP_CHECKPOINTS = {
     ("i2mapreduce_spark/operators/algorithms.py", "boruvka_msf"),  # contracts edges AND grows the forest: two frames per round, plus a local finish
-    ("i2mapreduce_spark/operators/algorithms.py", "scc"),  # peels colored SCCs off the active graph: a result frame grows beside the shrinking state
-    ("i2mapreduce_spark/queries/iterative.py", "q_inc_apriori_pairs"),  # delta fold: one fold_delta checkpoint per incoming delta batch, not a fixpoint round
-    ("i2mapreduce_spark/queries/iterative.py", "q_iter_maximal_matching"),  # two frames: the shrinking active edges and the growing matching
+    ("i2mapreduce_spark/operators/algorithms.py", "scc"),  # outer FW-BW pass loop: each pass runs a trim and a coloring fixpoint, then splits the residual edges by (f, b) class beside a growing list of labeled node sets
     ("i2mapreduce_spark/queries/llmops.py", "q_text_greedy_generate"),  # every step frame stays live in the growing union chain: nothing is superseded
     ("i2mapreduce_spark/queries/sorts.py", "q_sort_quickselect_kth"),  # two collects per round feed a driver-side pivot and branch; the rank k shifts with the side kept
-    ("i2mapreduce_spark/queries/streaming_q.py", "q_stream_stateful_running"),  # delta fold: one fold_delta checkpoint per event chunk, not a fixpoint round
     ("i2mapreduce_spark/streaming/incremental.py", "MRBGStore.apply_delta"),  # one delta per call; the loop releases its two superseded pins (edges, key set)
 }
 

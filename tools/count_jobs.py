@@ -7,7 +7,7 @@ Each key runs four times in one `local[4]` session with
 caches and is not counted.  After the WARM_CALLS warm calls the tool
 prints one line per key:
 
-    <key>  rows=<n>  jobs=<n>  md5=<sorted-row digest>  iterate=[(cap, rounds, converged), ...]
+    <key>  rows=<n>  jobs=<n>  pinned=<n>  md5=<sorted-row digest>  iterate=[(cap, rounds, converged), ...]
 
 - jobs: the jobs a warm call and its `collect()` start and that succeed,
   counted with `setJobGroup` + `statusTracker().getJobIdsForGroup` once
@@ -18,6 +18,10 @@ prints one line per key:
   (measured on agg_rfm_segments over the empty sf0 fixture: 2 jobs in
   10 of 16 calls, 3-5 in the rest), so one call's count is not a
   property of the code.
+- pinned: the persisted RDD ids the last warm call adds to
+  `getPersistentRDDs()` (by id set, so an id that ContextCleaner drops
+  meanwhile is not counted): the frames a call leaves pinned, e.g. the
+  loop checkpoints it never releases
 - iterate: one `(max_iters, rounds run, converged)` triple per
   `plans.iterate.iterate()` call, in call order
 - md5: digest of the sorted collected rows, to compare outputs between
@@ -72,6 +76,10 @@ def main() -> int:
     spark = get_spark(cpus="4", shuffle_partitions=8)
     sc = spark.sparkContext
     bus = sc._jsc.sc().listenerBus()
+
+    def persisted() -> set[int]:
+        return set(sc._jsc.getPersistentRDDs().keys())
+
     for key in keys:
         queries[key](spark, sf_dir).collect()
         jobs = []
@@ -79,10 +87,12 @@ def main() -> int:
             calls.clear()
             group = f"count_jobs.{key}.{call}"
             sc.setJobGroup(group, key)
+            before = persisted()
             try:
                 rows = queries[key](spark, sf_dir).collect()
             finally:
                 sc.setLocalProperty("spark.jobGroup.id", None)
+            pinned = len(persisted() - before)
             bus.waitUntilEmpty()
             tracker = sc.statusTracker()
             jobs.append(sum(
@@ -93,7 +103,7 @@ def main() -> int:
         digest = hashlib.md5(
             "\n".join(sorted(repr(tuple(r)) for r in rows)).encode()
         ).hexdigest()
-        print(f"{key}  rows={len(rows)}  jobs={min(jobs)}  md5={digest}  "
+        print(f"{key}  rows={len(rows)}  jobs={min(jobs)}  pinned={pinned}  md5={digest}  "
               f"iterate={calls}", flush=True)
     return 0
 

@@ -709,20 +709,21 @@ def kmeans(
     iters: int = 5,
     init_centroids: np.ndarray | None = None,
     tol: float | None = None,
-) -> tuple[DataFrame, np.ndarray]:
+) -> tuple[DataFrame, np.ndarray, int]:
     """K-means with deterministic seeding (the k smallest ids) and
     deterministic tie-break (lowest centroid id wins argmin).
 
     Assignment is an Arrow-batched kernel against broadcast centroids
     (k x dim — tiny); the centroid update aggregates per (cluster, dim)
     distributed-side, so only k*dim numbers ever reach the driver.
-    Returns (assignments DataFrame, final centroids ndarray).
+    Returns (assignments DataFrame, final centroids ndarray, iterations
+    run).
 
     `init_centroids` warm-starts from a prior model (ref op A13: seed the
     restarted loop with the previously converged state); with `tol` set
-    the loop stops once the max centroid shift falls below it, and
-    `kmeans.last_iters_run` records how many iterations ran — the
-    warm-start saving the reference demonstrates, in miniature.
+    the loop stops once the max centroid shift falls below it, and the
+    returned iteration count shows the warm-start saving the reference
+    demonstrates, in miniature.
     """
     if init_centroids is not None:
         centroids = np.asarray(init_centroids, dtype=np.float64).copy()
@@ -733,11 +734,10 @@ def kmeans(
         if not seeds:
             # empty corpus: no centroids to train, no rows to assign —
             # return the empty assignment with the declared schema
-            kmeans.last_iters_run = 0
             empty = emb_df.sparkSession.createDataFrame(
                 [], "vec_id long, cluster int"
             )
-            return empty, np.empty((0, 0))
+            return empty, np.empty((0, 0)), 0
         centroids = np.stack([np.asarray(r[0], dtype=np.float64) for r in seeds])
 
     def nearest(pdf: pd.DataFrame, C: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -786,8 +786,8 @@ def kmeans(
         return partials_kernel
 
     assign = None
-    kmeans.last_iters_run = 0
-    for _ in range(iters):
+    ran = 0
+    for ran in range(1, iters + 1):
         bc = spark.sparkContext.broadcast(centroids)
         assign = emb_df.select("vec_id", "embedding").mapInPandas(
             make_kernel(bc), schema="vec_id long, cluster int"
@@ -817,11 +817,10 @@ def kmeans(
             new_c[r.cluster] = np.asarray(r.vsum, dtype=np.float64) / r.cnt
         shift = float(np.abs(new_c - centroids).max())
         centroids = new_c
-        kmeans.last_iters_run += 1
         if tol is not None and shift <= tol:
             break
 
-    return assign, centroids
+    return assign, centroids, ran
 
 
 def _collect_if_fits(cap: int, *frames: DataFrame) -> list[pd.DataFrame] | None:
@@ -879,126 +878,120 @@ def _local_kruskal(rows: list[tuple]) -> list[tuple[int, int, float]]:
 
 def boruvka_msf(edges: DataFrame, max_rounds: int = 8) -> DataFrame:
     """Borůvka minimum spanning forest over SYMMETRIC weighted edges
-    (src, dst, w), distributed rounds + a bounded local Kruskal finish.
+    (src, dst, w): distributed rounds on `iterate()` + a bounded local
+    Kruskal finish.  Input self-loops are dropped; they are never in a
+    forest.
 
-    Distributed rounds (the at-scale path): every round each component
-    picks its minimum outgoing edge under the TOTAL order (w, a, b)
-    (a<b the canonical endpoints; the total order makes ties safe — a
-    pick-graph cycle would have to traverse its maximal edge twice),
-    the picked edges join the forest, and components contract via the
-    connected-components operator over the COMPONENT-LEVEL pick graph —
-    at most one edge per live component, a graph that at least halves
-    every round.  Each round starts by pre-aggregating the live edges
-    to min-per-(component pair) — a partial-aggregatable shuffle that
-    also at least halves round over round.
+    The loop's one state is the contracted graph (cs, cd, w, a, b) — a,
+    b the canonical endpoints (a < b) of an input edge, cs and cd the
+    labels of the components it joins:
+    - a LIVE row (cs != cd) is the minimum edge of its component pair
+      under the TOTAL order (w, a, b);
+    - a FOREST row (cs == cd) is an edge picked in an earlier round, kept
+      as a self-loop of the component it merged: no live aggregate sees
+      it.
+    Each round every live component picks its minimum outgoing edge
+    (ties are safe under the total order — a pick-graph cycle would have
+    to traverse its maximal edge twice); the picks become forest rows,
+    and components contract via the connected-components operator over
+    the COMPONENT-LEVEL pick graph (at most one edge per live component,
+    a graph that at least halves every round).  The live rows are
+    relabeled through that contraction and re-reduced to min-per-pair: a
+    partial-aggregatable shuffle over the previous round's contracted
+    graph, never the input edges, and the min of per-pair minima is the
+    min over the input edges between the merged components.
 
     Local finish: the MST-of-contraction property says the MSF of the
-    original graph = chosen edges so far + the MSF of the contracted
-    min-edge-per-component-pair graph, and under a total order that MSF
-    is UNIQUE — so once the contracted graph fits in
-    BORUVKA_LOCAL_EDGES_MAX rows (a `limit`-bounded probe, never an
+    original graph = forest rows so far + the MSF of the live rows, and
+    under a total order that MSF is UNIQUE — so once the live rows fit
+    in BORUVKA_LOCAL_EDGES_MAX rows (the fixpoint check: a
+    `limit`-bounded probe after each round's checkpoint, never an
     unbounded collect), one driver-side Kruskal finishes the forest
-    exactly.  At 100 TB early rounds run distributed (billions of
-    components); the tail — where per-round data is tiny and fixed
-    job-scheduling overhead dominates — collapses into one bounded
-    collect + an O(E α(E)) union-find.  Correctness does not depend on
-    WHEN the switch happens, only the constant factor does.
+    exactly.  The round-0 graph is probed before the loop; when it fits,
+    no round runs.  Correctness does not depend on WHEN the switch
+    happens, only the constant factor does.  If the live rows still do
+    not fit after `max_rounds` rounds the call raises RuntimeError — a
+    partial forest is never returned.
 
-    The contracted graph is probed once more after the last of the
-    `max_rounds` distributed rounds; if it still does not fit, the call
-    raises RuntimeError — a partial forest is never returned.
-
-    Returns the forest edges (a, b, w).
+    Returns the forest edges (a, b, w); they read only their own
+    checkpoint and the local-finish rows, never `edges`.
     """
     spark = edges.sparkSession
-    comp = None  # (node, label); None = every node its own component
-    chosen = spark.createDataFrame([], "a long, b long, w double")
-    for rnd in range(max_rounds + 1):
-        if comp is None:
-            e = edges.select(
-                F.col("src").alias("cs"), F.col("dst").alias("cd"),
-                "w",
-                F.least("src", "dst").alias("a"),
-                F.greatest("src", "dst").alias("b"),
-            )
-        else:
-            # LEFT joins: nodes not yet in the forest have no label row
-            # and remain their own singleton component — an inner join
-            # would silently drop their outgoing edges
-            c1 = comp.select(F.col("node").alias("src"), F.col("label").alias("ls"))
-            c2 = comp.select(F.col("node").alias("dst"), F.col("label").alias("ld"))
-            e = (
-                edges.join(c1, "src", "left")
-                .join(c2, "dst", "left")
-                .select(
-                    F.coalesce("ls", "src").alias("cs"),
-                    F.coalesce("ld", "dst").alias("cd"),
-                    "w",
-                    F.least("src", "dst").alias("a"),
-                    F.greatest("src", "dst").alias("b"),
-                )
-                .filter(F.col("cs") != F.col("cd"))
-            )
-        # min edge per component PAIR under the total order — safe by
-        # the cycle property (a non-minimal parallel edge is never in
+    live = F.col("cs") != F.col("cd")
+
+    def min_per_pair(e: DataFrame) -> DataFrame:
+        # min edge per live component PAIR under the total order — safe
+        # by the cycle property (a non-minimal parallel edge is never in
         # the MSF) and partial-aggregatable (map-side combine)
-        contracted = (
-            e.groupBy("cs", "cd")
+        return (
+            e.filter(live).groupBy("cs", "cd")
             .agg(F.min(F.struct("w", "a", "b")).alias("m"))
             .select("cs", "cd", "m.w", "m.a", "m.b")
-            .transform(checkpoint_without_stats)
         )
-        fit = _collect_if_fits(BORUVKA_LOCAL_EDGES_MAX, contracted)
-        if fit is not None:
-            release_checkpoint(contracted)
-            break
-        if rnd == max_rounds:
-            raise RuntimeError(
-                f"boruvka_msf: max_rounds={max_rounds} distributed rounds "
-                "exhausted and the contracted graph still exceeds "
-                f"BORUVKA_LOCAL_EDGES_MAX={BORUVKA_LOCAL_EDGES_MAX} rows — "
-                "raise max_rounds; a partial forest is never returned"
-            )
-        # distributed Borůvka round
+
+    g0 = min_per_pair(edges.select(
+        F.col("src").alias("cs"), F.col("dst").alias("cd"), "w",
+        F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"),
+    )).transform(checkpoint_without_stats)
+    fit = _collect_if_fits(BORUVKA_LOCAL_EDGES_MAX, g0)
+    held: list[DataFrame] = []  # the running round's pick and CC labels
+
+    def contract(g: DataFrame, _i: int) -> DataFrame:
         pick = (
-            contracted.groupBy("cs")
+            g.filter(live).groupBy("cs")
             .agg(F.min(F.struct("w", "a", "b", "cd")).alias("m"))
             .select("cs", "m.w", "m.a", "m.b", "m.cd")
             .transform(checkpoint_without_stats)
         )
-        prev_chosen, chosen = chosen, (
-            chosen.unionByName(pick.select("a", "b", "w"))
-            # within a round both endpoint components can pick the same
-            # edge; across rounds re-picks are impossible once
-            # contraction converged
-            .dropDuplicates(["a", "b"])
-            .transform(checkpoint_without_stats)
-        )
         pick_sym = pick.select(F.col("cs").alias("src"), F.col("cd").alias("dst"))
-        pick_sym = pick_sym.union(
+        m = connected_components(pick_sym.union(
             pick_sym.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        ))
+        held[:] = [pick, m]
+        # LEFT joins: a component no pick touched keeps its label
+        c1 = m.select(F.col("node").alias("cs"), F.col("label").alias("ls"))
+        c2 = m.select(F.col("node").alias("cd"), F.col("label").alias("ld"))
+        relabeled = (
+            g.filter(live).join(c1, "cs", "left").join(c2, "cd", "left")
+            .select(F.coalesce("ls", "cs").alias("cs"),
+                    F.coalesce("ld", "cd").alias("cd"), "w", "a", "b")
         )
-        m = connected_components(pick_sym).select(
-            F.col("node").alias("old"), F.col("label").alias("new")
+        return (
+            g.filter(~live)
+            .unionByName(pick.select("cs", F.col("cs").alias("cd"), "w", "a", "b"))
+            .unionByName(min_per_pair(relabeled))
         )
-        # contract on component LABELS: every picked (cs, cd) pair merges
-        prev_comp = comp
-        if comp is None:
-            comp = m.select(F.col("old").alias("node"), F.col("new").alias("label"))
-        else:
-            comp = comp.join(m, comp.label == m.old, "left").select(
-                "node", F.coalesce("new", "label").alias("label")
+
+    def fits(_old: DataFrame, new: DataFrame) -> float:
+        nonlocal fit
+        pick, m = held  # `new` is materialized: nothing reads them again
+        release_checkpoint(pick)
+        release_checkpoint(m)
+        fit = _collect_if_fits(BORUVKA_LOCAL_EDGES_MAX, new.filter(live))
+        return 1.0 if fit is None else 0.0
+
+    forest = spark.createDataFrame([], "a long, b long, w double")
+    try:
+        if fit is None:
+            res = iterate(g0, contract, max_rounds, delta_fn=fits, tol=0.5,
+                          checkpoint_every=1)
+            if not res.converged:
+                release_checkpoint(res.state)
+                raise RuntimeError(
+                    f"boruvka_msf: max_rounds={max_rounds} distributed rounds "
+                    "exhausted and the contracted graph still exceeds "
+                    f"BORUVKA_LOCAL_EDGES_MAX={BORUVKA_LOCAL_EDGES_MAX} rows — "
+                    "raise max_rounds; a partial forest is never returned"
+                )
+            forest = (
+                res.state.filter(~live).select("a", "b", "w")
+                # both endpoint components can pick the same edge in a round
+                .dropDuplicates(["a", "b"])
+                .transform(checkpoint_without_stats)
             )
-        comp = comp.transform(checkpoint_without_stats)
-        # the round's successors are materialized: drop what they replace
-        # (round 0's `chosen` is the empty literal, not a checkpoint)
-        superseded = [contracted, pick, m]
-        if prev_comp is not None:
-            superseded += [prev_chosen, prev_comp]
-        for df in superseded:
-            release_checkpoint(df)
-    if comp is not None:
-        release_checkpoint(comp)
+            release_checkpoint(res.state)
+    finally:
+        release_checkpoint(g0)
     (pdf,) = fit
     # .tolist() yields native python ints/floats — numpy scalars would
     # fail createDataFrame's LongType check on the finish edges
@@ -1007,10 +1000,10 @@ def boruvka_msf(edges: DataFrame, max_rounds: int = 8) -> DataFrame:
         pdf["cs"].tolist(), pdf["cd"].tolist(),
     )))
     if finish:
-        chosen = chosen.unionByName(
+        forest = forest.unionByName(
             spark.createDataFrame(finish, "a long, b long, w double")
         )
-    return chosen
+    return forest
 
 
 #: active-subgraph size (edges AND nodes, each) below which scc()

@@ -84,7 +84,7 @@ def q_iter_kmeans(spark, sf_dir):
     the assignment hashes identically; a numpy golden also covers it in
     tests/test_iterative.py."""
     load_tables(spark, sf_dir)
-    assign, _ = algorithms.kmeans(
+    assign, _, _ = algorithms.kmeans(
         spark, spark.table("embeddings"), k=KMEANS_K, iters=KMEANS_ITERS
     )
     return assign
@@ -470,7 +470,8 @@ def q_iter_mst_forest(spark, sf_dir):
     graph (same graph as k-core: parts co-bought in >= 2 orders), edge
     distance = 1/co-purchase-count — the strongest-links backbone a
     recommender keeps from a dense similarity graph.  O(log n) Borůvka
-    rounds, each one comp-join + per-component min + CC contraction
+    rounds over the contracted graph, each a per-component min pick, a
+    CC contraction of the picks and a min-per-pair re-reduction
     (operators/algorithms.py:boruvka_msf).
 
     Rows-only by design (MST is not reasonably SQL-expressible); pytest
@@ -485,6 +486,8 @@ def q_iter_mst_forest(spark, sf_dir):
         .transform(checkpoint_without_stats)
     )
     forest = algorithms.boruvka_msf(weighted)
+    # the forest reads only its own checkpoint and the local-finish rows
+    release_checkpoint(weighted)
     return forest.select("a", "b", F.round("w", 6).alias("dist"))
 
 

@@ -85,7 +85,7 @@ def test_kmeans_matches_golden(spark, sf_dir):
                 C[c] = X[a == c].mean(axis=0)
     want = dict(zip(ids.tolist(), a.tolist()))
 
-    assign, _c = algorithms.kmeans(spark, emb, k=k, iters=iters)
+    assign, _c, _n = algorithms.kmeans(spark, emb, k=k, iters=iters)
     got = {r.vec_id: r.cluster for r in assign.collect()}
     diff = {i for i in want if want[i] != got.get(i)}
     assert not diff, f"kmeans assignment mismatch on {len(diff)} points: {sorted(diff)[:5]}"
@@ -138,16 +138,13 @@ def test_kmeans_warmstart_converges_faster(spark, sf_dir):
     delta = emb.filter(F.col("vec_id") % 50 != 0)  # drop 2% of points
     tol, iters = 0.01, 25
 
-    _, c_cold = algorithms.kmeans(spark, emb, k=10, iters=iters, tol=tol)
-    cold_iters = algorithms.kmeans.last_iters_run
+    _, c_cold, cold_iters = algorithms.kmeans(spark, emb, k=10, iters=iters, tol=tol)
     assert cold_iters < iters  # converged, not capped
 
-    algorithms.kmeans(spark, delta, k=10, iters=iters, tol=tol)
-    cold2_iters = algorithms.kmeans.last_iters_run
-    algorithms.kmeans(
+    _, _, cold2_iters = algorithms.kmeans(spark, delta, k=10, iters=iters, tol=tol)
+    _, _, warm_iters = algorithms.kmeans(
         spark, delta, k=10, iters=iters, tol=tol, init_centroids=c_cold
     )
-    warm_iters = algorithms.kmeans.last_iters_run
     assert warm_iters < cold2_iters, f"warm {warm_iters} vs cold {cold2_iters}"
 
 
@@ -349,7 +346,8 @@ def test_mst_forest_distributed_rounds_match_local(spark, sf_dir, monkeypatch):
 #: persisted frames each query still holds after it returns: the final
 #: state, plus the edges checkpoint (sssp, closeness), the node set
 #: (Katz) and the tiling pin chunk_events leaves (stream_stateful_running)
-#: — never one checkpoint per round or per delta batch.  The matching is
+#: — never one checkpoint per round or per delta batch.  The MST forest
+#: on sf0.001 is all local-finish rows, so it keeps nothing.  The matching is
 #: the union of its rounds' handshake checkpoints, one per round (7
 #: rounds on sf0.001); its edge copies are all released.
 LOOP_KEPT_FRAMES = {
@@ -361,6 +359,7 @@ LOOP_KEPT_FRAMES = {
     "stream_stateful_running": 2,
     "inc_apriori_pairs": 1,
     "iter_maximal_matching": 7,
+    "iter_mst_forest": 0,
 }
 
 
@@ -384,11 +383,12 @@ def test_loop_releases_superseded_rounds(spark, sf_dir, key):
 
 
 def test_boruvka_releases_superseded_rounds(spark, monkeypatch):
-    """Borůvka's distributed rounds release each round's contracted,
-    pick, forest, component and CC checkpoints once the next round's are
-    materialized: only the returned forest stays persisted, however many
-    rounds run.  Ruler weights on a 65-node path merge components in
-    pairs, so the forest takes six distributed rounds."""
+    """Borůvka's distributed rounds release each round's pick and CC
+    checkpoints once the round's contracted graph is materialized, and
+    iterate() releases the contracted graph it supersedes: only the
+    returned forest stays persisted, however many rounds run.  Ruler
+    weights on a 65-node path merge components in pairs, so the forest
+    takes six distributed rounds."""
     monkeypatch.setattr(algorithms, "BORUVKA_LOCAL_EDGES_MAX", 1)
     rows = []
     for i in range(64):
@@ -403,6 +403,25 @@ def test_boruvka_releases_superseded_rounds(spark, monkeypatch):
     forest = algorithms.boruvka_msf(edges).collect()
     assert len(forest) == 64
     assert len(persisted() - before) <= 1
+
+
+def test_boruvka_input_self_loops_never_enter_the_forest(spark, monkeypatch):
+    """A self-loop is in no spanning forest, even as the lightest edge:
+    the distributed rounds agree with the local Kruskal finish on a
+    symmetric path 0-1-2-3 with a self-loop (1, 1) lighter than every
+    path edge."""
+    path = [(0, 1, 5.0), (1, 2, 6.0), (2, 3, 7.0)]
+    edges = spark.createDataFrame(
+        path + [(b, a, w) for a, b, w in path] + [(1, 1, 1.0)],
+        "src long, dst long, w double",
+    )
+
+    def forest() -> list:
+        return sorted(tuple(r) for r in algorithms.boruvka_msf(edges).collect())
+
+    assert forest() == path  # the round-0 graph fits: local Kruskal only
+    monkeypatch.setattr(algorithms, "BORUVKA_LOCAL_EDGES_MAX", 1)
+    assert forest() == path
 
 
 def test_hits_on_empty_graph_fails_no_job(spark):

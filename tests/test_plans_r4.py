@@ -32,12 +32,18 @@ from i2mapreduce_spark.catalog import load_tables
 PKG = pathlib.Path(__file__).resolve().parents[1] / "i2mapreduce_spark"
 
 
+#: the nodes whose body runs once per element
+_LOOPS = (ast.For, ast.AsyncFor, ast.While, ast.ListComp, ast.SetComp,
+          ast.DictComp, ast.GeneratorExp)
+
+
 def _sites(match, in_loops_only: bool = False) -> set[tuple[str, str]]:
     """(module-relative-path, enclosing def) for every AST node of the
     non-test source that ``match`` accepts, via AST (no false hits from
     docstrings).  Methods are named ``Class.method``.  With
-    ``in_loops_only`` only nodes inside a ``for``/``while`` body of that
-    def count."""
+    ``in_loops_only`` only nodes inside a ``for``/``while`` loop or a
+    list, set, dict or generator comprehension of that def count, so a
+    loop cannot dodge the guard by becoming a comprehension."""
     sites = set()
     for py in sorted(PKG.rglob("*.py")):
         tree = ast.parse(py.read_text(), filename=str(py))
@@ -54,7 +60,7 @@ def _sites(match, in_loops_only: bool = False) -> set[tuple[str, str]]:
                         if isinstance(node, ast.ClassDef) else child.name
                     )
                     loop = False
-                elif isinstance(child, (ast.For, ast.AsyncFor, ast.While)):
+                elif isinstance(child, _LOOPS):
                     loop = True
                 if (in_loop or not in_loops_only) and match(child):
                     sites.add((rel, fn_name))
@@ -176,7 +182,6 @@ def _names_checkpoint(node) -> bool:
 #: runs on plans/iterate.py, which owns the checkpoint-and-release
 #: rule; a new hand-rolled loop fails this test until argued here.
 APPROVED_LOOP_CHECKPOINTS = {
-    ("i2mapreduce_spark/operators/algorithms.py", "boruvka_msf"),  # contracts edges AND grows the forest: two frames per round, plus a local finish
     ("i2mapreduce_spark/operators/algorithms.py", "scc"),  # outer FW-BW pass loop: each pass runs a trim and a coloring fixpoint, then splits the residual edges by (f, b) class beside a growing list of labeled node sets
     ("i2mapreduce_spark/queries/llmops.py", "q_text_greedy_generate"),  # every step frame stays live in the growing union chain: nothing is superseded
     ("i2mapreduce_spark/queries/sorts.py", "q_sort_quickselect_kth"),  # two collects per round feed a driver-side pivot and branch; the rank k shifts with the side kept

@@ -127,7 +127,7 @@ APPROVED_BROADCASTS = {
     ("i2mapreduce_spark/queries/quality.py", "q_dq_k_anonymity"),  # 1-row class-size total
     ("i2mapreduce_spark/queries/pipelines.py", "q_pipeline_target_encode"),  # 1-row (n_g, pos_g) global label moments
     ("i2mapreduce_spark/queries/iterative.py", "q_iter_als_topitems"),  # LIMIT ALS_ITEMS=64 item spine (bounded by construction)
-    ("i2mapreduce_spark/streaming/incremental.py", "MRBGStore._collect_delta"),  # driver-collected delta keys, <= MRBG_DELTA_COLLECT_MAX_DEFAULT rows (larger deltas take the unhinted path)
+    ("i2mapreduce_spark/streaming/incremental.py", "MRBGStore._splice"),  # driver-collected delta keys, <= MRBG_DELTA_COLLECT_MAX_DEFAULT rows (larger deltas take the unhinted path)
     ("i2mapreduce_spark/queries/quality.py", "q_dq_freshness"),  # 1-row global max-timestamp
     ("i2mapreduce_spark/queries/aggregates.py", "q_agg_survival_km"),  # 1-row dataset edge + 1-row customer total
     ("i2mapreduce_spark/queries/aggregates.py", "q_agg_bootstrap_ci"),  # 1-row point estimate
@@ -185,7 +185,7 @@ APPROVED_LOOP_CHECKPOINTS = {
     ("i2mapreduce_spark/operators/algorithms.py", "scc"),  # outer FW-BW pass loop: each pass runs a trim and a coloring fixpoint, then splits the residual edges by (f, b) class beside a growing list of labeled node sets
     ("i2mapreduce_spark/queries/llmops.py", "q_text_greedy_generate"),  # every step frame stays live in the growing union chain: nothing is superseded
     ("i2mapreduce_spark/queries/sorts.py", "q_sort_quickselect_kth"),  # two collects per round feed a driver-side pivot and branch; the rank k shifts with the side kept
-    ("i2mapreduce_spark/streaming/incremental.py", "MRBGStore.apply_delta"),  # one delta per call; the loop releases its two superseded pins (edges, key set)
+    ("i2mapreduce_spark/streaming/incremental.py", "MRBGStore._splice"),  # one delta per call of the distributed splice; the loop releases its two superseded pins (edges, key set)
 }
 
 

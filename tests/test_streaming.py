@@ -6,6 +6,8 @@ watermark test, which asserts the exact late-drop behavior.
 
 from __future__ import annotations
 
+import random
+import warnings
 from collections import Counter
 
 import pytest
@@ -180,23 +182,132 @@ def _ckpt_rdd_id(df) -> int:
     return df._jdf.queryExecution().analyzed().rdd().id()
 
 
-def test_mrbg_store_releases_old_edges_but_not_results(spark):
-    """Each delta releases the superseded edges checkpoint; a results
-    frame handed out earlier stays readable."""
+def test_mrbg_store_releases_old_edges_but_not_results(spark, monkeypatch):
+    """Over the cap (I2MR_MRBG_LOCAL_MAX=0) the store lives in local
+    checkpoints, and each delta releases the superseded edges checkpoint.
+    Under the cap a delta pins and releases nothing.  On both paths a
+    results frame handed out earlier stays readable."""
     base, frames, steps = _deltas(spark)
+
+    def persisted() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    def assert_readable(handed_out):
+        live = Counter(base)
+        for df, (i, d) in zip(handed_out, [([], [])] + steps):
+            live = live - Counter(d) + Counter(i)
+            want = _kv_reduce(_kv_map(spark.createDataFrame(list(live.elements()), KV)))
+            assert Counter(df.collect()) == Counter(want.collect())
+
+    monkeypatch.setenv("I2MR_MRBG_LOCAL_MAX", "0")
     store = _kv_store(spark, base)
     handed_out = [store.results]
     for ins, dels in frames:
         old_edges = store.edges
         handed_out.append(store.apply_delta(inserts=ins, deletes=dels))
-        persisted = spark.sparkContext._jsc.sc().getPersistentRDDs()
-        assert not persisted.contains(_ckpt_rdd_id(old_edges))
-        assert persisted.contains(_ckpt_rdd_id(store.edges))
-    live = Counter(base)
-    for df, (i, d) in zip(handed_out[:-2], [([], [])] + steps):
-        live = live - Counter(d) + Counter(i)
-        want = _kv_reduce(_kv_map(spark.createDataFrame(list(live.elements()), KV)))
-        assert Counter(df.collect()) == Counter(want.collect())
+        assert _ckpt_rdd_id(old_edges) not in persisted()
+        assert _ckpt_rdd_id(store.edges) in persisted()
+    assert_readable(handed_out)
+
+    monkeypatch.delenv("I2MR_MRBG_LOCAL_MAX")
+    store = _kv_store(spark, base)
+    handed_out = [store.results]
+    for ins, dels in frames:
+        before = persisted()
+        handed_out.append(store.apply_delta(inserts=ins, deletes=dels))
+        assert persisted() == before
+    assert_readable(handed_out)
+
+
+#: a shared NaN: a bag of tuples counts equal NaN edges only through
+#: object identity
+NAN = float("nan")
+DV = "k double, v double"
+
+
+def _dv_map(records):
+    return records.select("k", "v")
+
+
+def _dv_reduce(edges):
+    return edges.groupBy("k").agg(
+        F.count("*").alias("n"), F.count("v").alias("nv"), F.sum("v").alias("s"),
+        F.min("v").alias("lo"), F.max("v").alias("hi"),
+        F.count_distinct("v").alias("nd"),
+    )
+
+
+def _canon(rows) -> Counter:
+    """Rows as a bag in which every NaN is one value (-0.0 already
+    equals 0.0)."""
+    return Counter(
+        tuple("NaN" if isinstance(x, float) and x != x else x for x in r) for r in rows
+    )
+
+
+def _dv_sequence(seed: int, n_deltas: int = 24):
+    """A seeded base and delta sequence over keys and values that
+    Spark's grouping folds together: NULL with NULL, every NaN with NaN,
+    -0.0 with 0.0.  Inserts outnumber deletes, so the store grows; some
+    deletes name absent edges."""
+    rng = random.Random(seed)
+    keys = [0.0, -0.0, 1.0, 2.5, NAN, None]
+    vals = [0.0, -0.0, NAN, None, 1.5, -3.0]
+
+    def rec():
+        return (rng.choice(keys), rng.choice(vals))
+
+    base = [rec() for _ in range(30)]
+    live, steps = Counter(base), []
+    for _ in range(n_deltas):
+        present = list(live.elements())
+        dels = rng.sample(present, min(len(present), rng.randint(0, 3)))
+        dels += [rec() for _ in range(rng.randint(0, 1))]
+        ins = [rec() for _ in range(rng.randint(0, 5))]
+        steps.append((ins, dels))
+        live = live - Counter(dels) + Counter(ins)
+    return base, steps
+
+
+def _run_dv_sequence(spark, base, steps, wants):
+    """Apply every delta, checking the store against the from-scratch
+    result after each; returns the affected-key counts it saw."""
+    frame = lambda rows: spark.createDataFrame(rows, DV) if rows else None  # noqa: E731
+    store = MRBGStore(_dv_map, _dv_reduce, key="k")
+    store.initial(spark.createDataFrame(base, DV))
+    seen = []
+    for (ins, dels), want in zip(steps, wants):
+        store.apply_delta(inserts=frame(ins), deletes=frame(dels))
+        assert _canon(store.results.collect()) == want
+        seen.append(store.last_affected_keys)
+    return seen
+
+
+def test_mrbg_store_long_sequence_matches_recompute_on_every_path(spark, monkeypatch):
+    """24 seeded deltas with NULL keys, duplicate edges, NaN and -0.0
+    beside 0.0: after every delta the driver-resident store, the
+    distributed store (I2MR_MRBG_LOCAL_MAX=0) and a store whose cap an
+    insert crosses mid-sequence each equal a from-scratch reduce over the
+    live records, and affect the same keys; only the crossing warns."""
+    base, steps = _dv_sequence(seed=7)
+    live, sizes, wants = Counter(base), [len(base)], []
+    for ins, dels in steps:
+        live = live - Counter(dels) + Counter(ins)
+        sizes.append(sum(live.values()))
+        records = spark.createDataFrame(list(live.elements()), DV)
+        wants.append(_canon(_dv_reduce(_dv_map(records)).collect()))
+    # strictly inside the sizes the store passes through
+    cap = (sizes[0] + max(sizes)) // 2
+    assert sizes[0] < cap < max(sizes)
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        local = _run_dv_sequence(spark, base, steps, wants)
+    monkeypatch.setenv("I2MR_MRBG_LOCAL_MAX", "0")
+    assert _run_dv_sequence(spark, base, steps, wants) == local
+    monkeypatch.setenv("I2MR_MRBG_LOCAL_MAX", str(cap))
+    with pytest.warns(RuntimeWarning, match="I2MR_MRBG_LOCAL_MAX"):
+        assert _run_dv_sequence(spark, base, steps, wants) == local
 
 
 def test_fold_delta_ops_retracts_to_nothing(spark):

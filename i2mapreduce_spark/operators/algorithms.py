@@ -418,7 +418,8 @@ def gimv(
 
     PageRank = (weight=1/outdeg; combine2 mul; combineAll sum; assign
     damped add).  SSSP = (combine2 add; combineAll min; assign least).
-    CC = (combine2 identity; combineAll min; assign least).
+    CC = (combine2 identity; combineAll min; assign least).  Label
+    propagation = (combine2 identity; combineAll mode; assign coalesce).
     """
     edges, owned = _own_edges(edges)
 
@@ -611,45 +612,26 @@ def connected_components(edges: DataFrame, iters: int = MIN_LABEL_ITERS,
     return res.state.select("node", F.col("val").alias("label"))
 
 
-#: label_propagation's labels lie in [0, LPA_LABEL_BOUND)
-LPA_LABEL_BOUND = 1000
-
-
 def label_propagation(edges: DataFrame, labels0: DataFrame, iters: int = 3) -> DataFrame:
     """Synchronous majority label propagation (community detection /
     semi-supervised label spreading): each round every node adopts the
     most frequent label among its in-neighbors, ties broken toward the
     SMALLEST label; a node with no in-edges keeps its label.
+    labels0: (node, label).
 
-    Deterministic argmax via one scalar key — max_by(label,
-    c*LPA_LABEL_BOUND - label) picks the (count DESC, label ASC) winner;
-    requires labels in [0, LPA_LABEL_BOUND).  labels0: (node, label int).
+    A `gimv` instance: combine2 passes the neighbor's label, combineAll
+    is `mode(deterministic=True)` (the most frequent label, the smallest
+    of tied ones — any label values, no bound), assign is
+    coalesce(agg, old).
 
-    100TB: per round one shuffle keyed by edge dst for the (node, label)
-    count and one keyed by node for the argmax — state shuffles O(nodes x
-    distinct-neighbor-labels), never O(edges); the step is the PageRank
-    plan with max_by in place of sum, so the same co-partitioning holds.
+    100TB: per round one shuffle keyed by edge dst for the mode and one
+    join keyed by node — the PageRank plan with mode in place of sum, so
+    the same co-partitioning holds.
     """
-    def step(state: DataFrame, _i: int) -> DataFrame:
-        s, e = state.alias("s"), edges.alias("e")
-        cnt = (
-            s.join(e, F.col("s.node") == F.col("e.src"))
-            .groupBy(F.col("e.dst").alias("node"), F.col("s.label").alias("msg"))
-            .agg(F.count("*").alias("c"))
-        )
-        best = cnt.groupBy("node").agg(
-            F.max_by("msg", F.col("c") * LPA_LABEL_BOUND - F.col("msg")).alias("blab")
-        )
-        return (
-            state.alias("p")
-            .join(best.alias("b"), "node", "left")
-            .select(
-                "node",
-                F.coalesce(F.col("b.blab"), F.col("p.label")).alias("label"),
-            )
-        )
-
-    return iterate(labels0, step, iters, checkpoint_every=1).state
+    res = gimv(edges, labels0.select("node", F.col("label").alias("val")),
+               lambda _w, v: v, lambda m: F.mode(m, deterministic=True),
+               lambda old, agg: F.coalesce(agg, old), iters, checkpoint_every=1)
+    return res.state.select("node", F.col("val").alias("label"))
 
 
 #: apriori_levels' largest itemset size
@@ -823,22 +805,19 @@ def kmeans(
     return assign, centroids, ran
 
 
-def _collect_if_fits(cap: int, *frames: DataFrame) -> list[pd.DataFrame] | None:
-    """The bounded local-finish probe: every frame's rows over Arrow, or
-    None when `cap <= 0` or any frame holds more than `cap` rows.
+def _collect_if_fits(cap: int, df: DataFrame) -> pd.DataFrame | None:
+    """The bounded local-finish probe: `df`'s rows over Arrow, or None
+    when `cap <= 0` or `df` holds more than `cap` rows.
 
-    Each probe is a `limit(cap+1).count()`, in the given order: limit
-    pushes into the plan, so it scans at most cap+1 rows of an already
-    materialized frame and moves ZERO rows to the driver until the
-    finish fires.  A `limit(cap+1).collect()` probe would instead pay a
-    full cap-row Py4J transfer every round just to learn "still too
-    big" (measured at sf100)."""
-    if cap <= 0:
+    The probe is a `limit(cap+1).count()`: limit pushes into the plan, so
+    it scans at most cap+1 rows of an already materialized frame and
+    moves ZERO rows to the driver until the finish fires.  A
+    `limit(cap+1).collect()` probe would instead pay a full cap-row Py4J
+    transfer every round just to learn "still too big" (measured at
+    sf100)."""
+    if cap <= 0 or df.limit(cap + 1).count() > cap:
         return None
-    for df in frames:
-        if df.limit(cap + 1).count() > cap:
-            return None
-    return [df.toPandas() for df in frames]
+    return df.toPandas()
 
 
 #: contracted-graph size below which Borůvka finishes with one driver
@@ -992,12 +971,11 @@ def boruvka_msf(edges: DataFrame, max_rounds: int = 8) -> DataFrame:
             release_checkpoint(res.state)
     finally:
         release_checkpoint(g0)
-    (pdf,) = fit
     # .tolist() yields native python ints/floats — numpy scalars would
     # fail createDataFrame's LongType check on the finish edges
     finish = _local_kruskal(list(zip(
-        pdf["w"].tolist(), pdf["a"].tolist(), pdf["b"].tolist(),
-        pdf["cs"].tolist(), pdf["cd"].tolist(),
+        fit["w"].tolist(), fit["a"].tolist(), fit["b"].tolist(),
+        fit["cs"].tolist(), fit["cd"].tolist(),
     )))
     if finish:
         forest = forest.unionByName(
@@ -1006,13 +984,15 @@ def boruvka_msf(edges: DataFrame, max_rounds: int = 8) -> DataFrame:
     return forest
 
 
-#: active-subgraph size (edges AND nodes, each) below which scc()
-#: finishes with one driver-side Tarjan instead of further distributed
-#: trim/coloring rounds — the same bounded local finish boruvka_msf uses
+#: residual-edge count at or below which scc() finishes with one
+#: driver-side Tarjan instead of further distributed trim/coloring
+#: rounds — the same bounded local finish boruvka_msf uses
 #: (BORUVKA_LOCAL_EDGES_MAX): early passes at scale run distributed;
 #: the tail, where each trim/coloring round is a fixed-cost job over a
 #: near-empty graph, collapses into one Arrow collect + an O(V+E)
-#: Tarjan.  2M edges is ~32 MB over Arrow — far under the driver caps.
+#: Tarjan.  Sized in driver Python heap: `_local_scc` peaked at ~157 B
+#: per node+edge (ROADMAP item 5), so 2M edges plus up to 4M endpoint
+#: nodes hold ~0.9 GB at the cap.
 #: Correctness does not depend on WHEN the switch fires (SCC labels are
 #: min member ids, unique for any algorithm); only the constant factor
 #: does.  Measured at sf0.1: the whole digraph is 36.7k edges, so 11
@@ -1026,17 +1006,15 @@ def _scc_local_max() -> int:
     return int(os.environ.get("I2MR_SCC_LOCAL_MAX", SCC_LOCAL_MAX_DEFAULT))
 
 
-def _local_scc(spark: SparkSession, npdf: pd.DataFrame,
-               epdf: pd.DataFrame) -> DataFrame:
-    """Exact SCC labels (node, scc = min member id) over a collected
-    digraph via iterative Tarjan — the scc() local finish.  The nodes
-    `npdf` must cover every endpoint of the edges `epdf` (scc()
-    guarantees this: active edges are always filtered to active-node
-    endpoints); nodes without edges come out as their own singleton SCC.
-    Deterministic: the label is the component MINIMUM, independent of
-    visit order."""
+def _local_scc(spark: SparkSession, epdf: pd.DataFrame) -> DataFrame:
+    """Exact SCC labels (node, scc = min member id) of every endpoint of
+    the collected edges `epdf` via iterative Tarjan — the scc() local
+    finish.  The endpoints are all the roots it needs: every node scc()
+    has not labeled is an endpoint of a residual edge.  Deterministic:
+    the label is the component MINIMUM, independent of visit order."""
+    src, dst = epdf["src"].tolist(), epdf["dst"].tolist()
     adj: dict[int, list[int]] = {}
-    for u, v in zip(epdf["src"].tolist(), epdf["dst"].tolist()):
+    for u, v in zip(src, dst):
         adj.setdefault(u, []).append(v)
     index: dict[int, int] = {}
     low: dict[int, int] = {}
@@ -1045,7 +1023,7 @@ def _local_scc(spark: SparkSession, npdf: pd.DataFrame,
     out: list[tuple[int, int]] = []
     counter = 0
     empty: tuple[int, ...] = ()
-    for root in npdf["node"].tolist():
+    for root in src + dst:
         if root in index:
             continue
         work: list[list] = [[root, 0]]  # (node, next-neighbor position)
@@ -1090,18 +1068,20 @@ def _local_scc(spark: SparkSession, npdf: pd.DataFrame,
 
 def _fwbw_coloring(active: DataFrame, active_nodes: DataFrame,
                    iters: int = MIN_LABEL_ITERS) -> DataFrame:
-    """Fused forward+backward min-label coloring for scc(): ONE
-    pointer-doubling fixpoint (`_min_label_fixpoint`) over state
-    (node, f, b) where f[v] = min id reachable FROM v (for edge u->v, u
-    can reach whatever v reaches) and b[v] = min id reaching v (whatever
-    reaches u also reaches v).
+    """Fused forward+backward min-label coloring of one scc() pass's
+    trimmed core `active` (every node of `active_nodes` has an in- and an
+    out-edge there): ONE pointer-doubling fixpoint
+    (`_min_label_fixpoint`) over state (node, f, b) where f[v] = min id
+    reachable FROM v (for edge u->v, u can reach whatever v reaches) and
+    b[v] = min id reaching v (whatever reaches u also reaches v).
 
     Min-label fixpoints are UNIQUE (the min over a fixed reachable set),
     so both labels come out of one loop instead of two CC runs joined
     afterwards: rounds run max(r_f, r_b) instead of r_f + r_b, one
     checkpoint and one frontier count per round, both message joins read the
     SAME checkpointed edge blocks, and no final join (the state already
-    holds both labels).
+    holds both labels).  Returns the fixpoint's own checkpoint, which
+    scc() releases once the pass's state is materialized.
 
     A cap that runs out raises: the f == b certificate is only sound at
     the true fixpoint — an unconverged run leaves far nodes still holding
@@ -1135,116 +1115,131 @@ def scc(edges: DataFrame, max_passes: int = 64) -> DataFrame:
     """Strongly connected components of a directed graph via
     Trim + Forward-Backward min-label coloring (the FW-BW-Trim scheme of
     the parallel-SCC literature, with Orzan-style coloring as the reach
-    primitive):
+    primitive), one pass per `iterate()` round.
 
-    1. TRIM to fixpoint: a node with no in-edges or no out-edges inside
-       the active subgraph is its own singleton SCC — peel until stable
-       (kills the DAG periphery, which is what makes pure coloring
-       O(#SCC) passes in the worst case).  The peel is kcore's `_peel`
-       with a "has an in-edge and an out-edge" keep, one edge count per
-       round; the pass's trimmed singletons are then one anti-join of
-       its node set against the survivors' nodes.
-    2. One coloring pass: fwd[v] = min id reachable FROM v, bwd[v] = min
-       id reaching v; both computed in ONE fused pointer-doubling
-       fixpoint (`_fwbw_coloring` — directed propagation is sound for
-       doubling because a node's current label is always a node it can
-       reach, so label-of-label is still reachable) — O(log diameter)
-       rounds, frontier-count fixpoint detection.
-       fwd[v] == bwd[v] == m proves v and m mutually reachable, so every
-       such v is labeled scc = m (this always finishes at least the SCC
-       of each class minimum — see step 3 — so passes are O(log #SCC)
-       expected and 1-2 in practice after trimming).
-    3. Remove labeled nodes + incident edges, AND drop every surviving
-       edge whose endpoints differ in (f, b): mutually reachable nodes
-       share both labels (same reachable/reaching sets => same minima),
-       so an SCC never spans two (f, b) classes and cross-class edges
-       can never be intra-SCC.  This is the classic FW-BW recursion
-       expressed data-parallel: the next pass colors every class
-       independently and resolves (at least) each class's own minimum —
-       the r6-r11 shape, which kept cross-class edges, resolved exactly
-       ONE SCC per pass on a chain of 2-cycles; with class splitting
-       the same chain needs 2 passes total.  Repeat on the residual.
+    The loop's one state is (src, dst, scc): a row with scc NULL is a
+    RESIDUAL edge; a row (v, v, s) labels node v with s, carried as a
+    self-loop the way boruvka_msf carries its forest rows.  Each pass
+    labels every node it settles inside the state, so every unlabeled
+    node is an endpoint of a residual edge.  One pass:
 
-    Returns (node, scc) for every node incident to an edge; scc = the
-    minimum member id.  Deterministic — no randomness, fixpoints only.
-    Raises RuntimeError if `max_passes` outer passes leave active nodes
-    (each pass resolves >=1 SCC — better a loud failure than a silent
-    partial labeling) or a coloring runs out of its round cap.  Empty edge input returns an empty (node, scc)
-    frame.
+    1. TRIM the residual edges to fixpoint with kcore's `_peel` and a
+       "has an in-edge and an out-edge" keep: a node without both is its
+       own singleton SCC (this kills the DAG periphery, which makes pure
+       coloring O(#SCC) passes in the worst case).
+    2. COLOR the trimmed core: fwd[v] = min id reachable FROM v, bwd[v] =
+       min id reaching v, in ONE fused pointer-doubling fixpoint
+       (`_fwbw_coloring`; sound because a node's label is always a node
+       it can reach, so label-of-label is still reachable).
+       fwd[v] == bwd[v] == m proves v and m mutually reachable: v is
+       labeled m.
+    3. SPLIT: keep only the edges whose endpoints share (f, b).
+       Mutually reachable nodes share both labels, so an SCC never spans
+       two classes, and a node left with no edge inside its class is a
+       singleton.  Both kinds of singleton are labeled by one aggregate:
+       the residual endpoints no row the pass adds carries.  The next
+       pass colors every class independently and resolves at least each
+       class's minimum SCC, so a chain of 2-cycles needs 2 passes, not
+       one per cycle; passes are O(log #SCC) expected and 1-2 in
+       practice after trimming.
 
-    100TB: every step is an equi-join/agg on node id; the trim and the
-    coloring are each a fixpoint on `iterate()` with one global barrier
-    per round (ref A10); state never leaves the cluster.
+    Local finish (`_collect_if_fits`, as in Borůvka): the distinct input
+    edges before the loop (when they fit, no pass runs), each pass's
+    trimmed core before its coloring, and the residual edges after each
+    pass are probed against `I2MR_SCC_LOCAL_MAX` rows.  Once one fits,
+    one Arrow collect + a driver Tarjan (`_local_scc`) labels the rest
+    instead of further fixed-cost jobs over a near-empty graph.
+    Result-identical: SCC labels are min member ids, unique for any
+    algorithm.  The fixpoint check reads 0 once a probe fires or no
+    residual edge is left.
+
+    Returns (node, scc) for every node incident to an edge; empty edges
+    give an empty frame.  Deterministic — fixpoints only.  Raises
+    RuntimeError if `max_passes` passes leave residual edges (better a
+    loud failure than a partial labeling) or a coloring runs out of its
+    round cap.
+
+    100TB: every step is an equi-join/agg on node id; the passes, the
+    trim and the coloring are each a fixpoint on `iterate()` with one
+    global barrier per round (ref A10).
     """
     spark = edges.sparkSession
-    active = edges.select("src", "dst").distinct().transform(checkpoint_without_stats)
-    active_nodes = _nodes(active).transform(checkpoint_without_stats)
-    labeled_parts: list[DataFrame] = []
-    for _ in range(max_passes):
-        # bounded local finish (`_collect_if_fits`, as in Borůvka):
-        # once the active subgraph fits locally, every
-        # further trim/coloring round is a fixed-cost distributed job
-        # over a near-empty graph — one Arrow collect + an O(V+E)
-        # driver Tarjan replaces the whole tail.  Result-identical (SCC
-        # labels are min member ids, algorithm-independent).
-        fit = _collect_if_fits(_scc_local_max(), active_nodes, active)
-        if fit is not None:
-            labeled_parts.append(_local_scc(spark, *fit))
-            break
-        # --- trim singleton SCCs (no in- or no out-edges, including
-        # nodes isolated by earlier peels or by the last pass's class
-        # split) to fixpoint
-        peeled, n_edges = _peel(active, _has_in_and_out, SCC_TRIM_ROUNDS)
-        release_checkpoint(active)
-        active = peeled
-        pass_nodes = active_nodes
-        active_nodes = _nodes(active).transform(checkpoint_without_stats)
-        # reads two node-set checkpoints only, never an edge frame
-        labeled_parts.append(
-            pass_nodes.join(active_nodes, "node", "left_anti")
-            .select("node", F.col("node").alias("scc"))
+    cap = _scc_local_max()
+    g0 = edges.select("src", "dst").distinct().transform(checkpoint_without_stats)
+    fit = _collect_if_fits(cap, g0)
+    if fit is not None:
+        release_checkpoint(g0)
+        return _local_scc(spark, fit)
+    unlabeled = F.col("scc").isNull()
+    no_label = F.lit(None).cast(g0.schema["src"].dataType).alias("scc")
+
+    def label_rows(nodes: DataFrame, label: str = "node") -> DataFrame:
+        return nodes.select(F.col("node").alias("src"), F.col("node").alias("dst"),
+                            F.col(label).alias("scc"))
+
+    def ends(e: DataFrame, carried: bool) -> DataFrame:
+        c = F.lit(carried).alias("carried")
+        return e.select(F.col("src").alias("node"), c).unionByName(
+            e.select(F.col("dst").alias("node"), c))
+
+    held: list[DataFrame | None] = []  # the running pass's peel and coloring
+
+    def split_pass(state: DataFrame, _i: int) -> DataFrame:
+        nonlocal fit
+        residual = state.filter(unlabeled).select("src", "dst")
+        core, n_edges = _peel(residual, _has_in_and_out, SCC_TRIM_ROUNDS)
+        held[:] = [core, None]
+        # the labels and residual edges the pass adds: the core as is when
+        # it is empty, or when trimming shrank it under the local cap (it
+        # is then stashed in `fit` before paying a distributed coloring)
+        rows = core.select("src", "dst", no_label)
+        if n_edges > 0:
+            fit = _collect_if_fits(cap, core)
+            if fit is None:
+                j = held[1] = _fwbw_coloring(core, _nodes(core))
+                rest = j.filter(F.col("f") != F.col("b"))
+                sl = rest.select(F.col("node").alias("src"),
+                                 F.col("f").alias("sf"), F.col("b").alias("sb"))
+                dl = rest.select(F.col("node").alias("dst"),
+                                 F.col("f").alias("df"), F.col("b").alias("db"))
+                rows = label_rows(j.filter(F.col("f") == F.col("b")), "f").unionByName(
+                    core.join(sl, "src").join(dl, "dst")
+                    .filter((F.col("sf") == F.col("df")) & (F.col("sb") == F.col("db")))
+                    .select("src", "dst", no_label))
+        # a residual endpoint that no added row carries is a singleton
+        # SCC: trimmed, or left with no edge inside its (f, b) class
+        single = (
+            ends(residual, False).unionByName(ends(rows, True))
+            .groupBy("node").agg(F.max("carried").alias("carried"))
+            .filter(~F.col("carried"))
         )
-        if n_edges == 0:
-            break
-        # second probe site: trimming may have shrunk the core under the
-        # local cap — bail before paying a distributed coloring fixpoint
-        fit = _collect_if_fits(_scc_local_max(), active_nodes, active)
-        if fit is not None:
-            labeled_parts.append(_local_scc(spark, *fit))
-            break
-        # --- FW-BW coloring pass on the trimmed core (every active node
-        # now has >=1 in- and >=1 out-edge, so the colorings cover all)
-        j = _fwbw_coloring(active, active_nodes)
-        done = j.filter(F.col("f") == F.col("b"))
-        labeled_parts.append(done.select("node", F.col("f").alias("scc")))
-        rest = j.filter(F.col("f") != F.col("b"))
-        if rest.isEmpty():
-            break  # converged: all labeled
-        active_nodes = rest.select("node").transform(checkpoint_without_stats)
-        # keep only edges INSIDE one (f, b) class: cross-class edges can
-        # never be intra-SCC (see docstring step 3), and dropping them
-        # both splits the residual into independent subproblems and
-        # exposes new trim targets for the next pass
-        sl = rest.select(F.col("node").alias("src"),
-                         F.col("f").alias("sf"), F.col("b").alias("sb"))
-        dl = rest.select(F.col("node").alias("dst"),
-                         F.col("f").alias("df"), F.col("b").alias("db"))
-        prev_edges = active
-        active = (
-            active.join(sl, "src").join(dl, "dst")
-            .filter((F.col("sf") == F.col("df")) & (F.col("sb") == F.col("db")))
-            .select("src", "dst")
-            .transform(checkpoint_without_stats)
-        )
-        # the superseded edge copy: `done`/`rest` read j's node-level
-        # blocks, never an edge frame
-        release_checkpoint(prev_edges)
-    else:
-        # every pass left a non-empty residual: the labeling is partial
+        return state.filter(~unlabeled).unionByName(rows).unionByName(label_rows(single))
+
+    def settled(_old: DataFrame, new: DataFrame) -> float:
+        nonlocal fit
+        core, j = held  # `new` is materialized: nothing reads them again
+        release_checkpoint(core)
+        if j is None:  # the trimmed core was empty, or it is `fit`
+            return 0.0
+        release_checkpoint(j)
+        residual = new.filter(unlabeled).select("src", "dst")
+        if cap <= 0:
+            return 0.0 if residual.isEmpty() else 1.0
+        # with a positive cap, a residual that does not fit is not empty
+        fit = _collect_if_fits(cap, residual)
+        return 1.0 if fit is None else 0.0
+
+    try:
+        res = iterate(g0.select("src", "dst", no_label), split_pass, max_passes,
+                      delta_fn=settled, tol=0.5, checkpoint_every=1)
+    finally:
+        release_checkpoint(g0)
+    if not res.converged:
+        release_checkpoint(res.state)
         raise RuntimeError(
-            f"scc(): {max_passes} FW-BW passes exhausted with active nodes "
+            f"scc(): {max_passes} FW-BW passes exhausted with residual edges "
             "remaining — raise max_passes (every pass resolves each (f,b) "
             "class's minimum SCC, so passes are O(log #SCC) expected)"
         )
-    release_checkpoint(active)
-    return reduce(DataFrame.unionByName, labeled_parts)
+    out = res.state.filter(~unlabeled).select(F.col("src").alias("node"), "scc")
+    return out if fit is None else out.unionByName(_local_scc(spark, fit))

@@ -90,45 +90,54 @@ def q_iter_kmeans(spark, sf_dir):
     return assign
 
 
-def q_iter_apriori_pairs(spark, sf_dir):
-    """APriori frequent item pairs over order baskets, support >= 3 —
-    the reference's 4th example app.  Pair generation is ARRAY-side: one
+def _frequent_pairs(baskets: DataFrame) -> DataFrame:
+    """Item pairs (item1 < item2, support) of `(basket, item)` rows with
+    support >= APRIORI_MIN_SUPPORT.  Pair generation is ARRAY-side: one
     groupBy(basket) collect_set (dedupe inside the agg), then ordered
     pairs via nested transform/flatten — vs the basket self-join this
     removes two shuffles (the separate dedupe agg and the join's
-    repartition), measured 1.4 s vs 1.8 s at sf0.1.  100TB: the shuffle
-    is O(lineitem) once plus O(candidate pairs) for the count; the giant
-    basket that would blow up C(n,2) is bounded by order size (TPC-H max
-    7 parts/order; cap with slice() for adversarial data).
+    repartition), measured 1.4 s vs 1.8 s at sf0.1.  Equivalence to the
+    self-join the oracles state: collect_set is the basket's item set,
+    so the lexicographic expansion is exactly the item1 < item2 join.
+    100TB: the shuffle is O(rows) once plus O(candidate pairs) for the
+    count; the giant basket that would blow up C(n,2) is bounded by
+    order size (TPC-H max 7 parts/order; cap with slice() for
+    adversarial data).
 
-    NULL join keys (r10): rows with NULL basket id are excluded — the
-    oracle's relational shape is a basket SELF-JOIN, where NULL keys
-    never match; a groupBy would instead pool every orphaned line into
-    one giant pseudo-basket (825 vs 172 pairs on the NULL-FK fixture)
-    AND recreate the C(n,2) blowup this plan avoids.  NULL items need
-    no filter: collect_set skips NULLs, as does the oracle's item1 <
-    item2 predicate."""
-    load_tables(spark, sf_dir)
-    li = (
-        spark.table("lineitem")
-        .filter(F.col("l_orderkey").isNotNull())
-        .select(F.col("l_orderkey").alias("basket"), F.col("l_partkey").alias("item"))
+    NULL join keys (r10): rows with NULL basket id are excluded — in the
+    self-join NULL keys never match; a groupBy would instead pool every
+    orphaned line into one giant pseudo-basket (825 vs 172 pairs on the
+    NULL-FK fixture) AND recreate the C(n,2) blowup this plan avoids.
+    NULL items need no filter: collect_set skips NULLs, as does the
+    oracles' item1 < item2 predicate."""
+    sets = (
+        baskets.filter(F.col("basket").isNotNull())
+        .groupBy("basket")
+        .agg(F.sort_array(F.collect_set("item")).alias("its"))
     )
-    sets = li.groupBy("basket").agg(F.sort_array(F.collect_set("item")).alias("its"))
-    pairs = sets.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(its, (x, i) -> "
-                "transform(slice(its, i + 2, size(its)), "
-                "y -> struct(x AS item1, y AS item2))))"
-            )
-        ).alias("p")
-    ).select("p.item1", "p.item2")
     return (
-        pairs.groupBy("item1", "item2")
+        sets.select(
+            F.explode(
+                F.expr(
+                    "flatten(transform(its, (x, i) -> "
+                    "transform(slice(its, i + 2, size(its)), "
+                    "y -> struct(x AS item1, y AS item2))))"
+                )
+            ).alias("p")
+        )
+        .groupBy("p.item1", "p.item2")
         .agg(F.count("*").alias("support"))
         .filter(F.col("support") >= APRIORI_MIN_SUPPORT)
     )
+
+
+def q_iter_apriori_pairs(spark, sf_dir):
+    """APriori frequent item pairs over order baskets, support >= 3 —
+    the reference's 4th example app (`_frequent_pairs` over lineitem's
+    (orderkey, partkey) rows)."""
+    load_tables(spark, sf_dir)
+    return _frequent_pairs(spark.table("lineitem").select(
+        F.col("l_orderkey").alias("basket"), F.col("l_partkey").alias("item")))
 
 
 APRIORI_TRIPLE_SUPPORT = 2
@@ -283,37 +292,9 @@ def q_iter_apriori_rules(spark, sf_dir):
     load_tables(spark, sf_dir)
     b = spark.table("baskets")
     item_sup = b.groupBy("item").agg(F.count("*").alias("item_support"))
-    # r12: pair generation is ARRAY-side, the same rewrite
-    # q_iter_apriori_pairs carries (one groupBy(basket) collect_set +
-    # ordered pairs via nested transform — two shuffles fewer than the
-    # basket self-join; measured 1.4 vs 1.8 s there).  Equivalence to
-    # the self-join the oracle states: baskets is DISTINCT (basket,
-    # item) by construction, so collect_set = the basket's item set and
-    # the lexicographic expansion is exactly the item1 < item2 join;
-    # NULL baskets are excluded (NULL join keys never match), NULL items
-    # are skipped by collect_set (the oracle's item1 < item2 predicate
-    # drops them too).  item_sup stays on the UNFILTERED rows — the
-    # antecedent support counts NULL-basket occurrences, as the oracle's
-    # per-item count does.
-    sets = (
-        b.filter(F.col("basket").isNotNull())
-        .groupBy("basket")
-        .agg(F.sort_array(F.collect_set("item")).alias("its"))
-    )
-    pairs = (
-        sets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(its, (x, i) -> "
-                    "transform(slice(its, i + 2, size(its)), "
-                    "y -> struct(x AS item1, y AS item2))))"
-                )
-            ).alias("p")
-        )
-        .groupBy("p.item1", "p.item2")
-        .agg(F.count("*").alias("support"))
-        .filter(F.col("support") >= APRIORI_MIN_SUPPORT)
-    )
+    # item_sup stays on the UNFILTERED rows — the antecedent support
+    # counts NULL-basket occurrences, as the oracle's per-item count does
+    pairs = _frequent_pairs(b)
     # both rule directions from ONE pass over pairs (a union of two
     # selects would compute the self-join + aggregation subtree twice)
     both = pairs.select(
@@ -574,15 +555,19 @@ def q_iter_label_propagation(spark, sf_dir):
     """3 synchronous rounds of majority label propagation over the
     co-purchase graph, seeded with label = node % 5 — the community-
     detection workload in the reference's iterative model (same
-    structure/state split as PageRank, with argmax in place of sum).
+    structure/state split as PageRank, with mode in place of sum).
     Deterministic ties -> smallest label; hash-checked against 3
-    unrolled rounds in DuckDB."""
+    unrolled rounds in DuckDB.  The result reads only the loop's final
+    checkpoint, so the edges checkpoint is released on return."""
     load_tables(spark, sf_dir)
     edges = spark.table("edges_pp").transform(checkpoint_without_stats)
     labels0 = algorithms._nodes(edges).withColumn(
         "label", (F.col("node") % LPA_SEED_MOD).cast("long")
     )
-    return algorithms.label_propagation(edges, labels0, iters=LPA_ITERS)
+    try:
+        return algorithms.label_propagation(edges, labels0, iters=LPA_ITERS)
+    finally:
+        release_checkpoint(edges)
 
 
 WALK_STEPS = 8
@@ -662,13 +647,16 @@ def _sequence_digraph(spark):
 def q_iter_scc(spark, sf_dir):
     """Strongly connected components of the sampled part-transition
     digraph via Trim + Forward-Backward min-label coloring
-    (operators/algorithms.py::scc): trim peels in/out-degree-0 nodes as
-    singleton SCCs to fixpoint, then fwd/bwd pointer-doubling min-reach
-    labels certify scc = m where fwd == bwd == m (mutual reachability),
-    repeating on the residual.  Deterministic fixpoints, no randomness.
-    Rows-only key (SCC is a recursive property SQL can't express at
-    this size); correctness = python Tarjan replay in pytest, identical
-    component sets at sf0.001 AND sf0.01."""
+    (operators/algorithms.py::scc, one `iterate()` pass per round over
+    the residual graph): trim peels in/out-degree-0 nodes as singleton
+    SCCs to fixpoint, then fwd/bwd pointer-doubling min-reach labels
+    certify scc = m where fwd == bwd == m (mutual reachability), and the
+    residual keeps only the edges inside one (fwd, bwd) class.  At
+    fixture scale the whole digraph fits `I2MR_SCC_LOCAL_MAX`, so one
+    driver Tarjan labels it and no pass runs.  Deterministic, no
+    randomness.  Rows-only key (SCC is a recursive property SQL can't
+    express at this size); correctness = python Tarjan replay in pytest,
+    identical component sets at sf0.001 AND sf0.01."""
     load_tables(spark, sf_dir)
     return algorithms.scc(_sequence_digraph(spark)).select(
         "node", "scc"

@@ -96,11 +96,10 @@ def test_scc_local_finish_matches_distributed(spark, monkeypatch):
 
 
 def test_scc_distributed_keeps_only_node_sets_and_colorings(spark, monkeypatch):
-    # The trim is one peel per pass, so the frames scc() leaves pinned do
-    # not grow with its trim rounds (the 4-edge DAG tail takes 5), and no
-    # edge copy outlives the call: the initial node set, then per pass
-    # the trimmed node set and the coloring state, and the residual node
-    # set between the two passes — 1 + 2 * 2 + 1 frames.
+    # Each pass releases its peel, node-set and coloring checkpoints once
+    # the pass's state is materialized, and iterate() releases the state
+    # it supersedes, so however many trim rounds (the 4-edge DAG tail
+    # takes 5) and passes run, scc() leaves only its final state pinned.
     monkeypatch.setenv("I2MR_SCC_LOCAL_MAX", "0")
     n = 5
     tail = [(2 * n - 1, 100), (100, 101), (101, 102), (102, 103)]
@@ -112,9 +111,25 @@ def test_scc_distributed_keeps_only_node_sets_and_colorings(spark, monkeypatch):
 
     before = persisted()
     got = {(r["node"], r["scc"]) for r in scc(g, max_passes=n + 1).collect()}
-    assert len(persisted() - before) <= 6
+    assert len(persisted() - before) <= 1
     want = {(2 * i + j, 2 * i) for i in range(n) for j in (0, 1)}
     assert got == want | {(v, v) for v in range(100, 104)}
+
+
+def test_scc_labels_trim_survivors_the_class_split_isolates(spark, monkeypatch):
+    # Nodes 4 and 5 each have an in-edge from the 2-cycle {0, 1} and an
+    # out-edge into the 2-cycle {6, 7}, so the trim keeps them.  Each is
+    # the smallest node it reaches, so pass 1 colors it into a class of
+    # its own: the class split leaves it no edge, and the pass must label
+    # it a singleton, since no residual edge carries it to a later pass.
+    from tests.test_r6e_ops import _tarjan_labels
+
+    monkeypatch.setenv("I2MR_SCC_LOCAL_MAX", "0")
+    rows = [(0, 1), (1, 0), (1, 4), (4, 6), (1, 5), (5, 6), (6, 7), (7, 6)]
+    edges = spark.createDataFrame(rows, "src long, dst long")
+    got = {r["node"]: r["scc"] for r in scc(edges, max_passes=2).collect()}
+    assert got == _tarjan_labels(rows)
+    assert got[4] == 4 and got[5] == 5
 
 
 def test_scc_local_finish_fires_after_distributed_head(spark, monkeypatch):

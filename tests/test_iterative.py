@@ -347,7 +347,8 @@ def test_mst_forest_distributed_rounds_match_local(spark, sf_dir, monkeypatch):
 #: state, plus the edges checkpoint (sssp, closeness), the node set
 #: (Katz) and the tiling pin chunk_events leaves (stream_stateful_running)
 #: — never one checkpoint per round or per delta batch.  The MST forest
-#: on sf0.001 is all local-finish rows, so it keeps nothing.  The matching is
+#: and the SCC labels on sf0.001 are all local-finish rows, so they keep
+#: nothing.  Label propagation keeps its final state only.  The matching is
 #: the union of its rounds' handshake checkpoints, one per round (7
 #: rounds on sf0.001); its edge copies are all released.
 LOOP_KEPT_FRAMES = {
@@ -360,6 +361,8 @@ LOOP_KEPT_FRAMES = {
     "inc_apriori_pairs": 1,
     "iter_maximal_matching": 7,
     "iter_mst_forest": 0,
+    "iter_label_propagation": 1,
+    "iter_scc": 0,
 }
 
 

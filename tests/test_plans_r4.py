@@ -182,7 +182,6 @@ def _names_checkpoint(node) -> bool:
 #: runs on plans/iterate.py, which owns the checkpoint-and-release
 #: rule; a new hand-rolled loop fails this test until argued here.
 APPROVED_LOOP_CHECKPOINTS = {
-    ("i2mapreduce_spark/operators/algorithms.py", "scc"),  # outer FW-BW pass loop: each pass runs a trim and a coloring fixpoint, then splits the residual edges by (f, b) class beside a growing list of labeled node sets
     ("i2mapreduce_spark/queries/llmops.py", "q_text_greedy_generate"),  # every step frame stays live in the growing union chain: nothing is superseded
     ("i2mapreduce_spark/queries/sorts.py", "q_sort_quickselect_kth"),  # two collects per round feed a driver-side pivot and branch; the rank k shifts with the side kept
     ("i2mapreduce_spark/streaming/incremental.py", "MRBGStore._splice"),  # one delta per call of the distributed splice; the loop releases its two superseded pins (edges, key set)

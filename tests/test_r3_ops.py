@@ -36,6 +36,16 @@ def test_label_propagation_majority_and_ties(spark):
     assert out2[9] == 0
 
 
+def test_label_propagation_takes_any_label_value(spark):
+    # labels need no bound: in-neighbor labels {1500, 1500, 3} -> 1500
+    edges = spark.createDataFrame([(1, 0), (2, 0), (3, 0)], "src long, dst long")
+    labels0 = spark.createDataFrame(
+        [(0, 7), (1, 1500), (2, 1500), (3, 3)], "node long, label long"
+    )
+    out = dict(algorithms.label_propagation(edges, labels0, iters=1).collect())
+    assert out == {0: 1500, 1: 1500, 2: 1500, 3: 3}
+
+
 def test_funnel_stage_semantics(spark, sf_dir):
     """Stage is the longest ORDERED prefix: a click before the first view
     must not count, and every staged timestamp is strictly increasing."""
